@@ -52,15 +52,15 @@ DENSITY_ZOOM = 8
 
 def _q_tile_assign_merc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mercator tile assignment at z=12 (gdal2tiles GlobalMercator
-    semantics) via the vectorized pandas-UDF cell encoder."""
+    semantics) via the Catalyst cell-encode expressions."""
     imgs = synth.images_df(spark, synth.n_images(sf_dir))
-    out = cells.assign_cells(imgs, TILE_ZOOM, "mercator", engine="pandas")
+    out = cells.assign_cells(imgs, TILE_ZOOM, "mercator")
     return out.select("image_id", "tile_x", "tile_y", "cell_id")
 
 
 def _q_tile_assign_geodetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     imgs = synth.images_df(spark, synth.n_images(sf_dir))
-    out = cells.assign_cells(imgs, GEO_ZOOM, "geodetic", engine="pandas")
+    out = cells.assign_cells(imgs, GEO_ZOOM, "geodetic")
     return out.select("image_id", "tile_x", "tile_y", "cell_id")
 
 
@@ -68,7 +68,7 @@ def _q_cell_density_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Densest cells at z=8 — surfaces the skewed hot cell; group +
     order + limit."""
     imgs = synth.images_df(spark, synth.n_images(sf_dir))
-    out = cells.assign_cells(imgs, DENSITY_ZOOM, "mercator", engine="pandas")
+    out = cells.assign_cells(imgs, DENSITY_ZOOM, "mercator")
     return (
         out.groupBy("cell_id")
         .agg(F.count("*").alias("n_images"))
@@ -82,7 +82,7 @@ def _q_pyramid_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ancestor by pure cell-id arithmetic (the overview tree-reduce of
     gdal2tiles create_overview_tile, as an aggregation)."""
     imgs = synth.images_df(spark, synth.n_images(sf_dir))
-    out = cells.assign_cells(imgs, DENSITY_ZOOM, "mercator", engine="pandas")
+    out = cells.assign_cells(imgs, DENSITY_ZOOM, "mercator")
     parent = cells.cell_id_sql("(tile_x >> 2)", "(tile_y >> 2)", DENSITY_ZOOM - 2)
     return (
         out.withColumn("parent_cell", F.expr(parent))
@@ -138,7 +138,7 @@ def _q_caption_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Caption-equality invariant: captions survive the cell-assign +
     join pipeline byte-equal (BASELINE.json per-row invariant)."""
     imgs = synth.images_df(spark, synth.n_images(sf_dir))
-    out = cells.assign_cells(imgs, TILE_ZOOM, "mercator", engine="pandas")
+    out = cells.assign_cells(imgs, TILE_ZOOM, "mercator")
     return out.select("image_id", "caption", "fmt", "w", "h").orderBy("image_id")
 
 
@@ -461,7 +461,7 @@ def _q_salted_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted aggregation over the skewed cell key; result
     provably equals the plain GROUP BY (which the oracle runs)."""
     imgs = synth.images_df(spark, synth.n_images(sf_dir))
-    cells_df = cells.assign_cells(imgs, 8, "mercator", engine="sql")
+    cells_df = cells.assign_cells(imgs, 8, "mercator")
     return skew.salted_count(cells_df, "cell_id", "i % 16").select(
         "cell_id", "n"
     )
@@ -1885,8 +1885,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_xyz_quadkey": lambda spark, sf_dir: (
             cells.assign_cells(
                 synth.images_df(spark, synth.n_images(sf_dir)),
-                TILE_ZOOM, "mercator", engine="pandas",
-                with_quadkey=True,
+                TILE_ZOOM, "mercator", with_quadkey=True,
             ).selectExpr(
                 "image_id", "tile_x", "tile_y",
                 f"cast({2 ** TILE_ZOOM - 1} - tile_y as bigint) AS y_xyz",

@@ -1,19 +1,19 @@
 """Cell/tile assignment stage — the engine's "H3/S2 cell assignment".
 
 ``assign_cells`` adds grid-tile columns to any DataFrame with lon/lat
-columns, via a vectorized pandas UDF that batch-encodes cell ids over
-whole Arrow batches (the north-star contract: no per-row Python).
+columns as pure Catalyst expressions (JVM, whole-stage codegen, no
+Python worker): ``merc_tile_sql`` / ``geodetic_tile_sql`` emit the
+tile math as SQL text valid in both Spark SQL and DuckDB, so the
+DuckDB oracle recomputes assignments from the same expressions.
 
 Semantics = reference tile grids (osgeo_utils/gdal2tiles.py
-GlobalMercator:337 / GlobalGeodetic:556), verified golden-exact in
-tests/test_grid.py.
-
-``merc_tile_sql`` / ``geodetic_tile_sql`` emit the *same* math as SQL
-expressions (valid in Spark SQL and DuckDB) so the driver's oracle can
-recompute assignments independently, and so a pure-Catalyst variant
-(no Python at all) is available — ``assign_cells(..., engine="sql")``
-uses it; the pandas-UDF path is the default per the north star, and
-both are asserted equal in tests.
+GlobalMercator:337 / GlobalGeodetic:556). The numpy encoders in
+``grid.py`` are the reference: tests/test_grid.py pins them to
+reference goldens and asserts the SQL path equal to them at the Spark
+level. ``engine="pandas"`` runs those numpy encoders in one
+Arrow-batched pandas UDF — an oracle path only; it measured 3x slower
+than the SQL path on the same rows, the cost of moving every row
+across the Python/Arrow boundary.
 """
 
 from __future__ import annotations
@@ -66,27 +66,21 @@ def cell_id_sql(tx: str, ty: str, zoom: int) -> str:
 
 
 # ---------------------------------------------------------------------------
-# pandas-UDF variant (the default engine)
+# numpy-oracle variant
 
 
-def _make_tile_udfs(zoom: int, grid_kind: str):
-    @F.pandas_udf(T.LongType())
-    def tile_x(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        if grid_kind == "mercator":
-            tx, _ = grid.lonlat_to_tile_merc(lon.values, lat.values, zoom)
-        else:
-            tx, _ = grid.lonlat_to_tile_geodetic(lon.values, lat.values, zoom)
-        return pd.Series(tx)
+def _make_tile_udf(zoom: int, grid_kind: str):
+    encode = (
+        grid.lonlat_to_tile_merc if grid_kind == "mercator"
+        else grid.lonlat_to_tile_geodetic
+    )
 
-    @F.pandas_udf(T.LongType())
-    def tile_y(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        if grid_kind == "mercator":
-            _, ty = grid.lonlat_to_tile_merc(lon.values, lat.values, zoom)
-        else:
-            _, ty = grid.lonlat_to_tile_geodetic(lon.values, lat.values, zoom)
-        return pd.Series(ty)
+    @F.pandas_udf("tile_x long, tile_y long")
+    def tile_xy(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
+        tx, ty = encode(lon.values, lat.values, zoom)
+        return pd.DataFrame({"tile_x": tx, "tile_y": ty})
 
-    return tile_x, tile_y
+    return tile_xy
 
 
 def assign_cells(
@@ -95,26 +89,29 @@ def assign_cells(
     grid_kind: str = "mercator",
     lon_col: str = "lon",
     lat_col: str = "lat",
-    engine: str = "pandas",
+    engine: str = "sql",
     with_quadkey: bool = False,
     prefix: str = "",
 ) -> DataFrame:
     """Add ``tile_x, tile_y`` (TMS) and packed ``cell_id`` columns.
 
-    engine="pandas": vectorized pandas UDF (Arrow-batched numpy).
-    engine="sql":    pure Catalyst expressions (JVM, codegen) — same
-                     math, zero Python; used for oracle parity and as
-                     the fastest path when quadkeys aren't needed.
+    engine="sql":    pure Catalyst expressions (JVM, codegen) — the
+                     runtime path.
+    engine="pandas": the ``grid.py`` numpy encoders in one pandas UDF —
+                     the reference the SQL path is tested against.
     """
     cx, cy, cc = f"{prefix}tile_x", f"{prefix}tile_y", f"{prefix}cell_id"
     if engine == "sql":
         fn = merc_tile_sql if grid_kind == "mercator" else geodetic_tile_sql
         df = df.withColumn(cx, F.expr(fn(lon_col, lat_col, zoom, "x")))
         df = df.withColumn(cy, F.expr(fn(lon_col, lat_col, zoom, "y")))
+    elif engine == "pandas":
+        xy = _make_tile_udf(zoom, grid_kind)(F.col(lon_col), F.col(lat_col))
+        # one UDF call: its struct lands in cx, then splits into cx, cy
+        df = df.withColumn(cx, xy)
+        df = df.withColumns({cy: F.col(cx).tile_y, cx: F.col(cx).tile_x})
     else:
-        tile_x, tile_y = _make_tile_udfs(zoom, grid_kind)
-        df = df.withColumn(cx, tile_x(F.col(lon_col), F.col(lat_col)))
-        df = df.withColumn(cy, tile_y(F.col(lon_col), F.col(lat_col)))
+        raise ValueError(f"unknown engine {engine!r}")
     df = df.withColumn(cc, F.expr(cell_id_sql(cx, cy, zoom)))
     if with_quadkey:
         if grid_kind != "mercator":

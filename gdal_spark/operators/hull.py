@@ -86,7 +86,7 @@ def cell_hulls(images: DataFrame, zoom: int = HULL_ZOOM,
             f"cast(floor(lat * {SCALE}.0E0) as bigint) AS sy",
         )
     )
-    pts = cells.assign_cells(pts, zoom, "mercator", engine="sql")
+    pts = cells.assign_cells(pts, zoom, "mercator")
 
     def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
         upts = np.unique(

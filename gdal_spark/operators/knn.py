@@ -62,7 +62,6 @@ def knn(
     lon_col: str = "lon",
     lat_col: str = "lat",
     max_rounds: int = 12,
-    engine: str = "sql",
 ) -> DataFrame:
     """k nearest points for each site.
 
@@ -82,7 +81,6 @@ def knn(
         return knn_df(
             points, sites_df, k, zoom=zoom, id_col=id_col,
             lon_col=lon_col, lat_col=lat_col, max_rounds=max_rounds,
-            engine=engine,
         )
     pts = assign_cells(
         points.select(id_col, lon_col, lat_col),
@@ -90,7 +88,6 @@ def knn(
         grid_kind="geodetic",
         lon_col=lon_col,
         lat_col=lat_col,
-        engine=engine,
     ).select(id_col, lon_col, lat_col, "tile_x", "tile_y")
     pts = pts.persist()
     try:
@@ -204,7 +201,6 @@ def knn_df(
     lon_col: str = "lon",
     lat_col: str = "lat",
     max_rounds: int = 12,
-    engine: str = "sql",
 ) -> DataFrame:
     """DataFrame-native cell-ring kNN for LARGE site tables: the
     running per-site top-k lives in a localCheckpointed DataFrame and
@@ -226,7 +222,6 @@ def knn_df(
         grid_kind="geodetic",
         lon_col=lon_col,
         lat_col=lat_col,
-        engine=engine,
     ).select(id_col, lon_col, lat_col, "tile_x", "tile_y").persist()
     try:
         sites = sites_df.selectExpr(

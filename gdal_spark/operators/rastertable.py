@@ -63,7 +63,7 @@ def merge_mosaic(images: DataFrame, zoom: int = 8) -> DataFrame:
     in input order = max i) image + contributor count."""
     from . import cells
 
-    with_cells = cells.assign_cells(images, zoom, "mercator", engine="sql")
+    with_cells = cells.assign_cells(images, zoom, "mercator")
     return with_cells.groupBy("cell_id").agg(
         F.max("i").alias("winner_i"),
         F.count("*").alias("n_images"),
@@ -87,7 +87,7 @@ def mosaic_plan(images: DataFrame, zoom: int = 8) -> DataFrame:
     value), lowest (max), and average (integer-scaled sum / count)."""
     from . import cells
 
-    with_cells = cells.assign_cells(images, zoom, "mercator", engine="sql")
+    with_cells = cells.assign_cells(images, zoom, "mercator")
     return with_cells.groupBy("cell_id").agg(
         F.expr(f"min(cast(floor({RES} * 1000000000.0E0) as bigint))").alias(
             "res_highest_nano"

@@ -19,10 +19,13 @@ Spark shape (scale-first):
    explode of the payload: only a narrow (key, lon, lat) projection is
    exploded, a semi-join pattern so image payload bytes never shuffle).
 3. equi-join on cell_id -> candidate pairs.
-4. exact refine: a vectorized pandas-UDF *filter* on the join output —
-   no extra shuffle, no per-polygon grouping (so no skew from dense
-   polygons); each Arrow batch factorizes its polygons and ray-casts
-   all points per polygon at once.
+4. exact refine, JVM-side, in two branches each joined against its
+   own broadcast: rectangle polygons pass on the envelope test alone;
+   the rest run the even-odd ray cast as a Catalyst higher-order
+   expression over edge arrays pre-decoded at cover build
+   (``pip_parity_expr``). No Python worker and no Arrow transfer in
+   the probe; the Arrow numpy kernel survives only in
+   ``spatial_join_bruteforce``, the test oracle.
 
 At 100 TB: stage 2 is map-only; the only shuffle is the equi-join
 (avoided entirely when the polygon side broadcasts); AQE skew-join
@@ -48,24 +51,20 @@ def polygon_cells(
     join_zoom: int = DEFAULT_JOIN_ZOOM,
     min_zoom: int = DEFAULT_MIN_ZOOM,
     max_cells: int = 64,
-    with_edges: bool = False,
 ) -> DataFrame:
     """Explode polygons to covering geodetic cells at a per-polygon
     adaptive zoom in [min_zoom, join_zoom]. Output: polygon columns +
-    ``cell_id``. With ``with_edges``, also a pre-decoded flat edge
-    array ([x1,y1,x2,y2] per edge, all rings — holes flip parity) so
-    the refine can run as a JVM higher-order expression with no WKB
-    decode and no Arrow transfer."""
+    ``cell_id``, the envelope, ``is_rect`` and a pre-decoded edge
+    array ([x1,y1,x2,y2] per edge, all rings — holes flip parity; NULL
+    for rectangles) so the refine runs as a JVM higher-order
+    expression with no WKB decode and no Arrow transfer."""
     env_fields = [
         T.StructField(c, T.DoubleType(), False)
         for c in ("env_minx", "env_miny", "env_maxx", "env_maxy")
-    ] + [T.StructField("is_rect", T.BooleanType(), False)]
-    if with_edges:
-        env_fields.append(
-            T.StructField(
-                "edges", T.ArrayType(T.ArrayType(T.DoubleType())), True
-            )
-        )
+    ] + [
+        T.StructField("is_rect", T.BooleanType(), False),
+        T.StructField("edges", T.ArrayType(T.ArrayType(T.DoubleType())), True),
+    ]
     out_schema = T.StructType(
         polys.schema.fields
         + [T.StructField("cell_id", T.LongType(), False)]
@@ -84,9 +83,8 @@ def polygon_cells(
                 z = geom_mod.zoom_for_max_cells(g, max_cells, max_zoom=join_zoom)
                 z = max(z, min_zoom)
                 cids = geom_mod.covering_cells_geodetic(g, z)
-                env = [*wkb.envelope(g), _is_rectangle(g)]
-                if with_edges:
-                    env.append(None if env[-1] else _edge_list(g))
+                rect = _is_rectangle(g)
+                env = [*wkb.envelope(g), rect, None if rect else _edge_list(g)]
                 for c in cols:
                     rows[c].extend([d[c]] * len(cids))
                 for name, v in zip(envs, env):
@@ -120,7 +118,7 @@ def pip_parity_expr(lon_col: str, lat_col: str, edges_col: str = "edges") -> str
     """Even-odd ray cast as a Catalyst higher-order expression over a
     pre-decoded edge array — the EXACT op sequence of
     geom.points_in_rings (cond on (y1>py)!=(y2>py); px < x-intercept),
-    so results are bit-identical to the Arrow refine while staying
+    so results are bit-identical to the numpy kernel while staying
     entirely JVM-side (no Python workers in the hot path). A
     horizontal edge divides by zero -> NULL condition -> parity
     unchanged, matching the numpy kernel's cond mask.
@@ -165,26 +163,6 @@ def _is_rectangle(geom_wkb: bytes) -> bool:
     return bool(np.all((d[:, 0] == 0) ^ (d[:, 1] == 0)))
 
 
-def make_pip_udf():
-    """Vectorized exact point-in-polygon refine (even-odd ray cast).
-    Factorizes geometries per Arrow batch so each polygon's points are
-    tested in one numpy pass."""
-
-    @F.pandas_udf(T.BooleanType())
-    def pip(lon: pd.Series, lat: pd.Series, geom: pd.Series) -> pd.Series:
-        out = np.zeros(len(lon), dtype=bool)
-        if len(lon):
-            codes, uniques = pd.factorize(geom)
-            px = lon.values.astype(np.float64)
-            py = lat.values.astype(np.float64)
-            for code, g in enumerate(uniques):
-                mask = codes == code
-                out[mask] = geom_mod.points_in_wkb(px[mask], py[mask], bytes(g))
-        return pd.Series(out)
-
-    return pip
-
-
 def prepare_spatial_join(
     polys: DataFrame,
     join_zoom: int = DEFAULT_JOIN_ZOOM,
@@ -196,7 +174,6 @@ def prepare_spatial_join(
     broadcast_max_rows: int = 2_000_000,
     poly_count_hint: int | None = None,
     poly_cols: list[str] | None = None,
-    refine: str = "jvm",
 ) -> "PreparedSpatialJoin":
     """Build the polygon side of the PIP join ONCE (adaptive cell
     cover + localCheckpoint + zoom-level set + broadcast hints) and
@@ -230,12 +207,11 @@ def prepare_spatial_join(
     # checkpoint blocks release automatically when the RDD is
     # unreferenced (no cache accumulation across repeated calls)
     pcells = polygon_cells(
-        polys_src, join_zoom, min_zoom, max_cells, with_edges=refine == "jvm"
+        polys_src, join_zoom, min_zoom, max_cells
     ).localCheckpoint(eager=True)
     # rectangle polygons: the envelope test IS the exact test
-    # (m_bFilterIsEnvelope, ogrlayer.cpp) -> a pure-JVM branch that
-    # never ships WKB through the broadcast nor rows through Arrow
-    geom_col = "edges" if refine == "jvm" else "geom_wkb"
+    # (m_bFilterIsEnvelope, ogrlayer.cpp) -> a branch whose broadcast
+    # carries no edge arrays and whose rows skip the ray cast
     # (A local-relation dim variant — pre-collecting the cover to the
     # driver so broadcast builds skip the distributed scan — was
     # measured 2x WORSE per pass (1.1 s vs 0.6 s fixed cost at 32
@@ -244,13 +220,7 @@ def prepare_spatial_join(
     # BENCH/PROFILE_r4.md; the checkpointed distributed cover stays.)
     rect_cells = pcells.filter("is_rect").select("cell_id", *env_cols, *poly_cols)
     geom_cells = pcells.filter("NOT is_rect").select(
-        "cell_id", geom_col, *env_cols, *poly_cols
-    )
-    # the jvm refine runs as a single fused probe (one scan of the
-    # point side); it keeps is_rect + edges together in one broadcast
-    all_cells = pcells.select(
-        "cell_id", "is_rect", *([geom_col] if refine == "jvm" else []),
-        *env_cols, *poly_cols,
+        "cell_id", "edges", *env_cols, *poly_cols
     )
     if broadcast is None:
         # decide from the un-exploded polygon count — a size hint
@@ -261,7 +231,6 @@ def prepare_spatial_join(
     if broadcast:
         rect_cells = F.broadcast(rect_cells)
         geom_cells = F.broadcast(geom_cells)
-        all_cells = F.broadcast(all_cells)
 
     # The probe's explode is pruned to the zoom levels ACTUALLY
     # PRESENT in the polygon cover (one tiny action on the
@@ -276,21 +245,21 @@ def prepare_spatial_join(
     ).first()
     zs = sorted(meta["zs"] or []) or [join_zoom]
     return PreparedSpatialJoin(
-        rect_cells, geom_cells, all_cells, zs, join_zoom,
-        lon_col, lat_col, poly_cols, refine, pcells,
+        rect_cells, geom_cells, pcells, zs, join_zoom,
+        lon_col, lat_col, poly_cols,
     )
 
 
 class PreparedSpatialJoin:
     """The polygon side of a PIP join, prepared once and probed many
     times (see ``prepare_spatial_join``). Holds the checkpointed cell
-    cover (the reference keeps its blocks alive), the pruned zoom set
-    and the broadcast-hinted branch tables; ``probe`` is pure plan
-    construction — no driver-side actions."""
+    cover ``all_cells`` (the reference keeps its blocks alive), the
+    pruned zoom set ``zs`` and the broadcast-hinted branch tables;
+    ``probe`` is pure plan construction — no driver-side actions."""
 
     def __init__(
         self, rect_cells, geom_cells, all_cells, zs, join_zoom,
-        lon_col, lat_col, poly_cols, refine, pcells,
+        lon_col, lat_col, poly_cols,
     ):
         self.rect_cells = rect_cells
         self.geom_cells = geom_cells
@@ -300,33 +269,14 @@ class PreparedSpatialJoin:
         self.lon_col = lon_col
         self.lat_col = lat_col
         self.poly_cols = poly_cols
-        self.refine = refine
-        self._pcells = pcells  # keeps checkpoint blocks referenced
 
     def probe(
-        self,
-        points: DataFrame,
-        point_cols: list[str] | None = None,
-        engine: str = "sql",
-        shared_broadcast: bool = False,
-        heavy_points: DataFrame | None = None,
+        self, points: DataFrame, point_cols: list[str] | None = None
     ) -> DataFrame:
         """Inner PIP join of ``points`` against the prepared polygon
         layer: rows = (point, polygon) pairs where the point lies
-        inside the polygon (even-odd rule).
-
-        ``shared_broadcast``: with the jvm refine, probe BOTH branches
-        against the single ``all_cells`` broadcast (post-join is_rect
-        split) so the per-execution broadcast build happens once and
-        Catalyst's ReuseExchange shares it — trades slightly wider
-        broadcast rows in the rect branch for one build per batch
-        instead of two (the scaling campaign's broadcast-rebuild A/B).
-        ``heavy_points``: an alternative point-side DataFrame (same
-        schema/contents, typically finer-partitioned) used ONLY for
-        the heavy refine branch, so its final wave is finer-grained
-        without inflating the cheap rect branch's task-dispatch cost."""
-        lon_col, lat_col = self.lon_col, self.lat_col
-        join_zoom, refine = self.join_zoom, self.refine
+        inside the polygon (even-odd rule)."""
+        lon_col, lat_col, join_zoom = self.lon_col, self.lat_col, self.join_zoom
         point_cols = point_cols or [
             c for c in points.columns if c not in (lon_col, lat_col)
         ]
@@ -334,36 +284,33 @@ class PreparedSpatialJoin:
         # point side: cell at join_zoom, then ancestors via pure int
         # arithmetic, exploded on a narrow projection (a semi-join
         # pattern: image payload bytes never shuffle).
-        def _pts(src: DataFrame) -> DataFrame:
-            pts = assign_cells(
-                src, join_zoom, grid_kind="geodetic", lon_col=lon_col,
-                lat_col=lat_col, engine=engine,
+        pts = assign_cells(
+            points, join_zoom, grid_kind="geodetic", lon_col=lon_col,
+            lat_col=lat_col,
+        )
+        levels = [
+            F.expr(
+                cell_id_sql(
+                    f"(tile_x >> {join_zoom - z})",
+                    f"(tile_y >> {join_zoom - z})",
+                    z,
+                )
             )
-            levels = [
-                F.expr(
-                    cell_id_sql(
-                        f"(tile_x >> {join_zoom - z})",
-                        f"(tile_y >> {join_zoom - z})",
-                        z,
-                    )
-                )
-                for z in self.zs
-            ]
-            if len(levels) == 1:
-                # single-zoom cover: no explode stage at all
-                return pts.select(
-                    lon_col, lat_col, *point_cols, levels[0].alias("cell_id")
-                )
-            return pts.select(
+            for z in self.zs
+        ]
+        if len(levels) == 1:
+            # single-zoom cover: no explode stage at all
+            pts = pts.select(
+                lon_col, lat_col, *point_cols, levels[0].alias("cell_id")
+            )
+        else:
+            pts = pts.select(
                 lon_col, lat_col, *point_cols,
                 F.explode(F.array(*levels)).alias("cell_id"),
             )
 
-        pts = _pts(points)
-        pts_heavy = _pts(heavy_points) if heavy_points is not None else pts
-
         # envelope reject, JVM-side (FilterGeometry's bbox fast path,
-        # ogrlayer.cpp:1468) — cuts the refine input before any Python
+        # ogrlayer.cpp:1468) — cuts the refine input before the ray cast
         def bbox(df: DataFrame) -> DataFrame:
             return df.filter(
                 (F.col(lon_col) >= F.col("env_minx"))
@@ -373,65 +320,24 @@ class PreparedSpatialJoin:
             )
 
         out_cols = [lon_col, lat_col, *point_cols, *self.poly_cols]
-        if refine == "jvm_fused":
-            # single-probe variant: one scan of the point side, but the
-            # whole candidate stream (including rectangle candidates)
-            # pays the CodegenFallback eval of the higher-order PIP —
-            # measured 1.5x slower than the two-branch default on the
-            # synth layer (rect-heavy hot cell). Useful when the layer
-            # is overwhelmingly non-rect.
-            cand = bbox(pts.join(self.all_cells, "cell_id", "inner"))
-            refined = cand.filter(
-                F.expr(f"is_rect OR ({pip_parity_expr(lon_col, lat_col)})")
-            )
-            return refined.select(*out_cols)
-        if refine == "jvm" and shared_broadcast:
-            # single shared broadcast: both branches join all_cells and
-            # split on is_rect AFTER the join — ReuseExchange makes the
-            # second branch a ReusedExchange of the first's broadcast,
-            # so each batch execution builds/ships ONE hash relation
-            # the rect branch must CONSUME the geom column, or column
-            # pruning gives it a narrower broadcast child than the
-            # heavy branch and the two exchanges no longer
-            # canonicalize equal (no reuse).  coalesce(size(...)) is
-            # non-foldable and always >= -1, so the predicate is a
-            # no-op that pins the shared schema.
-            geom_keep = "coalesce(size(edges), -1) >= -100"
-            rect_out = bbox(
-                pts.join(self.all_cells, "cell_id", "inner")
-            ).filter(f"is_rect AND ({geom_keep})").select(*out_cols)
-            cand = bbox(
-                pts_heavy.join(self.all_cells, "cell_id", "inner")
-            ).filter("NOT is_rect")
-            refined = cand.filter(F.expr(pip_parity_expr(lon_col, lat_col)))
-            return refined.select(*out_cols).unionAll(rect_out)
         rect_out = bbox(
             pts.join(self.rect_cells, "cell_id", "inner")
         ).select(*out_cols)
-        if refine == "jvm":
-            # two probes (rect codegen fast path / edge-walk refine),
-            # each against its own narrow broadcast: the point
-            # generation is re-run per branch but is pure codegen
-            # (cheap); keeping the rectangle majority out of the
-            # interpreted refine dominates. The HEAVY refine branch
-            # goes first in the union: both branches run in one stage
-            # in partition order, so heavy-first lets the cheap rect
-            # tasks fill the scheduler tail instead of an all-heavy
-            # final wave (profiled 4.5x task-duration spread in the
-            # combined stage at 32 cores).
-            cand = bbox(pts_heavy.join(self.geom_cells, "cell_id", "inner"))
-            refined = cand.filter(F.expr(pip_parity_expr(lon_col, lat_col)))
-            return refined.select(*out_cols).unionAll(rect_out)
+        # two probes (rect codegen fast path / edge-walk refine), each
+        # against its own narrow broadcast: the point generation is
+        # re-run per branch but is pure codegen (cheap); keeping the
+        # rectangle majority out of the interpreted refine dominates
+        # (a single fused probe over one broadcast measured 1.5x
+        # slower; one shared broadcast for both branches was a
+        # negative result, BENCH/PROFILE_r4.md par.6). The HEAVY
+        # refine branch goes first in the union: both branches run in
+        # one stage in partition order, so heavy-first lets the cheap
+        # rect tasks fill the scheduler tail instead of an all-heavy
+        # final wave (profiled 4.5x task-duration spread in the
+        # combined stage at 32 cores).
         cand = bbox(pts.join(self.geom_cells, "cell_id", "inner"))
-        # homogenize Arrow batches by polygon (local sort, no shuffle)
-        # so the refine factorization sees few distinct geometries per
-        # batch
-        cand = cand.sortWithinPartitions("geom_wkb")
-        pip = make_pip_udf()
-        refined = cand.filter(
-            pip(F.col(lon_col), F.col(lat_col), F.col("geom_wkb"))
-        )
-        return rect_out.unionAll(refined.select(*out_cols))
+        refined = cand.filter(F.expr(pip_parity_expr(lon_col, lat_col)))
+        return refined.select(*out_cols).unionAll(rect_out)
 
 
 def spatial_join(
@@ -447,17 +353,11 @@ def spatial_join(
     poly_count_hint: int | None = None,
     point_cols: list[str] | None = None,
     poly_cols: list[str] | None = None,
-    engine: str = "sql",
-    refine: str = "jvm",
 ) -> DataFrame:
     """Inner PIP join: rows = (point, polygon) pairs where the point
-    lies inside the polygon (even-odd rule).
-
-    refine='jvm' (default) evaluates the exact ray cast as a Catalyst
-    higher-order expression over pre-decoded edge arrays — the whole
-    join stays JVM-side with zero Arrow traffic (the scale path on a
-    memory-bandwidth-bound host). refine='arrow' is the vectorized
-    pandas-UDF kernel (same arithmetic, bit-identical output).
+    lies inside the polygon (even-odd rule). The exact ray cast is a
+    Catalyst higher-order expression over pre-decoded edge arrays, so
+    the whole join stays JVM-side with zero Arrow traffic.
 
     One-shot convenience over prepare_spatial_join().probe(); repeated
     probes against the same layer should prepare once."""
@@ -472,8 +372,7 @@ def spatial_join(
         broadcast_max_rows=broadcast_max_rows,
         poly_count_hint=poly_count_hint,
         poly_cols=poly_cols,
-        refine=refine,
-    ).probe(points, point_cols=point_cols, engine=engine)
+    ).probe(points, point_cols=point_cols)
 
 
 def spatial_join_bruteforce(
@@ -484,8 +383,24 @@ def spatial_join_bruteforce(
     point_cols: list[str] | None = None,
     poly_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Cross-join + exact refine — the oracle for tests (no cell
-    prefilter, same PIP kernel)."""
+    """Cross-join + exact refine — the oracle for tests: no cell
+    prefilter, and the ray cast runs in the numpy kernel
+    (geom.points_in_wkb) through a vectorized pandas UDF that
+    factorizes geometries per Arrow batch, so each polygon's points
+    are tested in one numpy pass."""
+
+    @F.pandas_udf(T.BooleanType())
+    def pip(lon: pd.Series, lat: pd.Series, geom: pd.Series) -> pd.Series:
+        out = np.zeros(len(lon), dtype=bool)
+        if len(lon):
+            codes, uniques = pd.factorize(geom)
+            px = lon.values.astype(np.float64)
+            py = lat.values.astype(np.float64)
+            for code, g in enumerate(uniques):
+                mask = codes == code
+                out[mask] = geom_mod.points_in_wkb(px[mask], py[mask], bytes(g))
+        return pd.Series(out)
+
     point_cols = point_cols or [
         c for c in points.columns if c not in (lon_col, lat_col)
     ]
@@ -493,7 +408,6 @@ def spatial_join_bruteforce(
     cand = points.select(lon_col, lat_col, *point_cols).crossJoin(
         F.broadcast(polys.select("geom_wkb", *poly_cols))
     )
-    pip = make_pip_udf()
     return cand.filter(pip(F.col(lon_col), F.col(lat_col), F.col("geom_wkb"))).select(
         lon_col, lat_col, *point_cols, *poly_cols
     )

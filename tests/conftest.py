@@ -16,5 +16,16 @@ def spark():
     s.stop()
 
 
+def reference_file(path):
+    """``path`` unchanged when the file exists; otherwise skip the
+    calling test. Golden fixtures from the reference's autotest tree
+    are read in place, never copied into this repo, so a checkout
+    without that tree skips the golden-parity tests instead of failing
+    them; the pure-engine tests beside them keep running."""
+    if not Path(path).exists():
+        pytest.skip(f"reference fixture not present: {path}")
+    return path
+
+
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"

@@ -112,10 +112,11 @@ def test_hillshade_params_pyramid_golden():
 
     from gdal_spark.operators import dem as demmod
     from tests import tiffio
+    from tests.conftest import reference_file
 
-    ref = tiffio.read_tiff(
+    ref = tiffio.read_tiff(reference_file(
         "/root/reference/autotest/utilities/data/pyramid_shaded_ref.tif"
-    )
+    ))
     if ref.ndim == 3:
         ref = ref[:, :, 0]
     i, j = np.meshgrid(np.arange(100), np.arange(100), indexing="xy")

@@ -9,6 +9,8 @@ in as literals. Our implementation is a fresh numpy derivation; these
 tests pin exact agreement (tile ids exact, bounds to 1e-9 m).
 """
 
+import itertools
+
 import numpy as np
 import pytest
 
@@ -196,6 +198,49 @@ def test_cell_prefixes_are_ancestors():
     # last prefix is the zoom-0 root
     z, x, y = grid.unpack_cell(prefixes[-1][0])
     assert (int(z), int(x), int(y)) == (0, 0, 0)
+
+
+def test_assign_cells_sql_matches_numpy_reference(spark):
+    """The runtime tile assignment (Catalyst expressions) equals the
+    numpy encoders above row for row: synth image rows plus finite
+    edge points — the antimeridian, the mercator latitude limit and
+    exact tile boundaries on both grids."""
+    from gdal_spark import synth
+    from gdal_spark.operators import cells
+
+    edge_lon = [-180.0, 180.0]
+    edge_lat = [-85.0511, 85.0511, -grid.MERC_MAX_LAT, grid.MERC_MAX_LAT]
+    for z in (8, 12):
+        n = 2**z
+        k = np.arange(0, n + 1, n // 16)
+        # geodetic x boundaries (2n tiles); every other one is mercator's
+        edge_lon += (-180.0 + 180.0 * k / n).tolist()
+        edge_lat += (-90.0 + 180.0 * k / n).tolist()  # geodetic y
+        miny = grid.tile_bounds_merc(0, k, z)[1]
+        edge_lat += grid.meters_to_lonlat(0.0, miny)[1].tolist()  # mercator y
+    edge_lat = [v for v in edge_lat if abs(v) <= grid.MERC_MAX_LAT]
+    pts = [(lon, 0.0) for lon in edge_lon] + [(0.0, lat) for lat in edge_lat]
+    pts += [(lon, lat) for lon in (-180.0, 180.0) for lat in (-85.0511, 85.0511)]
+    edge = spark.createDataFrame(
+        [(-1 - j, lon, lat) for j, (lon, lat) in enumerate(pts)],
+        "i long, lon double, lat double",
+    )
+    rows = synth.images_df(spark, 4096).select("i", "lon", "lat").unionByName(edge)
+
+    encode = {
+        "mercator": grid.lonlat_to_tile_merc,
+        "geodetic": grid.lonlat_to_tile_geodetic,
+    }
+    # engine="pandas" runs these same encoders in a UDF: checks its plumbing
+    for engine, kind, z in itertools.product(("sql", "pandas"), encode, (12, 8)):
+        got = cells.assign_cells(rows, z, kind, engine=engine).toPandas()
+        tx, ty = encode[kind](got["lon"].values, got["lat"].values, z)
+        msg = f"{engine} {kind} z{z}"
+        np.testing.assert_array_equal(got["tile_x"].values, tx, err_msg=msg)
+        np.testing.assert_array_equal(got["tile_y"].values, ty, err_msg=msg)
+        np.testing.assert_array_equal(
+            got["cell_id"].values, grid.pack_cell(z, tx, ty), err_msg=msg
+        )
 
 
 def test_grid_metrics_vs_brute_force(spark):

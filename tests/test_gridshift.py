@@ -14,13 +14,14 @@ import pytest
 
 from gdal_spark import gridshift, srs, synth
 from gdal_spark.operators.stats import gdal_checksum
+from tests.conftest import reference_file
 
 NTV2_DIR = "/root/reference/autotest/gdrivers/data/ntv2"
 
 
 @pytest.mark.parametrize("endian", ["le", "be"])
 def test_ntv2_reader_matches_reference_goldens(endian):
-    g = gridshift.read_ntv2(f"{NTV2_DIR}/test_ntv2_{endian}.gsb")
+    g = gridshift.read_ntv2(reference_file(f"{NTV2_DIR}/test_ntv2_{endian}.gsb"))
     assert g.shape == (2, 2)
     gt = g.geotransform()
     # exact per the driver's formula (ntv2dataset.cpp:698): origin is
@@ -37,15 +38,15 @@ def test_ntv2_reader_matches_reference_goldens(endian):
 
 
 def test_ntv2_le_be_identical():
-    a = gridshift.read_ntv2(f"{NTV2_DIR}/test_ntv2_le.gsb")
-    b = gridshift.read_ntv2(f"{NTV2_DIR}/test_ntv2_be.gsb")
+    a = gridshift.read_ntv2(reference_file(f"{NTV2_DIR}/test_ntv2_le.gsb"))
+    b = gridshift.read_ntv2(reference_file(f"{NTV2_DIR}/test_ntv2_be.gsb"))
     np.testing.assert_array_equal(a.lat_shift, b.lat_shift)
     np.testing.assert_array_equal(a.lon_shift, b.lon_shift)
     assert a.geotransform() == b.geotransform()
 
 
 def test_ntv2_bilinear_exact_at_nodes():
-    g = gridshift.read_ntv2(f"{NTV2_DIR}/test_ntv2_le.gsb")
+    g = gridshift.read_ntv2(reference_file(f"{NTV2_DIR}/test_ntv2_le.gsb"))
     nr, nc = g.shape
     lons = [g.e_long / 3600.0, g.w_long / 3600.0]
     lats = [g.s_lat / 3600.0, g.n_lat / 3600.0]
@@ -58,7 +59,7 @@ def test_ntv2_bilinear_exact_at_nodes():
 
 
 def test_ntv2_bilinear_center_is_mean():
-    g = gridshift.read_ntv2(f"{NTV2_DIR}/test_ntv2_le.gsb")
+    g = gridshift.read_ntv2(reference_file(f"{NTV2_DIR}/test_ntv2_le.gsb"))
     lon = (g.e_long + g.w_long) / 2.0 / 3600.0
     lat = (g.s_lat + g.n_lat) / 2.0 / 3600.0
     ls, lo = g.bilinear([lon], [lat])
@@ -149,7 +150,7 @@ def test_real_ntv2_grid_through_table_path(spark):
     """grid_table_from_ntv2 output drives the same four-node
     bilinear equi-join the synthetic gate uses: interpolate the REAL
     reference fixture grid distributed and match the numpy bilinear."""
-    path = f"{NTV2_DIR}/test_ntv2_le.gsb"
+    path = reference_file(f"{NTV2_DIR}/test_ntv2_le.gsb")
     g = gridshift.read_ntv2(path)
     tbl = gridshift.grid_table_from_ntv2(spark, path)
     assert tbl.count() == 4

@@ -36,7 +36,7 @@ def test_warp_roundtrip_psnr(spark):
 def test_caption_survives_pipeline(spark):
     imgs = synth.images_df(spark, 64)
     out = (
-        cells.assign_cells(imgs, 12, "mercator", engine="pandas")
+        cells.assign_cells(imgs, 12, "mercator")
         .select("image_id", "caption")
         .toPandas()
         .set_index("image_id")

@@ -58,7 +58,7 @@ def test_text_profile_is_jvm_only(spark):
 
 def test_cell_assign_sql_engine_is_jvm_only(spark):
     imgs = synth.images_df(spark, 256)
-    s = plan(cells.assign_cells(imgs, 10, "mercator", engine="sql"))
+    s = plan(cells.assign_cells(imgs, 10, "mercator"))
     assert "ArrowEvalPython" not in s and "BatchEvalPython" not in s
 
 
@@ -91,40 +91,18 @@ def test_aggregation_is_partial_final(spark):
 
 
 def test_spatial_join_jvm_refine_has_no_python_in_probe(spark):
-    """The r3 refine='jvm' path: after the one-time polygon-cell
-    explode (checkpointed), the candidate join + exact ray cast is
+    """After the one-time polygon-cell explode (checkpointed), the candidate join + exact ray cast is
     pure JVM — no ArrowEvalPython / BatchEvalPython stage anywhere in
     the executed plan (the edge arrays ride the broadcast as plain
     array columns and the parity test is a Catalyst higher-order
     aggregate)."""
     imgs = synth.images_df(spark, 256)
     polys = synth.polygons_df(spark, 64)
-    out = spatial_join(
-        imgs, polys, point_cols=["image_id"], poly_cols=["poly_id"],
-        refine="jvm",
-    )
+    out = spatial_join(imgs, polys, point_cols=["image_id"], poly_cols=["poly_id"])
     s = plan(out)
     assert "ArrowEvalPython" not in s
     assert "BatchEvalPython" not in s
     assert "FlatMapsInPandas" not in s and "MapInPandas" not in s
-
-
-def test_spatial_join_jvm_matches_arrow_refine(spark):
-    """Bit-identical results from the JVM higher-order expression and
-    the vectorized Arrow kernel (same arithmetic, different engine)."""
-    imgs = synth.images_df(spark, 512)
-    polys = synth.polygons_df(spark, 64)
-    a = spatial_join(
-        imgs, polys, point_cols=["image_id"], poly_cols=["poly_id"],
-        refine="jvm",
-    ).toPandas()
-    b = spatial_join(
-        imgs, polys, point_cols=["image_id"], poly_cols=["poly_id"],
-        refine="arrow",
-    ).toPandas()
-    ka = sorted(zip(a["image_id"], a["poly_id"]))
-    kb = sorted(zip(b["image_id"], b["poly_id"]))
-    assert ka == kb
 
 
 def test_gcp_fit_uses_partial_aggregation(spark):

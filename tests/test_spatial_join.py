@@ -77,24 +77,26 @@ def test_covering_cells_superset():
 
 
 def test_spatial_join_matches_bruteforce_and_oracle(spark):
-    n_img, n_poly = 1024, 32
-    imgs = synth.images_df(spark, n_img)
-    polys = synth.polygons_df(spark, n_poly)
+    """The JVM refine equals the Arrow numpy kernel (brute force) and
+    the scalar oracle bit for bit, on two scenes."""
+    for n_img, n_poly in ((1024, 32), (512, 64)):
+        imgs = synth.images_df(spark, n_img)
+        polys = synth.polygons_df(spark, n_poly)
 
-    joined = spatial_join(
-        imgs, polys, point_cols=["i", "image_id"], poly_cols=["poly_id", "kind"]
-    )
-    got = {(r.i, r.poly_id) for r in joined.collect()}
+        joined = spatial_join(
+            imgs, polys, point_cols=["i", "image_id"], poly_cols=["poly_id", "kind"]
+        )
+        got = {(r.i, r.poly_id) for r in joined.collect()}
 
-    brute = spatial_join_bruteforce(
-        imgs, polys, point_cols=["i"], poly_cols=["poly_id"]
-    )
-    got_brute = {(r.i, r.poly_id) for r in brute.collect()}
-    assert got == got_brute
+        brute = spatial_join_bruteforce(
+            imgs, polys, point_cols=["i"], poly_cols=["poly_id"]
+        )
+        got_brute = {(r.i, r.poly_id) for r in brute.collect()}
+        assert got == got_brute
 
-    exp = expected_pairs(synth.images_pdf(n_img), synth.polygons_pdf(n_poly))
-    assert got == exp
-    assert len(exp) > 0  # non-degenerate scene
+        exp = expected_pairs(synth.images_pdf(n_img), synth.polygons_pdf(n_poly))
+        assert got == exp
+        assert len(exp) > 0  # non-degenerate scene
 
 
 def test_spatial_join_shuffle_path_equals_broadcast(spark):

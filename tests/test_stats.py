@@ -8,11 +8,12 @@ import numpy as np
 
 from gdal_spark import codecs, synth
 from gdal_spark.operators import stats
+from tests.conftest import reference_file
 
 
 def read_tiny_tiff(path):
     """Minimal uncompressed single-strip TIFF reader (test-only)."""
-    data = open(path, "rb").read()
+    data = open(reference_file(path), "rb").read()
     bo = "<" if data[:2] == b"II" else ">"
     off = struct.unpack(bo + "I", data[4:8])[0]
     n = struct.unpack(bo + "H", data[off : off + 2])[0]

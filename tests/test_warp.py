@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 
 from gdal_spark import resample
+from tests.conftest import reference_file
 from tests.tiffio import read_tiff
 
 DATA = Path("/root/reference/autotest/alg/data")
@@ -41,7 +42,7 @@ ALG_MAP = {
 
 
 def parse_vrt(path: Path):
-    text = path.read_text()
+    text = reference_file(path).read_text()
 
     def grab(pat):
         m = re.search(pat, text)
@@ -100,8 +101,8 @@ GOLDEN_CASES = [
 @pytest.mark.parametrize("vrt,golden", GOLDEN_CASES, ids=[c[0] for c in GOLDEN_CASES])
 def test_warp_golden_parity(vrt, golden):
     cfg = parse_vrt(DATA / vrt)
-    src = read_tiff(str(cfg["src"]))
-    ref = read_tiff(str(DATA / golden))
+    src = read_tiff(str(reference_file(cfg["src"])))
+    ref = read_tiff(str(reference_file(DATA / golden)))
     out = resample.warp_band(
         src,
         cfg["src_gt"],
@@ -126,8 +127,8 @@ def test_int16_neg_quantiles():
         ("utmsmall-int16-neg_med.vrt", "utmsmall-int16-neg_med.tif"),
     ]:
         cfg = parse_vrt(DATA / vrt)
-        src = read_tiff(str(cfg["src"]))
-        ref = read_tiff(str(DATA / golden))
+        src = read_tiff(str(reference_file(cfg["src"])))
+        ref = read_tiff(str(reference_file(DATA / golden)))
         out = resample.warp_band(
             src, cfg["src_gt"], cfg["dst_gt"], cfg["dst_shape"], cfg["alg"],
             out_dtype=ref.dtype,

@@ -54,7 +54,7 @@ def main():
     t0 = time.time()
     imgs = synth.images_df(spark, args.n_images)
     polys = synth.polygons_df(spark, args.n_polys)
-    assigned = cells.assign_cells(imgs, args.zoom, "mercator", engine="pandas")
+    assigned = cells.assign_cells(imgs, args.zoom, "mercator")
     n_cells = assigned.select(F.countDistinct("cell_id")).collect()[0][0]
     pairs = spatial_join(
         imgs, polys, point_cols=["image_id"], poly_cols=["poly_id"]
