@@ -87,32 +87,31 @@ def assign_cells(
     df: DataFrame,
     zoom: int,
     grid_kind: str = "mercator",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     engine: str = "sql",
     with_quadkey: bool = False,
-    prefix: str = "",
 ) -> DataFrame:
-    """Add ``tile_x, tile_y`` (TMS) and packed ``cell_id`` columns.
+    """Add ``tile_x, tile_y`` (TMS) and packed ``cell_id`` columns
+    from the ``lon, lat`` columns.
 
     engine="sql":    pure Catalyst expressions (JVM, codegen) — the
                      runtime path.
     engine="pandas": the ``grid.py`` numpy encoders in one pandas UDF —
                      the reference the SQL path is tested against.
     """
-    cx, cy, cc = f"{prefix}tile_x", f"{prefix}tile_y", f"{prefix}cell_id"
     if engine == "sql":
         fn = merc_tile_sql if grid_kind == "mercator" else geodetic_tile_sql
-        df = df.withColumn(cx, F.expr(fn(lon_col, lat_col, zoom, "x")))
-        df = df.withColumn(cy, F.expr(fn(lon_col, lat_col, zoom, "y")))
+        df = df.withColumn("tile_x", F.expr(fn("lon", "lat", zoom, "x")))
+        df = df.withColumn("tile_y", F.expr(fn("lon", "lat", zoom, "y")))
     elif engine == "pandas":
-        xy = _make_tile_udf(zoom, grid_kind)(F.col(lon_col), F.col(lat_col))
-        # one UDF call: its struct lands in cx, then splits into cx, cy
-        df = df.withColumn(cx, xy)
-        df = df.withColumns({cy: F.col(cx).tile_y, cx: F.col(cx).tile_x})
+        xy = _make_tile_udf(zoom, grid_kind)(F.col("lon"), F.col("lat"))
+        # one UDF call: its struct lands in tile_x, then splits in two
+        df = df.withColumn("tile_x", xy)
+        df = df.withColumns(
+            {"tile_y": F.col("tile_x").tile_y, "tile_x": F.col("tile_x").tile_x}
+        )
     else:
         raise ValueError(f"unknown engine {engine!r}")
-    df = df.withColumn(cc, F.expr(cell_id_sql(cx, cy, zoom)))
+    df = df.withColumn("cell_id", F.expr(cell_id_sql("tile_x", "tile_y", zoom)))
     if with_quadkey:
         if grid_kind != "mercator":
             raise ValueError("quadkey is defined on the mercator grid")
@@ -121,7 +120,7 @@ def assign_cells(
         def qk(tx: pd.Series, ty: pd.Series) -> pd.Series:
             return pd.Series(grid.quadkey(tx.values, ty.values, zoom))
 
-        df = df.withColumn(f"{prefix}quadkey", qk(F.col(cx), F.col(cy)))
+        df = df.withColumn("quadkey", qk(F.col("tile_x"), F.col("tile_y")))
     return df
 
 

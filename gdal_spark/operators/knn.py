@@ -24,7 +24,6 @@ O(log) because the radius doubles.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -32,6 +31,9 @@ from .. import grid
 from .cells import assign_cells
 
 DEFAULT_KNN_ZOOM = 4
+MAX_ROUNDS = 12  # ring rounds; the radius doubles each round
+# squared planar degree distance from a point (lon, lat) to its site
+D2_SQL = "(lon - slon) * (lon - slon) + (lat - slat) * (lat - slat)"
 
 
 def _ring_cells(scx: int, scy: int, r_lo: int, r_hi: int, zoom: int):
@@ -58,10 +60,6 @@ def knn(
     sites_pdf: pd.DataFrame,
     k: int,
     zoom: int = DEFAULT_KNN_ZOOM,
-    id_col: str = "i",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    max_rounds: int = 12,
 ) -> DataFrame:
     """k nearest points for each site.
 
@@ -70,7 +68,7 @@ def knn(
     top-k driver-side (fewer jobs); larger ones route through
     :func:`knn_df`, which keeps the running top-k distributed so the
     driver never materializes candidates. Returns
-    (site_id, rank, <id_col>, d2) — identical either way (same
+    (site_id, rank, i, d2) — identical either way (same
     metric, tie-break, and disjoint-round merge).
     """
     spark = points.sparkSession
@@ -78,17 +76,10 @@ def knn(
         sites_df = spark.createDataFrame(
             sites_pdf[["site_id", "slon", "slat"]]
         )
-        return knn_df(
-            points, sites_df, k, zoom=zoom, id_col=id_col,
-            lon_col=lon_col, lat_col=lat_col, max_rounds=max_rounds,
-        )
+        return knn_df(points, sites_df, k, zoom=zoom)
     pts = assign_cells(
-        points.select(id_col, lon_col, lat_col),
-        zoom,
-        grid_kind="geodetic",
-        lon_col=lon_col,
-        lat_col=lat_col,
-    ).select(id_col, lon_col, lat_col, "tile_x", "tile_y")
+        points.select("i", "lon", "lat"), zoom, grid_kind="geodetic"
+    ).select("i", "lon", "lat", "tile_x", "tile_y")
     pts = pts.persist()
     try:
         scx, scy = grid.lonlat_to_tile_geodetic(
@@ -104,10 +95,10 @@ def knn(
         # earlier rounds' candidates (a point lives in exactly one
         # cell, so rounds are disjoint and a per-round top-k loses
         # nothing).
-        best: dict = {}  # site_id -> DataFrame(id, d2) sorted, <= k rows
+        best: dict = {}  # site_id -> DataFrame(i, d2) sorted, <= k rows
         unsat = sites
         r_prev, r_cur = -1, 1
-        for _ in range(max_rounds):
+        for _ in range(MAX_ROUNDS):
             ring_rows = []
             for rec in unsat.itertuples(index=False):
                 for x, y in _ring_cells(int(rec.scx), int(rec.scy), r_prev, r_cur, zoom):
@@ -120,29 +111,22 @@ def knn(
                 )
                 cand = pts.join(
                     F.broadcast(ring_df), ["tile_x", "tile_y"], "inner"
-                ).select(
-                    "site_id",
-                    id_col,
-                    F.expr(
-                        f"({lon_col} - slon) * ({lon_col} - slon) + "
-                        f"({lat_col} - slat) * ({lat_col} - slat)"
-                    ).alias("d2"),
-                )
-                win = Window.partitionBy("site_id").orderBy("d2", id_col)
+                ).select("site_id", "i", F.expr(D2_SQL).alias("d2"))
+                win = Window.partitionBy("site_id").orderBy("d2", "i")
                 round_topk = (
                     cand.withColumn("rank", F.row_number().over(win))
                     .filter(F.col("rank") <= k)
-                    .select("site_id", id_col, "d2")
+                    .select("site_id", "i", "d2")
                 ).toPandas()
                 for site_id, g in round_topk.groupby("site_id"):
                     prev = best.get(site_id)
                     merged = (
-                        g[[id_col, "d2"]]
+                        g[["i", "d2"]]
                         if prev is None
-                        else pd.concat([prev, g[[id_col, "d2"]]])
+                        else pd.concat([prev, g[["i", "d2"]]])
                     )
                     best[site_id] = merged.sort_values(
-                        ["d2", id_col], kind="mergesort"
+                        ["d2", "i"], kind="mergesort"
                     ).head(k)
 
             # satisfaction: kth distance within the guaranteed-covered
@@ -180,13 +164,12 @@ def knn(
         for site_id in sorted(best):
             b = best[site_id].reset_index(drop=True)
             for rank, rec in enumerate(b.itertuples(index=False), start=1):
-                rows.append((site_id, rank, getattr(rec, id_col), float(rec.d2)))
-        out_pdf = pd.DataFrame(rows, columns=["site_id", "rank", id_col, "d2"])
+                rows.append((site_id, rank, rec.i, float(rec.d2)))
+        out_pdf = pd.DataFrame(rows, columns=["site_id", "rank", "i", "d2"])
         out_pdf["rank"] = out_pdf["rank"].astype("int32")
-        out_pdf[id_col] = out_pdf[id_col].astype("int64")
+        out_pdf["i"] = out_pdf["i"].astype("int64")
         return spark.createDataFrame(
-            out_pdf,
-            schema=f"site_id string, rank int, {id_col} bigint, d2 double",
+            out_pdf, schema="site_id string, rank int, i bigint, d2 double"
         )
     finally:
         pts.unpersist()
@@ -197,10 +180,6 @@ def knn_df(
     sites_df: DataFrame,
     k: int,
     zoom: int = DEFAULT_KNN_ZOOM,
-    id_col: str = "i",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    max_rounds: int = 12,
 ) -> DataFrame:
     """DataFrame-native cell-ring kNN for LARGE site tables: the
     running per-site top-k lives in a localCheckpointed DataFrame and
@@ -210,19 +189,15 @@ def knn_df(
     (tile_x, tile_y) — both sides arbitrarily large, no driver
     materialization anywhere.
 
-    sites_df: (site_id, slon, slat). Returns (site_id, rank, id, d2).
+    sites_df: (site_id, slon, slat). Returns (site_id, rank, i, d2).
     """
     from .cells import geodetic_tile_sql
 
     nx, ny = 2 ** (zoom + 1), 2**zoom
     cell_deg = 180.0 / (2.0**zoom)
     pts = assign_cells(
-        points.select(id_col, lon_col, lat_col),
-        zoom,
-        grid_kind="geodetic",
-        lon_col=lon_col,
-        lat_col=lat_col,
-    ).select(id_col, lon_col, lat_col, "tile_x", "tile_y").persist()
+        points.select("i", "lon", "lat"), zoom, grid_kind="geodetic"
+    ).select("i", "lon", "lat", "tile_x", "tile_y").persist()
     try:
         sites = sites_df.selectExpr(
             "site_id",
@@ -233,12 +208,12 @@ def knn_df(
         ).localCheckpoint(eager=True)
         spark = points.sparkSession
         best = spark.createDataFrame(
-            [], schema=f"site_id string, {id_col} bigint, d2 double"
+            [], schema="site_id string, i bigint, d2 double"
         )
         unsat = sites
-        win = Window.partitionBy("site_id").orderBy("d2", id_col)
+        win = Window.partitionBy("site_id").orderBy("d2", "i")
         r_prev, r_cur = -1, 1
-        for _ in range(max_rounds):
+        for _ in range(MAX_ROUNDS):
             ring = (
                 unsat.withColumn(
                     "dx", F.explode(F.sequence(F.lit(-r_cur), F.lit(r_cur)))
@@ -257,23 +232,18 @@ def knn_df(
                 )
             )
             cand = pts.join(ring, ["tile_x", "tile_y"]).select(
-                "site_id",
-                id_col,
-                F.expr(
-                    f"({lon_col} - slon) * ({lon_col} - slon) + "
-                    f"({lat_col} - slat) * ({lat_col} - slat)"
-                ).alias("d2"),
+                "site_id", "i", F.expr(D2_SQL).alias("d2")
             )
             round_topk = (
                 cand.withColumn("rank", F.row_number().over(win))
                 .filter(F.col("rank") <= k)
-                .select("site_id", id_col, "d2")
+                .select("site_id", "i", "d2")
             )
             best = (
                 best.unionAll(round_topk)
                 .withColumn("rank", F.row_number().over(win))
                 .filter(F.col("rank") <= k)
-                .select("site_id", id_col, "d2")
+                .select("site_id", "i", "d2")
                 .localCheckpoint(eager=True)
             )
             # satisfaction: k found AND kth distance inside the
@@ -310,7 +280,7 @@ def knn_df(
             .select(
                 "site_id",
                 F.col("rank").cast("int").alias("rank"),
-                F.col(id_col).cast("bigint").alias(id_col),
+                F.col("i").cast("bigint").alias("i"),
                 "d2",
             )
         )
@@ -322,25 +292,15 @@ def knn_bruteforce(
     points: DataFrame,
     sites_df: DataFrame,
     k: int,
-    id_col: str = "i",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
 ) -> DataFrame:
     """Cross-join oracle with the same metric and tie-break."""
-    cand = points.select(id_col, lon_col, lat_col).crossJoin(
+    cand = points.select("i", "lon", "lat").crossJoin(
         F.broadcast(sites_df.select("site_id", "slon", "slat"))
     )
-    cand = cand.select(
-        "site_id",
-        id_col,
-        F.expr(
-            f"({lon_col} - slon) * ({lon_col} - slon) + "
-            f"({lat_col} - slat) * ({lat_col} - slat)"
-        ).alias("d2"),
-    )
-    win = Window.partitionBy("site_id").orderBy("d2", id_col)
+    cand = cand.select("site_id", "i", F.expr(D2_SQL).alias("d2"))
+    win = Window.partitionBy("site_id").orderBy("d2", "i")
     return (
         cand.withColumn("rank", F.row_number().over(win))
         .filter(F.col("rank") <= k)
-        .select("site_id", "rank", id_col, "d2")
+        .select("site_id", "rank", "i", "d2")
     )

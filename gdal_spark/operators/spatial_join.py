@@ -11,9 +11,9 @@ layer scan. The even-odd parity rule matches GDAL's scanline fill
 Spark shape (scale-first):
 
 1. polygons -> covering cells at an adaptive zoom (coarse cells for
-   big polygons, capped at ``max_cells`` per polygon), exploded to
+   big polygons, capped at ``MAX_CELLS`` per polygon), exploded to
    (cell_id, poly row). The polygon side is usually the small side ->
-   broadcast; above ``broadcast_max_rows`` exploded rows it shuffles.
+   broadcast; above ``BROADCAST_MAX_ROWS`` exploded rows it shuffles.
 2. points (the big table) -> ONE cell per zoom level via pure
    arithmetic on the packed cell id (no re-projection per level, no
    explode of the payload: only a narrow (key, lon, lat) projection is
@@ -39,21 +39,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import geom as geom_mod
-from .. import grid, wkb
+from .. import wkb
 from .cells import assign_cells, cell_id_sql
 
-DEFAULT_JOIN_ZOOM = 6
-DEFAULT_MIN_ZOOM = 3
+JOIN_ZOOM = 6  # finest cover zoom; points are assigned cells here
+MIN_ZOOM = 3
+MAX_CELLS = 64  # cover cells per polygon
+BROADCAST_MAX_ROWS = 2_000_000  # exploded cover rows; above it, shuffle
 
 
-def polygon_cells(
-    polys: DataFrame,
-    join_zoom: int = DEFAULT_JOIN_ZOOM,
-    min_zoom: int = DEFAULT_MIN_ZOOM,
-    max_cells: int = 64,
-) -> DataFrame:
+def polygon_cells(polys: DataFrame) -> DataFrame:
     """Explode polygons to covering geodetic cells at a per-polygon
-    adaptive zoom in [min_zoom, join_zoom]. Output: polygon columns +
+    adaptive zoom in [MIN_ZOOM, JOIN_ZOOM]. Output: polygon columns +
     ``cell_id``, the envelope, ``is_rect`` and a pre-decoded edge
     array ([x1,y1,x2,y2] per edge, all rings — holes flip parity; NULL
     for rectangles) so the refine runs as a JVM higher-order
@@ -80,8 +77,8 @@ def polygon_cells(
             for rec in pdf.itertuples(index=False):
                 d = dict(zip(cols, rec))
                 g = bytes(d["geom_wkb"])
-                z = geom_mod.zoom_for_max_cells(g, max_cells, max_zoom=join_zoom)
-                z = max(z, min_zoom)
+                z = geom_mod.zoom_for_max_cells(g, MAX_CELLS, max_zoom=JOIN_ZOOM)
+                z = max(z, MIN_ZOOM)
                 cids = geom_mod.covering_cells_geodetic(g, z)
                 rect = _is_rectangle(g)
                 env = [*wkb.envelope(g), rect, None if rect else _edge_list(g)]
@@ -165,13 +162,6 @@ def _is_rectangle(geom_wkb: bytes) -> bool:
 
 def prepare_spatial_join(
     polys: DataFrame,
-    join_zoom: int = DEFAULT_JOIN_ZOOM,
-    min_zoom: int = DEFAULT_MIN_ZOOM,
-    max_cells: int = 64,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    broadcast: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
     poly_count_hint: int | None = None,
     poly_cols: list[str] | None = None,
 ) -> "PreparedSpatialJoin":
@@ -201,14 +191,12 @@ def prepare_spatial_join(
     if n_poly is not None:
         par = polys.sparkSession.sparkContext.defaultParallelism
         polys_src = polys.coalesce(max(1, min(n_poly // 128 + 1, par)))
-    # the exploded polygon side is small (<= max_cells * n_poly rows)
+    # the exploded polygon side is small (<= MAX_CELLS * n_poly rows)
     # and feeds two broadcast builds -> localCheckpoint so the explode
     # UDF runs once, not once per branch; unlike persist(), the
     # checkpoint blocks release automatically when the RDD is
     # unreferenced (no cache accumulation across repeated calls)
-    pcells = polygon_cells(
-        polys_src, join_zoom, min_zoom, max_cells
-    ).localCheckpoint(eager=True)
+    pcells = polygon_cells(polys_src).localCheckpoint(eager=True)
     # rectangle polygons: the envelope test IS the exact test
     # (m_bFilterIsEnvelope, ogrlayer.cpp) -> a branch whose broadcast
     # carries no edge arrays and whose rows skip the ray cast
@@ -222,13 +210,11 @@ def prepare_spatial_join(
     geom_cells = pcells.filter("NOT is_rect").select(
         "cell_id", "edges", *env_cols, *poly_cols
     )
-    if broadcast is None:
-        # decide from the un-exploded polygon count — a size hint
-        # avoids the extra count() action in the hot path; without
-        # one, the count is cheap and bounded by max_cells blowup
-        n_poly = n_poly if n_poly is not None else polys.count()
-        broadcast = n_poly * max_cells <= broadcast_max_rows
-    if broadcast:
+    # decide from the un-exploded polygon count — a size hint avoids
+    # the extra count() action in the hot path; without one, the count
+    # is cheap and bounded by MAX_CELLS blowup
+    n_poly = n_poly if n_poly is not None else polys.count()
+    if n_poly * MAX_CELLS <= BROADCAST_MAX_ROWS:
         rect_cells = F.broadcast(rect_cells)
         geom_cells = F.broadcast(geom_cells)
 
@@ -237,17 +223,14 @@ def prepare_spatial_join(
     # checkpointed cover table): a point's z-cell can only match
     # covers at z, so absent levels are dead rows — for a typical
     # small-polygon layer this cuts the probe traffic from
-    # (join_zoom - min_zoom + 1)x to 1-2x, which is the difference
+    # (JOIN_ZOOM - MIN_ZOOM + 1)x to 1-2x, which is the difference
     # between bandwidth-bound and compute-bound at full parallelism.
     # Cell ids pack the zoom in the top bits (grid.pack_cell).
     meta = pcells.agg(
         F.collect_set(F.expr("shiftright(cell_id, 58)")).alias("zs")
     ).first()
-    zs = sorted(meta["zs"] or []) or [join_zoom]
-    return PreparedSpatialJoin(
-        rect_cells, geom_cells, pcells, zs, join_zoom,
-        lon_col, lat_col, poly_cols,
-    )
+    zs = sorted(meta["zs"] or []) or [JOIN_ZOOM]
+    return PreparedSpatialJoin(rect_cells, geom_cells, pcells, zs, poly_cols)
 
 
 class PreparedSpatialJoin:
@@ -257,42 +240,33 @@ class PreparedSpatialJoin:
     pruned zoom set ``zs`` and the broadcast-hinted branch tables;
     ``probe`` is pure plan construction — no driver-side actions."""
 
-    def __init__(
-        self, rect_cells, geom_cells, all_cells, zs, join_zoom,
-        lon_col, lat_col, poly_cols,
-    ):
+    def __init__(self, rect_cells, geom_cells, all_cells, zs, poly_cols):
         self.rect_cells = rect_cells
         self.geom_cells = geom_cells
         self.all_cells = all_cells
         self.zs = zs
-        self.join_zoom = join_zoom
-        self.lon_col = lon_col
-        self.lat_col = lat_col
         self.poly_cols = poly_cols
 
     def probe(
         self, points: DataFrame, point_cols: list[str] | None = None
     ) -> DataFrame:
-        """Inner PIP join of ``points`` against the prepared polygon
-        layer: rows = (point, polygon) pairs where the point lies
-        inside the polygon (even-odd rule)."""
-        lon_col, lat_col, join_zoom = self.lon_col, self.lat_col, self.join_zoom
+        """Inner PIP join of ``points`` (with ``lon, lat`` columns)
+        against the prepared polygon layer: rows = (point, polygon)
+        pairs where the point lies inside the polygon (even-odd
+        rule)."""
         point_cols = point_cols or [
-            c for c in points.columns if c not in (lon_col, lat_col)
+            c for c in points.columns if c not in ("lon", "lat")
         ]
 
-        # point side: cell at join_zoom, then ancestors via pure int
+        # point side: cell at JOIN_ZOOM, then ancestors via pure int
         # arithmetic, exploded on a narrow projection (a semi-join
         # pattern: image payload bytes never shuffle).
-        pts = assign_cells(
-            points, join_zoom, grid_kind="geodetic", lon_col=lon_col,
-            lat_col=lat_col,
-        )
+        pts = assign_cells(points, JOIN_ZOOM, grid_kind="geodetic")
         levels = [
             F.expr(
                 cell_id_sql(
-                    f"(tile_x >> {join_zoom - z})",
-                    f"(tile_y >> {join_zoom - z})",
+                    f"(tile_x >> {JOIN_ZOOM - z})",
+                    f"(tile_y >> {JOIN_ZOOM - z})",
                     z,
                 )
             )
@@ -301,11 +275,11 @@ class PreparedSpatialJoin:
         if len(levels) == 1:
             # single-zoom cover: no explode stage at all
             pts = pts.select(
-                lon_col, lat_col, *point_cols, levels[0].alias("cell_id")
+                "lon", "lat", *point_cols, levels[0].alias("cell_id")
             )
         else:
             pts = pts.select(
-                lon_col, lat_col, *point_cols,
+                "lon", "lat", *point_cols,
                 F.explode(F.array(*levels)).alias("cell_id"),
             )
 
@@ -313,13 +287,13 @@ class PreparedSpatialJoin:
         # ogrlayer.cpp:1468) — cuts the refine input before the ray cast
         def bbox(df: DataFrame) -> DataFrame:
             return df.filter(
-                (F.col(lon_col) >= F.col("env_minx"))
-                & (F.col(lon_col) <= F.col("env_maxx"))
-                & (F.col(lat_col) >= F.col("env_miny"))
-                & (F.col(lat_col) <= F.col("env_maxy"))
+                (F.col("lon") >= F.col("env_minx"))
+                & (F.col("lon") <= F.col("env_maxx"))
+                & (F.col("lat") >= F.col("env_miny"))
+                & (F.col("lat") <= F.col("env_maxy"))
             )
 
-        out_cols = [lon_col, lat_col, *point_cols, *self.poly_cols]
+        out_cols = ["lon", "lat", *point_cols, *self.poly_cols]
         rect_out = bbox(
             pts.join(self.rect_cells, "cell_id", "inner")
         ).select(*out_cols)
@@ -336,20 +310,13 @@ class PreparedSpatialJoin:
         # final wave (profiled 4.5x task-duration spread in the
         # combined stage at 32 cores).
         cand = bbox(pts.join(self.geom_cells, "cell_id", "inner"))
-        refined = cand.filter(F.expr(pip_parity_expr(lon_col, lat_col)))
+        refined = cand.filter(F.expr(pip_parity_expr("lon", "lat")))
         return refined.select(*out_cols).unionAll(rect_out)
 
 
 def spatial_join(
     points: DataFrame,
     polys: DataFrame,
-    join_zoom: int = DEFAULT_JOIN_ZOOM,
-    min_zoom: int = DEFAULT_MIN_ZOOM,
-    max_cells: int = 64,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    broadcast: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
     poly_count_hint: int | None = None,
     point_cols: list[str] | None = None,
     poly_cols: list[str] | None = None,
@@ -362,24 +329,13 @@ def spatial_join(
     One-shot convenience over prepare_spatial_join().probe(); repeated
     probes against the same layer should prepare once."""
     return prepare_spatial_join(
-        polys,
-        join_zoom=join_zoom,
-        min_zoom=min_zoom,
-        max_cells=max_cells,
-        lon_col=lon_col,
-        lat_col=lat_col,
-        broadcast=broadcast,
-        broadcast_max_rows=broadcast_max_rows,
-        poly_count_hint=poly_count_hint,
-        poly_cols=poly_cols,
+        polys, poly_count_hint=poly_count_hint, poly_cols=poly_cols
     ).probe(points, point_cols=point_cols)
 
 
 def spatial_join_bruteforce(
     points: DataFrame,
     polys: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     point_cols: list[str] | None = None,
     poly_cols: list[str] | None = None,
 ) -> DataFrame:
@@ -402,12 +358,12 @@ def spatial_join_bruteforce(
         return pd.Series(out)
 
     point_cols = point_cols or [
-        c for c in points.columns if c not in (lon_col, lat_col)
+        c for c in points.columns if c not in ("lon", "lat")
     ]
     poly_cols = poly_cols or [c for c in polys.columns if c != "geom_wkb"]
-    cand = points.select(lon_col, lat_col, *point_cols).crossJoin(
+    cand = points.select("lon", "lat", *point_cols).crossJoin(
         F.broadcast(polys.select("geom_wkb", *poly_cols))
     )
-    return cand.filter(pip(F.col(lon_col), F.col(lat_col), F.col("geom_wkb"))).select(
-        lon_col, lat_col, *point_cols, *poly_cols
+    return cand.filter(pip(F.col("lon"), F.col("lat"), F.col("geom_wkb"))).select(
+        "lon", "lat", *point_cols, *poly_cols
     )

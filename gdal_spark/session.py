@@ -43,13 +43,6 @@ def get_spark(
     # 55.1s: 4x more Arrow/Python task dispatches on sub-second
     # stages). It is therefore a per-job knob (run_scaling_job sets it)
     # and NOT an engine default.
-    # SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — experiment hook so quiet-
-    # window scaling A/Bs (e.g. spark.sql.leafNodeDefaultParallelism)
-    # don't require code edits between attempts
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for item in filter(None, env_conf.split(";")):
-        k, _, v = item.partition("=")
-        builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 
 from gdal_spark import geom, synth, wkb
+from gdal_spark.operators import spatial_join as spatial_join_mod
 from gdal_spark.operators.spatial_join import spatial_join, spatial_join_bruteforce
 
 
@@ -99,14 +100,34 @@ def test_spatial_join_matches_bruteforce_and_oracle(spark):
         assert len(exp) > 0  # non-degenerate scene
 
 
-def test_spatial_join_shuffle_path_equals_broadcast(spark):
+def executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_spatial_join_shuffle_path_equals_broadcast(spark, monkeypatch):
+    """A cover above BROADCAST_MAX_ROWS is joined by shuffle, and the
+    shuffle join finds the broadcast join's pairs. Spark's own size
+    threshold is off in the shuffle arm, or it would broadcast the
+    small checkpointed cover anyway."""
     imgs = synth.images_df(spark, 512)
     polys = synth.polygons_df(spark, 16)
-    a = spatial_join(imgs, polys, broadcast=True, point_cols=["i"], poly_cols=["poly_id"])
-    b = spatial_join(imgs, polys, broadcast=False, point_cols=["i"], poly_cols=["poly_id"])
-    assert {(r.i, r.poly_id) for r in a.collect()} == {
-        (r.i, r.poly_id) for r in b.collect()
-    }
+    a = spatial_join(imgs, polys, point_cols=["i"], poly_cols=["poly_id"])
+    want = {(r.i, r.poly_id) for r in a.collect()}
+    assert "BroadcastHashJoin" in executed_plan(a)
+
+    monkeypatch.setattr(spatial_join_mod, "BROADCAST_MAX_ROWS", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        b = spatial_join(imgs, polys, point_cols=["i"], poly_cols=["poly_id"])
+        got = {(r.i, r.poly_id) for r in b.collect()}
+        plan = executed_plan(b)  # AQE's final plan, after collection
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" not in plan
+    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+    assert got == want
 
 
 def test_prepared_join_probe_matches_one_shot_and_is_reusable(spark):

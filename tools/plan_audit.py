@@ -1,4 +1,4 @@
-"""Physical-plan audit over the headline queries.
+"""Physical-plan audit over the registered queries.
 
 For each query: build the DataFrame (analysis only — fixpoint-loop
 operators do execute their label rounds), inspect the executed plan,
@@ -14,13 +14,12 @@ and tabulate the shape markers that matter at 100 TB:
 
 Writes BENCH/PLAN_AUDIT_r4.md and prints one JSON summary line.
 
-Usage:  python tools/plan_audit.py [query ...]   (default: bench HEADLINE)
+Usage:  python tools/plan_audit.py [query ...]   (default: every query)
 """
 
 from __future__ import annotations
 
 import json
-import os
 import re
 import sys
 from pathlib import Path
@@ -66,23 +65,19 @@ MARKERS = {
 }
 
 
-def audit(names=None, sf_dir=None):
+def audit(names=None):
     import __spark_entry__ as entrymod
+    from check_oracle import SF_DIR
     from gdal_spark.session import get_spark
 
-    import bench
-
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"
-    )
     spark = get_spark("plan_audit", shuffle_partitions=32)
     qs = entrymod.queries()
-    names = names or [n for n in bench.HEADLINE if n in qs]
+    names = names or list(qs)
     rows = []
     flagged = []
     for name in names:
         try:
-            df = qs[name](spark, sf_dir)
+            df = qs[name](spark, SF_DIR)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # pragma: no cover
             rows.append((name, {"error": str(exc)[:80]}))
@@ -105,7 +100,7 @@ def audit(names=None, sf_dir=None):
     md.mkdir(exist_ok=True)
     lines = [
         "# Physical-plan audit\n",
-        f"{len(names)} queries audited (pass names or default to bench HEADLINE).\n",
+        f"{len(names)} queries audited (pass names or default to every query).\n",
         "Markers per executed plan; BNLJ/cartesian allowed ONLY for the",
         "documented exact baselines (each has a registered scale path).\n",
         "| query | BHJ | SMJ | SHJ | cart | BNLJ | shuffles | py stages | codegen spans |",

@@ -9,7 +9,7 @@ Usage (cluster or local):
 Runs tile assignment + the PIP spatial join over the synthesized
 image table and prints one JSON result line. On a real cluster the
 same command with --master yarn/k8s and N vs 4N executors produces
-the two scaling measurements; `bench.py --scaling` is the local[N]
+the two scaling measurements; `python bench.py` is the local[N]
 proxy. Checkpoint/lineage parquet paths are accepted so interrupted
 runs resume via the anti-join (gdal2tiles --resume semantics)."""
 
@@ -69,7 +69,6 @@ def main():
 
     if args.pipeline == "full":
         from gdal_spark import tablefmt
-        from gdal_spark.operators import dedup as dedup_ops  # noqa: F401
         from gdal_spark.operators import tiling
 
         t1 = time.time()
