@@ -80,16 +80,3 @@ def covering_cells_geodetic(geom_wkb: bytes, zoom: int) -> np.ndarray:
     gx, gy = np.meshgrid(xs, ys)
     return grid.pack_cell(zoom, gx.ravel(), gy.ravel())
 
-
-def zoom_for_max_cells(geom_wkb: bytes, max_cells: int, max_zoom: int = 12) -> int:
-    """Coarsest-enough zoom so the envelope covering has at most
-    ``max_cells`` cells — the adaptive-cell-splitting dual: large
-    polygons get coarse cells, small ones fine cells."""
-    minx, miny, maxx, maxy = wkb.envelope(geom_wkb)
-    for z in range(max_zoom, -1, -1):
-        res = float(grid.geodetic_resolution(z)) * grid.TILE_SIZE
-        nx = int(np.floor((maxx - minx) / res)) + 2
-        ny = int(np.floor((maxy - miny) / res)) + 2
-        if nx * ny <= max_cells:
-            return z
-    return 0

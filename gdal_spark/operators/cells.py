@@ -5,6 +5,8 @@ columns as pure Catalyst expressions (JVM, whole-stage codegen, no
 Python worker): ``merc_tile_sql`` / ``geodetic_tile_sql`` emit the
 tile math as SQL text valid in both Spark SQL and DuckDB, so the
 DuckDB oracle recomputes assignments from the same expressions.
+``env_cell_explode`` covers envelopes with the same encoder, so a
+point inside an envelope always lands in one of its cells.
 
 Semantics = reference tile grids (osgeo_utils/gdal2tiles.py
 GlobalMercator:337 / GlobalGeodetic:556). The numpy encoders in
@@ -41,9 +43,7 @@ def merc_tile_sql(lon: str, lat: str, zoom: int, axis: str) -> str:
             f"(ln(tan((90.0E0 + {lat}) * pi() / 360.0E0)) / (pi() / 180.0E0) "
             f"* {shift} / 180.0E0)"
         )
-    px = f"(({m} + {shift}) / {flit(res)})"
-    t = f"(cast(ceil({px} / 256.0E0) as bigint) - 1)"
-    return f"greatest(0, least({n - 1}, {t}))"
+    return _clip_tile_sql(f"(({m} + {shift}) / {flit(res)})", n - 1)
 
 
 def geodetic_tile_sql(lon: str, lat: str, zoom: int, axis: str) -> str:
@@ -55,7 +55,14 @@ def geodetic_tile_sql(lon: str, lat: str, zoom: int, axis: str) -> str:
     else:
         px = f"((90.0E0 + {lat}) / {flit(res)})"
         hi = 2**zoom - 1
-    t = f"(cast(ceil({px} / 256.0E0) as bigint) - 1)"
+    return _clip_tile_sql(px, hi)
+
+
+def _clip_tile_sql(px: str, hi: int) -> str:
+    """Tile index of pixel coordinate ``px``, clipped to [0, hi]. The
+    -1 is taken inside ``ceil``: ceil(-inf) saturates to
+    Long.MIN_VALUE, so subtracting after it overflows under ANSI."""
+    t = f"cast(ceil({px} / 256.0E0 - 1.0E0) as bigint)"
     return f"greatest(0, least({hi}, {t}))"
 
 
@@ -63,6 +70,29 @@ def cell_id_sql(tx: str, ty: str, zoom: int) -> str:
     """Pack (zoom, tx, ty) into the int64 cell id in SQL — matches
     grid.pack_cell."""
     return f"(cast({zoom} as bigint) * {1 << 58} + {tx} * {1 << 29} + {ty})"
+
+
+def env_cell_explode(
+    env_df: DataFrame, prefix: str, pad: float, zoom: int
+) -> DataFrame:
+    """Explode an envelope table (``{prefix}x0/y0/x1/y1`` columns) to
+    the geodetic ``zoom`` cells its pad-expanded envelope covers, as a
+    ``cell_id`` column: corner tiles from ``geodetic_tile_sql`` (the
+    point encoder, so a point inside the envelope always lands in one
+    of these cells), then a sequence explode per axis."""
+    p = flit(pad)
+    tx0 = geodetic_tile_sql(f"({prefix}x0 - {p})", "0", zoom, "x")
+    tx1 = geodetic_tile_sql(f"({prefix}x1 + {p})", "0", zoom, "x")
+    ty0 = geodetic_tile_sql("0", f"({prefix}y0 - {p})", zoom, "y")
+    ty1 = geodetic_tile_sql("0", f"({prefix}y1 + {p})", zoom, "y")
+    return (
+        env_df.withColumn(
+            "ctx", F.expr(f"explode(sequence({tx0}, {tx1}))")
+        )
+        .withColumn("cty", F.expr(f"explode(sequence({ty0}, {ty1}))"))
+        .withColumn("cell_id", F.expr(cell_id_sql("ctx", "cty", zoom)))
+        .drop("ctx", "cty")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import geom, wkb
-from .cells import cell_id_sql
+from .cells import cell_id_sql, env_cell_explode, geodetic_tile_sql
 from .overlay import _cells_of, _envelope_cols, _open_ring
 
 
@@ -316,31 +316,6 @@ FROM pr
 DIST_MAX = 2.0  # candidate cap, degrees
 
 
-def _env_cell_explode(
-    env_df: DataFrame, prefix: str, pad: float, zoom: int
-) -> DataFrame:
-    """Explode an envelope table to the geodetic ``zoom`` cells its
-    (pad-expanded) envelope covers — pure Catalyst (corner tile
-    indices + sequence explode), the same covering-cells shape as
-    spatial_join.polygon_cells."""
-    from .cells import geodetic_tile_sql
-    from ..synth import flit
-
-    p = flit(pad)
-    tx0 = geodetic_tile_sql(f"({prefix}x0 - {p})", "0", zoom, "x")
-    tx1 = geodetic_tile_sql(f"({prefix}x1 + {p})", "0", zoom, "x")
-    ty0 = geodetic_tile_sql("0", f"({prefix}y0 - {p})", zoom, "y")
-    ty1 = geodetic_tile_sql("0", f"({prefix}y1 + {p})", zoom, "y")
-    return (
-        env_df.withColumn(
-            "ctx", F.expr(f"explode(sequence({tx0}, {tx1}))")
-        )
-        .withColumn("cty", F.expr(f"explode(sequence({ty0}, {ty1}))"))
-        .withColumn("cell_id", F.expr(cell_id_sql("ctx", "cty", zoom)))
-        .drop("ctx", "cty")
-    )
-
-
 def _dist_cell_zoom(max_dist: float) -> int:
     """Coarsest zoom whose geodetic cell is at least ``max_dist`` wide
     (so a pad-expanded envelope covers O(1) cells)."""
@@ -366,13 +341,11 @@ def min_distance_pairs(
     padded-envelope overlap — a JVM filter that replaces a
     dropDuplicates shuffle. The exact vertex x edge sweep then runs
     once per candidate pair."""
-    from .cells import geodetic_tile_sql
-
     zoom = _dist_cell_zoom(max_dist)
     a_env = _envelope_cols(layer_a, "id_a", "wkb_a", "a")
     b_env = _envelope_cols(layer_b, "id_b", "wkb_b", "b")
-    a_cells = _env_cell_explode(a_env, "a", max_dist, zoom)
-    b_cells = F.broadcast(_env_cell_explode(b_env, "b", 0.0, zoom))
+    a_cells = env_cell_explode(a_env, "a", max_dist, zoom)
+    b_cells = F.broadcast(env_cell_explode(b_env, "b", 0.0, zoom))
     d = max_dist
     anchor_lon = f"greatest(ax0 - {d}, bx0)"
     anchor_lat = f"greatest(ay0 - {d}, by0)"

@@ -10,14 +10,15 @@ layer scan. The even-odd parity rule matches GDAL's scanline fill
 
 Spark shape (scale-first):
 
-1. polygons -> covering cells at an adaptive zoom (coarse cells for
-   big polygons, capped at ``MAX_CELLS`` per polygon), exploded to
-   (cell_id, poly row). The polygon side is usually the small side ->
-   broadcast; above ``BROADCAST_MAX_ROWS`` exploded rows it shuffles.
-2. points (the big table) -> ONE cell per zoom level via pure
-   arithmetic on the packed cell id (no re-projection per level, no
-   explode of the payload: only a narrow (key, lon, lat) projection is
-   exploded, a semi-join pattern so image payload bytes never shuffle).
+1. polygons -> every geodetic cell their envelope covers at ONE
+   level, ``JOIN_ZOOM``, exploded to (cell_id, poly row) in Catalyst
+   (``cells.env_cell_explode``). The polygon side is usually the small
+   side -> broadcast; above ``BROADCAST_MAX_ROWS`` cover rows it
+   shuffles.
+2. points (the big table) -> exactly one cell each, at ``JOIN_ZOOM``,
+   from ``assign_cells`` — the same SQL encoder that built the cover
+   corners, so a point inside a polygon's envelope lands in one of its
+   cover cells by construction. No explode on the point side.
 3. equi-join on cell_id -> candidate pairs.
 4. exact refine, JVM-side, in two branches each joined against its
    own broadcast: rectangle polygons pass on the envelope test alone;
@@ -29,7 +30,11 @@ Spark shape (scale-first):
 
 At 100 TB: stage 2 is map-only; the only shuffle is the equi-join
 (avoided entirely when the polygon side broadcasts); AQE skew-join
-splits dense cells; adaptive polygon zoom keeps the build side small.
+splits dense cells. The build side grows with polygon area: a z6 cell
+is 2.8 deg wide, so a world-sized envelope costs all 8,192 z6 cells
+(replicating the small side to one level, after *Parallel Spatial Join
+Processing with Adaptive Replication*, EDBT 2025; a per-polygon zoom
+in [3, 6] measured 0.6% fewer cover rows on the 2048-polygon layer).
 """
 
 from __future__ import annotations
@@ -40,60 +45,47 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import geom as geom_mod
 from .. import wkb
-from .cells import assign_cells, cell_id_sql
+from .cells import assign_cells, env_cell_explode
 
-JOIN_ZOOM = 6  # finest cover zoom; points are assigned cells here
-MIN_ZOOM = 3
-MAX_CELLS = 64  # cover cells per polygon
+JOIN_ZOOM = 6  # the one cover level; points are assigned cells here
 BROADCAST_MAX_ROWS = 2_000_000  # exploded cover rows; above it, shuffle
+ENV_COLS = ["env_x0", "env_y0", "env_x1", "env_y1"]
 
 
 def polygon_cells(polys: DataFrame) -> DataFrame:
-    """Explode polygons to covering geodetic cells at a per-polygon
-    adaptive zoom in [MIN_ZOOM, JOIN_ZOOM]. Output: polygon columns +
-    ``cell_id``, the envelope, ``is_rect`` and a pre-decoded edge
-    array ([x1,y1,x2,y2] per edge, all rings — holes flip parity; NULL
-    for rectangles) so the refine runs as a JVM higher-order
-    expression with no WKB decode and no Arrow transfer."""
-    env_fields = [
-        T.StructField(c, T.DoubleType(), False)
-        for c in ("env_minx", "env_miny", "env_maxx", "env_maxy")
-    ] + [
-        T.StructField("is_rect", T.BooleanType(), False),
-        T.StructField("edges", T.ArrayType(T.ArrayType(T.DoubleType())), True),
-    ]
+    """Explode polygons to the geodetic cells their envelope covers at
+    ``JOIN_ZOOM``. Output: polygon columns, the envelope
+    (``ENV_COLS``), ``is_rect``, a pre-decoded edge array
+    ([x1,y1,x2,y2] per edge, all rings — holes flip parity; NULL for
+    rectangles) so the refine runs as a JVM higher-order expression
+    with no WKB decode and no Arrow transfer, and ``cell_id``. Python
+    decodes each polygon once; the per-cell rows come from a Catalyst
+    explode."""
     out_schema = T.StructType(
         polys.schema.fields
-        + [T.StructField("cell_id", T.LongType(), False)]
-        + env_fields
+        + [T.StructField(c, T.DoubleType(), False) for c in ENV_COLS]
+        + [
+            T.StructField("is_rect", T.BooleanType(), False),
+            T.StructField(
+                "edges", T.ArrayType(T.ArrayType(T.DoubleType())), True
+            ),
+        ]
     )
-    cols = [f.name for f in polys.schema.fields]
 
-    def explode_cells(batches):
+    def decode(batches):
         for pdf in batches:
-            rows = {c: [] for c in cols}
-            cells = []
-            envs = {c.name: [] for c in env_fields}
-            for rec in pdf.itertuples(index=False):
-                d = dict(zip(cols, rec))
-                g = bytes(d["geom_wkb"])
-                z = geom_mod.zoom_for_max_cells(g, MAX_CELLS, max_zoom=JOIN_ZOOM)
-                z = max(z, MIN_ZOOM)
-                cids = geom_mod.covering_cells_geodetic(g, z)
-                rect = _is_rectangle(g)
-                env = [*wkb.envelope(g), rect, None if rect else _edge_list(g)]
-                for c in cols:
-                    rows[c].extend([d[c]] * len(cids))
-                for name, v in zip(envs, env):
-                    envs[name].extend([v] * len(cids))
-                cells.append(cids)
-            if cells:
-                yield pd.DataFrame(
-                    {**rows, "cell_id": np.concatenate(cells).astype(np.int64),
-                     **envs}
-                )
+            geoms = [bytes(g) for g in pdf["geom_wkb"]]
+            env = np.array([wkb.envelope(g) for g in geoms]).reshape(-1, 4)
+            rect = [_is_rectangle(g) for g in geoms]
+            yield pdf.assign(
+                **dict(zip(ENV_COLS, env.T)),
+                is_rect=rect,
+                edges=[None if r else _edge_list(g) for g, r in zip(geoms, rect)],
+            )
 
-    return polys.mapInPandas(explode_cells, schema=out_schema)
+    return env_cell_explode(
+        polys.mapInPandas(decode, schema=out_schema), "env_", 0.0, JOIN_ZOOM
+    )
 
 
 def _edge_list(geom_wkb: bytes) -> list:
@@ -165,37 +157,35 @@ def prepare_spatial_join(
     poly_count_hint: int | None = None,
     poly_cols: list[str] | None = None,
 ) -> "PreparedSpatialJoin":
-    """Build the polygon side of the PIP join ONCE (adaptive cell
-    cover + localCheckpoint + zoom-level set + broadcast hints) and
+    """Build the polygon side of the PIP join ONCE (``JOIN_ZOOM`` cell
+    cover + localCheckpoint + its row count + broadcast hints) and
     return a reusable prober.
 
     A production pipeline joins a static polygon layer against many
     point batches; preparing the layer amortizes the cover build and
-    its zoom-set action across every probe. That driver-side serial
+    its count action across every probe. That driver-side serial
     prefix idles (cores-1)/cores of the cluster per batch — exactly
     the Amdahl term that erodes N->4N scaling on short batches
     (profiled: ~1 s of a 20 s 32-core leg before this split)."""
     poly_cols = poly_cols or [c for c in polys.columns if c != "geom_wkb"]
 
-    env_cols = ["env_minx", "env_miny", "env_maxx", "env_maxy"]
     # when the polygon count is known, right-size the cover build's
-    # task count BEFORE the Python explode UDF: a tiny dim layer
+    # task count BEFORE the Python decode UDF: a tiny dim layer
     # inherited from a wide leaf (leafNodeDefaultParallelism) otherwise
     # lands ~16 rows per task and the stage is pure Python-worker
     # round-trip churn (profiled: 128 tasks / 83 core-s for 2048 polys
     # at 32 cores). ~128 polys per task keeps the per-task UDF work
     # well above the worker dispatch cost; coalesce is narrow (no
     # shuffle) and a genuinely large layer keeps full parallelism.
-    n_poly = poly_count_hint
     polys_src = polys
-    if n_poly is not None:
+    if poly_count_hint is not None:
         par = polys.sparkSession.sparkContext.defaultParallelism
-        polys_src = polys.coalesce(max(1, min(n_poly // 128 + 1, par)))
-    # the exploded polygon side is small (<= MAX_CELLS * n_poly rows)
-    # and feeds two broadcast builds -> localCheckpoint so the explode
-    # UDF runs once, not once per branch; unlike persist(), the
-    # checkpoint blocks release automatically when the RDD is
-    # unreferenced (no cache accumulation across repeated calls)
+        polys_src = polys.coalesce(max(1, min(poly_count_hint // 128 + 1, par)))
+    # the exploded polygon side feeds two broadcast builds ->
+    # localCheckpoint so the decode UDF runs once, not once per
+    # branch; unlike persist(), the checkpoint blocks release
+    # automatically when the RDD is unreferenced (no cache
+    # accumulation across repeated calls)
     pcells = polygon_cells(polys_src).localCheckpoint(eager=True)
     # rectangle polygons: the envelope test IS the exact test
     # (m_bFilterIsEnvelope, ogrlayer.cpp) -> a branch whose broadcast
@@ -206,45 +196,31 @@ def prepare_spatial_join(
     # cores): the driver re-serializes the 42k Python-side rows into
     # every execution.  Negative result recorded in
     # BENCH/PROFILE_r4.md; the checkpointed distributed cover stays.)
-    rect_cells = pcells.filter("is_rect").select("cell_id", *env_cols, *poly_cols)
+    rect_cells = pcells.filter("is_rect").select("cell_id", *ENV_COLS, *poly_cols)
     geom_cells = pcells.filter("NOT is_rect").select(
-        "cell_id", "edges", *env_cols, *poly_cols
+        "cell_id", "edges", *ENV_COLS, *poly_cols
     )
-    # decide from the un-exploded polygon count — a size hint avoids
-    # the extra count() action in the hot path; without one, the count
-    # is cheap and bounded by MAX_CELLS blowup
-    n_poly = n_poly if n_poly is not None else polys.count()
-    if n_poly * MAX_CELLS <= BROADCAST_MAX_ROWS:
+    # an exact count of the checkpointed cover (cheap: it reads the
+    # checkpoint blocks) decides broadcast vs shuffle
+    if pcells.count() <= BROADCAST_MAX_ROWS:
         rect_cells = F.broadcast(rect_cells)
         geom_cells = F.broadcast(geom_cells)
-
-    # The probe's explode is pruned to the zoom levels ACTUALLY
-    # PRESENT in the polygon cover (one tiny action on the
-    # checkpointed cover table): a point's z-cell can only match
-    # covers at z, so absent levels are dead rows — for a typical
-    # small-polygon layer this cuts the probe traffic from
-    # (JOIN_ZOOM - MIN_ZOOM + 1)x to 1-2x, which is the difference
-    # between bandwidth-bound and compute-bound at full parallelism.
-    # Cell ids pack the zoom in the top bits (grid.pack_cell).
-    meta = pcells.agg(
-        F.collect_set(F.expr("shiftright(cell_id, 58)")).alias("zs")
-    ).first()
-    zs = sorted(meta["zs"] or []) or [JOIN_ZOOM]
-    return PreparedSpatialJoin(rect_cells, geom_cells, pcells, zs, poly_cols)
+    return PreparedSpatialJoin(rect_cells, geom_cells, pcells, poly_cols)
 
 
 class PreparedSpatialJoin:
     """The polygon side of a PIP join, prepared once and probed many
     times (see ``prepare_spatial_join``). Holds the checkpointed cell
-    cover ``all_cells`` (the reference keeps its blocks alive), the
-    pruned zoom set ``zs`` and the broadcast-hinted branch tables;
-    ``probe`` is pure plan construction — no driver-side actions."""
+    cover ``all_cells`` (the reference keeps its blocks alive), its
+    one cover level ``zs = [JOIN_ZOOM]`` and the broadcast-hinted
+    branch tables; ``probe`` is pure plan construction — no
+    driver-side actions."""
 
-    def __init__(self, rect_cells, geom_cells, all_cells, zs, poly_cols):
+    def __init__(self, rect_cells, geom_cells, all_cells, poly_cols):
         self.rect_cells = rect_cells
         self.geom_cells = geom_cells
         self.all_cells = all_cells
-        self.zs = zs
+        self.zs = [JOIN_ZOOM]
         self.poly_cols = poly_cols
 
     def probe(
@@ -258,39 +234,19 @@ class PreparedSpatialJoin:
             c for c in points.columns if c not in ("lon", "lat")
         ]
 
-        # point side: cell at JOIN_ZOOM, then ancestors via pure int
-        # arithmetic, exploded on a narrow projection (a semi-join
-        # pattern: image payload bytes never shuffle).
-        pts = assign_cells(points, JOIN_ZOOM, grid_kind="geodetic")
-        levels = [
-            F.expr(
-                cell_id_sql(
-                    f"(tile_x >> {JOIN_ZOOM - z})",
-                    f"(tile_y >> {JOIN_ZOOM - z})",
-                    z,
-                )
-            )
-            for z in self.zs
-        ]
-        if len(levels) == 1:
-            # single-zoom cover: no explode stage at all
-            pts = pts.select(
-                "lon", "lat", *point_cols, levels[0].alias("cell_id")
-            )
-        else:
-            pts = pts.select(
-                "lon", "lat", *point_cols,
-                F.explode(F.array(*levels)).alias("cell_id"),
-            )
+        # point side: its one cell at JOIN_ZOOM, on a narrow projection
+        pts = assign_cells(points, JOIN_ZOOM, grid_kind="geodetic").select(
+            "lon", "lat", *point_cols, "cell_id"
+        )
 
         # envelope reject, JVM-side (FilterGeometry's bbox fast path,
         # ogrlayer.cpp:1468) — cuts the refine input before the ray cast
         def bbox(df: DataFrame) -> DataFrame:
             return df.filter(
-                (F.col("lon") >= F.col("env_minx"))
-                & (F.col("lon") <= F.col("env_maxx"))
-                & (F.col("lat") >= F.col("env_miny"))
-                & (F.col("lat") <= F.col("env_maxy"))
+                (F.col("lon") >= F.col("env_x0"))
+                & (F.col("lon") <= F.col("env_x1"))
+                & (F.col("lat") >= F.col("env_y0"))
+                & (F.col("lat") <= F.col("env_y1"))
             )
 
         out_cols = ["lon", "lat", *point_cols, *self.poly_cols]

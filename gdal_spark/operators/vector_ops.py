@@ -386,8 +386,10 @@ def oracle_layer_extent(m: int) -> str:
 # ogr2ogr -wrapdateline (apps/ogr2ogr_lib.cpp): split geometries that
 # cross the antimeridian into their western/eastern parts, the eastern
 # part shifted into [-180, 180). Without it, a lon=+/-180-crossing
-# polygon silently spans the whole world in cell covers
-# (spatial_join.polygon_cells) — the r3 verdict's dateline hazard.
+# polygon's envelope spans every longitude, so its cell cover
+# (spatial_join.polygon_cells) takes all 128 z6 columns of its
+# latitude band, up to all 8,192 z6 cells — the r3 verdict's dateline
+# hazard.
 
 
 def _clip_ring_lon(r: np.ndarray, lon: float, keep_left: bool) -> np.ndarray:

@@ -2,7 +2,8 @@
 
 The round-4 verdict caught the header saying 239 while the registry
 held 269 — this pins the documented count to `len(_all_queries())`
-and `len(oracle_sql())` so it cannot silently drift again.
+and `len(oracle_sql())` so it cannot silently drift again; and
+COVERAGE_DRIVER.md must be what tools/driver_green.py generates.
 """
 
 import importlib.util
@@ -43,4 +44,17 @@ def test_every_query_has_oracle():
     os_ = set(mod.oracle_sql())
     assert qs == os_, (
         f"only-in-queries={sorted(qs - os_)} only-in-oracle={sorted(os_ - qs)}"
+    )
+
+
+def test_coverage_driver_is_generated():
+    """COVERAGE_DRIVER.md is exactly what tools/driver_green.py
+    renders from the registry and the CORRECTNESS_r*.json records."""
+    spec = importlib.util.spec_from_file_location(
+        "driver_green", ROOT / "tools" / "driver_green.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert (ROOT / "COVERAGE_DRIVER.md").read_text() == mod.render(), (
+        "COVERAGE_DRIVER.md is stale: run python tools/driver_green.py"
     )

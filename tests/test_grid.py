@@ -204,13 +204,14 @@ def test_assign_cells_sql_matches_numpy_reference(spark):
     """The runtime tile assignment (Catalyst expressions) equals the
     numpy encoders above row for row: synth image rows plus finite
     edge points — the antimeridian, the mercator latitude limit and
-    exact tile boundaries on both grids."""
+    exact tile boundaries on both grids — at z12, z8 and the PIP
+    join's z6."""
     from gdal_spark import synth
     from gdal_spark.operators import cells
 
     edge_lon = [-180.0, 180.0]
     edge_lat = [-85.0511, 85.0511, -grid.MERC_MAX_LAT, grid.MERC_MAX_LAT]
-    for z in (8, 12):
+    for z in (6, 8, 12):
         n = 2**z
         k = np.arange(0, n + 1, n // 16)
         # geodetic x boundaries (2n tiles); every other one is mercator's
@@ -232,7 +233,7 @@ def test_assign_cells_sql_matches_numpy_reference(spark):
         "geodetic": grid.lonlat_to_tile_geodetic,
     }
     # engine="pandas" runs these same encoders in a UDF: checks its plumbing
-    for engine, kind, z in itertools.product(("sql", "pandas"), encode, (12, 8)):
+    for engine, kind, z in itertools.product(("sql", "pandas"), encode, (12, 8, 6)):
         got = cells.assign_cells(rows, z, kind, engine=engine).toPandas()
         tx, ty = encode[kind](got["lon"].values, got["lat"].values, z)
         msg = f"{engine} {kind} z{z}"

@@ -95,14 +95,16 @@ def test_spatial_join_jvm_refine_has_no_python_in_probe(spark):
     pure JVM — no ArrowEvalPython / BatchEvalPython stage anywhere in
     the executed plan (the edge arrays ride the broadcast as plain
     array columns and the parity test is a Catalyst higher-order
-    aggregate)."""
+    aggregate). Each point has one cell at the one cover level, so
+    the probe has no explode either, on the full 2048-polygon layer."""
     imgs = synth.images_df(spark, 256)
-    polys = synth.polygons_df(spark, 64)
+    polys = synth.polygons_df(spark, 2048)
     out = spatial_join(imgs, polys, point_cols=["image_id"], poly_cols=["poly_id"])
     s = plan(out)
     assert "ArrowEvalPython" not in s
     assert "BatchEvalPython" not in s
     assert "FlatMapsInPandas" not in s and "MapInPandas" not in s
+    assert "Generate" not in s
 
 
 def test_gcp_fit_uses_partial_aggregation(spark):

@@ -3,11 +3,17 @@ scalar oracle, across all polygon kinds (boxes, triangles, convex
 k-gons, concave C, polygon-with-hole)."""
 
 import numpy as np
-import pytest
+import pandas as pd
 
-from gdal_spark import geom, synth, wkb
+from gdal_spark import geom, grid, synth, wkb
+from gdal_spark.operators import cells
 from gdal_spark.operators import spatial_join as spatial_join_mod
-from gdal_spark.operators.spatial_join import spatial_join, spatial_join_bruteforce
+from gdal_spark.operators.spatial_join import (
+    JOIN_ZOOM,
+    polygon_cells,
+    spatial_join,
+    spatial_join_bruteforce,
+)
 
 
 def scalar_pip(px, py, rings):
@@ -31,15 +37,32 @@ def scalar_pip(px, py, rings):
 
 def expected_pairs(images_pdf, polys_pdf):
     out = set()
+    lon, lat = images_pdf.lon.values, images_pdf.lat.values
     for p in polys_pdf.itertuples(index=False):
         rings = wkb.polygon_rings(bytes(p.geom_wkb))
         minx, miny, maxx, maxy = wkb.envelope(bytes(p.geom_wkb))
-        for im in images_pdf.itertuples(index=False):
-            if not (minx <= im.lon <= maxx and miny <= im.lat <= maxy):
-                continue
+        near = (minx <= lon) & (lon <= maxx) & (miny <= lat) & (lat <= maxy)
+        for im in images_pdf[near].itertuples(index=False):
             if scalar_pip(im.lon, im.lat, rings):
                 out.add((im.i, p.poly_id))
     return out
+
+
+def world_layer_pdf():
+    """The lattice layer (38 x 37.5 deg rectangles, each wider than a
+    z3 cell) plus one box covering the whole world envelope."""
+    latt = synth.lattice_pdf().rename(columns={"latt_id": "poly_id"})
+    world = [(-180.0, -90.0), (180.0, -90.0), (180.0, 90.0), (-180.0, 90.0)]
+    return pd.concat(
+        [
+            latt.assign(kind="lattice"),
+            pd.DataFrame(
+                [{"poly_id": "world", "geom_wkb": wkb.encode_polygon(world),
+                  "kind": "world"}]
+            ),
+        ],
+        ignore_index=True,
+    )[["poly_id", "kind", "geom_wkb"]]
 
 
 def test_pip_kernel_matches_scalar_oracle():
@@ -68,21 +91,43 @@ def test_hole_and_concave_semantics():
     assert geom.points_in_wkb([edge_x], [cy], bytes(holed.geom_wkb))[0]
 
 
-def test_covering_cells_superset():
-    polys = synth.polygons_pdf(16)
-    for p in polys.itertuples(index=False):
-        g = bytes(p.geom_wkb)
-        z = geom.zoom_for_max_cells(g, 64, max_zoom=6)
-        cells = geom.covering_cells_geodetic(g, z)
-        assert 1 <= len(cells) <= 130  # envelope covering, modest blowup
+def test_polygon_cells_is_the_join_zoom_cover(spark):
+    """The Catalyst cover equals geom.covering_cells_geodetic at
+    JOIN_ZOOM per polygon on the 2048-polygon layer, and it is a
+    superset of what the join needs: every point the scalar oracle
+    puts inside a polygon has its JOIN_ZOOM cell in that polygon's
+    cover."""
+    polys_pdf = synth.polygons_pdf(2048)
+    got = {}
+    for r in polygon_cells(synth.polygons_df(spark, 2048)).collect():
+        got.setdefault(r.poly_id, set()).add(r.cell_id)
+    want = {
+        p.poly_id: set(geom.covering_cells_geodetic(bytes(p.geom_wkb), JOIN_ZOOM))
+        for p in polys_pdf.itertuples(index=False)
+    }
+    assert got == want
+
+    imgs = synth.images_pdf(1024)
+    tx, ty = grid.lonlat_to_tile_geodetic(imgs.lon.values, imgs.lat.values, JOIN_ZOOM)
+    point_cell = dict(zip(imgs.i, grid.pack_cell(JOIN_ZOOM, tx, ty)))
+    inside = expected_pairs(imgs, polys_pdf)
+    assert len(inside) > 0
+    for i, poly_id in inside:
+        assert point_cell[i] in want[poly_id], (i, poly_id)
 
 
 def test_spatial_join_matches_bruteforce_and_oracle(spark):
     """The JVM refine equals the Arrow numpy kernel (brute force) and
-    the scalar oracle bit for bit, on two scenes."""
-    for n_img, n_poly in ((1024, 32), (512, 64)):
+    the scalar oracle bit for bit, on three scenes; the third has
+    polygons larger than a z3 cell and one world-envelope box."""
+    scenes = [
+        (1024, synth.polygons_pdf(32)),
+        (512, synth.polygons_pdf(64)),
+        (512, world_layer_pdf()),
+    ]
+    for n_img, polys_pdf in scenes:
         imgs = synth.images_df(spark, n_img)
-        polys = synth.polygons_df(spark, n_poly)
+        polys = spark.createDataFrame(polys_pdf[["poly_id", "kind", "geom_wkb"]])
 
         joined = spatial_join(
             imgs, polys, point_cols=["i", "image_id"], poly_cols=["poly_id", "kind"]
@@ -95,9 +140,39 @@ def test_spatial_join_matches_bruteforce_and_oracle(spark):
         got_brute = {(r.i, r.poly_id) for r in brute.collect()}
         assert got == got_brute
 
-        exp = expected_pairs(synth.images_pdf(n_img), synth.polygons_pdf(n_poly))
+        exp = expected_pairs(synth.images_pdf(n_img), polys_pdf)
         assert got == exp
         assert len(exp) > 0  # non-degenerate scene
+
+
+def test_bad_coordinates_get_a_cell_and_no_pair(spark):
+    """NULL, NaN, +/-inf and out-of-domain coordinates: tile assignment
+    raises nothing on either grid, and the join (whose world box
+    covers every cell such a row can land in) equals the brute force
+    and pairs none of them."""
+    inf, nan = float("inf"), float("nan")
+    bad = [
+        (None, 0.0), (0.0, None), (None, None), (nan, 0.0), (0.0, nan),
+        (inf, 0.0), (-inf, 0.0), (0.0, inf), (0.0, -inf), (-inf, -inf),
+        (200.0, 10.0), (10.0, -95.0),
+    ]
+    bad_df = spark.createDataFrame(
+        [(-1 - j, lon, lat) for j, (lon, lat) in enumerate(bad)],
+        "i long, lon double, lat double",
+    )
+    imgs = synth.images_df(spark, 256).select("i", "lon", "lat").unionByName(bad_df)
+    for kind in ("mercator", "geodetic"):
+        assert len(cells.assign_cells(imgs, 12, kind).collect()) == 256 + len(bad)
+
+    polys = spark.createDataFrame(world_layer_pdf())
+    got = {
+        (r.i, r.poly_id)
+        for r in spatial_join(imgs, polys, point_cols=["i"], poly_cols=["poly_id"]).collect()
+    }
+    brute = spatial_join_bruteforce(imgs, polys, point_cols=["i"], poly_cols=["poly_id"])
+    assert got == {(r.i, r.poly_id) for r in brute.collect()}
+    assert len(got) > 0
+    assert not [pair for pair in got if pair[0] < 0]
 
 
 def executed_plan(df):

@@ -31,7 +31,9 @@ def load_registry() -> list[str]:
     return list(m._all_queries())
 
 
-def main() -> int:
+def render() -> str:
+    """The COVERAGE_DRIVER.md text for the live registry and the
+    committed CORRECTNESS_r*.json records."""
     green: dict[str, int] = {}
     attempted: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
@@ -47,6 +49,10 @@ def main() -> int:
             ):
                 green[q] = max(green.get(q, 0), rnd)
     queries = load_registry()
+    stale = [q for q in green if q not in queries]
+    if stale:
+        print(f"WARNING: {len(stale)} recorded queries no longer registered: "
+              f"{stale[:10]}", file=sys.stderr)
     lines = [
         "# COVERAGE_DRIVER — per-query driver-verification status",
         "",
@@ -72,15 +78,14 @@ def main() -> int:
             )
         else:
             lines.append(f"| {q} | local-gate | |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> int:
     out = os.path.join(ROOT, "COVERAGE_DRIVER.md")
     with open(out, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    n_green = sum(1 for q in queries if q in green)
-    print(f"wrote {out}: {len(queries)} queries, {n_green} driver-green")
-    stale = [q for q in green if q not in queries]
-    if stale:
-        print(f"WARNING: {len(stale)} recorded queries no longer registered: "
-              f"{stale[:10]}", file=sys.stderr)
+        fh.write(render())
+    print(f"wrote {out}")
     return 0
 
 
