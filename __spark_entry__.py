@@ -1284,108 +1284,7 @@ _ROUND2_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 
-# The driver checks the FIRST 50 queries() entries each round. Round-4
-# window: exactly 50 queries that have never had a driver-green row
-# through r03 (all pass the local gate replica) — (a) the 33 r1-r3
-# holdovers (VERDICT r3 listed 34; embedding_neardup_exact
-# was already r03-green so it is excluded), (b) 16 round-4 operators
-# in build order. Re-verifying
-# already-green queries wastes slots, so there is no (c) section.
-# ROUND-5 WINDOW BACKLOG (never driver-verified, rotate these in):
-#   dissolve_area, events_attribution, gdalmove_gt,
-#   viewshed_cumulative, source_mix_sample, color_relief_nearest,
-#   pack_sequences, tfidf_topk, dataset_split, ar_bucket_batches,
-#   crop_to_cutline, embedding_gram, cutline_blend, slope_percent,
-#   merge_nodata, viewshed_curved, slope_zt_percent,
-#   contour_exp_levels, zonal_stats, match_histogram,
-#   events_sliding_window, lineref_points, hillshade_zt,
-#   contour_offset_levels, grid_average_ellipse, paragraph_dedup,
-#   epoch_shuffle, point_probe_bilinear, aspect_zt, patchify,
-#   channel_norm_stats, tile_xyz_quadkey, buildvrt_separate,
-#   viewshed_maxdist, sliding_chunks, footprint, domain_cap,
-#   cms_topk_estimate, tar_shard_layout, bloom_seen_filter,
-#   keep_best_variant, cog_layout, overview_partial_refresh,
-#   refine_gcps, ogr_tindex, + every operator added later in round 4
-#   (they are appended to this comment as built).
-# Everything past the cap stays locally gated by
-# tools/check_oracle.py every round.
-# Round-5 rotation candidates (registered late in r4, after this
-# window was frozen; all local-gate green — see tools/check_oracle):
-# semdedup, hll_distinct, bm25_topk, ogrmerge_single, gdal_create,
-# time_travel_read, mdim_translate, mdim_transpose, str_pack,
-# zorder_layout, overview_rollup_updates, ogrsf_conformance,
-# geom_buffer, geom_buffer_negative, geodesic_measures, dsir_select,
-# bpe_merges, bpe_encode, pii_scrub, moll_corners, eqearth_corners,
-# dhash64, ahash64, geom_centroid, geom_point_on_surface,
-# hex_cell_assign, hex_density_topk, hex_polyfill, hex_spatial_join,
-# blur_laplacian, hsv_merge, kernel_filter, lut_apply,
-# jpeg_blockiness, phash_clusters, hard_negatives,
-# pansharpen_weighted, colorfulness, image_entropy,
-# color_relief_exact, band_stats_nodata, sq8_topk, ann_rerank_topk,
-# mixup_pairs, cutmix_pairs, resume_antijoin,
-# ssim_global, geohash_assign, geohash_density, clip_score,
-# aesthetic_probe, exact_percentiles,
-# pca_pc1, merge_upsert, ogr_special_fields, gcps2wld, dft2d,
-# dft_magphase, url_canonicalize, integral_image, zipf_fit,
-# bigram_perplexity, html_extract, warp_rotated, split_leakage,
-# edit_georef, mask_band, repeat_upsample, rat_table, fasttext_score,
-# feather_mosaic, vw_simplify,
-# plus a re-verify sample of r02-r04 greens.
-_R4_WINDOW = [
-    # (a) never driver-verified through r03
-    "embedding_neardup_lsh",
-    "dem_tri_riley",
-    "geoloc_transform",
-    "pq_topk",
-    "warp_reproject_lcc",
-    "warp_reproject_ps",
-    "ps_corners",
-    "s2_cell_assign",
-    "s2_density_topk",
-    "cell_hulls",
-    "pct2rgb",
-    "dither_fs_fixed",
-    "ann_ivfpq_topk",
-    "decontaminate",
-    "ogr_sql_having",
-    "vector_reproject_3857",
-    "translate_projwin",
-    "ogr_layer_extent",
-    "calc_two_rasters",
-    "viewshed_ground",
-    "pixel_functions",
-    "proximity_values",
-    "utm_tap_grid",
-    "geom_distance",
-    "grid_idwnn",
-    "fillnodata_smoothed",
-    "warp_bilinear_up2",
-    "warp_cubic_up2",
-    "warp_cubicspline_up2",
-    "warp_lanczos_up2",
-    "warp_area_family_down2",
-    "polygonize_8conn",
-    "events_dedup_first",
-    "band_stats_approx",
-    # (b) round-4 operators, build order
-    "quantize_dither",
-    "makevalid",
-    "wrapdateline",
-    "overview_gauss",
-    "pixel_functions_complex",
-    "osgb_corners",
-    "explode_collections",
-    "sinu_corners",
-    "compare_reencode",
-    "repetition_profile",
-    "warp_reproject_sinu",
-    "rasterize_inverse",
-    "enhance_equalize",
-    "exact_substring_spans",
-    "unigram_perplexity",
-    "laion_filter",
-]
-
+# The driver checks the FIRST 50 queries() entries each round.
 # Round-5 rotation (the r4 verdict's task 2): 50 of the 120 queries
 # never driver-verified through r04 (deterministic from
 # CORRECTNESS_r01-r04 vs _all_queries()), prioritizing the ones the
@@ -1459,7 +1358,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Master registry; ordering here is historical (r1-r3 windows) and
-    # no longer drives the gate — queries() reorders via _R4_WINDOW.
+    # no longer drives the gate — queries() reorders via _R5_WINDOW.
     return {
         # (a) r01-green, outside the r02 window — re-verify
         "viewshed": _q_viewshed,

@@ -342,6 +342,15 @@ def tps_apply_sql(sol, px, py, qx: str, qy: str) -> str:
     return "(" + " + ".join(parts) + ")"
 
 
+def _tps_dm_sql(v: str) -> str:
+    """Decimetre key of a TPS output, shared by the query and its
+    oracle. TPS interpolates exactly at the GCPs, so many outputs land
+    on decimetre boundaries, where the ~1 ulp ln() difference between
+    engines flips a plain floor; the half-grid epsilon moves every
+    output at least 1e-4 dm away from a boundary."""
+    return f"cast(floor({v} * 10.0E0 + 5.0E-4) as bigint)"
+
+
 def tps_transform_query(spark: SparkSession) -> DataFrame:
     """Driver query: fit TPS to the synthetic GCPs (driver-side tiny
     solve, exact interpolation), apply to the probe grid as a
@@ -358,8 +367,8 @@ def tps_transform_query(spark: SparkSession) -> DataFrame:
     return grid.selectExpr(
         "cast(gx as bigint) AS gx",
         "cast(gy as bigint) AS gy",
-        f"cast(floor({e_sql} * 10.0E0) as bigint) AS e_dm",
-        f"cast(floor({n_sql} * 10.0E0) as bigint) AS n_dm",
+        f"{_tps_dm_sql(e_sql)} AS e_dm",
+        f"{_tps_dm_sql(n_sql)} AS n_dm",
     )
 
 
@@ -375,8 +384,7 @@ def oracle_tps_transform() -> str:
     n_sql = tps_apply_sql(sn, px, py, "gx", "gy")
     return (
         f"SELECT cast(gx as bigint) AS gx, cast(gy as bigint) AS gy, "
-        f"cast(floor({e_sql} * 10.0E0) as bigint) AS e_dm, "
-        f"cast(floor({n_sql} * 10.0E0) as bigint) AS n_dm FROM "
+        f"{_tps_dm_sql(e_sql)} AS e_dm, {_tps_dm_sql(n_sql)} AS n_dm FROM "
         f"(SELECT cast(id % {PROBE_W} as double) AS gx, "
         f"cast(id // {PROBE_W} as double) AS gy "
         f"FROM range(0, {PROBE_W * PROBE_H}) t(id))"

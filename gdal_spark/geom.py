@@ -1,5 +1,5 @@
 """Vectorized geometry kernels: even-odd ray-cast point-in-polygon and
-polygon -> covering-cell expansion.
+the numpy reference of the polygon -> covering-cell expansion.
 
 The point-in-polygon rule is the classic even-odd crossing test — the
 same parity rule GDAL's scanline polygon fill uses
@@ -63,10 +63,10 @@ def points_in_wkb(px: np.ndarray, py: np.ndarray, geom_wkb: bytes) -> np.ndarray
 
 def covering_cells_geodetic(geom_wkb: bytes, zoom: int) -> np.ndarray:
     """All geodetic (TMS-compatible) grid cells whose tile box
-    intersects the geometry's envelope at ``zoom``. This is the
-    equi-join prefilter key set — exactness comes from the refine
-    stage, so envelope covering (a superset) is correct. Returns an
-    int64 array of packed cell ids.
+    intersects the geometry's envelope at ``zoom``, as an int64 array
+    of packed cell ids. The numpy reference for the Catalyst cover
+    ``cells.env_cell_explode`` that keys every spatial join; tests
+    compare the two, no runtime path calls this.
 
     This mirrors the reference's bbox pushdown in layer algebra
     (ogrlayer.cpp:2278 Intersection: method-layer envelope ->

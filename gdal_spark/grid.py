@@ -222,16 +222,6 @@ def cell_parent(cell_id, levels: int = 1):
     return pack_cell(z - levels, x >> levels, y >> levels)
 
 
-def cell_children(cell_id):
-    """The 4 child cells one zoom down."""
-    z, x, y = unpack_cell(cell_id)
-    out = []
-    for dx in (0, 1):
-        for dy in (0, 1):
-            out.append(pack_cell(z + 1, 2 * x + dx, 2 * y + dy))
-    return out
-
-
 def cell_prefixes(zoom, tx, ty, min_zoom: int = 0):
     """All ancestor cell ids from ``zoom`` down to ``min_zoom``
     (inclusive) — the hierarchical prefix set used for multi-resolution

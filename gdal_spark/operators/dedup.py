@@ -222,32 +222,6 @@ def minhash_wide(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """(doc_id, i, mh) long format (unpivoted from the wide pass)."""
-    wide = minhash_wide(docs, num_hashes)
-    pairs = ", ".join(
-        f"cast({i} as bigint), mh{i}" for i in range(num_hashes)
-    )
-    return wide.selectExpr(
-        "doc_id", f"stack({num_hashes}, {pairs}) AS (i, mh)"
-    )
-
-
-def _band_sig_spark(docs: DataFrame, num_hashes: int, band_rows: int) -> DataFrame:
-    """(doc_id, band, sig) from the wide minhash pass."""
-    wide = minhash_wide(docs, num_hashes)
-    n_bands = num_hashes // band_rows
-    band_exprs = ", ".join(
-        f"cast({b} as int), concat_ws(',', "
-        + ", ".join(f"mh{b * band_rows + r}" for r in range(band_rows))
-        + ")"
-        for b in range(n_bands)
-    )
-    return wide.selectExpr(
-        "doc_id", f"stack({n_bands}, {band_exprs}) AS (band, sig)"
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     num_hashes: int = NUM_HASHES,

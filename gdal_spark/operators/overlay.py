@@ -13,14 +13,16 @@ fresh numpy cores instead:
   difference, and the per-feature subtraction folds behind
   Union/Identity/Update/Erase leftovers.
 
-Spark shape (scale-first): both layers explode to envelope-covering
-cells at a shared zoom -> equi-join on cell_id (clip side broadcast
-when small) -> pair dedup -> JVM envelope-overlap prefilter -> one
-Arrow-batched refine stage computing the clipped rings + shoelace
-area. Per-feature folds (A minus the union of ALL its partners) group
-the candidate pairs by feature and subtract sequentially inside one
-Arrow stage — partner lists are bounded by cell co-occurrence, so the
-fold is as distributed as the pair join. The payload geometry crosses
+Spark shape (scale-first): each envelope is decoded once per feature,
+both layers explode to their envelope-covering cells at a shared zoom
+in Catalyst -> equi-join on cell_id (clip side broadcast) -> JVM
+envelope-overlap filter that also keeps each pair in one reference
+cell only (no dedup shuffle) -> one Arrow-batched refine stage
+computing the clipped rings + shoelace area. ``predicates`` reuses
+the same candidate stage. Per-feature folds (A minus the union of ALL
+its partners) group the candidate pairs by feature and subtract
+sequentially inside one Arrow stage — partner lists are bounded by
+cell co-occurrence, so the fold is as distributed as the pair join. The payload geometry crosses
 the wire once; no driver-side loops.
 
 The driver oracles use closed-form subsets (rect algebra for pairwise
@@ -33,9 +35,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from .. import boolop, geom, wkb
+from .. import boolop, wkb
+from ..synth import flit
 from . import cells as cellmod
 
 
@@ -134,73 +137,73 @@ def clip_polygon_convex(rings: list[np.ndarray], clip_ring: np.ndarray):
 OVERLAY_ZOOM = 6  # cell level for the candidate join
 
 
-def _covering_iter(batches, id_col: str, wkb_col: str, zoom: int):
-    for pdf in batches:
-        ids, cids = [], []
-        for pid, data in zip(pdf[id_col], pdf[wkb_col]):
-            cs = geom.covering_cells_geodetic(bytes(data), zoom)
-            ids.extend([pid] * len(cs))
-            cids.extend(cs.tolist())
-        yield pd.DataFrame({id_col: ids, "cell_id": pd.array(cids, dtype="int64")})
-
-
-def _cells_of(df: DataFrame, id_col: str, wkb_col: str, zoom: int) -> DataFrame:
-    return df.select(id_col, wkb_col).mapInPandas(
-        lambda it: _covering_iter(it, id_col, wkb_col, zoom),
-        schema=f"{id_col} string, cell_id bigint",
-    )
-
-
 def _envelope_cols(df: DataFrame, id_col: str, wkb_col: str, prefix: str) -> DataFrame:
-    @F.pandas_udf("x0 double, y0 double, x1 double, y1 double")
-    def env(s: pd.Series) -> pd.DataFrame:
-        rows = [wkb.envelope(bytes(b)) for b in s]
-        return pd.DataFrame(rows, columns=["x0", "y0", "x1", "y1"])
-
-    e = env(F.col(wkb_col))
-    return df.withColumn("_env", e).select(
-        id_col,
-        wkb_col,
-        F.col("_env.x0").alias(f"{prefix}x0"),
-        F.col("_env.y0").alias(f"{prefix}y0"),
-        F.col("_env.x1").alias(f"{prefix}x1"),
-        F.col("_env.y1").alias(f"{prefix}y1"),
+    """(id, wkb, {prefix}x0/y0/x1/y1): each envelope decoded once, in
+    one mapInPandas. A struct-returning pandas UDF would be evaluated
+    twice, because Catalyst pushes the inferred not-null filters on its
+    fields below the projection."""
+    cols = [f"{prefix}{c}" for c in ("x0", "y0", "x1", "y1")]
+    src = df.select(id_col, wkb_col)
+    schema = T.StructType(
+        src.schema.fields + [T.StructField(c, T.DoubleType(), False) for c in cols]
     )
+
+    def decode(batches):
+        for pdf in batches:
+            env = np.array([wkb.envelope(bytes(g)) for g in pdf[wkb_col]])
+            yield pdf.assign(**dict(zip(cols, env.reshape(-1, 4).T)))
+
+    return src.mapInPandas(decode, schema=schema)
 
 
 def _candidates(
     subject: DataFrame,
     clip: DataFrame,
-    zoom: int,
-    broadcast_clip: bool,
+    pad: float = 0.0,
+    zoom: int = OVERLAY_ZOOM,
 ) -> DataFrame:
-    """Shared candidate stage: cell equi-join -> pair dedup -> strict
-    JVM envelope-overlap prefilter (touching boxes have zero-area
-    intersection and are dropped, matching every refine)."""
-    a_cells = _cells_of(subject, "id_a", "wkb_a", zoom)
-    b_cells = _cells_of(clip, "id_b", "wkb_b", zoom)
-    if broadcast_clip:
-        b_cells = F.broadcast(b_cells)
-    pairs = (
-        a_cells.join(b_cells, "cell_id")
-        .select("id_a", "id_b")
-        .distinct()
+    """The candidate-pair stage of every polygon-layer join: each
+    (id_a, wkb_a, ax0..ay1) x (id_b, wkb_b, bx0..by1) pair whose
+    envelopes overlap inclusively once the subject envelope is padded
+    by ``pad``, exactly once.
+
+    Both sides explode to the geodetic ``zoom`` cells their envelopes
+    cover (``cells.env_cell_explode``); the clip side is broadcast and
+    the join is on ``cell_id``. A pair that meets in several cells is
+    kept only in its reference cell, the one holding the lower-left
+    corner of the envelopes' overlap. Both covers include that cell,
+    because the corner lies in both envelopes and the cover uses the
+    point encoder, so no dedup shuffle is needed."""
+    p = flit(pad)
+    a = cellmod.env_cell_explode(
+        _envelope_cols(subject, "id_a", "wkb_a", "a"), "a", pad, zoom
     )
-    a_env = _envelope_cols(subject, "id_a", "wkb_a", "a")
-    b_env = _envelope_cols(clip, "id_b", "wkb_b", "b")
-    if broadcast_clip:
-        b_env = F.broadcast(b_env)
+    b = cellmod.env_cell_explode(
+        _envelope_cols(clip, "id_b", "wkb_b", "b"), "b", 0.0, zoom
+    )
+    ref = cellmod.cell_id_sql(
+        cellmod.geodetic_tile_sql(f"greatest((ax0 - {p}), bx0)", "0", zoom, "x"),
+        cellmod.geodetic_tile_sql("0", f"greatest((ay0 - {p}), by0)", zoom, "y"),
+        zoom,
+    )
     return (
-        pairs.join(a_env, "id_a")
-        .join(b_env, "id_b")
+        a.join(F.broadcast(b), "cell_id")
         .where(
-            (F.col("ax0") < F.col("bx1"))
-            & (F.col("bx0") < F.col("ax1"))
-            & (F.col("ay0") < F.col("by1"))
-            & (F.col("by0") < F.col("ay1"))
+            f"(ax0 - {p}) <= bx1 AND bx0 <= (ax1 + {p}) "
+            f"AND (ay0 - {p}) <= by1 AND by0 <= (ay1 + {p}) "
+            f"AND cell_id = {ref}"
         )
-        .select("id_a", "wkb_a", "id_b", "wkb_b")
+        .drop("cell_id")
     )
+
+
+def _overlapping(subject: DataFrame, clip: DataFrame) -> DataFrame:
+    """Candidate pairs whose envelopes overlap with positive area:
+    touching boxes have a zero-area intersection and every overlay
+    refine drops them."""
+    return _candidates(subject, clip).where(
+        "ax0 < bx1 AND bx0 < ax1 AND ay0 < by1 AND by0 < ay1"
+    ).select("id_a", "wkb_a", "id_b", "wkb_b")
 
 
 def _region_is_rect(region) -> bool:
@@ -243,8 +246,6 @@ def overlay(
     subject: DataFrame,
     clip: DataFrame,
     how: str = "intersection",
-    zoom: int = OVERLAY_ZOOM,
-    broadcast_clip: bool = True,
 ) -> DataFrame:
     """Layer-algebra overlay.
 
@@ -259,7 +260,7 @@ def overlay(
     """
     if how not in ("intersection", "erase"):
         raise ValueError(how)
-    cand = _candidates(subject, clip, zoom, broadcast_clip)
+    cand = _overlapping(subject, clip)
 
     def refine(batches):
         for pdf in batches:
@@ -391,8 +392,6 @@ def overlay_pairs(
     subject: DataFrame,
     clip: DataFrame,
     how: str = "union",
-    zoom: int = OVERLAY_ZOOM,
-    broadcast_clip: bool = True,
 ) -> DataFrame:
     """Pairwise boolean overlay emitting the stitched geometry per
     genuinely overlapping pair. how: 'intersection' | 'union' |
@@ -401,12 +400,11 @@ def overlay_pairs(
     region engine (concave / holed inputs welcome on BOTH sides)."""
     if how not in ("intersection", "union", "symdiff"):
         raise ValueError(how)
-    cand = _candidates(subject, clip, zoom, broadcast_clip)
-    # the refine below is ~1 ms of Python per pair; AQE sees a tiny
-    # shuffle (candidate pairs are a few columns) and coalesces it to
-    # one partition, serializing the expensive stage. An explicit
-    # partition count pins the fan-out (AQE never coalesces a
-    # user-numbered repartition).
+    cand = _overlapping(subject, clip)
+    # the refine below is ~1 ms of Python per pair, and the candidate
+    # rows keep the subject layer's few partitions. An explicit
+    # partition count pins the fan-out to every core (AQE never
+    # coalesces a user-numbered repartition).
     cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
 
     def refine(batches):
@@ -468,8 +466,6 @@ def overlay_fold(
     feats: DataFrame,
     method: DataFrame,
     how: str = "erase",
-    zoom: int = OVERLAY_ZOOM,
-    broadcast_method: bool = True,
 ) -> DataFrame:
     """Per-feature layer-algebra fold against the union of ALL
     intersecting method features:
@@ -493,9 +489,7 @@ def overlay_fold(
     """
     if how not in ("erase", "clip"):
         raise ValueError(how)
-    cand = _candidates(feats, method, zoom, broadcast_method).select(
-        "id_a", "wkb_b"
-    )
+    cand = _overlapping(feats, method).select("id_a", "wkb_b")
     partners = cand.groupBy("id_a").agg(F.collect_list("wkb_b").alias("_bs"))
     join_type = "left" if how == "erase" else "inner"
     src = feats.join(partners, "id_a", join_type)

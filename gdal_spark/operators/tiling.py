@@ -356,29 +356,6 @@ def build_pyramid(
 
 
 # ---------------------------------------------------------------------------
-# resume / lineage (gdal2tiles --resume; north-rule checkpointing).
-# Parquet-backed log standing in for the Iceberg table in this
-# sandbox; the API shape (append done-keys + metrics, anti-join to
-# skip) is the Iceberg pattern 1:1.
-
-
-def filter_not_done(tiles: DataFrame, spark, done_path: str) -> DataFrame:
-    try:
-        done = spark.read.parquet(done_path).select("tx", "ty").distinct()
-    except Exception:
-        return tiles
-    return tiles.join(done, ["tx", "ty"], "left_anti")
-
-
-def commit_done(tiles: DataFrame, done_path: str):
-    """Append the committed tile log + per-tile metrics (lineage)."""
-    tiles.select(
-        "tx", "ty", "n_painted",
-        F.expr("cast(cks_0 as bigint) AS cks_0"),
-    ).write.mode("append").parquet(done_path)
-
-
-# ---------------------------------------------------------------------------
 # SQL oracle — literal mirror of the render arithmetic
 
 

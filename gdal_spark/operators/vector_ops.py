@@ -238,26 +238,6 @@ def oracle_simplify_roundtrip(m: int, max_len: float) -> str:
     )
 
 
-def simplify_counts(polys: DataFrame, tol: float) -> DataFrame:
-    """(poly_id, n_before, n_after) for the outer ring (closed ring
-    split at vertex 0). Rows-only driver check; pytest pins the DP
-    invariants."""
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for poly_id, g in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                r = _ring_array(wkb.polygon_rings(bytes(g))[0])
-                closed = np.concatenate([r, r[:1]])
-                simp = simplify_dp(closed, tol)
-                rows.append((poly_id, len(r), len(simp) - 1))
-            yield pd.DataFrame(rows, columns=["poly_id", "n_before", "n_after"])
-
-    return polys.select("poly_id", "geom_wkb").mapInPandas(
-        run, schema="poly_id string, n_before bigint, n_after bigint"
-    )
-
-
 # ---------------------------------------------------------------------------
 # ogr2ogr -t_srs: reproject every vertex of a vector layer
 # (OGRGeometry::transform over rings, ogr/ogrct.cpp Transform loop;

@@ -23,15 +23,6 @@ _U32 = struct.Struct("<I")
 _PT = struct.Struct("<2d")
 
 
-def encode_point(x: float, y: float) -> bytes:
-    return _HDR.pack(1, POINT) + _PT.pack(x, y)
-
-
-def encode_linestring(coords) -> bytes:
-    arr = np.asarray(coords, dtype=np.float64)
-    return _HDR.pack(1, LINESTRING) + _U32.pack(len(arr)) + arr.tobytes()
-
-
 def _encode_rings(rings) -> bytes:
     out = [_U32.pack(len(rings))]
     for ring in rings:

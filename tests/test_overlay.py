@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 
 from gdal_spark import geom, synth, wkb
-from gdal_spark.operators import overlay
+from gdal_spark.operators import overlay, predicates
 from tests.conftest import SF_DIR
 
 
@@ -179,3 +179,55 @@ def test_overlay_spark_pipeline_matches_local(spark):
         (r["id_a"], r["id_b"]): r["area_u"] for _, r in out.iterrows()
     }
     assert got == expect
+
+
+@pytest.mark.parametrize("pad", [0.0, predicates.DIST_MAX])
+def test_candidates_match_envelope_bruteforce(spark, pad):
+    """The one candidate stage returns exactly the pairs whose padded
+    envelopes overlap inclusively, each once. Scenes: the 2048-polygon
+    layer against its hot_box subset, the lattice rectangles (wider
+    than a z6 cell), a world-envelope box on both sides, and two boxes
+    that share only an edge on a z6 cell boundary (lon 0)."""
+    def box(x0, y0, x1, y1):
+        return wkb.encode_polygon([(x0, y0), (x1, y0), (x1, y1), (x0, y1)])
+
+    pdf = synth.polygons_pdf(2048)
+    latt = synth.lattice_pdf()
+    world = box(-180.0, -90.0, 180.0, 90.0)
+    a_rows = list(zip(pdf["poly_id"], map(bytes, pdf["geom_wkb"]))) + [
+        ("world_a", world),
+        ("edge_a", box(-2.0, 1.0, 0.0, 3.0)),
+    ]
+    hot = pdf[pdf["kind"] == "hot_box"]
+    b_rows = (
+        list(zip(hot["poly_id"], map(bytes, hot["geom_wkb"])))
+        + list(zip(latt["latt_id"], map(bytes, latt["geom_wkb"])))
+        + [("world_b", world), ("edge_b", box(0.0, 1.0, 2.0, 3.0))]
+    )
+    ea = np.array([wkb.envelope(g) for _, g in a_rows])
+    eb = np.array([wkb.envelope(g) for _, g in b_rows])
+    ax0, ay0, ax1, ay1 = (ea[:, k, None] for k in range(4))
+    bx0, by0, bx1, by1 = (eb[None, :, k] for k in range(4))
+    hit = (
+        (ax0 - pad <= bx1) & (bx0 <= ax1 + pad)
+        & (ay0 - pad <= by1) & (by0 <= ay1 + pad)
+    )
+    ia, ib = np.nonzero(hit)
+    expect = {(a_rows[i][0], b_rows[j][0]) for i, j in zip(ia, ib)}
+    assert ("edge_a", "edge_b") in expect
+
+    sub = spark.createDataFrame(
+        [(i, bytearray(g)) for i, g in a_rows], "id_a string, wkb_a binary"
+    )
+    clip = spark.createDataFrame(
+        [(i, bytearray(g)) for i, g in b_rows], "id_b string, wkb_b binary"
+    )
+    zoom = overlay.OVERLAY_ZOOM if pad == 0.0 else predicates._dist_cell_zoom(pad)
+    got = [
+        (r["id_a"], r["id_b"])
+        for r in overlay._candidates(sub, clip, pad, zoom)
+        .select("id_a", "id_b")
+        .collect()
+    ]
+    assert len(got) == len(set(got))  # no pair repeats across cells
+    assert set(got) == expect

@@ -168,6 +168,22 @@ def test_min_distance_pairs_has_no_bnlj(spark):
     assert "BroadcastHashJoin" in s
 
 
+def test_spatial_predicates_is_one_broadcast_cell_join(spark):
+    """The polygon-layer candidate stage is one broadcast cell join
+    with no dedup shuffle: no aggregate, no hash exchange, and each
+    input side's WKB is decoded by one Python node (plus the one
+    refine node), not by a struct UDF that Catalyst evaluates twice."""
+    from gdal_spark.operators import predicates
+
+    df = predicates.predicates_boxes_query(synth.polygons_df(spark, 128))
+    s = plan(df)
+    assert s.count("BroadcastHashJoin") == 1
+    assert "HashAggregate" not in s
+    assert "Exchange hashpartitioning" not in s
+    assert "EvalPython" not in s
+    assert s.count("MapInPandas") == 3  # a decode, b decode, refine
+
+
 def test_compare_rows_is_single_equijoin(spark):
     """The re-encode verification joins golden x candidate on
     image_id only — no cartesian/BNLJ anywhere in the plan."""

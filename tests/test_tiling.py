@@ -1,10 +1,11 @@
 """Tile pyramid: distributed render/overview vs a single-machine
-brute-force mosaic of the same images, plus resume anti-join."""
+brute-force mosaic of the same images, plus resume on the snapshot
+log."""
 
 import numpy as np
 import pytest
 
-from gdal_spark import codecs, grid, synth
+from gdal_spark import codecs, grid, synth, tablefmt
 from gdal_spark.operators import tiling
 
 Z = 10
@@ -77,18 +78,21 @@ def test_pyramid_two_levels(spark, hot_images):
 
 
 def test_resume_anti_join(spark, hot_images, tmp_path):
+    """Resume on the snapshot log: tiles committed by
+    ``SnapshotLog.append`` drop out of ``resume_filter`` by (tx, ty)."""
     _, df = hot_images
-    done_path = str(tmp_path / "done_log")
+    log = tablefmt.SnapshotLog(str(tmp_path / "tiles"))
     base = tiling.render_base_tiles(df, Z).cache()
     n_all = base.count()
+    assert tablefmt.resume_filter(base, spark, log, ["tx", "ty"]).count() == n_all
     # commit half the tiles, then resume must only yield the rest
     half = base.limit(n_all // 2).cache()
-    tiling.commit_done(half, done_path)
-    remaining = tiling.filter_not_done(base, spark, done_path)
+    log.append(half)
+    remaining = tablefmt.resume_filter(base, spark, log, ["tx", "ty"])
     assert remaining.count() == n_all - half.count()
     # committing the rest leaves nothing to do
-    tiling.commit_done(remaining, done_path)
-    assert tiling.filter_not_done(base, spark, done_path).count() == 0
+    log.append(remaining)
+    assert tablefmt.resume_filter(base, spark, log, ["tx", "ty"]).count() == 0
 
 
 def test_covering_tiles_complete(spark, hot_images):
