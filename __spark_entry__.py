@@ -731,12 +731,6 @@ def _q_fillnodata(spark, sf_dir):
     return raster_misc.fillnodata_rows(_pixel_images(spark, sf_dir, _FILL_MAX_I))
 
 
-def _grid_pts():
-    import pandas as pd
-
-    return pd.DataFrame(raster_misc.GRID_POINTS)
-
-
 def _q_dedup_clusters(spark, sf_dir):
     """Connected components over the verified MinHash near-dup pair
     graph + canonical keeper per cluster — the operational dedup
@@ -2256,14 +2250,6 @@ _PIP_ORACLE_JOIN = """
 """
 
 
-_CKS_PRIME_CASE = (
-    "(CASE ((y * w + x) % 11) "
-    "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-    "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-    "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-)
-
-
 def oracle_sql() -> dict[str, str]:
     n, m = _ORACLE_N_IMAGES, _ORACLE_N_POLYGONS
     px_stats = synth.pixels_cte(min(n, 4096), _STATS_MAX_I, "duckdb")
@@ -2293,7 +2279,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "checksum": (
             f"SELECT image_id, cast(ch as bigint) AS channel, "
-            f"cast(sum(val % {_CKS_PRIME_CASE}) % 65536 as bigint) AS cks "
+            f"{stats.checksum_sql('val', 'y * w + x')} AS cks "
             f"FROM ({px_small}) GROUP BY 1, 2"
         ),
         "tile_assign_merc": _merc_cells_sql(n, TILE_ZOOM),
@@ -2572,11 +2558,9 @@ def oracle_sql() -> dict[str, str]:
         "rasterize_rows": rastop.oracle_rasterize_rows(m, _RAST_GRID),
         "rasterize_inverse": rastop.oracle_rasterize_inverse(m, _RAST_GRID),
         "match_histogram": enhance.oracle_match_histogram(
-            min(n, 4096), _CKS_MAX_I, _CKS_PRIME_CASE
+            min(n, 4096), _CKS_MAX_I
         ),
-        "enhance_equalize": enhance.oracle_equalize(
-            min(n, 4096), _CKS_MAX_I, _CKS_PRIME_CASE
-        ),
+        "enhance_equalize": enhance.oracle_equalize(min(n, 4096), _CKS_MAX_I),
         "exact_substring_spans": dedup.oracle_exact_substring_spans(),
         "unigram_perplexity": textops.oracle_unigram_perplexity(),
         "hll_distinct": textops.oracle_hll_distinct(),

@@ -36,8 +36,11 @@ the km-resolution grid.  The real OSTN15 15 MB grid file is not in
 this container, so the gated grid is synthetic-but-OSTN15-shaped
 (deterministic integer node formula, ~90 m E / ~-55 m N magnitudes);
 the NTv2 reader is gated against the reference's real .gsb fixtures
-instead, and `grid_table_from_ntv2` connects the two (a parsed file
-becomes the same (row, col, shifts) table the join consumes).
+instead.  `grid_table_from_ntv2` turns a parsed file into a (row, col,
+shift) table of lat/lon shifts in micro-arc-seconds; `osgb_gridshift`
+reads E/N shifts in millimetres, so a real grid needs a lat/lon-shift
+join of its own (tests/test_gridshift.py builds one).  Only NTv2
+(.gsb) grid files are read.
 """
 
 from __future__ import annotations
@@ -321,8 +324,8 @@ def osgb_gridshift(images: DataFrame) -> DataFrame:
     equi-join (nadgrids dataflow, ogrct.cpp:1306).  Plan shape:
     map-only projection -> explode(4) -> BROADCAST hash equi-join on
     (row, col) -> partial-aggregated weighted sum.  No cartesian, no
-    Python, no collect; a real 877k-node OSTN15 table drops in via
-    grid_table_from_ntv2 unchanged."""
+    Python, no collect.  The grid table holds E/N shifts in mm, not
+    the lat/lon arc-second shifts grid_table_from_ntv2 emits."""
     from .operators.reproject import (
         OSGB_DOMAIN_SQL,
         _OSGB_LON_CASE,

@@ -50,7 +50,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .. import boolop, geom, synth, wkb
+from .. import boolop, synth, wkb
 
 # angle-grid offset for general-path vertex discs: keeps disc
 # vertices off the capsule-rectangle corners (which sit at exact

@@ -206,22 +206,6 @@ def oracle_ngram_jaccard(
 # MinHash + LSH
 
 
-def minhash_wide(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """(doc_id, mh0..mh{k-1}): all minhashes in ONE aggregation pass —
-    no explode over hash indices, the k mins ride the same map-side
-    combine (hash_i(x) = ((2i+1)*x + i*B) % P over shingle hashes)."""
-    sh = shingles_df(docs).withColumn(
-        "sh_hash", F.expr(str_hash_sql("spark", "shingle"))
-    )
-    aggs = [
-        F.min(
-            F.expr(f"((2 * {i} + 1) * sh_hash + {i} * {MINHASH_B}) % {HASH_P}")
-        ).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     num_hashes: int = NUM_HASHES,

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs, synth
 from ..synth import flit
+from .stats import channel_checksums, checksum_sql
 
 # hillshade constants (defaults az=315, alt=45, z=1, scale=1) — python
 # floats embedded as SQL literals so both engines share them exactly
@@ -184,24 +185,18 @@ def color_relief_band(dem: np.ndarray, ramp=COLOR_RAMP) -> np.ndarray:
     return out
 
 
+def _relief_checksums(images: DataFrame, band_fn, ramp) -> DataFrame:
+    """Per-output-channel GDAL checksums of ``band_fn(channel 0, ramp)``."""
+    return channel_checksums(
+        images, ["bytes"],
+        lambda b: band_fn(codecs.decode_image(bytes(b))[:, :, 0], ramp),
+    )
+
+
 def color_relief(images: DataFrame, ramp=COLOR_RAMP) -> DataFrame:
     """Per-image color relief of channel 0; per-output-channel GDAL
     checksums."""
-    from .stats import gdal_checksum
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                demb = codecs.decode_image(bytes(payload))[:, :, 0]
-                rgb = color_relief_band(demb, ramp)
-                for c in range(3):
-                    rows.append((image_id, c, gdal_checksum(rgb[:, :, c])))
-            yield pd.DataFrame(rows, columns=["image_id", "channel", "cks"])
-
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, channel bigint, cks bigint"
-    )
+    return _relief_checksums(images, color_relief_band, ramp)
 
 
 def oracle_color_relief(n: int, max_i: int, ramp=COLOR_RAMP) -> str:
@@ -221,12 +216,7 @@ def oracle_color_relief(n: int, max_i: int, ramp=COLOR_RAMP) -> str:
         last_c = ramp[-1][1]
         return f"(CASE {' '.join(cases)} ELSE {last_c[c]} END)"
 
-    prime = (
-        "(CASE ((y * w + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("oval", "y * w + x")
     return (
         f"WITH px AS (SELECT image_id, w, x, y, val FROM "
         f"({synth.pixels_cte(n, max_i, 'duckdb')}) WHERE ch = 0), "
@@ -234,7 +224,7 @@ def oracle_color_relief(n: int, max_i: int, ramp=COLOR_RAMP) -> str:
         f"CASE c WHEN 0 THEN {chan(0)} WHEN 1 THEN {chan(1)} "
         f"ELSE {chan(2)} END AS oval FROM px, range(0, 3) t(c)) "
         f"SELECT image_id, cast(channel as bigint) AS channel, "
-        f"cast(sum(oval % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM o GROUP BY 1, 2"
     )
 
@@ -762,21 +752,7 @@ def color_relief_nearest_band(dem: np.ndarray, ramp=COLOR_RAMP) -> np.ndarray:
 def color_relief_nearest(images: DataFrame, ramp=COLOR_RAMP) -> DataFrame:
     """Per-image nearest-entry color relief of channel 0; per-output-
     channel GDAL checksums (all-integer, bit-exact oracle)."""
-    from .stats import gdal_checksum
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                demb = codecs.decode_image(bytes(payload))[:, :, 0]
-                rgb = color_relief_nearest_band(demb, ramp)
-                for c in range(3):
-                    rows.append((image_id, c, gdal_checksum(rgb[:, :, c])))
-            yield pd.DataFrame(rows, columns=["image_id", "channel", "cks"])
-
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, channel bigint, cks bigint"
-    )
+    return _relief_checksums(images, color_relief_nearest_band, ramp)
 
 
 def oracle_color_relief_nearest(n: int, max_i: int, ramp=COLOR_RAMP) -> str:
@@ -793,12 +769,7 @@ def oracle_color_relief_nearest(n: int, max_i: int, ramp=COLOR_RAMP) -> str:
         last_c = ramp[-1][1]
         return f"(CASE {' '.join(cases)} ELSE {last_c[c]} END)"
 
-    prime = (
-        "(CASE ((y * w + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("oval", "y * w + x")
     return (
         f"WITH px AS (SELECT image_id, w, x, y, val FROM "
         f"({synth.pixels_cte(n, max_i, 'duckdb')}) WHERE ch = 0), "
@@ -806,7 +777,7 @@ def oracle_color_relief_nearest(n: int, max_i: int, ramp=COLOR_RAMP) -> str:
         f"CASE c WHEN 0 THEN {chan(0)} WHEN 1 THEN {chan(1)} "
         f"ELSE {chan(2)} END AS oval FROM px, range(0, 3) t(c)) "
         f"SELECT image_id, cast(channel as bigint) AS channel, "
-        f"cast(sum(oval % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM o GROUP BY 1, 2"
     )
 
@@ -1196,21 +1167,7 @@ def color_relief_exact(images: DataFrame, ramp=COLOR_RAMP) -> DataFrame:
     channel GDAL checksums (all-integer, bit-exact oracle). Completes
     the reference's three color-selection modes (interpolate /
     nearest / exact)."""
-    from .stats import gdal_checksum
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                demb = codecs.decode_image(bytes(payload))[:, :, 0]
-                rgb = color_relief_exact_band(demb, ramp)
-                for c in range(3):
-                    rows.append((image_id, c, gdal_checksum(rgb[:, :, c])))
-            yield pd.DataFrame(rows, columns=["image_id", "channel", "cks"])
-
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, channel bigint, cks bigint"
-    )
+    return _relief_checksums(images, color_relief_exact_band, ramp)
 
 
 def oracle_color_relief_exact(n: int, max_i: int, ramp=COLOR_RAMP) -> str:
@@ -1220,12 +1177,7 @@ def oracle_color_relief_exact(n: int, max_i: int, ramp=COLOR_RAMP) -> str:
         )
         return f"(CASE {cases} ELSE 0 END)"
 
-    prime = (
-        "(CASE ((y * w + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("oval", "y * w + x")
     return (
         f"WITH px AS (SELECT image_id, w, x, y, val FROM "
         f"({synth.pixels_cte(n, max_i, 'duckdb')}) WHERE ch = 0), "
@@ -1233,6 +1185,6 @@ def oracle_color_relief_exact(n: int, max_i: int, ramp=COLOR_RAMP) -> str:
         f"CASE c WHEN 0 THEN {chan(0)} WHEN 1 THEN {chan(1)} "
         f"ELSE {chan(2)} END AS oval FROM px, range(0, 3) t(c)) "
         f"SELECT image_id, cast(channel as bigint) AS channel, "
-        f"cast(sum(oval % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM o GROUP BY 1, 2"
     )

@@ -33,7 +33,7 @@ fragments, so the arithmetic parses identically.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from .textops import bigrams_sql, str_hash_sql, tokens_sql
 

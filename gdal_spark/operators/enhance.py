@@ -26,8 +26,11 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
+from .. import codecs
 from ..synth import pixels_cte
-from .stats import _decode_iter, gdal_checksum
+from .stats import (
+    _decode_iter, channel_checksums, checksum_sql, gdal_checksum,
+)
 
 LUT_BINS = 256
 
@@ -60,11 +63,10 @@ def equalize_checksums(images: DataFrame) -> DataFrame:
     )
 
 
-def oracle_equalize(n_images: int, max_i: int, cks_prime_case: str) -> str:
+def oracle_equalize(n_images: int, max_i: int) -> str:
     """Bit-exact SQL replay: per-(image, channel) histogram with zeroed
-    extremes, half-bin cumulative sum, integer LUT, pixel join, GDAL
-    checksum. ``cks_prime_case`` is the shared prime-by-position CASE
-    expression used by every checksum oracle."""
+    extremes, half-bin cumulative sum, integer LUT, pixel join, then
+    the GDAL checksum aggregate ``stats.checksum_sql``."""
     px = pixels_cte(n_images, max_i, "duckdb")
     return (
         f"WITH px AS MATERIALIZED ({px}), "
@@ -84,7 +86,7 @@ def oracle_equalize(n_images: int, max_i: int, cks_prime_case: str) -> str:
         f"FROM px JOIN lut ON px.image_id = lut.image_id "
         f"AND px.ch = lut.ch AND px.val = lut.val) "
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(val % {cks_prime_case}) % 65536 as bigint) AS cks "
+        f"{checksum_sql('val', 'y * w + x')} AS cks "
         f"FROM eqpx GROUP BY 1, 2"
     )
 
@@ -156,10 +158,10 @@ def match_histogram_checksums(images: DataFrame) -> DataFrame:
     )
 
 
-def oracle_match_histogram(n_images: int, max_i: int,
-                           cks_prime_case: str) -> str:
+def oracle_match_histogram(n_images: int, max_i: int) -> str:
     """Bit-exact SQL replay of the global-histogram match: local CDF,
-    global CDF, cross-multiplied min-u lookup, pixel join, checksum."""
+    global CDF, cross-multiplied min-u lookup, pixel join, then the
+    GDAL checksum aggregate ``stats.checksum_sql``."""
     px = pixels_cte(n_images, max_i, "duckdb")
     return (
         f"WITH px AS MATERIALIZED ({px}), "
@@ -185,7 +187,7 @@ def oracle_match_histogram(n_images: int, max_i: int,
         f"px.image_id = lut.image_id AND px.ch = lut.ch "
         f"AND px.val = lut.val) "
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(val % {cks_prime_case}) % 65536 as bigint) AS cks "
+        f"{checksum_sql('val', 'y * w + x')} AS cks "
         f"FROM mpx GROUP BY 1, 2"
     )
 
@@ -247,23 +249,17 @@ def hsv_merge(images: DataFrame) -> DataFrame:
     the interior (hillshade leaves edges uncomputed)."""
     from .dem import color_relief_band, window_features
 
-    cols = ["image_id", "channel", "cks"]
-
-    def fn(arr):
-        demb = arr[:, :, 0]
+    def merge(payload):
+        demb = codecs.decode_image(bytes(payload))[:, :, 0]
         rgb = color_relief_band(demb).astype(np.int64)[1:-1, 1:-1]
         shade = window_features(demb)["shade"]
         gray = np.floor(shade + 0.5).astype(np.int64)
         merged = _hsv_merge_bands(
             rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2], gray
         )
-        for c in range(3):
-            yield (c, gdal_checksum(merged[c]))
+        return np.stack(merged, axis=2)
 
-    schema = "image_id string, channel bigint, cks bigint"
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return channel_checksums(images, ["bytes"], merge)
 
 
 def oracle_hsv_merge(n: int, max_i: int) -> str:
@@ -288,12 +284,7 @@ def oracle_hsv_merge(n: int, max_i: int) -> str:
         return f"(CASE {' '.join(cases)} ELSE {COLOR_RAMP[-1][1][c]} END)"
 
     nbr_val = synth.pixel_val_sql()
-    prime = (
-        "(CASE (((y0 - 1) * (w - 2) + (x0 - 1)) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("oval", "(y0 - 1) * (w - 2) + (x0 - 1)")
     return (
         f"WITH g AS MATERIALIZED (SELECT image_id, i.i AS i, w, h, fmt, "
         f"x0, y0 FROM ({synth.images_cte(n, 'duckdb')}) i, "
@@ -345,6 +336,6 @@ def oracle_hsv_merge(n: int, max_i: int) -> str:
         f"CASE c WHEN 0 THEN r2 WHEN 1 THEN g2 ELSE b2 END AS oval "
         f"FROM m8, range(0, 3) tc(c)) "
         f"SELECT image_id, cast(channel as bigint) AS channel, "
-        f"cast(sum(oval % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM unp GROUP BY 1, 2"
     )

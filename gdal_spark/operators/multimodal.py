@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs, synth
+from .stats import channel_checksums, checksum_sql, gdal_checksum
 
 N_FRAMES = 4
 FRAME_BASE = 100_000
@@ -97,12 +98,7 @@ def resize_nearest(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
 
 
 def oracle_resize_checksum(n: int, max_i: int, out_w: int, out_h: int) -> str:
-    prime = (
-        f"(CASE ((y2 * {out_w} + x2) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql(synth.pixel_val_sql(), f"y2 * {out_w} + x2")
     return (
         f"WITH g AS (SELECT image_id, i.i AS i, w, h, fmt, x2, y2, ch, "
         f"(x2 * w) // {out_w} AS x, (y2 * h) // {out_h} AS y "
@@ -110,7 +106,7 @@ def oracle_resize_checksum(n: int, max_i: int, out_w: int, out_h: int) -> str:
         f"range(0, {out_w}) a(x2), range(0, {out_h}) b(y2), range(0, 3) c(ch) "
         f"WHERE i.i < {max_i}) "
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum({synth.pixel_val_sql()} % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM g GROUP BY 1, 2"
     )
 
@@ -168,12 +164,7 @@ def oracle_frame_checksum(
     """Checksums of sampled frames — the frame pixel function is the
     synth pixel function at index FRAME_BASE + n_frames*i + f (png,
     lossless)."""
-    prime = (
-        "(CASE ((y * w + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql(synth.pixel_val_sql(), "y * w + x")
     return (
         f"WITH g AS (SELECT image_id, frame_idx, "
         f"{FRAME_BASE} + {n_frames} * img.i + frame_idx AS i, w, h, "
@@ -185,14 +176,13 @@ def oracle_frame_checksum(
         f"AND x < img.w AND y < img.h) "
         f"SELECT image_id, cast(frame_idx as bigint) AS frame_idx, "
         f"cast(ch as bigint) AS channel, "
-        f"cast(sum({synth.pixel_val_sql()} % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM g GROUP BY 1, 2, 3"
     )
 
 
 def frame_checksums(frames: DataFrame) -> DataFrame:
     """(image_id, frame_idx, channel, cks) per sampled frame."""
-    from .stats import gdal_checksum
 
     def run(batches):
         for pdf in batches:
@@ -373,7 +363,6 @@ def augment(images: DataFrame) -> DataFrame:
                 if flip:
                     xf = cw - 1 - xf
                 out = arr[yf + oy, xf + ox, :]
-                from .stats import gdal_checksum
 
                 for c in range(out.shape[2]):
                     rows.append(
@@ -391,12 +380,7 @@ def augment(images: DataFrame) -> DataFrame:
 
 def oracle_augment(n: int, max_i: int) -> str:
     """Exact index-remap replay of the augmentation chain."""
-    prime = (
-        "(CASE ((y2 * ow + x2) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql(synth.pixel_val_sql(), "y2 * ow + x2")
     return f"""
 WITH img AS (SELECT i, image_id, w, h, fmt, i % 4 AS k,
              (i % 2 = 0) AS flip,
@@ -419,7 +403,7 @@ src AS (SELECT image_id, i, w, h, fmt, x2, y2, ow, oh, ch,
         FROM px, range(0, 3) c(ch))
 SELECT image_id, cast(ch as bigint) AS channel,
        cast(min(ow) as bigint) AS ow, cast(min(oh) as bigint) AS oh,
-       cast(sum({synth.pixel_val_sql()} % {prime}) % 65536 as bigint) AS cks
+       {cks_sql} AS cks
 FROM src GROUP BY 1, 2
 """
 
@@ -939,32 +923,22 @@ FROM {final} r JOIN sizes s ON s.root = r.root
 MIXUP_OFFSET = 900_000
 
 
+def _mix_partners(payload, i, w, h):
+    """(image, partner) as int64 arrays: the decoded image and the raw
+    synth pixels of image ``i + MIXUP_OFFSET`` at the same size."""
+    a = codecs.decode_image(bytes(payload)).astype(np.int64)
+    b = codecs.make_pixels(int(i) + MIXUP_OFFSET, int(w), int(h))
+    return a, b.astype(np.int64)
+
+
 def mixup_pairs(images: DataFrame) -> DataFrame:
     """(image_id, channel, cks) of floor((A + partner) / 2)."""
-    import numpy as np
-    import pandas as pd
 
-    from .. import codecs
-    from .stats import gdal_checksum
+    def mix(payload, i, w, h):
+        a, b = _mix_partners(payload, i, w, h)
+        return (a + b) // 2
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload, i, w, h in zip(
-                pdf["image_id"], pdf["bytes"], pdf["i"], pdf["w"], pdf["h"]
-            ):
-                a = codecs.decode_image(bytes(payload)).astype(np.int64)
-                b = codecs.make_pixels(
-                    int(i) + MIXUP_OFFSET, int(w), int(h)
-                ).astype(np.int64)
-                out = (a + b) // 2
-                for c in range(3):
-                    rows.append((image_id, c, gdal_checksum(out[:, :, c])))
-            yield pd.DataFrame(rows, columns=["image_id", "channel", "cks"])
-
-    return images.select("image_id", "i", "w", "h", "bytes").mapInPandas(
-        run, schema="image_id string, channel bigint, cks bigint"
-    )
+    return channel_checksums(images, ["bytes", "i", "w", "h"], mix)
 
 
 def oracle_mixup_pairs(n: int, max_i: int) -> str:
@@ -977,18 +951,13 @@ def oracle_mixup_pairs(n: int, max_i: int) -> str:
         .replace("i %", f"(i + {MIXUP_OFFSET}) %")
         .replace("i * 7", f"(i + {MIXUP_OFFSET}) * 7")
     )
-    prime = (
-        "(CASE ((y * w + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("oval", "y * w + x")
     return (
         f"WITH px AS (SELECT image_id, w, x, y, ch, "
         f"(val + ({pval})) // 2 AS oval "
         f"FROM ({synth.pixels_cte(n, max_i, 'duckdb')})) "
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(oval % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM px GROUP BY 1, 2"
     )
 
@@ -997,34 +966,16 @@ def cutmix_pairs(images: DataFrame) -> DataFrame:
     """CutMix (Yun et al. 2019): paste the partner's centered
     half-width x half-height box into the image — deterministic box,
     exact integers. (image_id, channel, cks)."""
-    import numpy as np
-    import pandas as pd
 
-    from .. import codecs
-    from .stats import gdal_checksum
+    def cut(payload, i, w, h):
+        out, b = _mix_partners(payload, i, w, h)
+        w_, h_ = int(w), int(h)
+        x0, x1 = w_ // 4, w_ // 4 + w_ // 2
+        y0, y1 = h_ // 4, h_ // 4 + h_ // 2
+        out[y0:y1, x0:x1, :] = b[y0:y1, x0:x1, :]
+        return out
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload, i, w, h in zip(
-                pdf["image_id"], pdf["bytes"], pdf["i"], pdf["w"], pdf["h"]
-            ):
-                a = codecs.decode_image(bytes(payload)).astype(np.int64)
-                b = codecs.make_pixels(
-                    int(i) + MIXUP_OFFSET, int(w), int(h)
-                ).astype(np.int64)
-                w_, h_ = int(w), int(h)
-                x0, x1 = w_ // 4, w_ // 4 + w_ // 2
-                y0, y1 = h_ // 4, h_ // 4 + h_ // 2
-                out = a.copy()
-                out[y0:y1, x0:x1, :] = b[y0:y1, x0:x1, :]
-                for c in range(3):
-                    rows.append((image_id, c, gdal_checksum(out[:, :, c])))
-            yield pd.DataFrame(rows, columns=["image_id", "channel", "cks"])
-
-    return images.select("image_id", "i", "w", "h", "bytes").mapInPandas(
-        run, schema="image_id string, channel bigint, cks bigint"
-    )
+    return channel_checksums(images, ["bytes", "i", "w", "h"], cut)
 
 
 def oracle_cutmix_pairs(n: int, max_i: int) -> str:
@@ -1040,17 +991,12 @@ def oracle_cutmix_pairs(n: int, max_i: int) -> str:
         "(x >= w // 4 AND x < w // 4 + w // 2 "
         "AND y >= h // 4 AND y < h // 4 + h // 2)"
     )
-    prime = (
-        "(CASE ((y * w + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("oval", "y * w + x")
     return (
         f"WITH px AS (SELECT image_id, w, x, y, ch, "
         f"CASE WHEN {inbox} THEN ({pval}) ELSE val END AS oval "
         f"FROM ({synth.pixels_cte(n, max_i, 'duckdb')})) "
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(oval % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM px GROUP BY 1, 2"
     )

@@ -203,17 +203,14 @@ def classify(rings_a, rings_b) -> str:
 # DataFrame operator
 
 
-def spatial_predicates(
-    layer_a: DataFrame,
-    layer_b: DataFrame,
-    include_disjoint: bool = False,
-) -> DataFrame:
+def spatial_predicates(layer_a: DataFrame, layer_b: DataFrame) -> DataFrame:
     """Pairwise predicate classification between two polygon layers
     ((id_a, wkb_a) x (id_b, wkb_b)). Emits (id_a, id_b, predicate)
-    for non-disjoint candidate pairs. Candidates come from
-    ``overlay._candidates``, once per pair with inclusively
-    overlapping envelopes, so touching pairs reach the refine and
-    far-apart disjoint pairs never materialize."""
+    for every non-disjoint pair; disjoint pairs are never emitted.
+    Candidates come from ``overlay._candidates``, once per pair with
+    inclusively overlapping envelopes, so touching pairs reach the
+    refine and pairs with disjoint envelopes never materialize; the
+    refine drops the candidates it classifies as disjoint."""
     cand = _candidates(layer_a, layer_b).select("id_a", "wkb_a", "id_b", "wkb_b")
 
     def refine(batches):
@@ -225,9 +222,8 @@ def spatial_predicates(
                 ra = [_open_ring(r) for r in wkb.polygon_rings(bytes(wa))]
                 rb = [_open_ring(r) for r in wkb.polygon_rings(bytes(wc))]
                 pred = classify(ra, rb)
-                if pred == "disjoint" and not include_disjoint:
-                    continue
-                rows.append((id_a, id_b, pred))
+                if pred != "disjoint":
+                    rows.append((id_a, id_b, pred))
             yield pd.DataFrame(rows, columns=["id_a", "id_b", "predicate"])
 
     return cand.mapInPandas(

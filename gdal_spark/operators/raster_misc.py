@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs, synth
+from .stats import channel_checksums, checksum_sql
 
 PAN_OFFSET = 500_000
 W_BROVEY = 1.0 / 3.0
@@ -50,24 +51,13 @@ def pansharpen(images: DataFrame,
     """Per-image weighted-Brovey pansharpen against the synthetic pan
     companion (make_pixels(i + PAN_OFFSET) channel 0). Output:
     per-channel GDAL checksums of the sharpened image."""
-    from .stats import gdal_checksum
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload, i, w, h in zip(
-                pdf["image_id"], pdf["bytes"], pdf["i"], pdf["w"], pdf["h"]
-            ):
-                ms = codecs.decode_image(bytes(payload))
-                pan = codecs.make_pixels(int(i) + PAN_OFFSET, int(w), int(h))[:, :, 0]
-                out = pansharpen_brovey(ms, pan, weights)
-                for c in range(3):
-                    rows.append((image_id, c, gdal_checksum(out[:, :, c])))
-            yield pd.DataFrame(rows, columns=["image_id", "channel", "cks"])
+    def sharpen(payload, i, w, h):
+        ms = codecs.decode_image(bytes(payload))
+        pan = codecs.make_pixels(int(i) + PAN_OFFSET, int(w), int(h))[:, :, 0]
+        return pansharpen_brovey(ms, pan, weights)
 
-    return images.select("image_id", "i", "w", "h", "bytes").mapInPandas(
-        run, schema="image_id string, channel bigint, cks bigint"
-    )
+    return channel_checksums(images, ["bytes", "i", "w", "h"], sharpen)
 
 
 def oracle_pansharpen(n: int, max_i: int,
@@ -79,12 +69,7 @@ def oracle_pansharpen(n: int, max_i: int,
         .replace("i * 7", f"(i + {PAN_OFFSET}) * 7")
     )
     w0, w1, w2 = (synth.flit(float(x)) for x in weights)
-    prime = (
-        "(CASE ((y * w + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("oval", "y * w + x")
     return (
         f"WITH px AS (SELECT image_id, i, w, h, fmt, x, y, ch, val "
         f"FROM ({synth.pixels_cte(n, max_i, 'duckdb')})), "
@@ -104,7 +89,7 @@ def oracle_pansharpen(n: int, max_i: int,
         f"* (pan / pseudo), 0.0E0), 255.0E0) + 0.5E0) as bigint) END AS oval "
         f"FROM fac, range(0, 3) t(ch2)) "
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(oval % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM o GROUP BY 1, 2"
     )
 

@@ -32,9 +32,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .. import codecs, resample, srs, synth
+from .stats import channel_checksums, checksum_sql, gdal_checksum
 
 
 # shared dual-dialect SQL fragments (parse identically in Spark SQL
@@ -274,34 +275,20 @@ def _suggest_grid_ps(lon, lat, w, h, p, dst_w):
     return (minx, dres, 0.0, maxy, 0.0, -dres), h_eff, w_eff
 
 
-def _reproject_ps_iter(batches, epsg: int, dst_w: int, alg: str):
-    p = srs.PS_REGISTRY[epsg]
-    for pdf in batches:
-        rows = []
-        for image_id, payload, lon, lat, w, h in zip(
-            pdf["image_id"], pdf["bytes"], pdf["lon"], pdf["lat"],
-            pdf["w"], pdf["h"],
-        ):
-            arr = codecs.decode_image(bytes(payload))
-            lon, lat = float(lon), float(lat)
-            w, h = int(w), int(h)
-            res = 0.1 / w
-            src_gt = (lon, res, 0.0, lat, 0.0, -res)
-            dst_gt, dst_h, dst_w_eff = _suggest_grid_ps(
-                lon, lat, w, h, p, dst_w
-            )
+_WARP_COLS = ["bytes", "lon", "lat", "w", "h"]
 
-            def transform(gx, gy, p=p):
-                return srs.ps_inverse(gx, gy, p)
 
-            warped = resample.warp_image(
-                arr, src_gt, dst_gt, (dst_h, dst_w_eff), alg, transform
-            )
-            from .stats import gdal_checksum
-
-            for c in range(warped.shape[2]):
-                rows.append((image_id, c, gdal_checksum(warped[:, :, c])))
-        yield pd.DataFrame(rows, columns=["image_id", "channel", "cks"])
+def _warp_suggested(payload, lon, lat, w, h, alg, suggest, inverse):
+    """Decode one image and warp it from its 4326 grid onto the grid
+    ``suggest(lon, lat, w, h)`` returns; ``inverse(gx, gy)`` maps
+    destination coordinates back to lon/lat."""
+    lon, lat, w, h = float(lon), float(lat), int(w), int(h)
+    res = 0.1 / w
+    dst_gt, dst_h, dst_w_eff = suggest(lon, lat, w, h)
+    return resample.warp_image(
+        codecs.decode_image(bytes(payload)), (lon, res, 0.0, lat, 0.0, -res),
+        dst_gt, (dst_h, dst_w_eff), alg, inverse,
+    )
 
 
 def reproject_ps(
@@ -310,9 +297,13 @@ def reproject_ps(
 ) -> DataFrame:
     """Warp images onto a suggested polar-stereographic grid;
     per-channel GDAL checksums. One mapInPandas stage, zero shuffle."""
-    return images.select("image_id", "bytes", "lon", "lat", "w", "h").mapInPandas(
-        lambda it: _reproject_ps_iter(it, epsg, dst_w, alg),
-        schema="image_id string, channel bigint, cks bigint",
+    p = srs.PS_REGISTRY[epsg]
+    return channel_checksums(
+        images, _WARP_COLS,
+        lambda *row: _warp_suggested(
+            *row, alg, lambda *g: _suggest_grid_ps(*g, p, dst_w),
+            lambda gx, gy: srs.ps_inverse(gx, gy, p),
+        ),
     )
 
 
@@ -335,12 +326,7 @@ def oracle_reproject_ps(
         corner_parts.append(f"{n_sql} AS n_{suffix}")
     keep = "i, image_id, ilon, ilat, w, h, fmt, xd, yd, dw, dh"
     inv_cte = srs.ps_inverse_sql_cte("ec", "nc", p, "px2", keep)
-    prime = (
-        "(CASE ((yd * dw + xd) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("v", "yd * dw + xd")
     val = synth.pixel_val_sql()
     return f"""
 WITH img AS (SELECT i, image_id, lon AS ilon, lat AS ilat, lon, lat, w, h, fmt
@@ -374,7 +360,7 @@ vals AS (SELECT image_id, xd, yd, dw, ch,
                THEN {val} ELSE 0 END) AS v
          FROM sxy, range(0, 3) c(ch))
 SELECT image_id, ch AS channel,
-       cast(sum(v % {prime}) % 65536 as bigint) AS cks
+       {cks_sql} AS cks
 FROM vals GROUP BY 1, 2
 """
 
@@ -446,26 +432,19 @@ def _reproject_utm_iter(batches, dst_w: int, alg: str):
             pdf["image_id"], pdf["bytes"], pdf["lon"], pdf["lat"],
             pdf["w"], pdf["h"],
         ):
-            arr = codecs.decode_image(bytes(payload))
-            lon, lat = float(lon), float(lat)
-            w, h = int(w), int(h)
             zone = int(srs.utm_zone(np.array([lon]), np.array([lat]))[0])
             lon0 = zone * 6.0 - 183.0
             fn = srs.FN_SOUTH if lat < 0.0 else 0.0
-            res = 0.1 / w
-            src_gt = (lon, res, 0.0, lat, 0.0, -res)
-            dst_gt, dst_h, dst_w_eff = _suggest_grid(
-                lon, lat, w, h, lon0, fn, dst_w
-            )
+
+            def suggest(*g, lon0=lon0, fn=fn):
+                return _suggest_grid(*g, lon0, fn, dst_w)
 
             def transform(gx, gy, lon0=lon0, fn=fn):
                 return srs.tm_inverse(gx, np.asarray(gy) - fn, lon0)
 
-            warped = resample.warp_image(
-                arr, src_gt, dst_gt, (dst_h, dst_w_eff), alg, transform
+            warped = _warp_suggested(
+                payload, lon, lat, w, h, alg, suggest, transform
             )
-            from .stats import gdal_checksum
-
             for c in range(warped.shape[2]):
                 rows.append(
                     (image_id, zone, c, gdal_checksum(warped[:, :, c]))
@@ -482,11 +461,10 @@ def reproject_utm(
     its own zone; per-channel GDAL checksums of the result. One
     mapInPandas stage, zero shuffle — embarrassingly parallel at any
     table size."""
-    out = images.select("image_id", "bytes", "lon", "lat", "w", "h").mapInPandas(
+    return images.select("image_id", *_WARP_COLS).mapInPandas(
         lambda it: _reproject_utm_iter(it, dst_w, alg),
         schema="image_id string, zone bigint, channel bigint, cks bigint",
     )
-    return out
 
 
 def oracle_reproject_utm(n: int, max_i: int, dst_w: int = DST_W) -> str:
@@ -499,12 +477,7 @@ def oracle_reproject_utm(n: int, max_i: int, dst_w: int = DST_W) -> str:
         corner_parts.append(f"{n_sql} AS n_{suffix}")
     keep = "i, image_id, ilon, ilat, w, h, fmt, zone, fn, xd, yd, dw, dh"
     inv_cte = srs.tm_inverse_sql_cte("ec", "nc - fn", "lon0", "px2", keep)
-    prime = (
-        "(CASE ((yd * dw + xd) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("v", "yd * dw + xd")
     val = synth.pixel_val_sql()
     return f"""
 WITH img AS (SELECT i, image_id, lon AS ilon, lat AS ilat, w, h, fmt
@@ -543,7 +516,7 @@ vals AS (SELECT image_id, zone, xd, yd, dw, ch,
                THEN {val} ELSE 0 END) AS v
          FROM sxy, range(0, 3) c(ch))
 SELECT image_id, zone, ch AS channel,
-       cast(sum(v % {prime}) % 65536 as bigint) AS cks
+       {cks_sql} AS cks
 FROM vals GROUP BY 1, 2, 3
 """
 
@@ -570,47 +543,20 @@ def _suggest_grid_lcc(lon, lat, w, h, p, dst_w=DST_W):
     return (minx, dres, 0.0, maxy, 0.0, -dres), h_eff, w_eff
 
 
-def _reproject_lcc_iter(batches, epsg: int, dst_w: int, alg: str):
-    p = srs.LCC_REGISTRY[epsg]
-    for pdf in batches:
-        rows = []
-        for image_id, payload, lon, lat, w, h in zip(
-            pdf["image_id"], pdf["bytes"], pdf["lon"], pdf["lat"],
-            pdf["w"], pdf["h"],
-        ):
-            arr = codecs.decode_image(bytes(payload))
-            lon, lat = float(lon), float(lat)
-            w, h = int(w), int(h)
-            res = 0.1 / w
-            src_gt = (lon, res, 0.0, lat, 0.0, -res)
-            dst_gt, dst_h, dst_w_eff = _suggest_grid_lcc(
-                lon, lat, w, h, p, dst_w
-            )
-
-            def transform(gx, gy, p=p):
-                return srs.lcc_inverse(gx, gy, p)
-
-            warped = resample.warp_image(
-                arr, src_gt, dst_gt, (dst_h, dst_w_eff), alg, transform
-            )
-            from .stats import gdal_checksum
-
-            for c in range(warped.shape[2]):
-                rows.append((image_id, c, gdal_checksum(warped[:, :, c])))
-        yield pd.DataFrame(rows, columns=["image_id", "channel", "cks"])
-
-
 def reproject_lcc(
     images: DataFrame, epsg: int = 2154, dst_w: int = DST_W,
     alg: str = "near",
 ) -> DataFrame:
     """Warp images onto a suggested Lambert-Conformal-Conic grid;
     per-channel GDAL checksums. One mapInPandas stage, zero shuffle."""
-    out = images.select("image_id", "bytes", "lon", "lat", "w", "h").mapInPandas(
-        lambda it: _reproject_lcc_iter(it, epsg, dst_w, alg),
-        schema="image_id string, channel bigint, cks bigint",
+    p = srs.LCC_REGISTRY[epsg]
+    return channel_checksums(
+        images, _WARP_COLS,
+        lambda *row: _warp_suggested(
+            *row, alg, lambda *g: _suggest_grid_lcc(*g, p, dst_w),
+            lambda gx, gy: srs.lcc_inverse(gx, gy, p),
+        ),
     )
-    return out
 
 
 def oracle_reproject_lcc(
@@ -633,12 +579,7 @@ def oracle_reproject_lcc(
         corner_parts.append(f"{n_sql} AS n_{suffix}")
     keep = "i, image_id, ilon, ilat, w, h, fmt, xd, yd, dw, dh"
     inv_cte = srs.lcc_inverse_sql_cte("ec", "nc", p, "px2", keep)
-    prime = (
-        "(CASE ((yd * dw + xd) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("v", "yd * dw + xd")
     val = synth.pixel_val_sql()
     return f"""
 WITH img AS (SELECT i, image_id, lon AS ilon, lat AS ilat, lon, lat, w, h, fmt
@@ -672,7 +613,7 @@ vals AS (SELECT image_id, xd, yd, dw, ch,
                THEN {val} ELSE 0 END) AS v
          FROM sxy, range(0, 3) c(ch))
 SELECT image_id, ch AS channel,
-       cast(sum(v % {prime}) % 65536 as bigint) AS cks
+       {cks_sql} AS cks
 FROM vals GROUP BY 1, 2
 """
 
@@ -808,36 +749,6 @@ def _suggest_grid_sinu(lon, lat, w, h, p, dst_w):
     return (minx, dres, 0.0, maxy, 0.0, -dres), h_eff, w_eff
 
 
-def _reproject_sinu_iter(batches, key: int, dst_w: int, alg: str):
-    p = srs.SINU_REGISTRY[key]
-    for pdf in batches:
-        rows = []
-        for image_id, payload, lon, lat, w, h in zip(
-            pdf["image_id"], pdf["bytes"], pdf["lon"], pdf["lat"],
-            pdf["w"], pdf["h"],
-        ):
-            arr = codecs.decode_image(bytes(payload))
-            lon, lat = float(lon), float(lat)
-            w, h = int(w), int(h)
-            res = 0.1 / w
-            src_gt = (lon, res, 0.0, lat, 0.0, -res)
-            dst_gt, dst_h, dst_w_eff = _suggest_grid_sinu(
-                lon, lat, w, h, p, dst_w
-            )
-
-            def transform(gx, gy, p=p):
-                return srs.sinu_inverse(gx, gy, p)
-
-            warped = resample.warp_image(
-                arr, src_gt, dst_gt, (dst_h, dst_w_eff), alg, transform
-            )
-            from .stats import gdal_checksum
-
-            for c in range(warped.shape[2]):
-                rows.append((image_id, c, gdal_checksum(warped[:, :, c])))
-        yield pd.DataFrame(rows, columns=["image_id", "channel", "cks"])
-
-
 def reproject_sinu(
     images: DataFrame, key: int = 54008, dst_w: int = DST_W,
     alg: str = "near",
@@ -845,11 +756,13 @@ def reproject_sinu(
     """Warp images onto a suggested sinusoidal (MODIS-family) grid;
     per-channel GDAL checksums. One mapInPandas stage, zero shuffle —
     the fifth full pixel-warp projection family."""
-    return images.select(
-        "image_id", "bytes", "lon", "lat", "w", "h"
-    ).mapInPandas(
-        lambda it: _reproject_sinu_iter(it, key, dst_w, alg),
-        schema="image_id string, channel bigint, cks bigint",
+    p = srs.SINU_REGISTRY[key]
+    return channel_checksums(
+        images, _WARP_COLS,
+        lambda *row: _warp_suggested(
+            *row, alg, lambda *g: _suggest_grid_sinu(*g, p, dst_w),
+            lambda gx, gy: srs.sinu_inverse(gx, gy, p),
+        ),
     )
 
 
@@ -872,12 +785,7 @@ def oracle_reproject_sinu(
         corner_parts.append(f"{n_sql} AS n_{suffix}")
     keep = "i, image_id, ilon, ilat, w, h, fmt, xd, yd, dw, dh"
     inv_cte = srs.sinu_inverse_sql_cte("ec", "nc", p, "px2", keep)
-    prime = (
-        "(CASE ((yd * dw + xd) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("v", "yd * dw + xd")
     val = synth.pixel_val_sql()
     return f"""
 WITH img AS (SELECT i, image_id, lon AS ilon, lat AS ilat, lon, lat, w, h, fmt
@@ -911,7 +819,7 @@ vals AS (SELECT image_id, xd, yd, dw, ch,
                THEN {val} ELSE 0 END) AS v
          FROM sxy, range(0, 3) c(ch))
 SELECT image_id, ch AS channel,
-       cast(sum(v % {prime}) % 65536 as bigint) AS cks
+       {cks_sql} AS cks
 FROM vals GROUP BY 1, 2
 """
 

@@ -40,9 +40,45 @@ def gdal_checksum(arr: np.ndarray) -> int:
         iv = a.astype(np.int64)
     flat = iv.reshape(-1)
     primes = CHECKSUM_PRIMES[np.arange(flat.size) % 11]
-    # C truncated modulo (negative values round toward zero)
-    rem = np.sign(flat) * (np.abs(flat) % primes)
-    return int(rem.sum() % 65536)
+    # fmod is C's truncated modulo (the remainder keeps val's sign)
+    return int(np.fmod(flat, primes).sum() % 65536)
+
+
+def checksum_sql(val: str, pos: str) -> str:
+    """``gdal_checksum`` as one SQL aggregate, valid in Spark and DuckDB:
+    ``val`` is the integer pixel expression, ``pos`` its row-major index
+    ``y * w + x`` in the band. The caller groups by band. ``val`` must be
+    non-negative (Byte pixels are): SQL's ``%`` truncates, so a negative
+    sum would not wrap into [0, 65536) the way GDAL's ``& 0xffff`` does."""
+    whens = " ".join(
+        f"WHEN {j} THEN {p}" for j, p in enumerate(CHECKSUM_PRIMES[:-1])
+    )
+    return (
+        f"cast(sum({val} % (CASE (({pos}) % 11) {whens} "
+        f"ELSE {CHECKSUM_PRIMES[-1]} END)) % 65536 as bigint)"
+    )
+
+
+def channel_checksums(df: DataFrame, cols, fn) -> DataFrame:
+    """One ``(image_id, channel, cks)`` row per channel of ``fn(*row)``:
+    a mapInPandas over ``image_id`` + ``cols`` where ``fn`` takes one
+    row's ``cols`` values and returns an H x W x C array."""
+
+    def run(batches):
+        for pdf in batches:
+            ids, chans, cks = [], [], []
+            rows = zip(pdf["image_id"], *(pdf[c] for c in cols))
+            for image_id, *vals in rows:
+                out = fn(*vals)
+                for ch in range(out.shape[2]):
+                    ids.append(image_id)
+                    chans.append(ch)
+                    cks.append(gdal_checksum(out[:, :, ch]))
+            yield pd.DataFrame({"image_id": ids, "channel": chans, "cks": cks})
+
+    return df.select("image_id", *cols).mapInPandas(
+        run, schema="image_id string, channel bigint, cks bigint"
+    )
 
 
 def _decode_iter(batches, fn, columns):
@@ -263,7 +299,6 @@ def oracle_mask_band(n: int, max_i: int, nodata=(0, 0, 0)) -> str:
     from .. import synth as _s
 
     nd = ", ".join(str(v) for v in nodata)
-    primes = "[7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43]"
     return (
         f"WITH px AS MATERIALIZED (SELECT image_id, w, x, y, ch, val "
         f"FROM ({_s.pixels_cte(n, max_i, 'duckdb')})), "
@@ -274,8 +309,7 @@ def oracle_mask_band(n: int, max_i: int, nodata=(0, 0, 0)) -> str:
         f"SELECT image_id, "
         f"cast(sum(CASE WHEN mv = 255 THEN 1 ELSE 0 END) as bigint) "
         f"AS n_valid, "
-        f"cast(sum(mv % ({primes})[(y * w + x) % 11 + 1]) % 65536 "
-        f"as bigint) AS mask_cks "
+        f"{checksum_sql('mv', 'y * w + x')} AS mask_cks "
         f"FROM m GROUP BY 1"
     )
 

@@ -34,9 +34,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs, grid, synth
 from ..synth import flit
+from .stats import checksum_sql, gdal_checksum
 
 TILE_PX = 64
-CKS_PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43], dtype=np.int64)
 
 
 # ---------------------------------------------------------------------------
@@ -87,12 +87,6 @@ def _tile_lonlat_grids(tx: int, ty: int, zoom: int, tile_px: int):
     latd = my / grid.ORIGIN_SHIFT * 180.0
     lat = 180.0 / np.pi * (2.0 * np.arctan(np.exp(latd * np.pi / 180.0)) - np.pi / 2.0)
     return lon, lat
-
-
-def tile_checksum(band: np.ndarray) -> int:
-    flat = band.astype(np.int64).ravel()
-    primes = CKS_PRIMES[np.arange(flat.size) % 11]
-    return int((flat % primes).sum() % 65536)
 
 
 def render_base_tiles(
@@ -151,9 +145,9 @@ def render_base_tiles(
                 "ty": [ty],
                 "bytes": [codecs.encode_image(buf, "png")],
                 "n_painted": [n],
-                "cks_0": [tile_checksum(buf[:, :, 0])],
-                "cks_1": [tile_checksum(buf[:, :, 1])],
-                "cks_2": [tile_checksum(buf[:, :, 2])],
+                "cks_0": [gdal_checksum(buf[:, :, 0])],
+                "cks_1": [gdal_checksum(buf[:, :, 1])],
+                "cks_2": [gdal_checksum(buf[:, :, 2])],
             }
         )
 
@@ -212,9 +206,9 @@ def overview_tiles(
                 "ty": [pty],
                 "bytes": [codecs.encode_image(buf, "png")],
                 "n_painted": [int(pdf["n_painted"].sum())],
-                "cks_0": [tile_checksum(buf[:, :, 0])],
-                "cks_1": [tile_checksum(buf[:, :, 1])],
-                "cks_2": [tile_checksum(buf[:, :, 2])],
+                "cks_0": [gdal_checksum(buf[:, :, 0])],
+                "cks_1": [gdal_checksum(buf[:, :, 1])],
+                "cks_2": [gdal_checksum(buf[:, :, 2])],
             }
         )
 
@@ -332,9 +326,9 @@ def overview_gauss(
                 "ty": [pty],
                 "bytes": [codecs.encode_image(buf, "png")],
                 "n_painted": [int(main["n_painted"].sum())],
-                "cks_0": [tile_checksum(buf[:, :, 0])],
-                "cks_1": [tile_checksum(buf[:, :, 1])],
-                "cks_2": [tile_checksum(buf[:, :, 2])],
+                "cks_0": [gdal_checksum(buf[:, :, 0])],
+                "cks_1": [gdal_checksum(buf[:, :, 1])],
+                "cks_2": [gdal_checksum(buf[:, :, 2])],
             }
         )
 
@@ -386,16 +380,11 @@ def oracle_tile_render(
     mercator math, same nearest floor(+1e-10) sampling, last-wins by
     max image index."""
     eps = "0.0000000001E0"
-    prime = (
-        f"(CASE ((oy * {tile_px} + ox) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("val", f"oy * {tile_px} + ox")
     return (
         f"WITH {_render_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1, tile_px)} "
         f"SELECT tx, ty, cast(ch as bigint) AS channel, "
-        f"cast(sum(val % {prime}) % 65536 as bigint) AS cks, "
+        f"{cks_sql} AS cks, "
         f"count(*) AS n_painted FROM vals GROUP BY 1, 2, 3"
     )
 
@@ -439,12 +428,7 @@ def oracle_overview_resamplers(
     (dst center (x+0.5)*2 floored), max/min fold the 2x2 block
     (missing children = 0, matching the zero-filled composition)."""
     t = tile_px
-    prime = (
-        f"(CASE ((y * {t} + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("val", f"y * {t} + x")
     per_alg = {
         "near": "sum(CASE WHEN dx = 1 AND dy = 1 "
                 "THEN coalesce(val, 0) ELSE 0 END)",
@@ -470,7 +454,7 @@ def oracle_overview_resamplers(
         f"AND v.ox = q.cx AND v.oy = q.cy AND v.ch = q.ch), "
         f"reduced AS ({alg_rows}) "
         f"SELECT ptx AS tx, pty AS ty, alg, cast(ch as bigint) AS channel, "
-        f"cast(sum(val % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM reduced GROUP BY 1, 2, 3, 4"
     )
 
@@ -483,12 +467,7 @@ def oracle_overview_gauss(
     integer round-half-up (2*total + wsum) // (2*wsum) — see
     overview_gauss for why the float32 path collapses to this."""
     t = tile_px
-    prime = (
-        f"(CASE ((y * {t} + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("val", f"y * {t} + x")
     wx = "(CASE dx WHEN 1 THEN 2 ELSE 1 END)"
     wy = "(CASE dy WHEN 1 THEN 2 ELSE 1 END)"
     return (
@@ -509,7 +488,7 @@ def oracle_overview_gauss(
         f"(2 * sum(wgt * coalesce(val, 0)) + sum(wgt)) // (2 * sum(wgt)) "
         f"AS val FROM quad3 GROUP BY ptx, pty, x, y, ch) "
         f"SELECT ptx AS tx, pty AS ty, cast(ch as bigint) AS channel, "
-        f"cast(sum(val % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM reduced GROUP BY 1, 2, 3"
     )
 
@@ -521,12 +500,7 @@ def oracle_tile_overview(
     the 2x2 children (TMS y-up: cy-high half is the image top), box
     average with (sum+2)//4, checksum per parent tile/channel."""
     t = tile_px
-    prime = (
-        f"(CASE ((y * {t} + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("v.val", f"y * {t} + x")
     return (
         f"WITH {_render_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1, tile_px)}, "
         f"parents AS (SELECT DISTINCT tx // 2 AS ptx, ty // 2 AS pty FROM vals), "
@@ -544,7 +518,7 @@ def oracle_tile_overview(
         f"npaint AS (SELECT tx // 2 AS ptx, ty // 2 AS pty, ch, "
         f"count(*) AS np FROM vals GROUP BY 1, 2, 3) "
         f"SELECT v.ptx AS tx, v.pty AS ty, cast(v.ch as bigint) AS channel, "
-        f"cast(sum(v.val % {prime}) % 65536 as bigint) AS cks, "
+        f"{cks_sql} AS cks, "
         f"min(npaint.np) AS n_painted "
         f"FROM val9 v JOIN npaint ON npaint.ptx = v.ptx AND npaint.pty = v.pty "
         f"AND npaint.ch = v.ch GROUP BY 1, 2, 3"
@@ -628,9 +602,9 @@ def retile(
         return pd.DataFrame(
             {
                 "tx": [tx], "ty": [ty], "n_painted": [n],
-                "cks_0": [tile_checksum(buf[:, :, 0])],
-                "cks_1": [tile_checksum(buf[:, :, 1])],
-                "cks_2": [tile_checksum(buf[:, :, 2])],
+                "cks_0": [gdal_checksum(buf[:, :, 0])],
+                "cks_1": [gdal_checksum(buf[:, :, 1])],
+                "cks_2": [gdal_checksum(buf[:, :, 2])],
             }
         )
 
@@ -650,12 +624,7 @@ def oracle_retile(
     function; tiles with zero painted pixels are absent."""
     t = tile_px
     fx0, fy0, fr = flit(x0), flit(y0), flit(res)
-    prime = (
-        f"(CASE ((y2 * {t} + x2) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("a.v", f"y2 * {t} + x2")
     return f"""
 WITH img AS MATERIALIZED (SELECT i, lon, lat, w, h, fmt, 0.1E0 / w AS r
       FROM ({synth.images_cte(n, 'duckdb')})
@@ -686,7 +655,7 @@ allpx AS (SELECT pxc.tx, pxc.ty, pxc.x2, pxc.y2, pxc.ch,
           AND v.x2 = pxc.x2 AND v.y2 = pxc.y2 AND v.ch = pxc.ch)
 SELECT a.tx, a.ty, min(np.n_painted) AS n_painted,
        cast(a.ch as bigint) AS channel,
-       cast(sum(a.v % {prime}) % 65536 as bigint) AS cks
+       {cks_sql} AS cks
 FROM allpx a JOIN np ON np.tx = a.tx AND np.ty = a.ty
 GROUP BY 1, 2, 4
 """
@@ -753,9 +722,9 @@ def render_feather_tiles(
         return pd.DataFrame(
             {
                 "tx": [tx], "ty": [ty], "n_painted": [n],
-                "cks_0": [tile_checksum(out[:, :, 0])],
-                "cks_1": [tile_checksum(out[:, :, 1])],
-                "cks_2": [tile_checksum(out[:, :, 2])],
+                "cks_0": [gdal_checksum(out[:, :, 0])],
+                "cks_1": [gdal_checksum(out[:, :, 1])],
+                "cks_2": [gdal_checksum(out[:, :, 2])],
             }
         )
 
@@ -773,12 +742,7 @@ def oracle_feather_render(
     QUALIFY of oracle_tile_render replaced by the wd-weighted sum +
     one floor division)."""
     eps = "0.0000000001E0"
-    prime = (
-        f"(CASE ((oy * {tile_px} + ox) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("v", f"oy * {tile_px} + ox")
     return (
         f"WITH img AS (SELECT * FROM ({synth.images_cte(n, 'duckdb')}) "
         f"WHERE i % 4 = 0 AND i < {max_i}), "
@@ -803,6 +767,6 @@ def oracle_feather_render(
         f"cast(sum(wd * val) as bigint) // cast(sum(wd) as bigint) AS v "
         f"FROM v GROUP BY 1, 2, 3, 4, 5) "
         f"SELECT tx, ty, cast(ch as bigint) AS channel, "
-        f"cast(sum(v % {prime}) % 65536 as bigint) AS cks, "
+        f"{cks_sql} AS cks, "
         f"count(*) AS n_painted FROM o GROUP BY 1, 2, 3"
     )

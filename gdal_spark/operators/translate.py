@@ -28,7 +28,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs, synth
-from .stats import gdal_checksum
+from .stats import (
+    CHECKSUM_PRIMES, channel_checksums, checksum_sql, gdal_checksum,
+)
 
 SAFE_FUNCS = {
     "abs": np.abs, "minimum": np.minimum, "maximum": np.maximum,
@@ -85,17 +87,14 @@ def oracle_translate(
         f"* ({fl(d1)} - {fl(d0)}) / ({fl(s1)} - {fl(s0)}) + {fl(d0)}, "
         f"0.0E0), 255.0E0) + 0.5E0) as bigint)"
     )
-    prime = (
-        f"(CASE (((y - {y0}) * least(w - {x0}, {cw}) + (x - {x0})) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
+    cks_sql = checksum_sql(
+        scaled, f"(y - {y0}) * least(w - {x0}, {cw}) + (x - {x0})"
     )
     return (
         f"WITH px AS (SELECT * FROM ({synth.pixels_cte(n, max_i, 'duckdb')}) "
         f"WHERE x >= {x0} AND x < {x0} + {cw} AND y >= {y0} AND y < {y0} + {chh}) "
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum({scaled} % {prime}) % 65536 as bigint) AS cks, "
+        f"{cks_sql} AS cks, "
         f"least(min(w) - {x0}, {cw}) AS out_w, "
         f"least(min(h) - {y0}, {chh}) AS out_h "
         f"FROM px GROUP BY 1, 2"
@@ -169,18 +168,13 @@ def oracle_calc_halfsum(n: int, max_i: int) -> str:
         f"cast(floor(least(greatest(({ch(0)} + {ch(1)}) / 2.0E0 "
         f"+ {ch(2)} / 4.0E0, 0.0E0), 255.0E0) + 0.5E0) as bigint)"
     )
-    prime = (
-        "(CASE ((y * w + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql(formula, "y * w + x")
     return (
         f"WITH g AS (SELECT image_id, i.i AS i, w, h, fmt, x, y "
         f"FROM ({synth.images_cte(n, 'duckdb')}) i, "
         f"range(0, 256) a(x), range(0, 256) b(y) "
         f"WHERE i.i < {max_i} AND x < i.w AND y < i.h) "
-        f"SELECT image_id, cast(sum({formula} % {prime}) % 65536 as bigint) "
+        f"SELECT image_id, {cks_sql} "
         f"AS cks FROM g GROUP BY 1"
     )
 
@@ -250,12 +244,7 @@ def oracle_translate_projwin(
         f"cast(floor(({fl(uly)} - {fl(lry)}) / (0.1E0 / w) + 0.5E0) as bigint) AS chh "
         f"FROM ({synth.images_cte(n, 'duckdb')}) WHERE i < {max_i}"
     )
-    prime = (
-        "(CASE (((y - ys) * (xe - xs) + (x - xs)) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+    cks_sql = checksum_sql("val", "(y - ys) * (xe - xs) + (x - xs)")
     return (
         f"WITH win AS MATERIALIZED (SELECT image_id, w, h, "
         f"greatest(x0, 0) AS xs, greatest(y0, 0) AS ys, "
@@ -268,7 +257,7 @@ def oracle_translate_projwin(
         f"AND p.x >= win.xs AND p.x < win.xe "
         f"AND p.y >= win.ys AND p.y < win.ye) "
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(val % {prime}) % 65536 as bigint) AS cks, "
+        f"{cks_sql} AS cks, "
         f"cast(min(xe - xs) as bigint) AS out_w, "
         f"cast(min(ye - ys) as bigint) AS out_h "
         f"FROM px GROUP BY 1, 2"
@@ -292,39 +281,24 @@ def calc_two(images: DataFrame, offset: int = 5) -> DataFrame:
     b = images.selectExpr(f"i - {offset} AS i", "bytes AS bytes_b")
     pair = a.join(b, "i")
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, pa, pb in zip(
-                pdf["image_id"], pdf["bytes_a"], pdf["bytes_b"]
-            ):
-                arr_a = codecs.decode_image(bytes(pa)).astype(np.float64)
-                arr_b = codecs.decode_image(bytes(pb)).astype(np.float64)
-                out = np.floor(
-                    np.clip((arr_a + arr_b) / 2.0, 0.0, 255.0) + 0.5
-                ).astype(np.uint8)
-                for c in range(out.shape[2]):
-                    rows.append((image_id, c, gdal_checksum(out[:, :, c])))
-            yield pd.DataFrame(rows, columns=["image_id", "channel", "cks"])
+    def half_sum(pa, pb):
+        arr_a = codecs.decode_image(bytes(pa)).astype(np.float64)
+        arr_b = codecs.decode_image(bytes(pb)).astype(np.float64)
+        return np.floor(
+            np.clip((arr_a + arr_b) / 2.0, 0.0, 255.0) + 0.5
+        ).astype(np.uint8)
 
-    return pair.select("image_id", "bytes_a", "bytes_b").mapInPandas(
-        run, schema="image_id string, channel bigint, cks bigint"
-    )
+    return channel_checksums(pair, ["bytes_a", "bytes_b"], half_sum)
 
 
 def oracle_calc_two(n: int, max_i: int, offset: int = 5) -> str:
     """Two pixel tables joined on (pair key, x, y, ch) — the SQL
     twin of the raster-raster join — then the same clamp-round."""
-    prime = (
-        "(CASE ((y * w + x) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
     formula = (
         "cast(floor(least(greatest((cast(va as double) + cast(vb as double)) "
         "/ 2.0E0, 0.0E0), 255.0E0) + 0.5E0) as bigint)"
     )
+    cks_sql = checksum_sql(formula, "y * w + x")
     return (
         f"WITH pa AS MATERIALIZED (SELECT image_id, i, w, h, x, y, ch, "
         f"val AS va FROM ({synth.pixels_cte(n, max_i, 'duckdb')})), "
@@ -335,7 +309,7 @@ def oracle_calc_two(n: int, max_i: int, offset: int = 5) -> str:
         f"FROM pa JOIN pb ON pb.i = pa.i AND pb.x = pa.x AND pb.y = pa.y "
         f"AND pb.ch = pa.ch) "
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum({formula} % {prime}) % 65536 as bigint) AS cks "
+        f"{cks_sql} AS cks "
         f"FROM j GROUP BY 1, 2"
     )
 
@@ -532,7 +506,9 @@ def oracle_pixel_functions(n: int, max_i: int) -> str:
 # map-side-combined aggregate. At a 10^6-row raster this is h*11*b
 # tiny rows, no pixel bytes ever shuffled.
 
-CREATE_PRIMES = (7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43)
+_JRES_PRIME_CASE = "CASE " + " ".join(
+    f"WHEN jres = {j} THEN {p}" for j, p in enumerate(CHECKSUM_PRIMES)
+) + " END"
 
 
 def gdal_create(
@@ -544,9 +520,6 @@ def gdal_create(
     bands = len(burn)
     burn_case = "CASE " + " ".join(
         f"WHEN band = {i} THEN {v}" for i, v in enumerate(burn)
-    ) + " END"
-    prime_case = "CASE " + " ".join(
-        f"WHEN jres = {j} THEN {p}" for j, p in enumerate(CREATE_PRIMES)
     ) + " END"
     # pixels in row y with (y*w + x) % 11 == jres, x in [0, w):
     # full cycles + the partial cycle's hit
@@ -562,7 +535,7 @@ def gdal_create(
         .selectExpr("band", "y", "explode(sequence(0, 10)) AS jres")
         .selectExpr(
             "band",
-            f"({burn_case}) % ({prime_case}) * {cnt} AS contrib",
+            f"({burn_case}) % ({_JRES_PRIME_CASE}) * {cnt} AS contrib",
         )
     )
     agg = rows.groupBy("band").agg(
@@ -585,9 +558,6 @@ def oracle_gdal_create(
     burn_case = "CASE " + " ".join(
         f"WHEN band = {i} THEN {v}" for i, v in enumerate(burn)
     ) + " END"
-    prime_case = "CASE " + " ".join(
-        f"WHEN jres = {j} THEN {p}" for j, p in enumerate(CREATE_PRIMES)
-    ) + " END"
     cnt = (
         f"(cast({w} // 11 as bigint) + CASE WHEN "
         f"(jres - (cast(y as bigint) * {w}) % 11 + 11) % 11 < {w} % 11 "
@@ -595,7 +565,7 @@ def oracle_gdal_create(
     )
     return (
         f"WITH rows_ AS (SELECT cast(b as int) AS band, y, jres, "
-        f"({burn_case}) % ({prime_case}) * {cnt} AS contrib "
+        f"({burn_case}) % ({_JRES_PRIME_CASE}) * {cnt} AS contrib "
         f"FROM range(0, {bands}) tb(b), range(0, {h}) ty(y), "
         f"range(0, 11) tj(jres)), "
         f"agg AS (SELECT band, cast(sum(contrib) % 65536 as bigint) "

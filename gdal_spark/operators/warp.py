@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import codecs, grid, resample
+from .stats import checksum_sql
 
 
 def _scaled_warp_iter(batches, factor: float, alg: str, nodata=None):
@@ -92,7 +93,7 @@ def oracle_warp_nodata_avg_down2(n: int, max_i: int, nodata: int = 0) -> str:
     )
     return (
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum({val} % {_cks_prime('yd * (w // 2) + xd')}) % 65536 as bigint) "
+        f"{checksum_sql(val, 'yd * (w // 2) + xd')} "
         f"AS cks FROM ({mid}) GROUP BY 1, 2"
     )
 
@@ -211,10 +212,10 @@ def oracle_warp_cutline(
         f"range(0, 512) tx(xd), range(0, 512) ty(yd), range(0, 3) tc(ch) "
         f"WHERE i.i < {max_i} AND xd < 2 * i.w AND yd < 2 * i.h"
     )
+    val = f"(CASE WHEN inside THEN {synth.pixel_val_sql()} ELSE 0 END)"
     return (
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum((CASE WHEN inside THEN {synth.pixel_val_sql()} ELSE 0 END) "
-        f"% {_cks_prime('yd * (2 * w) + xd')}) % 65536 as bigint) "
+        f"{checksum_sql(val, 'yd * (2 * w) + xd')} "
         f"AS cks FROM ({inner}) GROUP BY 1, 2"
     )
 
@@ -227,13 +228,11 @@ def oracle_warp_cutline(
 # down-2x: round-half-up mean of the 2x2 block = (sum + 2) // 4).
 
 
-def _cks_prime(pos: str) -> str:
-    return (
-        f"(CASE (({pos}) % 11) "
-        "WHEN 0 THEN 7 WHEN 1 THEN 11 WHEN 2 THEN 13 WHEN 3 THEN 17 "
-        "WHEN 4 THEN 19 WHEN 5 THEN 23 WHEN 6 THEN 29 WHEN 7 THEN 31 "
-        "WHEN 8 THEN 37 WHEN 9 THEN 41 ELSE 43 END)"
-    )
+# the accumulated kernel value clamped and rounded to a Byte pixel
+_ACC_CLAMP_ROUND = (
+    "cast(floor(least(greatest(acc / accw, 0.0E0), 255.0E0) + 0.5E0) "
+    "as bigint)"
+)
 
 
 def oracle_warp_near_up2(n: int, max_i: int) -> str:
@@ -249,7 +248,7 @@ def oracle_warp_near_up2(n: int, max_i: int) -> str:
     )
     return (
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(val % {_cks_prime('yd * (2 * w) + xd')}) % 65536 as bigint) "
+        f"{checksum_sql('val', 'yd * (2 * w) + xd')} "
         f"AS cks FROM (SELECT image_id, ch, xd, yd, w, "
         f"{synth.pixel_val_sql()} AS val FROM ({inner})) GROUP BY 1, 2"
     )
@@ -273,7 +272,7 @@ def oracle_warp_avg_down2(n: int, max_i: int) -> str:
     )
     return (
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(val % {_cks_prime('yd * (w // 2) + xd')}) % 65536 as bigint) "
+        f"{checksum_sql('val', 'yd * (w // 2) + xd')} "
         f"AS cks FROM ({mid}) GROUP BY 1, 2"
     )
 
@@ -323,10 +322,10 @@ def oracle_warp_bilinear_up2(n: int, max_i: int) -> str:
         f"sum(wgt) AS accw "
         f"FROM ({taps}) GROUP BY 1, 2, 3, 4"
     )
+    rounded = "cast(floor(acc / accw + 0.5E0) as bigint)"
     return (
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(cast(floor(acc / accw + 0.5E0) as bigint) "
-        f"% {_cks_prime('yd * (2 * w) + xd')}) % 65536 as bigint) AS cks "
+        f"{checksum_sql(rounded, 'yd * (2 * w) + xd')} AS cks "
         f"FROM ({acc}) GROUP BY 1, 2"
     )
 
@@ -383,9 +382,7 @@ def oracle_warp_cubic_up2(n: int, max_i: int) -> str:
     )
     return (
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(cast(floor(least(greatest(acc / accw, 0.0E0), 255.0E0) "
-        f"+ 0.5E0) as bigint) "
-        f"% {_cks_prime('yd * (2 * w) + xd')}) % 65536 as bigint) AS cks "
+        f"{checksum_sql(_ACC_CLAMP_ROUND, 'yd * (2 * w) + xd')} AS cks "
         f"FROM ({acc}) GROUP BY 1, 2"
     )
 
@@ -435,9 +432,7 @@ def oracle_warp_cubicspline_up2(n: int, max_i: int) -> str:
     )
     return (
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(cast(floor(least(greatest(acc / accw, 0.0E0), 255.0E0) "
-        f"+ 0.5E0) as bigint) "
-        f"% {_cks_prime('yd * (2 * w) + xd')}) % 65536 as bigint) AS cks "
+        f"{checksum_sql(_ACC_CLAMP_ROUND, 'yd * (2 * w) + xd')} AS cks "
         f"FROM ({acc}) GROUP BY 1, 2"
     )
 
@@ -483,9 +478,7 @@ def oracle_warp_lanczos_up2(n: int, max_i: int) -> str:
     )
     return (
         f"SELECT image_id, cast(ch as bigint) AS channel, "
-        f"cast(sum(cast(floor(least(greatest(acc / accw, 0.0E0), 255.0E0) "
-        f"+ 0.5E0) as bigint) "
-        f"% {_cks_prime('yd * (2 * w) + xd')}) % 65536 as bigint) AS cks "
+        f"{checksum_sql(_ACC_CLAMP_ROUND, 'yd * (2 * w) + xd')} AS cks "
         f"FROM ({acc}) GROUP BY 1, 2"
     )
 
@@ -572,7 +565,7 @@ def oracle_warp_area_family_down2(n: int, max_i: int) -> str:
         f"modev AS MATERIALIZED ({modev}), "
         f"px AS ({px}) "
         f"SELECT image_id, alg, cast(ch as bigint) AS channel, "
-        f"cast(sum(val % {_cks_prime('yd * (w // 2) + xd')}) % 65536 as bigint) "
+        f"{checksum_sql('val', 'yd * (w // 2) + xd')} "
         f"AS cks FROM px GROUP BY 1, 2, 3"
     )
 

@@ -5,6 +5,8 @@ cited at autotest/gcore/tiff_read.py:44)."""
 import struct
 
 import numpy as np
+import pandas as pd
+import pytest
 
 from gdal_spark import codecs, synth
 from gdal_spark.operators import stats
@@ -80,3 +82,64 @@ def test_checksums_df(spark):
             exp = stats.gdal_checksum(arr[:, :, ch])
             got = cks[(cks.image_id == rec.image_id) & (cks.channel == ch)].cks.iloc[0]
             assert got == exp
+
+
+def test_checksum_signed_values():
+    # C's truncated modulo: -8 % 7 == -1, then 5 % 11 == 5
+    assert stats.gdal_checksum(np.array([[-8, 5]])) == 4
+    # a negative running sum wraps like GDAL's "& 0xffff"
+    assert stats.gdal_checksum(np.array([[-8]])) == 65535
+
+
+def _pixel_table(band):
+    """(x, y, w, val) rows of one 2-D band, row-major."""
+    h, w = band.shape
+    y, x = np.divmod(np.arange(h * w), w)
+    return pd.DataFrame(
+        {"x": x, "y": y, "w": w, "val": band.reshape(-1).astype(np.int64)}
+    )
+
+
+def test_checksum_sql_matches_gdal_checksum():
+    duckdb = pytest.importorskip("duckdb")
+    rng = np.random.default_rng(12)
+    sql = f"SELECT {stats.checksum_sql('val', 'y * w + x')} AS cks FROM px"
+    # 37 wide: the prime cycle of 11 does not restart at each row
+    for band in (
+        rng.integers(0, 256, size=(23, 37), dtype=np.uint8),
+        rng.integers(0, 256, size=(64, 64), dtype=np.uint8),
+    ):
+        con = duckdb.connect()
+        con.register("px", _pixel_table(band))
+        assert con.sql(sql).fetchone()[0] == stats.gdal_checksum(band)
+
+
+def test_channel_checksums_one_row_per_channel(spark):
+    rng = np.random.default_rng(5)
+    arrs = {
+        "a": rng.integers(0, 256, size=(23, 37, 3), dtype=np.uint8),
+        "b": rng.integers(0, 256, size=(16, 16, 2), dtype=np.uint8),
+    }
+    df = spark.createDataFrame(
+        [(k, bytearray(v.tobytes()), v.shape[0], v.shape[1], v.shape[2])
+         for k, v in arrs.items()],
+        "image_id string, raw binary, h int, w int, c int",
+    )
+
+    def unpack(raw, h, w, c):
+        return np.frombuffer(bytes(raw), np.uint8).reshape(h, w, c)
+
+    out = stats.channel_checksums(df, ["raw", "h", "w", "c"], unpack)
+    assert out.schema.simpleString() == (
+        "struct<image_id:string,channel:bigint,cks:bigint>"
+    )
+    got = {(r.image_id, r.channel): r.cks for r in out.collect()}
+    assert got == {
+        (k, ch): stats.gdal_checksum(v[:, :, ch])
+        for k, v in arrs.items() for ch in range(v.shape[2])
+    }
+    # the same aggregate in Spark SQL over the pixel rows of one band
+    band = arrs["a"][:, :, 1]
+    sql = stats.checksum_sql("val", "y * w + x")
+    px = spark.createDataFrame(_pixel_table(band))
+    assert px.selectExpr(f"{sql} AS cks").first().cks == got[("a", 1)]

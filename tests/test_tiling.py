@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 
 from gdal_spark import codecs, grid, synth, tablefmt
-from gdal_spark.operators import tiling
+from gdal_spark.operators import stats, tiling
 
 Z = 10
 RANGE = (543, 545, 668, 670)  # hot-cell tiles at z10
@@ -51,7 +51,7 @@ def test_base_render_matches_bruteforce(spark, hot_images):
         got = codecs.decode_image(bytes(row.bytes))
         assert np.array_equal(got, buf)
         assert row.n_painted == int(painted.sum())
-        assert row.cks_0 == tiling.tile_checksum(buf[:, :, 0])
+        assert row.cks_0 == stats.gdal_checksum(buf[:, :, 0])
 
 
 def test_pyramid_two_levels(spark, hot_images):
@@ -216,4 +216,4 @@ def test_feather_mosaic_weighted_blend(spark):
     row = feather.iloc[0]
     assert row["n_painted"] == int(p.sum()) > 0
     for c in range(3):
-        assert row[f"cks_{c}"] == tiling.tile_checksum(out[:, :, c])
+        assert row[f"cks_{c}"] == stats.gdal_checksum(out[:, :, c])
