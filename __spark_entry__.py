@@ -197,12 +197,7 @@ def _q_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GDAL 16-bit image checksum (alg/gdalchecksum.cpp:66), golden-
     pinned to byte.tif=4672 in tests and value-checked here vs the SQL
     pixel oracle."""
-    out = stats.checksums(_pixel_images(spark, sf_dir, _CKS_MAX_I))
-    return out.select(
-        "image_id",
-        F.col("channel").cast("bigint").alias("channel"),
-        F.col("cks").cast("bigint").alias("cks"),
-    )
+    return stats.checksums(_pixel_images(spark, sf_dir, _CKS_MAX_I))
 
 
 _WARP_MAX_I = 8
@@ -213,11 +208,7 @@ def _q_warp_near_up2(spark: SparkSession, sf_dir: str) -> DataFrame:
     alg/gdalwarpkernel.cpp:5060) — checksum-verified against the SQL
     pixel oracle with src = dst // 2."""
     out = warp.warp_scale(_pixel_images(spark, sf_dir, _WARP_MAX_I), 2.0, "near")
-    return stats.checksums(out).select(
-        "image_id",
-        F.col("channel").cast("bigint").alias("channel"),
-        F.col("cks").cast("bigint").alias("cks"),
-    )
+    return stats.checksums(out)
 
 
 def _q_warp_bilinear_up2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -228,33 +219,21 @@ def _q_warp_bilinear_up2(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = warp.warp_scale(
         _pixel_images(spark, sf_dir, _WARP_MAX_I), 2.0, "bilinear"
     )
-    return stats.checksums(out).select(
-        "image_id",
-        F.col("channel").cast("bigint").alias("channel"),
-        F.col("cks").cast("bigint").alias("cks"),
-    )
+    return stats.checksums(out)
 
 
 def _q_warp_cutline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gdalwarp -cutline: 2x nearest warp masked to a cutline box
     (GDALWarpCutlineMasker, blend 0); checksum-exact oracle."""
     out = warp.warp_cutline(_pixel_images(spark, sf_dir, _WARP_MAX_I))
-    return stats.checksums(out).select(
-        "image_id",
-        F.col("channel").cast("bigint").alias("channel"),
-        F.col("cks").cast("bigint").alias("cks"),
-    )
+    return stats.checksums(out)
 
 
 def _q_warp_avg_down2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gdalwarp 2x downsample, average (GWKAverageOrMode,
     alg/gdalwarpkernel.cpp:6330) — integer-exact (sum+2)//4 oracle."""
     out = warp.warp_scale(_pixel_images(spark, sf_dir, _WARP_MAX_I), 0.5, "average")
-    return stats.checksums(out).select(
-        "image_id",
-        F.col("channel").cast("bigint").alias("channel"),
-        F.col("cks").cast("bigint").alias("cks"),
-    )
+    return stats.checksums(out)
 
 
 def _q_tile_index(spark, sf_dir):
@@ -479,11 +458,7 @@ def _q_mm_resize(spark, sf_dir):
     out = multimodal.resize_nearest(
         _pixel_images(spark, sf_dir, _MM_MAX_I), 24, 24
     )
-    return stats.checksums(out).select(
-        "image_id",
-        F.col("channel").cast("bigint").alias("channel"),
-        F.col("cks").cast("bigint").alias("cks"),
-    )
+    return stats.checksums(out)
 
 
 def _q_mm_frames(spark, sf_dir):
@@ -968,11 +943,7 @@ def _q_warp_nodata(spark, sf_dir):
     out = warp.warp_scale(
         _pixel_images(spark, sf_dir, _WARP_MAX_I), 0.5, "average", nodata=0
     )
-    return stats.checksums(out).select(
-        "image_id",
-        F.col("channel").cast("bigint").alias("channel"),
-        F.col("cks").cast("bigint").alias("cks"),
-    )
+    return stats.checksums(out)
 
 
 def _q_overlay_union(spark, sf_dir):
@@ -1559,18 +1530,12 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # integer histogram-equalization LUT, checksum-gated
         "enhance_equalize": lambda spark, sf_dir: enhance.equalize_checksums(
             _pixel_images(spark, sf_dir, _CKS_MAX_I)
-        ).selectExpr(
-            "image_id", "cast(channel as bigint) AS channel",
-            "cast(cks as bigint) AS cks",
         ),
         # histogram matching to the corpus-wide band histogram (the
         # mosaic radiometric normalization; exact integer quantile map)
         "match_histogram": lambda spark, sf_dir: (
             enhance.match_histogram_checksums(
                 _pixel_images(spark, sf_dir, _CKS_MAX_I)
-            ).selectExpr(
-                "image_id", "cast(channel as bigint) AS channel",
-                "cast(cks as bigint) AS cks",
             )
         ),
         # ExactSubstr dedup (Lee et al. 2021): maximal duplicated
@@ -2010,25 +1975,16 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             warp.warp_scale(
                 _pixel_images(spark, sf_dir, _WARP_MAX_I), 2.0, "lanczos"
             )
-        ).selectExpr(
-            "image_id", "cast(channel as bigint) AS channel",
-            "cast(cks as bigint) AS cks",
         ),
         "warp_cubicspline_up2": lambda spark, sf_dir: stats.checksums(
             warp.warp_scale(
                 _pixel_images(spark, sf_dir, _WARP_MAX_I), 2.0, "cubicspline"
             )
-        ).selectExpr(
-            "image_id", "cast(channel as bigint) AS channel",
-            "cast(cks as bigint) AS cks",
         ),
         "warp_cubic_up2": lambda spark, sf_dir: stats.checksums(
             warp.warp_scale(
                 _pixel_images(spark, sf_dir, _WARP_MAX_I), 2.0, "cubic"
             )
-        ).selectExpr(
-            "image_id", "cast(channel as bigint) AS channel",
-            "cast(cks as bigint) AS cks",
         ),
         "events_dedup_first": lambda spark, sf_dir: streaming.dedup_events(
             spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")

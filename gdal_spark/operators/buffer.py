@@ -51,6 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import boolop, synth, wkb
+from .rowstage import per_row
 
 # angle-grid offset for general-path vertex discs: keeps disc
 # vertices off the capsule-rectangle corners (which sit at exact
@@ -211,6 +212,12 @@ def _grid_shoelace(ring: np.ndarray):
     return int(np.sum(xg * yn - xn * yg)), len(ring)
 
 
+def _grid_totals(rings):
+    """(n_vertices, area2_key) of ``_grid_shoelace`` over all rings."""
+    sums = [_grid_shoelace(r) for r in rings]
+    return sum(c for _, c in sums), sum(s for s, _ in sums)
+
+
 def buffer_df(
     layer: DataFrame,
     dist: float,
@@ -222,36 +229,16 @@ def buffer_df(
     grid units) over ALL output rings — exact integer arithmetic, so
     the convex path is bit-replayable by a closed-form SQL oracle."""
 
-    def run(batches):
-        for pdf in batches:
-            ids, nv, ak, gw = [], [], [], []
-            for fid, g in zip(pdf[id_col], pdf["geom_wkb"]):
-                rings = wkb.polygon_rings(bytes(g))
-                out, _ = buffer_rings(rings, dist, quadsegs)
-                tot = 0
-                cnt = 0
-                for r in out:
-                    s, c = _grid_shoelace(r)
-                    tot += s
-                    cnt += c
-                ids.append(fid)
-                nv.append(cnt)
-                ak.append(tot)
-                gw.append(
-                    wkb.encode_polygon(out[0], out[1:]) if out else None
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_vertices": nv,
-                    "area2_key": ak,
-                    "geom_wkb": gw,
-                }
-            )
+    def buffered(fid, g):
+        out, _ = buffer_rings(wkb.polygon_rings(bytes(g)), dist, quadsegs)
+        yield (
+            fid, *_grid_totals(out),
+            wkb.encode_polygon(out[0], out[1:]) if out else None,
+        )
 
-    return layer.select(id_col, "geom_wkb").mapInPandas(
-        run,
-        schema=f"{id_col} string, n_vertices bigint, area2_key bigint, "
+    return per_row(
+        layer, [id_col, "geom_wkb"], buffered,
+        f"{id_col} string, n_vertices bigint, area2_key bigint, "
         "geom_wkb binary",
     )
 
@@ -408,28 +395,14 @@ def buffer_negative_df(
 ) -> DataFrame:
     """Erosion counterpart of buffer_df (dist passed positive)."""
 
-    def run(batches):
-        for pdf in batches:
-            ids, nv, ak = [], [], []
-            for fid, g in zip(pdf[id_col], pdf["geom_wkb"]):
-                rings = wkb.polygon_rings(bytes(g))
-                out, _ = buffer_rings_signed(rings, -dist, quadsegs)
-                tot = 0
-                cnt = 0
-                for r in out:
-                    s, c = _grid_shoelace(r)
-                    tot += s
-                    cnt += c
-                ids.append(fid)
-                nv.append(cnt)
-                ak.append(tot)
-            yield pd.DataFrame(
-                {id_col: ids, "n_vertices": nv, "area2_key": ak}
-            )
+    def eroded(fid, g):
+        rings = wkb.polygon_rings(bytes(g))
+        out, _ = buffer_rings_signed(rings, -dist, quadsegs)
+        yield (fid, *_grid_totals(out))
 
-    return layer.select(id_col, "geom_wkb").mapInPandas(
-        run,
-        schema=f"{id_col} string, n_vertices bigint, area2_key bigint",
+    return per_row(
+        layer, [id_col, "geom_wkb"], eroded,
+        f"{id_col} string, n_vertices bigint, area2_key bigint",
     )
 
 

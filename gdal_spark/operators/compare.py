@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs, synth
+from . import rowstage
 
 # integer PSNR>=40dB gate constants: sse * PSNR_SCALE <= PEAK_SQ * npix
 PEAK_SQ = 255 * 255
@@ -79,44 +80,26 @@ def compare_rows(golden: DataFrame, candidate: DataFrame) -> DataFrame:
         F.col("bytes").alias("bytes_c"),
         F.col("caption").alias("caption_c"),
     )
-    joined = g.join(c, "image_id")
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, bg, bc, cg, cc in zip(
-                pdf["image_id"], pdf["bytes_g"], pdf["bytes_c"],
-                pdf["caption_g"], pdf["caption_c"],
-            ):
-                a = codecs.decode_image(bytes(bg))
-                b = codecs.decode_image(bytes(bc))
-                cap_eq = int(cg == cc)
-                if a.shape != b.shape:
-                    rows.append((image_id, 0, -1, -1, -1, 0, 0, cap_eq))
-                    continue
-                diff = a.astype("int64") - b.astype("int64")
-                sse = int((diff * diff).sum())
-                mad = int(abs(diff).max()) if diff.size else 0
-                npix = int(diff.size)
-                psnr_ok = int(sse * PSNR_SCALE <= PEAK_SQ * npix)
-                rows.append(
-                    (image_id, 1, npix, sse, mad, int(sse == 0),
-                     psnr_ok, cap_eq)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "dims_equal", "npix", "sse",
-                         "max_abs_diff", "pixels_equal", "psnr_ok",
-                         "caption_equal"],
-            )
+    def run(image_id, bg, bc, cg, cc):
+        a = codecs.decode_image(bytes(bg))
+        b = codecs.decode_image(bytes(bc))
+        cap_eq = int(cg == cc)
+        if a.shape != b.shape:
+            yield image_id, 0, -1, -1, -1, 0, 0, cap_eq
+            return
+        diff = a.astype("int64") - b.astype("int64")
+        sse = int((diff * diff).sum())
+        mad = int(abs(diff).max()) if diff.size else 0
+        npix = int(diff.size)
+        psnr_ok = int(sse * PSNR_SCALE <= PEAK_SQ * npix)
+        yield image_id, 1, npix, sse, mad, int(sse == 0), psnr_ok, cap_eq
 
-    return joined.mapInPandas(
-        run,
-        schema=(
-            "image_id string, dims_equal int, npix bigint, sse bigint, "
-            "max_abs_diff int, pixels_equal int, psnr_ok int, "
-            "caption_equal int"
-        ),
+    return rowstage.per_row(
+        g.join(c, "image_id"),
+        ["image_id", "bytes_g", "bytes_c", "caption_g", "caption_c"], run,
+        "image_id string, dims_equal int, npix bigint, sse bigint, "
+        "max_abs_diff int, pixels_equal int, psnr_ok int, caption_equal int",
     )
 
 

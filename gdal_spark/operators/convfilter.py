@@ -28,7 +28,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from .. import synth
-from .stats import _decode_iter
+from .stats import per_image
 
 
 def _responses(a: np.ndarray):
@@ -55,8 +55,6 @@ def _responses(a: np.ndarray):
 def kernel_filter(images: DataFrame) -> DataFrame:
     """(image_id, y, n, sharpen_sum, blur_key_sum) per interior
     scanline of channel 0."""
-    cols = ["image_id", "y", "n", "sharpen_sum", "blur_key_sum"]
-
     def fn(arr):
         sharpen, blur_key = _responses(arr[:, :, 0])
         for row in range(sharpen.shape[0]):
@@ -71,9 +69,7 @@ def kernel_filter(images: DataFrame) -> DataFrame:
         "image_id string, y bigint, n bigint, sharpen_sum bigint, "
         "blur_key_sum bigint"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def oracle_kernel_filter(n: int, max_i: int) -> str:

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..synth import images_cte
+from .stats import per_image
 
 MIN_SIDE = 20
 ASPECT_X10 = 32  # max aspect ratio 3.2:1
@@ -152,10 +153,6 @@ def blur_laplacian(images: DataFrame) -> DataFrame:
     row per image; var_n2 = n*Σlap² − (Σlap)² = variance × n²."""
     import numpy as np
 
-    from .stats import _decode_iter
-
-    cols = ["image_id", "n_px", "lap_sum", "lap_sumsq", "var_n2", "is_sharp"]
-
     def fn(arr):
         a = arr[:, :, 0].astype(np.int64)
         lap = (
@@ -175,9 +172,7 @@ def blur_laplacian(images: DataFrame) -> DataFrame:
         "image_id string, n_px bigint, lap_sum bigint, lap_sumsq bigint, "
         "var_n2 bigint, is_sharp int"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def oracle_blur_laplacian(n_images: int, max_i: int) -> str:
@@ -230,10 +225,6 @@ def jpeg_blockiness(images: DataFrame) -> DataFrame:
     channel 0."""
     import numpy as np
 
-    from .stats import _decode_iter
-
-    cols = ["image_id", "b_n", "b_sum", "i_n", "i_sum", "is_blocky"]
-
     def fn(arr):
         a = arr[:, :, 0].astype(np.int64)
         grad = np.abs(a[:, 1:] - a[:, :-1])
@@ -252,9 +243,7 @@ def jpeg_blockiness(images: DataFrame) -> DataFrame:
         "image_id string, b_n bigint, b_sum bigint, i_n bigint, "
         "i_sum bigint, is_blocky int"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def oracle_jpeg_blockiness(n_images: int, max_i: int) -> str:
@@ -307,13 +296,6 @@ def colorfulness(images: DataFrame) -> DataFrame:
     color_key) per image."""
     import numpy as np
 
-    from .stats import _decode_iter
-
-    cols = [
-        "image_id", "n_px", "sum_rg", "sumsq_rg", "sum_yb2", "sumsq_yb2",
-        "color_key",
-    ]
-
     def fn(arr):
         a = arr.astype(np.int64)
         rg = a[:, :, 0] - a[:, :, 1]
@@ -330,9 +312,7 @@ def colorfulness(images: DataFrame) -> DataFrame:
         "image_id string, n_px bigint, sum_rg bigint, sumsq_rg bigint, "
         "sum_yb2 bigint, sumsq_yb2 bigint, color_key bigint"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def oracle_colorfulness(n_images: int, max_i: int) -> str:
@@ -387,11 +367,7 @@ def image_entropy(images: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    from .stats import _decode_iter
-
     ln2 = math.log(2.0)
-    cols = ["image_id", "n_px", "n_bins", "entropy_key"]
-
     def fn(arr):
         v = arr[:, :, 0].reshape(-1).astype(np.int64)
         n = int(v.size)
@@ -410,9 +386,7 @@ def image_entropy(images: DataFrame) -> DataFrame:
     schema = (
         "image_id string, n_px bigint, n_bins bigint, entropy_key bigint"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def oracle_image_entropy(n_images: int, max_i: int) -> str:
@@ -489,10 +463,6 @@ def ssim_global(images: DataFrame) -> DataFrame:
     map-only."""
     import numpy as np
 
-    from .stats import _decode_iter
-
-    cols = ["image_id", "n_px", "sx", "sy", "sxx", "syy", "sxy", "ssim_key"]
-
     def fn(arr):
         x = arr[:, :, 0].astype(np.int64)
         y = (x // 8) * 8
@@ -507,9 +477,7 @@ def ssim_global(images: DataFrame) -> DataFrame:
         "image_id string, n_px bigint, sx bigint, sy bigint, sxx bigint, "
         "syy bigint, sxy bigint, ssim_key bigint"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def oracle_ssim_global(n_images: int, max_i: int) -> str:
@@ -551,13 +519,6 @@ def grayscale_gate(images: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    from .stats import _decode_iter
-
-    cols = [
-        "image_id", "n_px", "sad_rg", "sad_gb", "sad_rb",
-        "max_diff", "gray_key", "is_gray",
-    ]
-
     def fn(arr):
         a = arr.astype(np.int64)
         drg = np.abs(a[:, :, 0] - a[:, :, 1])
@@ -576,9 +537,7 @@ def grayscale_gate(images: DataFrame) -> DataFrame:
         "image_id string, n_px bigint, sad_rg bigint, sad_gb bigint, "
         "sad_rb bigint, max_diff bigint, gray_key bigint, is_gray int"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def oracle_grayscale_gate(n_images: int, max_i: int) -> str:
@@ -631,10 +590,6 @@ def otsu_threshold(images: DataFrame) -> DataFrame:
     binarization threshold on channel 0; map-only."""
     import numpy as np
 
-    from .stats import _decode_iter
-
-    cols = ["image_id", "threshold", "w0", "s0", "otsu_key"]
-
     def fn(arr):
         x = arr[:, :, 0].astype(np.int64).ravel()
         n = int(x.size)
@@ -655,9 +610,7 @@ def otsu_threshold(images: DataFrame) -> DataFrame:
         "image_id string, threshold int, w0 bigint, s0 bigint, "
         "otsu_key bigint"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def oracle_otsu_threshold(n_images: int, max_i: int) -> str:

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs, synth
 from ..synth import flit
-from .stats import channel_checksums, checksum_sql
+from .stats import channel_checksums, checksum_sql, per_image
 
 # hillshade constants (defaults az=315, alt=45, z=1, scale=1) — python
 # floats embedded as SQL literals so both engines share them exactly
@@ -57,15 +57,20 @@ SQUARE_Z = Z_SCALED * Z_SCALED
 SCALE_KEY = 10_000.0
 
 
-def window_features(dem: np.ndarray):
-    """All six focal outputs for the interior of a 2-D int array.
-    Returns dict of float64 arrays of shape (h-2, w-2)."""
-    d = dem.astype(np.float64)
-    w = {
+def _window(d: np.ndarray) -> dict:
+    """The 3x3 neighbourhood of a 2-D array's interior: (dx, dy) ->
+    the (h-2, w-2) view shifted by (dx, dy); (0, 0) is the center."""
+    return {
         (dx, dy): d[1 + dy : d.shape[0] - 1 + dy, 1 + dx : d.shape[1] - 1 + dx]
         for dx in (-1, 0, 1)
         for dy in (-1, 0, 1)
     }
+
+
+def window_features(dem: np.ndarray):
+    """All six focal outputs for the interior of a 2-D int array.
+    Returns dict of float64 arrays of shape (h-2, w-2)."""
+    w = _window(dem.astype(np.float64))
     c = w[(0, 0)]
     # Horn sums (exact integers in float64)
     hx = (w[(-1, -1)] + 2 * w[(-1, 0)] + w[(-1, 1)]) - (
@@ -102,51 +107,38 @@ def window_features(dem: np.ndarray):
     }
 
 
-def _row_aggregate(feats: dict, id_cols: dict, y_offset: int = 1) -> pd.DataFrame:
-    keys = {k: np.floor(v * SCALE_KEY).astype(np.int64) for k, v in feats.items()}
-    h = next(iter(keys.values())).shape[0]
-    rows = {
-        **{k: [vv for vv in v] for k, v in id_cols.items()},
-    }
-    df = pd.DataFrame(
-        {
-            **{k: np.repeat(list(v) if isinstance(v, list) else v, h) for k, v in rows.items()},
-            "y": np.arange(y_offset, y_offset + h, dtype=np.int64),
-            "n": np.full(h, keys["slope"].shape[1], dtype=np.int64),
-            **{
-                f"{k}_sum": keys[k].sum(axis=1).astype(np.int64)
-                for k in ("slope", "aspect", "tri", "tpi", "rough", "shade")
-            },
-        }
+def _scanline_sums(images: DataFrame, kernel, names) -> DataFrame:
+    """Per-image (channel 0 = DEM) focal keys summed per interior
+    scanline: ``kernel`` maps the float64 DEM to a dict of (h-2, w-2)
+    arrays; each row is (image_id, y, n, <name>_sum for ``names``) over
+    floor(value * SCALE_KEY). Edge pixels are not computed, so rasters
+    under 3x3 give no rows."""
+
+    def fn(arr):
+        dem = arr[:, :, 0]
+        if dem.shape[0] < 3 or dem.shape[1] < 3:
+            return
+        feats = kernel(dem.astype(np.float64))
+        sums = [
+            np.floor(feats[k] * SCALE_KEY).astype(np.int64).sum(axis=1)
+            for k in names
+        ]
+        h, n = feats[names[0]].shape
+        for y in range(h):
+            yield (y + 1, n, *(int(v[y]) for v in sums))
+
+    cols = ", ".join(f"{k}_sum bigint" for k in names)
+    return per_image(
+        images, fn, f"image_id string, y bigint, n bigint, {cols}"
     )
-    return df
 
 
 def focal_stats(images: DataFrame) -> DataFrame:
     """Per-image (channel 0 = DEM) focal features, aggregated per
     interior scanline: (image_id, y, n, <op>_sum x6)."""
-
-    def run(batches):
-        for pdf in batches:
-            outs = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                dem = codecs.decode_image(bytes(payload))[:, :, 0]
-                if dem.shape[0] < 3 or dem.shape[1] < 3:
-                    continue
-                feats = window_features(dem)
-                outs.append(
-                    _row_aggregate(feats, {"image_id": [image_id]})
-                )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                columns=["image_id", "y", "n", "slope_sum", "aspect_sum",
-                         "tri_sum", "tpi_sum", "rough_sum", "shade_sum"]
-            )
-
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, y bigint, n bigint, slope_sum bigint, "
-        "aspect_sum bigint, tri_sum bigint, tpi_sum bigint, "
-        "rough_sum bigint, shade_sum bigint",
+    return _scanline_sums(
+        images, window_features,
+        ("slope", "aspect", "tri", "tpi", "rough", "shade"),
     )
 
 
@@ -391,21 +383,42 @@ _WX = "(CASE ddx WHEN -1 THEN 1 WHEN 1 THEN -1 ELSE 0 END) * (CASE ddy WHEN 0 TH
 _WY = "(CASE ddy WHEN 1 THEN 1 WHEN -1 THEN -1 ELSE 0 END) * (CASE ddx WHEN 0 THEN 2 ELSE 1 END)"
 
 
-def oracle_dem_images(n: int, max_i: int) -> str:
-    """Per-image per-scanline sums of the six focal keys, from the
-    synthetic pixel function (channel 0)."""
-    grid = (
+def interior_grid(n: int, max_i: int) -> str:
+    """One row per interior pixel (x0, y0) of each synthetic image
+    below ``max_i``, carrying the image columns the pixel function
+    needs: the grid every focal-window oracle runs over."""
+    return (
         f"SELECT image_id, i.i AS i, w, h, fmt, x0, y0 "
         f"FROM ({synth.images_cte(n, 'duckdb')}) i, "
         f"range(1, 255) a(x0), range(1, 255) b(y0) "
         f"WHERE i.i < {max_i} AND x0 < i.w - 1 AND y0 < i.h - 1"
     )
+
+
+def _at(dx: int, dy: int) -> str:
+    """Scalar subquery: channel-0 value of the neighbour (dx, dy) of
+    the grid pixel in scope as ``g``."""
+    return (
+        f"(SELECT {synth.pixel_val_sql()} FROM (SELECT g.i AS i, g.w AS w, "
+        f"g.fmt AS fmt, g.x0 + {dx} AS x, g.y0 + {dy} AS y, 0 AS ch))"
+    )
+
+
+# the 9 channel-0 window values (ddx, ddy, v) of every grid pixel
+_NB_SQL = (
+    f"nb AS (SELECT image_id, x0, y0, ddx, ddy, {synth.pixel_val_sql()} AS v "
+    f"FROM (SELECT g.*, ddx, ddy, x0 + ddx AS x, y0 + ddy AS y, 0 AS ch "
+    f"FROM g, {_NBR}))"
+)
+
+
+def oracle_dem_images(n: int, max_i: int) -> str:
+    """Per-image per-scanline sums of the six focal keys, from the
+    synthetic pixel function (channel 0)."""
     nbr_val = synth.pixel_val_sql()
     return (
-        f"WITH g AS ({grid}), "
-        f"nb AS (SELECT image_id, x0, y0, ddx, ddy, {nbr_val} AS v "
-        f"FROM (SELECT g.*, ddx, ddy, x0 + ddx AS x, y0 + ddy AS y, 0 AS ch "
-        f"FROM g, {_NBR})), "
+        f"WITH g AS ({interior_grid(n, max_i)}), "
+        f"{_NB_SQL}, "
         f"ctr AS (SELECT image_id, x0, y0, {nbr_val} AS c "
         f"FROM (SELECT g.*, x0 AS x, y0 AS y, 0 AS ch FROM g)), "
         f"agg AS (SELECT nb.image_id, nb.x0, nb.y0, "
@@ -482,12 +495,7 @@ TWO_PI = 2.0 * np.pi
 def hillshade_variant_features(dem: np.ndarray) -> dict:
     """multidirectional / combined / igor shade for the interior of a
     2-D int array, float64, shape (h-2, w-2) each."""
-    d = dem.astype(np.float64)
-    w = {
-        (dx, dy): d[1 + dy : d.shape[0] - 1 + dy, 1 + dx : d.shape[1] - 1 + dx]
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    }
+    w = _window(dem.astype(np.float64))
     hx = (w[(-1, -1)] + 2 * w[(-1, 0)] + w[(-1, 1)]) - (
         w[(1, -1)] + 2 * w[(1, 0)] + w[(1, 1)]
     )
@@ -542,41 +550,8 @@ def hillshade_variant_features(dem: np.ndarray) -> dict:
 def hillshade_variants(images: DataFrame) -> DataFrame:
     """Per-image (channel 0 = DEM) variant shades, integer-keyed and
     aggregated per interior scanline."""
-
-    def run(batches):
-        for pdf in batches:
-            outs = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                demb = codecs.decode_image(bytes(payload))[:, :, 0]
-                if demb.shape[0] < 3 or demb.shape[1] < 3:
-                    continue
-                feats = hillshade_variant_features(demb)
-                keys = {
-                    k: np.floor(v * SCALE_KEY).astype(np.int64)
-                    for k, v in feats.items()
-                }
-                h = keys["multi"].shape[0]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "image_id": image_id,
-                            "y": np.arange(1, 1 + h, dtype=np.int64),
-                            "n": np.full(h, keys["multi"].shape[1], np.int64),
-                            "multi_sum": keys["multi"].sum(axis=1),
-                            "comb_sum": keys["comb"].sum(axis=1),
-                            "igor_sum": keys["igor"].sum(axis=1),
-                        }
-                    )
-                )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                columns=["image_id", "y", "n", "multi_sum", "comb_sum",
-                         "igor_sum"]
-            )
-
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, y bigint, n bigint, multi_sum bigint, "
-        "comb_sum bigint, igor_sum bigint",
+    return _scanline_sums(
+        images, hillshade_variant_features, ("multi", "comb", "igor")
     )
 
 
@@ -591,61 +566,23 @@ def tri_riley(images: DataFrame) -> DataFrame:
     sqrt is correctly rounded and bit-identical between numpy and the
     DuckDB twin — floor-scaled keys need no epsilon."""
 
-    def run(batches):
-        for pdf in batches:
-            outs = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                demb = codecs.decode_image(bytes(payload))[:, :, 0]
-                if demb.shape[0] < 3 or demb.shape[1] < 3:
-                    continue
-                d = demb.astype(np.float64)
-                w = {
-                    (dx, dy): d[1 + dy : d.shape[0] - 1 + dy,
-                                1 + dx : d.shape[1] - 1 + dx]
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                }
-                c = w[(0, 0)]
-                ssq = sum(
-                    (v - c) * (v - c) for k, v in w.items() if k != (0, 0)
-                )
-                key = np.floor(np.sqrt(ssq) * SCALE_KEY).astype(np.int64)
-                h = key.shape[0]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "image_id": image_id,
-                            "y": np.arange(1, 1 + h, dtype=np.int64),
-                            "n": np.full(h, key.shape[1], np.int64),
-                            "riley_sum": key.sum(axis=1),
-                        }
-                    )
-                )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                columns=["image_id", "y", "n", "riley_sum"]
-            )
+    def riley(d):
+        w = _window(d)
+        c = w[(0, 0)]
+        ssq = sum((v - c) * (v - c) for k, v in w.items() if k != (0, 0))
+        return {"riley": np.sqrt(ssq)}
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, y bigint, n bigint, riley_sum bigint"
-    )
+    return _scanline_sums(images, riley, ("riley",))
 
 
 def oracle_tri_riley(n: int, max_i: int) -> str:
     """SQL twin: the center term of (v - c)^2 is identically zero, so
     the sum runs over all 9 window cells."""
     k = flit(SCALE_KEY)
-    grid = (
-        f"SELECT image_id, i.i AS i, w, h, fmt, x0, y0 "
-        f"FROM ({synth.images_cte(n, 'duckdb')}) i, "
-        f"range(1, 255) a(x0), range(1, 255) b(y0) "
-        f"WHERE i.i < {max_i} AND x0 < i.w - 1 AND y0 < i.h - 1"
-    )
     nbr_val = synth.pixel_val_sql()
     return (
-        f"WITH g AS ({grid}), "
-        f"nb AS (SELECT image_id, x0, y0, ddx, ddy, {nbr_val} AS v "
-        f"FROM (SELECT g.*, ddx, ddy, x0 + ddx AS x, y0 + ddy AS y, 0 AS ch "
-        f"FROM g, {_NBR})), "
+        f"WITH g AS ({interior_grid(n, max_i)}), "
+        f"{_NB_SQL}, "
         f"ctr AS (SELECT image_id, x0, y0, {nbr_val} AS c "
         f"FROM (SELECT g.*, x0 AS x, y0 AS y, 0 AS ch FROM g)), "
         f"agg AS (SELECT nb.image_id, nb.x0, nb.y0, "
@@ -699,18 +636,9 @@ def oracle_hillshade_variants(n: int, max_i: int) -> str:
         f"(255.0E0 * (1.0E0 - ({slope_deg} / 90.0E0) "
         f"* (1.0E0 - {diff} / {flit(np.pi)})))"
     )
-    grid = (
-        f"SELECT image_id, i.i AS i, w, h, fmt, x0, y0 "
-        f"FROM ({synth.images_cte(n, 'duckdb')}) i, "
-        f"range(1, 255) a(x0), range(1, 255) b(y0) "
-        f"WHERE i.i < {max_i} AND x0 < i.w - 1 AND y0 < i.h - 1"
-    )
-    nbr_val = synth.pixel_val_sql()
     return (
-        f"WITH g AS ({grid}), "
-        f"nb AS (SELECT image_id, x0, y0, ddx, ddy, {nbr_val} AS v "
-        f"FROM (SELECT g.*, ddx, ddy, x0 + ddx AS x, y0 + ddy AS y, 0 AS ch "
-        f"FROM g, {_NBR})), "
+        f"WITH g AS ({interior_grid(n, max_i)}), "
+        f"{_NB_SQL}, "
         f"agg AS (SELECT image_id, x0, y0, "
         f"sum(v * {_WX}) AS dxh, sum(v * {_WY}) AS dyh "
         f"FROM nb GROUP BY 1, 2, 3), "
@@ -794,57 +722,24 @@ def slope_percent_rows(images: DataFrame) -> DataFrame:
     """(image_id, y, n, pct_sum) — per-interior-scanline sums of
     floor(percent_slope * 1e4). Map-only (per-image focal window)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                dem = codecs.decode_image(bytes(payload))[:, :, 0]
-                if dem.shape[0] < 3 or dem.shape[1] < 3:
-                    continue
-                d = dem.astype(np.float64)
-                w = {
-                    (dx, dy): d[1 + dy : d.shape[0] - 1 + dy,
-                                1 + dx : d.shape[1] - 1 + dx]
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                }
-                hx = (w[(-1, -1)] + 2 * w[(-1, 0)] + w[(-1, 1)]) - (
-                    w[(1, -1)] + 2 * w[(1, 0)] + w[(1, 1)]
-                )
-                hy = (w[(-1, 1)] + 2 * w[(0, 1)] + w[(1, 1)]) - (
-                    w[(-1, -1)] + 2 * w[(0, -1)] + w[(1, -1)]
-                )
-                pct = np.sqrt(hx * hx + hy * hy) * 12.5  # 100/8
-                key = np.floor(pct * SCALE_KEY).astype(np.int64)
-                for y in range(key.shape[0]):
-                    rows.append(
-                        (image_id, y + 1, key.shape[1],
-                         int(key[y].sum()))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "y", "n", "pct_sum"]
-            )
+    def pct(d):
+        w = _window(d)
+        hx = (w[(-1, -1)] + 2 * w[(-1, 0)] + w[(-1, 1)]) - (
+            w[(1, -1)] + 2 * w[(1, 0)] + w[(1, 1)]
+        )
+        hy = (w[(-1, 1)] + 2 * w[(0, 1)] + w[(1, 1)]) - (
+            w[(-1, -1)] + 2 * w[(0, -1)] + w[(1, -1)]
+        )
+        return {"pct": np.sqrt(hx * hx + hy * hy) * 12.5}  # 100/8
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, y bigint, n bigint, pct_sum bigint",
-    )
+    return _scanline_sums(images, pct, ("pct",))
 
 
 def oracle_slope_percent(n: int, max_i: int) -> str:
-    grid = (
-        f"SELECT image_id, i.i AS i, w, h, fmt, x0, y0 "
-        f"FROM ({synth.images_cte(n, 'duckdb')}) i, "
-        f"range(1, 255) a(x0), range(1, 255) b(y0) "
-        f"WHERE i.i < {max_i} AND x0 < i.w - 1 AND y0 < i.h - 1"
-    )
-    nbr_val = synth.pixel_val_sql()
     k = flit(SCALE_KEY)
     return (
-        f"WITH g AS ({grid}), "
-        f"nb AS (SELECT image_id, x0, y0, ddx, ddy, {nbr_val} AS v "
-        f"FROM (SELECT g.*, ddx, ddy, x0 + ddx AS x, y0 + ddy AS y, "
-        f"0 AS ch FROM g, {_NBR})), "
+        f"WITH g AS ({interior_grid(n, max_i)}), "
+        f"{_NB_SQL}, "
         f"agg AS (SELECT image_id, x0, y0, "
         f"sum(v * {_WX}) AS dxh, sum(v * {_WY}) AS dyh "
         f"FROM nb GROUP BY 1, 2, 3) "
@@ -867,57 +762,22 @@ def slope_zt_percent_rows(images: DataFrame) -> DataFrame:
     """(image_id, y, n, pct_sum) — per-interior-scanline sums of
     floor(ZT percent slope * 1e4)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                dem = codecs.decode_image(bytes(payload))[:, :, 0]
-                if dem.shape[0] < 3 or dem.shape[1] < 3:
-                    continue
-                d = dem.astype(np.float64)
-                west = d[1:-1, :-2]
-                east = d[1:-1, 2:]
-                north = d[:-2, 1:-1]
-                south = d[2:, 1:-1]
-                dx = west - east
-                dy = south - north
-                pct = np.sqrt(dx * dx + dy * dy) * 50.0  # 100/2
-                key = np.floor(pct * SCALE_KEY).astype(np.int64)
-                for y in range(key.shape[0]):
-                    rows.append(
-                        (image_id, y + 1, key.shape[1], int(key[y].sum()))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "y", "n", "pct_sum"]
-            )
+    def pct(d):
+        dx = d[1:-1, :-2] - d[1:-1, 2:]      # west - east
+        dy = d[2:, 1:-1] - d[:-2, 1:-1]      # south - north
+        return {"pct": np.sqrt(dx * dx + dy * dy) * 50.0}  # 100/2
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, y bigint, n bigint, pct_sum bigint",
-    )
+    return _scanline_sums(images, pct, ("pct",))
 
 
 def oracle_slope_zt_percent(n: int, max_i: int) -> str:
-    grid = (
-        f"SELECT image_id, i.i AS i, w, h, fmt, x0, y0 "
-        f"FROM ({synth.images_cte(n, 'duckdb')}) i, "
-        f"range(1, 255) a(x0), range(1, 255) b(y0) "
-        f"WHERE i.i < {max_i} AND x0 < i.w - 1 AND y0 < i.h - 1"
-    )
-    nbr_val = synth.pixel_val_sql()
     k = flit(SCALE_KEY)
 
-    def at(dx, dy):
-        return (
-            f"(SELECT {nbr_val} FROM (SELECT g.i AS i, g.w AS w, "
-            f"g.fmt AS fmt, g.x0 + {dx} AS x, g.y0 + {dy} AS y, 0 AS ch))"
-        )
-
     return (
-        f"WITH g AS ({grid}), "
+        f"WITH g AS ({interior_grid(n, max_i)}), "
         f"d AS (SELECT image_id, x0, y0, "
-        f"cast({at(-1, 0)} - {at(1, 0)} as double) AS dx, "
-        f"cast({at(0, 1)} - {at(0, -1)} as double) AS dy FROM g) "
+        f"cast({_at(-1, 0)} - {_at(1, 0)} as double) AS dx, "
+        f"cast({_at(0, 1)} - {_at(0, -1)} as double) AS dy FROM g) "
         f"SELECT image_id, y0 AS y, count(*) AS n, "
         f"cast(sum(cast(floor(sqrt(dx * dx + dy * dy) * 50.0E0 * {k}) "
         f"as bigint)) as bigint) AS pct_sum "
@@ -949,52 +809,20 @@ def hillshade_zt_rows(images: DataFrame) -> DataFrame:
     """(image_id, y, n, shade_sum) — per-interior-scanline sums of
     floor(ZT hillshade * 1e4)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                demb = codecs.decode_image(bytes(payload))[:, :, 0]
-                if demb.shape[0] < 3 or demb.shape[1] < 3:
-                    continue
-                d = demb.astype(np.float64)
-                gx = d[1:-1, :-2] - d[1:-1, 2:]          # west - east
-                gy = -(d[2:, 1:-1] - d[:-2, 1:-1])       # (s - n) * -1
-                c254 = (
-                    SIN_ALT_254
-                    - (gy * ZT_COS_AZ_COS_ALT_Z_254
-                       - gx * ZT_SIN_AZ_COS_ALT_Z_254)
-                ) / np.sqrt(1.0 + ZT_SQUARE_Z * (gx * gx + gy * gy))
-                shade = np.where(c254 <= 0.0, 1.0, 1.0 + c254)
-                key = np.floor(shade * SCALE_KEY).astype(np.int64)
-                for y in range(key.shape[0]):
-                    rows.append(
-                        (image_id, y + 1, key.shape[1], int(key[y].sum()))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "y", "n", "shade_sum"]
-            )
+    def shade(d):
+        gx = d[1:-1, :-2] - d[1:-1, 2:]          # west - east
+        gy = -(d[2:, 1:-1] - d[:-2, 1:-1])       # (s - n) * -1
+        c254 = (
+            SIN_ALT_254
+            - (gy * ZT_COS_AZ_COS_ALT_Z_254 - gx * ZT_SIN_AZ_COS_ALT_Z_254)
+        ) / np.sqrt(1.0 + ZT_SQUARE_Z * (gx * gx + gy * gy))
+        return {"shade": np.where(c254 <= 0.0, 1.0, 1.0 + c254)}
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, y bigint, n bigint, shade_sum bigint",
-    )
+    return _scanline_sums(images, shade, ("shade",))
 
 
 def oracle_hillshade_zt(n: int, max_i: int) -> str:
-    grid = (
-        f"SELECT image_id, i.i AS i, w, h, fmt, x0, y0 "
-        f"FROM ({synth.images_cte(n, 'duckdb')}) i, "
-        f"range(1, 255) a(x0), range(1, 255) b(y0) "
-        f"WHERE i.i < {max_i} AND x0 < i.w - 1 AND y0 < i.h - 1"
-    )
-    nbr_val = synth.pixel_val_sql()
     k = flit(SCALE_KEY)
-
-    def at(dx, dy):
-        return (
-            f"(SELECT {nbr_val} FROM (SELECT g.i AS i, g.w AS w, "
-            f"g.fmt AS fmt, g.x0 + {dx} AS x, g.y0 + {dy} AS y, 0 AS ch))"
-        )
 
     c254 = (
         f"(({flit(SIN_ALT_254)} - (gy * {flit(ZT_COS_AZ_COS_ALT_Z_254)} "
@@ -1003,10 +831,10 @@ def oracle_hillshade_zt(n: int, max_i: int) -> str:
     )
     shade = f"(CASE WHEN {c254} <= 0.0E0 THEN 1.0E0 ELSE 1.0E0 + {c254} END)"
     return (
-        f"WITH g AS ({grid}), "
+        f"WITH g AS ({interior_grid(n, max_i)}), "
         f"d AS (SELECT image_id, x0, y0, "
-        f"cast({at(-1, 0)} - {at(1, 0)} as double) AS gx, "
-        f"-cast({at(0, 1)} - {at(0, -1)} as double) AS gy FROM g) "
+        f"cast({_at(-1, 0)} - {_at(1, 0)} as double) AS gx, "
+        f"-cast({_at(0, 1)} - {_at(0, -1)} as double) AS gy FROM g) "
         f"SELECT image_id, y0 AS y, count(*) AS n, "
         f"cast(sum(cast(floor({shade} * {k}) as bigint)) as bigint) "
         f"AS shade_sum FROM d GROUP BY 1, 2"
@@ -1029,58 +857,25 @@ def aspect_zt_rows(images: DataFrame) -> DataFrame:
     """(image_id, y, n, az_sum, trig_sum) — per-interior-scanline sums
     of floor(aspect * 1e4) under both output conventions."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                demb = codecs.decode_image(bytes(payload))[:, :, 0]
-                if demb.shape[0] < 3 or demb.shape[1] < 3:
-                    continue
-                d = demb.astype(np.float64)
-                dx = d[1:-1, 2:] - d[1:-1, :-2]      # east - west
-                dy = d[2:, 1:-1] - d[:-2, 1:-1]      # south - north
-                raw = np.arctan2(dy, -dx) / DEG
-                flat = (dx == 0) & (dy == 0)
-                az = np.where(raw > 90.0, 450.0 - raw, 90.0 - raw)
-                az = np.where(az == 360.0, 0.0, az)
-                az = np.where(flat, -9999.0, az)
-                tr = np.where(raw < 0.0, raw + 360.0, raw)
-                tr = np.where(tr == 360.0, 0.0, tr)
-                tr = np.where(flat, 0.0, tr)
-                kaz = np.floor(az * SCALE_KEY).astype(np.int64)
-                ktr = np.floor(tr * SCALE_KEY).astype(np.int64)
-                for y in range(kaz.shape[0]):
-                    rows.append(
-                        (image_id, y + 1, kaz.shape[1],
-                         int(kaz[y].sum()), int(ktr[y].sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "y", "n", "az_sum", "trig_sum"],
-            )
+    def aspects(d):
+        dx = d[1:-1, 2:] - d[1:-1, :-2]      # east - west
+        dy = d[2:, 1:-1] - d[:-2, 1:-1]      # south - north
+        raw = np.arctan2(dy, -dx) / DEG
+        flat = (dx == 0) & (dy == 0)
+        az = np.where(raw > 90.0, 450.0 - raw, 90.0 - raw)
+        az = np.where(az == 360.0, 0.0, az)
+        tr = np.where(raw < 0.0, raw + 360.0, raw)
+        tr = np.where(tr == 360.0, 0.0, tr)
+        return {
+            "az": np.where(flat, -9999.0, az),
+            "trig": np.where(flat, 0.0, tr),
+        }
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, y bigint, n bigint, az_sum bigint, "
-        "trig_sum bigint",
-    )
+    return _scanline_sums(images, aspects, ("az", "trig"))
 
 
 def oracle_aspect_zt(n: int, max_i: int) -> str:
-    grid = (
-        f"SELECT image_id, i.i AS i, w, h, fmt, x0, y0 "
-        f"FROM ({synth.images_cte(n, 'duckdb')}) i, "
-        f"range(1, 255) a(x0), range(1, 255) b(y0) "
-        f"WHERE i.i < {max_i} AND x0 < i.w - 1 AND y0 < i.h - 1"
-    )
-    nbr_val = synth.pixel_val_sql()
     k = flit(SCALE_KEY)
-
-    def at(dx, dy):
-        return (
-            f"(SELECT {nbr_val} FROM (SELECT g.i AS i, g.w AS w, "
-            f"g.fmt AS fmt, g.x0 + {dx} AS x, g.y0 + {dy} AS y, 0 AS ch))"
-        )
 
     raw = f"(atan2(cast(dy as double), -cast(dx as double)) / {flit(DEG)})"
     az1 = (
@@ -1093,10 +888,10 @@ def oracle_aspect_zt(n: int, max_i: int) -> str:
     tr2 = f"(CASE WHEN {tr1} = 360.0E0 THEN 0.0E0 ELSE {tr1} END)"
     tr = f"(CASE WHEN dx = 0 AND dy = 0 THEN 0.0E0 ELSE {tr2} END)"
     return (
-        f"WITH g AS ({grid}), "
+        f"WITH g AS ({interior_grid(n, max_i)}), "
         f"d AS (SELECT image_id, x0, y0, "
-        f"{at(1, 0)} - {at(-1, 0)} AS dx, "
-        f"{at(0, 1)} - {at(0, -1)} AS dy FROM g) "
+        f"{_at(1, 0)} - {_at(-1, 0)} AS dx, "
+        f"{_at(0, 1)} - {_at(0, -1)} AS dy FROM g) "
         f"SELECT image_id, y0 AS y, count(*) AS n, "
         f"cast(sum(cast(floor({az} * {k}) as bigint)) as bigint) "
         f"AS az_sum, "
@@ -1123,12 +918,7 @@ def hillshade_params(
     the defaults; pinned against the reference's pyramid_shaded_ref
     golden (autotest/utilities/test_gdaldem.py
     test_gdaldem_hillshade_azimuth) in tests."""
-    d = dem.astype(np.float64)
-    w = {
-        (dx, dy): d[1 + dy : d.shape[0] - 1 + dy, 1 + dx : d.shape[1] - 1 + dx]
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    }
+    w = _window(dem.astype(np.float64))
     x = (
         (w[(-1, -1)] + 2 * w[(-1, 0)] + w[(-1, 1)])
         - (w[(1, -1)] + 2 * w[(1, 0)] + w[(1, 1)])

@@ -28,9 +28,7 @@ from pyspark.sql import DataFrame
 
 from .. import codecs
 from ..synth import pixels_cte
-from .stats import (
-    _decode_iter, channel_checksums, checksum_sql, gdal_checksum,
-)
+from .stats import channel_checksums, checksum_sql, per_image
 
 LUT_BINS = 256
 
@@ -53,14 +51,13 @@ def equalize_checksums(images: DataFrame) -> DataFrame:
     """(image_id, channel, cks) — GDAL checksum of each equalized
     band. Decode + equalize + checksum in one Arrow-batched pass."""
 
-    def fn(arr):
-        for ch in range(arr.shape[2]):
-            yield (ch, gdal_checksum(_equalize_band(arr[:, :, ch])))
+    def fn(payload):
+        arr = codecs.decode_image(bytes(payload))
+        return np.dstack(
+            [_equalize_band(arr[:, :, ch]) for ch in range(arr.shape[2])]
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, ["image_id", "channel", "cks"]),
-        schema="image_id string, channel int, cks int",
-    )
+    return channel_checksums(images, ["bytes"], fn)
 
 
 def oracle_equalize(n_images: int, max_i: int) -> str:
@@ -132,9 +129,8 @@ def match_histogram_checksums(images: DataFrame) -> DataFrame:
             for val in np.nonzero(hist)[0]:
                 yield (int(ch), int(val), int(hist[val]))
 
-    local = images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, hist_fn, ["image_id", "ch", "val", "n"]),
-        schema="image_id string, ch int, val int, n long",
+    local = per_image(
+        images, hist_fn, "image_id string, ch int, val int, n long"
     )
     rows = (
         local.groupBy("ch", "val")
@@ -146,16 +142,14 @@ def match_histogram_checksums(images: DataFrame) -> DataFrame:
         g_hist[r["ch"], r["val"]] = r["n"]
     g_cdf = np.cumsum(g_hist, axis=1)
 
-    def apply_fn(arr):
-        for ch in range(arr.shape[2]):
-            n_g = int(g_cdf[ch, -1])
-            out = _match_band(arr[:, :, ch], g_cdf[ch], n_g)
-            yield (ch, gdal_checksum(out))
+    def apply_fn(payload):
+        arr = codecs.decode_image(bytes(payload))
+        return np.dstack([
+            _match_band(arr[:, :, ch], g_cdf[ch], int(g_cdf[ch, -1]))
+            for ch in range(arr.shape[2])
+        ])
 
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, apply_fn, ["image_id", "channel", "cks"]),
-        schema="image_id string, channel int, cks int",
-    )
+    return channel_checksums(images, ["bytes"], apply_fn)
 
 
 def oracle_match_histogram(n_images: int, max_i: int) -> str:
@@ -266,7 +260,7 @@ def oracle_hsv_merge(n: int, max_i: int) -> str:
     """Composed SQL replay: hillshade window -> gray byte, color-relief
     ladder -> r/g/b bytes, then the staged hsv round-trip."""
     from .. import synth
-    from .dem import _NBR, _WX, _WY, COLOR_RAMP, shade_sql
+    from .dem import _NBR, _WX, _WY, COLOR_RAMP, interior_grid, shade_sql
     from ..synth import flit
 
     def chan(c):
@@ -286,10 +280,7 @@ def oracle_hsv_merge(n: int, max_i: int) -> str:
     nbr_val = synth.pixel_val_sql()
     cks_sql = checksum_sql("oval", "(y0 - 1) * (w - 2) + (x0 - 1)")
     return (
-        f"WITH g AS MATERIALIZED (SELECT image_id, i.i AS i, w, h, fmt, "
-        f"x0, y0 FROM ({synth.images_cte(n, 'duckdb')}) i, "
-        f"range(1, 255) a(x0), range(1, 255) b(y0) "
-        f"WHERE i.i < {max_i} AND x0 < i.w - 1 AND y0 < i.h - 1), "
+        f"WITH g AS MATERIALIZED ({interior_grid(n, max_i)}), "
         f"sh AS MATERIALIZED (SELECT image_id, x0, y0, "
         f"cast(floor({shade_sql()} + 0.5E0) as bigint) AS gray FROM ("
         f"SELECT image_id, x0, y0, sum(v * {_WX}) AS dxh, "

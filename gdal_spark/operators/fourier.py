@@ -34,8 +34,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .. import codecs, synth
+from .. import synth
 from ..synth import TWO_PI, flit
+from .stats import per_image
 
 DFT_MAX_I = 3  # images 0..2: 16x20, 20x64, 64x100
 DFT_SCALE = 1_000_000
@@ -43,46 +44,29 @@ DFT_SCALE = 1_000_000
 
 def dft2d_rows(images: DataFrame) -> DataFrame:
     """Stage 1: (image_id, h, u, y, re1, im1) — per-scanline row
-    DFT of channel 0, fixed-point. Vectorized decode UDF; one
-    (h x w x w) tap tensor per image, no per-pixel Python."""
+    DFT of channel 0, fixed-point. One (h x w x w) tap tensor per
+    image; Python only emits the h x w output rows."""
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("image_id", "h", "u", "y", "re1", "im1")}
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload))
-                v = arr[:, :, 0].astype(np.float64)
-                h, w = v.shape
-                u = np.arange(w, dtype=np.int64)
-                x = np.arange(w, dtype=np.int64)
-                ang = TWO_PI * (u[:, None] * x[None, :]).astype(
-                    np.float64
-                ) / w
-                c, s = np.cos(ang), np.sin(ang)
-                # term = floor((v * tap) * 1e6), summed over x
-                re1 = np.floor(
-                    (v[:, None, :] * c[None, :, :]) * DFT_SCALE
-                ).astype(np.int64).sum(axis=2)
-                im1 = np.floor(
-                    (v[:, None, :] * (-s[None, :, :])) * DFT_SCALE
-                ).astype(np.int64).sum(axis=2)
-                yy, uu = np.meshgrid(
-                    np.arange(h, dtype=np.int64), u, indexing="ij"
-                )
-                n = h * w
-                out["image_id"].extend([image_id] * n)
-                out["h"].extend([h] * n)
-                out["u"].extend(uu.ravel())
-                out["y"].extend(yy.ravel())
-                out["re1"].extend(re1.ravel())
-                out["im1"].extend(im1.ravel())
-            yield pd.DataFrame(out)
+    def run(arr):
+        v = arr[:, :, 0].astype(np.float64)
+        h, w = v.shape
+        u = np.arange(w, dtype=np.int64)
+        ang = TWO_PI * (u[:, None] * u[None, :]).astype(np.float64) / w
+        c, s = np.cos(ang), np.sin(ang)
+        # term = floor((v * tap) * 1e6), summed over x
+        re1 = np.floor(
+            (v[:, None, :] * c[None, :, :]) * DFT_SCALE
+        ).astype(np.int64).sum(axis=2)
+        im1 = np.floor(
+            (v[:, None, :] * (-s[None, :, :])) * DFT_SCALE
+        ).astype(np.int64).sum(axis=2)
+        for y in range(h):
+            for k in range(w):
+                yield h, k, y, int(re1[y, k]), int(im1[y, k])
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, h int, u int, y int, "
-        "re1 bigint, im1 bigint",
+    return per_image(
+        images, run,
+        "image_id string, h int, u int, y int, re1 bigint, im1 bigint",
     )
 
 

@@ -23,11 +23,11 @@ ellipsoid mode is the default API and is golden-tested in pytest
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import synth, wkb
 from ..geodesic import A_WGS84, F_WGS84, Geodesic
+from .rowstage import per_row
 
 
 def geodesic_measures_df(
@@ -41,37 +41,27 @@ def geodesic_measures_df(
     enclosed area (floor(area / 1e6)), shell ring only."""
     geod = Geodesic(a, f)
 
-    def run(batches):
-        for pdf in batches:
-            ids, pk, ak = [], [], []
-            for fid, g in zip(pdf[id_col], pdf["geom_wkb"]):
-                ring = np.asarray(
-                    wkb.polygon_rings(bytes(g))[0], dtype=np.float64
-                )
-                if len(ring) >= 2 and (ring[0] == ring[-1]).all():
-                    ring = ring[:-1]
-                lons, lats = ring[:, 0], ring[:, 1]
-                n = len(ring)
-                per_key = 0
-                area = 0.0
-                for i in range(n):
-                    j = (i + 1) % n
-                    s12, a12, _ = geod.inverse(
-                        float(lats[i]), float(lons[i]),
-                        float(lats[j]), float(lons[j]),
-                    )
-                    per_key += int(np.floor(s12 * 10.0))
-                    area += a12
-                ids.append(fid)
-                pk.append(per_key)
-                ak.append(int(np.floor(-area / 1e6)))
-            yield pd.DataFrame(
-                {id_col: ids, "perim_dm_key": pk, "area_km2_key": ak}
+    def measures(fid, g):
+        ring = np.asarray(wkb.polygon_rings(bytes(g))[0], dtype=np.float64)
+        if len(ring) >= 2 and (ring[0] == ring[-1]).all():
+            ring = ring[:-1]
+        lons, lats = ring[:, 0], ring[:, 1]
+        n = len(ring)
+        per_key = 0
+        area = 0.0
+        for i in range(n):
+            j = (i + 1) % n
+            s12, a12, _ = geod.inverse(
+                float(lats[i]), float(lons[i]),
+                float(lats[j]), float(lons[j]),
             )
+            per_key += int(np.floor(s12 * 10.0))
+            area += a12
+        yield fid, per_key, int(np.floor(-area / 1e6))
 
-    return layer.select(id_col, "geom_wkb").mapInPandas(
-        run,
-        schema=f"{id_col} string, perim_dm_key bigint, area_km2_key bigint",
+    return per_row(
+        layer, [id_col, "geom_wkb"], measures,
+        f"{id_col} string, perim_dm_key bigint, area_km2_key bigint",
     )
 
 

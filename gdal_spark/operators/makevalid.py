@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import geom, wkb
+from .rowstage import per_row
 
 _SNAP = 1e-9  # vertex snap for arrangement coordinates
 _EPS_PROBE = 1e-7  # parity-probe offset off a segment midpoint
@@ -320,25 +321,17 @@ def makevalid_df(layer: DataFrame, id_col: str = "fid") -> DataFrame:
     feature; area_key = floor(1e6 * odd-region area) (pure +,*
     arithmetic -> bit-exact vs a closed-form SQL oracle)."""
 
-    def run(batches):
-        for pdf in batches:
-            ids, nr, ak, gw = [], [], [], []
-            for fid, g in zip(pdf[id_col], pdf["geom_wkb"]):
-                rings = wkb.polygon_rings(bytes(g))
-                out = make_valid_rings(rings)
-                area = rings_area_evenodd(out)
-                ids.append(fid)
-                nr.append(len(out))
-                ak.append(int(np.floor(area * 1e6)))
-                gw.append(
-                    wkb.encode_polygon(out[0], out[1:]) if out else None
-                )
-            yield pd.DataFrame(
-                {id_col: ids, "n_rings": nr, "area_key": ak, "geom_wkb": gw}
-            )
+    def repaired(fid, g):
+        out = make_valid_rings(wkb.polygon_rings(bytes(g)))
+        yield (
+            fid,
+            len(out),
+            int(np.floor(rings_area_evenodd(out) * 1e6)),
+            wkb.encode_polygon(out[0], out[1:]) if out else None,
+        )
 
-    return layer.select(id_col, "geom_wkb").mapInPandas(
-        run,
-        schema=f"{id_col} string, n_rings bigint, area_key bigint, "
+    return per_row(
+        layer, [id_col, "geom_wkb"], repaired,
+        f"{id_col} string, n_rings bigint, area_key bigint, "
         "geom_wkb binary",
     )

@@ -36,32 +36,47 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs, synth
-from .stats import channel_checksums, checksum_sql, gdal_checksum
+from .rowstage import per_row
+from .stats import (
+    channel_checksums, checksum_sql, gdal_checksum, per_image,
+)
 
 N_FRAMES = 4
 FRAME_BASE = 100_000
 
 
+def _block_sums(g: np.ndarray, rows: int, cols: int):
+    """(sum, pixel count) of ``g`` over the rows x cols block grid with
+    edges (k * size) // n, as object arrays of Python ints: the hash
+    comparisons cross-multiply them, exact at any image size."""
+    h, w = g.shape
+    yb = (np.arange(rows + 1, dtype=np.int64) * h) // rows
+    xb = (np.arange(cols + 1, dtype=np.int64) * w) // cols
+    bs = np.array(
+        [[int(g[yb[a] : yb[a + 1], xb[b] : xb[b + 1]].sum())
+          for b in range(cols)] for a in range(rows)],
+        dtype=object,
+    )
+    return bs, np.outer(np.diff(yb), np.diff(xb)).astype(object)
+
+
+def _halves(bits: np.ndarray):
+    """(hi, lo) 32-bit halves of a 64-bit hash whose bit k is the
+    row-major k-th entry of the 8 x 8 boolean ``bits``."""
+    v = sum(1 << int(k) for k in np.flatnonzero(bits))
+    return v >> 32, v & 0xFFFFFFFF
+
+
 def probe_headers(images: DataFrame) -> DataFrame:
     """(image_id, w, h, c, lossy) from payload headers only."""
 
-    def probe(batches):
-        for pdf in batches:
-            ws, hs, cs, lossy = [], [], [], []
-            for payload in pdf["bytes"]:
-                b = bytes(payload)
-                w, h, c = codecs.image_dims(b)
-                ws.append(w)
-                hs.append(h)
-                cs.append(c)
-                lossy.append(int(b[:4] == b"GSJ0"))
-            yield pd.DataFrame(
-                {"image_id": pdf["image_id"], "w": ws, "h": hs, "c": cs,
-                 "lossy": lossy}
-            )
+    def probe(image_id, payload):
+        b = bytes(payload)
+        yield (image_id, *codecs.image_dims(b), int(b[:4] == b"GSJ0"))
 
-    return images.select("image_id", "bytes").mapInPandas(
-        probe, schema="image_id string, w int, h int, c int, lossy int"
+    return per_row(
+        images, ["image_id", "bytes"], probe,
+        "image_id string, w int, h int, c int, lossy int",
     )
 
 
@@ -80,21 +95,13 @@ def resize_nearest(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest resize to (out_w, out_h) with pure integer index math
     (sx = (x*w)//out_w) — exact cross-engine. Output stays lossless."""
 
-    def run(batches):
-        for pdf in batches:
-            outs = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload))
-                h, w = arr.shape[:2]
-                xs = (np.arange(out_w, dtype=np.int64) * w) // out_w
-                ys = (np.arange(out_h, dtype=np.int64) * h) // out_h
-                small = arr[ys[:, None], xs[None, :], :]
-                outs.append((image_id, codecs.encode_image(small, "png")))
-            yield pd.DataFrame(outs, columns=["image_id", "bytes"])
+    def resize(arr):
+        h, w = arr.shape[:2]
+        xs = (np.arange(out_w, dtype=np.int64) * w) // out_w
+        ys = (np.arange(out_h, dtype=np.int64) * h) // out_h
+        yield (codecs.encode_image(arr[ys[:, None], xs[None, :], :], "png"),)
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, bytes binary"
-    )
+    return per_image(images, resize, "image_id string, bytes binary")
 
 
 def oracle_resize_checksum(n: int, max_i: int, out_w: int, out_h: int) -> str:
@@ -138,23 +145,14 @@ def sample_frames(
     """1->N frame explode: every ``every``-th frame as a lossless
     still: (image_id, frame_idx, bytes)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload, i in zip(
-                pdf["image_id"], pdf["bytes"], pdf["i"]
-            ):
-                frames = decode_video(bytes(payload), n_frames, int(i))
-                for f in range(0, n_frames, every):
-                    rows.append(
-                        (image_id, f, codecs.encode_image(frames[f], "png"))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "frame_idx", "bytes"]
-            )
+    def sample(image_id, payload, i):
+        frames = decode_video(bytes(payload), n_frames, int(i))
+        for f in range(0, n_frames, every):
+            yield image_id, f, codecs.encode_image(frames[f], "png")
 
-    return images.select("image_id", "i", "bytes").mapInPandas(
-        run, schema="image_id string, frame_idx int, bytes binary"
+    return per_row(
+        images, ["image_id", "bytes", "i"], sample,
+        "image_id string, frame_idx int, bytes binary",
     )
 
 
@@ -184,24 +182,14 @@ def oracle_frame_checksum(
 def frame_checksums(frames: DataFrame) -> DataFrame:
     """(image_id, frame_idx, channel, cks) per sampled frame."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, fi, payload in zip(
-                pdf["image_id"], pdf["frame_idx"], pdf["bytes"]
-            ):
-                arr = codecs.decode_image(bytes(payload))
-                for c in range(arr.shape[2]):
-                    rows.append(
-                        (image_id, int(fi), c, gdal_checksum(arr[:, :, c]))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "frame_idx", "channel", "cks"]
-            )
+    def cks(image_id, fi, payload):
+        arr = codecs.decode_image(bytes(payload))
+        for c in range(arr.shape[2]):
+            yield image_id, int(fi), c, gdal_checksum(arr[:, :, c])
 
-    return frames.mapInPandas(
-        run,
-        schema="image_id string, frame_idx bigint, channel bigint, cks bigint",
+    return per_row(
+        frames, ["image_id", "frame_idx", "bytes"], cks,
+        "image_id string, frame_idx bigint, channel bigint, cks bigint",
     )
 
 
@@ -216,33 +204,13 @@ def phash64_int(images: DataFrame) -> DataFrame:
     multiplied form of block_mean > global_mean, zero fp. Output
     (image_id, phash_hi, phash_lo) 32-bit halves."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload)).astype(np.int64)
-                h, w = arr.shape[:2]
-                g = arr.sum(axis=2)  # 3x gray, exact int
-                total = int(g.sum())
-                yb = (np.arange(9, dtype=np.int64) * h) // 8
-                xb = (np.arange(9, dtype=np.int64) * w) // 8
-                hi = lo = 0
-                for a in range(8):
-                    for b in range(8):
-                        blk = g[yb[a] : yb[a + 1], xb[b] : xb[b + 1]]
-                        bs = int(blk.sum())
-                        npx = blk.size
-                        k = a * 8 + b
-                        if bs * (w * h) > total * npx:
-                            if k < 32:
-                                lo |= 1 << k
-                            else:
-                                hi |= 1 << (k - 32)
-                rows.append((image_id, hi, lo))
-            yield pd.DataFrame(rows, columns=["image_id", "phash_hi", "phash_lo"])
+    def phash(arr):
+        g = arr.astype(np.int64).sum(axis=2)  # 3x gray, exact int
+        bs, npx = _block_sums(g, 8, 8)
+        yield _halves(bs * g.size > int(g.sum()) * npx)
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, phash_hi bigint, phash_lo bigint"
+    return per_image(
+        images, phash, "image_id string, phash_hi bigint, phash_lo bigint"
     )
 
 
@@ -338,43 +306,31 @@ def _augment_dims(w: int, h: int, k: int):
 def augment(images: DataFrame) -> DataFrame:
     """(image_id, channel, ow, oh, cks) of the augmented image."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload, i in zip(
-                pdf["image_id"], pdf["bytes"], pdf["i"]
-            ):
-                i = int(i)
-                arr = codecs.decode_image(bytes(payload))
-                h, w = arr.shape[:2]
-                k = i % 4
-                flip = i % 2 == 0
-                cw, chh, ow, oh = _augment_dims(w, h, k)
-                ox, oy = (w - cw) // 2, (h - chh) // 2
-                y2, x2 = np.mgrid[0:oh, 0:ow]
-                if k == 0:
-                    xf, yf = x2, y2
-                elif k == 1:
-                    xf, yf = y2, chh - 1 - x2
-                elif k == 2:
-                    xf, yf = cw - 1 - x2, chh - 1 - y2
-                else:
-                    xf, yf = cw - 1 - y2, x2
-                if flip:
-                    xf = cw - 1 - xf
-                out = arr[yf + oy, xf + ox, :]
+    def augmented(image_id, payload, i):
+        i = int(i)
+        arr = codecs.decode_image(bytes(payload))
+        h, w = arr.shape[:2]
+        k = i % 4
+        cw, chh, ow, oh = _augment_dims(w, h, k)
+        ox, oy = (w - cw) // 2, (h - chh) // 2
+        y2, x2 = np.mgrid[0:oh, 0:ow]
+        if k == 0:
+            xf, yf = x2, y2
+        elif k == 1:
+            xf, yf = y2, chh - 1 - x2
+        elif k == 2:
+            xf, yf = cw - 1 - x2, chh - 1 - y2
+        else:
+            xf, yf = cw - 1 - y2, x2
+        if i % 2 == 0:  # flip
+            xf = cw - 1 - xf
+        out = arr[yf + oy, xf + ox, :]
+        for c in range(out.shape[2]):
+            yield image_id, c, ow, oh, gdal_checksum(out[:, :, c])
 
-                for c in range(out.shape[2]):
-                    rows.append(
-                        (image_id, c, ow, oh, gdal_checksum(out[:, :, c]))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "channel", "ow", "oh", "cks"]
-            )
-
-    return images.select("image_id", "i", "bytes").mapInPandas(
-        run,
-        schema="image_id string, channel bigint, ow bigint, oh bigint, cks bigint",
+    return per_row(
+        images, ["image_id", "bytes", "i"], augmented,
+        "image_id string, channel bigint, ow bigint, oh bigint, cks bigint",
     )
 
 
@@ -699,8 +655,6 @@ def tar_shard_layout(
 def oracle_tar_shard_layout(
     n: int, maxcount: int = TAR_MAXCOUNT, n_writers: int = TAR_WRITERS
 ) -> str:
-    from .. import synth
-
     member = _member_bytes_sql("cast(w as bigint) * h * 3").replace(
         " div ", " // "
     )
@@ -737,38 +691,12 @@ def dhash64_int(images: DataFrame) -> DataFrame:
     """(image_id, dhash_hi, dhash_lo) 32-bit halves of the 64-bit
     gradient hash. mapInPandas decode, one pass, no shuffle."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload)).astype(np.int64)
-                h, w = arr.shape[:2]
-                g = arr.sum(axis=2)  # 3x gray, exact int
-                yb = (np.arange(9, dtype=np.int64) * h) // 8
-                xb = (np.arange(10, dtype=np.int64) * w) // 9
-                bs = np.empty((8, 9), dtype=np.int64)
-                npx = np.empty((8, 9), dtype=np.int64)
-                for a in range(8):
-                    for b in range(9):
-                        blk = g[yb[a] : yb[a + 1], xb[b] : xb[b + 1]]
-                        bs[a, b] = blk.sum()
-                        npx[a, b] = blk.size
-                hi = lo = 0
-                for a in range(8):
-                    for b in range(8):
-                        k = a * 8 + b
-                        if bs[a, b + 1] * npx[a, b] > bs[a, b] * npx[a, b + 1]:
-                            if k < 32:
-                                lo |= 1 << k
-                            else:
-                                hi |= 1 << (k - 32)
-                rows.append((image_id, hi, lo))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "dhash_hi", "dhash_lo"]
-            )
+    def dhash(arr):
+        bs, npx = _block_sums(arr.astype(np.int64).sum(axis=2), 8, 9)
+        yield _halves(bs[:, 1:] * npx[:, :-1] > bs[:, :-1] * npx[:, 1:])
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, dhash_hi bigint, dhash_lo bigint"
+    return per_image(
+        images, dhash, "image_id string, dhash_hi bigint, dhash_lo bigint"
     )
 
 
@@ -811,37 +739,9 @@ def oracle_dhash64(n: int, max_i: int) -> str:
 
 def ahash64_int(images: DataFrame) -> DataFrame:
     """(image_id, ahash_hi, ahash_lo) 32-bit halves of the 64-bit
-    average hash. mapInPandas decode, one pass, no shuffle."""
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload)).astype(np.int64)
-                h, w = arr.shape[:2]
-                g = arr.sum(axis=2)  # 3x gray, exact int
-                yb = (np.arange(9, dtype=np.int64) * h) // 8
-                xb = (np.arange(9, dtype=np.int64) * w) // 8
-                tot = int(g.sum())
-                npx_tot = h * w
-                hi = lo = 0
-                for a in range(8):
-                    for b in range(8):
-                        blk = g[yb[a] : yb[a + 1], xb[b] : xb[b + 1]]
-                        if int(blk.sum()) * npx_tot > tot * blk.size:
-                            k = a * 8 + b
-                            if k < 32:
-                                lo |= 1 << k
-                            else:
-                                hi |= 1 << (k - 32)
-                rows.append((image_id, hi, lo))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "ahash_hi", "ahash_lo"]
-            )
-
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, ahash_hi bigint, ahash_lo bigint"
-    )
+    average hash. Its bit test is ``phash64_int``'s (block sum x
+    image pixels > image sum x block pixels), so it runs that stage."""
+    return phash64_int(images).toDF("image_id", "ahash_hi", "ahash_lo")
 
 
 def oracle_ahash64(n: int, max_i: int) -> str:
@@ -891,7 +791,6 @@ def oracle_phash_clusters(n: int, max_i: int, max_hamming: int = 14) -> str:
     """Pair graph replayed from the phash oracle, labeled with the
     shared pointer-jump CTE chain."""
     from ..graphsql import pj_components_cte
-    from .. import synth
 
     base = oracle_phash_neardup(n, max_i, max_hamming)
     chain, final = pj_components_cte()
@@ -942,8 +841,6 @@ def mixup_pairs(images: DataFrame) -> DataFrame:
 
 
 def oracle_mixup_pairs(n: int, max_i: int) -> str:
-    from .. import synth
-
     val = synth.pixel_val_sql()
     # partner: raw (png-branch) synth pixels at i + MIXUP_OFFSET
     pval = (
@@ -979,8 +876,6 @@ def cutmix_pairs(images: DataFrame) -> DataFrame:
 
 
 def oracle_cutmix_pairs(n: int, max_i: int) -> str:
-    from .. import synth
-
     val = synth.pixel_val_sql()
     pval = (
         val.replace("fmt", "'png'")

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from .. import boolop, wkb
 from ..synth import flit
 from . import cells as cellmod
+from .rowstage import per_row
 
 
 # ---------------------------------------------------------------------------
@@ -494,53 +495,39 @@ def overlay_fold(
     join_type = "left" if how == "erase" else "inner"
     src = feats.join(partners, "id_a", join_type)
 
-    def fold(batches):
-        for pdf in batches:
-            rows = []
-            for id_a, wa, bs in zip(pdf["id_a"], pdf["wkb_a"], pdf["_bs"]):
-                A = _region_of_wkb(wa)
-                if bs is None or len(bs) == 0:
-                    out = A
-                elif how == "erase":
-                    out = A
-                    for ob in bs:
-                        out = boolop.boolean_regions(
-                            out, _region_of_wkb(ob), "diff"
-                        )
-                        if not out:
-                            break
-                else:  # clip: pieces A∩B_i minus previously-used B's
-                    out = []
-                    prior = []
-                    for ob in bs:
-                        piece = boolop.boolean_regions(
-                            A, _region_of_wkb(ob), "inter"
-                        )
-                        for pb in prior:
-                            piece = boolop.boolean_regions(
-                                piece, _region_of_wkb(pb), "diff"
-                            )
-                        out.extend(piece)
-                        prior.append(ob)
-                rows.append(
-                    (
-                        id_a,
-                        _encode_region(out),
-                        float(boolop.region_area(out)),
-                        len(out),
-                        int(boolop.region_nvert(out)),
+    def fold(id_a, wa, bs):
+        A = _region_of_wkb(wa)
+        if bs is None or len(bs) == 0:
+            out = A
+        elif how == "erase":
+            out = A
+            for ob in bs:
+                out = boolop.boolean_regions(out, _region_of_wkb(ob), "diff")
+                if not out:
+                    break
+        else:  # clip: pieces A∩B_i minus previously-used B's
+            out = []
+            prior = []
+            for ob in bs:
+                piece = boolop.boolean_regions(A, _region_of_wkb(ob), "inter")
+                for pb in prior:
+                    piece = boolop.boolean_regions(
+                        piece, _region_of_wkb(pb), "diff"
                     )
-                )
-            yield pd.DataFrame(
-                rows, columns=["id_a", "out_wkb", "area", "n_parts", "nvert"]
-            )
+                out.extend(piece)
+                prior.append(ob)
+        yield (
+            id_a,
+            _encode_region(out),
+            float(boolop.region_area(out)),
+            len(out),
+            int(boolop.region_nvert(out)),
+        )
 
-    return src.mapInPandas(
-        fold,
-        schema=(
-            "id_a string, out_wkb binary, area double, n_parts bigint, "
-            "nvert bigint"
-        ),
+    return per_row(
+        src, ["id_a", "wkb_a", "_bs"], fold,
+        "id_a string, out_wkb binary, area double, n_parts bigint, "
+        "nvert bigint",
     )
 
 

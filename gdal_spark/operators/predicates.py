@@ -29,11 +29,11 @@ uses the same stage with the a envelopes padded by the distance cap.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import geom, wkb
 from .overlay import _candidates, _open_ring
+from .rowstage import per_row
 
 
 # ---------------------------------------------------------------------------
@@ -211,23 +211,17 @@ def spatial_predicates(layer_a: DataFrame, layer_b: DataFrame) -> DataFrame:
     inclusively overlapping envelopes, so touching pairs reach the
     refine and pairs with disjoint envelopes never materialize; the
     refine drops the candidates it classifies as disjoint."""
-    cand = _candidates(layer_a, layer_b).select("id_a", "wkb_a", "id_b", "wkb_b")
 
-    def refine(batches):
-        for pdf in batches:
-            rows = []
-            for id_a, wa, id_b, wc in zip(
-                pdf["id_a"], pdf["wkb_a"], pdf["id_b"], pdf["wkb_b"]
-            ):
-                ra = [_open_ring(r) for r in wkb.polygon_rings(bytes(wa))]
-                rb = [_open_ring(r) for r in wkb.polygon_rings(bytes(wc))]
-                pred = classify(ra, rb)
-                if pred != "disjoint":
-                    rows.append((id_a, id_b, pred))
-            yield pd.DataFrame(rows, columns=["id_a", "id_b", "predicate"])
+    def refine(id_a, wa, id_b, wc):
+        ra = [_open_ring(r) for r in wkb.polygon_rings(bytes(wa))]
+        rb = [_open_ring(r) for r in wkb.polygon_rings(bytes(wc))]
+        pred = classify(ra, rb)
+        if pred != "disjoint":
+            yield id_a, id_b, pred
 
-    return cand.mapInPandas(
-        refine, schema="id_a string, id_b string, predicate string"
+    return per_row(
+        _candidates(layer_a, layer_b), ["id_a", "wkb_a", "id_b", "wkb_b"],
+        refine, "id_a string, id_b string, predicate string",
     )
 
 
@@ -320,7 +314,6 @@ def min_distance_pairs(
     cand = (
         _candidates(layer_a, layer_b, max_dist, _dist_cell_zoom(max_dist))
         .where("ax1 < bx0 OR bx1 < ax0 OR ay1 < by0 OR by1 < ay0")
-        .select("id_a", "wkb_a", "id_b", "wkb_b")
     )
 
     def seg_d2(P: np.ndarray, A: np.ndarray, B: np.ndarray) -> float:
@@ -338,26 +331,19 @@ def min_distance_pairs(
             ((px - qx) * (px - qx) + (py - qy) * (py - qy)).min()
         )
 
-    def refine(batches):
-        for pdf in batches:
-            rows = []
-            for id_a, wa, id_b, wc in zip(
-                pdf["id_a"], pdf["wkb_a"], pdf["id_b"], pdf["wkb_b"]
-            ):
-                ra = [_open_ring(r) for r in wkb.polygon_rings(bytes(wa))]
-                rb = [_open_ring(r) for r in wkb.polygon_rings(bytes(wc))]
-                pa = np.concatenate(ra)
-                pb = np.concatenate(rb)
-                ea0 = np.concatenate([r for r in ra])
-                ea1 = np.concatenate([np.roll(r, -1, axis=0) for r in ra])
-                eb0 = np.concatenate([r for r in rb])
-                eb1 = np.concatenate([np.roll(r, -1, axis=0) for r in rb])
-                d2 = min(seg_d2(pa, eb0, eb1), seg_d2(pb, ea0, ea1))
-                rows.append((id_a, id_b, int(np.floor(d2 * 1e6))))
-            yield pd.DataFrame(rows, columns=["id_a", "id_b", "d2_key"])
+    def refine(id_a, wa, id_b, wc):
+        ra = [_open_ring(r) for r in wkb.polygon_rings(bytes(wa))]
+        rb = [_open_ring(r) for r in wkb.polygon_rings(bytes(wc))]
+        pa = np.concatenate(ra)
+        pb = np.concatenate(rb)
+        ea1 = np.concatenate([np.roll(r, -1, axis=0) for r in ra])
+        eb1 = np.concatenate([np.roll(r, -1, axis=0) for r in rb])
+        d2 = min(seg_d2(pa, pb, eb1), seg_d2(pb, pa, ea1))
+        yield id_a, id_b, int(np.floor(d2 * 1e6))
 
-    return cand.mapInPandas(
-        refine, schema="id_a string, id_b string, d2_key bigint"
+    return per_row(
+        cand, ["id_a", "wkb_a", "id_b", "wkb_b"], refine,
+        "id_a string, id_b string, d2_key bigint",
     )
 
 

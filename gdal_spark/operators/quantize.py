@@ -14,10 +14,9 @@ bounded reconstruction error, exact-palette passthrough).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from .. import codecs
+from .stats import per_image
 
 
 def median_cut_boxes(arr: np.ndarray, n_colors: int = 16):
@@ -94,32 +93,20 @@ def quantize_images(images: DataFrame, n_colors: int = 16) -> DataFrame:
     index histogram entropy key, and mean squared reconstruction
     error key (rows-only driver check; invariants pinned in pytest)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload))
-                pal = median_cut_palette(arr, n_colors)
-                idx = dither_fs(arr, pal)
-                recon = pal[idx]
-                mse = float(
-                    ((recon.astype(np.float64) - arr.astype(np.float64)) ** 2).mean()
-                )
-                rows.append(
-                    (
-                        image_id,
-                        int(len(pal)),
-                        int(len(np.unique(idx))),
-                        int(np.floor(mse * 1000.0)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "palette_n", "used_n", "mse_key"]
-            )
+    def run(arr):
+        pal = median_cut_palette(arr, n_colors)
+        idx = dither_fs(arr, pal)
+        err = pal[idx].astype(np.float64) - arr.astype(np.float64)
+        mse = float((err ** 2).mean())
+        yield (
+            int(len(pal)),
+            int(len(np.unique(idx))),
+            int(np.floor(mse * 1000.0)),
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, palette_n bigint, used_n bigint, mse_key bigint",
+    return per_image(
+        images, run,
+        "image_id string, palette_n bigint, used_n bigint, mse_key bigint",
     )
 
 
@@ -150,33 +137,21 @@ def dither_fixed(images: DataFrame) -> DataFrame:
     entries used, index sum, and the scan-position-weighted index sum
     (order-sensitive — any diffusion divergence shifts it)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload))[
-                    : DITHER_N, : DITHER_N, :3
-                ]
-                idx = dither_fs(arr, FIXED_PAL)
-                k = idx.flatten().astype(np.int64)
-                p = np.arange(len(k), dtype=np.int64) + 1
-                rows.append(
-                    (
-                        image_id,
-                        int(len(np.unique(k))),
-                        int(k.sum()),
-                        int((k * p).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "used_n", "idx_sum", "idx_wsum"]
-            )
+    def run(arr):
+        yield _dither_keys(dither_fs(arr[:DITHER_N, :DITHER_N, :3], FIXED_PAL))
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, used_n bigint, idx_sum bigint, "
-        "idx_wsum bigint",
+    return per_image(
+        images, run,
+        "image_id string, used_n bigint, idx_sum bigint, idx_wsum bigint",
     )
+
+
+def _dither_keys(idx: np.ndarray):
+    """(used_n, idx_sum, idx_wsum) of a dithered index raster: distinct
+    entries, index sum and the scan-position-weighted index sum."""
+    k = idx.flatten().astype(np.int64)
+    p = np.arange(len(k), dtype=np.int64) + 1
+    return int(len(np.unique(k))), int(k.sum()), int((k * p).sum())
 
 
 def quantize_dither_keys(images: DataFrame, n_colors: int = 16) -> DataFrame:
@@ -195,47 +170,23 @@ def quantize_dither_keys(images: DataFrame, n_colors: int = 16) -> DataFrame:
     The DuckDB oracle replays the split tree set-based (15
     materialized rounds) and the diffusion serially (recursive CTE)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload))[
-                    : DITHER_N, : DITHER_N, :3
-                ]
-                pal, cnts = median_cut_boxes(arr, n_colors)
-                order = np.lexsort(
-                    (pal[:, 2], pal[:, 1], pal[:, 0], -cnts)
-                )
-                rank = np.empty(len(order), dtype=np.int64)
-                rank[order] = np.arange(len(order), dtype=np.int64)
-                code = pal[:, 0] * 65536 + pal[:, 1] * 256 + pal[:, 2]
-                pal_key = int(((rank + 1) * code).sum())
-                cnt_key = int(((rank + 1) * cnts).sum())
-                idx = dither_fs(arr, pal.astype(np.uint8))
-                k = idx.flatten().astype(np.int64)
-                p = np.arange(len(k), dtype=np.int64) + 1
-                rows.append(
-                    (
-                        image_id,
-                        int(len(pal)),
-                        pal_key,
-                        cnt_key,
-                        int(len(np.unique(k))),
-                        int(k.sum()),
-                        int((k * p).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "palette_n", "pal_key", "cnt_key",
-                    "used_n", "idx_sum", "idx_wsum",
-                ],
-            )
+    def run(arr):
+        arr = arr[:DITHER_N, :DITHER_N, :3]
+        pal, cnts = median_cut_boxes(arr, n_colors)
+        order = np.lexsort((pal[:, 2], pal[:, 1], pal[:, 0], -cnts))
+        rank = np.empty(len(order), dtype=np.int64)
+        rank[order] = np.arange(len(order), dtype=np.int64)
+        code = pal[:, 0] * 65536 + pal[:, 1] * 256 + pal[:, 2]
+        yield (
+            int(len(pal)),
+            int(((rank + 1) * code).sum()),
+            int(((rank + 1) * cnts).sum()),
+            *_dither_keys(dither_fs(arr, pal.astype(np.uint8))),
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, palette_n bigint, pal_key bigint, "
+    return per_image(
+        images, run,
+        "image_id string, palette_n bigint, pal_key bigint, "
         "cnt_key bigint, used_n bigint, idx_sum bigint, idx_wsum bigint",
     )
 
@@ -248,29 +199,14 @@ def pct2rgb_fixed(images: DataFrame) -> DataFrame:
     per-channel sums of the expanded image — any lookup divergence on
     any pixel shifts them."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload))[
-                    : DITHER_N, : DITHER_N, :3
-                ]
-                rgb = FIXED_PAL[dither_fs(arr, FIXED_PAL)].astype(np.int64)
-                rows.append(
-                    (
-                        image_id,
-                        int(rgb[..., 0].sum()),
-                        int(rgb[..., 1].sum()),
-                        int(rgb[..., 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "r_sum", "g_sum", "b_sum"]
-            )
+    def run(arr):
+        idx = dither_fs(arr[:DITHER_N, :DITHER_N, :3], FIXED_PAL)
+        rgb = FIXED_PAL[idx].astype(np.int64)
+        yield tuple(int(rgb[..., c].sum()) for c in range(3))
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, r_sum bigint, g_sum bigint, b_sum bigint",
+    return per_image(
+        images, run,
+        "image_id string, r_sum bigint, g_sum bigint, b_sum bigint",
     )
 
 

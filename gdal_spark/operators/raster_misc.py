@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs, synth
-from .stats import channel_checksums, checksum_sql
+from .stats import channel_checksums, checksum_sql, per_image
 
 PAN_OFFSET = 500_000
 W_BROVEY = 1.0 / 3.0
@@ -228,33 +228,21 @@ def fillnodata_rows(
     value). One mapInPandas stage, zero shuffle before the final
     per-(image, y) aggregation."""
 
-    def it(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                band = codecs.decode_image(bytes(payload))[:, :, 0]
-                bad = band == nodata
-                if not bad.any():
-                    continue
-                filled = fillnodata(
-                    band, nodata, max_distance, smoothing_iterations
-                )
-                for y in np.unique(np.nonzero(bad)[0]):
-                    m = bad[y]
-                    rows.append(
-                        (
-                            image_id,
-                            int(y),
-                            int(m.sum()),
-                            int(filled[y][m].astype(np.int64).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "y", "n_bad", "filled_sum"]
+    def run(arr):
+        band = arr[:, :, 0]
+        bad = band == nodata
+        if not bad.any():
+            return
+        filled = fillnodata(band, nodata, max_distance, smoothing_iterations)
+        for y in np.unique(np.nonzero(bad)[0]):
+            m = bad[y]
+            yield (
+                int(y), int(m.sum()), int(filled[y][m].astype(np.int64).sum())
             )
 
-    return images.select("image_id", "bytes").mapInPandas(
-        it, schema="image_id string, y bigint, n_bad bigint, filled_sum bigint"
+    return per_image(
+        images, run,
+        "image_id string, y bigint, n_bad bigint, filled_sum bigint",
     )
 
 
@@ -404,8 +392,6 @@ GRID_POINTS = {
 
 
 def _grid_points_sql() -> str:
-    from .. import synth
-
     rows = ", ".join(
         f"({i}, {synth.flit(x)}, {synth.flit(y)}, {synth.flit(v)})"
         for i, (x, y, v) in enumerate(
@@ -578,8 +564,6 @@ def oracle_grid_average_ellipse(
     width: int, height: int, radius1: float = 25.0, radius2: float = 10.0,
     angle_deg: float = 30.0, min_points: int = 2,
 ) -> str:
-    from .. import synth
-
     a = np.deg2rad(angle_deg)
     cos_a, sin_a = synth.flit(float(np.cos(a))), synth.flit(float(np.sin(a)))
     r1s, r2s = radius1 * radius1, radius2 * radius2
@@ -671,8 +655,6 @@ def grid_metrics(
 def oracle_grid_metrics(
     width: int, height: int, radius: float = GRID_AVG_RADIUS
 ) -> str:
-    from .. import synth
-
     r2 = synth.flit(radius * radius)
     k6 = "cast(floor({expr} * 1000000.0E0 + 5.0E-4) as bigint)"
     return f"""
@@ -703,8 +685,6 @@ FROM pv GROUP BY 1
 def oracle_grid_average(
     width: int, height: int, radius: float = GRID_AVG_RADIUS
 ) -> str:
-    from .. import synth
-
     r2 = synth.flit(radius * radius)
     return f"""
 WITH g AS (SELECT gx, gy FROM range(0, {width}) a(gx), range(0, {height}) b(gy)),
@@ -819,8 +799,6 @@ def grid_linear(
 
 
 def _linear_points_sql() -> str:
-    from .. import synth
-
     rows = ", ".join(
         f"({i}, {synth.flit(x)}, {synth.flit(y)}, {synth.flit(v)})"
         for i, (x, y, v) in enumerate(
@@ -836,8 +814,6 @@ def oracle_grid_linear(width: int, height: int) -> str:
     source as the Spark broadcast); barycentric containment +
     interpolation and the nearest fallback re-run per node with the
     identical + * / expression — bit-exact parity."""
-    from .. import synth
-
     qx = LINEAR_POINTS["px"]
     qy = LINEAR_POINTS["py"]
     qv = LINEAR_POINTS["v"]

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import codecs, synth
+from .rowstage import per_row
 
 RES = "(0.1E0 / w)"
 SPAN_Y = "(h * (0.1E0 / w))"
@@ -163,32 +164,24 @@ def point_probe(spark: SparkSession, images_meta: DataFrame, sites: DataFrame) -
         f"cast(floor((lat - slat) / {RES}) as int) AS py",
     )
 
-    def probe(batches):
-        for pdf in batches:
-            rows = {"site_id": [], "image_id": [], "px": [], "py": [],
-                    "ch": [], "val": []}
-            for site_id, image_id, i, w, h, fmt, px, py in zip(
-                pdf["site_id"], pdf["image_id"], pdf["i"], pdf["w"],
-                pdf["h"], pdf["fmt"], pdf["px"], pdf["py"],
-            ):
-                arr = codecs.decode_image(
-                    codecs.encode_image(
-                        codecs.make_pixels(int(i), int(w), int(h)), fmt
-                    )
-                )
-                for c in range(3):
-                    rows["site_id"].append(site_id)
-                    rows["image_id"].append(image_id)
-                    rows["px"].append(int(px))
-                    rows["py"].append(int(py))
-                    rows["ch"].append(c)
-                    rows["val"].append(int(arr[int(py), int(px), c]))
-            yield pd.DataFrame(rows)
+    def probe(site_id, image_id, i, w, h, fmt, px, py):
+        arr = _regenerated(i, w, h, fmt)
+        for c in range(3):
+            yield site_id, image_id, px, py, c, int(arr[py, px, c])
 
-    return matched.mapInPandas(
+    return per_row(
+        matched, ["site_id", "image_id", "i", "w", "h", "fmt", "px", "py"],
         probe,
-        schema="site_id string, image_id string, px int, py int, "
+        "site_id string, image_id string, px int, py int, "
         "ch bigint, val bigint",
+    )
+
+
+def _regenerated(i, w, h, fmt) -> np.ndarray:
+    """The decoded pixels of synth image ``i``, regenerated from its
+    metadata and round-tripped through its codec ``fmt``."""
+    return codecs.decode_image(
+        codecs.encode_image(codecs.make_pixels(int(i), int(w), int(h)), fmt)
     )
 
 
@@ -473,45 +466,29 @@ def point_probe_bilinear(
         f"((lat - slat) / {RES}) - 0.5E0 AS dfy",
     )
 
-    def probe(batches):
-        for pdf in batches:
-            rows = {"site_id": [], "image_id": [], "ch": [], "val_key": []}
-            for site_id, image_id, i, w, h, fmt, dfx, dfy in zip(
-                pdf["site_id"], pdf["image_id"], pdf["i"], pdf["w"],
-                pdf["h"], pdf["fmt"], pdf["dfx"], pdf["dfy"],
-            ):
-                arr = codecs.decode_image(
-                    codecs.encode_image(
-                        codecs.make_pixels(int(i), int(w), int(h)), fmt
-                    )
-                ).astype(np.float64)
-                w_i, h_i = int(w), int(h)
-                xl = min(max(int(np.floor(dfx)), 0), w_i - 2)
-                yl = min(max(int(np.floor(dfy)), 0), h_i - 2)
-                fx = min(max(dfx - xl, 0.0), 1.0)
-                fy = min(max(dfy - yl, 0.0), 1.0)
-                for c in range(3):
-                    v00 = arr[yl, xl, c]
-                    v10 = arr[yl, xl + 1, c]
-                    v01 = arr[yl + 1, xl, c]
-                    v11 = arr[yl + 1, xl + 1, c]
-                    interp = (
-                        v00 * (1.0 - fx) * (1.0 - fy)
-                        + v10 * fx * (1.0 - fy)
-                        + v01 * (1.0 - fx) * fy
-                        + v11 * fx * fy
-                    )
-                    rows["site_id"].append(site_id)
-                    rows["image_id"].append(image_id)
-                    rows["ch"].append(c)
-                    rows["val_key"].append(
-                        int(np.floor(interp * 1e6 + 5e-4))
-                    )
-            yield pd.DataFrame(rows)
+    def probe(site_id, image_id, i, w, h, fmt, dfx, dfy):
+        arr = _regenerated(i, w, h, fmt).astype(np.float64)
+        w_i, h_i = int(w), int(h)
+        xl = min(max(int(np.floor(dfx)), 0), w_i - 2)
+        yl = min(max(int(np.floor(dfy)), 0), h_i - 2)
+        fx = min(max(dfx - xl, 0.0), 1.0)
+        fy = min(max(dfy - yl, 0.0), 1.0)
+        for c in range(3):
+            v00 = arr[yl, xl, c]
+            v10 = arr[yl, xl + 1, c]
+            v01 = arr[yl + 1, xl, c]
+            v11 = arr[yl + 1, xl + 1, c]
+            interp = (
+                v00 * (1.0 - fx) * (1.0 - fy)
+                + v10 * fx * (1.0 - fy)
+                + v01 * (1.0 - fx) * fy
+                + v11 * fx * fy
+            )
+            yield site_id, image_id, c, int(np.floor(interp * 1e6 + 5e-4))
 
-    return matched.mapInPandas(
-        probe,
-        schema="site_id string, image_id string, ch bigint, val_key bigint",
+    return per_row(
+        matched, ["site_id", "image_id", "i", "w", "h", "fmt", "dfx", "dfy"],
+        probe, "site_id string, image_id string, ch bigint, val_key bigint",
     )
 
 

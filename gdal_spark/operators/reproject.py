@@ -31,10 +31,10 @@ ogr/ogrct.cpp:1590 (CRS<->CRS leg).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import codecs, resample, srs, synth
+from .rowstage import per_row
 from .stats import channel_checksums, checksum_sql, gdal_checksum
 
 
@@ -425,35 +425,6 @@ def _suggest_grid(lon, lat, w, h, lon0, fn, dst_w=DST_W):
     return (minx, dres, 0.0, maxy, 0.0, -dres), h_eff, w_eff
 
 
-def _reproject_utm_iter(batches, dst_w: int, alg: str):
-    for pdf in batches:
-        rows = []
-        for image_id, payload, lon, lat, w, h in zip(
-            pdf["image_id"], pdf["bytes"], pdf["lon"], pdf["lat"],
-            pdf["w"], pdf["h"],
-        ):
-            zone = int(srs.utm_zone(np.array([lon]), np.array([lat]))[0])
-            lon0 = zone * 6.0 - 183.0
-            fn = srs.FN_SOUTH if lat < 0.0 else 0.0
-
-            def suggest(*g, lon0=lon0, fn=fn):
-                return _suggest_grid(*g, lon0, fn, dst_w)
-
-            def transform(gx, gy, lon0=lon0, fn=fn):
-                return srs.tm_inverse(gx, np.asarray(gy) - fn, lon0)
-
-            warped = _warp_suggested(
-                payload, lon, lat, w, h, alg, suggest, transform
-            )
-            for c in range(warped.shape[2]):
-                rows.append(
-                    (image_id, zone, c, gdal_checksum(warped[:, :, c]))
-                )
-        yield pd.DataFrame(
-            rows, columns=["image_id", "zone", "channel", "cks"]
-        )
-
-
 def reproject_utm(
     images: DataFrame, dst_w: int = DST_W, alg: str = "near"
 ) -> DataFrame:
@@ -461,9 +432,22 @@ def reproject_utm(
     its own zone; per-channel GDAL checksums of the result. One
     mapInPandas stage, zero shuffle — embarrassingly parallel at any
     table size."""
-    return images.select("image_id", *_WARP_COLS).mapInPandas(
-        lambda it: _reproject_utm_iter(it, dst_w, alg),
-        schema="image_id string, zone bigint, channel bigint, cks bigint",
+
+    def run(image_id, payload, lon, lat, w, h):
+        zone = int(srs.utm_zone(np.array([lon]), np.array([lat]))[0])
+        lon0 = zone * 6.0 - 183.0
+        fn = srs.FN_SOUTH if lat < 0.0 else 0.0
+        warped = _warp_suggested(
+            payload, lon, lat, w, h, alg,
+            lambda *g: _suggest_grid(*g, lon0, fn, dst_w),
+            lambda gx, gy: srs.tm_inverse(gx, np.asarray(gy) - fn, lon0),
+        )
+        for c in range(warped.shape[2]):
+            yield image_id, zone, c, gdal_checksum(warped[:, :, c])
+
+    return per_row(
+        images, ["image_id", *_WARP_COLS], run,
+        "image_id string, zone bigint, channel bigint, cks bigint",
     )
 
 

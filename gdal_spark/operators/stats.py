@@ -19,10 +19,10 @@ Reference semantics:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs
+from .rowstage import per_row
 
 CHECKSUM_PRIMES = np.array([7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43], dtype=np.int64)
 
@@ -59,47 +59,31 @@ def checksum_sql(val: str, pos: str) -> str:
     )
 
 
+def per_image(images: DataFrame, fn, schema: str) -> DataFrame:
+    """``per_row`` over decoded images: ``fn(arr)`` yields output rows
+    without the ``image_id``, which goes first."""
+    return per_row(images, ["image_id", "bytes"], lambda i, b: (
+        (i, *row) for row in fn(codecs.decode_image(bytes(b)))), schema)
+
+
 def channel_checksums(df: DataFrame, cols, fn) -> DataFrame:
     """One ``(image_id, channel, cks)`` row per channel of ``fn(*row)``:
-    a mapInPandas over ``image_id`` + ``cols`` where ``fn`` takes one
+    a ``per_row`` over ``image_id`` + ``cols`` where ``fn`` takes one
     row's ``cols`` values and returns an H x W x C array."""
 
-    def run(batches):
-        for pdf in batches:
-            ids, chans, cks = [], [], []
-            rows = zip(pdf["image_id"], *(pdf[c] for c in cols))
-            for image_id, *vals in rows:
-                out = fn(*vals)
-                for ch in range(out.shape[2]):
-                    ids.append(image_id)
-                    chans.append(ch)
-                    cks.append(gdal_checksum(out[:, :, ch]))
-            yield pd.DataFrame({"image_id": ids, "channel": chans, "cks": cks})
+    def rows(image_id, *vals):
+        out = fn(*vals)
+        for ch in range(out.shape[2]):
+            yield image_id, ch, gdal_checksum(out[:, :, ch])
 
-    return df.select("image_id", *cols).mapInPandas(
-        run, schema="image_id string, channel bigint, cks bigint"
-    )
-
-
-def _decode_iter(batches, fn, columns):
-    """Shared mapInPandas driver: decode each image, emit fn(arr) rows."""
-    for pdf in batches:
-        out = {c: [] for c in columns}
-        for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-            arr = codecs.decode_image(bytes(payload))
-            for row in fn(arr):
-                out["image_id"].append(image_id)
-                for c, v in zip(columns[1:], row):
-                    out[c].append(v)
-        yield pd.DataFrame(out)
+    return per_row(df, ["image_id", *cols], rows,
+                   "image_id string, channel bigint, cks bigint")
 
 
 def band_stats(images: DataFrame, per_channel: bool = True) -> DataFrame:
     """Per-image(, per-channel) exact partial moments:
     (image_id, channel, n_px, sum_v, sum_sq, min_v, max_v).
     Combine to mean/stddev with ``finalize_stats``."""
-    cols = ["image_id", "channel", "n_px", "sum_v", "sum_sq", "min_v", "max_v"]
-
     def fn(arr):
         a = arr.astype(np.int64)
         chans = range(a.shape[2]) if per_channel else [None]
@@ -118,9 +102,7 @@ def band_stats(images: DataFrame, per_channel: bool = True) -> DataFrame:
         "image_id string, channel int, n_px bigint, sum_v bigint, "
         "sum_sq bigint, min_v int, max_v int"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def band_stats_approx(images: DataFrame, step: int = 4) -> DataFrame:
@@ -132,8 +114,6 @@ def band_stats_approx(images: DataFrame, step: int = 4) -> DataFrame:
     y % step == 0) — at 100 TB this is the difference between reading
     1/step^2 of the bytes and all of them, with the same partial+final
     combine shape as the exact pass."""
-    cols = ["image_id", "channel", "n_px", "sum_v", "sum_sq", "min_v", "max_v"]
-
     def fn(arr):
         a = arr.astype(np.int64)
         for ch in range(a.shape[2]):
@@ -151,9 +131,7 @@ def band_stats_approx(images: DataFrame, step: int = 4) -> DataFrame:
         "image_id string, channel int, n_px bigint, sum_v bigint, "
         "sum_sq bigint, min_v int, max_v int"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def finalize_stats(partials: DataFrame, group_cols=("channel",)) -> DataFrame:
@@ -183,7 +161,6 @@ def histogram(images: DataFrame, bins: int = 16) -> DataFrame:
     """Per-image histogram over all channels: (image_id, bin, n).
     256 must divide bins*step; bin = val >> shift."""
     shift = 8 - int(np.log2(bins))
-    cols = ["image_id", "bin", "n"]
 
     def fn(arr):
         counts = np.bincount((arr.reshape(-1) >> shift), minlength=bins)
@@ -191,23 +168,13 @@ def histogram(images: DataFrame, bins: int = 16) -> DataFrame:
             if counts[b]:
                 yield (int(b), int(counts[b]))
 
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols),
-        schema="image_id string, bin int, n bigint",
-    )
+    return per_image(images, fn, "image_id string, bin int, n bigint")
 
 
 def checksums(images: DataFrame) -> DataFrame:
     """Per-image per-channel GDAL checksum: (image_id, channel, cks)."""
-    cols = ["image_id", "channel", "cks"]
-
-    def fn(arr):
-        for ch in range(arr.shape[2]):
-            yield (ch, gdal_checksum(arr[:, :, ch]))
-
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols),
-        schema="image_id string, channel int, cks int",
+    return channel_checksums(
+        images, ["bytes"], lambda b: codecs.decode_image(bytes(b))
     )
 
 
@@ -222,8 +189,6 @@ def band_stats_nodata(
     (gcore/gdalrasterband.cpp: pixels equal to the band nodata are
     skipped from count/sum/min/max). Same partial shape as
     band_stats; n_px counts only valid pixels."""
-    cols = ["image_id", "channel", "n_px", "sum_v", "sum_sq", "min_v", "max_v"]
-
     def fn(arr):
         a = arr.astype(np.int64)
         for ch in range(a.shape[2]):
@@ -244,9 +209,7 @@ def band_stats_nodata(
         "image_id string, channel int, n_px bigint, sum_v bigint, "
         "sum_sq bigint, min_v int, max_v int"
     )
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols), schema=schema
-    )
+    return per_image(images, fn, schema)
 
 
 def oracle_band_stats_nodata(
@@ -286,10 +249,8 @@ def mask_band(images: DataFrame, nodata=(0, 0, 0)) -> DataFrame:
         mask = np.where(valid, 255, 0).astype(np.int64)
         yield (int(valid.sum()), gdal_checksum(mask))
 
-    cols = ["image_id", "n_valid", "mask_cks"]
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols),
-        schema="image_id string, n_valid bigint, mask_cks bigint",
+    return per_image(
+        images, fn, "image_id string, n_valid bigint, mask_cks bigint"
     )
 
 
@@ -339,10 +300,8 @@ def rat_table(images: DataFrame, n_classes: int = 16) -> DataFrame:
             if counts[c]:
                 yield (int(c), int(counts[c]), int(sums[c]))
 
-    cols = ["image_id", "class", "n_px", "sum_b1"]
-    return images.select("image_id", "bytes").mapInPandas(
-        lambda it: _decode_iter(it, fn, cols),
-        schema="image_id string, class int, n_px bigint, sum_b1 bigint",
+    return per_image(
+        images, fn, "image_id string, class int, n_px bigint, sum_b1 bigint"
     )
 
 

@@ -240,8 +240,6 @@ def _modal_gram(grams: DataFrame, prefix: str) -> DataFrame:
     """Per-doc modal gram (highest count, ties to the lexicographically
     smallest gram): map-side-combined groupBy then a per-doc top-1
     window — both shuffle on doc_id only, skew-free at corpus scale."""
-    from pyspark.sql import Window
-
     counts = grams.groupBy("doc_id", "g").agg(F.count("*").alias("n"))
     # user-numbered repartition ahead of the per-doc window: AQE
     # coalesces the small-byte-size gram counts to ONE partition and
@@ -554,8 +552,6 @@ def pack_sequences(docs: DataFrame, max_len: int = PACK_LEN) -> DataFrame:
     token prefix sum; the span explode is map-side. Sources are the
     packing shards, so window width is bounded by shard size, never
     corpus size."""
-    from pyspark.sql import Window
-
     t = _with_tokens(docs).selectExpr(
         "source", "doc_id", "cast(size(toks) as bigint) AS n_tok"
     ).filter("n_tok > 0")
@@ -621,8 +617,6 @@ def tfidf_topk(docs: DataFrame, k: int = TFIDF_K) -> DataFrame:
     df-lookup join broadcasts while the vocab is small and degrades to
     a shuffle hash join at real vocab sizes; final top-k is a window
     over doc_id (bounded per-doc width)."""
-    from pyspark.sql import Window
-
     toks = _with_tokens(docs).select(
         "doc_id", F.explode("toks").alias("token")
     )
@@ -733,8 +727,6 @@ def epoch_shuffle(
     ).selectExpr(
         "doc_id", "epoch", "key", f"key % {n_shards} AS shard"
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("epoch", "shard").orderBy("key", "doc_id")
     return keyed.select(
         F.col("epoch").cast("bigint").alias("epoch"),
@@ -847,8 +839,6 @@ def domain_cap(docs: DataFrame, cap: int = DOMAIN_CAP) -> DataFrame:
     O(domain size log domain size) within one task, and the salting
     machinery (operators/skew.py) applies if a single domain outgrows
     a task."""
-    from pyspark.sql import Window
-
     t = docs.selectExpr(
         "doc_id", "source", f"(doc_id * {KNUTH}) % 4294967296 AS h"
     )
@@ -1421,8 +1411,6 @@ def url_canon_sql(dialect: str, url: str = "url_raw") -> str:
 def url_canonicalize(docs: DataFrame) -> DataFrame:
     """(doc_id, url_canon, canon_id, is_dup): canonical form + the
     smallest doc_id sharing it (the keeper under URL-level dedup)."""
-    from pyspark.sql import Window
-
     staged = docs.selectExpr(
         "doc_id", f"{url_plant_sql('spark')} AS url_raw"
     ).selectExpr("doc_id", f"{url_canon_sql('spark')} AS url_canon")
@@ -1466,8 +1454,6 @@ ZIPF_TOPK = 64
 def zipf_fit(docs: DataFrame, k: int = ZIPF_TOPK) -> DataFrame:
     """One row: (k_used, slope_key, icept_key) of the log-log LSQ
     over the top-k token frequencies (1e6-keyed)."""
-    from pyspark.sql import Window
-
     toks = docs.selectExpr(
         f"explode({tokens_sql('spark')}) AS tok"
     )

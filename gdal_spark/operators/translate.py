@@ -24,12 +24,13 @@ rounded half-up and clamped to the byte range
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs, synth
+from .rowstage import per_row
 from .stats import (
     CHECKSUM_PRIMES, channel_checksums, checksum_sql, gdal_checksum,
+    per_image,
 )
 
 SAFE_FUNCS = {
@@ -45,30 +46,21 @@ def translate(
 ) -> DataFrame:
     """Crop + rescale; output per-channel checksums + dims."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload)).astype(np.float64)
-                if srcwin is not None:
-                    x0, y0, w_, h_ = srcwin
-                    arr = arr[y0 : y0 + h_, x0 : x0 + w_, :]
-                if scale is not None:
-                    s0, s1, d0, d1 = scale
-                    arr = (arr - s0) * (d1 - d0) / (s1 - s0) + d0
-                out = np.floor(np.clip(arr, 0.0, 255.0) + 0.5).astype(np.uint8)
-                for c in range(out.shape[2]):
-                    rows.append(
-                        (image_id, c, gdal_checksum(out[:, :, c]),
-                         out.shape[1], out.shape[0])
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "channel", "cks", "out_w", "out_h"]
-            )
+    def run(arr):
+        arr = arr.astype(np.float64)
+        if srcwin is not None:
+            x0, y0, w_, h_ = srcwin
+            arr = arr[y0 : y0 + h_, x0 : x0 + w_, :]
+        if scale is not None:
+            s0, s1, d0, d1 = scale
+            arr = (arr - s0) * (d1 - d0) / (s1 - s0) + d0
+        out = np.floor(np.clip(arr, 0.0, 255.0) + 0.5).astype(np.uint8)
+        for c in range(out.shape[2]):
+            yield c, gdal_checksum(out[:, :, c]), out.shape[1], out.shape[0]
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run,
-        schema="image_id string, channel bigint, cks bigint, "
+    return per_image(
+        images, run,
+        "image_id string, channel bigint, cks bigint, "
         "out_w bigint, out_h bigint",
     )
 
@@ -137,23 +129,17 @@ def calc(images: DataFrame, expr: str) -> DataFrame:
     against an AST whitelist (arithmetic + SAFE_FUNCS only) before
     evaluation, so untrusted strings cannot escape the namespace."""
     _validate_calc_expr(expr)
+    code = compile(expr, "<calc>", "eval")
 
-    def run(batches):
-        code = compile(expr, "<calc>", "eval")
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload)).astype(np.float64)
-                ns = {"A": arr[:, :, 0], "B": arr[:, :, 1], "C": arr[:, :, 2],
-                      **SAFE_FUNCS}
-                res = eval(code, {"__builtins__": {}}, ns)
-                out = np.floor(np.clip(res, 0.0, 255.0) + 0.5).astype(np.uint8)
-                rows.append((image_id, gdal_checksum(out)))
-            yield pd.DataFrame(rows, columns=["image_id", "cks"])
+    def run(arr):
+        arr = arr.astype(np.float64)
+        ns = {"A": arr[:, :, 0], "B": arr[:, :, 1], "C": arr[:, :, 2],
+              **SAFE_FUNCS}
+        res = eval(code, {"__builtins__": {}}, ns)
+        yield (gdal_checksum(np.floor(np.clip(res, 0.0, 255.0) + 0.5)
+                             .astype(np.uint8)),)
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, cks bigint"
-    )
+    return per_image(images, run, "image_id string, cks bigint")
 
 
 def oracle_calc_halfsum(n: int, max_i: int) -> str:
@@ -194,40 +180,25 @@ def translate_projwin(
     """(image_id, channel, cks, out_w, out_h) for every image whose
     footprint intersects the geo window."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload, lon, lat, w, h in zip(
-                pdf["image_id"], pdf["bytes"], pdf["lon"], pdf["lat"],
-                pdf["w"], pdf["h"],
-            ):
-                lon, lat = float(lon), float(lat)
-                w, h = int(w), int(h)
-                res = 0.1 / w
-                x0 = int(np.floor((ulx - lon) / res + 0.001))
-                y0 = int(np.floor((lat - uly) / res + 0.001))
-                cw = int(np.floor((lrx - ulx) / res + 0.5))
-                chh = int(np.floor((uly - lry) / res + 0.5))
-                xs, ys = max(x0, 0), max(y0, 0)
-                xe, ye = min(x0 + cw, w), min(y0 + chh, h)
-                if xe <= xs or ye <= ys:
-                    continue
-                arr = codecs.decode_image(bytes(payload))[ys:ye, xs:xe, :]
-                for c in range(arr.shape[2]):
-                    rows.append(
-                        (image_id, c, gdal_checksum(arr[:, :, c]),
-                         xe - xs, ye - ys)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "channel", "cks", "out_w", "out_h"],
-            )
+    def run(image_id, payload, lon, lat, w, h):
+        lon, lat = float(lon), float(lat)
+        w, h = int(w), int(h)
+        res = 0.1 / w
+        x0 = int(np.floor((ulx - lon) / res + 0.001))
+        y0 = int(np.floor((lat - uly) / res + 0.001))
+        cw = int(np.floor((lrx - ulx) / res + 0.5))
+        chh = int(np.floor((uly - lry) / res + 0.5))
+        xs, ys = max(x0, 0), max(y0, 0)
+        xe, ye = min(x0 + cw, w), min(y0 + chh, h)
+        if xe <= xs or ye <= ys:
+            return
+        arr = codecs.decode_image(bytes(payload))[ys:ye, xs:xe, :]
+        for c in range(arr.shape[2]):
+            yield image_id, c, gdal_checksum(arr[:, :, c]), xe - xs, ye - ys
 
-    return images.select(
-        "image_id", "bytes", "lon", "lat", "w", "h"
-    ).mapInPandas(
-        run,
-        schema="image_id string, channel bigint, cks bigint, "
+    return per_row(
+        images, ["image_id", "bytes", "lon", "lat", "w", "h"], run,
+        "image_id string, channel bigint, cks bigint, "
         "out_w bigint, out_h bigint",
     )
 
@@ -394,27 +365,17 @@ def pixel_functions_complex(images: DataFrame) -> DataFrame:
     half of the registered table (real/imag/complex/conj/mod/phase/
     cmul/div/polar/dB2amp/dB2pow/interpolate_exp/replace_nodata)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload)).astype(np.float64)
-                v0, v1, v2 = arr[:, :, 0], arr[:, :, 1], arr[:, :, 2]
-                for name, f, _ in _PIXELFNS_CPLX:
-                    re, im = f(v0, v1, v2)
-                    key = int(
-                        np.floor(re * PIXELFN_SCALE + PIXELFN_NUDGE).sum()
-                    )
-                    if im is not None:
-                        key += int(
-                            np.floor(im * PIXELFN_SCALE + PIXELFN_NUDGE).sum()
-                        )
-                    rows.append((image_id, name, key))
-            yield pd.DataFrame(rows, columns=["image_id", "fn", "key_sum"])
+    def run(arr):
+        arr = arr.astype(np.float64)
+        v0, v1, v2 = arr[:, :, 0], arr[:, :, 1], arr[:, :, 2]
+        for name, f, _ in _PIXELFNS_CPLX:
+            re, im = f(v0, v1, v2)
+            key = int(np.floor(re * PIXELFN_SCALE + PIXELFN_NUDGE).sum())
+            if im is not None:
+                key += int(np.floor(im * PIXELFN_SCALE + PIXELFN_NUDGE).sum())
+            yield name, key
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, fn string, key_sum bigint"
-    )
+    return per_image(images, run, "image_id string, fn string, key_sum bigint")
 
 
 def oracle_pixel_functions_complex(n: int, max_i: int) -> str:
@@ -451,24 +412,14 @@ def pixel_functions(images: DataFrame) -> DataFrame:
     """(image_id, fn, key_sum) for the registered-pixel-function
     suite over the decoded bands."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload)).astype(np.float64)
-                v0, v1, v2 = arr[:, :, 0], arr[:, :, 1], arr[:, :, 2]
-                for name, f, _ in _PIXELFNS:
-                    out = f(v0, v1, v2)
-                    rows.append(
-                        (image_id, name,
-                         int(np.floor(out * PIXELFN_SCALE + PIXELFN_NUDGE)
-                             .sum()))
-                    )
-            yield pd.DataFrame(rows, columns=["image_id", "fn", "key_sum"])
+    def run(arr):
+        arr = arr.astype(np.float64)
+        v0, v1, v2 = arr[:, :, 0], arr[:, :, 1], arr[:, :, 2]
+        for name, f, _ in _PIXELFNS:
+            out = f(v0, v1, v2)
+            yield name, int(np.floor(out * PIXELFN_SCALE + PIXELFN_NUDGE).sum())
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, fn string, key_sum bigint"
-    )
+    return per_image(images, run, "image_id string, fn string, key_sum bigint")
 
 
 def oracle_pixel_functions(n: int, max_i: int) -> str:

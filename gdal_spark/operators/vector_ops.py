@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import synth, wkb
+from .rowstage import per_row
 
 
 def _ring_array(ring) -> np.ndarray:
@@ -49,39 +50,27 @@ def perimeter(r: np.ndarray) -> float:
 def geom_fields(polys: DataFrame) -> DataFrame:
     """(poly_id, area_key, perim_key, n_vertices, cx_key, cy_key)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for poly_id, g in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                rings = [_ring_array(r) for r in wkb.polygon_rings(bytes(g))]
-                area = shoelace_area(rings[0]) - sum(
-                    shoelace_area(r) for r in rings[1:]
-                )
-                per = perimeter(rings[0])
-                nv = sum(len(r) for r in rings)
-                minx, miny, maxx, maxy = wkb.envelope(bytes(g))
-                rows.append(
-                    (
-                        poly_id,
-                        # 1e3 quantum + 1e-6 nudge: shoelace/sqrt
-                        # op-order noise (~1e-10) can land exactly-
-                        # representable values a hair below the grid
-                        int(np.floor(area * 1e3 + 1e-6)),
-                        int(np.floor(per * 1e3 + 1e-6)),
-                        nv,
-                        int(np.floor((minx + maxx) / 2.0 * 1e6)),
-                        int(np.floor((miny + maxy) / 2.0 * 1e6)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["poly_id", "area_key", "perim_key", "n_vertices",
-                         "cx_key", "cy_key"],
-            )
+    def fields(poly_id, g):
+        rings = [_ring_array(r) for r in wkb.polygon_rings(bytes(g))]
+        area = shoelace_area(rings[0]) - sum(
+            shoelace_area(r) for r in rings[1:]
+        )
+        minx, miny, maxx, maxy = wkb.envelope(bytes(g))
+        yield (
+            poly_id,
+            # 1e3 quantum + 1e-6 nudge: shoelace/sqrt op-order noise
+            # (~1e-10) can land exactly-representable values a hair
+            # below the grid
+            int(np.floor(area * 1e3 + 1e-6)),
+            int(np.floor(perimeter(rings[0]) * 1e3 + 1e-6)),
+            sum(len(r) for r in rings),
+            int(np.floor((minx + maxx) / 2.0 * 1e6)),
+            int(np.floor((miny + maxy) / 2.0 * 1e6)),
+        )
 
-    return polys.select("poly_id", "geom_wkb").mapInPandas(
-        run,
-        schema="poly_id string, area_key bigint, perim_key bigint, "
+    return per_row(
+        polys, ["poly_id", "geom_wkb"], fields,
+        "poly_id string, area_key bigint, perim_key bigint, "
         "n_vertices bigint, cx_key bigint, cy_key bigint",
     )
 
@@ -125,18 +114,13 @@ def segmentize_ring(r: np.ndarray, max_len: float) -> np.ndarray:
 def segmentize_counts(polys: DataFrame, max_len: float) -> DataFrame:
     """(poly_id, n_before, n_after) vertex counts (outer ring)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for poly_id, g in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                r = _ring_array(wkb.polygon_rings(bytes(g))[0])
-                rows.append(
-                    (poly_id, len(r), len(segmentize_ring(r, max_len)))
-                )
-            yield pd.DataFrame(rows, columns=["poly_id", "n_before", "n_after"])
+    def counts(poly_id, g):
+        r = _ring_array(wkb.polygon_rings(bytes(g))[0])
+        yield poly_id, len(r), len(segmentize_ring(r, max_len))
 
-    return polys.select("poly_id", "geom_wkb").mapInPandas(
-        run, schema="poly_id string, n_before bigint, n_after bigint"
+    return per_row(
+        polys, ["poly_id", "geom_wkb"], counts,
+        "poly_id string, n_before bigint, n_after bigint",
     )
 
 
@@ -193,19 +177,15 @@ def simplify_roundtrip_counts(
     driver gets a closed-form VALUE oracle for the full recursion —
     round 2 left simplify rows-only."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for poly_id, g in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                r = _ring_array(wkb.polygon_rings(bytes(g))[0])
-                seg = segmentize_ring(r, max_len)
-                closed = np.concatenate([seg, seg[:1]])
-                simp = simplify_dp(closed, tol)
-                rows.append((poly_id, len(seg), len(simp) - 1))
-            yield pd.DataFrame(rows, columns=["poly_id", "n_before", "n_after"])
+    def counts(poly_id, g):
+        r = _ring_array(wkb.polygon_rings(bytes(g))[0])
+        seg = segmentize_ring(r, max_len)
+        simp = simplify_dp(np.concatenate([seg, seg[:1]]), tol)
+        yield poly_id, len(seg), len(simp) - 1
 
-    return polys.select("poly_id", "geom_wkb").mapInPandas(
-        run, schema="poly_id string, n_before bigint, n_after bigint"
+    return per_row(
+        polys, ["poly_id", "geom_wkb"], counts,
+        "poly_id string, n_before bigint, n_after bigint",
     )
 
 
@@ -257,26 +237,19 @@ def reproject_3857_fields(polys: DataFrame) -> DataFrame:
     any vertex transform divergence shifts the sums."""
     from .. import grid
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for poly_id, g in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                sx = sy = 0
-                nv = 0
-                for ring in wkb.polygon_rings(bytes(g)):
-                    r = _ring_array(ring)
-                    mx, my = grid.lonlat_to_meters(r[:, 0], r[:, 1])
-                    sx += int(np.floor(mx * 100.0 + MERC_CM_NUDGE).sum())
-                    sy += int(np.floor(my * 100.0 + MERC_CM_NUDGE).sum())
-                    nv += len(r)
-                rows.append((poly_id, nv, sx, sy))
-            yield pd.DataFrame(
-                rows, columns=["poly_id", "n_vertices", "sx_cm", "sy_cm"]
-            )
+    def sums(poly_id, g):
+        sx = sy = nv = 0
+        for ring in wkb.polygon_rings(bytes(g)):
+            r = _ring_array(ring)
+            mx, my = grid.lonlat_to_meters(r[:, 0], r[:, 1])
+            sx += int(np.floor(mx * 100.0 + MERC_CM_NUDGE).sum())
+            sy += int(np.floor(my * 100.0 + MERC_CM_NUDGE).sum())
+            nv += len(r)
+        yield poly_id, nv, sx, sy
 
-    return polys.select("poly_id", "geom_wkb").mapInPandas(
-        run,
-        schema="poly_id string, n_vertices bigint, sx_cm bigint, sy_cm bigint",
+    return per_row(
+        polys, ["poly_id", "geom_wkb"], sums,
+        "poly_id string, n_vertices bigint, sx_cm bigint, sy_cm bigint",
     )
 
 
@@ -320,20 +293,10 @@ def layer_extent(polys: DataFrame) -> DataFrame:
     min/max — the same one-pass shape GDAL's loop takes, distributed."""
     from pyspark.sql import functions as F
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for poly_id, g in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                minx, miny, maxx, maxy = wkb.envelope(bytes(g))
-                rows.append((poly_id, minx, miny, maxx, maxy))
-            yield pd.DataFrame(
-                rows, columns=["poly_id", "minx", "miny", "maxx", "maxy"]
-            )
-
-    env = polys.select("poly_id", "geom_wkb").mapInPandas(
-        run,
-        schema="poly_id string, minx double, miny double, "
-        "maxx double, maxy double",
+    env = per_row(
+        polys, ["poly_id", "geom_wkb"],
+        lambda poly_id, g: [(poly_id, *wkb.envelope(bytes(g)))],
+        "poly_id string, minx double, miny double, maxx double, maxy double",
     )
     k = "1000000.0E0"
     return env.agg(
@@ -421,37 +384,23 @@ def wrapdateline(layer: DataFrame, id_col: str = "fid") -> DataFrame:
     """(fid, part, n_rings, area_key, geom_wkb) — one row per split
     part; area_key = floor(1e6 * part area). Map-only (per-feature
     local), Arrow-batched."""
-    from .. import wkb as wkbmod
     from .makevalid import rings_area_evenodd
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for fid, g in zip(pdf[id_col], pdf["geom_wkb"]):
-                rings = wkbmod.polygon_rings(bytes(g))
-                for part, rs in wrapdateline_parts(rings):
-                    area = abs(rings_area_evenodd(rs))
-                    rows.append(
-                        (
-                            fid,
-                            part,
-                            len(rs),
-                            int(np.floor(area * 1e6)),
-                            wkbmod.encode_polygon(rs[0], rs[1:])
-                            if rs else None,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "part", "n_rings", "area_key", "geom_wkb"],
+    def parts(fid, g):
+        for part, rs in wrapdateline_parts(wkb.polygon_rings(bytes(g))):
+            yield (
+                fid,
+                part,
+                len(rs),
+                int(np.floor(abs(rings_area_evenodd(rs)) * 1e6)),
+                wkb.encode_polygon(rs[0], rs[1:]) if rs else None,
             )
 
-    return layer.select(id_col, "geom_wkb").mapInPandas(
-        run,
-        schema=f"{id_col} string, part string, n_rings bigint, "
+    return per_row(
+        layer, [id_col, "geom_wkb"], parts,
+        f"{id_col} string, part string, n_rings bigint, "
         "area_key bigint, geom_wkb binary",
     )
-
 
 _WRAP_SHIFT = 170.0  # fixture shift: synth boxes land on both sides
 
@@ -460,8 +409,6 @@ def wrapdateline_fixtures_pdf(m: int) -> pd.DataFrame:
     """Box-kind synth polygons translated +170 deg east: some stay
     west of 180, some sit wholly beyond (normalize), some straddle it
     (split) — all three behaviors closed-form for the oracle."""
-    from .. import synth, wkb as wkbmod
-
     j, cx, cy, hw, hh = synth._poly_params(m)
     rows = []
     for idx in range(m):
@@ -472,7 +419,7 @@ def wrapdateline_fixtures_pdf(m: int) -> pd.DataFrame:
         ring = [(x - w, y - h), (x + w, y - h), (x + w, y + h), (x - w, y + h)]
         rows.append(
             {"fid": f"poly{idx:04d}",
-             "geom_wkb": wkbmod.encode_polygon(ring)}
+             "geom_wkb": wkb.encode_polygon(ring)}
         )
     return pd.DataFrame(rows)
 
@@ -494,8 +441,6 @@ def oracle_wrapdateline(m: int) -> str:
     """Closed-form part areas for the translated boxes: west part
     (180 - x0) * 2hh, east part (x1 - 180) * 2hh, whole box when not
     straddling."""
-    from .. import synth
-
     p = synth.polygons_sql_cte(m, "duckdb")
     s = synth.flit(_WRAP_SHIFT)
     base = (
@@ -533,43 +478,30 @@ def explode_collections(layer: DataFrame, id_col: str = "fid") -> DataFrame:
     collection member, part_idx in member order (the reference
     iterates getGeometryRef(i) in order); POLYGON passes through with
     part_idx = 0."""
-    from .. import wkb as wkbmod
     from .makevalid import rings_area_evenodd
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for fid, g in zip(pdf[id_col], pdf["geom_wkb"]):
-                gtype, payload = wkbmod.decode(bytes(g))
-                if gtype == wkbmod.MULTIPOLYGON:
-                    members = payload
-                elif gtype == wkbmod.POLYGON:
-                    members = [payload]
-                else:
-                    raise ValueError(f"unsupported geometry {gtype}")
-                for k, rings in enumerate(members):
-                    area = abs(rings_area_evenodd(rings))
-                    rows.append(
-                        (
-                            fid,
-                            k,
-                            len(rings),
-                            int(np.floor(area * 1e6)),
-                            wkbmod.encode_polygon(rings[0], rings[1:]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "part_idx", "n_rings", "area_key",
-                         "geom_wkb"],
+    def members(fid, g):
+        gtype, payload = wkb.decode(bytes(g))
+        if gtype == wkb.MULTIPOLYGON:
+            polys = payload
+        elif gtype == wkb.POLYGON:
+            polys = [payload]
+        else:
+            raise ValueError(f"unsupported geometry {gtype}")
+        for k, rings in enumerate(polys):
+            yield (
+                fid,
+                k,
+                len(rings),
+                int(np.floor(abs(rings_area_evenodd(rings)) * 1e6)),
+                wkb.encode_polygon(rings[0], rings[1:]),
             )
 
-    return layer.select(id_col, "geom_wkb").mapInPandas(
-        run,
-        schema=f"{id_col} string, part_idx int, n_rings bigint, "
+    return per_row(
+        layer, [id_col, "geom_wkb"], members,
+        f"{id_col} string, part_idx int, n_rings bigint, "
         "area_key bigint, geom_wkb binary",
     )
-
 
 _EXPL_GROUP = 3  # boxes per fixture multipolygon
 
@@ -578,8 +510,6 @@ def explode_fixtures_pdf(m: int) -> pd.DataFrame:
     """Mixed layer: box-kind synth polygons grouped 3-per-MULTIPOLYGON
     (member order = j order) + triangle-kind singles as plain POLYGON
     rows — exercising both the split and the passthrough."""
-    from .. import synth, wkb as wkbmod
-
     j, cx, cy, hw, hh = synth._poly_params(m)
     groups: dict[int, list] = {}
     rows = []
@@ -596,12 +526,12 @@ def explode_fixtures_pdf(m: int) -> pd.DataFrame:
             ring = [(x - w, y - h), (x + w, y - h), (x, y + h)]
             rows.append(
                 {"fid": f"single{idx:04d}",
-                 "geom_wkb": wkbmod.encode_polygon(ring)}
+                 "geom_wkb": wkb.encode_polygon(ring)}
             )
     for gid, polys in groups.items():
         rows.append(
             {"fid": f"multi{gid:04d}",
-             "geom_wkb": wkbmod.encode_multipolygon(polys)}
+             "geom_wkb": wkb.encode_multipolygon(polys)}
         )
     return pd.DataFrame(rows)
 
@@ -625,8 +555,6 @@ def oracle_explode_collections(m: int) -> str:
     """Closed-form: boxes (j % 8 IN (1,4)) area 4*hw*hh, rank
     2*(j//8) + [j%8=4], fid multi{rank//3}, part rank%3; triangles
     (j % 8 IN (2,5)) area 2*hw*hh as single{j} part 0."""
-    from .. import synth
-
     p = synth.polygons_sql_cte(m, "duckdb")
     g = _EXPL_GROUP
     return (
@@ -660,20 +588,10 @@ def ogr_tindex(polys: DataFrame) -> DataFrame:
     shape as layer_extent, times layers."""
     from pyspark.sql import functions as F
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for kind, g in zip(pdf["kind"], pdf["geom_wkb"]):
-                minx, miny, maxx, maxy = wkb.envelope(bytes(g))
-                rows.append((kind, minx, miny, maxx, maxy))
-            yield pd.DataFrame(
-                rows, columns=["layer", "minx", "miny", "maxx", "maxy"]
-            )
-
-    env = polys.filter("kind <> 'kgon'").select("kind", "geom_wkb").mapInPandas(
-        run,
-        schema="layer string, minx double, miny double, "
-        "maxx double, maxy double",
+    env = per_row(
+        polys.filter("kind <> 'kgon'"), ["kind", "geom_wkb"],
+        lambda kind, g: [(kind, *wkb.envelope(bytes(g)))],
+        "layer string, minx double, miny double, maxx double, maxy double",
     )
     k = "1000000.0E0"
     return env.groupBy("layer").agg(
@@ -802,7 +720,6 @@ def ogrsf_conformance(spark, n_images: int, m: int) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from .. import synth
     from . import spatial_join as sj
 
     n_pts = min(n_images, 4096)
@@ -859,8 +776,6 @@ def ogrsf_conformance(spark, n_images: int, m: int) -> DataFrame:
 
 def oracle_ogrsf_conformance(n_images: int, m: int) -> str:
     """Closed-form replay: each check's TRUE value on both sides."""
-    from .. import synth
-
     n_pts = min(n_images, 4096)
     k = "1000000.0E0"
     return (
@@ -921,31 +836,24 @@ def geom_centroid(polys: DataFrame) -> DataFrame:
     floor(v * 1e4 + 5e-4) keys. Vectorized numpy over WKB rings in
     mapInPandas; map-only, no shuffle."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for poly_id, g in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                area = mx = my = 0.0
-                for k, ring in enumerate(wkb.polygon_rings(bytes(g))):
-                    a, rx, ry = _ring_signed(_ring_array(ring))
-                    s = 1.0 if k == 0 else -1.0  # holes subtract
-                    o = 1.0 if a >= 0 else -1.0  # orientation-normalize
-                    area += s * o * a
-                    mx += s * o * rx
-                    my += s * o * ry
-                rows.append(
-                    (
-                        poly_id,
-                        int(np.floor(mx / area * _CEN_SCALE + 5e-4)),
-                        int(np.floor(my / area * _CEN_SCALE + 5e-4)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["poly_id", "cen_x_key", "cen_y_key"]
-            )
+    def centroid(poly_id, g):
+        area = mx = my = 0.0
+        for k, ring in enumerate(wkb.polygon_rings(bytes(g))):
+            a, rx, ry = _ring_signed(_ring_array(ring))
+            s = 1.0 if k == 0 else -1.0  # holes subtract
+            o = 1.0 if a >= 0 else -1.0  # orientation-normalize
+            area += s * o * a
+            mx += s * o * rx
+            my += s * o * ry
+        yield (
+            poly_id,
+            int(np.floor(mx / area * _CEN_SCALE + 5e-4)),
+            int(np.floor(my / area * _CEN_SCALE + 5e-4)),
+        )
 
-    return polys.select("poly_id", "geom_wkb").mapInPandas(
-        run, schema="poly_id string, cen_x_key bigint, cen_y_key bigint"
+    return per_row(
+        polys, ["poly_id", "geom_wkb"], centroid,
+        "poly_id string, cen_x_key bigint, cen_y_key bigint",
     )
 
 
@@ -999,33 +907,25 @@ def geom_point_on_surface(polys: DataFrame) -> DataFrame:
     envelope-bisector scanline; floor(v * 1e4 + 5e-4) keys.
     Map-only mapInPandas over WKB, no shuffle."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for poly_id, g in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                rings = wkb.polygon_rings(bytes(g))
-                _, miny, _, maxy = wkb.envelope(bytes(g))
-                y0 = 0.5 * (miny + maxy)
-                xs = _scan_crossings(rings, y0)
-                # widest inside segment, tie -> leftmost
-                best_w, best_x = -1.0, 0.0
-                for i in range(0, len(xs) - 1, 2):
-                    w_ = xs[i + 1] - xs[i]
-                    if w_ > best_w + 1e-12:
-                        best_w, best_x = w_, 0.5 * (xs[i] + xs[i + 1])
-                rows.append(
-                    (
-                        poly_id,
-                        int(np.floor(best_x * _CEN_SCALE + 5e-4)),
-                        int(np.floor(y0 * _CEN_SCALE + 5e-4)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["poly_id", "pos_x_key", "pos_y_key"]
-            )
+    def point(poly_id, g):
+        _, miny, _, maxy = wkb.envelope(bytes(g))
+        y0 = 0.5 * (miny + maxy)
+        xs = _scan_crossings(wkb.polygon_rings(bytes(g)), y0)
+        # widest inside segment, tie -> leftmost
+        best_w, best_x = -1.0, 0.0
+        for i in range(0, len(xs) - 1, 2):
+            w_ = xs[i + 1] - xs[i]
+            if w_ > best_w + 1e-12:
+                best_w, best_x = w_, 0.5 * (xs[i] + xs[i + 1])
+        yield (
+            poly_id,
+            int(np.floor(best_x * _CEN_SCALE + 5e-4)),
+            int(np.floor(y0 * _CEN_SCALE + 5e-4)),
+        )
 
-    return polys.select("poly_id", "geom_wkb").mapInPandas(
-        run, schema="poly_id string, pos_x_key bigint, pos_y_key bigint"
+    return per_row(
+        polys, ["poly_id", "geom_wkb"], point,
+        "poly_id string, pos_x_key bigint, pos_y_key bigint",
     )
 
 
@@ -1063,53 +963,36 @@ def ogr_special_fields(polys: DataFrame) -> DataFrame:
     """(fid, poly_id, geom_type, geom_wkt, area_key, ogr_style,
     big_area) over the oracle-subset kinds."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for j, poly_id, g in zip(
-                pdf["j"], pdf["poly_id"], pdf["geom_wkb"]
-            ):
-                rings = [
-                    _ring_array(r) for r in wkb.polygon_rings(bytes(g))
-                ]
-                area = shoelace_area(rings[0]) - sum(
-                    shoelace_area(r) for r in rings[1:]
-                )
-                area_key = int(np.floor(area * 1e3 + 1e-6))
-                parts = []
-                for r in rings:
-                    pts = [
-                        f"{int(np.floor(x * 1e6))} {int(np.floor(y * 1e6))}"
-                        for x, y in r
-                    ]
-                    pts.append(pts[0])  # closed ring in WKT
-                    parts.append("(" + ", ".join(pts) + ")")
-                rows.append(
-                    (
-                        int(j),
-                        poly_id,
-                        "POLYGON",
-                        "POLYGON (" + ", ".join(parts) + ")",
-                        area_key,
-                        "",
-                        int(area_key > 50_000),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["fid", "poly_id", "geom_type", "geom_wkt",
-                         "area_key", "ogr_style", "big_area"],
-            )
-
-    return (
-        polys.filter("kind IN ('box', 'hot_box', 'triangle')")
-        .select("j", "poly_id", "geom_wkb")
-        .mapInPandas(
-            run,
-            schema="fid bigint, poly_id string, geom_type string, "
-            "geom_wkt string, area_key bigint, ogr_style string, "
-            "big_area int",
+    def fields(j, poly_id, g):
+        rings = [_ring_array(r) for r in wkb.polygon_rings(bytes(g))]
+        area = shoelace_area(rings[0]) - sum(
+            shoelace_area(r) for r in rings[1:]
         )
+        area_key = int(np.floor(area * 1e3 + 1e-6))
+        parts = []
+        for r in rings:
+            pts = [
+                f"{int(np.floor(x * 1e6))} {int(np.floor(y * 1e6))}"
+                for x, y in r
+            ]
+            pts.append(pts[0])  # closed ring in WKT
+            parts.append("(" + ", ".join(pts) + ")")
+        yield (
+            int(j),
+            poly_id,
+            "POLYGON",
+            "POLYGON (" + ", ".join(parts) + ")",
+            area_key,
+            "",
+            int(area_key > 50_000),
+        )
+
+    return per_row(
+        polys.filter("kind IN ('box', 'hot_box', 'triangle')"),
+        ["j", "poly_id", "geom_wkb"], fields,
+        "fid bigint, poly_id string, geom_type string, "
+        "geom_wkt string, area_key bigint, ogr_style string, "
+        "big_area int",
     )
 
 
@@ -1234,23 +1117,14 @@ def vw_simplify(spark, polys: DataFrame) -> DataFrame:
     """(poly_id, n_vertices, area2_key) after 3 VW passes over the
     kgon rings (the only synth kind with redundant vertices)."""
 
-    def verts(batches):
-        for pdf in batches:
-            rows = []
-            for poly_id, g in zip(pdf["poly_id"], pdf["geom_wkb"]):
-                r = _ring_array(wkb.polygon_rings(bytes(g))[0])
-                rows.extend(
-                    (poly_id, i, float(x), float(y))
-                    for i, (x, y) in enumerate(r)
-                )
-            yield pd.DataFrame(
-                rows, columns=["poly_id", "seq", "x", "y"]
-            )
+    def verts(poly_id, g):
+        r = _ring_array(wkb.polygon_rings(bytes(g))[0])
+        for i, (x, y) in enumerate(r):
+            yield poly_id, i, float(x), float(y)
 
-    v = polys.filter("kind = 'kgon'").select(
-        "poly_id", "geom_wkb"
-    ).mapInPandas(
-        verts, schema="poly_id string, seq int, x double, y double"
+    v = per_row(
+        polys.filter("kind = 'kgon'"), ["poly_id", "geom_wkb"], verts,
+        "poly_id string, seq int, x double, y double",
     )
     v.createOrReplaceTempView("vw_verts")
     return spark.sql(

@@ -20,38 +20,42 @@ the pyproj-free equivalent of the transformer chain
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import codecs, grid, resample
-from .stats import checksum_sql
+from .rowstage import per_row
+from .stats import checksum_sql, per_image
 
 
-def _scaled_warp_iter(batches, factor: float, alg: str, nodata=None):
-    for pdf in batches:
-        out_bytes, out_w, out_h = [], [], []
-        for payload, w, h in zip(pdf["bytes"], pdf["w"], pdf["h"]):
-            arr = codecs.decode_image(bytes(payload))
-            sh, sw = arr.shape[:2]
-            dw, dh = int(round(sw * factor)), int(round(sh * factor))
-            # same-origin grid at res/factor; actual lon/lat origin is
-            # irrelevant to the pixel math, so use a unit grid
-            src_gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
-            dst_gt = (0.0, 1.0 / factor, 0.0, 0.0, 0.0, -1.0 / factor)
-            warped = resample.warp_image(
-                arr, src_gt, dst_gt, (dh, dw), alg, nodata=nodata
-            )
-            out_bytes.append(codecs.encode_image(warped, "png"))
-            out_w.append(dw)
-            out_h.append(dh)
-        yield pd.DataFrame(
-            {
-                "image_id": pdf["image_id"],
-                "bytes": out_bytes,
-                "w": pd.array(out_w, dtype="int32"),
-                "h": pd.array(out_h, dtype="int32"),
-            }
+def _scaled(images: DataFrame, factor: float, alg: str, nodata=None,
+            box=None) -> DataFrame:
+    """Rescale every image by ``factor`` on a same-origin unit grid
+    (the lon/lat origin is irrelevant to the pixel math); with ``box``
+    (fractions of the image extent) dst pixels whose center falls
+    outside it are zeroed. (image_id, bytes, w, h), lossless."""
+    src_gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
+    dst_gt = (0.0, 1.0 / factor, 0.0, 0.0, 0.0, -1.0 / factor)
+
+    def run(arr):
+        sh, sw = arr.shape[:2]
+        dw, dh = int(round(sw * factor)), int(round(sh * factor))
+        warped = resample.warp_image(
+            arr, src_gt, dst_gt, (dh, dw), alg, nodata=nodata
         )
+        if box is not None:
+            # cutline box in source pixel units -> dst pixel centers
+            fx0, fy0, fx1, fy1 = box
+            xs = (np.arange(dw) + 0.5) / factor
+            ys = (np.arange(dh) + 0.5) / factor
+            inx = (xs >= fx0 * sw) & (xs <= fx1 * sw)
+            iny = (ys >= fy0 * sh) & (ys <= fy1 * sh)
+            mask = iny[:, None] & inx[None, :]
+            warped = np.where(mask[:, :, None], warped, 0).astype(np.uint8)
+        yield codecs.encode_image(warped, "png"), dw, dh
+
+    return per_image(
+        images, run, "image_id string, bytes binary, w int, h int"
+    )
 
 
 def warp_scale(
@@ -60,10 +64,7 @@ def warp_scale(
     """Rescale every image by ``factor`` with the given resampler;
     output is lossless-encoded. (image_id, bytes, w, h). ``nodata``
     activates the source-nodata mask (taps skipped + renormalized)."""
-    return images.select("image_id", "bytes", "w", "h").mapInPandas(
-        lambda it: _scaled_warp_iter(it, factor, alg, nodata),
-        schema="image_id string, bytes binary, w int, h int",
-    )
+    return _scaled(images, factor, alg, nodata)
 
 
 def oracle_warp_nodata_avg_down2(n: int, max_i: int, nodata: int = 0) -> str:
@@ -98,86 +99,6 @@ def oracle_warp_nodata_avg_down2(n: int, max_i: int, nodata: int = 0) -> str:
     )
 
 
-def _reproject_iter(batches, alg: str, dst_size: int):
-    """Warp each 4326-georeferenced image onto a WebMercator
-    (EPSG:3857) grid covering its own footprint (the
-    GDALSuggestedWarpOutput step, alg/gdaltransformer.cpp:407, done
-    per image)."""
-    for pdf in batches:
-        out = {"image_id": [], "bytes": [], "w": [], "h": [],
-               "gt0": [], "gt1": [], "gt3": [], "gt5": []}
-        for image_id, payload, lon, lat, w, h in zip(
-            pdf["image_id"], pdf["bytes"], pdf["lon"], pdf["lat"],
-            pdf["w"], pdf["h"],
-        ):
-            arr = codecs.decode_image(bytes(payload))
-            res = 0.1 / int(w)
-            src_gt = (float(lon), res, 0.0, float(lat), 0.0, -res)
-            # suggested output: project the 4 corners, take the bbox
-            cx = np.array([lon, lon + w * res, lon, lon + w * res])
-            cy = np.array([lat, lat, lat - h * res, lat - h * res])
-            mx, my = grid.lonlat_to_meters(cx, np.clip(cy, -grid.MERC_MAX_LAT, grid.MERC_MAX_LAT))
-            dst_res = (mx.max() - mx.min()) / dst_size
-            dst_h = max(1, int(round((my.max() - my.min()) / dst_res)))
-            dst_gt = (float(mx.min()), dst_res, 0.0, float(my.max()), 0.0, -dst_res)
-
-            def transform(gx, gy):
-                # dst georef (3857 meters) -> src georef (4326 degrees)
-                return grid.meters_to_lonlat(gx, gy)
-
-            warped = resample.warp_image(
-                arr, src_gt, dst_gt, (dst_h, dst_size), alg, transform
-            )
-            out["image_id"].append(image_id)
-            out["bytes"].append(codecs.encode_image(warped, "png"))
-            out["w"].append(dst_size)
-            out["h"].append(dst_h)
-            out["gt0"].append(dst_gt[0])
-            out["gt1"].append(dst_gt[1])
-            out["gt3"].append(dst_gt[3])
-            out["gt5"].append(dst_gt[5])
-        pdf_out = pd.DataFrame(out)
-        pdf_out["w"] = pdf_out["w"].astype("int32")
-        pdf_out["h"] = pdf_out["h"].astype("int32")
-        yield pdf_out
-
-
-def _cutline_warp_iter(batches, factor: float, alg: str, box: tuple):
-    """Warp + cutline mask: pixels whose center falls outside the
-    cutline polygon (a geo-space box here, the SQL-oracle subset;
-    arbitrary WKB goes through the same scanline fill) are zeroed —
-    GDALWarpCutlineMasker semantics (alg/gdalwarper.h:140) with
-    blend distance 0."""
-    fx0, fy0, fx1, fy1 = box  # fractions of the image extent
-    for pdf in batches:
-        out_bytes, out_w, out_h = [], [], []
-        for payload, w, h in zip(pdf["bytes"], pdf["w"], pdf["h"]):
-            arr = codecs.decode_image(bytes(payload))
-            sh, sw = arr.shape[:2]
-            dw, dh = int(round(sw * factor)), int(round(sh * factor))
-            src_gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
-            dst_gt = (0.0, 1.0 / factor, 0.0, 0.0, 0.0, -1.0 / factor)
-            warped = resample.warp_image(arr, src_gt, dst_gt, (dh, dw), alg)
-            # cutline box in source pixel units -> dst pixel centers
-            xs = (np.arange(dw) + 0.5) / factor
-            ys = (np.arange(dh) + 0.5) / factor
-            inx = (xs >= fx0 * sw) & (xs <= fx1 * sw)
-            iny = (ys >= fy0 * sh) & (ys <= fy1 * sh)
-            mask = iny[:, None] & inx[None, :]
-            warped = np.where(mask[:, :, None], warped, 0).astype(np.uint8)
-            out_bytes.append(codecs.encode_image(warped, "png"))
-            out_w.append(dw)
-            out_h.append(dh)
-        yield pd.DataFrame(
-            {
-                "image_id": pdf["image_id"],
-                "bytes": out_bytes,
-                "w": pd.array(out_w, dtype="int32"),
-                "h": pd.array(out_h, dtype="int32"),
-            }
-        )
-
-
 CUTLINE_BOX = (0.2, 0.15, 0.8, 0.7)
 
 
@@ -185,11 +106,11 @@ def warp_cutline(
     images: DataFrame, factor: float = 2.0, alg: str = "near",
     box: tuple = CUTLINE_BOX,
 ) -> DataFrame:
-    """Warp restricted to a cutline (gdalwarp -cutline)."""
-    return images.select("image_id", "bytes", "w", "h").mapInPandas(
-        lambda it: _cutline_warp_iter(it, factor, alg, box),
-        schema="image_id string, bytes binary, w int, h int",
-    )
+    """Warp restricted to a cutline (gdalwarp -cutline): pixels whose
+    center falls outside the cutline polygon (a geo-space box here,
+    the SQL-oracle subset) are zeroed — GDALWarpCutlineMasker
+    semantics (alg/gdalwarper.h:140) with blend distance 0."""
+    return _scaled(images, factor, alg, box=box)
 
 
 def oracle_warp_cutline(
@@ -281,13 +202,35 @@ def reproject_to_mercator(
     images: DataFrame, alg: str = "bilinear", dst_size: int = 64
 ) -> DataFrame:
     """Reproject every image EPSG:4326 -> EPSG:3857 onto a per-image
-    suggested output grid. (image_id, bytes, w, h, gt0, gt1, gt3, gt5)."""
-    return images.select("image_id", "bytes", "lon", "lat", "w", "h").mapInPandas(
-        lambda it: _reproject_iter(it, alg, dst_size),
-        schema=(
-            "image_id string, bytes binary, w int, h int, "
-            "gt0 double, gt1 double, gt3 double, gt5 double"
-        ),
+    suggested output grid (the GDALSuggestedWarpOutput step,
+    alg/gdaltransformer.cpp:407, done per image).
+    (image_id, bytes, w, h, gt0, gt1, gt3, gt5)."""
+
+    def run(image_id, payload, lon, lat, w, h):
+        arr = codecs.decode_image(bytes(payload))
+        res = 0.1 / int(w)
+        src_gt = (float(lon), res, 0.0, float(lat), 0.0, -res)
+        # suggested output: project the 4 corners, take the bbox
+        cx = np.array([lon, lon + w * res, lon, lon + w * res])
+        cy = np.array([lat, lat, lat - h * res, lat - h * res])
+        mx, my = grid.lonlat_to_meters(
+            cx, np.clip(cy, -grid.MERC_MAX_LAT, grid.MERC_MAX_LAT)
+        )
+        dst_res = (mx.max() - mx.min()) / dst_size
+        dst_h = max(1, int(round((my.max() - my.min()) / dst_res)))
+        dst_gt = (float(mx.min()), dst_res, 0.0, float(my.max()), 0.0, -dst_res)
+        # dst georef (3857 meters) -> src georef (4326 degrees)
+        warped = resample.warp_image(
+            arr, src_gt, dst_gt, (dst_h, dst_size), alg,
+            grid.meters_to_lonlat,
+        )
+        yield (image_id, codecs.encode_image(warped, "png"), dst_size, dst_h,
+               dst_gt[0], dst_gt[1], dst_gt[3], dst_gt[5])
+
+    return per_row(
+        images, ["image_id", "bytes", "lon", "lat", "w", "h"], run,
+        "image_id string, bytes binary, w int, h int, "
+        "gt0 double, gt1 double, gt3 double, gt5 double",
     )
 
 
@@ -497,11 +440,7 @@ def warp_area_family_down2(images: DataFrame) -> DataFrame:
     for alg in AREA_FAMILY_DOWN2:
         cks = statsmod.checksums(warp_scale(images, 0.5, alg))
         parts.append(
-            cks.selectExpr(
-                "image_id", f"'{alg}' AS alg",
-                "cast(channel as bigint) AS channel",
-                "cast(cks as bigint) AS cks",
-            )
+            cks.selectExpr("image_id", f"'{alg}' AS alg", "channel", "cks")
         )
     out = parts[0]
     for p in parts[1:]:
@@ -595,29 +534,21 @@ def cutline_blend_keys(
     local); zero shuffles beyond the final per-image agg."""
     fx0, fy0, fx1, fy1 = box
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload in zip(pdf["image_id"], pdf["bytes"]):
-                arr = codecs.decode_image(bytes(payload)).astype(np.int64)
-                h, w = arr.shape[:2]
-                xs = np.arange(w, dtype=np.float64) + 0.5
-                ys = np.arange(h, dtype=np.float64) + 0.5
-                dx = np.minimum(xs - fx0 * w, fx1 * w - xs)
-                dy = np.minimum(ys - fy0 * h, fy1 * h - ys)
-                d = np.minimum(dx[None, :], dy[:, None])
-                dens = np.floor(500.0 + 500.0 * d / blend)
-                dens = np.clip(dens, 0.0, 1000.0).astype(np.int64)
-                for c in range(arr.shape[2]):
-                    rows.append(
-                        (image_id, c, int((arr[:, :, c] * dens).sum()))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "channel", "blend_key"]
-            )
+    def run(arr):
+        arr = arr.astype(np.int64)
+        h, w = arr.shape[:2]
+        xs = np.arange(w, dtype=np.float64) + 0.5
+        ys = np.arange(h, dtype=np.float64) + 0.5
+        dx = np.minimum(xs - fx0 * w, fx1 * w - xs)
+        dy = np.minimum(ys - fy0 * h, fy1 * h - ys)
+        d = np.minimum(dx[None, :], dy[:, None])
+        dens = np.floor(500.0 + 500.0 * d / blend)
+        dens = np.clip(dens, 0.0, 1000.0).astype(np.int64)
+        for c in range(arr.shape[2]):
+            yield c, int((arr[:, :, c] * dens).sum())
 
-    return images.select("image_id", "bytes").mapInPandas(
-        run, schema="image_id string, channel bigint, blend_key bigint"
+    return per_image(
+        images, run, "image_id string, channel bigint, blend_key bigint"
     )
 
 
@@ -674,38 +605,26 @@ def warp_rotated_rows(images: DataFrame) -> DataFrame:
     channel-0 sum of the nearest-warped rotated source (unit ground
     res; src gt = (0, .8, .6, .6w, .6, -.8))."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for image_id, payload, w, h in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"]
-            ):
-                arr = codecs.decode_image(bytes(payload))
-                w, h = int(w), int(h)
-                ow, oh = _rot_dims(w, h)
-                ox = np.arange(ow, dtype=np.float64)
-                oy = np.arange(oh, dtype=np.float64)
-                xc = ox + 0.5
-                yc = 0.6 * w - (oy + 0.5)
-                # inverse of [[.8, .6], [.6, -.8]] (det = -1)
-                px = 0.8 * xc[None, :] + 0.6 * yc[:, None]
-                py = 0.6 * xc[None, :] - 0.8 * yc[:, None]
-                ix = np.floor(px).astype(np.int64)
-                iy = np.floor(py).astype(np.int64)
-                ok = (ix >= 0) & (ix < w) & (iy >= 0) & (iy < h)
-                v = np.zeros((oh, ow), dtype=np.int64)
-                v[ok] = arr[iy[ok], ix[ok], 0].astype(np.int64)
-                rows.extend(
-                    (image_id, int(r), int(ok[r].sum()), int(v[r].sum()))
-                    for r in range(oh)
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "oy", "n_valid", "row_sum"]
-            )
+    def run(image_id, payload, w, h):
+        arr = codecs.decode_image(bytes(payload))
+        w, h = int(w), int(h)
+        ow, oh = _rot_dims(w, h)
+        xc = np.arange(ow, dtype=np.float64) + 0.5
+        yc = 0.6 * w - (np.arange(oh, dtype=np.float64) + 0.5)
+        # inverse of [[.8, .6], [.6, -.8]] (det = -1)
+        px = 0.8 * xc[None, :] + 0.6 * yc[:, None]
+        py = 0.6 * xc[None, :] - 0.8 * yc[:, None]
+        ix = np.floor(px).astype(np.int64)
+        iy = np.floor(py).astype(np.int64)
+        ok = (ix >= 0) & (ix < w) & (iy >= 0) & (iy < h)
+        v = np.zeros((oh, ow), dtype=np.int64)
+        v[ok] = arr[iy[ok], ix[ok], 0].astype(np.int64)
+        for r in range(oh):
+            yield image_id, r, int(ok[r].sum()), int(v[r].sum())
 
-    return images.select("image_id", "bytes", "w", "h").mapInPandas(
-        run,
-        schema="image_id string, oy int, n_valid bigint, row_sum bigint",
+    return per_row(
+        images, ["image_id", "bytes", "w", "h"], run,
+        "image_id string, oy int, n_valid bigint, row_sum bigint",
     )
 
 

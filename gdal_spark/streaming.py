@@ -447,7 +447,7 @@ def rollup_updates(updates: DataFrame) -> DataFrame:
     """Batch semantics: last-wins per child tile (max seq), then the
     per-parent overview summary (ptx, pty, n_children, cks_sum,
     max_seq)."""
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import Window
 
     w = Window.partitionBy("tx", "ty").orderBy(F.desc("seq"))
     latest = (

@@ -64,9 +64,14 @@ class TileMatrix:
         ty = np.floor((self.top_left[1] - y) / spany).astype(np.int64)
         tx = np.clip(tx, 0, self.matrix_width - 1)
         ty = np.clip(ty, 0, self.matrix_height - 1)
-        for c, lo, hi in self.variable_matrix_widths:
-            m = (ty >= lo) & (ty <= hi)
-            tx = np.where(m, (tx // c) * c, tx)
+        vmw = self.variable_matrix_widths
+        if vmw:  # first matching range wins, as in coalesce_for_row
+            c = np.select(
+                [(ty >= lo) & (ty <= hi) for _, lo, hi in vmw],
+                [c for c, _, _ in vmw],
+                1,
+            )
+            tx = (tx // c) * c
         return tx, ty
 
     def tile_sql(self, x_expr: str, y_expr: str, axis: str) -> str:

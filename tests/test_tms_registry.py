@@ -172,6 +172,41 @@ def test_vmw_sql_matches_numpy_via_duckdb():
     assert np.array_equal(got["ty"], ety)
 
 
+def test_vmw_overlapping_ranges_first_match_wins():
+    """Rows 2-3 fall in both ranges; the first listed (coalesce 2)
+    wins in tile_of, coalesce_for_row and tile_sql_xy alike."""
+    import duckdb
+    import numpy as np
+
+    m = tms.TileMatrix(
+        id="0", scale_denominator=1.0 / tms.OGC_PIXEL, top_left=(0.0, 8.0),
+        tile_width=1, tile_height=1, matrix_width=16, matrix_height=8,
+        variable_matrix_widths=((2, 0, 3), (4, 2, 5)),
+    )
+    gx, gy = np.meshgrid(
+        np.arange(16) + 0.5, 8.0 - (np.arange(8) + 0.5), indexing="ij"
+    )
+    xs, ys = gx.ravel(), gy.ravel()
+    tx, ty = m.tile_of(xs, ys)
+    base = np.clip(
+        np.floor((xs - m.top_left[0]) / (m.res * m.tile_width)),
+        0, m.matrix_width - 1,
+    ).astype(np.int64)
+    coal = np.array([m.coalesce_for_row(int(r)) for r in ty])
+    assert np.array_equal(tx, (base // coal) * coal)
+    row2 = (ty == 2) & (base == 2)
+    assert row2.any() and np.all(tx[row2] == 2)
+
+    txs, tys = m.tile_sql_xy("x", "y")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE pts AS SELECT * FROM (VALUES " + ",".join(
+        f"({x!r}, {y!r})" for x, y in zip(xs, ys)
+    ) + ") t(x, y)")
+    got = con.execute(f"SELECT {txs} AS tx, {tys} AS ty FROM pts").fetchnumpy()
+    assert np.array_equal(got["tx"], tx)
+    assert np.array_equal(got["ty"], ty)
+
+
 def test_vmw_validation_rejects_nondividing_coalesce():
     doc = {
         "id": "BadVMW",
