@@ -71,8 +71,10 @@ class Ntv2Grid:
 
     s_lat: float  # arc-seconds
     n_lat: float
-    e_long: float  # arc-seconds, POSITIVE EAST (negated from file)
-    w_long: float
+    # arc-seconds, POSITIVE EAST: the grid's west and east edges
+    # (the file's positive-west E_LONG / W_LONG, negated and swapped)
+    west_long: float
+    east_long: float
     lat_inc: float
     long_inc: float
     # 2-D float64 (nrows, ncols), row 0 = NORTH edge, col 0 = WEST
@@ -91,7 +93,7 @@ class Ntv2Grid:
         PIXEL CENTERS, so the raster origin sits half a cell out."""
         px = self.long_inc / 3600.0
         py = self.lat_inc / 3600.0
-        x0 = self.e_long / 3600.0 - px / 2.0
+        x0 = self.west_long / 3600.0 - px / 2.0
         y0 = self.n_lat / 3600.0 + py / 2.0
         return (x0, px, 0.0, y0, 0.0, -py)
 
@@ -102,7 +104,7 @@ class Ntv2Grid:
         nr, nc = self.shape
         lon = np.asarray(lon_deg, np.float64) * 3600.0
         lat = np.asarray(lat_deg, np.float64) * 3600.0
-        gx = (lon - self.e_long) / self.long_inc  # col, west->east
+        gx = (lon - self.west_long) / self.long_inc  # col, west->east
         gy = (lat - self.s_lat) / self.lat_inc  # row, SOUTH->north
         ix = np.clip(np.floor(gx).astype(np.int64), 0, nc - 2)
         iy = np.clip(np.floor(gy).astype(np.int64), 0, nr - 2)
@@ -192,8 +194,8 @@ def read_ntv2(path: str) -> Ntv2Grid:
     return Ntv2Grid(
         s_lat=s_lat,
         n_lat=n_lat,
-        e_long=-w_long_w,
-        w_long=-e_long_w,
+        west_long=-w_long_w,
+        east_long=-e_long_w,
         lat_inc=lat_inc,
         long_inc=long_inc,
         lat_shift=np.ascontiguousarray(arr[:, :, 0]),

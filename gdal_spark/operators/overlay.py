@@ -35,12 +35,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from .. import boolop, wkb
 from ..synth import flit
 from . import cells as cellmod
-from .rowstage import per_row
+from .rowstage import envelopes, per_row
 
 
 # ---------------------------------------------------------------------------
@@ -138,25 +138,6 @@ def clip_polygon_convex(rings: list[np.ndarray], clip_ring: np.ndarray):
 OVERLAY_ZOOM = 6  # cell level for the candidate join
 
 
-def _envelope_cols(df: DataFrame, id_col: str, wkb_col: str, prefix: str) -> DataFrame:
-    """(id, wkb, {prefix}x0/y0/x1/y1): each envelope decoded once, in
-    one mapInPandas. A struct-returning pandas UDF would be evaluated
-    twice, because Catalyst pushes the inferred not-null filters on its
-    fields below the projection."""
-    cols = [f"{prefix}{c}" for c in ("x0", "y0", "x1", "y1")]
-    src = df.select(id_col, wkb_col)
-    schema = T.StructType(
-        src.schema.fields + [T.StructField(c, T.DoubleType(), False) for c in cols]
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            env = np.array([wkb.envelope(bytes(g)) for g in pdf[wkb_col]])
-            yield pdf.assign(**dict(zip(cols, env.reshape(-1, 4).T)))
-
-    return src.mapInPandas(decode, schema=schema)
-
-
 def _candidates(
     subject: DataFrame,
     clip: DataFrame,
@@ -177,10 +158,12 @@ def _candidates(
     point encoder, so no dedup shuffle is needed."""
     p = flit(pad)
     a = cellmod.env_cell_explode(
-        _envelope_cols(subject, "id_a", "wkb_a", "a"), "a", pad, zoom
+        envelopes(subject.select("id_a", "wkb_a"), "wkb_a",
+                  ("ax0", "ay0", "ax1", "ay1")), "a", pad, zoom
     )
     b = cellmod.env_cell_explode(
-        _envelope_cols(clip, "id_b", "wkb_b", "b"), "b", 0.0, zoom
+        envelopes(clip.select("id_b", "wkb_b"), "wkb_b",
+                  ("bx0", "by0", "bx1", "by1")), "b", 0.0, zoom
     )
     ref = cellmod.cell_id_sql(
         cellmod.geodetic_tile_sql(f"greatest((ax0 - {p}), bx0)", "0", zoom, "x"),

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .. import codecs, synth
 from .stats import channel_checksums, checksum_sql, per_image
@@ -343,11 +343,8 @@ def grid_idw(
             }
         )
 
-    part = bands.groupby("band").applyInPandas(
+    return bands.groupby("band").applyInPandas(
         run, schema="y bigint, n bigint, val_sum_key bigint"
-    )
-    return part.groupBy("y").agg(
-        F.sum("n").alias("n"), F.sum("val_sum_key").alias("val_sum_key")
     )
 
 
@@ -790,11 +787,8 @@ def grid_linear(
             }
         )
 
-    part = bands.groupby("band").applyInPandas(
+    return bands.groupby("band").applyInPandas(
         run, schema="y bigint, n bigint, val_sum_key bigint"
-    )
-    return part.groupBy("y").agg(
-        F.sum("n").alias("n"), F.sum("val_sum_key").alias("val_sum_key")
     )
 
 
@@ -909,11 +903,8 @@ def grid_idwnn(
             }
         )
 
-    part = bands.groupby("band").applyInPandas(
+    return bands.groupby("band").applyInPandas(
         run, schema="y bigint, n bigint, val_sum_key bigint"
-    )
-    return part.groupBy("y").agg(
-        F.sum("n").alias("n"), F.sum("val_sum_key").alias("val_sum_key")
     )
 
 

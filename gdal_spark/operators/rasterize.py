@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import scanline, wkb
+from .rowstage import envelopes
 
 
 class GridDef:
@@ -60,13 +61,8 @@ def rasterize(
         f"cast(id % {g.ntx} as int) AS tx", f"cast(id div {g.ntx} as int) AS ty"
     )
 
-    env = polys.select(
-        "geom_wkb",
-        F.expr(burn_expr).alias("burn"),
-    ).mapInPandas(
-        _envelope_iter,
-        schema="geom_wkb binary, burn double, minx double, miny double, "
-        "maxx double, maxy double",
+    env = envelopes(
+        polys.select("geom_wkb", F.expr(burn_expr).alias("burn")), "geom_wkb"
     )
 
     t = g.tile_px * g.res
@@ -179,18 +175,6 @@ def oracle_rasterize_inverse(
     )
 
 
-def _envelope_iter(batches):
-    for pdf in batches:
-        mins, miys, maxs, mays = [], [], [], []
-        for geom in pdf["geom_wkb"]:
-            minx, miny, maxx, maxy = wkb.envelope(bytes(geom))
-            mins.append(minx)
-            miys.append(miny)
-            maxs.append(maxx)
-            mays.append(maxy)
-        yield pdf.assign(minx=mins, miny=miys, maxx=maxs, maxy=mays)
-
-
 # ---------------------------------------------------------------------------
 # oracle: pixel-center PIP in SQL over the synth box/triangle subset
 # (scanline fill == center-inside for non-degenerate geometry; the
@@ -247,11 +231,7 @@ def zonal_stats(spark, polys: DataFrame, grid_def: GridDef) -> DataFrame:
     tiles = spark.range(g.ntx * g.nty).selectExpr(
         f"cast(id % {g.ntx} as int) AS tx", f"cast(id div {g.ntx} as int) AS ty"
     )
-    env = polys.select("poly_id", "geom_wkb").mapInPandas(
-        _zone_envelope_iter,
-        schema="poly_id string, geom_wkb binary, minx double, miny double, "
-        "maxx double, maxy double",
-    )
+    env = envelopes(polys.select("poly_id", "geom_wkb"), "geom_wkb")
     t = g.tile_px * g.res
     cond = (
         (F.col("minx") < g.x0 + (F.col("tx") + 1) * t)
@@ -303,23 +283,6 @@ def zonal_stats(spark, polys: DataFrame, grid_def: GridDef) -> DataFrame:
         F.min("min_v").alias("min_v"),
         F.max("max_v").alias("max_v"),
     )
-
-
-def _zone_envelope_iter(batches):
-    from .. import wkb as _wkb
-
-    for pdf in batches:
-        mins_x, mins_y, maxs_x, maxs_y = [], [], [], []
-        for geom in pdf["geom_wkb"]:
-            pts = np.vstack(
-                [np.asarray(r, dtype=np.float64)
-                 for r in _wkb.polygon_rings(bytes(geom))]
-            )
-            mins_x.append(pts[:, 0].min())
-            maxs_x.append(pts[:, 0].max())
-            mins_y.append(pts[:, 1].min())
-            maxs_y.append(pts[:, 1].max())
-        yield pdf.assign(minx=mins_x, miny=mins_y, maxx=maxs_x, maxy=maxs_y)
 
 
 def oracle_zonal_stats(m: int, grid_def: GridDef) -> str:

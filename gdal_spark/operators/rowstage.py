@@ -1,4 +1,4 @@
-"""One row-at-a-time Python stage.
+"""One row-at-a-time Python stage, and one envelope stage.
 
 Most per-image and per-feature operators have the same Python shape:
 take one input row, yield zero or more output rows. ``per_row`` is the
@@ -6,12 +6,19 @@ one place that shape meets Arrow: one ``mapInPandas`` whose batches
 become one positional ``pd.DataFrame`` each. pyspark assigns columns
 of a frame with non-string labels by position, so the output column
 names are spelled once, in the schema.
+
+``envelopes`` is the one stage that appends a geometry's envelope to
+its row, for every envelope-prefiltered join (overlay's candidate
+pairs, rasterize's and zonal_stats' tile joins).
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
+
+from .. import wkb
 
 
 def per_row(df: DataFrame, cols, fn, schema: str) -> DataFrame:
@@ -30,3 +37,23 @@ def per_row(df: DataFrame, cols, fn, schema: str) -> DataFrame:
                 yield pd.DataFrame(rows)
 
     return df.select(*cols).mapInPandas(run, schema=schema)
+
+
+def envelopes(
+    df: DataFrame, wkb_col: str, names=("minx", "miny", "maxx", "maxy")
+) -> DataFrame:
+    """``df`` plus the ``wkb.envelope`` of ``wkb_col`` as four double
+    columns ``names`` (in minx, miny, maxx, maxy order), each geometry
+    decoded once, in one mapInPandas. A struct-returning pandas UDF
+    would be evaluated twice, because Catalyst pushes the inferred
+    not-null filters on its fields below the projection."""
+    schema = T.StructType(
+        df.schema.fields + [T.StructField(c, T.DoubleType(), False) for c in names]
+    )
+
+    def decode(batches):
+        for pdf in batches:
+            env = np.array([wkb.envelope(bytes(g)) for g in pdf[wkb_col]])
+            yield pdf.assign(**dict(zip(names, env.reshape(-1, 4).T)))
+
+    return df.mapInPandas(decode, schema=schema)

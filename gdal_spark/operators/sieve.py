@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .polygonize import label_tile
 
@@ -81,7 +81,7 @@ def sieve_filter(vals: np.ndarray, threshold: int, connect8: bool = False) -> np
 
 def sieve_blocks(
     spark, width: int, height: int, bs: int = 24, mod: int = 3,
-    threshold: int = 4, tile_px: int = 0,
+    threshold: int = 4,
 ) -> DataFrame:
     """Sieve the speckled block raster (single-pixel speckles strictly
     inside blocks). Runs the sieve kernel per horizontal raster band
@@ -105,11 +105,8 @@ def sieve_blocks(
             }
         )
 
-    part = bands.groupby("band").applyInPandas(
+    return bands.groupby("band").applyInPandas(
         run, schema="y bigint, n bigint, val_sum bigint"
-    )
-    return part.groupBy("y").agg(
-        F.sum("n").alias("n"), F.sum("val_sum").alias("val_sum")
     )
 
 

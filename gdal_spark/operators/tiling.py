@@ -16,6 +16,11 @@ Pipeline shape (SURVEY 3.2):
   resume:     anti-join against the committed-tile log
               (gdal2tiles --resume, :2720) — see checkpoint helpers
 
+One tile renderer: every tiling stage is a ``_tile_stage`` (one
+TILE_SCHEMA row per rendered tile); the base, retile and feather
+renders sample their sources through the one kernel ``_samples``, and
+both overview reducers place children with ``_compose``.
+
 Every coordinate op in the renderer is written as an explicit, fixed
 sequence of IEEE double ops so the DuckDB oracle can replicate the
 render *pixel-exactly* in SQL (the same discipline as synth.py).
@@ -32,11 +37,37 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .. import codecs, grid, synth
+from .. import codecs, grid, resample, synth
 from ..synth import flit
 from .stats import checksum_sql, gdal_checksum
 
 TILE_PX = 64
+TILE_SCHEMA = (
+    "tx bigint, ty bigint, bytes binary, n_painted bigint, "
+    "cks_0 bigint, cks_1 bigint, cks_2 bigint"
+)
+
+
+def _tile_stage(df: DataFrame, keys, render) -> DataFrame:
+    """``df.groupby(*keys).applyInPandas``: ``render(tx, ty, pdf)``
+    returns the tile's (h, w, 3) pixels and its painted count, or None
+    for a group that renders no tile. One TILE_SCHEMA row per tile:
+    the PNG bytes and the per-channel GDAL checksums."""
+
+    def run(key, pdf):
+        tx, ty = int(key[0]), int(key[1])
+        out = render(tx, ty, pdf)
+        if out is None:
+            return pd.DataFrame()
+        buf, n = out
+        return pd.DataFrame({
+            "tx": [tx], "ty": [ty],
+            "bytes": [codecs.encode_image(buf, "png")],
+            "n_painted": [n],
+            **{f"cks_{c}": [gdal_checksum(buf[:, :, c])] for c in range(3)},
+        })
+
+    return df.groupby(*keys).applyInPandas(run, schema=TILE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -89,9 +120,39 @@ def _tile_lonlat_grids(tx: int, ty: int, zoom: int, tile_px: int):
     return lon, lat
 
 
-def render_base_tiles(
-    images: DataFrame, zoom: int, tile_px: int = TILE_PX
-) -> DataFrame:
+def _samples(pdf: pd.DataFrame, xs: np.ndarray, ys: np.ndarray):
+    """The sampling kernel of every tile renderer. For each source
+    image of ``pdf`` (i, bytes, lon, lat, w, h), in ``i`` order, that
+    covers any of a tile's pixel centres (x per column ``xs``, y per
+    row ``ys``), yield (arr, yy, xx, sy, sx): the decoded image, the
+    tile pixels it paints and the source pixel each one samples —
+    nearest, floor((centre - corner) / res + 1e-10), inside the
+    raster."""
+    for row in pdf.sort_values("i").itertuples(index=False):
+        r = 0.1 / row.w
+        ix = np.floor((xs - row.lon) / r + 1e-10).astype(np.int64)
+        iy = np.floor((row.lat - ys) / r + 1e-10).astype(np.int64)
+        okx = (ix >= 0) & (ix < row.w)
+        oky = (iy >= 0) & (iy < row.h)
+        m = oky[:, None] & okx[None, :]
+        if m.any():
+            yy, xx = np.nonzero(m)
+            yield codecs.decode_image(bytes(row.bytes)), yy, xx, iy[yy], ix[xx]
+
+
+def _last_wins(pdf: pd.DataFrame, xs: np.ndarray, ys: np.ndarray):
+    """Last-wins nearest mosaic of ``pdf``'s images on one tile:
+    (pixels, painted count), or None when no pixel is painted."""
+    buf = np.zeros((len(ys), len(xs), 3), dtype=np.uint8)
+    painted = np.zeros((len(ys), len(xs)), dtype=bool)
+    for arr, yy, xx, sy, sx in _samples(pdf, xs, ys):
+        buf[yy, xx, :] = arr[sy, sx, :]
+        painted[yy, xx] = True
+    n = int(painted.sum())
+    return (buf, n) if n else None
+
+
+def render_base_tiles(images: DataFrame, zoom: int) -> DataFrame:
     """Render the base-zoom tile mosaic. Input needs (i, image_id,
     bytes, lon, lat, w, h). Output: one row per painted tile:
     (tx, ty, bytes, n_painted) + per-channel checksums cks_0..2.
@@ -105,66 +166,32 @@ def render_base_tiles(
     cov = covering_tiles(
         images.select("i", "image_id", "bytes", "lon", "lat", "w", "h"), zoom
     )
-
-    def render(key, pdf):
-        tx, ty = int(key[0]), int(key[1])
-        lon_px, lat_px = _tile_lonlat_grids(tx, ty, zoom, tile_px)
-        buf = np.zeros((tile_px, tile_px, 3), dtype=np.uint8)
-        painted = np.zeros((tile_px, tile_px), dtype=bool)
-        for row in pdf.sort_values("i").itertuples(index=False):
-            arr = codecs.decode_image(bytes(row.bytes))
-            r = 0.1 / row.w
-            sx = (lon_px - row.lon) / r
-            sy = (row.lat - lat_px) / r
-            ix = np.floor(sx + 1e-10).astype(np.int64)
-            iy = np.floor(sy + 1e-10).astype(np.int64)
-            okx = (ix >= 0) & (ix < row.w)
-            oky = (iy >= 0) & (iy < row.h)
-            m = oky[:, None] & okx[None, :]
-            if not m.any():
-                continue
-            yy, xx = np.nonzero(m)
-            buf[yy, xx, :] = arr[iy[yy], ix[xx], :]
-            painted[yy, xx] = True
-        n = int(painted.sum())
-        if n == 0:
-            return pd.DataFrame(
-                {
-                    "tx": pd.array([], dtype="int64"),
-                    "ty": pd.array([], dtype="int64"),
-                    "bytes": pd.array([], dtype=object),
-                    "n_painted": pd.array([], dtype="int64"),
-                    "cks_0": pd.array([], dtype="int64"),
-                    "cks_1": pd.array([], dtype="int64"),
-                    "cks_2": pd.array([], dtype="int64"),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "tx": [tx],
-                "ty": [ty],
-                "bytes": [codecs.encode_image(buf, "png")],
-                "n_painted": [n],
-                "cks_0": [gdal_checksum(buf[:, :, 0])],
-                "cks_1": [gdal_checksum(buf[:, :, 1])],
-                "cks_2": [gdal_checksum(buf[:, :, 2])],
-            }
-        )
-
-    return cov.groupby("tx", "ty").applyInPandas(
-        render,
-        schema="tx bigint, ty bigint, bytes binary, n_painted bigint, "
-        "cks_0 bigint, cks_1 bigint, cks_2 bigint",
-    )
+    return _tile_stage(cov, ("tx", "ty"), lambda tx, ty, pdf: _last_wins(
+        pdf, *_tile_lonlat_grids(tx, ty, zoom, TILE_PX)
+    ))
 
 
 # ---------------------------------------------------------------------------
 # overview reduce (z -> z-1)
 
 
-def overview_tiles(
-    tiles: DataFrame, tile_px: int = TILE_PX, resampling: str = "average"
-) -> DataFrame:
+def _compose(pdf: pd.DataFrame, ptx: int, pty: int, n: int) -> np.ndarray:
+    """Parent (ptx, pty)'s children (tx, ty, bytes) on an (n, n, 3)
+    int64 canvas, n = 2t, or 2t + 1 with GAUSS's halo row and column;
+    a missing child is 0. TMS y-up: child tx = 2*ptx + qx,
+    ty = 2*pty + 1 - qy sits at columns qx*t, rows qy*t, clipped to
+    the canvas (qx = 2 / qy = 2 is the halo)."""
+    t = n // 2
+    comp = np.zeros((n, n, 3), dtype=np.int64)
+    for tx, ty, b in zip(pdf["tx"], pdf["ty"], pdf["bytes"]):
+        x, y = (int(tx) - 2 * ptx) * t, (2 * pty + 1 - int(ty)) * t
+        comp[y : y + t, x : x + t, :] = codecs.decode_image(bytes(b))[
+            : n - y, : n - x, :
+        ]
+    return comp
+
+
+def overview_tiles(tiles: DataFrame, resampling: str = "average") -> DataFrame:
     """One pyramid level up: each parent composes its <=4 children on
     the doubled grid (missing children = 0) and downsamples 2x with
     ``resampling`` — any golden-verified kernel from
@@ -174,15 +201,8 @@ def overview_tiles(
     exact-integer (sum+2)//4 path (bit-equal to the area kernel for
     integer inputs; it is floor(mean + 0.5))."""
 
-    def reduce_parent(key, pdf):
-        ptx, pty = int(key[0]), int(key[1])
-        comp = np.zeros((2 * tile_px, 2 * tile_px, 3), dtype=np.int64)
-        for row in pdf.itertuples(index=False):
-            arr = codecs.decode_image(bytes(row.bytes)).astype(np.int64)
-            qx = int(row.tx) - 2 * ptx  # 0 = left, 1 = right
-            qy = int(row.ty) - 2 * pty  # TMS: 1 = top half of the image
-            y0 = 0 if qy == 1 else tile_px
-            comp[y0 : y0 + tile_px, qx * tile_px : (qx + 1) * tile_px, :] = arr
+    def reduce_parent(ptx, pty, pdf):
+        comp = _compose(pdf, ptx, pty, 2 * TILE_PX)
         if resampling == "average":
             s = (
                 comp[0::2, 0::2]
@@ -192,43 +212,25 @@ def overview_tiles(
             )
             buf = ((s + 2) // 4).astype(np.uint8)
         else:
-            from .. import resample
-
             gt = (0.0, 1.0, 0.0, 0.0, 0.0, -1.0)
             gt_half = (0.0, 2.0, 0.0, 0.0, 0.0, -2.0)
             buf = resample.warp_image(
                 comp.astype(np.uint8), gt, gt_half,
-                (tile_px, tile_px), resampling,
+                (TILE_PX, TILE_PX), resampling,
             )
-        return pd.DataFrame(
-            {
-                "tx": [ptx],
-                "ty": [pty],
-                "bytes": [codecs.encode_image(buf, "png")],
-                "n_painted": [int(pdf["n_painted"].sum())],
-                "cks_0": [gdal_checksum(buf[:, :, 0])],
-                "cks_1": [gdal_checksum(buf[:, :, 1])],
-                "cks_2": [gdal_checksum(buf[:, :, 2])],
-            }
-        )
+        return buf, int(pdf["n_painted"].sum())
 
     parented = tiles.withColumn("ptx", F.expr("tx div 2")).withColumn(
         "pty", F.expr("ty div 2")
     )
-    return parented.groupby("ptx", "pty").applyInPandas(
-        reduce_parent,
-        schema="tx bigint, ty bigint, bytes binary, n_painted bigint, "
-        "cks_0 bigint, cks_1 bigint, cks_2 bigint",
-    )
+    return _tile_stage(parented, ("ptx", "pty"), reduce_parent)
 
 
 GAUSS_K3 = np.array([[1, 2, 1], [2, 4, 2], [1, 2, 1]], dtype=np.int64)
 
 
 def overview_gauss(
-    tiles: DataFrame,
-    extent: tuple[int, int, int, int],
-    tile_px: int = TILE_PX,
+    tiles: DataFrame, extent: tuple[int, int, int, int]
 ) -> DataFrame:
     """GDAL GAUSS overview kernel, one pyramid level up
     (gcore/overview.cpp:1827 GDALResampleChunk32R_Gauss): for a 2x
@@ -251,7 +253,7 @@ def overview_gauss(
     outside it truncate the kernel window exactly like the
     reference's raster edge."""
     tx0, tx1, ty0, ty1 = extent
-    t = tile_px
+    t = TILE_PX
 
     parented = tiles.selectExpr(
         "tx", "ty", "bytes", "n_painted",
@@ -269,30 +271,10 @@ def overview_gauss(
         "tx", "ty", "bytes", "n_painted",
     )
 
-    def reduce_parent(key, pdf):
-        ptx, pty = int(key[0]), int(key[1])
-        empty = pd.DataFrame(
-            {
-                "tx": pd.array([], dtype="int64"),
-                "ty": pd.array([], dtype="int64"),
-                "bytes": pd.array([], dtype=object),
-                "n_painted": pd.array([], dtype="int64"),
-                "cks_0": pd.array([], dtype="int64"),
-                "cks_1": pd.array([], dtype="int64"),
-                "cks_2": pd.array([], dtype="int64"),
-            }
-        )
+    def reduce_parent(ptx, pty, pdf):
         if not pdf["is_main"].any():
-            return empty  # halo-only group: not a rendered parent
-        # compose children + halo row/col on a (2t+1)^2 canvas
-        comp = np.zeros((2 * t + 1, 2 * t + 1, 3), dtype=np.int64)
-        for row in pdf.itertuples(index=False):
-            arr = codecs.decode_image(bytes(row.bytes)).astype(np.int64)
-            qx = int(row.tx) - 2 * ptx          # 0, 1, or 2 (halo col)
-            ry = (2 * pty + 1 - int(row.ty)) * t  # 0, t, or 2t (halo row)
-            h = 1 if ry == 2 * t else t
-            w_ = 1 if qx == 2 else t
-            comp[ry : ry + h, qx * t : qx * t + w_, :] = arr[:h, :w_, :]
+            return None  # halo-only group: not a rendered parent
+        comp = _compose(pdf, ptx, pty, 2 * t + 1)
         # validity: within the raster extent (truncates the window at
         # the mosaic edge, matching the reference's chunk bounds)
         rr = np.arange(2 * t + 1)
@@ -319,46 +301,21 @@ def overview_gauss(
         buf = np.where(
             wsum > 0, (2 * total + safe) // (2 * safe), 0
         ).astype(np.uint8)
-        main = pdf[pdf["is_main"]]
-        return pd.DataFrame(
-            {
-                "tx": [ptx],
-                "ty": [pty],
-                "bytes": [codecs.encode_image(buf, "png")],
-                "n_painted": [int(main["n_painted"].sum())],
-                "cks_0": [gdal_checksum(buf[:, :, 0])],
-                "cks_1": [gdal_checksum(buf[:, :, 1])],
-                "cks_2": [gdal_checksum(buf[:, :, 2])],
-            }
-        )
+        return buf, int(pdf.loc[pdf["is_main"], "n_painted"].sum())
 
-    return parented.groupby("ptx", "pty").applyInPandas(
-        reduce_parent,
-        schema="tx bigint, ty bigint, bytes binary, n_painted bigint, "
-        "cks_0 bigint, cks_1 bigint, cks_2 bigint",
-    )
-
-
-def build_pyramid(
-    images: DataFrame, z_base: int, z_min: int, tile_px: int = TILE_PX
-) -> dict[int, DataFrame]:
-    """Full pyramid z_base down to z_min (inclusive)."""
-    out = {z_base: render_base_tiles(images, z_base, tile_px)}
-    for z in range(z_base - 1, z_min - 1, -1):
-        out[z] = overview_tiles(out[z + 1], tile_px)
-    return out
+    return _tile_stage(parented, ("ptx", "pty"), reduce_parent)
 
 
 # ---------------------------------------------------------------------------
 # SQL oracle — literal mirror of the render arithmetic
 
 
-def _merc_px_cte(zoom: int, tx0, tx1, ty0, ty1, tile_px: int) -> str:
+def _merc_px_cte(zoom: int, tx0, tx1, ty0, ty1) -> str:
     """CTE 'px': (tx, ty, x, y, lon, lat) for every pixel center of
     the tile range."""
     res = grid.INITIAL_RESOLUTION / (2.0**zoom)
     span = 256.0 * res
-    tres = span / tile_px
+    tres = span / TILE_PX
     shift = flit(grid.ORIGIN_SHIFT)
     mx = f"(tx * {flit(span)} - {shift} + (x + 0.5E0) * {flit(tres)})"
     my = f"((ty + 1) * {flit(span)} - {shift} - (y + 0.5E0) * {flit(tres)})"
@@ -368,37 +325,19 @@ def _merc_px_cte(zoom: int, tx0, tx1, ty0, ty1, tile_px: int) -> str:
     return (
         f"SELECT tx, ty, x, y, {lon} AS plon, {lat} AS plat "
         f"FROM range({tx0}, {tx1 + 1}) a(tx), range({ty0}, {ty1 + 1}) b(ty), "
-        f"range(0, {tile_px}) c(x), range(0, {tile_px}) d(y)"
+        f"range(0, {TILE_PX}) c(x), range(0, {TILE_PX}) d(y)"
     )
 
 
-def oracle_tile_render(
-    n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1, tile_px: int = TILE_PX
-) -> str:
-    """Per-(tile, channel) checksum + painted count of the base-zoom
-    render, recomputed from pure SQL arithmetic: same pixel-center
-    mercator math, same nearest floor(+1e-10) sampling, last-wins by
-    max image index."""
-    eps = "0.0000000001E0"
-    cks_sql = checksum_sql("val", f"oy * {tile_px} + ox")
-    return (
-        f"WITH {_render_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1, tile_px)} "
-        f"SELECT tx, ty, cast(ch as bigint) AS channel, "
-        f"{cks_sql} AS cks, "
-        f"count(*) AS n_painted FROM vals GROUP BY 1, 2, 3"
-    )
-
-
-def _render_ctes(
-    n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1, tile_px: int
-) -> str:
+def _hit_ctes(n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1) -> str:
+    """CTEs img, px and hit (each followed by ', '): every (tile pixel,
+    image) pair that passes the loose bbox prefilter, with its
+    floor(+1e-10) source sample (sx, sy) — the SQL ``_samples``."""
     eps = "0.0000000001E0"
     return (
         f"img AS (SELECT * FROM ({synth.images_cte(n, 'duckdb')}) "
         f"WHERE i % 4 = 0 AND i < {max_i}), "
-        f"px AS ({_merc_px_cte(zoom, tx0, tx1, ty0, ty1, tile_px)}), "
-        # loose bbox prefilter, exact floor-sample test, winner = max i
-        # among images whose sample lands inside their raster
+        f"px AS ({_merc_px_cte(zoom, tx0, tx1, ty0, ty1)}), "
         f"hit AS (SELECT px.tx, px.ty, px.x AS ox, px.y AS oy, img.i, img.w, "
         f"img.h, img.fmt, "
         f"cast(floor((px.plon - img.lon) / (0.1E0 / img.w) + {eps}) as bigint) AS sx, "
@@ -407,6 +346,12 @@ def _render_ctes(
         f"AND px.plon < img.lon + 0.101E0 "
         f"AND px.plat <= img.lat + 0.001E0 "
         f"AND px.plat > img.lat - 0.101E0 * img.h / img.w - 0.001E0), "
+    )
+
+
+def _render_ctes(n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1) -> str:
+    # winner = max i among images whose sample lands inside their raster
+    return _hit_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1) + (
         f"win AS (SELECT * FROM hit WHERE sx >= 0 AND sx < w AND sy >= 0 "
         f"AND sy < h "
         f"QUALIFY row_number() OVER (PARTITION BY tx, ty, ox, oy "
@@ -417,18 +362,61 @@ def _render_ctes(
     )
 
 
+def oracle_tile_render(n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1) -> str:
+    """Per-(tile, channel) checksum + painted count of the base-zoom
+    render, recomputed from pure SQL arithmetic: same pixel-center
+    mercator math, same nearest floor(+1e-10) sampling, last-wins by
+    max image index."""
+    cks_sql = checksum_sql("val", f"oy * {TILE_PX} + ox")
+    return (
+        f"WITH {_render_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1)} "
+        f"SELECT tx, ty, cast(ch as bigint) AS channel, "
+        f"{cks_sql} AS cks, "
+        f"count(*) AS n_painted FROM vals GROUP BY 1, 2, 3"
+    )
+
+
 OVERVIEW_ORACLE_ALGS = ("near", "max", "min")
+
+# the child pixel a parent lattice row (ctx, cty, cx, cy) reads
+_CHILD_JOIN = (
+    "LEFT JOIN vals v ON v.tx = q.ctx AND v.ty = q.cty "
+    "AND v.ox = q.cx AND v.oy = q.cy AND v.ch = q.ch"
+)
+
+
+def _overview_ctes(n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1) -> str:
+    """'WITH' + the base render CTEs + 'parents': every parent tile of
+    a rendered child (followed by ', ')."""
+    return (
+        f"WITH {_render_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1)}, "
+        f"parents AS (SELECT DISTINCT tx // 2 AS ptx, ty // 2 AS pty FROM vals), "
+    )
+
+
+def _child_lattice(k: int) -> str:
+    """Select-list tail and FROM of the parent-pixel lattice: for each
+    parent pixel (x, y), channel and tap (dx, dy) in [0, k)^2, the child
+    tile (ctx, cty) and child pixel (cx, cy) at (2x + dx, 2y + dy),
+    TMS y-up."""
+    t = TILE_PX
+    return (
+        f"2 * ptx + ((2 * x + dx) // {t}) AS ctx, "
+        f"2 * pty + (1 - ((2 * y + dy) // {t})) AS cty, "
+        f"(2 * x + dx) % {t} AS cx, (2 * y + dy) % {t} AS cy "
+        f"FROM parents, range(0, {t}) a(x), range(0, {t}) b(y), "
+        f"range(0, 3) c(ch), range(0, {k}) d(dx), range(0, {k}) e(dy)"
+    )
 
 
 def oracle_overview_resamplers(
-    n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1, tile_px: int = TILE_PX
+    n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1
 ) -> str:
     """Overview reduce replay for the non-average resamplers with
     SQL-exact 2x semantics: near picks the (2x+1, 2y+1) child pixel
     (dst center (x+0.5)*2 floored), max/min fold the 2x2 block
     (missing children = 0, matching the zero-filled composition)."""
-    t = tile_px
-    cks_sql = checksum_sql("val", f"y * {t} + x")
+    cks_sql = checksum_sql("val", f"y * {TILE_PX} + x")
     per_alg = {
         "near": "sum(CASE WHEN dx = 1 AND dy = 1 "
                 "THEN coalesce(val, 0) ELSE 0 END)",
@@ -441,17 +429,10 @@ def oracle_overview_resamplers(
         for alg, expr in per_alg.items()
     )
     return (
-        f"WITH {_render_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1, tile_px)}, "
-        f"parents AS (SELECT DISTINCT tx // 2 AS ptx, ty // 2 AS pty FROM vals), "
+        f"{_overview_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1)}"
         f"quad2 AS (SELECT q.ptx, q.pty, q.x, q.y, q.ch, q.dx, q.dy, v.val "
-        f"FROM (SELECT ptx, pty, x, y, ch, dx, dy, "
-        f"2 * ptx + ((2 * x + dx) // {t}) AS ctx, "
-        f"2 * pty + (1 - ((2 * y + dy) // {t})) AS cty, "
-        f"(2 * x + dx) % {t} AS cx, (2 * y + dy) % {t} AS cy "
-        f"FROM parents, range(0, {t}) a(x), range(0, {t}) b(y), "
-        f"range(0, 3) c(ch), range(0, 2) d(dx), range(0, 2) e(dy)) q "
-        f"LEFT JOIN vals v ON v.tx = q.ctx AND v.ty = q.cty "
-        f"AND v.ox = q.cx AND v.oy = q.cy AND v.ch = q.ch), "
+        f"FROM (SELECT ptx, pty, x, y, ch, dx, dy, {_child_lattice(2)}) q "
+        f"{_CHILD_JOIN}), "
         f"reduced AS ({alg_rows}) "
         f"SELECT ptx AS tx, pty AS ty, alg, cast(ch as bigint) AS channel, "
         f"{cks_sql} AS cks "
@@ -460,28 +441,21 @@ def oracle_overview_resamplers(
 
 
 def oracle_overview_gauss(
-    n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1, tile_px: int = TILE_PX
+    n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1
 ) -> str:
     """GAUSS overview replay: 3x3 binomial window anchored at
     (2x, 2y), truncated at the raster (tile-extent) edge, exact
     integer round-half-up (2*total + wsum) // (2*wsum) — see
     overview_gauss for why the float32 path collapses to this."""
-    t = tile_px
-    cks_sql = checksum_sql("val", f"y * {t} + x")
+    cks_sql = checksum_sql("val", f"y * {TILE_PX} + x")
     wx = "(CASE dx WHEN 1 THEN 2 ELSE 1 END)"
     wy = "(CASE dy WHEN 1 THEN 2 ELSE 1 END)"
     return (
-        f"WITH {_render_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1, tile_px)}, "
-        f"parents AS (SELECT DISTINCT tx // 2 AS ptx, ty // 2 AS pty FROM vals), "
+        f"{_overview_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1)}"
         f"quad3 AS (SELECT q.ptx, q.pty, q.x, q.y, q.ch, q.wgt, v.val "
         f"FROM (SELECT ptx, pty, x, y, ch, {wx} * {wy} AS wgt, "
-        f"2 * ptx + ((2 * x + dx) // {t}) AS ctx, "
-        f"2 * pty + (1 - ((2 * y + dy) // {t})) AS cty, "
-        f"(2 * x + dx) % {t} AS cx, (2 * y + dy) % {t} AS cy "
-        f"FROM parents, range(0, {t}) a(x), range(0, {t}) b(y), "
-        f"range(0, 3) c(ch), range(0, 3) d(dx), range(0, 3) e(dy)) q "
-        f"LEFT JOIN vals v ON v.tx = q.ctx AND v.ty = q.cty "
-        f"AND v.ox = q.cx AND v.oy = q.cy AND v.ch = q.ch "
+        f"{_child_lattice(3)}) q "
+        f"{_CHILD_JOIN} "
         f"WHERE q.ctx BETWEEN {tx0} AND {tx1} "
         f"AND q.cty BETWEEN {ty0} AND {ty1}), "
         f"reduced AS (SELECT ptx, pty, x, y, ch, "
@@ -494,26 +468,18 @@ def oracle_overview_gauss(
 
 
 def oracle_tile_overview(
-    n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1, tile_px: int = TILE_PX
+    n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1
 ) -> str:
     """z-1 overview oracle: recompute the base render in SQL, compose
     the 2x2 children (TMS y-up: cy-high half is the image top), box
     average with (sum+2)//4, checksum per parent tile/channel."""
-    t = tile_px
-    cks_sql = checksum_sql("v.val", f"y * {t} + x")
+    cks_sql = checksum_sql("v.val", f"y * {TILE_PX} + x")
     return (
-        f"WITH {_render_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1, tile_px)}, "
-        f"parents AS (SELECT DISTINCT tx // 2 AS ptx, ty // 2 AS pty FROM vals), "
-        f"quad AS (SELECT ptx, pty, x, y, ch, "
-        f"2 * ptx + ((2 * x + dx) // {t}) AS ctx, "
-        f"2 * pty + (1 - ((2 * y + dy) // {t})) AS cty, "
-        f"(2 * x + dx) % {t} AS cx, (2 * y + dy) % {t} AS cy "
-        f"FROM parents, range(0, {t}) a(x), range(0, {t}) b(y), "
-        f"range(0, 3) c(ch), range(0, 2) d(dx), range(0, 2) e(dy)), "
+        f"{_overview_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1)}"
+        f"quad AS (SELECT ptx, pty, x, y, ch, {_child_lattice(2)}), "
         f"summed AS (SELECT q.ptx, q.pty, q.x, q.y, q.ch, "
-        f"sum(coalesce(v.val, 0)) AS s FROM quad q LEFT JOIN vals v "
-        f"ON v.tx = q.ctx AND v.ty = q.cty AND v.ox = q.cx AND v.oy = q.cy "
-        f"AND v.ch = q.ch GROUP BY 1, 2, 3, 4, 5), "
+        f"sum(coalesce(v.val, 0)) AS s FROM quad q {_CHILD_JOIN} "
+        f"GROUP BY 1, 2, 3, 4, 5), "
         f"val9 AS (SELECT ptx, pty, x, y, ch, (s + 2) // 4 AS val FROM summed), "
         f"npaint AS (SELECT tx // 2 AS ptx, ty // 2 AS pty, ch, "
         f"count(*) AS np FROM vals GROUP BY 1, 2, 3) "
@@ -533,23 +499,19 @@ def oracle_tile_overview(
 # gather per tile, same shuffle shape as the base render.
 
 
-def retile(
-    images: DataFrame,
-    x0: float,
-    y0: float,
-    res: float,
-    tile_px: int,
-    nx: int,
-    ny: int,
+def _retile_cover(
+    images: DataFrame, x0: float, y0: float, res: float, tile_px: int,
+    nx: int, ny: int,
 ) -> DataFrame:
-    """(tx, ty, n_painted, cks_0..2) per affine grid tile. Covering
-    explode is pure Catalyst (affine index arithmetic + sequence)."""
+    """Each image that overlaps the grid, exploded to the grid tiles
+    (tx, ty) its footprint covers, clamped into [0, nx) x [0, ny).
+    Pure Catalyst (affine index arithmetic + sequence)."""
     span = flit(res * tile_px)
     fx0, fy0 = flit(x0), flit(y0)
     minlat = "(lat - 0.1E0 * cast(h as double) / cast(w as double))"
     gx1 = flit(x0 + res * tile_px * nx)
     gy1 = flit(y0 - res * tile_px * ny)
-    cov = (
+    return (
         images
         # footprint-vs-grid-extent prefilter: without it the index
         # clamp lands fully-outside images on edge tiles and ships
@@ -574,45 +536,27 @@ def retile(
         .drop("tx0", "tx1", "ty0", "ty1")
     )
 
-    def render(key, pdf):
-        tx, ty = int(key[0]), int(key[1])
+
+def retile(
+    images: DataFrame,
+    x0: float,
+    y0: float,
+    res: float,
+    tile_px: int,
+    nx: int,
+    ny: int,
+) -> DataFrame:
+    """(tx, ty, n_painted, cks_0..2) per affine grid tile: the
+    last-wins render of ``_retile_cover``'s groups at the tile's
+    pixel centres."""
+
+    def render(tx, ty, pdf):
         xs = x0 + (tx * tile_px + np.arange(tile_px) + 0.5) * res
         ys = y0 - (ty * tile_px + np.arange(tile_px) + 0.5) * res
-        buf = np.zeros((tile_px, tile_px, 3), dtype=np.uint8)
-        painted = np.zeros((tile_px, tile_px), dtype=bool)
-        for row in pdf.sort_values("i").itertuples(index=False):
-            arr = codecs.decode_image(bytes(row.bytes))
-            r = 0.1 / row.w
-            sx = np.floor((xs - row.lon) / r + 1e-10).astype(np.int64)
-            sy = np.floor((row.lat - ys) / r + 1e-10).astype(np.int64)
-            okx = (sx >= 0) & (sx < row.w)
-            oky = (sy >= 0) & (sy < row.h)
-            m = oky[:, None] & okx[None, :]
-            if not m.any():
-                continue
-            yy, xx = np.nonzero(m)
-            buf[yy, xx, :] = arr[sy[yy], sx[xx], :]
-            painted[yy, xx] = True
-        n = int(painted.sum())
-        if n == 0:
-            return pd.DataFrame(
-                {c: pd.array([], dtype="int64") for c in
-                 ("tx", "ty", "n_painted", "cks_0", "cks_1", "cks_2")}
-            )
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty], "n_painted": [n],
-                "cks_0": [gdal_checksum(buf[:, :, 0])],
-                "cks_1": [gdal_checksum(buf[:, :, 1])],
-                "cks_2": [gdal_checksum(buf[:, :, 2])],
-            }
-        )
+        return _last_wins(pdf, xs, ys)
 
-    return cov.groupby("tx", "ty").applyInPandas(
-        render,
-        schema="tx bigint, ty bigint, n_painted bigint, "
-        "cks_0 bigint, cks_1 bigint, cks_2 bigint",
-    )
+    cov = _retile_cover(images, x0, y0, res, tile_px, nx, ny)
+    return _tile_stage(cov, ("tx", "ty"), render).drop("bytes")
 
 
 def oracle_retile(
@@ -674,89 +618,43 @@ GROUP BY 1, 2, 4
 # tile, sources gathered by the covering-tiles explode.
 
 
-def render_feather_tiles(
-    images: DataFrame, zoom: int, tile_px: int = TILE_PX
-) -> DataFrame:
+def render_feather_tiles(images: DataFrame, zoom: int) -> DataFrame:
     """(tx, ty, n_painted, cks_0..2): edge-distance-weighted blend of
     all covering images per tile pixel."""
     cov = covering_tiles(
         images.select("i", "image_id", "bytes", "lon", "lat", "w", "h"), zoom
     )
 
-    def render(key, pdf):
-        tx, ty = int(key[0]), int(key[1])
-        lon_px, lat_px = _tile_lonlat_grids(tx, ty, zoom, tile_px)
-        num = np.zeros((tile_px, tile_px, 3), dtype=np.int64)
-        den = np.zeros((tile_px, tile_px), dtype=np.int64)
-        for row in pdf.itertuples(index=False):
-            arr = codecs.decode_image(bytes(row.bytes))
-            r = 0.1 / row.w
-            sx = (lon_px - row.lon) / r
-            sy = (row.lat - lat_px) / r
-            ix = np.floor(sx + 1e-10).astype(np.int64)
-            iy = np.floor(sy + 1e-10).astype(np.int64)
-            okx = (ix >= 0) & (ix < row.w)
-            oky = (iy >= 0) & (iy < row.h)
-            m = oky[:, None] & okx[None, :]
-            if not m.any():
-                continue
-            yy, xx = np.nonzero(m)
-            gx, gy = ix[xx], iy[yy]
+    def render(tx, ty, pdf):
+        num = np.zeros((TILE_PX, TILE_PX, 3), dtype=np.int64)
+        den = np.zeros((TILE_PX, TILE_PX), dtype=np.int64)
+        xs, ys = _tile_lonlat_grids(tx, ty, zoom, TILE_PX)
+        for arr, yy, xx, sy, sx in _samples(pdf, xs, ys):
+            h, w = arr.shape[:2]
             wd = np.minimum(
-                np.minimum(gx, row.w - 1 - gx),
-                np.minimum(gy, row.h - 1 - gy),
+                np.minimum(sx, w - 1 - sx), np.minimum(sy, h - 1 - sy)
             ) + 1
-            num[yy, xx, :] += wd[:, None] * arr[gy, gx, :].astype(np.int64)
+            num[yy, xx, :] += wd[:, None] * arr[sy, sx, :].astype(np.int64)
             den[yy, xx] += wd
         painted = den > 0
-        n = int(painted.sum())
-        if n == 0:
-            return pd.DataFrame(
-                {c: pd.array([], dtype=t) for c, t in
-                 [("tx", "int64"), ("ty", "int64"), ("n_painted", "int64"),
-                  ("cks_0", "int64"), ("cks_1", "int64"),
-                  ("cks_2", "int64")]}
-            )
-        out = np.zeros_like(num)
+        if not painted.any():
+            return None
+        out = np.zeros((TILE_PX, TILE_PX, 3), dtype=np.uint8)
         out[painted] = num[painted] // den[painted][:, None]
-        return pd.DataFrame(
-            {
-                "tx": [tx], "ty": [ty], "n_painted": [n],
-                "cks_0": [gdal_checksum(out[:, :, 0])],
-                "cks_1": [gdal_checksum(out[:, :, 1])],
-                "cks_2": [gdal_checksum(out[:, :, 2])],
-            }
-        )
+        return out, int(painted.sum())
 
-    return cov.groupby("tx", "ty").applyInPandas(
-        render,
-        schema="tx bigint, ty bigint, n_painted bigint, "
-        "cks_0 bigint, cks_1 bigint, cks_2 bigint",
-    )
+    return _tile_stage(cov, ("tx", "ty"), render).drop("bytes")
 
 
 def oracle_feather_render(
-    n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1, tile_px: int = TILE_PX
+    n: int, max_i: int, zoom: int, tx0, tx1, ty0, ty1
 ) -> str:
     """All-hits weighted replay of the feather blend (the last-wins
     QUALIFY of oracle_tile_render replaced by the wd-weighted sum +
     one floor division)."""
-    eps = "0.0000000001E0"
-    cks_sql = checksum_sql("v", f"oy * {tile_px} + ox")
+    cks_sql = checksum_sql("v", f"oy * {TILE_PX} + ox")
     return (
-        f"WITH img AS (SELECT * FROM ({synth.images_cte(n, 'duckdb')}) "
-        f"WHERE i % 4 = 0 AND i < {max_i}), "
-        f"px AS ({_merc_px_cte(zoom, tx0, tx1, ty0, ty1, tile_px)}), "
-        f"hit AS (SELECT px.tx, px.ty, px.x AS ox, px.y AS oy, img.i, "
-        f"img.w, img.h, img.fmt, "
-        f"cast(floor((px.plon - img.lon) / (0.1E0 / img.w) + {eps}) "
-        f"as bigint) AS sx, "
-        f"cast(floor((img.lat - px.plat) / (0.1E0 / img.w) + {eps}) "
-        f"as bigint) AS sy "
-        f"FROM px JOIN img ON px.plon >= img.lon - 0.001E0 "
-        f"AND px.plon < img.lon + 0.101E0 "
-        f"AND px.plat <= img.lat + 0.001E0 "
-        f"AND px.plat > img.lat - 0.101E0 * img.h / img.w - 0.001E0), "
+        f"WITH {_hit_ctes(n, max_i, zoom, tx0, tx1, ty0, ty1)}"
         f"v AS (SELECT tx, ty, ox, oy, ch, "
         f"least(sx, w - 1 - sx, sy, h - 1 - sy) + 1 AS wd, "
         f"{synth.pixel_val_sql()} AS val "

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .dem import DEM_VALUE_SQL, _dem_value
 
@@ -101,11 +101,8 @@ def viewshed_rows(
             out.append((ty, width, nvis))
         return pd.DataFrame(out, columns=["y", "n", "n_visible"])
 
-    part = bands.groupby("band").applyInPandas(
+    return bands.groupby("band").applyInPandas(
         run, schema="y bigint, n bigint, n_visible bigint"
-    )
-    return part.groupBy("y").agg(
-        F.sum("n").alias("n"), F.sum("n_visible").alias("n_visible")
     )
 
 
@@ -208,12 +205,8 @@ def viewshed_ground_rows(
             out.append((ty, width, msum))
         return pd.DataFrame(out, columns=["y", "n", "ground_mkey_sum"])
 
-    part = bands.groupby("band").applyInPandas(
+    return bands.groupby("band").applyInPandas(
         run, schema="y bigint, n bigint, ground_mkey_sum bigint"
-    )
-    return part.groupBy("y").agg(
-        F.sum("n").alias("n"),
-        F.sum("ground_mkey_sum").alias("ground_mkey_sum"),
     )
 
 
@@ -323,11 +316,8 @@ def viewshed_cumulative_rows(
             out.append((ty, width, total))
         return pd.DataFrame(out, columns=["y", "n", "vis_total"])
 
-    part = bands.groupby("band").applyInPandas(
+    return bands.groupby("band").applyInPandas(
         run, schema="y bigint, n bigint, vis_total bigint"
-    )
-    return part.groupBy("y").agg(
-        F.sum("n").alias("n"), F.sum("vis_total").alias("vis_total")
     )
 
 
@@ -468,11 +458,8 @@ def viewshed_curved_rows(
             out.append((ty, width, nvis))
         return pd.DataFrame(out, columns=["y", "n", "n_visible"])
 
-    part = bands.groupby("band").applyInPandas(
+    return bands.groupby("band").applyInPandas(
         run, schema="y bigint, n bigint, n_visible bigint"
-    )
-    return part.groupBy("y").agg(
-        F.sum("n").alias("n"), F.sum("n_visible").alias("n_visible")
     )
 
 
@@ -595,13 +582,8 @@ def viewshed_maxdist_rows(
             out, columns=["y", "n", "n_inrange", "n_visible"]
         )
 
-    part = bands.groupby("band").applyInPandas(
+    return bands.groupby("band").applyInPandas(
         run, schema="y bigint, n bigint, n_inrange bigint, n_visible bigint"
-    )
-    return part.groupBy("y").agg(
-        F.sum("n").alias("n"),
-        F.sum("n_inrange").alias("n_inrange"),
-        F.sum("n_visible").alias("n_visible"),
     )
 
 

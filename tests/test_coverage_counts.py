@@ -7,6 +7,7 @@ COVERAGE_DRIVER.md must be what tools/driver_green.py generates.
 """
 
 import importlib.util
+import json
 import pathlib
 import re
 
@@ -47,14 +48,32 @@ def test_every_query_has_oracle():
     )
 
 
-def test_coverage_driver_is_generated():
-    """COVERAGE_DRIVER.md is exactly what tools/driver_green.py
-    renders from the registry and the CORRECTNESS_r*.json records."""
+def _driver_green():
     spec = importlib.util.spec_from_file_location(
         "driver_green", ROOT / "tools" / "driver_green.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod
+
+
+def test_coverage_driver_is_generated():
+    """COVERAGE_DRIVER.md is exactly what tools/driver_green.py
+    renders from the registry and the CORRECTNESS_r*.json records."""
+    mod = _driver_green()
     assert (ROOT / "COVERAGE_DRIVER.md").read_text() == mod.render(), (
         "COVERAGE_DRIVER.md is stale: run python tools/driver_green.py"
     )
+
+
+def test_driver_green_needs_hash_match(tmp_path):
+    """A driver record without ``hash_match`` counts as attempted, not
+    as driver-green."""
+    path = tmp_path / "CORRECTNESS_r9.json"
+    path.write_text(json.dumps({
+        "no_hash": {"rows_match": True, "schema_match": True},
+        "full": {"rows_match": True, "schema_match": True, "hash_match": True},
+    }))
+    green, attempted = _driver_green().tally([str(path)])
+    assert green == {"full": 9}
+    assert attempted == {"no_hash": 9, "full": 9}

@@ -48,7 +48,7 @@ def test_ntv2_le_be_identical():
 def test_ntv2_bilinear_exact_at_nodes():
     g = gridshift.read_ntv2(reference_file(f"{NTV2_DIR}/test_ntv2_le.gsb"))
     nr, nc = g.shape
-    lons = [g.e_long / 3600.0, g.w_long / 3600.0]
+    lons = [g.west_long / 3600.0, g.east_long / 3600.0]
     lats = [g.s_lat / 3600.0, g.n_lat / 3600.0]
     for i, lat in enumerate(lats):
         for j, lon in enumerate(lons):
@@ -60,7 +60,7 @@ def test_ntv2_bilinear_exact_at_nodes():
 
 def test_ntv2_bilinear_center_is_mean():
     g = gridshift.read_ntv2(reference_file(f"{NTV2_DIR}/test_ntv2_le.gsb"))
-    lon = (g.e_long + g.w_long) / 2.0 / 3600.0
+    lon = (g.west_long + g.east_long) / 2.0 / 3600.0
     lat = (g.s_lat + g.n_lat) / 2.0 / 3600.0
     ls, lo = g.bilinear([lon], [lat])
     assert ls[0] == pytest.approx(g.lat_shift.mean(), abs=1e-12)
@@ -160,14 +160,14 @@ def test_real_ntv2_grid_through_table_path(spark):
     pts = spark.createDataFrame(
         list(zip(range(3), lons, lats)), "pid INT, lon DOUBLE, lat DOUBLE"
     )
-    e0, s0 = g.e_long, g.s_lat
+    w0, s0 = g.west_long, g.s_lat
     li, ai = g.long_inc, g.lat_inc
     nr, nc = g.shape
     from pyspark.sql import functions as F
 
     staged = pts.selectExpr(
         "pid",
-        f"(lon * 3600.0E0 - ({e0!r})) / ({li!r}) AS gx",
+        f"(lon * 3600.0E0 - ({w0!r})) / ({li!r}) AS gx",
         f"(lat * 3600.0E0 - ({s0!r})) / ({ai!r}) AS gy",
     ).selectExpr(
         "pid", "gx", "gy",

@@ -474,3 +474,14 @@ def test_tms_assign_plans_are_python_free(spark):
         assert "BatchEvalPython" not in s and "ArrowEvalPython" not in s
         assert "CartesianProduct" not in s
         assert "Join" not in s
+
+
+def test_viewshed_rows_one_band_shuffle(spark):
+    """Each viewshed band emits one row per scanline of its own band,
+    so the banded stage is the output: one Exchange (the band
+    grouping) and no per-scanline aggregate after it — one fewer than
+    a groupBy("y") re-aggregation would add."""
+    from gdal_spark.operators import viewshed
+
+    s = plan(viewshed.viewshed_rows(spark, 64, 64, 31, 29))
+    assert s.count("Exchange") == 1, s

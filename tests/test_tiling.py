@@ -2,6 +2,8 @@
 brute-force mosaic of the same images, plus resume on the snapshot
 log."""
 
+import functools
+
 import numpy as np
 import pytest
 
@@ -12,22 +14,34 @@ Z = 10
 RANGE = (543, 545, 668, 670)  # hot-cell tiles at z10
 
 
-def brute_render(meta, zoom, tx, ty, tile_px=64):
-    lon_px, lat_px = tiling._tile_lonlat_grids(tx, ty, zoom, tile_px)
-    buf = np.zeros((tile_px, tile_px, 3), dtype=np.uint8)
-    painted = np.zeros((tile_px, tile_px), dtype=bool)
+@functools.lru_cache(maxsize=None)
+def source_pixels(i, w, h, fmt):
+    return codecs.decode_image(
+        codecs.encode_image(codecs.make_pixels(i, w, h), fmt)
+    )
+
+
+def brute_last_wins(meta, xs, ys):
+    """Last-wins nearest mosaic of ``meta``'s images on the pixel
+    centres (x per column ``xs``, y per row ``ys``), image by image."""
+    buf = np.zeros((len(ys), len(xs), 3), dtype=np.uint8)
+    painted = np.zeros((len(ys), len(xs)), dtype=bool)
     for rec in meta.sort_values("i").itertuples(index=False):
-        arr = codecs.decode_image(
-            codecs.encode_image(codecs.make_pixels(rec.i, rec.w, rec.h), rec.fmt)
-        )
+        arr = source_pixels(rec.i, rec.w, rec.h, rec.fmt)
         r = 0.1 / rec.w
-        ix = np.floor((lon_px - rec.lon) / r + 1e-10).astype(np.int64)
-        iy = np.floor((rec.lat - lat_px) / r + 1e-10).astype(np.int64)
+        ix = np.floor((xs - rec.lon) / r + 1e-10).astype(np.int64)
+        iy = np.floor((rec.lat - ys) / r + 1e-10).astype(np.int64)
         m = ((iy >= 0) & (iy < rec.h))[:, None] & ((ix >= 0) & (ix < rec.w))[None, :]
         yy, xx = np.nonzero(m)
         buf[yy, xx, :] = arr[iy[yy], ix[xx], :]
         painted[yy, xx] = True
     return buf, painted
+
+
+def brute_render(meta, zoom, tx, ty, tile_px=64):
+    return brute_last_wins(
+        meta, *tiling._tile_lonlat_grids(tx, ty, zoom, tile_px)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -56,10 +70,11 @@ def test_base_render_matches_bruteforce(spark, hot_images):
 
 def test_pyramid_two_levels(spark, hot_images):
     meta, df = hot_images
-    pyr = tiling.build_pyramid(df, Z, Z - 2)
-    t10 = pyr[Z].toPandas().set_index(["tx", "ty"])
-    t9 = pyr[Z - 1].toPandas()
-    t8 = pyr[Z - 2].toPandas()
+    base = tiling.render_base_tiles(df, Z)
+    z9 = tiling.overview_tiles(base)
+    t10 = base.toPandas().set_index(["tx", "ty"])
+    t9 = z9.toPandas()
+    t8 = tiling.overview_tiles(z9).toPandas()
     assert len(t9) >= 1 and len(t8) >= 1
     # verify one z9 parent against its children
     row = t9.iloc[0]
@@ -217,3 +232,48 @@ def test_feather_mosaic_weighted_blend(spark):
     assert row["n_painted"] == int(p.sum()) > 0
     for c in range(3):
         assert row[f"cks_{c}"] == stats.gdal_checksum(out[:, :, c])
+
+
+RETILE = dict(x0=11.2, y0=48.6, res=0.1 / 256, tile_px=64, nx=8, ny=8)
+
+
+def test_retile_matches_bruteforce(spark, hot_images):
+    """retile vs a brute-force affine last-wins render of every tile
+    of the grid. Hot images straddle the grid's east and south edges,
+    so their covering ranges are clamped onto edge tiles; the covering
+    stage keeps only grid tiles and only images that overlap the
+    grid."""
+    meta, df = hot_images
+    x0, y0, res, t, nx, ny = (RETILE[k] for k in
+                              ("x0", "y0", "res", "tile_px", "nx", "ny"))
+    minlat = meta.lat - 0.1 * meta.h / meta.w
+    overlaps = (
+        (meta.lon < x0 + res * t * nx) & (meta.lon + 0.1 > x0)
+        & (meta.lat > y0 - res * t * ny) & (minlat < y0)
+    )
+    inside = (
+        (meta.lon >= x0) & (meta.lon + 0.1 <= x0 + res * t * nx)
+        & (meta.lat <= y0) & (minlat >= y0 - res * t * ny)
+    )
+    assert (overlaps & ~inside).any()  # an image clamped onto an edge tile
+    assert (~overlaps).any()  # and one outside the grid
+
+    cov = tiling._retile_cover(df, **RETILE).select("i", "tx", "ty").toPandas()
+    assert set(cov.i) == set(meta.i[overlaps])
+    assert cov.tx.between(0, nx - 1).all() and cov.ty.between(0, ny - 1).all()
+
+    got = tiling.retile(df, **RETILE).toPandas().set_index(["tx", "ty"])
+    want = {}
+    for tx in range(nx):
+        for ty in range(ny):
+            xs = x0 + (tx * t + np.arange(t) + 0.5) * res
+            ys = y0 - (ty * t + np.arange(t) + 0.5) * res
+            buf, painted = brute_last_wins(meta, xs, ys)
+            if painted.any():
+                want[(tx, ty)] = (buf, int(painted.sum()))
+    assert set(got.index) == set(want)
+    for key, (buf, n) in want.items():
+        row = got.loc[key]
+        assert row.n_painted == n
+        for c in range(3):
+            assert row[f"cks_{c}"] == stats.gdal_checksum(buf[:, :, c])

@@ -31,12 +31,14 @@ def load_registry() -> list[str]:
     return list(m._all_queries())
 
 
-def render() -> str:
-    """The COVERAGE_DRIVER.md text for the live registry and the
-    committed CORRECTNESS_r*.json records."""
+def tally(paths) -> tuple[dict[str, int], dict[str, int]]:
+    """(green, attempted) over CORRECTNESS_r<N>.json ``paths``: per
+    query, the last round whose record matched rows, schema and value
+    hash (a record without ``hash_match`` is not green), and the last
+    round that recorded it at all."""
     green: dict[str, int] = {}
     attempted: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
+    for path in paths:
         rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
         with open(path) as fh:
             data = json.load(fh)
@@ -45,9 +47,18 @@ def render() -> str:
             if (
                 rec.get("rows_match")
                 and rec.get("schema_match")
-                and rec.get("hash_match", True)
+                and rec.get("hash_match")
             ):
                 green[q] = max(green.get(q, 0), rnd)
+    return green, attempted
+
+
+def render() -> str:
+    """The COVERAGE_DRIVER.md text for the live registry and the
+    committed CORRECTNESS_r*.json records."""
+    green, attempted = tally(
+        sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")))
+    )
     queries = load_registry()
     stale = [q for q in green if q not in queries]
     if stale:
