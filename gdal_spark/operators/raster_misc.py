@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import codecs, synth
+from .rowstage import bands
 from .stats import channel_checksums, checksum_sql, per_image
 
 PAN_OFFSET = 500_000
@@ -292,41 +293,48 @@ FROM pv GROUP BY 1, 2
 # IDW grid interpolation (power=2, smoothing=0, no radius)
 
 
-def grid_idw(
-    spark,
-    points_pdf: pd.DataFrame,
-    width: int,
-    height: int,
-    tile_px: int = 32,
-) -> DataFrame:
+BAND_PX = 32  # scanlines per gridding band
+
+
+def _grid_bands(spark, points_pdf, width, height, kernel, schema, *extra):
+    """The banded gridding stage: the driver-resident points' (px, py,
+    v) float64 arrays (plus ``extra``) are broadcast once, and each
+    band calls ``kernel(gx, gy, qx, qy, qv, *extra)`` on its node grid
+    for the band's columns after y."""
+    pts = tuple(points_pdf[c].to_numpy(dtype=np.float64) for c in ("px", "py", "v"))
+    bpts = spark.sparkContext.broadcast(pts + extra)
+
+    def run(y0, h):
+        gy, gx = np.mgrid[y0 : y0 + h, 0:width]
+        return kernel(gx, gy, *bpts.value)
+
+    return bands(spark, height, BAND_PX, run, schema)
+
+
+_VAL_SCHEMA = "y bigint, n bigint, val_sum_key bigint"
+
+
+def _val_keys(vals: np.ndarray, scale: float) -> list:
+    """(n, val_sum_key) of a band's node values: the row width and the
+    row sum of floor(value * scale)."""
+    keys = np.floor(vals * scale).astype(np.int64)
+    return [np.full(len(vals), vals.shape[1]), keys.sum(axis=1)]
+
+
+def grid_idw(spark, points_pdf: pd.DataFrame, width: int, height: int) -> DataFrame:
     """Scattered (px, py, v) points -> (gy, n, val_sum_key) per raster
     scanline via IDW power-2 over ALL points (small point sets
     broadcast; at scale the cell-ring join of knn.py generates the
     neighbor lists instead). A point exactly on a grid node wins
     outright (GDALGridInverseDistanceToAPower nodata-free case)."""
-    # points_pdf is already driver-resident: extract directly and
-    # broadcast (round 2 bounced it through createDataFrame().collect())
-    px = points_pdf["px"].to_numpy(dtype=np.float64)
-    py = points_pdf["py"].to_numpy(dtype=np.float64)
-    pv = points_pdf["v"].to_numpy(dtype=np.float64)
-    bpx = spark.sparkContext.broadcast((px, py, pv))
 
-    nty = (height + tile_px - 1) // tile_px
-    bands = spark.range(nty).selectExpr("cast(id as int) AS band")
-
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * tile_px
-        h = min(tile_px, height - y0)
-        qx, qy, qv = bpx.value
-        gy, gx = np.mgrid[y0 : y0 + h, 0:width]
-        num = np.zeros((h, width))
-        den = np.zeros((h, width))
-        exact = np.full((h, width), np.nan)
+    def kernel(gx, gy, qx, qy, qv):
+        num = np.zeros(gx.shape)
+        den = np.zeros(gx.shape)
+        exact = np.full(gx.shape, np.nan)
         for x0, y0p, v in zip(qx, qy, qv):
             d2 = (gx - x0) ** 2 + (gy - y0p) ** 2
-            hit = d2 == 0
-            exact[hit] = v
+            exact[d2 == 0] = v
             # v/d2 and 1/d2 as separate divisions, accumulated in point
             # index order — the exact fp ops the SQL oracle performs, so
             # the only cross-engine drift is summation order (~1 ulp,
@@ -335,17 +343,9 @@ def grid_idw(
                 num += np.where(d2 > 0, v / d2, 0.0)
                 den += np.where(d2 > 0, 1.0 / d2, 0.0)
         vals = np.where(np.isnan(exact), num / den, exact)
-        return pd.DataFrame(
-            {
-                "y": np.arange(y0, y0 + h, dtype=np.int64),
-                "n": np.full(h, width, dtype=np.int64),
-                "val_sum_key": np.floor(vals * 1000.0).astype(np.int64).sum(axis=1),
-            }
-        )
+        return _val_keys(vals, 1000.0)
 
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n bigint, val_sum_key bigint"
-    )
+    return _grid_bands(spark, points_pdf, width, height, kernel, _VAL_SCHEMA)
 
 
 def oracle_grid_idw(width: int, height: int) -> str:
@@ -398,45 +398,17 @@ def _grid_points_sql() -> str:
     return f"(VALUES {rows}) pts(idx, px, py, v)"
 
 
-def grid_nearest(
-    spark, points_pdf: pd.DataFrame, width: int, height: int,
-    tile_px: int = 32,
-) -> DataFrame:
+def grid_nearest(spark, points_pdf: pd.DataFrame, width: int, height: int) -> DataFrame:
     """Nearest-neighbor gridding: every node takes the value of its
     closest scattered point (ties by point index). Per-scanline
     integer-scaled value sums. Same banded-tile shape as grid_idw."""
-    # points_pdf is already driver-resident: extract directly and
-    # broadcast (round 2 bounced it through createDataFrame().collect())
-    px = points_pdf["px"].to_numpy(dtype=np.float64)
-    py = points_pdf["py"].to_numpy(dtype=np.float64)
-    pv = points_pdf["v"].to_numpy(dtype=np.float64)
-    bpx = spark.sparkContext.broadcast((px, py, pv))
-    nty = (height + tile_px - 1) // tile_px
-    bands = spark.range(nty).selectExpr("cast(id as int) AS band")
 
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * tile_px
-        h = min(tile_px, height - y0)
-        qx, qy, qv = bpx.value
-        gy, gx = np.mgrid[y0: y0 + h, 0:width]
-        d2 = (
-            (gx[..., None] - qx) ** 2 + (gy[..., None] - qy) ** 2
-        )  # (h, w, npts)
-        best = np.argmin(d2, axis=2)  # first min wins = lowest index
-        vals = qv[best]
-        key_v = np.floor(vals * 1e6).astype(np.int64)
-        return pd.DataFrame(
-            {
-                "y": np.arange(y0, y0 + h, dtype=np.int64),
-                "n": np.full(h, width, dtype=np.int64),
-                "val_sum_key": key_v.sum(axis=1),
-            }
-        )
+    def kernel(gx, gy, qx, qy, qv):
+        d2 = (gx[..., None] - qx) ** 2 + (gy[..., None] - qy) ** 2  # (h, w, npts)
+        vals = qv[np.argmin(d2, axis=2)]  # first min wins = lowest index
+        return _val_keys(vals, 1e6)
 
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n bigint, val_sum_key bigint"
-    )
+    return _grid_bands(spark, points_pdf, width, height, kernel, _VAL_SCHEMA)
 
 
 def oracle_grid_nearest(width: int, height: int) -> str:
@@ -458,28 +430,15 @@ GRID_AVG_RADIUS = 20.0
 
 def grid_average(
     spark, points_pdf: pd.DataFrame, width: int, height: int,
-    radius: float = GRID_AVG_RADIUS, tile_px: int = 32,
+    radius: float = GRID_AVG_RADIUS,
 ) -> DataFrame:
     """Radius-limited average gridding: node value = mean of points
     within ``radius`` (0 when none — GDALGridAverage's nodata).
     Output per scanline: n_covered (nodes with >=1 point in radius) +
     integer-scaled value sum."""
-    # points_pdf is already driver-resident: extract directly and
-    # broadcast (round 2 bounced it through createDataFrame().collect())
-    px = points_pdf["px"].to_numpy(dtype=np.float64)
-    py = points_pdf["py"].to_numpy(dtype=np.float64)
-    pv = points_pdf["v"].to_numpy(dtype=np.float64)
-    bpx = spark.sparkContext.broadcast((px, py, pv))
-    nty = (height + tile_px - 1) // tile_px
-    bands = spark.range(nty).selectExpr("cast(id as int) AS band")
     r2 = radius * radius
 
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * tile_px
-        h = min(tile_px, height - y0)
-        qx, qy, qv = bpx.value
-        gy, gx = np.mgrid[y0: y0 + h, 0:width]
+    def kernel(gx, gy, qx, qy, qv):
         d2 = (gx[..., None] - qx) ** 2 + (gy[..., None] - qy) ** 2
         inside = d2 <= r2
         cnt = inside.sum(axis=2)
@@ -489,23 +448,18 @@ def grid_average(
         with np.errstate(invalid="ignore", divide="ignore"):
             mean = np.where(cnt > 0, s / np.maximum(cnt, 1), 0.0)
         key_v = np.floor(mean * 1e6 + 5e-4).astype(np.int64)
-        return pd.DataFrame(
-            {
-                "y": np.arange(y0, y0 + h, dtype=np.int64),
-                "n_covered": (cnt > 0).sum(axis=1).astype(np.int64),
-                "val_sum_key": key_v.sum(axis=1),
-            }
-        )
+        return [(cnt > 0).sum(axis=1), key_v.sum(axis=1)]
 
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n_covered bigint, val_sum_key bigint"
+    return _grid_bands(
+        spark, points_pdf, width, height, kernel,
+        "y bigint, n_covered bigint, val_sum_key bigint",
     )
 
 
 def grid_average_ellipse(
     spark, points_pdf: pd.DataFrame, width: int, height: int,
     radius1: float = 25.0, radius2: float = 10.0,
-    angle_deg: float = 30.0, min_points: int = 2, tile_px: int = 32,
+    angle_deg: float = 30.0, min_points: int = 2,
 ) -> DataFrame:
     """GDALGridMovingAverage with an anisotropic rotated search
     ellipse (alg/gdalgrid.cpp GDALGridMovingAverage: radius1/radius2/
@@ -516,23 +470,12 @@ def grid_average_ellipse(
     (0, excluded from sums via n_covered). Integer point values keep
     the per-node sum exact; the mean is floor-keyed with the repo's
     half-grid epsilon before the scanline rollup."""
-    px = points_pdf["px"].to_numpy(dtype=np.float64)
-    py = points_pdf["py"].to_numpy(dtype=np.float64)
-    pv = points_pdf["v"].to_numpy(dtype=np.float64)
-    bpx = spark.sparkContext.broadcast((px, py, pv))
-    nty = (height + tile_px - 1) // tile_px
-    bands = spark.range(nty).selectExpr("cast(id as int) AS band")
     a = np.deg2rad(angle_deg)
     cos_a, sin_a = float(np.cos(a)), float(np.sin(a))
     r1s, r2s = radius1 * radius1, radius2 * radius2
     r12s = r1s * r2s
 
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * tile_px
-        h = min(tile_px, height - y0)
-        qx, qy, qv = bpx.value
-        gy, gx = np.mgrid[y0: y0 + h, 0:width]
+    def kernel(gx, gy, qx, qy, qv):
         rx = qx - gx[..., None]
         ry = qy - gy[..., None]
         rxr = rx * cos_a + ry * sin_a
@@ -544,16 +487,11 @@ def grid_average_ellipse(
         with np.errstate(invalid="ignore", divide="ignore"):
             mean = np.where(ok, s / np.maximum(cnt, 1), 0.0)
         key_v = np.floor(mean * 1e6 + 5e-4).astype(np.int64)
-        return pd.DataFrame(
-            {
-                "y": np.arange(y0, y0 + h, dtype=np.int64),
-                "n_covered": ok.sum(axis=1).astype(np.int64),
-                "val_sum_key": key_v.sum(axis=1),
-            }
-        )
+        return [ok.sum(axis=1), key_v.sum(axis=1)]
 
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n_covered bigint, val_sum_key bigint"
+    return _grid_bands(
+        spark, points_pdf, width, height, kernel,
+        "y bigint, n_covered bigint, val_sum_key bigint",
     )
 
 
@@ -591,7 +529,7 @@ FROM pv GROUP BY 1
 
 def grid_metrics(
     spark, points_pdf: pd.DataFrame, width: int, height: int,
-    radius: float = GRID_AVG_RADIUS, tile_px: int = 32,
+    radius: float = GRID_AVG_RADIUS,
 ) -> DataFrame:
     """GDALGrid data-metric algorithms in one pass: per grid node over
     the points inside ``radius`` — minimum / maximum / range / count /
@@ -601,20 +539,9 @@ def grid_metrics(
     BEFORE the scanline sum (the repo's float discipline). Nodes with
     no point in radius emit the GDALGridCreate nodata convention (0,
     excluded from the *_key sums via n_covered)."""
-    px = points_pdf["px"].to_numpy(dtype=np.float64)
-    py = points_pdf["py"].to_numpy(dtype=np.float64)
-    pv = points_pdf["v"].to_numpy(dtype=np.float64)
-    bpx = spark.sparkContext.broadcast((px, py, pv))
-    nty = (height + tile_px - 1) // tile_px
-    bands = spark.range(nty).selectExpr("cast(id as int) AS band")
     r2 = radius * radius
 
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * tile_px
-        h = min(tile_px, height - y0)
-        qx, qy, qv = bpx.value
-        gy, gx = np.mgrid[y0: y0 + h, 0:width]
+    def kernel(gx, gy, qx, qy, qv):
         d2 = (gx[..., None] - qx) ** 2 + (gy[..., None] - qy) ** 2
         inside = d2 <= r2
         cnt = inside.sum(axis=2)
@@ -626,26 +553,14 @@ def grid_metrics(
         dsum = np.where(inside, np.sqrt(d2), 0.0).sum(axis=2)
         with np.errstate(invalid="ignore", divide="ignore"):
             avgd = np.where(cov, dsum / np.maximum(cnt, 1), 0.0)
-        key6 = lambda a: np.floor(a * 1e6 + 5e-4).astype(np.int64)
-        return pd.DataFrame(
-            {
-                "y": np.arange(y0, y0 + h, dtype=np.int64),
-                "n_covered": cov.sum(axis=1).astype(np.int64),
-                "cnt_sum": cnt.sum(axis=1).astype(np.int64),
-                "min_sum_key": key6(vmin).sum(axis=1),
-                "max_sum_key": key6(vmax).sum(axis=1),
-                "rng_sum_key": key6(vmax - vmin).sum(axis=1),
-                "avgdist_sum_key": key6(avgd).sum(axis=1),
-            }
-        )
+        key6 = lambda a: np.floor(a * 1e6 + 5e-4).astype(np.int64).sum(axis=1)
+        return [cov.sum(axis=1), cnt.sum(axis=1), key6(vmin), key6(vmax),
+                key6(vmax - vmin), key6(avgd)]
 
-    return bands.groupby("band").applyInPandas(
-        run,
-        schema=(
-            "y bigint, n_covered bigint, cnt_sum bigint, "
-            "min_sum_key bigint, max_sum_key bigint, rng_sum_key bigint, "
-            "avgdist_sum_key bigint"
-        ),
+    return _grid_bands(
+        spark, points_pdf, width, height, kernel,
+        "y bigint, n_covered bigint, cnt_sum bigint, min_sum_key bigint, "
+        "max_sum_key bigint, rng_sum_key bigint, avgdist_sum_key bigint",
     )
 
 
@@ -726,10 +641,7 @@ def _linear_tris():
     return delaunay(LINEAR_POINTS["px"], LINEAR_POINTS["py"])
 
 
-def grid_linear(
-    spark, points_pdf: pd.DataFrame, width: int, height: int,
-    tile_px: int = 32,
-) -> DataFrame:
+def grid_linear(spark, points_pdf: pd.DataFrame, width: int, height: int) -> DataFrame:
     """Linear (triangulated) gridding: triangulate driver-side (tiny
     point set, O(1)), broadcast the facets, interpolate every node
     barycentrically in its containing facet (min facet index wins on
@@ -737,26 +649,17 @@ def grid_linear(
     outside the hull take the nearest point value. Per-scanline
     integer-keyed sums; all arithmetic is + * / so the oracle is
     bit-exact."""
-    px = points_pdf["px"].to_numpy(dtype=np.float64)
-    py = points_pdf["py"].to_numpy(dtype=np.float64)
-    pv = points_pdf["v"].to_numpy(dtype=np.float64)
-    from ..delaunay import delaunay as _dl
+    from ..delaunay import delaunay
 
-    tris = _dl(px, py)
-    bpx = spark.sparkContext.broadcast((px, py, pv, tris))
+    tris = delaunay(
+        points_pdf["px"].to_numpy(dtype=np.float64),
+        points_pdf["py"].to_numpy(dtype=np.float64),
+    )
 
-    nty = (height + tile_px - 1) // tile_px
-    bands = spark.range(nty).selectExpr("cast(id as int) AS band")
-
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * tile_px
-        h = min(tile_px, height - y0)
-        qx, qy, qv, qt = bpx.value
-        gy, gx = np.mgrid[y0 : y0 + h, 0:width]
+    def kernel(gx, gy, qx, qy, qv, qt):
         gx = gx.astype(np.float64)
         gy = gy.astype(np.float64)
-        vals = np.full((h, width), np.nan)
+        vals = np.full(gx.shape, np.nan)
         for a, b, c in qt:  # min-index facet wins (assign once)
             x1, y1 = qx[a], qy[a]
             x2, y2 = qx[b], qy[b]
@@ -777,19 +680,9 @@ def grid_linear(
             )
             best = d2.argmin(axis=0)  # argmin = first minimal index
             vals[out] = qv[best][out]
-        return pd.DataFrame(
-            {
-                "y": np.arange(y0, y0 + h, dtype=np.int64),
-                "n": np.full(h, width, dtype=np.int64),
-                "val_sum_key": np.floor(vals * 1000000.0)
-                .astype(np.int64)
-                .sum(axis=1),
-            }
-        )
+        return _val_keys(vals, 1e6)
 
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n bigint, val_sum_key bigint"
-    )
+    return _grid_bands(spark, points_pdf, width, height, kernel, _VAL_SCHEMA, tris)
 
 
 def _linear_points_sql() -> str:
@@ -852,12 +745,7 @@ FROM allv GROUP BY 1
 
 
 def grid_idwnn(
-    spark,
-    points_pdf: pd.DataFrame,
-    width: int,
-    height: int,
-    n_near: int = 3,
-    tile_px: int = 32,
+    spark, points_pdf: pd.DataFrame, width: int, height: int, n_near: int = 3
 ) -> DataFrame:
     """GDALGridInverseDistanceToAPowerNearestNeighbor (gdalgrid.cpp
     GGA_InverseDistanceToAPowerNearestNeighbor): IDW power-2 limited
@@ -866,20 +754,8 @@ def grid_idwnn(
     SELECTION is bit-deterministic (identical d2 doubles + index
     tie-break both engines), the weighted sum has the same ~1e-13
     summation-order drift argument as grid_idw."""
-    px = points_pdf["px"].to_numpy(dtype=np.float64)
-    py = points_pdf["py"].to_numpy(dtype=np.float64)
-    pv = points_pdf["v"].to_numpy(dtype=np.float64)
-    bpx = spark.sparkContext.broadcast((px, py, pv))
 
-    nty = (height + tile_px - 1) // tile_px
-    bands = spark.range(nty).selectExpr("cast(id as int) AS band")
-
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * tile_px
-        h = min(tile_px, height - y0)
-        qx, qy, qv = bpx.value
-        gy, gx = np.mgrid[y0 : y0 + h, 0:width]
+    def kernel(gx, gy, qx, qy, qv):
         d2 = (gx[..., None] - qx) ** 2 + (gy[..., None] - qy) ** 2
         # stable sort on d2 == (d2, point index) tie-break
         sel = np.argsort(d2, axis=-1, kind="stable")[..., :n_near]
@@ -889,23 +765,11 @@ def grid_idwnn(
             num = np.where(d2s > 0, vs / d2s, 0.0).sum(axis=-1)
             den = np.where(d2s > 0, 1.0 / d2s, 0.0).sum(axis=-1)
         exact_mask = (d2s == 0).any(axis=-1)
-        exact_val = np.where(
-            exact_mask, vs[..., 0], 0.0
-        )  # d2=0 sorts first -> slot 0
-        vals = np.where(exact_mask, exact_val, num / den)
-        return pd.DataFrame(
-            {
-                "y": np.arange(y0, y0 + h, dtype=np.int64),
-                "n": np.full(h, width, dtype=np.int64),
-                "val_sum_key": np.floor(vals * 1000.0)
-                .astype(np.int64)
-                .sum(axis=1),
-            }
-        )
+        # d2 = 0 sorts first -> slot 0
+        vals = np.where(exact_mask, vs[..., 0], num / den)
+        return _val_keys(vals, 1000.0)
 
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n bigint, val_sum_key bigint"
-    )
+    return _grid_bands(spark, points_pdf, width, height, kernel, _VAL_SCHEMA)
 
 
 def oracle_grid_idwnn(width: int, height: int, n_near: int = 3) -> str:

@@ -1,4 +1,5 @@
-"""One row-at-a-time Python stage, and one envelope stage.
+"""One row-at-a-time Python stage, one banded scanline stage, and one
+envelope stage.
 
 Most per-image and per-feature operators have the same Python shape:
 take one input row, yield zero or more output rows. ``per_row`` is the
@@ -6,6 +7,12 @@ one place that shape meets Arrow: one ``mapInPandas`` whose batches
 become one positional ``pd.DataFrame`` each. pyspark assigns columns
 of a frame with non-string labels by position, so the output column
 names are spelled once, in the schema.
+
+``bands`` is the one banded scanline stage: the raster's rows split
+into bands of ``band_px`` scanlines, one ``applyInPandas`` group per
+band, each band computing its own scanlines' output rows (viewshed,
+the gridders, sieve). Bands own disjoint scanlines, so the band
+frames are the output: one ``Exchange`` and no re-aggregation.
 
 ``envelopes`` is the one stage that appends a geometry's envelope to
 its row, for every envelope-prefiltered join (overlay's candidate
@@ -37,6 +44,27 @@ def per_row(df: DataFrame, cols, fn, schema: str) -> DataFrame:
                 yield pd.DataFrame(rows)
 
     return df.select(*cols).mapInPandas(run, schema=schema)
+
+
+def bands(spark, height: int, band_px: int, run, schema: str) -> DataFrame:
+    """One group per band of ``band_px`` scanlines (the last band may
+    be shorter). ``run(y0, h)`` returns the band's columns after
+    ``schema``'s leading ``y`` column, in schema order, each holding
+    one value per scanline ``y0 .. y0 + h - 1``."""
+
+    def stage(key, pdf):
+        y0 = int(key[0]) * band_px
+        h = min(band_px, height - y0)
+        ys = np.arange(y0, y0 + h, dtype=np.int64)
+        return pd.DataFrame(dict(enumerate([ys, *run(y0, h)])))
+
+    nb = -(-height // band_px)
+    return (
+        spark.range(nb)
+        .selectExpr("cast(id as int) AS band")
+        .groupby("band")
+        .applyInPandas(stage, schema=schema)
+    )
 
 
 def envelopes(

@@ -20,10 +20,10 @@ block pattern, which the oracle states in closed form.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from .polygonize import label_tile
+from .rowstage import bands
 
 
 def sieve_filter(vals: np.ndarray, threshold: int, connect8: bool = False) -> np.ndarray:
@@ -86,28 +86,15 @@ def sieve_blocks(
     """Sieve the speckled block raster (single-pixel speckles strictly
     inside blocks). Runs the sieve kernel per horizontal raster band
     (bands aligned to block rows so components never cross bands —
-    an embarrassingly-parallel decomposition). Output per scanline:
-    (y, n, val_sum)."""
-    nbands = height // bs
-    bands = spark.range(nbands).selectExpr("cast(id as int) AS band")
+    an embarrassingly-parallel decomposition; a last partial block row
+    is its own short band). Output per scanline: (y, n, val_sum)."""
 
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * bs
-        gy, gx = np.mgrid[y0 : y0 + bs, 0:width]
-        vals = speckled_value(gx, gy, bs, mod)
-        out = sieve_filter(vals, threshold)
-        return pd.DataFrame(
-            {
-                "y": np.arange(y0, y0 + bs, dtype=np.int64),
-                "n": np.full(bs, width, dtype=np.int64),
-                "val_sum": out.sum(axis=1).astype(np.int64),
-            }
-        )
+    def run(y0, h):
+        gy, gx = np.mgrid[y0 : y0 + h, 0:width]
+        out = sieve_filter(speckled_value(gx, gy, bs, mod), threshold)
+        return [np.full(h, width), out.sum(axis=1)]
 
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n bigint, val_sum bigint"
-    )
+    return bands(spark, height, bs, run, "y bigint, n bigint, val_sum bigint")
 
 
 def speckled_value(gx, gy, bs: int = 24, mod: int = 3) -> np.ndarray:

@@ -13,6 +13,11 @@ replay it bit-for-bit:
   los(p_k)     = eye_z + (k/K) * (terrain(t) - eye_z)
   visible  <=>  los(p_k) > terrain(p_k) for every k
 
+Every variant below runs the one ray kernel ``_ray`` (numpy) and its
+one SQL replay ``_ray_ctes`` (DuckDB oracle), and reduces per target
+on top of it: all-visible, GROUND mode, cumulative over observers,
+curvature-corrected, in-range mask.
+
 Distributed shape: the output raster is split into row bands; the
 terrain is the deterministic analytic DEM, so each band regenerates
 the full (small) surface locally — the stand-in for broadcasting the
@@ -26,17 +31,19 @@ inputs -> deterministic and identical in numpy and DuckDB.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from .. import synth
 from .dem import DEM_VALUE_SQL, _dem_value
+from .rowstage import bands
 
 OBS_HEIGHT = 20.0
+BAND_PX = 16  # scanlines per band
 
 
 def los_visible(dem: np.ndarray, ox: int, oy: int, tx: int, ty: int) -> bool:
-    """Line-of-sight test for one target (python mirror of the
-    vectorized band kernel; used by tests)."""
+    """Line-of-sight test for one target: the scalar reference that
+    tests compare the vectorized ray kernel against."""
     h, w = dem.shape
     K = max(abs(tx - ox), abs(ty - oy))
     if K == 0:
@@ -59,97 +66,142 @@ def los_visible(dem: np.ndarray, ox: int, oy: int, tx: int, ty: int) -> bool:
     return True
 
 
-def viewshed_rows(
-    spark, width: int, height: int, ox: int, oy: int, band_px: int = 16
-) -> DataFrame:
-    """(y, n, n_visible) per scanline for the analytic DEM and an
-    observer at (ox, oy, terrain + OBS_HEIGHT)."""
-    nb = (height + band_px - 1) // band_px
-    bands = spark.range(nb).selectExpr("cast(id as int) AS band")
+def _ray(dem: np.ndarray, ox: int, oy: int, tx: int, ty: int, adj: float = 0.0):
+    """(f, terr, tz) of the ray from the observer at (ox, oy) to the
+    target (tx, ty): the sample fractions f = k/K (k = 1..K-1), the
+    bilinear terrain under each sample and the target's terrain, every
+    height lowered by ``adj`` * (squared distance from the observer).
+    adj = 0.0 leaves the heights bit-identical (x - 0.0 == x)."""
+    h, w = dem.shape
+    K = max(abs(tx - ox), abs(ty - oy))
+    f = np.arange(1, K, dtype=np.float64) / K
+    px = ox + f * (tx - ox)
+    py = oy + f * (ty - oy)
+    x0 = np.floor(px).astype(np.int64)
+    y0 = np.floor(py).astype(np.int64)
+    fx = px - x0
+    fy = py - y0
+    x1 = np.minimum(x0 + 1, w - 1)
+    y1 = np.minimum(y0 + 1, h - 1)
+    terr = (1.0 - fy) * (
+        (1.0 - fx) * dem[y0, x0] + fx * dem[y0, x1]
+    ) + fy * ((1.0 - fx) * dem[y1, x0] + fx * dem[y1, x1])
+    terr = terr - adj * ((px - ox) * (px - ox) + (py - oy) * (py - oy))
+    tz = dem[ty, tx] - adj * float((tx - ox) * (tx - ox) + (ty - oy) * (ty - oy))
+    return f, terr, tz
 
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * band_px
-        h = min(band_px, height - y0)
+
+def _visible(dem, ox, oy, tx, ty, adj=0.0) -> bool:
+    f, terr, tz = _ray(dem, ox, oy, tx, ty, adj)
+    eye = dem[oy, ox] + OBS_HEIGHT
+    return bool((eye + f * (tz - eye) > terr).all())
+
+
+def _stage(spark, width: int, height: int, cols: str, per_line) -> DataFrame:
+    """The banded viewshed stage: every band regenerates the DEM and
+    ``per_line(dem, ty)`` returns scanline ``ty``'s values after
+    (y, n), typed by ``cols``."""
+
+    def run(y0, h):
         gy, gx = np.mgrid[0:height, 0:width]
         dem = _dem_value(gx, gy).astype(np.float64)
-        out = []
-        eye = dem[oy, ox] + OBS_HEIGHT
-        for ty in range(y0, y0 + h):
-            nvis = 0
-            for tx in range(width):
-                K = max(abs(tx - ox), abs(ty - oy))
-                if K == 0:
-                    nvis += 1
-                    continue
-                ks = np.arange(1, K, dtype=np.float64)
-                f = ks / K
-                px = ox + f * (tx - ox)
-                py = oy + f * (ty - oy)
-                x0 = np.floor(px).astype(np.int64)
-                y0i = np.floor(py).astype(np.int64)
-                fx = px - x0
-                fy = py - y0i
-                x1 = np.minimum(x0 + 1, width - 1)
-                y1 = np.minimum(y0i + 1, height - 1)
-                terr = (1.0 - fy) * (
-                    (1.0 - fx) * dem[y0i, x0] + fx * dem[y0i, x1]
-                ) + fy * ((1.0 - fx) * dem[y1, x0] + fx * dem[y1, x1])
-                los = eye + f * (dem[ty, tx] - eye)
-                if (los > terr).all():
-                    nvis += 1
-            out.append((ty, width, nvis))
-        return pd.DataFrame(out, columns=["y", "n", "n_visible"])
+        lines = [per_line(dem, ty) for ty in range(y0, y0 + h)]
+        return [np.full(h, width), *zip(*lines)]
 
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n bigint, n_visible bigint"
+    return bands(spark, height, BAND_PX, run, f"y bigint, n bigint, {cols}")
+
+
+def _count_visible(observers, adj: float = 0.0):
+    """per_line: the scanline's visible (observer, target) pairs."""
+    return lambda dem, ty: (
+        sum(
+            _visible(dem, ox, oy, tx, ty, adj)
+            for ox, oy in observers
+            for tx in range(dem.shape[1])
+        ),
     )
+
+
+def dem_at(x, y) -> str:
+    """The analytic DEM at the SQL integer expressions ``x``, ``y``."""
+    val = DEM_VALUE_SQL.replace("gx", f"({x})").replace("gy", f"({y})")
+    return f"cast({val} as double)"
+
+
+def _ray_ctes(
+    width: int, height: int, ox: int, oy: int, adj: float = 0.0, i: int = 0
+) -> str:
+    """The SQL replay of ``_ray``: CTEs rays{i} -> cells{i} -> vals{i}
+    -> ray{i}, one ray{i} row (tx, ty, f, eye, terr, tz) per sample of
+    every target's ray, the same IEEE op sequence as the numpy kernel."""
+    kk = f"greatest(abs(t.tx - {ox}), abs(t.ty - {oy}))"
+    x1, y1 = f"least(x0 + 1, {width - 1})", f"least(y0 + 1, {height - 1})"
+    a = synth.flit(adj)
+    return (
+        f"rays{i} AS MATERIALIZED (SELECT tx, ty, f, "
+        f"({ox} + f * (tx - {ox})) AS px, ({oy} + f * (ty - {oy})) AS py "
+        f"FROM (SELECT t.tx, t.ty, cast(k as double) / cast({kk} as double) AS f "
+        f"FROM (SELECT gx AS tx, gy AS ty FROM range(0, {width}) a(gx), "
+        f"range(0, {height}) b(gy)) t, range(1, {max(width, height)}) s(k) "
+        f"WHERE k < {kk})), "
+        f"cells{i} AS MATERIALIZED (SELECT tx, ty, f, px, py, "
+        f"cast(floor(px) as bigint) AS x0, cast(floor(py) as bigint) AS y0 "
+        f"FROM rays{i}), "
+        f"vals{i} AS MATERIALIZED (SELECT tx, ty, f, px, py, "
+        f"(px - x0) AS fx, (py - y0) AS fy, "
+        f"{dem_at('x0', 'y0')} AS v00, {dem_at(x1, 'y0')} AS v10, "
+        f"{dem_at('x0', y1)} AS v01, {dem_at(x1, y1)} AS v11 FROM cells{i}), "
+        f"ray{i} AS MATERIALIZED (SELECT tx, ty, f, "
+        f"({dem_at(ox, oy)} + {OBS_HEIGHT}E0) AS eye, "
+        f"(1.0E0 - fy) * ((1.0E0 - fx) * v00 + fx * v10) "
+        f"+ fy * ((1.0E0 - fx) * v01 + fx * v11) "
+        f"- {a} * ((px - {ox}) * (px - {ox}) + (py - {oy}) * (py - {oy})) AS terr, "
+        f"{dem_at('tx', 'ty')} - {a} * cast((tx - {ox}) * (tx - {ox}) "
+        f"+ (ty - {oy}) * (ty - {oy}) as double) AS tz FROM vals{i})"
+    )
+
+
+def _blocked_sql(width: int, height: int, observers, adj: float = 0.0) -> str:
+    """WITH every observer's ray CTEs and blocked(tx, ty, n_blocked):
+    how many observers' lines of sight to (tx, ty) the terrain cuts."""
+    rays = ", ".join(
+        _ray_ctes(width, height, ox, oy, adj, i) for i, (ox, oy) in enumerate(observers)
+    )
+    cut = " UNION ALL ".join(
+        f"SELECT DISTINCT tx, ty FROM ray{i} WHERE NOT (eye + f * (tz - eye) > terr)"
+        for i in range(len(observers))
+    )
+    return (
+        f"WITH {rays}, blocked AS (SELECT tx, ty, count(*) AS n_blocked "
+        f"FROM ({cut}) GROUP BY tx, ty) "
+    )
+
+
+def _per_scanline(width: int, height: int, cte: str, cols: str) -> str:
+    """(y, n, cols) over every target, LEFT JOINed to ``cte`` as b."""
+    return (
+        f"SELECT t.gy AS y, count(*) AS n, {cols} "
+        f"FROM (SELECT gx, gy FROM range(0, {width}) a(gx), "
+        f"range(0, {height}) c(gy)) t "
+        f"LEFT JOIN {cte} b ON b.tx = t.gx AND b.ty = t.gy GROUP BY 1"
+    )
+
+
+def _visible_sql(width: int, height: int, observers, adj: float, col: str) -> str:
+    return _blocked_sql(width, height, observers, adj) + _per_scanline(
+        width, height, "blocked",
+        f"cast(sum({len(observers)} - coalesce(b.n_blocked, 0)) as bigint) AS {col}",
+    )
+
+
+def viewshed_rows(spark, width: int, height: int, ox: int, oy: int) -> DataFrame:
+    """(y, n, n_visible) per scanline for the analytic DEM and an
+    observer at (ox, oy, terrain + OBS_HEIGHT)."""
+    return _stage(spark, width, height, "n_visible bigint", _count_visible([(ox, oy)]))
 
 
 def oracle_viewshed(width: int, height: int, ox: int, oy: int) -> str:
-    val = DEM_VALUE_SQL
-
-    def dem_at(x, y):
-        return f"cast({val.replace('gx', f'({x})').replace('gy', f'({y})')} as double)"
-
-    eye = f"({dem_at(str(ox), str(oy))} + {OBS_HEIGHT}E0)"
-    steps = (
-        f"SELECT t.tx, t.ty, k, greatest(abs(t.tx - {ox}), abs(t.ty - {oy})) AS kk "
-        f"FROM (SELECT gx AS tx, gy AS ty FROM range(0, {width}) a(gx), "
-        f"range(0, {height}) b(gy)) t, range(1, {max(width, height)}) s(k) "
-        f"WHERE k < greatest(abs(t.tx - {ox}), abs(t.ty - {oy}))"
-    )
-    terr = (
-        "((1.0E0 - fy) * ((1.0E0 - fx) * v00 + fx * v10) "
-        "+ fy * ((1.0E0 - fx) * v01 + fx * v11))"
-    )
-    los = f"({eye} + f * ({dem_at('tx', 'ty')} - {eye}))"
-    return (
-        f"WITH s AS ({steps}), "
-        f"pos AS (SELECT tx, ty, "
-        f"(cast(k as double) / cast(kk as double)) AS f, "
-        f"({ox} + (cast(k as double) / cast(kk as double)) * (tx - {ox})) AS px, "
-        f"({oy} + (cast(k as double) / cast(kk as double)) * (ty - {oy})) AS py "
-        f"FROM s), "
-        f"cells AS (SELECT tx, ty, f, "
-        f"cast(floor(px) as bigint) AS x0, cast(floor(py) as bigint) AS y0, "
-        f"(px - cast(floor(px) as bigint)) AS fx, "
-        f"(py - cast(floor(py) as bigint)) AS fy FROM pos), "
-        f"vals AS (SELECT tx, ty, f, fx, fy, "
-        f"{dem_at('x0', 'y0')} AS v00, "
-        f"{dem_at(f'least(x0 + 1, {width - 1})', 'y0')} AS v10, "
-        f"{dem_at('x0', f'least(y0 + 1, {height - 1})')} AS v01, "
-        f"{dem_at(f'least(x0 + 1, {width - 1})', f'least(y0 + 1, {height - 1})')} "
-        f"AS v11 FROM cells), "
-        f"blocked AS (SELECT DISTINCT tx, ty FROM vals "
-        f"WHERE NOT ({los} > {terr})) "
-        f"SELECT t.gy AS y, count(*) AS n, "
-        f"count(*) - count(b.tx) AS n_visible "
-        f"FROM (SELECT gx, gy FROM range(0, {width}) a(gx), "
-        f"range(0, {height}) c(gy)) t "
-        f"LEFT JOIN blocked b ON b.tx = t.gx AND b.ty = t.gy "
-        f"GROUP BY 1"
-    )
+    return _visible_sql(width, height, [(ox, oy)], 0.0, "n_visible")
 
 
 # ---------------------------------------------------------------------------
@@ -163,99 +215,35 @@ def oracle_viewshed(width: int, height: int, ox: int, oy: int) -> str:
 # Already-visible cells get 0 (matching the reference).
 
 
-def viewshed_ground_rows(
-    spark, width: int, height: int, ox: int, oy: int, band_px: int = 16
-) -> DataFrame:
+def viewshed_ground_rows(spark, width: int, height: int, ox: int, oy: int) -> DataFrame:
     """(y, n, ground_mkey_sum): per-scanline sum of the 1e-3-floored
     GROUND-mode raster — every per-target max and every division is
     the same fixed IEEE sequence in numpy and the SQL replay."""
-    nb = (height + band_px - 1) // band_px
-    bands = spark.range(nb).selectExpr("cast(id as int) AS band")
 
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * band_px
-        h = min(band_px, height - y0)
-        gy, gx = np.mgrid[0:height, 0:width]
-        dem = _dem_value(gx, gy).astype(np.float64)
-        out = []
+    def mkey(dem, tx, ty):
+        f, terr, tz = _ray(dem, ox, oy, tx, ty)
+        if not f.size:
+            return 0  # ground 0
         eye = dem[oy, ox] + OBS_HEIGHT
-        for ty in range(y0, y0 + h):
-            msum = 0
-            for tx in range(width):
-                K = max(abs(tx - ox), abs(ty - oy))
-                if K <= 1:
-                    continue  # ground 0
-                ks = np.arange(1, K, dtype=np.float64)
-                f = ks / K
-                px = ox + f * (tx - ox)
-                py = oy + f * (ty - oy)
-                x0 = np.floor(px).astype(np.int64)
-                y0i = np.floor(py).astype(np.int64)
-                fx = px - x0
-                fy = py - y0i
-                x1 = np.minimum(x0 + 1, width - 1)
-                y1 = np.minimum(y0i + 1, height - 1)
-                terr = (1.0 - fy) * (
-                    (1.0 - fx) * dem[y0i, x0] + fx * dem[y0i, x1]
-                ) + fy * ((1.0 - fx) * dem[y1, x0] + fx * dem[y1, x1])
-                zreq = (eye + (terr - eye) / f).max()
-                ground = max(0.0, zreq - dem[ty, tx])
-                msum += int(np.floor(ground * 1000.0 + 1.0e-9))
-            out.append((ty, width, msum))
-        return pd.DataFrame(out, columns=["y", "n", "ground_mkey_sum"])
+        ground = max(0.0, (eye + (terr - eye) / f).max() - tz)
+        return int(np.floor(ground * 1000.0 + 1.0e-9))
 
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n bigint, ground_mkey_sum bigint"
+    return _stage(
+        spark, width, height, "ground_mkey_sum bigint",
+        lambda dem, ty: (sum(mkey(dem, tx, ty) for tx in range(width)),),
     )
 
 
 def oracle_viewshed_ground(width: int, height: int, ox: int, oy: int) -> str:
-    val = DEM_VALUE_SQL
-
-    def dem_at(x, y):
-        return f"cast({val.replace('gx', f'({x})').replace('gy', f'({y})')} as double)"
-
-    eye = f"({dem_at(str(ox), str(oy))} + {OBS_HEIGHT}E0)"
-    steps = (
-        f"SELECT t.tx, t.ty, k, greatest(abs(t.tx - {ox}), abs(t.ty - {oy})) AS kk "
-        f"FROM (SELECT gx AS tx, gy AS ty FROM range(0, {width}) a(gx), "
-        f"range(0, {height}) b(gy)) t, range(1, {max(width, height)}) s(k) "
-        f"WHERE k < greatest(abs(t.tx - {ox}), abs(t.ty - {oy}))"
-    )
-    terr = (
-        "((1.0E0 - fy) * ((1.0E0 - fx) * v00 + fx * v10) "
-        "+ fy * ((1.0E0 - fx) * v01 + fx * v11))"
-    )
     return (
-        f"WITH s AS MATERIALIZED ({steps}), "
-        f"pos AS MATERIALIZED (SELECT tx, ty, "
-        f"(cast(k as double) / cast(kk as double)) AS f, "
-        f"({ox} + (cast(k as double) / cast(kk as double)) * (tx - {ox})) AS px, "
-        f"({oy} + (cast(k as double) / cast(kk as double)) * (ty - {oy})) AS py "
-        f"FROM s), "
-        f"cells AS MATERIALIZED (SELECT tx, ty, f, "
-        f"cast(floor(px) as bigint) AS x0, cast(floor(py) as bigint) AS y0, "
-        f"(px - cast(floor(px) as bigint)) AS fx, "
-        f"(py - cast(floor(py) as bigint)) AS fy FROM pos), "
-        f"vals AS MATERIALIZED (SELECT tx, ty, f, fx, fy, "
-        f"{dem_at('x0', 'y0')} AS v00, "
-        f"{dem_at(f'least(x0 + 1, {width - 1})', 'y0')} AS v10, "
-        f"{dem_at('x0', f'least(y0 + 1, {height - 1})')} AS v01, "
-        f"{dem_at(f'least(x0 + 1, {width - 1})', f'least(y0 + 1, {height - 1})')} "
-        f"AS v11 FROM cells), "
-        f"req AS (SELECT tx, ty, "
-        f"max({eye} + ({terr} - {eye}) / f) AS zreq FROM vals GROUP BY 1, 2), "
-        f"ground AS (SELECT t.gx AS tx, t.gy AS ty, "
-        f"cast(floor(greatest(0.0E0, coalesce(r.zreq - "
+        f"WITH {_ray_ctes(width, height, ox, oy)}, "
+        f"req AS (SELECT tx, ty, max(eye + (terr - eye) / f) AS zreq "
+        f"FROM ray0 GROUP BY 1, 2) "
+    ) + _per_scanline(
+        width, height, "req",
+        f"cast(sum(cast(floor(greatest(0.0E0, coalesce(b.zreq - "
         f"{dem_at('t.gx', 't.gy')}, 0.0E0)) * 1000.0E0 + 0.000000001E0) "
-        f"as bigint) AS mkey "
-        f"FROM (SELECT gx, gy FROM range(0, {width}) a(gx), "
-        f"range(0, {height}) c(gy)) t "
-        f"LEFT JOIN req r ON r.tx = t.gx AND r.ty = t.gy) "
-        f"SELECT ty AS y, cast(count(*) as bigint) AS n, "
-        f"cast(sum(mkey) as bigint) AS ground_mkey_sum "
-        f"FROM ground GROUP BY 1"
+        f"as bigint)) as bigint) AS ground_mkey_sum",
     )
 
 
@@ -269,124 +257,22 @@ CUM_OBSERVERS = ((31, 29), (8, 8), (55, 50))
 
 
 def viewshed_cumulative_rows(
-    spark, width: int, height: int,
-    observers: tuple = CUM_OBSERVERS, band_px: int = 16,
+    spark, width: int, height: int, observers: tuple = CUM_OBSERVERS
 ) -> DataFrame:
     """(y, n, vis_total) per scanline, vis_total = sum over the row's
     cells of the number of observers that see the cell. Same banded
-    applyInPandas shape as the single-observer op — each band runs the
-    K observer sweeps locally, so the fan-out is K map tasks' worth of
-    compute with zero extra shuffles."""
-    nb = (height + band_px - 1) // band_px
-    bands = spark.range(nb).selectExpr("cast(id as int) AS band")
-    obs = tuple(observers)
-
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * band_px
-        hh = min(band_px, height - y0)
-        gy, gx = np.mgrid[0:height, 0:width]
-        dem = _dem_value(gx, gy).astype(np.float64)
-        out = []
-        for ty in range(y0, y0 + hh):
-            total = 0
-            for ox, oy in obs:
-                eye = dem[oy, ox] + OBS_HEIGHT
-                for tx in range(width):
-                    K = max(abs(tx - ox), abs(ty - oy))
-                    if K == 0:
-                        total += 1
-                        continue
-                    ks = np.arange(1, K, dtype=np.float64)
-                    f = ks / K
-                    px = ox + f * (tx - ox)
-                    py = oy + f * (ty - oy)
-                    x0 = np.floor(px).astype(np.int64)
-                    y0i = np.floor(py).astype(np.int64)
-                    fx = px - x0
-                    fy = py - y0i
-                    x1 = np.minimum(x0 + 1, width - 1)
-                    y1 = np.minimum(y0i + 1, height - 1)
-                    terr = (1.0 - fy) * (
-                        (1.0 - fx) * dem[y0i, x0] + fx * dem[y0i, x1]
-                    ) + fy * ((1.0 - fx) * dem[y1, x0] + fx * dem[y1, x1])
-                    los = eye + f * (dem[ty, tx] - eye)
-                    if (los > terr).all():
-                        total += 1
-            out.append((ty, width, total))
-        return pd.DataFrame(out, columns=["y", "n", "vis_total"])
-
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n bigint, vis_total bigint"
+    shape as the single-observer op — each band runs the K observer
+    sweeps locally, so the fan-out is K map tasks' worth of compute
+    with zero extra shuffles."""
+    return _stage(
+        spark, width, height, "vis_total bigint", _count_visible(tuple(observers))
     )
 
 
 def oracle_viewshed_cumulative(
     width: int, height: int, observers: tuple = CUM_OBSERVERS
 ) -> str:
-    val = DEM_VALUE_SQL
-
-    def dem_at(x, y):
-        return (
-            f"cast({val.replace('gx', f'({x})').replace('gy', f'({y})')} "
-            f"as double)"
-        )
-
-    terr = (
-        "((1.0E0 - fy) * ((1.0E0 - fx) * v00 + fx * v10) "
-        "+ fy * ((1.0E0 - fx) * v01 + fx * v11))"
-    )
-    ctes, unions = [], []
-    for i, (ox, oy) in enumerate(observers):
-        eye = f"({dem_at(str(ox), str(oy))} + {OBS_HEIGHT}E0)"
-        los = f"({eye} + f * ({dem_at('tx', 'ty')} - {eye}))"
-        ctes.append(
-            f"s{i} AS (SELECT t.tx, t.ty, k, "
-            f"greatest(abs(t.tx - {ox}), abs(t.ty - {oy})) AS kk "
-            f"FROM (SELECT gx AS tx, gy AS ty FROM range(0, {width}) a(gx), "
-            f"range(0, {height}) b(gy)) t, range(1, {max(width, height)}) s(k) "
-            f"WHERE k < greatest(abs(t.tx - {ox}), abs(t.ty - {oy})))"
-        )
-        ctes.append(
-            f"pos{i} AS (SELECT tx, ty, "
-            f"(cast(k as double) / cast(kk as double)) AS f, "
-            f"({ox} + (cast(k as double) / cast(kk as double)) * (tx - {ox})) "
-            f"AS px, "
-            f"({oy} + (cast(k as double) / cast(kk as double)) * (ty - {oy})) "
-            f"AS py FROM s{i})"
-        )
-        ctes.append(
-            f"cells{i} AS (SELECT tx, ty, f, "
-            f"cast(floor(px) as bigint) AS x0, "
-            f"cast(floor(py) as bigint) AS y0, "
-            f"(px - cast(floor(px) as bigint)) AS fx, "
-            f"(py - cast(floor(py) as bigint)) AS fy FROM pos{i})"
-        )
-        ctes.append(
-            f"vals{i} AS (SELECT tx, ty, f, fx, fy, "
-            f"{dem_at('x0', 'y0')} AS v00, "
-            f"{dem_at(f'least(x0 + 1, {width - 1})', 'y0')} AS v10, "
-            f"{dem_at('x0', f'least(y0 + 1, {height - 1})')} AS v01, "
-            f"{dem_at(f'least(x0 + 1, {width - 1})', f'least(y0 + 1, {height - 1})')} "
-            f"AS v11 FROM cells{i})"
-        )
-        unions.append(
-            f"SELECT DISTINCT tx, ty, {i} AS obs FROM vals{i} "
-            f"WHERE NOT ({los} > {terr})"
-        )
-    k = len(observers)
-    return (
-        "WITH " + ", ".join(ctes) + ", "
-        f"blocked AS ({' UNION ALL '.join(unions)}), "
-        f"bn AS (SELECT tx, ty, count(*) AS n_blocked FROM blocked "
-        f"GROUP BY tx, ty) "
-        f"SELECT t.gy AS y, count(*) AS n, "
-        f"cast(sum({k} - coalesce(bn.n_blocked, 0)) as bigint) AS vis_total "
-        f"FROM (SELECT gx, gy FROM range(0, {width}) a(gx), "
-        f"range(0, {height}) c(gy)) t "
-        f"LEFT JOIN bn ON bn.tx = t.gx AND bn.ty = t.gy "
-        f"GROUP BY 1"
-    )
+    return _visible_sql(width, height, observers, 0.0, "vis_total")
 
 
 # ---------------------------------------------------------------------------
@@ -409,57 +295,13 @@ CURV_DIAMETER = 1.0  # stylized pixel-unit earth diameter (see above)
 def viewshed_curved_rows(
     spark, width: int, height: int, ox: int, oy: int,
     cc: float = CURV_CC, diameter: float = CURV_DIAMETER,
-    band_px: int = 16,
 ) -> DataFrame:
     """(y, n, n_visible) per scanline with the curvature-corrected
     heights z' = z - (1-cc)/diameter * d² (d = pixel distance from the
     observer)."""
     adj = (1.0 - cc) / diameter
-    nb = (height + band_px - 1) // band_px
-    bands = spark.range(nb).selectExpr("cast(id as int) AS band")
-
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * band_px
-        h = min(band_px, height - y0)
-        gy, gx = np.mgrid[0:height, 0:width]
-        dem = _dem_value(gx, gy).astype(np.float64)
-        out = []
-        eye = dem[oy, ox] + OBS_HEIGHT
-        for ty in range(y0, y0 + h):
-            nvis = 0
-            for tx in range(width):
-                K = max(abs(tx - ox), abs(ty - oy))
-                if K == 0:
-                    nvis += 1
-                    continue
-                ks = np.arange(1, K, dtype=np.float64)
-                f = ks / K
-                px = ox + f * (tx - ox)
-                py = oy + f * (ty - oy)
-                x0 = np.floor(px).astype(np.int64)
-                y0i = np.floor(py).astype(np.int64)
-                fx = px - x0
-                fy = py - y0i
-                x1 = np.minimum(x0 + 1, width - 1)
-                y1 = np.minimum(y0i + 1, height - 1)
-                terr = (1.0 - fy) * (
-                    (1.0 - fx) * dem[y0i, x0] + fx * dem[y0i, x1]
-                ) + fy * ((1.0 - fx) * dem[y1, x0] + fx * dem[y1, x1])
-                terr = terr - adj * (
-                    (px - ox) * (px - ox) + (py - oy) * (py - oy)
-                )
-                tz = dem[ty, tx] - adj * (
-                    float((tx - ox) * (tx - ox) + (ty - oy) * (ty - oy))
-                )
-                los = eye + f * (tz - eye)
-                if (los > terr).all():
-                    nvis += 1
-            out.append((ty, width, nvis))
-        return pd.DataFrame(out, columns=["y", "n", "n_visible"])
-
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n bigint, n_visible bigint"
+    return _stage(
+        spark, width, height, "n_visible bigint", _count_visible([(ox, oy)], adj)
     )
 
 
@@ -467,61 +309,7 @@ def oracle_viewshed_curved(
     width: int, height: int, ox: int, oy: int,
     cc: float = CURV_CC, diameter: float = CURV_DIAMETER,
 ) -> str:
-    from .. import synth
-
-    adj = synth.flit((1.0 - cc) / diameter)
-    val = DEM_VALUE_SQL
-
-    def dem_at(x, y):
-        return (
-            f"cast({val.replace('gx', f'({x})').replace('gy', f'({y})')} "
-            f"as double)"
-        )
-
-    eye = f"({dem_at(str(ox), str(oy))} + {OBS_HEIGHT}E0)"
-    steps = (
-        f"SELECT t.tx, t.ty, k, "
-        f"greatest(abs(t.tx - {ox}), abs(t.ty - {oy})) AS kk "
-        f"FROM (SELECT gx AS tx, gy AS ty FROM range(0, {width}) a(gx), "
-        f"range(0, {height}) b(gy)) t, range(1, {max(width, height)}) s(k) "
-        f"WHERE k < greatest(abs(t.tx - {ox}), abs(t.ty - {oy}))"
-    )
-    terr = (
-        "((1.0E0 - fy) * ((1.0E0 - fx) * v00 + fx * v10) "
-        "+ fy * ((1.0E0 - fx) * v01 + fx * v11) "
-        f"- {adj} * ((px - {ox}) * (px - {ox}) + (py - {oy}) * (py - {oy})))"
-    )
-    tz = (
-        f"({dem_at('tx', 'ty')} - {adj} * cast((tx - {ox}) * (tx - {ox}) "
-        f"+ (ty - {oy}) * (ty - {oy}) as double))"
-    )
-    los = f"({eye} + f * ({tz} - {eye}))"
-    return (
-        f"WITH s AS ({steps}), "
-        f"pos AS (SELECT tx, ty, "
-        f"(cast(k as double) / cast(kk as double)) AS f, "
-        f"({ox} + (cast(k as double) / cast(kk as double)) * (tx - {ox})) AS px, "
-        f"({oy} + (cast(k as double) / cast(kk as double)) * (ty - {oy})) AS py "
-        f"FROM s), "
-        f"cells AS (SELECT tx, ty, f, px, py, "
-        f"cast(floor(px) as bigint) AS x0, cast(floor(py) as bigint) AS y0, "
-        f"(px - cast(floor(px) as bigint)) AS fx, "
-        f"(py - cast(floor(py) as bigint)) AS fy FROM pos), "
-        f"vals AS (SELECT tx, ty, f, px, py, fx, fy, "
-        f"{dem_at('x0', 'y0')} AS v00, "
-        f"{dem_at(f'least(x0 + 1, {width - 1})', 'y0')} AS v10, "
-        f"{dem_at('x0', f'least(y0 + 1, {height - 1})')} AS v01, "
-        f"{dem_at(f'least(x0 + 1, {width - 1})', f'least(y0 + 1, {height - 1})')} "
-        f"AS v11 FROM cells), "
-        f"blocked AS (SELECT DISTINCT tx, ty FROM vals "
-        f"WHERE NOT ({los} > {terr})) "
-        f"SELECT t.gy AS y, count(*) AS n, "
-        f"count(*) - count(b.tx) AS n_visible "
-        f"FROM (SELECT gx, gy FROM range(0, {width}) a(gx), "
-        f"range(0, {height}) c(gy)) t "
-        f"LEFT JOIN blocked b ON b.tx = t.gx AND b.ty = t.gy "
-        f"GROUP BY 1"
-    )
+    return _visible_sql(width, height, [(ox, oy)], (1.0 - cc) / diameter, "n_visible")
 
 
 # ---------------------------------------------------------------------------
@@ -535,108 +323,24 @@ def oracle_viewshed_curved(
 
 
 def viewshed_maxdist_rows(
-    spark, width: int, height: int, ox: int, oy: int, md: int,
-    band_px: int = 16,
+    spark, width: int, height: int, ox: int, oy: int, md: int
 ) -> DataFrame:
     """(y, n, n_inrange, n_visible) per scanline."""
-    nb = (height + band_px - 1) // band_px
-    bands = spark.range(nb).selectExpr("cast(id as int) AS band")
-    md2 = md * md
 
-    def run(key, pdf):
-        band = int(key[0])
-        y0 = band * band_px
-        h = min(band_px, height - y0)
-        gy, gx = np.mgrid[0:height, 0:width]
-        dem = _dem_value(gx, gy).astype(np.float64)
-        out = []
-        eye = dem[oy, ox] + OBS_HEIGHT
-        for ty in range(y0, y0 + h):
-            nvis = ninr = 0
-            for tx in range(width):
-                if (tx - ox) ** 2 + (ty - oy) ** 2 > md2:
-                    continue
-                ninr += 1
-                K = max(abs(tx - ox), abs(ty - oy))
-                if K == 0:
-                    nvis += 1
-                    continue
-                ks = np.arange(1, K, dtype=np.float64)
-                f = ks / K
-                px = ox + f * (tx - ox)
-                py = oy + f * (ty - oy)
-                x0 = np.floor(px).astype(np.int64)
-                y0i = np.floor(py).astype(np.int64)
-                fx = px - x0
-                fy = py - y0i
-                x1 = np.minimum(x0 + 1, width - 1)
-                y1 = np.minimum(y0i + 1, height - 1)
-                terr = (1.0 - fy) * (
-                    (1.0 - fx) * dem[y0i, x0] + fx * dem[y0i, x1]
-                ) + fy * ((1.0 - fx) * dem[y1, x0] + fx * dem[y1, x1])
-                los = eye + f * (dem[ty, tx] - eye)
-                if (los > terr).all():
-                    nvis += 1
-            out.append((ty, width, ninr, nvis))
-        return pd.DataFrame(
-            out, columns=["y", "n", "n_inrange", "n_visible"]
-        )
+    def per_line(dem, ty):
+        inr = [tx for tx in range(width) if (tx - ox) ** 2 + (ty - oy) ** 2 <= md * md]
+        return len(inr), sum(_visible(dem, ox, oy, tx, ty) for tx in inr)
 
-    return bands.groupby("band").applyInPandas(
-        run, schema="y bigint, n bigint, n_inrange bigint, n_visible bigint"
-    )
+    return _stage(spark, width, height, "n_inrange bigint, n_visible bigint", per_line)
 
 
 def oracle_viewshed_maxdist(
     width: int, height: int, ox: int, oy: int, md: int
 ) -> str:
-    val = DEM_VALUE_SQL
-    md2 = md * md
-
-    def dem_at(x, y):
-        return f"cast({val.replace('gx', f'({x})').replace('gy', f'({y})')} as double)"
-
-    eye = f"({dem_at(str(ox), str(oy))} + {OBS_HEIGHT}E0)"
-    inr = f"((tx - {ox}) * (tx - {ox}) + (ty - {oy}) * (ty - {oy}) <= {md2})"
-    steps = (
-        f"SELECT t.tx, t.ty, k, greatest(abs(t.tx - {ox}), abs(t.ty - {oy})) AS kk "
-        f"FROM (SELECT gx AS tx, gy AS ty FROM range(0, {width}) a(gx), "
-        f"range(0, {height}) b(gy) "
-        f"WHERE (gx - {ox}) * (gx - {ox}) + (gy - {oy}) * (gy - {oy}) <= {md2}) t, "
-        f"range(1, {max(width, height)}) s(k) "
-        f"WHERE k < greatest(abs(t.tx - {ox}), abs(t.ty - {oy}))"
-    )
-    terr = (
-        "((1.0E0 - fy) * ((1.0E0 - fx) * v00 + fx * v10) "
-        "+ fy * ((1.0E0 - fx) * v01 + fx * v11))"
-    )
-    los = f"({eye} + f * ({dem_at('tx', 'ty')} - {eye}))"
-    return (
-        f"WITH s AS ({steps}), "
-        f"pos AS (SELECT tx, ty, "
-        f"(cast(k as double) / cast(kk as double)) AS f, "
-        f"({ox} + (cast(k as double) / cast(kk as double)) * (tx - {ox})) AS px, "
-        f"({oy} + (cast(k as double) / cast(kk as double)) * (ty - {oy})) AS py "
-        f"FROM s), "
-        f"cells AS (SELECT tx, ty, f, "
-        f"cast(floor(px) as bigint) AS x0, cast(floor(py) as bigint) AS y0, "
-        f"(px - cast(floor(px) as bigint)) AS fx, "
-        f"(py - cast(floor(py) as bigint)) AS fy FROM pos), "
-        f"vals AS (SELECT tx, ty, f, fx, fy, "
-        f"{dem_at('x0', 'y0')} AS v00, "
-        f"{dem_at(f'least(x0 + 1, {width - 1})', 'y0')} AS v10, "
-        f"{dem_at('x0', f'least(y0 + 1, {height - 1})')} AS v01, "
-        f"{dem_at(f'least(x0 + 1, {width - 1})', f'least(y0 + 1, {height - 1})')} "
-        f"AS v11 FROM cells), "
-        f"blocked AS (SELECT DISTINCT tx, ty FROM vals "
-        f"WHERE NOT ({los} > {terr})) "
-        f"SELECT t.gy AS y, count(*) AS n, "
-        f"cast(sum(CASE WHEN {inr.replace('tx', 't.gx').replace('ty', 't.gy')} "
-        f"THEN 1 ELSE 0 END) as bigint) AS n_inrange, "
-        f"cast(sum(CASE WHEN {inr.replace('tx', 't.gx').replace('ty', 't.gy')} "
-        f"AND b.tx IS NULL THEN 1 ELSE 0 END) as bigint) AS n_visible "
-        f"FROM (SELECT gx, gy FROM range(0, {width}) a(gx), "
-        f"range(0, {height}) c(gy)) t "
-        f"LEFT JOIN blocked b ON b.tx = t.gx AND b.ty = t.gy "
-        f"GROUP BY 1"
+    inr = f"(t.gx - {ox}) * (t.gx - {ox}) + (t.gy - {oy}) * (t.gy - {oy}) <= {md * md}"
+    return _blocked_sql(width, height, [(ox, oy)]) + _per_scanline(
+        width, height, "blocked",
+        f"cast(sum(CASE WHEN {inr} THEN 1 ELSE 0 END) as bigint) AS n_inrange, "
+        f"cast(sum(CASE WHEN {inr} AND b.tx IS NULL THEN 1 ELSE 0 END) as bigint) "
+        f"AS n_visible",
     )

@@ -3,10 +3,13 @@ visible in explain() output — parquet predicate pushdown + column
 pruning, broadcast joins on dim sides, whole-stage codegen for the
 Catalyst-only operators, and no Python in JVM-only paths."""
 
+import pytest
+
 from gdal_spark import synth
 from gdal_spark.operators import cells, ogrsql, textops
 from gdal_spark.operators.spatial_join import spatial_join
 from tests.conftest import SF_DIR
+from tests.test_bands import BANDED_STAGES
 
 
 def plan(df) -> str:
@@ -476,12 +479,13 @@ def test_tms_assign_plans_are_python_free(spark):
         assert "Join" not in s
 
 
-def test_viewshed_rows_one_band_shuffle(spark):
-    """Each viewshed band emits one row per scanline of its own band,
-    so the banded stage is the output: one Exchange (the band
-    grouping) and no per-scanline aggregate after it — one fewer than
-    a groupBy("y") re-aggregation would add."""
-    from gdal_spark.operators import viewshed
-
-    s = plan(viewshed.viewshed_rows(spark, 64, 64, 31, 29))
+@pytest.mark.parametrize("name", sorted(BANDED_STAGES))
+def test_banded_stage_is_one_band_shuffle(spark, name):
+    """Each band of a banded scanline stage (rowstage.bands) emits one
+    row per scanline of its own band, so the banded stage is the
+    output: one Exchange (the band grouping) and no per-scanline
+    aggregate after it — one fewer than a groupBy("y")
+    re-aggregation would add."""
+    s = plan(BANDED_STAGES[name][0](spark, 64, 64))
     assert s.count("Exchange") == 1, s
+    assert "Aggregate" not in s, s

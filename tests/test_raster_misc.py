@@ -59,11 +59,12 @@ def test_nearblack_collar_widths(spark):
     assert out.loc[2].left_trim == 10 and out.loc[2].right_trim == 10
 
 
-def test_grid_idw_matches_bruteforce(spark):
+def test_grid_idw_matches_bruteforce(spark, monkeypatch):
+    monkeypatch.setattr(raster_misc, "BAND_PX", 8)  # two bands
     pts = pd.DataFrame(
         {"px": [2.0, 10.5], "py": [3.0, 12.0], "v": [50.0, 250.0]}
     )
-    out = raster_misc.grid_idw(spark, pts, 16, 16, tile_px=8).toPandas()
+    out = raster_misc.grid_idw(spark, pts, 16, 16).toPandas()
     out = out.set_index("y")
     gy, gx = np.mgrid[0:16, 0:16]
     num = np.zeros((16, 16))
