@@ -1,25 +1,37 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and curation over embedding columns (array<float>).
 
-Three stages over the ``embeddings`` table (vec_id, embedding
+Thirteen stages over the ``embeddings`` table (vec_id, embedding
 float[64], label):
 
-- **cosine_topk** — exact brute-force top-k per query vector. The
-  correctness baseline; O(Q x N) with Q small (broadcast the query
-  side).
-- **ann_lsh_topk** — the scale path: random-hyperplane LSH with T
-  hash tables of P planes each (sign-bit buckets); candidates =
-  bucket collisions in any table, re-ranked exactly. At 10^12 rows
-  the bucket join replaces the full cross product; T/P tune the
-  recall/cost trade-off.
-- **embedding_neardup** — near-duplicate pairs above a cosine
-  threshold (pairwise here; the LSH bucket join is the scale path).
+- **exact top-k** — ``cosine_topk`` (brute force against broadcast
+  query vectors; the correctness baseline) and ``hard_negatives`` (the
+  same scan with an anti-label predicate).
+- **approximate top-k, exact re-rank** — ``ann_lsh_topk``
+  (random-hyperplane LSH bucket collisions), ``ann_ivf_topk`` (k-means
+  coarse quantizer, probed clusters) and ``ann_rerank_topk``
+  (dimension-prefix shortlist).
+- **quantized top-k** — ``pq_topk``, ``ivfpq_topk`` and ``sq8_topk``
+  rank by integer asymmetric distances over compressed codes.
+- **near duplicates** — ``embedding_neardup`` (LSH candidates),
+  ``embedding_neardup_exact`` (all pairs) and ``semdedup`` (within
+  k-means clusters).
+- **corpus statistics** — ``embedding_gram`` (one Gram partial per
+  Arrow batch, the module's one ``mapInPandas``) and ``pca_pc1``
+  (driver-side integer power iteration over that Gram matrix).
+
+Each decision has one definition per dialect, shared by the Spark
+stages and the DuckDB oracles: the ranking ``_top_k`` / ``_top_k_sql``
+(one numbered window per partition, ties broken by the order's
+last column), the exact cosine of a pair frame ``_cosine`` /
+``_cosine_sql`` and the Lloyd k-means chain ``_lloyd`` /
+``_lloyd_ctes``. Sizes are module constants read at call time, so
+every stage takes only its input frame and every oracle no argument.
 
 Numeric contract: embeddings are scaled to integers (floor(x*1e6)) so
 every dot product is integer-exact and order-independent; the final
 cosine is a fixed sequence of correctly-rounded IEEE double ops, so
 Spark and the DuckDB oracle agree bit-for-bit on the floor-scaled
-``cos_key``. Everything is Catalyst array expressions + joins — no
-Python UDFs.
+``cos_key``.
 """
 
 from __future__ import annotations
@@ -27,16 +39,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 SCALE = 1_000_000
+DIM = 64
+TOP_K = 5
 N_QUERIES = 32
 LSH_TABLES = 8
 LSH_PLANES = 4
-DIM = 64
+MIN_COS_PPM = 350_000  # near-duplicate threshold: cosine >= 0.35
+
+BY_COS = ("cos_key DESC", "vec_id")
+BY_ADC = ("adc", "vec_id")
 
 
-def scaled_vec_sql(dialect: str, col: str = "embedding") -> str:
-    lam = "x -> cast(floor(cast(x as double) * 1000000.0E0) as bigint)"
+def scaled_vec_sql(dialect: str, scale: int = SCALE) -> str:
+    """The ``embedding`` column floor-scaled to a bigint vector."""
+    lam = f"x -> cast(floor(cast(x as double) * {scale}.0E0) as bigint)"
     fn = "transform" if dialect == "spark" else "list_transform"
-    return f"{fn}({col}, {lam})"
+    return f"{fn}(embedding, {lam})"
 
 
 def dot_sql(dialect: str, a: str, b: str) -> str:
@@ -58,18 +76,129 @@ def cos_key_sql() -> str:
     )
 
 
+def _top_k(df: DataFrame, part, order, k: int) -> DataFrame:
+    """The first ``k`` rows of each ``part`` group under ``order`` (SQL
+    sort items such as ``"cos_key DESC"``), numbered in an int
+    ``rank`` column: one numbered window plus a filter.
+    ``_top_k_sql`` is the same ranking in DuckDB, so both engines
+    break ties the same way."""
+    win = Window.partitionBy(*part).orderBy(*(
+        F.desc(o[: -len(" DESC")]) if o.endswith(" DESC") else F.col(o)
+        for o in order
+    ))
+    return df.withColumn("rank", F.row_number().over(win)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _top_k_sql(src: str, part, order, k: int) -> str:
+    return (
+        f"SELECT * FROM (SELECT *, cast(row_number() OVER (PARTITION BY "
+        f"{', '.join(part)} ORDER BY {', '.join(order)}) as int) AS rank "
+        f"FROM {src}) WHERE rank <= {k}"
+    )
+
+
+def _ranked(scored: DataFrame, order=BY_COS) -> DataFrame:
+    """The TOP_K rows per qid of a (qid, vec_id, key) frame, ``order``
+    leading with the key: (qid, rank, vec_id, key)."""
+    key = order[0].split()[0]
+    return _top_k(scored, ["qid"], order, TOP_K).select(
+        "qid", "rank", "vec_id", key
+    )
+
+
+def _ranked_sql(ctes, order=BY_COS) -> str:
+    """``_ranked`` over the last of ``ctes``, named ``scored``."""
+    key = order[0].split()[0]
+    return (
+        "WITH " + ", ".join(ctes)
+        + f" SELECT qid, rank, vec_id, {key} FROM "
+        f"({_top_k_sql('scored', ['qid'], order, TOP_K)})"
+    )
+
+
+def _scaled(emb: DataFrame, scale: int = SCALE) -> DataFrame:
+    return emb.selectExpr("vec_id", f"{scaled_vec_sql('spark', scale)} AS vs")
+
+
+def _scaled_cte(scale: int = SCALE) -> str:
+    return f"SELECT vec_id, {scaled_vec_sql('duckdb', scale)} AS vs FROM embeddings"
+
+
 def _vectors(emb: DataFrame) -> DataFrame:
     """(vec_id, vs, norm2): scaled int vector + self-dot."""
-    return emb.selectExpr(
-        "vec_id", f"{scaled_vec_sql('spark')} AS vs"
-    ).selectExpr("vec_id", "vs", f"{dot_sql('spark', 'vs', 'vs')} AS norm2")
+    return _scaled(emb).selectExpr(
+        "vec_id", "vs", f"{dot_sql('spark', 'vs', 'vs')} AS norm2"
+    )
 
 
 def _vectors_cte() -> str:
-    vs = scaled_vec_sql("duckdb")
     return (
         f"SELECT vec_id, vs, {dot_sql('duckdb', 'vs', 'vs')} AS na FROM "
-        f"(SELECT vec_id, {vs} AS vs FROM embeddings)"
+        f"({_scaled_cte()})"
+    )
+
+
+# ---------------------------------------------------------------------------
+# exact cosine of a pair frame
+
+
+def _side(v: DataFrame, key: str, s: str) -> DataFrame:
+    """One side of a pair frame: id ``key``, vector ``v{s}``, self-dot
+    ``n{s}`` and, when ``v`` carries a ``vp`` prefix column, ``p{s}``."""
+    return v.withColumnsRenamed(
+        {"vec_id": key, "vs": f"v{s}", "norm2": f"n{s}", "vp": f"p{s}"}
+    )
+
+
+def _cosine(pairs: DataFrame, *cols: str) -> DataFrame:
+    """Exact cosine of a pair frame carrying both sides' vectors
+    (va, vb) and self-dots (na, nb): ``cols`` + cos_key."""
+    return pairs.selectExpr(
+        *cols, "na", "nb", f"{dot_sql('spark', 'va', 'vb')} AS dot"
+    ).selectExpr(*cols, f"{cos_key_sql()} AS cos_key")
+
+
+def _cosine_sql(cols: str, pairs: str) -> str:
+    """``_cosine`` in DuckDB: ``pairs`` is a FROM clause binding two
+    rows ``a`` and ``b`` of the ``v`` CTE (``_vectors_cte``)."""
+    return (
+        f"SELECT * EXCLUDE (na, nb, dot), {cos_key_sql()} AS cos_key FROM ("
+        f"SELECT {cols}, a.na AS na, b.na AS nb, "
+        f"{dot_sql('duckdb', 'a.vs', 'b.vs')} AS dot FROM {pairs})"
+    )
+
+
+def _query_pairs(v: DataFrame, cond: str) -> DataFrame:
+    """Every corpus vector (vec_id, vb, nb) of a ``_vectors`` frame
+    against the broadcast N_QUERIES query vectors (qid, va, na) that
+    satisfy ``cond``."""
+    q = _side(v.filter(F.col("vec_id") < N_QUERIES), "qid", "a")
+    return _side(v, "vec_id", "b").join(F.broadcast(q), F.expr(cond))
+
+
+def _exact_topk(emb: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact cosine re-rank of a (qid, vec_id) candidate frame."""
+    v = _vectors(emb)
+    pairs = cand.join(F.broadcast(_side(v, "qid", "a")), "qid").join(
+        _side(v, "vec_id", "b"), "vec_id"
+    )
+    return _ranked(_cosine(pairs, "qid", "vec_id"))
+
+
+# the candidate CTE ``cand`` (qid, vec_id) bound to its two vectors
+_CAND_PAIRS = (
+    "cand JOIN v a ON a.vec_id = cand.qid JOIN v b ON b.vec_id = cand.vec_id"
+)
+
+
+def _cos_topk_sql(ctes, pairs: str) -> str:
+    """``_ranked`` by exact cosine in DuckDB: the ``v`` CTE, then
+    ``ctes``, then the cosine of ``pairs`` (see ``_cosine_sql``)."""
+    scored = _cosine_sql("a.vec_id AS qid, b.vec_id", pairs)
+    return _ranked_sql(
+        [f"v AS MATERIALIZED ({_vectors_cte()})", *ctes, f"scored AS ({scored})"]
     )
 
 
@@ -77,43 +206,16 @@ def _vectors_cte() -> str:
 # exact brute-force top-k
 
 
-def cosine_topk(
-    emb: DataFrame, k: int = 5, n_queries: int = N_QUERIES
-) -> DataFrame:
+def cosine_topk(emb: DataFrame) -> DataFrame:
     """Exact cosine top-k: (qid, rank, vec_id, cos_key). Query side is
-    tiny -> broadcast; ranking via window row_number with vec_id
-    tie-break."""
-    v = _vectors(emb)
-    q = v.filter(F.col("vec_id") < n_queries).selectExpr(
-        "vec_id AS qid", "vs AS qv", "norm2 AS na"
-    )
-    scored = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .selectExpr(
-            "qid", "vec_id", "na", "norm2 AS nb",
-            f"{dot_sql('spark', 'qv', 'vs')} AS dot",
-        )
-        .selectExpr("qid", "vec_id", f"{cos_key_sql()} AS cos_key")
-    )
-    win = Window.partitionBy("qid").orderBy(F.desc("cos_key"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "vec_id", "cos_key")
-    )
+    tiny -> broadcast; vec_id breaks ties."""
+    pairs = _query_pairs(_vectors(emb), "vec_id != qid")
+    return _ranked(_cosine(pairs, "qid", "vec_id"))
 
 
-def oracle_cosine_topk(k: int = 5, n_queries: int = N_QUERIES) -> str:
-    return (
-        f"WITH v AS ({_vectors_cte()}), "
-        f"scored AS (SELECT q.vec_id AS qid, c.vec_id, q.na AS na, c.na AS nb, "
-        f"{dot_sql('duckdb', 'q.vs', 'c.vs')} AS dot "
-        f"FROM v q JOIN v c ON q.vec_id < {n_queries} AND c.vec_id <> q.vec_id), "
-        f"keyed AS (SELECT qid, vec_id, {cos_key_sql()} AS cos_key, "
-        f"row_number() OVER (PARTITION BY qid ORDER BY {cos_key_sql()} DESC, "
-        f"vec_id) AS rank FROM scored) "
-        f"SELECT qid, cast(rank as int) AS rank, vec_id, cos_key "
-        f"FROM keyed WHERE rank <= {k}"
+def oracle_cosine_topk() -> str:
+    return _cos_topk_sql(
+        [], f"v a JOIN v b ON a.vec_id < {N_QUERIES} AND b.vec_id <> a.vec_id"
     )
 
 
@@ -128,11 +230,11 @@ def _plane_sign_sql() -> str:
     return f"(CASE WHEN (({m} * {m}) % 127) % 2 = 0 THEN 1 ELSE -1 END)"
 
 
-def lsh_buckets(emb: DataFrame, tables: int = LSH_TABLES, planes: int = LSH_PLANES) -> DataFrame:
-    """(vec_id, t, bucket): sign-bit bucket of each vector in each
-    hash table. Explode over (table, plane, dim), two tree
-    aggregations — all map-side combinable."""
-    v = _vectors(emb).selectExpr("vec_id", "vs")
+def lsh_buckets(emb: DataFrame) -> DataFrame:
+    """(vec_id, t, bucket): sign-bit bucket of each vector in each of
+    the LSH_TABLES hash tables of LSH_PLANES planes. Explode over
+    (table, plane), two tree aggregations — all map-side combinable."""
+    v = _scaled(emb)
     # fan out over (table, plane) with explode(sequence(...)): map-only
     # (no join nodes at all), unlike a crossJoin which compiles to
     # BroadcastNestedLoopJoin. The per-plane dot against the sign
@@ -146,12 +248,12 @@ def lsh_buckets(emb: DataFrame, tables: int = LSH_TABLES, planes: int = LSH_PLAN
     terms = (
         v.selectExpr(
             "vec_id", "vs",
-            f"explode(sequence(0, {tables * planes - 1})) AS tp",
+            f"explode(sequence(0, {LSH_TABLES * LSH_PLANES - 1})) AS tp",
         )
         .selectExpr(
             "vec_id", "vs",
-            f"cast(tp div {planes} as bigint) AS t",
-            f"cast(tp % {planes} as bigint) AS j",
+            f"cast(tp div {LSH_PLANES} as bigint) AS t",
+            f"cast(tp % {LSH_PLANES} as bigint) AS j",
         )
         .selectExpr(
             "vec_id", "t", "j",
@@ -169,18 +271,27 @@ def lsh_buckets(emb: DataFrame, tables: int = LSH_TABLES, planes: int = LSH_PLAN
     )
 
 
-def ann_lsh_topk(
-    emb: DataFrame,
-    k: int = 5,
-    n_queries: int = N_QUERIES,
-    tables: int = LSH_TABLES,
-    planes: int = LSH_PLANES,
-) -> DataFrame:
+def _bucket_ctes() -> list[str]:
+    """``lsh_buckets`` in DuckDB over the ``v`` CTE: terms -> bits ->
+    buckets (vec_id, t, bucket)."""
+    sign = _plane_sign_sql()
+    return [
+        f"terms AS (SELECT vec_id, t, j, vs[cast(d + 1 as int)] * {sign} AS term "
+        f"FROM v, range(0, {LSH_TABLES}) tt(t), range(0, {LSH_PLANES}) tj(j), "
+        f"range(0, {DIM}) td(d))",
+        "bits AS (SELECT vec_id, t, j, cast(sum(term) >= 0 as bigint) AS bit "
+        "FROM terms GROUP BY 1, 2, 3)",
+        "buckets AS (SELECT vec_id, t, cast(sum(bit << cast(j as int)) as bigint) "
+        "AS bucket FROM bits GROUP BY 1, 2)",
+    ]
+
+
+def ann_lsh_topk(emb: DataFrame) -> DataFrame:
     """Approximate top-k: candidates from bucket collisions (any
     table), exact re-rank. Same schema as cosine_topk; recall vs the
     exact path is asserted in tests."""
-    b = lsh_buckets(emb, tables, planes)
-    qb = b.filter(F.col("vec_id") < n_queries).selectExpr(
+    b = lsh_buckets(emb)
+    qb = b.filter(F.col("vec_id") < N_QUERIES).selectExpr(
         "vec_id AS qid", "t", "bucket"
     )
     cand = (
@@ -189,77 +300,36 @@ def ann_lsh_topk(
         .select("qid", "vec_id")
         .distinct()
     )
-    v = _vectors(emb)
-    q = v.selectExpr("vec_id AS qid", "vs AS qv", "norm2 AS na")
-    scored = (
-        cand.join(F.broadcast(q), "qid")
-        .join(v, "vec_id")
-        .selectExpr(
-            "qid", "vec_id", "na", "norm2 AS nb",
-            f"{dot_sql('spark', 'qv', 'vs')} AS dot",
-        )
-        .selectExpr("qid", "vec_id", f"{cos_key_sql()} AS cos_key")
-    )
-    win = Window.partitionBy("qid").orderBy(F.desc("cos_key"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "vec_id", "cos_key")
-    )
+    return _exact_topk(emb, cand)
 
 
-def oracle_ann_lsh_topk(
-    k: int = 5,
-    n_queries: int = N_QUERIES,
-    tables: int = LSH_TABLES,
-    planes: int = LSH_PLANES,
-) -> str:
-    sign = _plane_sign_sql()
-    return (
-        f"WITH v AS ({_vectors_cte()}), "
-        f"terms AS (SELECT vec_id, t, j, vs[cast(d + 1 as int)] * {sign} AS term "
-        f"FROM v, range(0, {tables}) tt(t), range(0, {planes}) tj(j), "
-        f"range(0, {DIM}) td(d)), "
-        f"bits AS (SELECT vec_id, t, j, cast(sum(term) >= 0 as bigint) AS bit "
-        f"FROM terms GROUP BY 1, 2, 3), "
-        f"buckets AS (SELECT vec_id, t, cast(sum(bit << cast(j as int)) as bigint) "
-        f"AS bucket FROM bits GROUP BY 1, 2), "
-        f"cand AS (SELECT DISTINCT q.vec_id AS qid, c.vec_id FROM buckets q "
-        f"JOIN buckets c ON q.t = c.t AND q.bucket = c.bucket "
-        f"AND q.vec_id < {n_queries} AND c.vec_id <> q.vec_id), "
-        f"scored AS (SELECT cand.qid, cand.vec_id, q.na AS na, c.na AS nb, "
-        f"{dot_sql('duckdb', 'q.vs', 'c.vs')} AS dot "
-        f"FROM cand JOIN v q ON q.vec_id = cand.qid "
-        f"JOIN v c ON c.vec_id = cand.vec_id), "
-        f"keyed AS (SELECT qid, vec_id, {cos_key_sql()} AS cos_key, "
-        f"row_number() OVER (PARTITION BY qid ORDER BY {cos_key_sql()} DESC, "
-        f"vec_id) AS rank FROM scored) "
-        f"SELECT qid, cast(rank as int) AS rank, vec_id, cos_key "
-        f"FROM keyed WHERE rank <= {k}"
+def oracle_ann_lsh_topk() -> str:
+    return _cos_topk_sql(
+        [
+            *_bucket_ctes(),
+            f"cand AS (SELECT DISTINCT q.vec_id AS qid, c.vec_id FROM buckets q "
+            f"JOIN buckets c ON q.t = c.t AND q.bucket = c.bucket "
+            f"AND q.vec_id < {N_QUERIES} AND c.vec_id <> q.vec_id)",
+        ],
+        _CAND_PAIRS,
     )
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN: k-means coarse quantizer + probed clusters
+# Lloyd k-means: the IVF coarse quantizer and the PQ codebooks
 #
 # The centroid arithmetic is kept integer-exact so the oracle can
 # replay it: vectors are scaled to ints at IVF_SCALE; a centroid is
 # represented as (component sums S, count n); the distance comparison
 # ||v - S/n||^2 is evaluated as ||n*v - S||^2 (scaled by n^2, order-
-# free integer arithmetic). Lloyd iterations are fixed (IVF_ITERS)
-# with deterministic init (the first K vectors by vec_id) — fully
+# free integer arithmetic). Lloyd iterations are fixed with
+# deterministic init (the first K vectors by vec_id) — fully
 # deterministic, no RNG, reproducible in SQL.
 
 IVF_SCALE = 10_000
 IVF_K = 8
 IVF_ITERS = 2
 IVF_PROBES = 2
-
-
-def ivf_scaled_sql(dialect: str, col: str = "embedding") -> str:
-    lam = f"x -> cast(floor(cast(x as double) * {IVF_SCALE}.0E0) as bigint)"
-    fn = "transform" if dialect == "spark" else "list_transform"
-    return f"{fn}({col}, {lam})"
 
 
 def _sqdist_num_sql(dialect: str, v: str, s: str, n: str, dim: int = DIM) -> str:
@@ -286,166 +356,157 @@ def _sqdist_scaled_sql(dialect: str, v: str, s: str, n: str, dim: int = DIM) -> 
     return f"(cast({num} as double) / (cast({n} as double) * cast({n} as double)))"
 
 
-def _vec_sum_sql(dialect: str, col: str, dim: int = DIM) -> str:
+def _vec_sum_sql(col: str, dim: int) -> str:
     """Element-wise sum aggregate of array columns (``dim`` wide —
     zip_with pads the SHORTER side with nulls, so a wrong width
     silently nulls the whole fold)."""
-    if dialect == "spark":
-        return (
-            f"aggregate(collect_list({col}), "
-            f"transform(sequence(1, {dim}), d -> cast(0 as bigint)), "
-            f"(acc, v) -> zip_with(acc, v, (a, b) -> a + b))"
-        )
-    raise NotImplementedError
+    return (
+        f"aggregate(collect_list({col}), "
+        f"transform(sequence(1, {dim}), d -> cast(0 as bigint)), "
+        f"(acc, v) -> zip_with(acc, v, (a, b) -> a + b))"
+    )
 
 
-def ivf_assignments(
-    emb: DataFrame, n_clusters: int = IVF_K, iters: int = IVF_ITERS
-):
-    """Run the fixed Lloyd iterations; returns (vectors_df with
-    cluster col, centroids_df (cid, s (array), n)). ``n_clusters`` /
-    ``iters`` are run-scale knobs (module defaults match the oracle;
-    a 100x corpus passes bigger values here without code edits)."""
-    v = emb.selectExpr("vec_id", f"{ivf_scaled_sql('spark')} AS vs")
-    cents = (
-        v.filter(F.col("vec_id") < n_clusters)
-        .selectExpr("vec_id AS cid", "vs AS s", "cast(1 as bigint) AS n")
+def _round_sql(dialect: str) -> str:
+    """A centroid (S, n) rounded to integers, floor(S_d / n): the
+    stored form of a PQ codebook entry or an IVF-PQ coarse centroid."""
+    fn = "transform" if dialect == "spark" else "list_transform"
+    return f"{fn}(s, x -> cast(floor(cast(x as double) / n) as bigint))"
+
+
+def _lloyd(v: DataFrame, keys, dim: int, n_clusters: int, iters: int):
+    """Fixed Lloyd rounds over (vec_id, *keys, vs) integer vectors,
+    one k-means per ``keys`` group, seeded from the first
+    ``n_clusters`` vec_ids. Returns (assigned: vec_id, *keys, vs, cid
+    from the last round; centroids: *keys, cid, s, n and the rounded
+    c)."""
+    cents = v.filter(F.col("vec_id") < n_clusters).selectExpr(
+        *keys, "vec_id AS cid", "vs AS s", "cast(1 as bigint) AS n"
     )
     for _ in range(iters):
-        scored = v.crossJoin(F.broadcast(cents)).selectExpr(
-            "vec_id", "vs", "cid",
+        b = F.broadcast(cents)
+        scored = (v.join(b, list(keys)) if keys else v.crossJoin(b)).selectExpr(
+            "vec_id", *keys, "vs", "cid",
             f"{_sqdist_scaled_sql('spark', 'vs', 's', 'n')} AS d",
         )
-        win = Window.partitionBy("vec_id").orderBy("d", "cid")
-        assigned = (
-            scored.withColumn("rk", F.row_number().over(win))
-            .filter("rk = 1")
-            .select("vec_id", "vs", "cid")
+        assigned = _top_k(scored, ["vec_id", *keys], ("d", "cid"), 1).select(
+            "vec_id", *keys, "vs", "cid"
         )
         # truncate lineage per Lloyd round: each iteration's centroid
         # table is tiny (K rows) but otherwise re-embeds the whole
         # previous round's plan into the next broadcast
-        cents = assigned.groupBy("cid").agg(
-            F.expr(_vec_sum_sql("spark", "vs")).alias("s"),
+        cents = assigned.groupBy(*keys, "cid").agg(
+            F.expr(_vec_sum_sql("vs", dim)).alias("s"),
             F.count("*").alias("n"),
         ).localCheckpoint(eager=True)
-    return assigned, cents
+    return assigned, cents.withColumn("c", F.expr(_round_sql("spark")))
 
 
-def ann_ivf_topk(
-    emb: DataFrame, k: int = 5, n_queries: int = N_QUERIES,
-    probes: int = IVF_PROBES, n_clusters: int = IVF_K,
-    iters: int = IVF_ITERS,
-) -> DataFrame:
-    """IVF ANN: assign vectors to k-means clusters, probe each
-    query's ``probes`` nearest centroids, exact cosine re-rank within
-    the probed clusters. Same schema as cosine_topk."""
-    assigned, cents = ivf_assignments(emb, n_clusters, iters)
-    q = assigned.filter(F.col("vec_id") < n_queries).selectExpr(
-        "vec_id AS qid", "vs AS qv"
-    )
-    qscored = q.crossJoin(F.broadcast(cents)).selectExpr(
-        "qid", "cid", f"{_sqdist_scaled_sql('spark', 'qv', 's', 'n')} AS d"
-    )
-    win = Window.partitionBy("qid").orderBy("d", "cid")
-    probe = (
-        qscored.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= probes)
-        .select("qid", "cid")
-    )
-    cand = (
-        probe.join(assigned.select("vec_id", "cid"), "cid")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .distinct()
-    )
-    v = _vectors(emb)
-    qv = v.selectExpr("vec_id AS qid", "vs AS qv", "norm2 AS na")
-    scored = (
-        cand.join(F.broadcast(qv), "qid")
-        .join(v, "vec_id")
-        .selectExpr(
-            "qid", "vec_id", "na", "norm2 AS nb",
-            f"{dot_sql('spark', 'qv', 'vs')} AS dot",
-        )
-        .selectExpr("qid", "vec_id", f"{cos_key_sql()} AS cos_key")
-    )
-    rwin = Window.partitionBy("qid").orderBy(F.desc("cos_key"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(rwin))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "vec_id", "cos_key")
-    )
-
-
-def _oracle_ivf_ctes(
-    n_clusters: int = IVF_K, iters: int = IVF_ITERS
-) -> tuple[list[str], str, str]:
-    """DuckDB CTE chain replaying ivf_assignments; returns
-    (ctes, final_assignment_cte, final_centroid_cte)."""
-    vs = ivf_scaled_sql("duckdb")
-    d = _sqdist_scaled_sql("duckdb", "v.vs", "c.s", "c.n")
+def _lloyd_ctes(src: str, keys, dim: int, n_clusters: int, iters: int, name: str):
+    """``_lloyd`` as a MATERIALIZED DuckDB chain over the CTE ``src``
+    (vec_id, *keys, vs) — DuckDB 1.0 inlines plain CTEs, so an unrolled
+    chain would re-expand per reference. Returns (ctes, the last
+    assignment CTE); the centroids are the CTE ``name``."""
+    kc = "".join(f"{k}, " for k in keys)
+    kv = "".join(f"v.{k}, " for k in keys)
+    on = " AND ".join(f"c.{k} = v.{k}" for k in keys) or "true"
+    d = _sqdist_scaled_sql("duckdb", "v.vs", "c.s", "c.n", dim)
     ctes = [
-        f"v AS (SELECT vec_id, {vs} AS vs FROM embeddings)",
-        f"c0 AS (SELECT vec_id AS cid, vs AS s, cast(1 as bigint) AS n "
-        f"FROM v WHERE vec_id < {n_clusters})",
+        f"{name}_c0 AS MATERIALIZED (SELECT {kc}vec_id AS cid, vs AS s, "
+        f"cast(1 as bigint) AS n FROM {src} WHERE vec_id < {n_clusters})"
     ]
-    prev = "c0"
     for it in range(iters):
-        a, c = f"a{it}", f"c{it + 1}"
+        a, c, prev = f"{name}_a{it}", f"{name}_c{it + 1}", f"{name}_c{it}"
+        scored = (
+            f"(SELECT v.vec_id, {kv}v.vs, c.cid, {d} AS d "
+            f"FROM {src} v JOIN {prev} c ON {on})"
+        )
         ctes.append(
-            f"{a} AS (SELECT vec_id, vs, cid FROM ("
-            f"SELECT v.vec_id, v.vs, c.cid, "
-            f"row_number() OVER (PARTITION BY v.vec_id ORDER BY {d}, c.cid) AS rk "
-            f"FROM v, {prev} c) WHERE rk = 1)"
+            f"{a} AS MATERIALIZED (SELECT vec_id, {kc}vs, cid FROM "
+            f"({_top_k_sql(scored, ['vec_id', *keys], ('d', 'cid'), 1)}))"
         )
         # element-wise integer sum of assigned vectors per cluster
         # (count per (cid, dim) group == member count)
         ctes.append(
-            f"{c} AS (SELECT cid, list(sv ORDER BY dim) AS s, "
-            f"any_value(nn) AS n FROM ("
-            f"SELECT cid, dim, cast(sum(vs[dim]) as bigint) AS sv, "
-            f"count(*) AS nn "
-            f"FROM {a}, range(1, {DIM} + 1) t(dim) GROUP BY cid, dim) "
-            f"GROUP BY cid)"
+            f"{c} AS MATERIALIZED (SELECT {kc}cid, list(sv ORDER BY dim) AS s, "
+            f"any_value(nn) AS n FROM (SELECT {kc}cid, dim, "
+            f"cast(sum(vs[dim]) as bigint) AS sv, count(*) AS nn "
+            f"FROM {a}, range(1, {dim} + 1) t(dim) GROUP BY {kc}cid, dim) "
+            f"GROUP BY {kc}cid)"
         )
-        prev = c
-    return ctes, f"a{iters - 1}", f"c{iters}"
+    ctes.append(
+        f"{name} AS MATERIALIZED (SELECT *, {_round_sql('duckdb')} AS c "
+        f"FROM {name}_c{iters})"
+    )
+    return ctes, f"{name}_a{iters - 1}"
 
 
-def oracle_ann_ivf_topk(
-    k: int = 5, n_queries: int = N_QUERIES, probes: int = IVF_PROBES
-) -> str:
-    qd = _sqdist_scaled_sql("duckdb", "q.vs", "c.s", "c.n")
-    ctes, final_a, final_c = _oracle_ivf_ctes()
-    ctes.append(
-        f"probe AS (SELECT qid, cid FROM ("
-        f"SELECT q.vec_id AS qid, c.cid, "
-        f"row_number() OVER (PARTITION BY q.vec_id ORDER BY {qd}, c.cid) AS rk "
-        f"FROM v q, {final_c} c WHERE q.vec_id < {n_queries}) WHERE rk <= {probes})"
+# ---------------------------------------------------------------------------
+# IVF (inverted-file) ANN: k-means coarse quantizer + probed clusters
+
+
+def _coarse(emb: DataFrame):
+    """The IVF coarse quantizer: ``_lloyd`` over IVF-scaled vectors."""
+    return _lloyd(_scaled(emb, IVF_SCALE), (), DIM, IVF_K, IVF_ITERS)
+
+
+def _ivf_ctes():
+    """``_coarse`` in DuckDB: ``iv`` (IVF-scaled vectors) + the Lloyd
+    chain (centroids ``ivf``); returns (ctes, final assignment CTE)."""
+    ctes, a = _lloyd_ctes("iv", (), DIM, IVF_K, IVF_ITERS, "ivf")
+    return [f"iv AS MATERIALIZED ({_scaled_cte(IVF_SCALE)})", *ctes], a
+
+
+def _probe(q: DataFrame, cents: DataFrame) -> DataFrame:
+    """The IVF_PROBES nearest coarse centroids of each query (qid, qv):
+    (qid, cid)."""
+    scored = q.crossJoin(F.broadcast(cents)).selectExpr(
+        "qid", "cid", f"{_sqdist_scaled_sql('spark', 'qv', 's', 'n')} AS d"
     )
-    ctes.append(
-        f"cand AS (SELECT DISTINCT probe.qid, a.vec_id "
-        f"FROM probe JOIN {final_a} a ON a.cid = probe.cid "
-        f"AND a.vec_id <> probe.qid)"
-    )
-    ctes.append(
-        f"vv AS ({_vectors_cte()})"
-    )
-    ctes.append(
-        f"scored AS (SELECT cand.qid, cand.vec_id, q.na AS na, c2.na AS nb, "
-        f"{dot_sql('duckdb', 'q.vs', 'c2.vs')} AS dot FROM cand "
-        f"JOIN vv q ON q.vec_id = cand.qid JOIN vv c2 ON c2.vec_id = cand.vec_id)"
-    )
-    ctes.append(
-        f"keyed AS (SELECT qid, vec_id, {cos_key_sql()} AS cos_key, "
-        f"row_number() OVER (PARTITION BY qid ORDER BY {cos_key_sql()} DESC, "
-        f"vec_id) AS rank FROM scored)"
+    return _top_k(scored, ["qid"], ("d", "cid"), IVF_PROBES).select("qid", "cid")
+
+
+def _probe_cte() -> str:
+    d = _sqdist_scaled_sql("duckdb", "q.vs", "c.s", "c.n")
+    scored = (
+        f"(SELECT q.vec_id AS qid, c.cid, {d} AS d FROM iv q, ivf c "
+        f"WHERE q.vec_id < {N_QUERIES})"
     )
     return (
-        "WITH " + ", ".join(ctes)
-        + f" SELECT qid, cast(rank as int) AS rank, vec_id, cos_key "
-        f"FROM keyed WHERE rank <= {k}"
+        f"probe AS MATERIALIZED (SELECT qid, cid FROM "
+        f"({_top_k_sql(scored, ['qid'], ('d', 'cid'), IVF_PROBES)}))"
+    )
+
+
+def ann_ivf_topk(emb: DataFrame) -> DataFrame:
+    """IVF ANN: assign vectors to k-means clusters, probe each
+    query's IVF_PROBES nearest centroids, exact cosine re-rank within
+    the probed clusters. Same schema as cosine_topk."""
+    assigned, cents = _coarse(emb)
+    q = assigned.filter(F.col("vec_id") < N_QUERIES).selectExpr(
+        "vec_id AS qid", "vs AS qv"
+    )
+    cand = (
+        _probe(q, cents)
+        .join(assigned.select("vec_id", "cid"), "cid")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id")
+        .distinct()
+    )
+    return _exact_topk(emb, cand)
+
+
+def oracle_ann_ivf_topk() -> str:
+    ctes, a = _ivf_ctes()
+    return _cos_topk_sql(
+        [
+            *ctes,
+            _probe_cte(),
+            f"cand AS (SELECT DISTINCT probe.qid, a.vec_id "
+            f"FROM probe JOIN {a} a ON a.cid = probe.cid "
+            f"AND a.vec_id <> probe.qid)",
+        ],
+        _CAND_PAIRS,
     )
 
 
@@ -453,21 +514,30 @@ def oracle_ann_ivf_topk(
 # cosine near-duplicate pairs
 
 
-def embedding_neardup(
-    emb: DataFrame,
-    min_cos_ppm: int = 350_000,
-    tables: int = LSH_TABLES,
-    planes: int = LSH_PLANES,
-) -> DataFrame:
-    """Near-duplicate pairs with cosine >= threshold:
+def _neardup(pairs: DataFrame) -> DataFrame:
+    return _cosine(pairs, "vec_a", "vec_b").filter(
+        F.col("cos_key") >= MIN_COS_PPM
+    )
+
+
+def _neardup_sql(ctes, pairs: str) -> str:
+    scored = _cosine_sql("a.vec_id AS vec_a, b.vec_id AS vec_b", pairs)
+    return (
+        "WITH " + ", ".join([f"v AS ({_vectors_cte()})", *ctes])
+        + f" SELECT * FROM ({scored}) WHERE cos_key >= {MIN_COS_PPM}"
+    )
+
+
+def embedding_neardup(emb: DataFrame) -> DataFrame:
+    """Near-duplicate pairs with cosine >= MIN_COS_PPM:
     (vec_a, vec_b, cos_key). Candidate pairs come from LSH bucket
-    collisions (same (table, bucket) in any of the ``tables`` hash
+    collisions (same (table, bucket) in any of the LSH_TABLES hash
     tables) — a self-equi-join on the bucket key, never an all-pairs
     cross join — then an exact cosine verify. Recall < 1 by LSH design
     (~0.7 at the default threshold, recall-tested); the oracle replays
     the identical bucket assignment, so the contract is deterministic.
     """
-    b = lsh_buckets(emb, tables, planes)
+    b = lsh_buckets(emb)
     l = b.selectExpr("vec_id AS vec_a", "t", "bucket")
     r = b.selectExpr("vec_id AS vec_b", "t", "bucket")
     cand = (
@@ -477,76 +547,39 @@ def embedding_neardup(
         .distinct()
     )
     v = _vectors(emb)
-    va = v.selectExpr("vec_id AS vec_a", "vs AS va", "norm2 AS na")
-    vb = v.selectExpr("vec_id AS vec_b", "vs AS vb", "norm2 AS nb")
-    return (
-        cand.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .selectExpr(
-            "vec_a", "vec_b", "na", "nb",
-            f"{dot_sql('spark', 'va', 'vb')} AS dot",
-        )
-        .selectExpr("vec_a", "vec_b", f"{cos_key_sql()} AS cos_key")
-        .filter(F.col("cos_key") >= min_cos_ppm)
+    return _neardup(
+        cand.join(_side(v, "vec_a", "a"), "vec_a").join(_side(v, "vec_b", "b"), "vec_b")
     )
 
 
-def embedding_neardup_exact(emb: DataFrame, min_cos_ppm: int = 350_000) -> DataFrame:
+def embedding_neardup_exact(emb: DataFrame) -> DataFrame:
     """Exhaustive all-pairs variant (recall baseline for tests —
     O(n^2), never the scale path)."""
     v = _vectors(emb)
-    a = v.selectExpr("vec_id AS vec_a", "vs AS va", "norm2 AS na")
-    b = v.selectExpr("vec_id AS vec_b", "vs AS vb", "norm2 AS nb")
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .selectExpr(
-            "vec_a", "vec_b", "na", "nb",
-            f"{dot_sql('spark', 'va', 'vb')} AS dot",
+    return _neardup(
+        _side(v, "vec_a", "a").join(
+            _side(v, "vec_b", "b"), F.col("vec_a") < F.col("vec_b")
         )
-        .selectExpr("vec_a", "vec_b", f"{cos_key_sql()} AS cos_key")
-        .filter(F.col("cos_key") >= min_cos_ppm)
     )
 
 
-def oracle_embedding_neardup_exact(min_cos_ppm: int = 350_000) -> str:
+def oracle_embedding_neardup_exact() -> str:
     """All-pairs cosine >= threshold (mirrors embedding_neardup_exact
     — the default small-scale semantics; the _lsh variant is the
     recall<1 scale path, named so the tradeoff is visible)."""
-    return (
-        f"WITH v AS ({_vectors_cte()}), "
-        f"scored AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, "
-        f"a.na AS na, b.na AS nb, {dot_sql('duckdb', 'a.vs', 'b.vs')} AS dot "
-        f"FROM v a JOIN v b ON a.vec_id < b.vec_id) "
-        f"SELECT vec_a, vec_b, {cos_key_sql()} AS cos_key FROM scored "
-        f"WHERE {cos_key_sql()} >= {min_cos_ppm}"
-    )
+    return _neardup_sql([], "v a JOIN v b ON a.vec_id < b.vec_id")
 
 
-def oracle_embedding_neardup(
-    min_cos_ppm: int = 350_000,
-    tables: int = LSH_TABLES,
-    planes: int = LSH_PLANES,
-) -> str:
+def oracle_embedding_neardup() -> str:
     """Replays the LSH-bucketed candidate generation + exact verify."""
-    sign = _plane_sign_sql()
-    return (
-        f"WITH v AS ({_vectors_cte()}), "
-        f"terms AS (SELECT vec_id, t, j, vs[cast(d + 1 as int)] * {sign} AS term "
-        f"FROM v, range(0, {tables}) tt(t), range(0, {planes}) tj(j), "
-        f"range(0, {DIM}) td(d)), "
-        f"bits AS (SELECT vec_id, t, j, cast(sum(term) >= 0 as bigint) AS bit "
-        f"FROM terms GROUP BY 1, 2, 3), "
-        f"buckets AS (SELECT vec_id, t, cast(sum(bit << cast(j as int)) as bigint) "
-        f"AS bucket FROM bits GROUP BY 1, 2), "
-        f"cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b "
-        f"FROM buckets a JOIN buckets b ON a.t = b.t AND a.bucket = b.bucket "
-        f"AND a.vec_id < b.vec_id), "
-        f"scored AS (SELECT cand.vec_a, cand.vec_b, "
-        f"a.na AS na, b.na AS nb, {dot_sql('duckdb', 'a.vs', 'b.vs')} AS dot "
-        f"FROM cand JOIN v a ON a.vec_id = cand.vec_a "
-        f"JOIN v b ON b.vec_id = cand.vec_b) "
-        f"SELECT vec_a, vec_b, {cos_key_sql()} AS cos_key FROM scored "
-        f"WHERE {cos_key_sql()} >= {min_cos_ppm}"
+    return _neardup_sql(
+        [
+            *_bucket_ctes(),
+            "cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b "
+            "FROM buckets a JOIN buckets b ON a.t = b.t AND a.bucket = b.bucket "
+            "AND a.vec_id < b.vec_id)",
+        ],
+        "cand JOIN v a ON a.vec_id = cand.vec_a JOIN v b ON b.vec_id = cand.vec_b",
     )
 
 
@@ -558,7 +591,7 @@ def oracle_embedding_neardup(
 # subspace into K centroids, store vectors as M one-byte codes, and
 # rank candidates with an asymmetric-distance (ADC) lookup table —
 # the query stays exact, candidates are reconstructed from the
-# codebooks. A 64-dim float vector becomes 4 codes: 64x compression,
+# codebooks. A 64-dim float vector becomes 8 codes: 32x compression,
 # which is what makes a 10^12-vector index fit a cluster at all.
 #
 # Numeric contract: subvector k-means runs on floor-scaled integers
@@ -569,74 +602,60 @@ def oracle_embedding_neardup(
 # integer sum, so the oracle replays bit-for-bit with no epsilon.
 
 PQ_M = 8        # subspaces (production: 8-16 with K=256 codebooks;
-PQ_SUB = DIM // PQ_M   # kept at K=16 here so the oracle's Lloyd
-PQ_K = 16              # replay stays cheap at sf0.01)
-PQ_ITERS = 2
+PQ_K = 16       # kept at K=16 here so the oracle's Lloyd replay
+PQ_ITERS = 2    # stays cheap at sf0.01)
 
 
-def _pq_subvectors(emb: DataFrame, m_sub: int = PQ_M) -> DataFrame:
-    """(vec_id, m, sv[DIM/m_sub]) — floor-scaled integer subvectors."""
-    sub = DIM // m_sub
-    v = emb.selectExpr("vec_id", f"{ivf_scaled_sql('spark')} AS vs")
-    return v.selectExpr(
-        "vec_id", f"explode(sequence(0, {m_sub - 1})) AS m", "vs"
-    ).selectExpr("vec_id", "m", f"slice(vs, m * {sub} + 1, {sub}) AS sv")
+def _subvectors(df: DataFrame, *keys: str) -> DataFrame:
+    """Split each ``vs`` into PQ_M subvectors of DIM // PQ_M dims:
+    ``keys`` + (m, vs)."""
+    sub = DIM // PQ_M
+    return df.selectExpr(
+        *keys, f"explode(sequence(0, {PQ_M - 1})) AS m", "vs"
+    ).selectExpr(*keys, "m", f"slice(vs, m * {sub} + 1, {sub}) AS vs")
 
 
-def _pq_d2_sql(dialect: str, a: str, b: str, dim: int = 0) -> str:
-    """Exact integer squared L2 between two bigint vectors."""
-    d = dim or PQ_SUB
+def _subvectors_sql(src: str, keys: str) -> str:
+    sub = DIM // PQ_M
+    return (
+        f"SELECT {keys}, m, list_transform(range(1, {sub} + 1), "
+        f"i -> s.vs[m * {sub} + i]) AS vs "
+        f"FROM {src} s, range(0, {PQ_M}) mm(m)"
+    )
+
+
+def _residual_sql(dialect: str, a: str, b: str) -> str:
+    """Element-wise integer difference a - b of two DIM vectors."""
+    if dialect == "spark":
+        return f"zip_with({a}, {b}, (x, y) -> x - y)"
+    return f"list_transform(range(1, {DIM} + 1), i -> {a}[i] - {b}[i])"
+
+
+def _pq_d2_sql(dialect: str, a: str, b: str) -> str:
+    """Exact integer squared L2 between two bigint subvectors."""
     if dialect == "spark":
         return (
             f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
             f"cast(0 as bigint), (acc, x) -> acc + x)"
         )
     return (
-        f"cast(list_sum(list_transform(range(1, {d} + 1), "
+        f"cast(list_sum(list_transform(range(1, {DIM // PQ_M} + 1), "
         f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))) as bigint)"
     )
 
 
-def _pq_lloyd(
-    sv: DataFrame, n_codes: int = PQ_K, iters: int = PQ_ITERS,
-    sub: int = PQ_SUB,
-) -> DataFrame:
-    """Fixed Lloyd rounds over an (vec_id, m, sv) subvector table;
-    returns integer codebooks (m, cid, c[sub]). Seeded from the
-    first ``n_codes`` vec_ids — deterministic, shared with the
-    oracle at the module defaults; production scales pass K=256."""
-    cents = sv.filter(F.col("vec_id") < n_codes).selectExpr(
-        "m", "vec_id AS cid", "sv AS s", "cast(1 as bigint) AS n"
-    )
-    for _ in range(iters):
-        scored = sv.join(F.broadcast(cents), "m").selectExpr(
-            "vec_id", "m", "sv", "cid",
-            f"{_sqdist_scaled_sql('spark', 'sv', 's', 'n', sub)} AS d",
-        )
-        win = Window.partitionBy("vec_id", "m").orderBy("d", "cid")
-        assigned = (
-            scored.withColumn("rk", F.row_number().over(win))
-            .filter("rk = 1")
-            .select("vec_id", "m", "sv", "cid")
-        )
-        cents = assigned.groupBy("m", "cid").agg(
-            F.expr(_vec_sum_sql("spark", "sv", sub)).alias("s"),
-            F.count("*").alias("n"),
-        ).localCheckpoint(eager=True)
-    return cents.selectExpr(
-        "m", "cid",
-        "transform(s, x -> cast(floor(cast(x as double) / n) as bigint)) AS c",
-    )
+def _codebooks(sv: DataFrame) -> DataFrame:
+    """(m, cid, c[DIM // PQ_M]): the rounded per-subspace Lloyd centroids
+    of a (vec_id, m, vs) subvector frame."""
+    _, cents = _lloyd(sv, ("m",), DIM // PQ_M, PQ_K, PQ_ITERS)
+    return cents.select("m", "cid", "c")
 
 
-def pq_codebooks(
-    emb: DataFrame, n_codes: int = PQ_K, iters: int = PQ_ITERS,
-    m_sub: int = PQ_M,
-):
-    """Train per-subspace codebooks; returns (subvectors_df,
-    codebooks_df (m, cid, c[DIM/m_sub] integer centroid))."""
-    sv = _pq_subvectors(emb, m_sub).localCheckpoint(eager=True)
-    return sv, _pq_lloyd(sv, n_codes, iters, DIM // m_sub)
+def pq_codebooks(emb: DataFrame):
+    """Train per-subspace codebooks; returns (subvectors (vec_id, m,
+    vs), codebooks (m, cid, c[DIM // PQ_M] integer centroid))."""
+    sv = _subvectors(_scaled(emb, IVF_SCALE), "vec_id").localCheckpoint(eager=True)
+    return sv, _codebooks(sv)
 
 
 def pq_codes(sv: DataFrame, cb: DataFrame) -> DataFrame:
@@ -644,112 +663,81 @@ def pq_codes(sv: DataFrame, cb: DataFrame) -> DataFrame:
     Map-only against the broadcast codebooks (the plan that encodes
     10^12 vectors without a shuffle)."""
     scored = sv.join(F.broadcast(cb), "m").selectExpr(
-        "vec_id", "m", "cid", f"{_pq_d2_sql('spark', 'sv', 'c')} AS d"
+        "vec_id", "m", "cid", f"{_pq_d2_sql('spark', 'vs', 'c')} AS d"
     )
-    win = Window.partitionBy("vec_id", "m").orderBy("d", "cid")
+    return _top_k(scored, ["vec_id", "m"], ("d", "cid"), 1).selectExpr(
+        "vec_id", "m", "cid AS code"
+    )
+
+
+def _pq_ctes(src: str) -> list[str]:
+    """``pq_codebooks`` (centroids ``pq``) over the subvector CTE
+    ``src`` (vec_id, m, vs), then ``pq_codes`` as ``codes``."""
+    ctes, _ = _lloyd_ctes(src, ("m",), DIM // PQ_M, PQ_K, PQ_ITERS, "pq")
+    scored = (
+        f"(SELECT s.vec_id, s.m, pq.cid AS code, "
+        f"{_pq_d2_sql('duckdb', 's.vs', 'pq.c')} AS d "
+        f"FROM {src} s JOIN pq ON pq.m = s.m)"
+    )
+    return [
+        *ctes,
+        f"codes AS MATERIALIZED (SELECT vec_id, m, code FROM "
+        f"({_top_k_sql(scored, ['vec_id', 'm'], ('d', 'code'), 1)}))",
+    ]
+
+
+def _lut(q: DataFrame, cb: DataFrame, *keys: str) -> DataFrame:
+    """ADC lookup table: ``keys`` + (m, code, d), d the exact squared
+    L2 from query subvector ``vs`` to codebook entry ``code``."""
+    return q.join(cb.withColumnRenamed("cid", "code"), "m").selectExpr(
+        *keys, "m", "code", f"{_pq_d2_sql('spark', 'vs', 'c')} AS d"
+    )
+
+
+def _lut_sql(q: str, keys: str) -> str:
     return (
-        scored.withColumn("rk", F.row_number().over(win))
-        .filter("rk = 1")
-        .selectExpr("vec_id", "m", "cid AS code")
+        f"lut AS MATERIALIZED (SELECT {keys}, q.m, pq.cid AS code, "
+        f"{_pq_d2_sql('duckdb', 'q.vs', 'pq.c')} AS d "
+        f"FROM {q} q JOIN pq ON pq.m = q.m)"
     )
 
 
-def pq_topk(
-    emb: DataFrame, k: int = 5, n_queries: int = N_QUERIES,
-    n_codes: int = PQ_K, iters: int = PQ_ITERS, m_sub: int = PQ_M,
-) -> DataFrame:
+def pq_topk(emb: DataFrame) -> DataFrame:
     """PQ-ADC top-k: (qid, rank, vec_id, adc) with adc the exact
     integer asymmetric distance. Query subvectors stay exact; the
-    per-query lookup table (n_queries x PQ_M x PQ_K rows) broadcasts,
+    per-query lookup table (N_QUERIES x PQ_M x PQ_K rows) broadcasts,
     codes join it map-side, and the only shuffle is the partial-agg
-    sum over M=4 rows per (qid, vec_id)."""
-    sv, cb = pq_codebooks(emb, n_codes, iters, m_sub)
+    sum over PQ_M rows per (qid, vec_id)."""
+    sv, cb = pq_codebooks(emb)
     codes = pq_codes(sv, cb)
-    q = sv.filter(F.col("vec_id") < n_queries).selectExpr(
-        "vec_id AS qid", "m", "sv AS qsv"
-    )
-    lut = q.join(cb, "m").selectExpr(
-        "qid", "m", "cid AS code", f"{_pq_d2_sql('spark', 'qsv', 'c')} AS d"
-    )
+    q = sv.filter(F.col("vec_id") < N_QUERIES).withColumnRenamed("vec_id", "qid")
     scored = (
-        codes.join(F.broadcast(lut), ["m", "code"])
+        codes.join(F.broadcast(_lut(q, cb, "qid")), ["m", "code"])
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", "vec_id")
         .agg(F.sum("d").alias("adc"))
     )
-    win = Window.partitionBy("qid").orderBy("adc", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "vec_id", "adc")
-    )
+    return _ranked(scored, BY_ADC)
 
 
-def oracle_pq_topk(k: int = 5, n_queries: int = N_QUERIES) -> str:
-    """Replays training (materialized Lloyd CTE stages per CLAUDE.md's
-    DuckDB-inlining rule), rounded codebooks, encoding and ADC."""
-    vs = ivf_scaled_sql("duckdb")
-    sub = (
-        f"list_transform(range(1, {PQ_SUB} + 1), "
-        f"i -> vs[m * {PQ_SUB} + i])"
-    )
-    d_rat = _sqdist_scaled_sql("duckdb", "s2.sv", "c.s", "c.n", PQ_SUB)
-    ctes = [
-        f"v AS MATERIALIZED (SELECT vec_id, {vs} AS vs FROM embeddings)",
-        f"sv AS MATERIALIZED (SELECT vec_id, m, {sub} AS sv "
-        f"FROM v, range(0, {PQ_M}) mm(m))",
-        f"c0 AS MATERIALIZED (SELECT m, vec_id AS cid, sv AS s, "
-        f"cast(1 as bigint) AS n FROM sv WHERE vec_id < {PQ_K})",
-    ]
-    prev = "c0"
-    for it in range(PQ_ITERS):
-        a, c = f"a{it}", f"c{it + 1}"
-        ctes.append(
-            f"{a} AS MATERIALIZED (SELECT vec_id, m, sv, cid FROM ("
-            f"SELECT s2.vec_id, s2.m, s2.sv, c.cid, "
-            f"row_number() OVER (PARTITION BY s2.vec_id, s2.m "
-            f"ORDER BY {d_rat}, c.cid) AS rk "
-            f"FROM sv s2 JOIN {prev} c ON c.m = s2.m) WHERE rk = 1)"
-        )
-        ctes.append(
-            f"{c} AS MATERIALIZED (SELECT m, cid, "
-            f"list(dsum ORDER BY dim) AS s, any_value(nn) AS n FROM ("
-            f"SELECT m, cid, dim, cast(sum(sv[dim]) as bigint) AS dsum, "
-            f"count(*) AS nn FROM {a}, range(1, {PQ_SUB} + 1) t(dim) "
-            f"GROUP BY m, cid, dim) GROUP BY m, cid)"
-        )
-        prev = c
-    ctes.append(
-        f"cb AS MATERIALIZED (SELECT m, cid, "
-        f"list_transform({prev}.s, x -> "
-        f"cast(floor(cast(x as double) / n) as bigint)) AS c FROM {prev})"
-    )
-    enc_d = _pq_d2_sql("duckdb", "s2.sv", "cb.c")
-    ctes.append(
-        f"codes AS MATERIALIZED (SELECT vec_id, m, code FROM ("
-        f"SELECT s2.vec_id, s2.m, cb.cid AS code, "
-        f"row_number() OVER (PARTITION BY s2.vec_id, s2.m "
-        f"ORDER BY {enc_d}, cb.cid) AS rk "
-        f"FROM sv s2 JOIN cb ON cb.m = s2.m) WHERE rk = 1)"
-    )
-    lut_d = _pq_d2_sql("duckdb", "q.sv", "cb.c")
-    ctes.append(
-        f"lut AS MATERIALIZED (SELECT q.vec_id AS qid, q.m, "
-        f"cb.cid AS code, {lut_d} AS d "
-        f"FROM sv q JOIN cb ON cb.m = q.m WHERE q.vec_id < {n_queries})"
-    )
-    ctes.append(
-        "scored AS (SELECT lut.qid, codes.vec_id, "
-        "cast(sum(lut.d) as bigint) AS adc "
-        "FROM codes JOIN lut ON lut.m = codes.m AND lut.code = codes.code "
-        "AND codes.vec_id <> lut.qid GROUP BY 1, 2)"
-    )
-    return (
-        "WITH " + ", ".join(ctes)
-        + f" SELECT qid, cast(rank as int) AS rank, vec_id, adc FROM ("
-        f"SELECT qid, vec_id, adc, row_number() OVER ("
-        f"PARTITION BY qid ORDER BY adc, vec_id) AS rank FROM scored) "
-        f"WHERE rank <= {k}"
+def oracle_pq_topk() -> str:
+    """Replays training (the materialized Lloyd chain), rounded
+    codebooks, encoding and ADC."""
+    return _ranked_sql(
+        [
+            f"sv AS MATERIALIZED "
+            f"({_subvectors_sql(f'({_scaled_cte(IVF_SCALE)})', 'vec_id')})",
+            *_pq_ctes("sv"),
+            _lut_sql(
+                f"(SELECT vec_id AS qid, m, vs FROM sv WHERE vec_id < {N_QUERIES})",
+                "q.qid",
+            ),
+            "scored AS (SELECT lut.qid, codes.vec_id, "
+            "cast(sum(lut.d) as bigint) AS adc "
+            "FROM codes JOIN lut ON lut.m = codes.m AND lut.code = codes.code "
+            "AND codes.vec_id <> lut.qid GROUP BY 1, 2)",
+        ],
+        BY_ADC,
     )
 
 
@@ -762,66 +750,33 @@ def oracle_pq_topk(k: int = 5, n_queries: int = N_QUERIES) -> str:
 # the whole composition keeps the bit-exact oracle property.
 
 
-def ivfpq_topk(
-    emb: DataFrame, k: int = 5, n_queries: int = N_QUERIES,
-    probes: int = IVF_PROBES, n_clusters: int = IVF_K,
-    n_codes: int = PQ_K, iters: int = PQ_ITERS,
-) -> DataFrame:
+def ivfpq_topk(emb: DataFrame) -> DataFrame:
     """(qid, rank, vec_id, adc): top-k by integer residual-ADC within
     the probed coarse clusters. Scale shape: coarse centroids and PQ
     codebooks broadcast; encode is map-only; the probe-side candidate
-    join is an equi-join on cid; the ADC sum map-side combines.
-    ``n_clusters``/``n_codes``/``iters`` are the production scale
-    knobs (defaults match the sf0.01 oracle replay)."""
-    assigned, cents = ivf_assignments(emb, n_clusters, iters)
+    join is an equi-join on cid; the ADC sum map-side combines."""
+    assigned, cents = _coarse(emb)
     assigned = assigned.localCheckpoint(eager=True)
-    ccent = cents.selectExpr(
-        "cid",
-        "transform(s, x -> cast(floor(cast(x as double) / n) as bigint)) AS cc",
-    )
+    ccent = cents.select("cid", "c")
     res = assigned.join(F.broadcast(ccent), "cid").selectExpr(
-        "vec_id", "cid", "zip_with(vs, cc, (a, b) -> a - b) AS rv"
+        "vec_id", "cid", f"{_residual_sql('spark', 'vs', 'c')} AS vs"
     )
-    rsv = res.selectExpr(
-        "vec_id", "cid", f"explode(sequence(0, {PQ_M - 1})) AS m", "rv"
-    ).selectExpr(
-        "vec_id", "cid", "m",
-        f"slice(rv, m * {PQ_SUB} + 1, {PQ_SUB}) AS sv",
-    ).localCheckpoint(eager=True)
-    cb = _pq_lloyd(rsv.select("vec_id", "m", "sv"), n_codes, iters)
-    codes = pq_codes(rsv.select("vec_id", "m", "sv"), cb)
+    rsv = _subvectors(res, "vec_id", "cid").localCheckpoint(eager=True)
+    sv = rsv.select("vec_id", "m", "vs")
+    cb = _codebooks(sv)
+    codes = pq_codes(sv, cb)
     # coarse probe (same rational-centroid distances as ann_ivf_topk)
-    q = assigned.filter(F.col("vec_id") < n_queries).selectExpr(
+    q = assigned.filter(F.col("vec_id") < N_QUERIES).selectExpr(
         "vec_id AS qid", "vs AS qv"
     )
-    qscored = q.crossJoin(F.broadcast(cents)).selectExpr(
-        "qid", "cid", f"{_sqdist_scaled_sql('spark', 'qv', 's', 'n')} AS d"
-    )
-    win = Window.partitionBy("qid").orderBy("d", "cid")
-    probe = (
-        qscored.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= probes)
-        .select("qid", "cid")
-    )
+    probe = _probe(q, cents)
     # per-(query, probed-cluster) residual LUT
     qres = (
         probe.join(q, "qid")
         .join(F.broadcast(ccent), "cid")
-        .selectExpr(
-            "qid", "cid",
-            f"explode(sequence(0, {PQ_M - 1})) AS m",
-            "zip_with(qv, cc, (a, b) -> a - b) AS qr",
-        )
-        .selectExpr(
-            "qid", "cid", "m",
-            f"slice(qr, m * {PQ_SUB} + 1, {PQ_SUB}) AS qsv",
-        )
+        .selectExpr("qid", "cid", f"{_residual_sql('spark', 'qv', 'c')} AS vs")
     )
-    cbr = cb.selectExpr("m", "cid AS code", "c")
-    lut = qres.join(cbr, "m").selectExpr(
-        "qid", "cid", "m", "code",
-        f"{_pq_d2_sql('spark', 'qsv', 'c')} AS d",
-    )
+    lut = _lut(_subvectors(qres, "qid", "cid"), cb, "qid", "cid")
     cand = (
         probe.join(assigned.select("vec_id", "cid"), "cid")
         .filter(F.col("vec_id") != F.col("qid"))
@@ -833,136 +788,41 @@ def ivfpq_topk(
         .groupBy("qid", "vec_id")
         .agg(F.sum("d").alias("adc"))
     )
-    rwin = Window.partitionBy("qid").orderBy("adc", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(rwin))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "vec_id", "adc")
-    )
+    return _ranked(scored, BY_ADC)
 
 
-def oracle_ivfpq_topk(
-    k: int = 5, n_queries: int = N_QUERIES, probes: int = IVF_PROBES
-) -> str:
+def oracle_ivfpq_topk() -> str:
     """Replays the full composition: coarse Lloyd -> rounded coarse
     centroids -> integer residuals -> per-subspace PQ Lloyd -> encode
     -> probe -> residual LUT -> integer ADC. All stages MATERIALIZED."""
-    vs = ivf_scaled_sql("duckdb")
-    d = _sqdist_scaled_sql("duckdb", "v.vs", "c.s", "c.n")
-    qd = _sqdist_scaled_sql("duckdb", "q.vs", "c.s", "c.n")
-    ctes = [
-        f"v AS MATERIALIZED (SELECT vec_id, {vs} AS vs FROM embeddings)",
-        f"c0 AS MATERIALIZED (SELECT vec_id AS cid, vs AS s, "
-        f"cast(1 as bigint) AS n FROM v WHERE vec_id < {IVF_K})",
-    ]
-    prev = "c0"
-    for it in range(IVF_ITERS):
-        a, c = f"a{it}", f"c{it + 1}"
-        ctes.append(
-            f"{a} AS MATERIALIZED (SELECT vec_id, vs, cid FROM ("
-            f"SELECT v.vec_id, v.vs, c.cid, "
-            f"row_number() OVER (PARTITION BY v.vec_id ORDER BY {d}, c.cid) AS rk "
-            f"FROM v, {prev} c) WHERE rk = 1)"
-        )
-        ctes.append(
-            f"{c} AS MATERIALIZED (SELECT cid, list(sv ORDER BY dim) AS s, "
-            f"any_value(nn) AS n FROM ("
-            f"SELECT cid, dim, cast(sum(vs[dim]) as bigint) AS sv, "
-            f"count(*) AS nn "
-            f"FROM {a}, range(1, {DIM} + 1) t(dim) GROUP BY cid, dim) "
-            f"GROUP BY cid)"
-        )
-        prev = c
-    final_a, final_c = f"a{IVF_ITERS - 1}", f"c{IVF_ITERS}"
-    ctes.append(
-        f"ccent AS MATERIALIZED (SELECT cid, list_transform(s, x -> "
-        f"cast(floor(cast(x as double) / n) as bigint)) AS cc FROM {final_c})"
+    ctes, a = _ivf_ctes()
+    res = (
+        f"(SELECT a.vec_id, a.cid, {_residual_sql('duckdb', 'a.vs', 'ivf.c')} "
+        f"AS vs FROM {a} a JOIN ivf ON ivf.cid = a.cid)"
     )
-    ctes.append(
-        f"res AS MATERIALIZED (SELECT a.vec_id, a.cid, "
-        f"list_transform(range(1, {DIM} + 1), i -> a.vs[i] - ccent.cc[i]) AS rv "
-        f"FROM {final_a} a JOIN ccent ON ccent.cid = a.cid)"
+    qres = (
+        f"(SELECT probe.qid, probe.cid, "
+        f"{_residual_sql('duckdb', 'q.vs', 'ivf.c')} AS vs FROM probe "
+        f"JOIN iv q ON q.vec_id = probe.qid JOIN ivf ON ivf.cid = probe.cid)"
     )
-    ctes.append(
-        f"rsv AS MATERIALIZED (SELECT vec_id, cid, m, "
-        f"list_transform(range(1, {PQ_SUB} + 1), i -> rv[m * {PQ_SUB} + i]) AS sv "
-        f"FROM res, range(0, {PQ_M}) mm(m))"
-    )
-    # per-subspace PQ Lloyd over residuals
-    pd_ = _sqdist_scaled_sql("duckdb", "s2.sv", "c.s", "c.n", PQ_SUB)
-    ctes.append(
-        f"p0 AS MATERIALIZED (SELECT m, vec_id AS cid, sv AS s, "
-        f"cast(1 as bigint) AS n FROM rsv WHERE vec_id < {PQ_K})"
-    )
-    prev = "p0"
-    for it in range(PQ_ITERS):
-        a, c = f"pa{it}", f"pc{it + 1}"
-        ctes.append(
-            f"{a} AS MATERIALIZED (SELECT vec_id, m, sv, cid FROM ("
-            f"SELECT s2.vec_id, s2.m, s2.sv, c.cid, "
-            f"row_number() OVER (PARTITION BY s2.vec_id, s2.m "
-            f"ORDER BY {pd_}, c.cid) AS rk "
-            f"FROM rsv s2 JOIN {prev} c ON c.m = s2.m) WHERE rk = 1)"
-        )
-        ctes.append(
-            f"{c} AS MATERIALIZED (SELECT m, cid, "
-            f"list(dsum ORDER BY dim) AS s, any_value(nn) AS n FROM ("
-            f"SELECT m, cid, dim, cast(sum(sv[dim]) as bigint) AS dsum, "
-            f"count(*) AS nn FROM {a}, range(1, {PQ_SUB} + 1) t(dim) "
-            f"GROUP BY m, cid, dim) GROUP BY m, cid)"
-        )
-        prev = c
-    ctes.append(
-        f"cb AS MATERIALIZED (SELECT m, cid, "
-        f"list_transform({prev}.s, x -> "
-        f"cast(floor(cast(x as double) / n) as bigint)) AS c FROM {prev})"
-    )
-    enc_d = _pq_d2_sql("duckdb", "s2.sv", "cb.c")
-    ctes.append(
-        f"codes AS MATERIALIZED (SELECT vec_id, m, code FROM ("
-        f"SELECT s2.vec_id, s2.m, cb.cid AS code, "
-        f"row_number() OVER (PARTITION BY s2.vec_id, s2.m "
-        f"ORDER BY {enc_d}, cb.cid) AS rk "
-        f"FROM rsv s2 JOIN cb ON cb.m = s2.m) WHERE rk = 1)"
-    )
-    ctes.append(
-        f"probe AS MATERIALIZED (SELECT qid, cid FROM ("
-        f"SELECT q.vec_id AS qid, c.cid, "
-        f"row_number() OVER (PARTITION BY q.vec_id ORDER BY {qd}, c.cid) AS rk "
-        f"FROM v q, {final_c} c WHERE q.vec_id < {n_queries}) WHERE rk <= {probes})"
-    )
-    ctes.append(
-        f"qres AS MATERIALIZED (SELECT probe.qid, probe.cid, m, "
-        f"list_transform(range(1, {PQ_SUB} + 1), "
-        f"i -> q.vs[m * {PQ_SUB} + i] - ccent.cc[m * {PQ_SUB} + i]) AS qsv "
-        f"FROM probe JOIN v q ON q.vec_id = probe.qid "
-        f"JOIN ccent ON ccent.cid = probe.cid, range(0, {PQ_M}) mm(m))"
-    )
-    lut_d = _pq_d2_sql("duckdb", "qres.qsv", "cb.c")
-    ctes.append(
-        f"lut AS MATERIALIZED (SELECT qid, qres.cid, qres.m, "
-        f"cb.cid AS code, {lut_d} AS d "
-        f"FROM qres JOIN cb ON cb.m = qres.m)"
-    )
-    ctes.append(
-        f"cand AS MATERIALIZED (SELECT probe.qid, probe.cid, a.vec_id "
-        f"FROM probe JOIN {final_a} a ON a.cid = probe.cid "
-        f"AND a.vec_id <> probe.qid)"
-    )
-    ctes.append(
-        "scored AS (SELECT cand.qid, cand.vec_id, "
-        "cast(sum(lut.d) as bigint) AS adc "
-        "FROM cand JOIN codes ON codes.vec_id = cand.vec_id "
-        "JOIN lut ON lut.qid = cand.qid AND lut.cid = cand.cid "
-        "AND lut.m = codes.m AND lut.code = codes.code "
-        "GROUP BY 1, 2)"
-    )
-    return (
-        "WITH " + ", ".join(ctes)
-        + f" SELECT qid, cast(rank as int) AS rank, vec_id, adc FROM ("
-        f"SELECT qid, vec_id, adc, row_number() OVER ("
-        f"PARTITION BY qid ORDER BY adc, vec_id) AS rank FROM scored) "
-        f"WHERE rank <= {k}"
+    return _ranked_sql(
+        [
+            *ctes,
+            f"rsv AS MATERIALIZED ({_subvectors_sql(res, 'vec_id, cid')})",
+            *_pq_ctes("rsv"),
+            _probe_cte(),
+            _lut_sql(f"({_subvectors_sql(qres, 'qid, cid')})", "q.qid, q.cid"),
+            f"cand AS MATERIALIZED (SELECT probe.qid, probe.cid, a.vec_id "
+            f"FROM probe JOIN {a} a ON a.cid = probe.cid "
+            f"AND a.vec_id <> probe.qid)",
+            "scored AS (SELECT cand.qid, cand.vec_id, "
+            "cast(sum(lut.d) as bigint) AS adc "
+            "FROM cand JOIN codes ON codes.vec_id = cand.vec_id "
+            "JOIN lut ON lut.qid = cand.qid AND lut.cid = cand.cid "
+            "AND lut.m = codes.m AND lut.code = codes.code "
+            "GROUP BY 1, 2)",
+        ],
+        BY_ADC,
     )
 
 
@@ -1018,19 +878,23 @@ def embedding_gram(emb: DataFrame) -> DataFrame:
     )
 
 
+def _gram_ctes() -> list[str]:
+    """``embedding_gram`` in DuckDB as the CTE ``g`` (j, k, gram)."""
+    return [
+        f"va AS MATERIALIZED (SELECT vec_id, list_prepend(cast({GRAM_SCALE} "
+        f"as bigint), {scaled_vec_sql('duckdb', GRAM_SCALE)}) AS vs "
+        f"FROM embeddings)",
+        f"ea AS (SELECT vec_id, unnest(vs) AS val, "
+        f"unnest(range(0, {DIM + 1})) AS j FROM va)",
+        "g AS MATERIALIZED (SELECT a.j AS j, b.j AS k, "
+        "cast(sum(a.val * b.val) as bigint) AS gram "
+        "FROM ea a JOIN ea b ON a.vec_id = b.vec_id AND a.j <= b.j "
+        "GROUP BY 1, 2)",
+    ]
+
+
 def oracle_embedding_gram() -> str:
-    lam = f"x -> cast(floor(cast(x as double) * {GRAM_SCALE}.0E0) as bigint)"
-    return (
-        f"WITH v AS (SELECT vec_id, list_prepend(cast({GRAM_SCALE} as "
-        f"bigint), list_transform(embedding, {lam})) AS vs "
-        f"FROM embeddings), "
-        f"e AS (SELECT vec_id, unnest(vs) AS val, "
-        f"unnest(range(0, {DIM + 1})) AS j FROM v) "
-        f"SELECT a.j AS j, b.j AS k, "
-        f"cast(sum(a.val * b.val) as bigint) AS gram "
-        f"FROM e a JOIN e b ON a.vec_id = b.vec_id AND a.j <= b.j "
-        f"GROUP BY 1, 2"
-    )
+    return "WITH " + ", ".join(_gram_ctes()) + " SELECT j, k, gram FROM g"
 
 
 # ---------------------------------------------------------------------------
@@ -1047,14 +911,9 @@ def oracle_embedding_gram() -> str:
 # neardup REPORTS pairs; semdedup DECIDES which rows survive.
 
 
-def semdedup(
-    emb: DataFrame,
-    n_clusters: int = IVF_K,
-    iters: int = IVF_ITERS,
-    min_cos_ppm: int = 350_000,
-) -> DataFrame:
+def semdedup(emb: DataFrame) -> DataFrame:
     """(vec_id, cid, kept): kept=0 iff some same-cluster vector with
-    cosine >= threshold ranks higher under the keeper rule.
+    cosine >= MIN_COS_PPM ranks higher under the keeper rule.
 
     Keeper rule (the paper's default, "keep examples far from the
     centroid"): within a near-duplicate pair the member FARTHER from
@@ -1063,14 +922,12 @@ def semdedup(
     compare as the pure-integer numerators ||n*v - S||^2 — exact,
     order-free, and bit-replayable by the SQL oracle.
 
-    Scale posture: Lloyd rounds come from ivf_assignments (K-row
-    centroid broadcast, map-only scoring); the dedup stage is one
-    equi-join on cid (cluster-size-bounded by choosing K ~ n/avg_sz)
-    plus a K-row broadcast for the centroid keys. ``n_clusters`` /
-    ``iters`` / ``min_cos_ppm`` are the run-scale knobs; module
-    defaults match the sf0.01 oracle replay.
+    Scale posture: the Lloyd rounds are the IVF coarse quantizer's
+    (K-row centroid broadcast, map-only scoring); the dedup stage is
+    one equi-join on cid (cluster-size-bounded by choosing IVF_K ~
+    n/avg_sz) plus a K-row broadcast for the centroid keys.
     """
-    assigned, cents = ivf_assignments(emb, n_clusters, iters)
+    assigned, cents = _coarse(emb)
     num = _sqdist_num_sql("spark", "vs", "s", "n")
     keyed = assigned.join(F.broadcast(cents), "cid").selectExpr(
         "vec_id", "cid", f"{num} AS ckey"
@@ -1082,21 +939,18 @@ def semdedup(
     # lineage out of both join sides.
     items = (
         keyed.join(v, "vec_id")
-        .select("vec_id", "cid", "ckey", "vs", "norm2")
+        .selectExpr("vec_id", "cid", "ckey", "vs AS va", "norm2 AS na")
         .localCheckpoint(eager=True)
     )
     b = items.selectExpr(
-        "vec_id AS vec_b", "cid", "ckey AS ckey_b", "vs AS vs_b",
-        "norm2 AS nb",
+        "vec_id AS vec_b", "cid", "ckey AS ckey_b", "va AS vb", "na AS nb"
     )
     removed = (
-        items.join(b, "cid")
-        .where(F.col("vec_id") != F.col("vec_b"))
-        .selectExpr(
-            "vec_id", "ckey", "vec_b", "ckey_b", "norm2 AS na", "nb",
-            f"{dot_sql('spark', 'vs', 'vs_b')} AS dot",
+        _cosine(
+            items.join(b, "cid").where(F.col("vec_id") != F.col("vec_b")),
+            "vec_id", "ckey", "vec_b", "ckey_b",
         )
-        .where(F.expr(cos_key_sql()) >= min_cos_ppm)
+        .where(F.col("cos_key") >= MIN_COS_PPM)
         .where("ckey_b > ckey OR (ckey_b = ckey AND vec_b > vec_id)")
         .select("vec_id")
         .distinct()
@@ -1108,38 +962,27 @@ def semdedup(
     )
 
 
-def oracle_semdedup(
-    n_clusters: int = IVF_K,
-    iters: int = IVF_ITERS,
-    min_cos_ppm: int = 350_000,
-) -> str:
-    """Full DuckDB replay: the ivf_assignments Lloyd chain, then the
+def oracle_semdedup() -> str:
+    """Full DuckDB replay: the coarse Lloyd chain, then the
     within-cluster pair prune. ``items`` is MATERIALIZED — it is
     referenced three times and DuckDB 1.0 would otherwise re-inline
-    the whole Lloyd chain per reference."""
-    ctes, final_a, final_c = _oracle_ivf_ctes(n_clusters, iters)
+    its inputs per reference."""
+    ctes, a = _ivf_ctes()
     num = _sqdist_num_sql("duckdb", "a.vs", "c.s", "c.n")
-    ctes.append(
+    pairs = _cosine_sql(
+        "a.vec_id, a.ckey, b.vec_id AS vec_b, b.ckey AS ckey_b",
+        "items a JOIN items b ON a.cid = b.cid AND a.vec_id <> b.vec_id",
+    )
+    ctes += [
         f"keyed AS (SELECT a.vec_id, a.cid, {num} AS ckey "
-        f"FROM {final_a} a JOIN {final_c} c ON a.cid = c.cid)"
-    )
-    ctes.append(f"v6 AS ({_vectors_cte()})")
-    ctes.append(
+        f"FROM {a} a JOIN ivf c ON a.cid = c.cid)",
+        f"v AS ({_vectors_cte()})",
         "items AS MATERIALIZED (SELECT k.vec_id, k.cid, k.ckey, "
-        "v6.vs, v6.na FROM keyed k JOIN v6 ON v6.vec_id = k.vec_id)"
-    )
-    dot = dot_sql("duckdb", "a.vs", "b.vs")
-    ctes.append(
-        f"p AS (SELECT a.vec_id AS vec_id, a.ckey AS ckey, "
-        f"b.vec_id AS vec_b, b.ckey AS ckey_b, a.na AS na, b.na AS nb, "
-        f"{dot} AS dot FROM items a JOIN items b "
-        f"ON a.cid = b.cid AND a.vec_id <> b.vec_id)"
-    )
-    ctes.append(
-        f"rem AS (SELECT DISTINCT vec_id FROM p "
-        f"WHERE {cos_key_sql()} >= {min_cos_ppm} "
-        f"AND (ckey_b > ckey OR (ckey_b = ckey AND vec_b > vec_id)))"
-    )
+        "v.vs, v.na FROM keyed k JOIN v ON v.vec_id = k.vec_id)",
+        f"rem AS (SELECT DISTINCT vec_id FROM ({pairs}) "
+        f"WHERE cos_key >= {MIN_COS_PPM} "
+        f"AND (ckey_b > ckey OR (ckey_b = ckey AND vec_b > vec_id)))",
+    ]
     return (
         "WITH " + ", ".join(ctes)
         + " SELECT items.vec_id, items.cid, "
@@ -1160,49 +1003,20 @@ def oracle_semdedup(
 N_NEG_CLASSES = 7
 
 
-def hard_negatives(
-    emb: DataFrame, k: int = 5, n_queries: int = N_QUERIES,
-    n_classes: int = N_NEG_CLASSES,
-) -> DataFrame:
+def hard_negatives(emb: DataFrame) -> DataFrame:
     """(qid, rank, vec_id, cos_key) — top-k nearest with a different
-    label (label = vec_id % n_classes, the deterministic class)."""
-    v = _vectors(emb).withColumn(
-        "label", F.expr(f"vec_id % {n_classes}")
-    )
-    q = v.filter(F.col("vec_id") < n_queries).selectExpr(
-        "vec_id AS qid", "vs AS qv", "norm2 AS na", "label AS qlabel"
-    )
-    scored = (
-        v.join(F.broadcast(q), F.col("label") != F.col("qlabel"))
-        .selectExpr(
-            "qid", "vec_id", "na", "norm2 AS nb",
-            f"{dot_sql('spark', 'qv', 'vs')} AS dot",
-        )
-        .selectExpr("qid", "vec_id", f"{cos_key_sql()} AS cos_key")
-    )
-    win = Window.partitionBy("qid").orderBy(F.desc("cos_key"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "vec_id", "cos_key")
-    )
+    label (label = vec_id % N_NEG_CLASSES, the deterministic class)."""
+    n = N_NEG_CLASSES
+    pairs = _query_pairs(_vectors(emb), f"vec_id % {n} != qid % {n}")
+    return _ranked(_cosine(pairs, "qid", "vec_id"))
 
 
-def oracle_hard_negatives(
-    k: int = 5, n_queries: int = N_QUERIES,
-    n_classes: int = N_NEG_CLASSES,
-) -> str:
-    return (
-        f"WITH v AS ({_vectors_cte()}), "
-        f"scored AS (SELECT q.vec_id AS qid, c.vec_id, q.na AS na, "
-        f"c.na AS nb, {dot_sql('duckdb', 'q.vs', 'c.vs')} AS dot "
-        f"FROM v q JOIN v c ON q.vec_id < {n_queries} "
-        f"AND c.vec_id % {n_classes} <> q.vec_id % {n_classes}), "
-        f"keyed AS (SELECT qid, vec_id, {cos_key_sql()} AS cos_key, "
-        f"row_number() OVER (PARTITION BY qid ORDER BY {cos_key_sql()} "
-        f"DESC, vec_id) AS rank FROM scored) "
-        f"SELECT qid, cast(rank as int) AS rank, vec_id, cos_key "
-        f"FROM keyed WHERE rank <= {k}"
+def oracle_hard_negatives() -> str:
+    n = N_NEG_CLASSES
+    return _cos_topk_sql(
+        [],
+        f"v a JOIN v b ON a.vec_id < {N_QUERIES} "
+        f"AND b.vec_id % {n} <> a.vec_id % {n}",
     )
 
 
@@ -1217,17 +1031,13 @@ def oracle_hard_negatives(
 # either engine. Completes the quantization family next to PQ / IVF /
 # IVF-PQ / LSH.
 
-SQ_DIM = 64
-SQ_TOPK = 5
+BY_ADC_KEY = ("adc_key DESC", "vec_id")
 
 
-def sq8_topk(
-    emb: DataFrame, k: int = SQ_TOPK, n_queries: int = N_QUERIES,
-) -> DataFrame:
+def sq8_topk(emb: DataFrame) -> DataFrame:
     """(qid, rank, vec_id, adc_key): asymmetric dot between exact
     queries and SQ8-reconstructed corpus codes (x255 scale)."""
-    v = emb.selectExpr("vec_id", f"{scaled_vec_sql('spark')} AS vs")
-    dims = v.select(
+    dims = _scaled(emb).select(
         "vec_id", F.posexplode("vs").alias("pos0", "val")
     ).selectExpr("vec_id", "pos0 + 1 AS pos", "val")
     stats = dims.groupBy("pos").agg(
@@ -1241,7 +1051,7 @@ def sq8_topk(
             "((255 * (val - mn)) div (mx - mn)) * (mx - mn) END AS recon255",
         )
     )
-    q = dims.filter(F.col("vec_id") < n_queries).selectExpr(
+    q = dims.filter(F.col("vec_id") < N_QUERIES).selectExpr(
         "vec_id AS qid", "pos", "val AS qval"
     )
     scored = (
@@ -1250,111 +1060,69 @@ def sq8_topk(
         .groupBy("qid", "vec_id")
         .agg(F.sum(F.expr("qval * recon255")).alias("adc_key"))
     )
-    win = Window.partitionBy("qid").orderBy(F.desc("adc_key"), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "vec_id", "adc_key")
-    )
+    return _ranked(scored, BY_ADC_KEY)
 
 
-def oracle_sq8_topk(k: int = SQ_TOPK, n_queries: int = N_QUERIES) -> str:
-    vs = scaled_vec_sql("duckdb")
-    return (
-        f"WITH v AS MATERIALIZED (SELECT vec_id, {vs} AS vs "
-        f"FROM embeddings), "
-        f"dims AS MATERIALIZED (SELECT vec_id, i AS pos, vs[i] AS val "
-        f"FROM v, range(1, {SQ_DIM} + 1) t(i)), "
-        f"stats AS MATERIALIZED (SELECT pos, min(val) AS mn, "
-        f"max(val) AS mx FROM dims GROUP BY 1), "
-        f"recon AS MATERIALIZED (SELECT vec_id, dims.pos, "
-        f"CASE WHEN mx = mn THEN mn * 255 ELSE mn * 255 + "
-        f"((255 * (val - mn)) // (mx - mn)) * (mx - mn) END AS recon255 "
-        f"FROM dims JOIN stats ON stats.pos = dims.pos), "
-        f"q AS (SELECT vec_id AS qid, pos, val AS qval FROM dims "
-        f"WHERE vec_id < {n_queries}), "
-        f"scored AS (SELECT qid, vec_id, "
-        f"cast(sum(qval * recon255) as bigint) AS adc_key "
-        f"FROM recon JOIN q ON q.pos = recon.pos "
-        f"WHERE vec_id <> qid GROUP BY 1, 2), "
-        f"ranked AS (SELECT qid, vec_id, adc_key, row_number() OVER ("
-        f"PARTITION BY qid ORDER BY adc_key DESC, vec_id) AS rank "
-        f"FROM scored) "
-        f"SELECT qid, cast(rank as int) AS rank, vec_id, adc_key "
-        f"FROM ranked WHERE rank <= {k}"
+def oracle_sq8_topk() -> str:
+    return _ranked_sql(
+        [
+            f"v AS MATERIALIZED ({_scaled_cte()})",
+            f"dims AS MATERIALIZED (SELECT vec_id, i AS pos, vs[i] AS val "
+            f"FROM v, range(1, {DIM} + 1) t(i))",
+            "stats AS MATERIALIZED (SELECT pos, min(val) AS mn, "
+            "max(val) AS mx FROM dims GROUP BY 1)",
+            "recon AS MATERIALIZED (SELECT vec_id, dims.pos, "
+            "CASE WHEN mx = mn THEN mn * 255 ELSE mn * 255 + "
+            "((255 * (val - mn)) // (mx - mn)) * (mx - mn) END AS recon255 "
+            "FROM dims JOIN stats ON stats.pos = dims.pos)",
+            f"q AS (SELECT vec_id AS qid, pos, val AS qval FROM dims "
+            f"WHERE vec_id < {N_QUERIES})",
+            "scored AS (SELECT qid, vec_id, "
+            "cast(sum(qval * recon255) as bigint) AS adc_key "
+            "FROM recon JOIN q ON q.pos = recon.pos "
+            "WHERE vec_id <> qid GROUP BY 1, 2)",
+        ],
+        BY_ADC_KEY,
     )
 
 
 # ---------------------------------------------------------------------------
 # two-stage truncated-dimension rerank (Matryoshka-style coarse pass,
 # Kusupati et al. 2022: rank on a dimension PREFIX, exact-rerank the
-# shortlist). The coarse key reads only the first SQ_DIM/2 dims —
+# shortlist). The coarse key reads only the first DIM/2 dims —
 # at 10^12 vectors that halves the bytes the first pass touches; the
-# exact pass sees SHORTLIST rows per query, not the corpus.
+# exact pass sees RERANK_SHORTLIST rows per query, not the corpus.
 
 RERANK_PREFIX = 32
 RERANK_SHORTLIST = 192  # recall-tuned: exact top-5 agreement on synth
+BY_PREFIX = ("ckey DESC", "vec_id")
 
 
-def ann_rerank_topk(
-    emb: DataFrame, k: int = SQ_TOPK, n_queries: int = N_QUERIES,
-    prefix: int = RERANK_PREFIX, shortlist: int = RERANK_SHORTLIST,
-) -> DataFrame:
+def ann_rerank_topk(emb: DataFrame) -> DataFrame:
     """(qid, rank, vec_id, cos_key): exact cosine over the
     prefix-dot shortlist."""
-    v = _vectors(emb).withColumn(
-        "vp", F.expr(f"slice(vs, 1, {prefix})")
+    v = _vectors(emb).withColumn("vp", F.expr(f"slice(vs, 1, {RERANK_PREFIX})"))
+    coarse = _query_pairs(v, "vec_id != qid").selectExpr(
+        "qid", "vec_id", "va", "vb", "na", "nb",
+        f"{dot_sql('spark', 'pa', 'pb')} AS ckey",
     )
-    q = v.filter(F.col("vec_id") < n_queries).selectExpr(
-        "vec_id AS qid", "vs AS qv", "vp AS qp", "norm2 AS na"
-    )
+    short = _top_k(coarse, ["qid"], BY_PREFIX, RERANK_SHORTLIST)
+    return _ranked(_cosine(short, "qid", "vec_id"))
+
+
+def oracle_ann_rerank_topk() -> str:
+    p = RERANK_PREFIX
     coarse = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .selectExpr(
-            "qid", "vec_id", "qv", "vs", "na", "norm2 AS nb",
-            f"{dot_sql('spark', 'qp', 'vp')} AS ckey",
-        )
+        f"(SELECT a.vec_id AS qid, b.vec_id, "
+        f"{dot_sql('duckdb', f'a.vs[1:{p}]', f'b.vs[1:{p}]')} AS ckey "
+        f"FROM v a JOIN v b ON a.vec_id < {N_QUERIES} AND b.vec_id <> a.vec_id)"
     )
-    wc = Window.partitionBy("qid").orderBy(F.desc("ckey"), "vec_id")
-    short = coarse.withColumn("crank", F.row_number().over(wc)).filter(
-        F.col("crank") <= shortlist
-    )
-    exact = short.selectExpr(
-        "qid", "vec_id", "na", "nb",
-        f"{dot_sql('spark', 'qv', 'vs')} AS dot",
-    ).selectExpr("qid", "vec_id", f"{cos_key_sql()} AS cos_key")
-    win = Window.partitionBy("qid").orderBy(F.desc("cos_key"), "vec_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "vec_id", "cos_key")
-    )
-
-
-def oracle_ann_rerank_topk(
-    k: int = SQ_TOPK, n_queries: int = N_QUERIES,
-    prefix: int = RERANK_PREFIX, shortlist: int = RERANK_SHORTLIST,
-) -> str:
-    return (
-        f"WITH v AS MATERIALIZED (SELECT vec_id, vs, "
-        f"vs[1:{prefix}] AS vp, {dot_sql('duckdb', 'vs', 'vs')} AS na "
-        f"FROM (SELECT vec_id, {scaled_vec_sql('duckdb')} AS vs "
-        f"FROM embeddings) t), "
-        f"coarse AS MATERIALIZED (SELECT q.vec_id AS qid, c.vec_id, "
-        f"q.na AS na, c.na AS nb, "
-        f"{dot_sql('duckdb', 'q.vs', 'c.vs')} AS dot, "
-        f"{dot_sql('duckdb', 'q.vp', 'c.vp')} AS ckey "
-        f"FROM v q JOIN v c ON q.vec_id < {n_queries} "
-        f"AND c.vec_id <> q.vec_id), "
-        f"short AS (SELECT *, row_number() OVER (PARTITION BY qid "
-        f"ORDER BY ckey DESC, vec_id) AS crank FROM coarse), "
-        f"keyed AS (SELECT qid, vec_id, {cos_key_sql()} AS cos_key "
-        f"FROM short WHERE crank <= {shortlist}), "
-        f"ranked AS (SELECT qid, vec_id, cos_key, row_number() OVER ("
-        f"PARTITION BY qid ORDER BY cos_key DESC, vec_id) AS rank "
-        f"FROM keyed) "
-        f"SELECT qid, cast(rank as int) AS rank, vec_id, cos_key "
-        f"FROM ranked WHERE rank <= {k}"
+    return _cos_topk_sql(
+        [
+            f"cand AS (SELECT qid, vec_id FROM "
+            f"({_top_k_sql(coarse, ['qid'], BY_PREFIX, RERANK_SHORTLIST)}))"
+        ],
+        _CAND_PAIRS,
     )
 
 
@@ -1395,17 +1163,13 @@ def _fdiv_sql(a: str, b: str) -> str:
     )
 
 
-def pca_pc1(
-    emb: DataFrame,
-    iters: int = PCA_ITERS,
-    squarings: int = PCA_SQUARINGS,
-) -> DataFrame:
+def pca_pc1(emb: DataFrame) -> DataFrame:
     """(vec_id, pc1): each embedding's integer score along the
     dominant eigenvector of the exact centered scatter matrix.
 
     The gram collect is d^2-sized (4 KB at d=64) regardless of corpus
     size — the same driver-side reduction shape as a Lloyd centroid
-    update; ``iters`` / ``squarings`` are the run-scale knobs."""
+    update."""
     import numpy as np
 
     g = embedding_gram(emb).toPandas()
@@ -1419,12 +1183,12 @@ def pca_pc1(
     C = n * C - np.outer(s, s)
     q = max(1, int(np.abs(C).max()) // PCA_NORM)
     cq = C // q  # numpy // floors — matches _fdiv_sql
-    for _ in range(squarings):
+    for _ in range(PCA_SQUARINGS):
         B = cq @ cq
         qb = max(1, int(np.abs(B).max()) // PCA_NORM)
         cq = B // qb
     v = np.full(d, PCA_NORM, dtype=np.int64)
-    for _ in range(iters):
+    for _ in range(PCA_ITERS):
         w = cq @ v
         qw = max(1, int(np.abs(w).max()) // PCA_NORM)
         v = w // qw
@@ -1433,34 +1197,18 @@ def pca_pc1(
         v = -v
     off = int(np.dot(v, s)) // n  # Python // floors — matches _fdiv_sql
     lits = ", ".join(f"{int(x)}L" for x in v)
-    return emb.selectExpr(
-        "vec_id",
-        f"transform(embedding, x -> cast(floor(cast(x as double) * "
-        f"{GRAM_SCALE}.0E0) as bigint)) AS v4",
-    ).selectExpr(
-        "vec_id",
-        f"aggregate(zip_with(v4, array({lits}), (x, y) -> x * y), "
-        f"cast(0 as bigint), (acc, x) -> acc + x) - ({off}) AS pc1",
+    return _scaled(emb, GRAM_SCALE).selectExpr(
+        "vec_id", f"{dot_sql('spark', 'vs', f'array({lits})')} - ({off}) AS pc1"
     )
 
 
-def oracle_pca_pc1(
-    iters: int = PCA_ITERS, squarings: int = PCA_SQUARINGS
-) -> str:
+def oracle_pca_pc1() -> str:
     """Full DuckDB replay from the raw embeddings table: gram ->
-    centered scatter -> quantize -> ``squarings`` matrix-squaring
-    rounds -> ``iters`` matvec/renorm rounds (MATERIALIZED — chained
+    centered scatter -> quantize -> PCA_SQUARINGS matrix-squaring
+    rounds -> PCA_ITERS matvec/renorm rounds (MATERIALIZED — chained
     CTEs re-expand otherwise) -> sign fix -> map-only projection."""
-    lam = f"x -> cast(floor(cast(x as double) * {GRAM_SCALE}.0E0) as bigint)"
     ctes = [
-        f"va AS MATERIALIZED (SELECT vec_id, list_prepend(cast({GRAM_SCALE} "
-        f"as bigint), list_transform(embedding, {lam})) AS vs FROM embeddings)",
-        f"ea AS (SELECT vec_id, unnest(vs) AS val, "
-        f"unnest(range(0, {DIM + 1})) AS j FROM va)",
-        "g AS MATERIALIZED (SELECT a.j AS j, b.j AS k, "
-        "cast(sum(a.val * b.val) as bigint) AS gram "
-        "FROM ea a JOIN ea b ON a.vec_id = b.vec_id AND a.j <= b.j "
-        "GROUP BY 1, 2)",
+        *_gram_ctes(),
         f"nn AS (SELECT gram // {GRAM_SCALE * GRAM_SCALE} AS n FROM g "
         f"WHERE j = 0 AND k = 0)",
         f"sv AS (SELECT k - 1 AS j, gram // {GRAM_SCALE} AS s FROM g "
@@ -1480,7 +1228,7 @@ def oracle_pca_pc1(
         f"cast({PCA_NORM} as bigint) AS val FROM range(0, {DIM}) r)",
     ]
     mat = "cq"
-    for t in range(1, squarings + 1):
+    for t in range(1, PCA_SQUARINGS + 1):
         ctes.append(
             f"b{t} AS MATERIALIZED (SELECT a.j AS j, b.k AS k, "
             f"cast(sum(a.val * b.val) as bigint) AS val "
@@ -1497,7 +1245,7 @@ def oracle_pca_pc1(
         )
         mat = f"bq{t}"
     prev = "v0"
-    for t in range(1, iters + 1):
+    for t in range(1, PCA_ITERS + 1):
         ctes.append(
             f"w{t} AS MATERIALIZED (SELECT {mat}.j AS j, "
             f"cast(sum({mat}.val * {prev}.val) as bigint) AS val "
@@ -1522,12 +1270,11 @@ def oracle_pca_pc1(
         f"ofs AS (SELECT {_fdiv_sql('vd', '(SELECT n FROM nn)')} AS off "
         f"FROM od)",
         "ax AS (SELECT list(val ORDER BY j) AS axis FROM vf)",
-        f"e4 AS (SELECT vec_id, list_transform(embedding, {lam}) AS v4 "
-        f"FROM embeddings)",
+        f"e4 AS ({_scaled_cte(GRAM_SCALE)})",
     ]
     return (
         "WITH " + ", ".join(ctes)
-        + " SELECT vec_id, cast(list_dot_product(v4, "
+        + " SELECT vec_id, cast(list_dot_product(vs, "
         "(SELECT axis FROM ax)) as bigint) - (SELECT off FROM ofs) AS pc1 "
         "FROM e4"
     )

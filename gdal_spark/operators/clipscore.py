@@ -25,19 +25,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .ann import dot_sql, scaled_vec_sql
+from .ann import cos_key_sql, dot_sql, scaled_vec_sql
 
 # LAION English-pair threshold: cosine >= 0.28 -> floor key >= 280000
 CLIP_KEY_MIN = 280_000
 AESTHETIC_KEY_MIN = 0  # probe cosine >= 0 ("predicted aesthetic >= mid")
 PROBE_DIM = 64
-
-
-def _cos_key_sql() -> str:
-    return (
-        "cast(floor(1000000.0E0 * cast(dot as double) / "
-        "(sqrt(cast(na as double)) * sqrt(cast(nb as double)))) as bigint)"
-    )
 
 
 def clip_score_filter(emb: DataFrame, key_min: int = CLIP_KEY_MIN) -> DataFrame:
@@ -63,7 +56,7 @@ def clip_score_filter(emb: DataFrame, key_min: int = CLIP_KEY_MIN) -> DataFrame:
         )
         .selectExpr(
             "pair_id", "img_vec_id", "txt_vec_id",
-            f"{_cos_key_sql()} AS clip_key",
+            f"{cos_key_sql()} AS clip_key",
         )
         .selectExpr(
             "pair_id", "img_vec_id", "txt_vec_id", "clip_key",
@@ -88,7 +81,7 @@ def oracle_clip_score(key_min: int = CLIP_KEY_MIN) -> str:
         f"{dot_sql('duckdb', 'av', 'bv')} AS dot "
         f"FROM a JOIN b USING (pair_id)), "
         f"k AS (SELECT pair_id, img_vec_id, txt_vec_id, "
-        f"{_cos_key_sql()} AS clip_key FROM j) "
+        f"{cos_key_sql()} AS clip_key FROM j) "
         f"SELECT pair_id, img_vec_id, txt_vec_id, clip_key, "
         f"cast(clip_key >= {key_min} as int) AS kept FROM k"
     )

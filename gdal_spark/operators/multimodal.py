@@ -745,26 +745,11 @@ def ahash64_int(images: DataFrame) -> DataFrame:
 
 
 def oracle_ahash64(n: int, max_i: int) -> str:
-    """SQL replica: 8x8 integer block sums vs per-image totals,
-    cross-multiplied comparison, packed halves."""
+    """``oracle_phash64`` with the columns renamed, as ``ahash64_int``
+    runs ``phash64_int``."""
     return (
-        f"WITH px AS (SELECT image_id, w, h, x, y, sum(val) AS g "
-        f"FROM ({synth.pixels_cte(n, max_i, 'duckdb')}) GROUP BY 1, 2, 3, 4, 5), "
-        # yb[a] = (a*h)//8 -> row block a = (y*8 + 7) // h (same for x)
-        f"blk AS (SELECT image_id, (y * 8 + 7) // h AS a, "
-        f"(x * 8 + 7) // w AS b, "
-        f"sum(g) AS bs, count(*) AS npx FROM px GROUP BY 1, 2, 3), "
-        f"tot AS (SELECT image_id, cast(sum(bs) as bigint) AS ts, "
-        f"cast(sum(npx) as bigint) AS tn FROM blk GROUP BY 1), "
-        f"bits AS (SELECT blk.image_id, blk.a * 8 + blk.b AS k, "
-        f"cast(blk.bs * tot.tn > tot.ts * blk.npx as int) AS bit "
-        f"FROM blk JOIN tot ON tot.image_id = blk.image_id) "
-        f"SELECT image_id, "
-        f"cast(sum(CASE WHEN k >= 32 AND bit = 1 THEN 1::BIGINT << (k - 32) "
-        f"ELSE 0 END) as bigint) AS ahash_hi, "
-        f"cast(sum(CASE WHEN k < 32 AND bit = 1 THEN 1::BIGINT << k "
-        f"ELSE 0 END) as bigint) AS ahash_lo "
-        f"FROM bits GROUP BY 1"
+        f"SELECT image_id, phash_hi AS ahash_hi, phash_lo AS ahash_lo "
+        f"FROM ({oracle_phash64(n, max_i)})"
     )
 
 

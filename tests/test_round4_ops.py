@@ -1796,7 +1796,7 @@ def test_hex_join_plan_is_broadcast_equi_join(spark):
 # contrastive hard-negative mining (ann.hard_negatives)
 
 
-def test_hard_negatives_bruteforce(spark):
+def test_hard_negatives_bruteforce(spark, monkeypatch):
     """Every returned negative has a different label, and per anchor
     the ranked list equals the numpy argsort of cosine over the
     different-label subset."""
@@ -1805,7 +1805,8 @@ def test_hard_negatives_bruteforce(spark):
     from gdal_spark.operators import ann
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    got = ann.hard_negatives(emb, k=5, n_queries=4).collect()
+    monkeypatch.setattr(ann, "N_QUERIES", 4)
+    got = ann.hard_negatives(emb).collect()
     vecs = {
         r.vec_id: np.array(r.vs, dtype=np.int64)
         for r in ann._vectors(emb).collect()
@@ -1912,7 +1913,7 @@ def test_entropy_key_properties():
 # SQ8 + truncated rerank (ann.sq8_topk / ann.ann_rerank_topk)
 
 
-def test_sq8_recall_and_code_bounds(spark):
+def test_sq8_recall_and_code_bounds(spark, monkeypatch):
     """SQ8 reconstruction error is bounded by one quantization step
     per dim, and top-1 recall vs exact cosine-by-dot is high on the
     synth embeddings."""
@@ -1921,8 +1922,10 @@ def test_sq8_recall_and_code_bounds(spark):
     from gdal_spark.operators import ann
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    monkeypatch.setattr(ann, "TOP_K", 1)
+    monkeypatch.setattr(ann, "N_QUERIES", 8)
     sq = {(r.qid, r.rank): r.vec_id
-          for r in ann.sq8_topk(emb, k=1, n_queries=8).collect()}
+          for r in ann.sq8_topk(emb).collect()}
     vecs = {r.vec_id: np.array(r.vs, dtype=np.int64)
             for r in ann._vectors(emb).collect()}
     ids = sorted(vecs)
@@ -1936,7 +1939,7 @@ def test_sq8_recall_and_code_bounds(spark):
     assert hits >= 6  # 8-bit per-dim quantization: near-exact dot
 
 
-def test_rerank_equals_exact_topk(spark):
+def test_rerank_equals_exact_topk(spark, monkeypatch):
     """With a shortlist this deep on smooth synth embeddings the
     two-stage rerank reproduces the exact cosine top-k."""
     from tests.conftest import SF_DIR
@@ -1944,10 +1947,11 @@ def test_rerank_equals_exact_topk(spark):
     from gdal_spark.operators import ann
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    monkeypatch.setattr(ann, "N_QUERIES", 8)
     exact = {(r.qid, r.rank): r.vec_id
-             for r in ann.cosine_topk(emb, k=5, n_queries=8).collect()}
+             for r in ann.cosine_topk(emb).collect()}
     rr = {(r.qid, r.rank): r.vec_id
-          for r in ann.ann_rerank_topk(emb, k=5, n_queries=8).collect()}
+          for r in ann.ann_rerank_topk(emb).collect()}
     assert all(exact[k2] == rr.get(k2) for k2 in exact)
 
 

@@ -20,19 +20,19 @@ def _docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
 
 
-def test_semdedup_nondefault_knobs_threshold_extremes(spark):
+def test_semdedup_nondefault_knobs_threshold_extremes(spark, monkeypatch):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    monkeypatch.setattr(ann, "IVF_K", 8)
+    monkeypatch.setattr(ann, "IVF_ITERS", 3)
     # threshold above max possible cosine (1e6 ppm): nothing can be a
     # near-duplicate, every vector survives
-    out_hi = ann.semdedup(
-        emb, n_clusters=8, iters=3, min_cos_ppm=1_000_001
-    ).collect()
+    monkeypatch.setattr(ann, "MIN_COS_PPM", 1_000_001)
+    out_hi = ann.semdedup(emb).collect()
     assert out_hi and all(r["kept"] == 1 for r in out_hi)
     # threshold below -1e6 ppm: every same-cluster pair qualifies, so
     # exactly ONE keeper (the top-ranked member) survives per cluster
-    out_lo = ann.semdedup(
-        emb, n_clusters=8, iters=3, min_cos_ppm=-1_000_001
-    ).collect()
+    monkeypatch.setattr(ann, "MIN_COS_PPM", -1_000_001)
+    out_lo = ann.semdedup(emb).collect()
     assert len(out_lo) == len(out_hi)
     kept_by_cid = {}
     for r in out_lo:
