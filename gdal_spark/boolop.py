@@ -77,7 +77,7 @@ def _point_in_ring(px: float, py: float, ring: np.ndarray) -> bool:
     cond = (y1 > py) != (y2 > py)
     if not cond.any():
         return False
-    with np.errstate(divide="ignore", invalid="ignore"):
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
     return bool(np.logical_and(cond, px < xint).sum() % 2)
 
@@ -133,7 +133,7 @@ def _crossings(P: np.ndarray, Q: np.ndarray, scale: float):
     len1 = np.hypot(d1[:, 0], d1[:, 1])[:, None]
     len2 = np.hypot(d2[:, 0], d2[:, 1])[None, :]
     par = np.abs(denom) <= 1e-14 * len1 * len2 * max(scale, 1.0)
-    with np.errstate(divide="ignore", invalid="ignore"):
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         t = np.where(par, np.nan, num_t / denom)
         u = np.where(par, np.nan, num_u / denom)
     EPS = 1e-11

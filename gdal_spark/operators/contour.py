@@ -21,6 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..graphsql import label_components, pj_components_cte, union_find
 from .dem import DEM_VALUE_SQL, _dem_value
 
 
@@ -109,6 +110,9 @@ _SADDLE_SEGS = {
 }
 
 _EID_XSHIFT = 2097152  # 2^21
+# component node id = level * _LEVEL_SHIFT + edge id (edge ids < 2^40
+# while x < 2^18), so one graph holds every level
+_LEVEL_SHIFT = 1 << 40
 
 
 def _edge_id_np(edge, cx, cy):
@@ -246,7 +250,6 @@ def contour_polylines(
     height: int,
     levels: tuple[int, ...] = (64, 128, 192),
     tile_px: int = 32,
-    max_merge_rounds: int = 40,
 ) -> DataFrame:
     """Tiled marching squares -> cross-tile polyline stitch. Per
     level: segment count, node (crossed-edge) count, open endpoints
@@ -255,13 +258,14 @@ def contour_polylines(
     a cell is owned by the tile containing its top-left pixel, so the
     segment set is tiling-invariant.
 
-    Two-level stitch (the polygonize shape, but with per-tile
-    union-find done LOCALLY in numpy): each tile emits its segments
+    Two-level stitch (the polygonize shape): each tile labels its
+    segment graph with graphsql.union_find and emits its segments
     plus a (boundary node -> local component root) map; cross-tile
     equivalences arise only where a boundary node is seen by two
-    tiles, so the distributed pointer-jump runs over the tiny
-    local-root graph and needs only ~log2(tiles a contour spans)
-    rounds — fixed count, no per-round driver actions."""
+    tiles, so graphsql.label_components runs over the tiny local-root
+    graph. Node ids of that graph carry the level
+    (level * _LEVEL_SHIFT + edge id), so one run labels every
+    level."""
     ntx = (width - 1 + tile_px - 1) // tile_px
     nty = (height - 1 + tile_px - 1) // tile_px
     tiles = spark.range(ntx * nty).selectExpr(
@@ -275,40 +279,26 @@ def contour_polylines(
         ch = min(tile_px, (height - 1) - cy0)
         gy, gx = np.mgrid[cy0: cy0 + ch + 1, cx0: cx0 + cw + 1]
         vals = _dem_value(gx, gy)
-        rows = []
+        frames = []
         for lv in levels:
             lo, hi, ln = marching_segments(vals, lv, cx0, cy0)
-            # local union-find -> local roots (min node id)
-            parent: dict = {}
-
-            def find(x):
-                while parent.setdefault(x, x) != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for a, b in zip(lo.tolist(), hi.tolist()):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            for a, b, l_ in zip(lo.tolist(), hi.tolist(), ln.tolist()):
-                rows.append((int(lv), "seg", a, b, l_))
+            ids, inv = np.unique(np.concatenate([lo, hi]), return_inverse=True)
+            root = ids[union_find(len(ids), inv[: len(lo)], inv[len(lo):])]
             # every local component registers its root; every node on
             # the tile's cell-boundary maps node -> root for stitching
-            for node in parent:
-                r = find(node)
-                ex, ey, et = node // 2 // _EID_XSHIFT, (node // 2) % _EID_XSHIFT, node % 2
-                boundary = (
-                    ex <= cx0 or ex >= cx0 + cw
-                    or ey <= cy0 or ey >= cy0 + ch
-                )
-                if node == r:
-                    rows.append((int(lv), "comp", r, r, 0))
-                if boundary:
-                    rows.append((int(lv), "bnd", node, r, 0))
-        return pd.DataFrame(
-            rows, columns=["level", "kind", "a", "b", "len_u"]
-        )
+            ex, ey = ids // 2 // _EID_XSHIFT, ids // 2 % _EID_XSHIFT
+            bnd = (ex <= cx0) | (ex >= cx0 + cw) | (ey <= cy0) | (ey >= cy0 + ch)
+            key = lv * _LEVEL_SHIFT
+            own = ids[root == ids] + key
+            for kind, a, b, len_u in [
+                ("seg", lo, hi, ln),
+                ("comp", own, own, 0),
+                ("bnd", ids[bnd] + key, root[bnd] + key, 0),
+            ]:
+                frames.append(pd.DataFrame(
+                    {"level": lv, "kind": kind, "a": a, "b": b, "len_u": len_u}
+                ))
+        return pd.concat(frames, ignore_index=True)
 
     raw = (
         tiles.groupby("tx", "ty")
@@ -337,78 +327,20 @@ def contour_polylines(
 
     # cross-tile equivalences: two local roots that saw the same
     # boundary node are the same global component
-    bnd = raw.filter("kind = 'bnd'").selectExpr(
-        "level", "a AS node", "b AS lroot"
-    )
+    bnd = raw.filter("kind = 'bnd'").selectExpr("a AS node", "b AS a")
     pairs = (
-        bnd.alias("x")
-        .join(bnd.alias("y"), ["level", "node"])
-        .selectExpr("level", "x.lroot AS a", "y.lroot AS b")
+        bnd.join(bnd.selectExpr("node", "a AS b"), "node")
         .where("a <> b")
         .distinct()
     )
-    # a boundary node can be the min-id local root in BOTH adjacent
-    # tiles -> 'comp' rows duplicate across tiles; the root table must
-    # be keyed uniquely per (level, node) or every pointer jump
-    # multiplies by the duplicate count (exponential blowup)
-    from ..graphsql import fixpoint_parts
-
-    nparts = fixpoint_parts(raw)
-    comps = raw.filter("kind = 'comp'").selectExpr("level", "a AS lroot").distinct()
-    roots = comps.selectExpr(
-        "level", "lroot AS node", "lroot AS root"
-    ).coalesce(nparts).localCheckpoint(eager=True)
-    sym = (
-        pairs.unionAll(pairs.selectExpr("level", "b AS a", "a AS b"))
-        .distinct()
-        .coalesce(nparts)
-        .localCheckpoint(eager=True)
-    )
-    # the local-root equivalence graph's diameter scales with how
-    # often a contour re-crosses tile boundaries (NOT with the tile
-    # count), so rounds iterate to an explicit fixpoint; each round is
-    # a join over the tiny root table, so the check is cheap
-    for _ in range(max_merge_rounds):
-        nbr = (
-            sym.join(
-                roots.selectExpr("level", "node AS b", "root AS nroot"),
-                ["level", "b"],
-            )
-            .groupBy("level", "a")
-            .agg(F.min("nroot").alias("min_nbr"))
-        )
-        half = roots.join(
-            nbr.selectExpr("level", "a AS node", "min_nbr"),
-            ["level", "node"],
-            "left",
-        ).selectExpr(
-            "level", "node", "least(root, coalesce(min_nbr, root)) AS root"
-        ).coalesce(nparts).localCheckpoint(eager=True)
-        # pointer jump: checkpoint BEFORE the self-join and rename the
-        # jump side to fresh column names — a USING-list self-join on a
-        # shared lazy plan can resolve both sides to the same attribute
-        # and silently degrade to a per-level cross join
-        jump = half.selectExpr("level AS jl", "node AS jn", "root AS jr")
-        new_roots = (
-            half.join(
-                jump,
-                (F.col("level") == F.col("jl")) & (F.col("root") == F.col("jn")),
-                "left",
-            )
-            .selectExpr("level", "node", "coalesce(jr, root) AS root")
-        ).coalesce(nparts).localCheckpoint(eager=True)
-        changed = (
-            new_roots.selectExpr("level", "node", "root AS nr")
-            .join(roots, ["level", "node"])
-            .filter("nr <> root")
-            .count()
-        )
-        roots = new_roots
-        if changed == 0:
-            break
+    # a boundary node can be the local root in both adjacent tiles, so
+    # 'comp' rows repeat; label_components needs one row per node
+    comps = raw.filter("kind = 'comp'").selectExpr("a AS node").distinct()
     comp_agg = (
-        roots.groupBy("level")
-        .agg(F.countDistinct("root").alias("n_components"))
+        label_components(comps, pairs)
+        .filter("node = root")
+        .groupBy(F.expr(f"node div {_LEVEL_SHIFT}").alias("level"))
+        .agg(F.count("*").alias("n_components"))
     )
     return (
         seg_agg.join(node_agg, "level")
@@ -420,22 +352,14 @@ def contour_polylines(
     )
 
 
-# pointer-jump rounds for the oracle: label-prop + doubling needs
-# more than log2(diameter) rounds (min labels travel along the
-# compressed pointer graph); 16 left level-128 short by 13 components
-# at 96^2, 24 converges with margin — verified against a union-find
-# ground truth in tests.
-CONTOUR_PJ_ROUNDS = 24
-
-
 def oracle_contour_polylines(
     width: int, height: int, levels=(64, 128, 192)
 ) -> str:
     """Whole-raster SQL replay: the same case table emits (e_lo, e_hi,
-    len_u) per cell; components via UNROLLED pointer-jumping rounds
-    (neighbor-min + double jump per round — the same fixpoint the
-    Spark stitcher reaches, O(log diameter) rounds; a recursive-CTE
-    reachability closure is exact too but O(sum comp^2) rows)."""
+    len_u) per cell; components via graphsql.pj_components_cte over
+    the level-folded edge ids (the same fixpoint the Spark stitcher
+    reaches; a recursive-CTE reachability closure is exact too but
+    O(sum comp^2) rows)."""
     val = DEM_VALUE_SQL
     corners = {
         "va": val.replace("gx", "cx").replace("gy", "cy"),
@@ -475,22 +399,7 @@ def oracle_contour_polylines(
             f"{slot_case(s, hi_of)} AS e_hi, {slot_case(s, len_of)} AS len_u "
             f"FROM cells"
         )
-    rounds = []
-    prev = "r0"
-    for k in range(CONTOUR_PJ_ROUNDS):
-        rounds.append(
-            f"m{k} AS MATERIALIZED (SELECT l.lv, l.a AS node, min(r.root) AS mn "
-            f"FROM links l JOIN {prev} r ON r.lv = l.lv AND r.node = l.b "
-            f"GROUP BY 1, 2),\n"
-            f"p{k} AS MATERIALIZED (SELECT r.lv, r.node, "
-            f"least(r.root, coalesce(m.mn, r.root)) AS root "
-            f"FROM {prev} r LEFT JOIN m{k} m "
-            f"ON m.lv = r.lv AND m.node = r.node),\n"
-            f"r{k + 1} AS MATERIALIZED (SELECT a.lv, a.node, b.root AS root "
-            f"FROM p{k} a JOIN p{k} b ON b.lv = a.lv AND b.node = a.root)"
-        )
-        prev = f"r{k + 1}"
-    pj = ",\n".join(rounds)
+    chain, final = pj_components_cte()
     return f"""
 WITH
 cells AS MATERIALIZED (
@@ -506,18 +415,20 @@ cells AS MATERIALIZED (
              (SELECT unnest([{lvs}]) AS lv))),
 segs AS MATERIALIZED (SELECT * FROM ({slot_rows[0]} UNION ALL {slot_rows[1]})
          WHERE e_lo IS NOT NULL),
-links AS MATERIALIZED (SELECT lv, e_lo AS a, e_hi AS b FROM segs
-          UNION SELECT lv, e_hi, e_lo FROM segs),
-r0 AS MATERIALIZED (SELECT DISTINCT lv, a AS node, a AS root FROM links),
-{pj},
-comp AS (SELECT lv, count(DISTINCT root) AS n_components
-         FROM {prev} GROUP BY lv),
-nodes AS (SELECT lv, e, count(*) AS deg FROM
-          (SELECT lv, e_lo AS e FROM segs UNION ALL SELECT lv, e_hi FROM segs)
-          GROUP BY lv, e),
+links AS MATERIALIZED (
+  SELECT lv * {_LEVEL_SHIFT} + e_lo AS a, lv * {_LEVEL_SHIFT} + e_hi AS b
+  FROM segs
+  UNION SELECT lv * {_LEVEL_SHIFT} + e_hi, lv * {_LEVEL_SHIFT} + e_lo FROM segs),
+nodes AS MATERIALIZED (SELECT DISTINCT a AS node FROM links),
+{chain},
+comp AS (SELECT node // {_LEVEL_SHIFT} AS lv, count(*) AS n_components
+         FROM {final} WHERE node = root GROUP BY 1),
+deg AS (SELECT lv, e, count(*) AS deg FROM
+        (SELECT lv, e_lo AS e FROM segs UNION ALL SELECT lv, e_hi FROM segs)
+        GROUP BY lv, e),
 nagg AS (SELECT lv, count(*) AS n_nodes,
          cast(sum(CASE WHEN deg = 1 THEN 1 ELSE 0 END) as bigint) AS n_open
-         FROM nodes GROUP BY lv),
+         FROM deg GROUP BY lv),
 sagg AS (SELECT lv, count(*) AS n_segments,
          cast(sum(len_u) as bigint) AS len_sum_u FROM segs GROUP BY lv)
 SELECT sagg.lv AS level, n_segments, n_nodes, n_open, n_components, len_sum_u

@@ -601,8 +601,8 @@ def otsu_threshold(images: DataFrame) -> DataFrame:
         if not valid.any():
             return
         d = np.abs(s * w0 - n * s0).astype(np.float64)
-        q = d / np.sqrt((w0 * (n - w0)).astype(np.float64))
-        q[~valid] = -1.0
+        q = np.divide(d, np.sqrt((w0 * (n - w0)).astype(np.float64)),
+                      out=np.full_like(d, -1.0), where=valid)
         t = int(np.argmax(q))  # first max -> smallest-t tie-break
         yield (t, int(w0[t]), int(s0[t]), int(np.floor(q[t])))
 

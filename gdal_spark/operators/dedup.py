@@ -412,14 +412,11 @@ def oracle_simhash_pairs(max_hamming: int = 6, bits: int = 32) -> str:
 # clustering + keep-one is what a 100 TB dedup pass actually emits.
 
 
-def dedup_clusters(
-    docs: DataFrame, max_merge_rounds: int = 30, **minhash_kwargs
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, **minhash_kwargs) -> DataFrame:
     """(doc_id, cluster_id, cluster_size, is_keeper): components of
-    the is_dup MinHash pair graph via distributed pointer-jumping
-    (iterated to fixpoint; shared engine graphsql.label_components);
+    the is_dup MinHash pair graph (graphsql.label_components);
     singleton docs are their own cluster."""
-    from ..graphsql import label_components
+    from ..graphsql import keepers, label_components
 
     pairs = (
         minhash_lsh_pairs(docs, **minhash_kwargs)
@@ -427,15 +424,13 @@ def dedup_clusters(
         .selectExpr("doc_a AS a", "doc_b AS b")
     )
     nodes = docs.selectExpr("doc_id AS node")
-    return label_components(
-        nodes, pairs, max_merge_rounds=max_merge_rounds
-    ).withColumnRenamed("node", "doc_id")
+    return keepers(label_components(nodes, pairs), "doc_id")
 
 
 def oracle_dedup_clusters(**minhash_kwargs) -> str:
     """Replays the MinHash pair graph, then labels components with the
     shared pointer-jump CTE chain."""
-    from ..graphsql import pj_components_cte
+    from ..graphsql import keepers_sql, pj_components_cte
 
     base = oracle_minhash_lsh(**minhash_kwargs)
     chain, final = pj_components_cte()
@@ -446,11 +441,8 @@ nodes AS MATERIALIZED (SELECT doc_id AS node FROM documents),
 links AS MATERIALIZED (
   SELECT doc_a AS a, doc_b AS b FROM dup
   UNION SELECT doc_b, doc_a FROM dup),
-{chain},
-sizes AS (SELECT root, count(*) AS cluster_size FROM {final} GROUP BY 1)
-SELECT r.node AS doc_id, r.root AS cluster_id, s.cluster_size,
-       cast(r.node = r.root as int) AS is_keeper
-FROM {final} r JOIN sizes s ON s.root = r.root
+{chain}
+{keepers_sql(final, "doc_id")}
 """
 
 

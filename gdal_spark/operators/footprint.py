@@ -9,20 +9,22 @@ run GDALPolygonize over the mask band, drop the nodata (mask=0) rings,
 apply ``-minRingArea``, and emit the remaining rings in georeferenced
 coordinates via the dataset geotransform.
 
-Spark shape: reuse the distributed polygonize (per-tile two-pass
-union-find labeling + cross-tile pointer-jump merge,
-``polygonize.polygonize_grid``) with per-component envelope partials
-carried through the same partial-aggregate path (``with_bbox=True``) —
-the mask raster never materializes globally, and the only shuffles are
-the boundary-strip equi-join and the O(log n) pointer-jump rounds.
+Spark shape: reuse the distributed polygonize
+(``polygonize.polygonize_grid``: per-tile union-find labeling +
+cross-tile pointer-jump merge through ``graphsql.label_components``)
+with per-component envelope partials carried through the same
+partial-aggregate path (``with_bbox=True``) — the mask raster never
+materializes globally, and the only shuffles are the boundary-strip
+equi-join and the O(log n) pointer-jump rounds.
 Ring geometry is reported as the component's geo envelope (exact
 dyadic affine, so the oracle comparison is bit-exact); full boundary
 tracing is the polygonize/contour machinery's job.
 
 Oracle: the unrolled MATERIALIZED pointer-jump connected-components
-SQL (``oracle_polygonize_pj``) with a footprint projection — mask=1
-components only, HAVING count(*) >= min_pixels, envelope mapped
-through the same dyadic geotransform.
+SQL (``oracle_polygonize_pj`` over ``graphsql.pj_components_cte``)
+with a footprint projection — mask=1 components only, HAVING
+count(*) >= min_pixels, envelope mapped through the same dyadic
+geotransform.
 """
 
 from __future__ import annotations
@@ -95,14 +97,11 @@ def oracle_footprint(
     final = (
         f"SELECT r.root AS comp_id, count(*) AS n_pixels,\n"
         f"       {geo}\n"
-        f"FROM {{prev}} r JOIN px ON px.node = r.node\n"
+        f"FROM {{final}} r JOIN px ON px.node = r.node\n"
         f"GROUP BY 1\n"
         f"HAVING min(px.val) = 1 AND count(*) >= {min_pixels}"
     )
-    # 64 pointer-jump rounds: the winding 704-px component needs 48 to
-    # converge (the default 32 under-merges); convergence against a
-    # numpy BFS ground truth is pinned in tests/test_footprint.py.
     return oracle_polygonize_pj(
         f"cast({DEM_VALUE_SQL} >= {thresh} as bigint)",
-        width, height, final_select=final, rounds_n=64,
+        width, height, final_select=final,
     )

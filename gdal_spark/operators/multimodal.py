@@ -753,29 +753,25 @@ def oracle_ahash64(n: int, max_i: int) -> str:
     )
 
 
-def phash_clusters(images: DataFrame, max_hamming: int = 14,
-                   max_merge_rounds: int = 30) -> DataFrame:
+def phash_clusters(images: DataFrame, max_hamming: int = 14) -> DataFrame:
     """(image_id, cluster_id, cluster_size, is_keeper): connected
     components of the banded-pHash near-dup pair graph — the image
     analog of text dedup_clusters (keep one canonical image per
     visual near-dup family). Pair generation is the plan-safe banded
-    equi-join; labeling is the shared distributed pointer-jump
-    (graphsql.label_components)."""
-    from ..graphsql import label_components
+    equi-join; labeling is graphsql.label_components."""
+    from ..graphsql import keepers, label_components
 
     pairs = phash_neardup(images, max_hamming=max_hamming).selectExpr(
         "img_a AS a", "img_b AS b"
     )
     nodes = images.selectExpr("image_id AS node")
-    return label_components(
-        nodes, pairs, max_merge_rounds=max_merge_rounds
-    ).withColumnRenamed("node", "image_id")
+    return keepers(label_components(nodes, pairs), "image_id")
 
 
 def oracle_phash_clusters(n: int, max_i: int, max_hamming: int = 14) -> str:
     """Pair graph replayed from the phash oracle, labeled with the
     shared pointer-jump CTE chain."""
-    from ..graphsql import pj_components_cte
+    from ..graphsql import keepers_sql, pj_components_cte
 
     base = oracle_phash_neardup(n, max_i, max_hamming)
     chain, final = pj_components_cte()
@@ -787,11 +783,8 @@ nodes AS MATERIALIZED (
 links AS MATERIALIZED (
   SELECT img_a AS a, img_b AS b FROM dup
   UNION SELECT img_b, img_a FROM dup),
-{chain},
-sizes AS (SELECT root, count(*) AS cluster_size FROM {final} GROUP BY 1)
-SELECT r.node AS image_id, r.root AS cluster_id, s.cluster_size,
-       cast(r.node = r.root as int) AS is_keeper
-FROM {final} r JOIN sizes s ON s.root = r.root
+{chain}
+{keepers_sql(final, "image_id")}
 """
 
 

@@ -5,14 +5,16 @@ alg/gdalrasterpolygonenumerator.cpp): group connected (4- or
 8-connectivity) pixels of equal value into components. The reference
 runs single-process over the whole raster; the Spark shape is:
 
-  1. per-tile two-pass union-find labeling (numpy, inside
-     applyInPandas) -> (tile, local component) with a globally unique
-     label = min global pixel index seen so far,
+  1. per-tile union-find labeling (``label_tile`` over
+     ``graphsql.union_find``, inside applyInPandas) -> (tile, local
+     component) with a globally unique label = min global pixel index
+     in the tile,
   2. tile boundary strips -> equivalence edges between labels of
-     adjacent tiles where values match (the cross-tile analog of the
-     enumerator's row-to-row label merging),
-  3. iterative min-label propagation over the edge list until
-     fixpoint (pointer-jumping: O(log diameter) rounds of joins),
+     adjacent tiles where values match, diagonal neighbours included
+     under 8-connectivity (the cross-tile analog of the enumerator's
+     row-to-row label merging),
+  3. ``graphsql.label_components`` over the edge list (min-label
+     propagation + pointer jumping, O(log diameter) rounds of joins),
   4. final groupBy(root) -> component id (min global pixel index),
      value, pixel count.
 
@@ -27,50 +29,24 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..graphsql import label_components, pj_components_cte, union_find
+
 
 def label_tile(vals: np.ndarray, connect8: bool = False) -> np.ndarray:
-    """Two-pass union-find connected-component labeling of a 2-D value
-    array. Returns int64 labels = linearized local index of the
+    """Connected-component labels of a 2-D value array through
+    graphsql.union_find: int64 labels = linearized local index of the
     component's first (row-major) pixel."""
     h, w = vals.shape
-    parent = np.arange(h * w, dtype=np.int64)
-
-    def find(i):
-        root = i
-        while parent[root] != root:
-            root = parent[root]
-        while parent[i] != root:
-            parent[i], i = root, parent[i]
-        return root
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-
     idx = np.arange(h * w, dtype=np.int64).reshape(h, w)
-    # vectorized neighbor equality masks; unions in a python loop over
-    # matches (bounded by run boundaries, not pixels, in practice)
-    left = vals[:, 1:] == vals[:, :-1]
-    for a, b in zip(idx[:, 1:][left], idx[:, :-1][left]):
-        union(a, b)
-    up = vals[1:, :] == vals[:-1, :]
-    for a, b in zip(idx[1:, :][up], idx[:-1, :][up]):
-        union(a, b)
-    if connect8:
-        d1 = vals[1:, 1:] == vals[:-1, :-1]
-        for a, b in zip(idx[1:, 1:][d1], idx[:-1, :-1][d1]):
-            union(a, b)
-        d2 = vals[1:, :-1] == vals[:-1, 1:]
-        for a, b in zip(idx[1:, :-1][d2], idx[:-1, 1:][d2]):
-            union(a, b)
-    out = np.empty(h * w, dtype=np.int64)
-    for i in range(h * w):
-        out[i] = find(i)
-    return out.reshape(h, w)
+    flat = vals.ravel()
+    a, b = [], []
+    for dy, dx in [(0, 1), (1, 0)] + ([(1, 1), (1, -1)] if connect8 else []):
+        p = idx[dy:, max(dx, 0): w + min(dx, 0)].ravel()
+        q = idx[: h - dy, max(-dx, 0): w - max(dx, 0)].ravel()
+        same = flat[p] == flat[q]
+        a.append(p[same])
+        b.append(q[same])
+    return union_find(h * w, np.concatenate(a), np.concatenate(b)).reshape(h, w)
 
 
 def polygonize_grid(
@@ -80,7 +56,6 @@ def polygonize_grid(
     height: int,
     tile_px: int = 32,
     connect8: bool = False,
-    max_rounds: int = 16,
     with_bbox: bool = False,
 ) -> DataFrame:
     """Polygonize a deterministic raster defined by ``value_sql`` (a
@@ -186,61 +161,26 @@ def polygonize_grid(
     )
     edges = raw.filter("kind = 'edge'")
 
-    # adjacency: right-edge pixel (gx, gy) matches left-edge pixel
-    # (gx+1, gy); bottom matches top (gy+1) — equal values merge
-    r = edges.filter("side = 'R'").selectExpr("gx", "gy", "val", "label AS la")
-    le = edges.filter("side = 'L'").selectExpr(
-        "gx - 1 AS gx", "gy", "val", "label AS lb"
-    )
-    b = edges.filter("side = 'B'").selectExpr("gx", "gy", "val", "label AS la")
-    t = edges.filter("side = 'T'").selectExpr(
-        "gx", "gy - 1 AS gy", "val", "label AS lb"
-    )
+    # adjacency: right-edge pixel (gx, gy) touches left-edge pixel
+    # (gx+1, gy), bottom touches top (gy+1), and with connect8 also
+    # the diagonal neighbours one row or column either side; equal
+    # values merge
+    near = f"explode(sequence(-{int(connect8)}, {int(connect8)})) AS d"
+    right = edges.filter("side = 'R'").selectExpr("gx", "gy", "val", "label AS a")
+    left = edges.filter("side = 'L'").selectExpr(
+        "gx - 1 AS gx", "gy", "val", "label AS b", near
+    ).selectExpr("gx", "gy + d AS gy", "val", "b")
+    bottom = edges.filter("side = 'B'").selectExpr("gx", "gy", "val", "label AS a")
+    top = edges.filter("side = 'T'").selectExpr(
+        "gx", "gy - 1 AS gy", "val", "label AS b", near
+    ).selectExpr("gx + d AS gx", "gy", "val", "b")
     pairs = (
-        r.join(le, ["gx", "gy", "val"])
-        .select("la", "lb")
-        .union(b.join(t, ["gx", "gy", "val"]).select("la", "lb"))
+        right.join(left, ["gx", "gy", "val"])
+        .select("a", "b")
+        .union(bottom.join(top, ["gx", "gy", "val"]).select("a", "b"))
         .distinct()
     )
-
-    # iterative min-root propagation (pointer jumping); lineage is
-    # truncated each round (localCheckpoint) so round k doesn't
-    # re-execute rounds 0..k-1
-    roots = comps.selectExpr("label", "label AS root").localCheckpoint(eager=True)
-    sym = (
-        pairs.union(pairs.selectExpr("lb AS la", "la AS lb"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
-        nbr = (
-            sym.join(roots.selectExpr("label AS lb", "root AS nroot"), "lb")
-            .groupBy("la")
-            .agg(F.min("nroot").alias("min_nbr"))
-        )
-        new_roots = (
-            roots.join(nbr.selectExpr("la AS label", "min_nbr"), "label", "left")
-            .selectExpr("label", "least(root, coalesce(min_nbr, root)) AS root")
-        )
-        # root-of-root contraction (pointer jumping halves depth)
-        new_roots = (
-            new_roots.alias("a")
-            .join(
-                new_roots.selectExpr("label AS root", "root AS rroot").alias("b"),
-                "root",
-                "left",
-            )
-            .selectExpr("label", "coalesce(rroot, root) AS root")
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_roots.alias("n")
-            .join(roots.selectExpr("label", "root AS old").alias("o"), "label")
-            .filter("root <> old")
-            .count()
-        )
-        roots = new_roots
-        if changed == 0:
-            break
+    roots = label_components(comps.selectExpr("label AS node"), pairs)
 
     aggs = [F.min("val").alias("val"), F.sum("n").alias("n_pixels")]
     cols = ["root AS comp_id", "val", "n_pixels"]
@@ -250,7 +190,10 @@ def polygonize_grid(
             F.min("miny").alias("miny"), F.max("maxy").alias("maxy"),
         ]
         cols += ["minx", "maxx", "miny", "maxy"]
-    return comps.join(roots, "label").groupBy("root").agg(*aggs).selectExpr(*cols)
+    return (
+        comps.join(roots.withColumnRenamed("node", "label"), "label")
+        .groupBy("root").agg(*aggs).selectExpr(*cols)
+    )
 
 
 def _eval_value(value_sql: str, gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
@@ -293,71 +236,43 @@ def oracle_polygonize_blocks(width: int, height: int, bs: int, mod: int) -> str:
     )
 
 
-POLY_PJ_ROUNDS = 32  # oracle pointer-jump rounds (fixpoint-verified in tests)
-
-
 def oracle_polygonize_pj(
     band_sql: str, width: int, height: int, connect8: bool = False,
-    final_select: str | None = None, rounds_n: int | None = None,
+    final_select: str | None = None,
 ) -> str:
     """General connected-components oracle for ANY deterministic
-    raster expressed as a DuckDB expression over (gx, gy): unrolled
-    MATERIALIZED pointer-jump rounds (the contour-oracle pattern),
-    comp id = min linearized pixel index — the same label convention
-    as the Spark polygonize. 4- or 8-connectivity. ``final_select``
+    raster expressed as a DuckDB expression over (gx, gy): the
+    graphsql pointer-jump chain over the pixel adjacency graph, comp
+    id = min linearized pixel index — the same label convention as
+    the Spark polygonize. 4- or 8-connectivity. ``final_select``
     replaces the trailing projection (it may reference the converged
-    roots relation as ``{prev}`` and the pixel table ``px``)."""
-    rounds = []
-    prev = "r0"
-    for k in range(rounds_n if rounds_n is not None else POLY_PJ_ROUNDS):
-        rounds.append(
-            f"m{k} AS MATERIALIZED (SELECT l.a AS node, min(r.root) AS mn "
-            f"FROM links l JOIN {prev} r ON r.node = l.b GROUP BY 1),\n"
-            f"p{k} AS MATERIALIZED (SELECT r.node, "
-            f"least(r.root, coalesce(m.mn, r.root)) AS root "
-            f"FROM {prev} r LEFT JOIN m{k} m ON m.node = r.node),\n"
-            f"r{k + 1} AS MATERIALIZED (SELECT a.node, b.root "
-            f"FROM p{k} a JOIN p{k} b ON b.node = a.root)"
-        )
-        prev = f"r{k + 1}"
-    pj = ",\n".join(rounds)
-    diag_links = ""
-    if connect8:
-        for dx in (1, -1):
-            diag_links += (
-                f"\n  UNION ALL\n  SELECT a.node, b.node FROM px a JOIN px b "
-                f"ON b.gx = a.gx + {dx} AND b.gy = a.gy + 1 AND b.val = a.val"
-                f"\n  UNION ALL\n  SELECT b.node, a.node FROM px a JOIN px b "
-                f"ON b.gx = a.gx + {dx} AND b.gy = a.gy + 1 AND b.val = a.val"
-            )
+    roots relation as ``{final}`` and the pixel table ``px``)."""
+    chain, final = pj_components_cte()
+    steps = [(1, 0), (0, 1)] + ([(1, 1), (-1, 1)] if connect8 else [])
+    adj = "\n  UNION ALL\n  ".join(
+        f"SELECT a.node AS a, b.node AS b FROM px a JOIN px b "
+        f"ON b.gx = a.gx + {dx} AND b.gy = a.gy + {dy} AND b.val = a.val"
+        for dx, dy in steps
+    )
     if final_select is None:
         final_select = (
             f"SELECT r.root AS comp_id, min(px.val) AS val,\n"
             f"       count(*) AS n_pixels\n"
-            f"FROM {prev} r JOIN px ON px.node = r.node\n"
+            f"FROM {final} r JOIN px ON px.node = r.node\n"
             f"GROUP BY 1"
         )
     else:
-        final_select = final_select.format(prev=prev)
+        final_select = final_select.format(final=final)
     return f"""
 WITH
 px AS MATERIALIZED (
   SELECT gx, gy, gy * {width} + gx AS node, ({band_sql}) AS val
   FROM range(0, {width}) a(gx), range(0, {height}) b(gy)),
-links AS MATERIALIZED (
-  SELECT a.node AS a, b.node AS b FROM px a JOIN px b
-  ON b.gx = a.gx + 1 AND b.gy = a.gy AND b.val = a.val
-  UNION ALL
-  SELECT b.node, a.node FROM px a JOIN px b
-  ON b.gx = a.gx + 1 AND b.gy = a.gy AND b.val = a.val
-  UNION ALL
-  SELECT a.node, b.node FROM px a JOIN px b
-  ON b.gx = a.gx AND b.gy = a.gy + 1 AND b.val = a.val
-  UNION ALL
-  SELECT b.node, a.node FROM px a JOIN px b
-  ON b.gx = a.gx AND b.gy = a.gy + 1 AND b.val = a.val{diag_links}),
-r0 AS MATERIALIZED (SELECT node, node AS root FROM px),
-{pj}
+adj AS MATERIALIZED (
+  {adj}),
+links AS MATERIALIZED (SELECT a, b FROM adj UNION ALL SELECT b, a FROM adj),
+nodes AS (SELECT node FROM px),
+{chain}
 {final_select}
 """
 

@@ -102,15 +102,20 @@ def test_label_tile_matches_bruteforce():
 
 def test_polygonize_grid_cross_tile(spark):
     """Distributed polygonize over 4 tiles == single-array labeling;
-    irregular blobs force components across tile boundaries."""
+    irregular blobs force components across tile boundaries. With
+    16-px blocks, block corners sit on the 32-px tile edges, so
+    8-connectivity must merge diagonal neighbours across tiles."""
     W = 64
-    out = polyop.polygonize_grid(spark, "block:24:3", W, W, tile_px=32).toPandas()
     gy, gx = np.mgrid[0:W, 0:W]
-    vals = ((gx // 24 + gy // 24) % 3).astype(np.int64)
-    ref = brute_cc(vals)
-    exp = canon(ref, vals)
-    got = {(int(r.comp_id), int(r.val), int(r.n_pixels)) for r in out.itertuples()}
-    assert got == exp
+    for bs, connect8 in [(24, False), (16, True)]:
+        out = polyop.polygonize_grid(
+            spark, f"block:{bs}:3", W, W, tile_px=32, connect8=connect8
+        ).toPandas()
+        vals = ((gx // bs + gy // bs) % 3).astype(np.int64)
+        exp = canon(brute_cc(vals, connect8), vals)
+        got = {(int(r.comp_id), int(r.val), int(r.n_pixels))
+               for r in out.itertuples()}
+        assert got == exp, (bs, connect8)
 
 
 def test_rasterize_all_touched_golden():

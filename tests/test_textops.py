@@ -2,6 +2,8 @@
 oracles at small scale, plus invariants the SQL oracle cannot express
 (LSH recall vs the exact path, minhash candidate soundness)."""
 
+import collections
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -206,7 +208,7 @@ def test_ann_ivf_recall(spark, embs_pdf):
 
 def test_dedup_clusters_transitive(spark):
     """Cluster assignment = transitive closure of is_dup pairs:
-    verified against a local union-find over the pair list; keepers
+    verified against a depth-first search over the pair list; keepers
     are the cluster-min doc ids; sizes sum to the corpus size."""
     from gdal_spark.operators import dedup
 
@@ -218,22 +220,20 @@ def test_dedup_clusters_transitive(spark):
         .toPandas()
     )
     out = dedup.dedup_clusters(docs).toPandas()
-    parent = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    all_ids = out["doc_id"].tolist()
-    for d in all_ids:
-        find(d)
+    adj = collections.defaultdict(set)
     for a, b in pairs.itertuples(index=False):
-        ra, rb = find(int(a)), int(find(int(b)))
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expect = {d: find(d) for d in all_ids}
+        adj[int(a)].add(int(b))
+        adj[int(b)].add(int(a))
+    expect = {}
+    for d in sorted(out["doc_id"].tolist()):  # first unseen = its min
+        if d in expect:
+            continue
+        comp, stack = {d}, [d]
+        while stack:
+            new = adj[stack.pop()] - comp
+            comp |= new
+            stack += new
+        expect.update(dict.fromkeys(comp, d))
     got = dict(zip(out["doc_id"], out["cluster_id"]))
     assert got == expect
     assert out["cluster_size"].groupby(out["cluster_id"]).first().sum() == len(out)
