@@ -88,7 +88,7 @@ def cell_hulls(images: DataFrame, zoom: int = HULL_ZOOM,
     )
     pts = cells.assign_cells(pts, zoom, "mercator")
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key, pdf):
         upts = np.unique(
             pdf[["sx", "sy"]].to_numpy(dtype=np.int64), axis=0
         )  # sorted by (x, y)

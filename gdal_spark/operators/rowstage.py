@@ -9,10 +9,10 @@ of a frame with non-string labels by position, so the output column
 names are spelled once, in the schema.
 
 ``bands`` is the one banded scanline stage: the raster's rows split
-into bands of ``band_px`` scanlines, one ``applyInPandas`` group per
+into bands of ``band_px`` scanlines, one ``mapInPandas`` partition per
 band, each band computing its own scanlines' output rows (viewshed,
 the gridders, sieve). Bands own disjoint scanlines, so the band
-frames are the output: one ``Exchange`` and no re-aggregation.
+frames are the output: no ``Exchange`` and no re-aggregation.
 
 ``envelopes`` is the one stage that appends a geometry's envelope to
 its row, for every envelope-prefiltered join (overlay's candidate
@@ -47,24 +47,23 @@ def per_row(df: DataFrame, cols, fn, schema: str) -> DataFrame:
 
 
 def bands(spark, height: int, band_px: int, run, schema: str) -> DataFrame:
-    """One group per band of ``band_px`` scanlines (the last band may
-    be shorter). ``run(y0, h)`` returns the band's columns after
+    """One partition per band of ``band_px`` scanlines (the last band
+    may be shorter). ``run(y0, h)`` returns the band's columns after
     ``schema``'s leading ``y`` column, in schema order, each holding
-    one value per scanline ``y0 .. y0 + h - 1``."""
+    one value per scanline ``y0 .. y0 + h - 1``. The bands come from a
+    range with one slice per band, so there is no shuffle for AQE to
+    coalesce into one task and the bands run in parallel."""
 
-    def stage(key, pdf):
-        y0 = int(key[0]) * band_px
-        h = min(band_px, height - y0)
-        ys = np.arange(y0, y0 + h, dtype=np.int64)
-        return pd.DataFrame(dict(enumerate([ys, *run(y0, h)])))
+    def stage(batches):
+        for pdf in batches:
+            for band in pdf["id"]:
+                y0 = int(band) * band_px
+                h = min(band_px, height - y0)
+                ys = np.arange(y0, y0 + h, dtype=np.int64)
+                yield pd.DataFrame(dict(enumerate([ys, *run(y0, h)])))
 
     nb = -(-height // band_px)
-    return (
-        spark.range(nb)
-        .selectExpr("cast(id as int) AS band")
-        .groupby("band")
-        .applyInPandas(stage, schema=schema)
-    )
+    return spark.range(0, nb, 1, nb).mapInPandas(stage, schema=schema)
 
 
 def envelopes(

@@ -21,12 +21,21 @@ Spark shape (scale-first):
    cover cells by construction. No explode on the point side.
 3. equi-join on cell_id -> candidate pairs.
 4. exact refine, JVM-side, in two branches each joined against its
-   own broadcast: rectangle polygons pass on the envelope test alone;
-   the rest run the even-odd ray cast as a Catalyst higher-order
-   expression over edge arrays pre-decoded at cover build
-   (``pip_parity_expr``). No Python worker and no Arrow transfer in
-   the probe; the Arrow numpy kernel survives only in
-   ``spatial_join_bruteforce``, the test oracle.
+   own broadcast. Rectangle polygons, and cover rows whose cell lies
+   wholly inside the polygon, pass on the envelope test alone; rows
+   whose cell lies wholly outside are dropped. The rest carry two
+   16-bit masks over their cell's 4 x 4 sub-cells at ``SUB_ZOOM``
+   (inside / touched by an edge, built per polygon in numpy at cover
+   build): a point in an inside or outside sub-cell is settled by a
+   codegen'd bit test, and only a point in a boundary sub-cell runs the
+   even-odd ray cast, a Catalyst higher-order expression over edge
+   arrays pre-decoded at cover build (``pip_parity_expr``). Exactness:
+   sub-cells are widened by ``SUB_MARGIN`` before the edge test; a
+   NULL, NaN or out-of-domain point (clipped by the encoder into an
+   edge cell) always ray-casts; rows move or drop only when the
+   polygon's envelope lies in the domain. No Python worker and no
+   Arrow transfer in the probe; the Arrow numpy kernel survives only
+   in ``spatial_join_bruteforce``, the test oracle.
 
 At 100 TB: stage 2 is map-only; the only shuffle is the equi-join
 (avoided entirely when the polygon side broadcasts); AQE skew-join
@@ -44,12 +53,24 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import geom as geom_mod
-from .. import wkb
-from .cells import assign_cells, env_cell_explode
+from .. import grid, wkb
+from .cells import assign_cells, env_cell_explode, geodetic_tile_sql
 
 JOIN_ZOOM = 6  # the one cover level; points are assigned cells here
 BROADCAST_MAX_ROWS = 2_000_000  # exploded cover rows; above it, shuffle
 ENV_COLS = ["env_x0", "env_y0", "env_x1", "env_y1"]
+# each cover row carries inside/boundary masks over its cell's sub-cells
+# at SUB_ZOOM; +2 gives 4 x 4, so both 16-bit masks pack in one bigint
+SUB_ZOOM = JOIN_ZOOM + 2
+SUB = 1 << (SUB_ZOOM - JOIN_ZOOM)  # sub-cells per cell side
+SUB_N = SUB * SUB  # bits per mask
+SUB_FULL = (1 << SUB_N) - 1
+SUB_BITS = np.int64(1) << np.arange(SUB_N, dtype=np.int64)
+SUB_MARGIN = 1e-9  # deg a sub-cell is widened by before the edge test
+# the encoder's domain: it clips a point outside it into an edge cell
+IN_DOMAIN = (
+    "{x0} >= -180.0E0 AND {x1} <= 180.0E0 AND {y0} >= -90.0E0 AND {y1} <= 90.0E0"
+)
 
 
 def polygon_cells(polys: DataFrame) -> DataFrame:
@@ -58,9 +79,13 @@ def polygon_cells(polys: DataFrame) -> DataFrame:
     (``ENV_COLS``), ``is_rect``, a pre-decoded edge array
     ([x1,y1,x2,y2] per edge, all rings — holes flip parity; NULL for
     rectangles) so the refine runs as a JVM higher-order expression
-    with no WKB decode and no Arrow transfer, and ``cell_id``. Python
-    decodes each polygon once; the per-cell rows come from a Catalyst
-    explode."""
+    with no WKB decode and no Arrow transfer, ``cell_id``, and the
+    cell's 16-bit sub-cell masks ``sub_in`` / ``sub_edge``
+    (``_cell_masks``; NULL for rectangles and non-finite polygons).
+    Python decodes each polygon once and classifies its envelope cells
+    in one numpy pass into a ``cell_id -> mask`` map; the per-cell rows
+    come from a Catalyst explode, and ``element_at`` picks each row's
+    masks out of its polygon's map."""
     out_schema = T.StructType(
         polys.schema.fields
         + [T.StructField(c, T.DoubleType(), False) for c in ENV_COLS]
@@ -68,6 +93,9 @@ def polygon_cells(polys: DataFrame) -> DataFrame:
             T.StructField("is_rect", T.BooleanType(), False),
             T.StructField(
                 "edges", T.ArrayType(T.ArrayType(T.DoubleType())), True
+            ),
+            T.StructField(
+                "masks", T.MapType(T.LongType(), T.LongType(), False), True
             ),
         ]
     )
@@ -77,30 +105,100 @@ def polygon_cells(polys: DataFrame) -> DataFrame:
             geoms = [bytes(g) for g in pdf["geom_wkb"]]
             env = np.array([wkb.envelope(g) for g in geoms]).reshape(-1, 4)
             rect = [_is_rectangle(g) for g in geoms]
+            edges = [None if r else _edges(g) for g, r in zip(geoms, rect)]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                tx, ty = grid.lonlat_to_tile_geodetic(
+                    env[:, [0, 2]], env[:, [1, 3]], JOIN_ZOOM
+                )
+                masks = [
+                    None if e is None else _cell_masks(e, *tx[k], *ty[k])
+                    for k, e in enumerate(edges)
+                ]
             yield pdf.assign(
                 **dict(zip(ENV_COLS, env.T)),
                 is_rect=rect,
-                edges=[None if r else _edge_list(g) for g, r in zip(geoms, rect)],
+                edges=[None if e is None else e.tolist() for e in edges],
+                masks=masks,
             )
 
+    m = "element_at(masks, cell_id)"
     return env_cell_explode(
         polys.mapInPandas(decode, schema=out_schema), "env_", 0.0, JOIN_ZOOM
-    )
+    ).withColumns(
+        {
+            "sub_in": F.expr(f"cast({m} & {SUB_FULL} as int)"),
+            "sub_edge": F.expr(f"cast(shiftright({m}, {SUB_N}) as int)"),
+        }
+    ).drop("masks")
 
 
-def _edge_list(geom_wkb: bytes) -> list:
-    """All ring edges of a polygon as [[x1, y1, x2, y2], ...] (rings
-    opened; every ring contributes — even-odd parity handles holes)."""
+def _edges(geom_wkb: bytes) -> np.ndarray:
+    """All ring edges of a polygon as an (E, 4) [x1, y1, x2, y2] array
+    (rings opened; every ring contributes — even-odd parity handles
+    holes)."""
     out = []
     for ring in wkb.polygon_rings(geom_wkb):
         r = np.asarray(ring, dtype=np.float64)
         if len(r) >= 2 and (r[0] == r[-1]).all():
             r = r[:-1]
-        nxt = np.roll(r, -1, axis=0)
-        out.extend(
-            np.concatenate([r, nxt], axis=1).tolist()
-        )
-    return out
+        out.append(np.concatenate([r, np.roll(r, -1, axis=0)], axis=1))
+    return np.concatenate(out).reshape(-1, 4)
+
+
+def _cell_masks(edges: np.ndarray, tx0, tx1, ty0, ty1) -> dict | None:
+    """``cell_id -> sub_in | sub_edge << SUB_N`` for every ``JOIN_ZOOM``
+    cell (tx0..tx1, ty0..ty1) of a polygon's envelope cover, each split
+    into SUB x SUB sub-cells at ``SUB_ZOOM`` (bit ``sy * SUB + sx``).
+    Run under ``np.errstate(divide="ignore", invalid="ignore")``: a
+    horizontal edge's x-intercept divides by zero, and its ray-cast
+    condition is false, as in the ray cast. A sub-cell is a
+    boundary sub-cell when an edge touches it widened by
+    ``SUB_MARGIN`` (separating-axis test: the edge's bbox, then its
+    line); otherwise every point in it has the parity of its centre,
+    ray-cast in ``pip_parity_expr``'s op order, and it is inside when
+    that parity is odd. The margin keeps both answers exact for any
+    point the encoder puts in the sub-cell: such a point is more than
+    ``SUB_MARGIN`` from every edge, far above the ray cast's rounding
+    error (about 1e-13 deg). None (ray-cast every point) for
+    non-finite coordinates."""
+    if not np.isfinite(edges).all():
+        return None
+    w = 180.0 / 2**SUB_ZOOM  # sub-cell side, deg; centres below are exact
+    cx = -180.0 + (np.arange(tx0 * SUB, (tx1 + 1) * SUB)[:, None] + 0.5) * w
+    cy = -90.0 + (np.arange(ty0 * SUB, (ty1 + 1) * SUB)[:, None] + 0.5) * w
+    ex1, ey1, ex2, ey2 = edges.T
+    h = w / 2 + SUB_MARGIN
+    # (column, edge) and (row, edge) terms: bbox overlap, and each
+    # axis' share of n . (c - p1) with n = (y1 - y2, x2 - x1)
+    xov = (np.minimum(ex1, ex2) <= cx + h) & (np.maximum(ex1, ex2) >= cx - h)
+    yov = (np.minimum(ey1, ey2) <= cy + h) & (np.maximum(ey1, ey2) >= cy - h)
+    ax = (ey1 - ey2) * (cx - ex1)
+    ay = (ex2 - ex1) * (cy - ey1)
+    r = (np.abs(ey1 - ey2) + np.abs(ex2 - ex1)) * h
+    cond = (ey1 > cy) != (ey2 > cy)
+    xint = (ex2 - ex1) * (cy - ey1) / (ey2 - ey1) + ex1
+    # (row, column, edge), a band of rows at a time
+    ny, nx = len(cy), len(cx)
+    edge = np.empty((ny, nx), dtype=bool)
+    odd = np.empty((ny, nx), dtype=bool)
+    step = max(1, (1 << 20) // (nx * len(edges)))
+    for j in range(0, ny, step):
+        s = slice(j, j + step)
+        edge[s] = (
+            yov[s, None] & xov & (np.abs(ay[s, None] + ax) <= r)
+        ).any(axis=2)
+        odd[s] = np.logical_xor.reduce(cond[s, None] & (cx < xint[s, None]), axis=2)
+
+    def pack(a):  # bit sy * SUB + sx of each cell's (sy, sx) sub-cell
+        return a.reshape(ny // SUB, SUB, nx // SUB, SUB).transpose(0, 2, 1, 3).reshape(
+            ny // SUB, nx // SUB, SUB_N
+        ) @ SUB_BITS
+
+    cells = grid.pack_cell(
+        JOIN_ZOOM, np.arange(tx0, tx1 + 1), np.arange(ty0, ty1 + 1)[:, None]
+    )
+    masks = pack(odd & ~edge) | pack(edge) << SUB_N
+    return dict(zip(cells.ravel().tolist(), masks.ravel().tolist()))
 
 
 def pip_parity_expr(lon_col: str, lat_col: str, edges_col: str = "edges") -> str:
@@ -158,8 +256,12 @@ def prepare_spatial_join(
     poly_cols: list[str] | None = None,
 ) -> "PreparedSpatialJoin":
     """Build the polygon side of the PIP join ONCE (``JOIN_ZOOM`` cell
-    cover + localCheckpoint + its row count + broadcast hints) and
-    return a reusable prober.
+    cover with its sub-cell masks + localCheckpoint + its row count +
+    broadcast hints) and return a reusable prober. The rectangle table
+    holds rectangle polygons' rows and rows whose cell lies wholly
+    inside their polygon; the geom table holds the other rows except
+    those wholly outside, with edges and masks. A row moves or drops
+    only when its polygon's envelope lies in the domain.
 
     A production pipeline joins a static polygon layer against many
     point batches; preparing the layer amortizes the cover build and
@@ -196,9 +298,19 @@ def prepare_spatial_join(
     # cores): the driver re-serializes the 42k Python-side rows into
     # every execution.  Negative result recorded in
     # BENCH/PROFILE_r4.md; the checkpointed distributed cover stays.)
-    rect_cells = pcells.filter("is_rect").select("cell_id", *ENV_COLS, *poly_cols)
-    geom_cells = pcells.filter("NOT is_rect").select(
-        "cell_id", "edges", *ENV_COLS, *poly_cols
+    # A cover row whose cell lies wholly inside its polygon needs no
+    # ray cast either (-> the rectangle table), and one wholly outside
+    # pairs nothing (dropped) -- but only when the envelope lies in the
+    # domain: the encoder clips an out-of-domain point into an edge
+    # cell, and there the cell's in-domain class says nothing about it.
+    dom = IN_DOMAIN.format(x0="env_x0", y0="env_y0", x1="env_x1", y1="env_y1")
+    whole_in = f"coalesce({dom} AND sub_in = {SUB_FULL}, false)"
+    whole_out = f"coalesce({dom} AND sub_in = 0 AND sub_edge = 0, false)"
+    rect_cells = pcells.filter(f"is_rect OR {whole_in}").select(
+        "cell_id", *ENV_COLS, *poly_cols
+    )
+    geom_cells = pcells.filter(f"NOT (is_rect OR {whole_in} OR {whole_out})").select(
+        "cell_id", "edges", "sub_in", "sub_edge", *ENV_COLS, *poly_cols
     )
     # an exact count of the checkpointed cover (cheap: it reads the
     # checkpoint blocks) decides broadcast vs shuffle
@@ -208,13 +320,40 @@ def prepare_spatial_join(
     return PreparedSpatialJoin(rect_cells, geom_cells, pcells, poly_cols)
 
 
+def point_cells(points: DataFrame, point_cols: list[str]) -> DataFrame:
+    """The probe's point side, on a narrow projection: each point's one
+    cell at ``JOIN_ZOOM`` and ``sub_bit``, the mask bit of its
+    ``SUB_ZOOM`` sub-cell in that cell. The sub-cell comes from the
+    same encoder at a power-of-two finer scale, so it falls inside the
+    cell. ``sub_bit`` is NULL (ray-cast) for a NULL, NaN or
+    out-of-domain point, which the encoder clipped into an edge cell."""
+    sub = {
+        f"s{a}": F.expr(
+            f"{geodetic_tile_sql('lon', 'lat', SUB_ZOOM, a)} - {SUB} * tile_{a}"
+        )
+        for a in "xy"
+    }
+    pt_dom = IN_DOMAIN.format(x0="lon", x1="lon", y0="lat", y1="lat")
+    sub_bit = (
+        f"CASE WHEN {pt_dom} AND sx BETWEEN 0 AND {SUB - 1} "
+        f"AND sy BETWEEN 0 AND {SUB - 1} "
+        f"THEN shiftleft(1, cast(sy * {SUB} + sx as int)) END"
+    )
+    pts = assign_cells(points, JOIN_ZOOM, grid_kind="geodetic").withColumns(sub)
+    return pts.select(
+        "lon", "lat", *point_cols, "cell_id", F.expr(sub_bit).alias("sub_bit")
+    )
+
+
 class PreparedSpatialJoin:
     """The polygon side of a PIP join, prepared once and probed many
     times (see ``prepare_spatial_join``). Holds the checkpointed cell
-    cover ``all_cells`` (the reference keeps its blocks alive), its
-    one cover level ``zs = [JOIN_ZOOM]`` and the broadcast-hinted
-    branch tables; ``probe`` is pure plan construction — no
-    driver-side actions."""
+    cover ``all_cells`` (every envelope cell, masks included; the
+    reference keeps its blocks alive), its one cover level
+    ``zs = [JOIN_ZOOM]`` and the broadcast-hinted branch tables
+    ``rect_cells`` (envelope test only) and ``geom_cells`` (mask bit
+    test, ray cast in boundary sub-cells); ``probe`` is pure plan
+    construction — no driver-side actions."""
 
     def __init__(self, rect_cells, geom_cells, all_cells, poly_cols):
         self.rect_cells = rect_cells
@@ -234,11 +373,7 @@ class PreparedSpatialJoin:
             c for c in points.columns if c not in ("lon", "lat")
         ]
 
-        # point side: its one cell at JOIN_ZOOM, on a narrow projection
-        pts = assign_cells(points, JOIN_ZOOM, grid_kind="geodetic").select(
-            "lon", "lat", *point_cols, "cell_id"
-        )
-
+        pts = point_cells(points, point_cols)
         # envelope reject, JVM-side (FilterGeometry's bbox fast path,
         # ogrlayer.cpp:1468) — cuts the refine input before the ray cast
         def bbox(df: DataFrame) -> DataFrame:
@@ -265,8 +400,14 @@ class PreparedSpatialJoin:
         # rect tasks fill the scheduler tail instead of an all-heavy
         # final wave (profiled 4.5x task-duration spread in the
         # combined stage at 32 cores).
+        # only a point in a boundary sub-cell runs the interpreted ray
+        # cast; the mask bit settles the rest (a NULL mask or bit falls
+        # through to the ray cast)
         cand = bbox(pts.join(self.geom_cells, "cell_id", "inner"))
-        refined = cand.filter(F.expr(pip_parity_expr("lon", "lat")))
+        refined = cand.filter(
+            "CASE WHEN (sub_edge & sub_bit) = 0 THEN (sub_in & sub_bit) != 0 "
+            f"ELSE {pip_parity_expr('lon', 'lat')} END"
+        )
         return refined.select(*out_cols).unionAll(rect_out)
 
 

@@ -4,6 +4,7 @@ pruning, broadcast joins on dim sides, whole-stage codegen for the
 Catalyst-only operators, and no Python in JVM-only paths."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from gdal_spark import synth
 from gdal_spark.operators import cells, ogrsql, textops
@@ -481,11 +482,23 @@ def test_tms_assign_plans_are_python_free(spark):
 
 @pytest.mark.parametrize("name", sorted(BANDED_STAGES))
 def test_banded_stage_is_one_band_shuffle(spark, name):
-    """Each band of a banded scanline stage (rowstage.bands) emits one
-    row per scanline of its own band, so the banded stage is the
-    output: one Exchange (the band grouping) and no per-scanline
-    aggregate after it — one fewer than a groupBy("y")
-    re-aggregation would add."""
-    s = plan(BANDED_STAGES[name][0](spark, 64, 64))
-    assert s.count("Exchange") == 1, s
+    """Each band of a banded scanline stage (rowstage.bands) is its own
+    partition and emits one row per scanline of its own band, so the
+    banded stage is the output: no Exchange (nothing for AQE to
+    coalesce into one task) and no per-scanline aggregate after it.
+    Partition k holds exactly band k's scanlines."""
+    df = BANDED_STAGES[name][0](spark, 64, 64)
+    s = plan(df)
+    assert "Exchange" not in s, s
     assert "Aggregate" not in s, s
+    parts = sorted(
+        (r.p, r.y0, r.y1, r.n)
+        for r in df.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.min("y").alias("y0"), F.max("y").alias("y1"), F.count("*").alias("n"))
+        .collect()
+    )
+    band_px = parts[0][3]
+    nb = -(-64 // band_px)
+    assert df.rdd.getNumPartitions() == nb > 1
+    ends = [(k * band_px, min(64, (k + 1) * band_px)) for k in range(nb)]
+    assert parts == [(k, y0, y1 - 1, y1 - y0) for k, (y0, y1) in enumerate(ends)]
