@@ -87,7 +87,7 @@ def edge_layer_pdf():
     - ``c180``: a concave C touching lon 180;
     - ``grid_holed``: a holed square whose every edge lies on a sub-cell
       border;
-    - the first holed and concave polygons of the synth layer."""
+    - the concave and holed polygons of the 16-polygon synth layer."""
     b = W_SUB  # a sub-cell border on both axes (lon 0.703125, lat 0.703125)
     e = np.nextafter(b, np.inf)
     g = 2 * W_SUB
