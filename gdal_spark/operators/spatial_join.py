@@ -29,13 +29,15 @@ Spark shape (scale-first):
    build): a point in an inside or outside sub-cell is settled by a
    codegen'd bit test, and only a point in a boundary sub-cell runs the
    even-odd ray cast, a Catalyst higher-order expression over edge
-   arrays pre-decoded at cover build (``pip_parity_expr``). Exactness:
-   sub-cells are widened by ``SUB_MARGIN`` before the edge test; a
-   NULL, NaN or out-of-domain point (clipped by the encoder into an
-   edge cell) always ray-casts; rows move or drop only when the
-   polygon's envelope lies in the domain. No Python worker and no
-   Arrow transfer in the probe; the Arrow numpy kernel survives only
-   in ``spatial_join_bruteforce``, the test oracle.
+   arrays pre-decoded at cover build (``pip_parity_expr``); each row's
+   array keeps only the edges that reach its cell's row band and west
+   side, the only ones a ray from the cell can cross. Exactness:
+   sub-cells and the edge clip are widened by ``SUB_MARGIN``; a NULL,
+   NaN or out-of-domain point (clipped by the encoder into an edge
+   cell) always ray-casts; rows move or drop, and edges are clipped,
+   only when the polygon's envelope lies in the domain. No Python
+   worker and no Arrow transfer in the probe; the Arrow numpy kernel
+   survives only in ``spatial_join_bruteforce``, the test oracle.
 
 At 100 TB: stage 2 is map-only; the only shuffle is the equi-join
 (avoided entirely when the polygon side broadcasts); AQE skew-join
@@ -50,10 +52,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, functions as F, types as T
 
 from .. import geom as geom_mod
 from .. import grid, wkb
+from ..synth import flit
 from .cells import assign_cells, env_cell_explode, geodetic_tile_sql
 
 JOIN_ZOOM = 6  # the one cover level; points are assigned cells here
@@ -256,12 +259,13 @@ def prepare_spatial_join(
     poly_cols: list[str] | None = None,
 ) -> "PreparedSpatialJoin":
     """Build the polygon side of the PIP join ONCE (``JOIN_ZOOM`` cell
-    cover with its sub-cell masks + localCheckpoint + its row count +
-    broadcast hints) and return a reusable prober. The rectangle table
-    holds rectangle polygons' rows and rows whose cell lies wholly
-    inside their polygon; the geom table holds the other rows except
-    those wholly outside, with edges and masks. A row moves or drops
-    only when its polygon's envelope lies in the domain.
+    cover with its sub-cell masks + localCheckpoint, whose job also
+    counts it + broadcast hints) and return a reusable prober. The
+    rectangle table holds rectangle polygons' rows and rows whose cell
+    lies wholly inside their polygon; the geom table holds the other
+    rows except those wholly outside, with masks and the edges a ray
+    from the row's cell can cross. A row moves or drops, and its edges
+    are clipped, only when its polygon's envelope lies in the domain.
 
     A production pipeline joins a static polygon layer against many
     point batches; preparing the layer amortizes the cover build and
@@ -287,8 +291,15 @@ def prepare_spatial_join(
     # localCheckpoint so the decode UDF runs once, not once per
     # branch; unlike persist(), the checkpoint blocks release
     # automatically when the RDD is unreferenced (no cache
-    # accumulation across repeated calls)
-    pcells = polygon_cells(polys_src).localCheckpoint(eager=True)
+    # accumulation across repeated calls). The checkpoint job also
+    # counts the cover (an observed metric), which decides broadcast vs
+    # shuffle without a second job.
+    obs = Observation()
+    pcells = (
+        polygon_cells(polys_src)
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
+        .localCheckpoint(eager=True)
+    )
     # rectangle polygons: the envelope test IS the exact test
     # (m_bFilterIsEnvelope, ogrlayer.cpp) -> a branch whose broadcast
     # carries no edge arrays and whose rows skip the ray cast
@@ -309,12 +320,28 @@ def prepare_spatial_join(
     rect_cells = pcells.filter(f"is_rect OR {whole_in}").select(
         "cell_id", *ENV_COLS, *poly_cols
     )
-    geom_cells = pcells.filter(f"NOT (is_rect OR {whole_in} OR {whole_out})").select(
-        "cell_id", "edges", "sub_in", "sub_edge", *ENV_COLS, *poly_cols
+    # A point reaches the ray cast only in its own cell, so a geom row
+    # keeps only the edges a ray from that cell can cross: those
+    # reaching the cell's row band and its west side, widened by
+    # SUB_MARGIN (again only when the envelope lies in the domain).
+    # The cell's south-west corner unpacks cell_id_sql's tile indices.
+    cw = 180.0 / 2**JOIN_ZOOM
+    xy = (1 << 29) - 1
+    cx0 = f"(cast(shiftright(cell_id, 29) & {xy} as double) * {flit(cw)} - 180.0E0)"
+    cy0 = f"(cast(cell_id & {xy} as double) * {flit(cw)} - 90.0E0)"
+    m = flit(SUB_MARGIN)
+    near = (
+        f"filter(edges, e -> greatest(e[1], e[3]) >= {cy0} - {m} "
+        f"AND least(e[1], e[3]) <= {cy0} + {flit(cw)} + {m} "
+        f"AND greatest(e[0], e[2]) >= {cx0} - {m})"
     )
-    # an exact count of the checkpointed cover (cheap: it reads the
-    # checkpoint blocks) decides broadcast vs shuffle
-    if pcells.count() <= BROADCAST_MAX_ROWS:
+    geom_cells = pcells.filter(f"NOT (is_rect OR {whole_in} OR {whole_out})").select(
+        "cell_id",
+        F.expr(f"CASE WHEN {dom} AND sub_in IS NOT NULL THEN {near} ELSE edges END")
+        .alias("edges"),
+        "sub_in", "sub_edge", *ENV_COLS, *poly_cols,
+    )
+    if obs.get["rows"] <= BROADCAST_MAX_ROWS:
         rect_cells = F.broadcast(rect_cells)
         geom_cells = F.broadcast(geom_cells)
     return PreparedSpatialJoin(rect_cells, geom_cells, pcells, poly_cols)
@@ -352,7 +379,8 @@ class PreparedSpatialJoin:
     reference keeps its blocks alive), its one cover level
     ``zs = [JOIN_ZOOM]`` and the broadcast-hinted branch tables
     ``rect_cells`` (envelope test only) and ``geom_cells`` (mask bit
-    test, ray cast in boundary sub-cells); ``probe`` is pure plan
+    test, ray cast in boundary sub-cells over the edges clipped to the
+    cell); ``probe`` is pure plan
     construction — no driver-side actions."""
 
     def __init__(self, rect_cells, geom_cells, all_cells, poly_cols):

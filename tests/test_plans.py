@@ -486,7 +486,9 @@ def test_banded_stage_is_one_band_shuffle(spark, name):
     partition and emits one row per scanline of its own band, so the
     banded stage is the output: no Exchange (nothing for AQE to
     coalesce into one task) and no per-scanline aggregate after it.
-    Partition k holds exactly band k's scanlines."""
+    Partition k holds exactly band k's scanlines. The name is kept from
+    when the stage was one band shuffle, so the 13 case ids stay
+    stable."""
     df = BANDED_STAGES[name][0](spark, 64, 64)
     s = plan(df)
     assert "Exchange" not in s, s
