@@ -1042,30 +1042,33 @@ def _q_dem_tri_riley(spark, sf_dir):
     return dem.tri_riley(_pixel_images(spark, sf_dir, _DEM_MAX_I))
 
 
+_HOT_MAX_I = 32  # hot-cell images warped by the LCC / PS / sinu paths
+
+
+def _hot_cell_images(spark, sf_dir):
+    """The hot-cell images (reproject.hot_cells_sql) with pixels."""
+    imgs = synth.images_df(spark, min(synth.n_images(sf_dir), 4096))
+    return synth.add_pixels(imgs.filter(reproject.hot_cells_sql(_HOT_MAX_I)))
+
+
 def _q_warp_reproject_lcc(spark, sf_dir):
     """gdalwarp -t_srs EPSG:2154 pixel path over the hot-cell images
     (inside the CRS service area); checksum-verified."""
-    imgs = synth.images_df(spark, min(synth.n_images(sf_dir), 4096))
-    imgs = synth.add_pixels(imgs.filter("i % 4 = 0 AND i < 32"))
-    return reproject.reproject_lcc(imgs)
+    return reproject.reproject_lcc(_hot_cell_images(spark, sf_dir))
 
 
 def _q_warp_reproject_ps(spark, sf_dir):
     """gdalwarp -t_srs EPSG:3031 pixel path (polar stereographic is
     defined at every latitude; same hot-cell subset as the LCC path
     for like-for-like cost); checksum-verified."""
-    imgs = synth.images_df(spark, min(synth.n_images(sf_dir), 4096))
-    imgs = synth.add_pixels(imgs.filter("i % 4 = 0 AND i < 32"))
-    return reproject.reproject_ps(imgs)
+    return reproject.reproject_ps(_hot_cell_images(spark, sf_dir))
 
 
 def _q_warp_reproject_sinu(spark, sf_dir):
     """gdalwarp -t_srs sinusoidal (ESRI:54008 / the MODIS-grid family)
     pixel path — fifth full warp projection family, same hot-cell
     subset as the LCC/PS paths; checksum-verified."""
-    imgs = synth.images_df(spark, min(synth.n_images(sf_dir), 4096))
-    imgs = synth.add_pixels(imgs.filter("i % 4 = 0 AND i < 32"))
-    return reproject.reproject_sinu(imgs)
+    return reproject.reproject_sinu(_hot_cell_images(spark, sf_dir))
 
 
 def _q_decontaminate(spark, sf_dir):
@@ -2357,13 +2360,13 @@ def oracle_sql() -> dict[str, str]:
         "geoloc_transform": geoloc.oracle_geoloc_transform(n, _DEM_MAX_I),
         "pq_topk": ann.oracle_pq_topk(),
         "warp_reproject_lcc": reproject.oracle_reproject_lcc(
-            min(n, 4096), 32
+            min(n, 4096), _HOT_MAX_I
         ),
         "warp_reproject_ps": reproject.oracle_reproject_ps(
-            min(n, 4096), 32
+            min(n, 4096), _HOT_MAX_I
         ),
         "warp_reproject_sinu": reproject.oracle_reproject_sinu(
-            min(n, 4096), 32
+            min(n, 4096), _HOT_MAX_I
         ),
         "decontaminate": dedup.oracle_decontaminate(),
         "dither_fs_fixed": quantize.oracle_dither_fixed(min(n, 4096), 4),

@@ -329,30 +329,15 @@ def osgb_gridshift(images: DataFrame) -> DataFrame:
     Python, no collect.  The grid table holds E/N shifts in mm, not
     the lat/lon arc-second shifts grid_table_from_ntv2 emits."""
     from .operators.reproject import (
-        OSGB_DOMAIN_SQL,
-        _OSGB_LON_CASE,
-        _OSGB_LAT_CASE,
+        OSGB_DOMAIN_SQL, _staged_corners, _with_stages,
     )
 
-    df = images.filter(OSGB_DOMAIN_SQL).selectExpr(
-        "image_id", "w", "h", "lon AS lon_c", "lat AS lat_c"
-    ).selectExpr(
-        "image_id", "w", "h", "lon_c", "lat_c",
-        "explode(array('tl', 'tr', 'bl', 'br')) AS corner",
-    ).selectExpr(
-        "image_id", "corner",
-        f"{_OSGB_LON_CASE} AS lon",
-        f"{_OSGB_LAT_CASE} AS lat",
+    df = _with_stages(
+        _staged_corners(
+            images, OSGB_DOMAIN_SQL, srs.tmd_stage_list(ETRS89_TM, "spark")
+        ),
+        _cell_stages("spark"),
     )
-    for col, expr in srs.tmd_stage_list(ETRS89_TM, "spark"):
-        df = df.selectExpr("*", f"{expr} AS {col}")
-    df = df.selectExpr(
-        "image_id", "corner",
-        "cast(floor(easting * 10.0E0) as bigint) AS e_dm",
-        "cast(floor(northing * 10.0E0) as bigint) AS n_dm",
-    )
-    for col, expr in _cell_stages("spark"):
-        df = df.selectExpr("*", f"{expr} AS {col}")
     corners = df.selectExpr(
         "*",
         "explode(array(named_struct('dc', 0, 'dr', 0), "
@@ -387,42 +372,15 @@ def osgb_gridshift(images: DataFrame) -> DataFrame:
 
 def oracle_osgb_gridshift(n: int) -> str:
     """DuckDB twin: same stage list, same integer grid join."""
-    from . import synth
     from .operators.reproject import (
-        OSGB_DOMAIN_SQL,
-        _OSGB_LON_CASE,
-        _OSGB_LAT_CASE,
+        OSGB_DOMAIN_SQL, _oracle_staged_corner_ctes, _stage_ctes,
     )
 
-    stages = [
-        f"img AS MATERIALIZED (SELECT image_id, lon, lat, w, h "
-        f"FROM ({synth.images_cte(n, 'duckdb')}) "
-        f"WHERE {OSGB_DOMAIN_SQL}), "
-        f"c0c AS MATERIALIZED (SELECT image_id, corner, "
-        f"{_OSGB_LON_CASE} AS lon, {_OSGB_LAT_CASE} AS lat "
-        f"FROM (SELECT image_id, w, h, lon AS lon_c, lat AS lat_c "
-        f"FROM img) i, (SELECT unnest(['tl', 'tr', 'bl', 'br']) "
-        f"AS corner) cs)"
-    ]
-    prev = "c0c"
-    for k, (col, expr) in enumerate(srs.tmd_stage_list(ETRS89_TM, "duckdb")):
-        name = f"t{k}"
-        stages.append(
-            f"{name} AS MATERIALIZED (SELECT *, {expr} AS {col} FROM {prev})"
-        )
-        prev = name
-    stages.append(
-        f"qz AS MATERIALIZED (SELECT image_id, corner, "
-        f"cast(floor(easting * 10.0E0) as bigint) AS e_dm, "
-        f"cast(floor(northing * 10.0E0) as bigint) AS n_dm FROM {prev})"
+    stages, prev = _oracle_staged_corner_ctes(
+        n, OSGB_DOMAIN_SQL, srs.tmd_stage_list(ETRS89_TM, "duckdb")
     )
-    prev = "qz"
-    for k, (col, expr) in enumerate(_cell_stages("duckdb")):
-        name = f"g{k}"
-        stages.append(
-            f"{name} AS MATERIALIZED (SELECT *, {expr} AS {col} FROM {prev})"
-        )
-        prev = name
+    cell, prev = _stage_ctes(prev, "g", _cell_stages("duckdb"))
+    stages += cell
     stages.append(
         f"grid AS MATERIALIZED (SELECT row, col, "
         f"cast({SE_NODE_SQL} as bigint) AS se_node, "

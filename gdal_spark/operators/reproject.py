@@ -1,27 +1,34 @@
-"""General SRS reprojection operators (gdalwarp -t_srs EPSG:326xx).
+"""General SRS reprojection operators (gdalwarp -t_srs).
 
-Fills the round-1 gap: the engine previously reprojected only through
-the closed-form 4326<->3857 pair. These operators route through the
-gdal_spark.srs transformer chain (Krueger-series UTM, the math PROJ's
-tmerc uses), so any 4326 / 3857 / UTM pair works.
+The engine's transformer chain for every projection family in
+gdal_spark.srs (Krueger-series UTM, LCC, Albers, polar stereographic,
+sinusoidal, Mollweide, Equal Earth, datum-shifted TM). Each reprojection
+decision is written once here and every family is a thin call onto it;
+only the projection math in srs.py is per family:
 
-Two driver-gated queries:
+- ``CORNERS`` — the four footprint corners (tl, tr, bl, br).
+- Wide corners (``_wide_corners`` / ``_oracle_wide_corners``): one
+  ``e_{suffix}_dm``/``n_{suffix}_dm`` column pair per point, each point
+  a (suffix, lon_sql, lat_sql, forward_sql). UTM is the wide shape over
+  one zone/lon0/fn base, with the staged Krueger forward on the Spark
+  side (``_tm_forward_staged``: the single-expression TM costs seconds
+  of Catalyst analysis).
+- Staged-long corners (``_staged_corners`` / ``_oracle_staged_corners``):
+  one (image_id, corner) row per corner, then a stage list of named
+  columns (Spark projections inside whole-stage codegen, DuckDB
+  MATERIALIZED CTEs).
+- ``_suggest_grid`` — the bounded-size GDALSuggestedWarpOutput
+  (alg/gdaltransformer.cpp:407): project the corners with a numpy
+  forward, take the bbox, one common resolution so the longer edge is
+  ``dst_w`` pixels.
+- The pixel warp (``_reproject``: suggested grid -> inverse per dst
+  pixel centre -> resample -> GDAL checksum) and its DuckDB replay
+  (``_oracle_warp``: corners -> bbox -> grid -> unrolled inverse CTE ->
+  nearest src pixel -> synthetic pixel value -> checksum).
 
-- ``utm_corners`` — per-image zone selection + forward TM of the
-  footprint corners. Pure Catalyst: the Krueger forward series is
-  emitted as a SQL expression (srs.tm_forward_sql) built only from
-  functions whole-stage codegen supports (sin/cos/ln/exp/sqrt/atan2),
-  so at 100 TB this is a map-only JVM stage with zero Python. The
-  DuckDB oracle runs the *same* fragment; outputs are quantized to
-  decimeters so the few-ulp libm drift between engines cannot flip a
-  floor boundary in practice.
-
-- ``warp_reproject_utm`` — the full pixel path: per-image suggested
-  output grid in the image's UTM zone (corner-projected bbox, common
-  resolution, GDALSuggestedWarpOutput semantics,
-  alg/gdaltransformer.cpp:407), inverse-chain per dst pixel center,
-  nearest resample, GDAL checksum. Oracle replays the whole chain in
-  SQL with the Newton-unrolled inverse (srs.tm_inverse_sql_cte).
+Every corner query is pure Catalyst (map-only JVM stage, zero Python);
+outputs are quantized to decimeters so the few-ulp libm drift between
+engines cannot flip a floor boundary in practice.
 
 Reference semantics: apps/gdalwarp_lib.cpp:2475 (per-dataset warp
 loop), alg/gdaltransformer.cpp:1756 (GenImgProj chain),
@@ -29,6 +36,8 @@ ogr/ogrct.cpp:1590 (CRS<->CRS leg).
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -50,21 +59,66 @@ FN_SQL = "(CASE WHEN lat < 0.0E0 THEN 10000000.0E0 ELSE 0.0E0 END)"
 # span 0.1*h/w deg (synth geotransform convention)
 LON2_SQL = "(lon + 0.1E0)"
 LAT2_SQL = "(lat - 0.1E0 * cast(h as double) / cast(w as double))"
+# (suffix, lon_sql, lat_sql) of the 4 footprint corners
+CORNERS = (
+    ("tl", "lon", "lat"),
+    ("tr", LON2_SQL, "lat"),
+    ("bl", "lon", LAT2_SQL),
+    ("br", LON2_SQL, LAT2_SQL),
+)
+# projected bbox over the e_{suffix}/n_{suffix} corner columns
+MINX, MAXX, MINY, MAXY = (
+    f"{agg}({', '.join(f'{axis}_{sfx}' for sfx, _, _ in CORNERS)})"
+    for agg, axis in (
+        ("least", "e"), ("greatest", "e"), ("least", "n"), ("greatest", "n")
+    )
+)
+
+DST_W = 32  # suggested-output long edge in pixels (kept small: the
+# oracle replays every dst pixel through the unrolled inverse)
 
 
-def _corner_exprs() -> list[tuple[str, str, str]]:
-    """[(suffix, easting_sql, northing_sql_with_fn)] for the 4 footprint
-    corners, in (tl, tr, bl, br) order."""
-    out = []
-    for suffix, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e, n = srs.tm_forward_sql(lon_e, lat_e, "lon0")
-        out.append((suffix, e, f"({n} + fn)"))
-    return out
+def _dm(expr: str) -> str:
+    return f"cast(floor({expr} * 10.0E0) as bigint)"
+
+
+# ---------------------------------------------------------------------------
+# wide corners: one column pair per point
+
+
+def _corner_points(forward) -> list[tuple]:
+    """CORNERS as (suffix, lon_sql, lat_sql, forward_sql) points;
+    ``forward(lon_sql, lat_sql)`` -> (easting_sql, northing_sql)."""
+    return [(sfx, lon, lat, forward) for sfx, lon, lat in CORNERS]
+
+
+def _point_cols(sfx, lon, lat, forward) -> list[str]:
+    e, n = forward(lon, lat)
+    return [f"{e} AS e_{sfx}", f"{n} AS n_{sfx}"]
+
+
+def _dm_cols(suffixes) -> list[str]:
+    return [
+        f"{_dm(f'{axis}_{sfx}')} AS {axis}_{sfx}_dm"
+        for sfx in suffixes for axis in ("e", "n")
+    ]
+
+
+def _wide_corners(images: DataFrame, points) -> DataFrame:
+    """(image_id, e_{suffix}_dm, n_{suffix}_dm per point). Map-only JVM
+    stage, zero Python."""
+    df = images.selectExpr("image_id", "lon", "lat", "w", "h")
+    for pt in points:
+        df = df.selectExpr("*", *_point_cols(*pt))
+    return df.selectExpr("image_id", *_dm_cols(pt[0] for pt in points))
+
+
+def _oracle_wide_corners(src: str, keys: list[str], points) -> str:
+    parts = []
+    for sfx, lon, lat, forward in points:
+        e, n = forward(lon, lat)
+        parts += [f"{_dm(e)} AS e_{sfx}_dm", f"{_dm(n)} AS n_{sfx}_dm"]
+    return f"SELECT {', '.join(keys + parts)} FROM {src}"
 
 
 def _tm_forward_staged(base: DataFrame, corners) -> DataFrame:
@@ -73,11 +127,9 @@ def _tm_forward_staged(base: DataFrame, corners) -> DataFrame:
     SQL twin repeats each subterm textually and costs seconds of
     analysis; this keeps the tree linear in the series order. Expects
     lon0/fn columns; corners = [(suffix, lon_expr, lat_expr)]."""
-    from .. import synth as _synth
-
-    e = _synth.flit(srs.E)
-    ka = _synth.flit(srs.K0 * srs.A_CAP)
-    fe = _synth.flit(srs.FE)
+    e = synth.flit(srs.E)
+    ka = synth.flit(srs.K0 * srs.A_CAP)
+    fe = synth.flit(srs.FE)
     df = base
     for sfx, lon_e, lat_e in corners:
         df = df.selectExpr(
@@ -97,7 +149,7 @@ def _tm_forward_staged(base: DataFrame, corners) -> DataFrame:
         xi_terms = [f"xip_{sfx}"]
         eta_terms = [f"etap_{sfx}"]
         for j, a in enumerate(srs.ALPHA, start=1):
-            aj = _synth.flit(a)
+            aj = synth.flit(a)
             xi_terms.append(
                 f"{aj} * sin({2 * j}.0E0 * xip_{sfx}) "
                 f"* cosh({2 * j}.0E0 * etap_{sfx})"
@@ -117,156 +169,137 @@ def _tm_forward_staged(base: DataFrame, corners) -> DataFrame:
     return df
 
 
+# UTM: one zone/lon0/fn base (Spark columns, DuckDB CTEs over a relation
+# ``img`` with lon/lat) under the wide corner shape
+
+
+def _utm_corner_frame(images: DataFrame) -> DataFrame:
+    """zone, lon0, fn and the e_/n_ columns of the 4 corners."""
+    base = images.selectExpr(
+        "image_id", "lon", "lat", "w", "h", f"{ZONE_SQL} AS zone"
+    ).selectExpr("*", f"{LON0_SQL} AS lon0", f"{FN_SQL} AS fn")
+    return _tm_forward_staged(base, CORNERS)
+
+
+_UTM_CTES = (
+    f"z AS (SELECT *, {ZONE_SQL} AS zone FROM img), "
+    f"g AS (SELECT *, {LON0_SQL} AS lon0, {FN_SQL} AS fn FROM z)"
+)
+
+
+def _utm_forward_sql(lon: str, lat: str) -> tuple[str, str]:
+    """The single-expression TM forward in the zone, fn added."""
+    e, n = srs.tm_forward_sql(lon, lat, "lon0")
+    return e, f"({n} + fn)"
+
+
 def utm_corners(images: DataFrame) -> DataFrame:
     """Transformer-chain query: UTM zone + dm-quantized corner
     coordinates of every image footprint. No UDFs — the whole Krueger
     forward series runs as Catalyst expressions (JVM codegen), staged
     through named intermediate columns."""
-    base = images.selectExpr(
-        "image_id",
-        "lon",
-        "lat",
-        "w",
-        "h",
-        f"{ZONE_SQL} AS zone",
-    ).selectExpr(
-        "image_id", "lon", "lat", "w", "h", "zone",
-        f"{LON0_SQL} AS lon0",
-        f"{FN_SQL} AS fn",
+    return _utm_corner_frame(images).selectExpr(
+        "image_id", "zone", *_dm_cols(sfx for sfx, _, _ in CORNERS)
     )
-    corners = [
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ]
-    df = _tm_forward_staged(base, corners)
-    exprs = ["image_id", "zone"]
-    for sfx, _, _ in corners:
-        exprs.append(f"cast(floor(e_{sfx} * 10.0E0) as bigint) AS e_{sfx}_dm")
-        exprs.append(f"cast(floor(n_{sfx} * 10.0E0) as bigint) AS n_{sfx}_dm")
-    return df.selectExpr(*exprs)
 
 
 def oracle_utm_corners(n: int) -> str:
-    parts = []
-    for suffix, e_sql, n_sql in _corner_exprs():
-        parts.append(f"cast(floor({e_sql} * 10.0E0) as bigint) AS e_{suffix}_dm")
-        parts.append(f"cast(floor({n_sql} * 10.0E0) as bigint) AS n_{suffix}_dm")
-    return (
-        f"WITH img AS ({synth.images_cte(n, 'duckdb')}), "
-        f"z AS (SELECT image_id, lon, lat, w, h, {ZONE_SQL} AS zone FROM img), "
-        f"g AS (SELECT image_id, lon, lat, w, h, zone, {LON0_SQL} AS lon0, "
-        f"{FN_SQL} AS fn FROM z) "
-        f"SELECT image_id, zone, {', '.join(parts)} FROM g"
+    return f"WITH img AS ({synth.images_cte(n, 'duckdb')}), {_UTM_CTES} " + (
+        _oracle_wide_corners(
+            "g", ["image_id", "zone"], _corner_points(_utm_forward_sql)
+        )
     )
 
 
-# ---------------------------------------------------------------------------
-# Lambert Conformal Conic corners (second projection family; EPSG
-# method 9802 / SRS_PT_LAMBERT_CONFORMAL_CONIC_2SP). Same shape as
-# utm_corners: pure Catalyst forward (sin/cos/tan/power — all inside
-# whole-stage codegen), dm quantization, DuckDB oracle running the
-# SAME dual-dialect fragment.
+# Lambert Conformal Conic (EPSG method 9802), Albers Equal Area (9822),
+# polar stereographic (9829) and sinusoidal corners: the wide shape,
+# the oracle running the SAME dual-dialect forward fragment.
+
+
+def _lcc_points(epsg):
+    return _corner_points(partial(srs.lcc_forward_sql, p=srs.LCC_REGISTRY[epsg]))
+
+
+def _aea_points(epsg):
+    return _corner_points(partial(srs.aea_forward_sql, p=srs.AEA_REGISTRY[epsg]))
+
+
+def _ps_points(epsg):
+    return _corner_points(partial(srs.ps_forward_sql, p=srs.PS_REGISTRY[epsg]))
+
+
+_SINU_POINTS = [
+    *_corner_points(partial(srs.sinu_forward_sql, p=srs.SINU_REGISTRY[54008])),
+    ("modis", "lon", "lat",
+     partial(srs.sinu_forward_sql, p=srs.SINU_REGISTRY[6974])),
+]
 
 
 def lcc_corners(images: DataFrame, epsg: int = 2154) -> DataFrame:
     """Footprint corners of every image in an LCC CRS (default
     RGF93 / Lambert-93). Map-only JVM stage, zero Python."""
-    p = srs.LCC_REGISTRY[epsg]
-    df = images.selectExpr("image_id", "lon", "lat", "w", "h")
-    corners = [
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ]
-    exprs = ["image_id"]
-    for sfx, lon_e, lat_e in corners:
-        e_sql, n_sql = srs.lcc_forward_sql(lon_e, lat_e, p)
-        df = df.selectExpr("*", f"{e_sql} AS e_{sfx}", f"{n_sql} AS n_{sfx}")
-        exprs.append(f"cast(floor(e_{sfx} * 10.0E0) as bigint) AS e_{sfx}_dm")
-        exprs.append(f"cast(floor(n_{sfx} * 10.0E0) as bigint) AS n_{sfx}_dm")
-    return df.selectExpr(*exprs)
+    return _wide_corners(images, _lcc_points(epsg))
 
 
 def oracle_lcc_corners(n: int, epsg: int = 2154) -> str:
-    p = srs.LCC_REGISTRY[epsg]
-    parts = []
-    for sfx, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e_sql, n_sql = srs.lcc_forward_sql(lon_e, lat_e, p)
-        parts.append(f"cast(floor({e_sql} * 10.0E0) as bigint) AS e_{sfx}_dm")
-        parts.append(f"cast(floor({n_sql} * 10.0E0) as bigint) AS n_{sfx}_dm")
-    return (
-        f"SELECT image_id, {', '.join(parts)} "
-        f"FROM ({synth.images_cte(n, 'duckdb')})"
+    return _oracle_wide_corners(
+        f"({synth.images_cte(n, 'duckdb')})", ["image_id"], _lcc_points(epsg)
     )
-
-
-# ---------------------------------------------------------------------------
-# Albers Equal Area corners (third projection family; EPSG method
-# 9822 / SRS_PT_ALBERS_CONIC_EQUAL_AREA). Same pure-Catalyst shape.
 
 
 def aea_corners(images: DataFrame, epsg: int = 5070) -> DataFrame:
     """Footprint corners of every image in an Albers CRS (default
     NAD83 / Conus Albers). Map-only JVM stage, zero Python."""
-    p = srs.AEA_REGISTRY[epsg]
-    df = images.selectExpr("image_id", "lon", "lat", "w", "h")
-    exprs = ["image_id"]
-    for sfx, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e_sql, n_sql = srs.aea_forward_sql(lon_e, lat_e, p)
-        df = df.selectExpr("*", f"{e_sql} AS e_{sfx}", f"{n_sql} AS n_{sfx}")
-        exprs.append(f"cast(floor(e_{sfx} * 10.0E0) as bigint) AS e_{sfx}_dm")
-        exprs.append(f"cast(floor(n_{sfx} * 10.0E0) as bigint) AS n_{sfx}_dm")
-    return df.selectExpr(*exprs)
+    return _wide_corners(images, _aea_points(epsg))
 
 
 def oracle_aea_corners(n: int, epsg: int = 5070) -> str:
-    p = srs.AEA_REGISTRY[epsg]
-    parts = []
-    for sfx, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e_sql, n_sql = srs.aea_forward_sql(lon_e, lat_e, p)
-        parts.append(f"cast(floor({e_sql} * 10.0E0) as bigint) AS e_{sfx}_dm")
-        parts.append(f"cast(floor({n_sql} * 10.0E0) as bigint) AS n_{sfx}_dm")
-    return (
-        f"SELECT image_id, {', '.join(parts)} "
-        f"FROM ({synth.images_cte(n, 'duckdb')})"
+    return _oracle_wide_corners(
+        f"({synth.images_cte(n, 'duckdb')})", ["image_id"], _aea_points(epsg)
+    )
+
+
+def ps_corners(images: DataFrame, epsg: int = 3031) -> DataFrame:
+    """Footprint corners of every image in a polar-stereographic CRS
+    (default WGS84 / Antarctic Polar Stereographic; defined for every
+    synth latitude). Map-only JVM stage, zero Python."""
+    return _wide_corners(images, _ps_points(epsg))
+
+
+def oracle_ps_corners(n: int, epsg: int = 3031) -> str:
+    return _oracle_wide_corners(
+        f"({synth.images_cte(n, 'duckdb')})", ["image_id"], _ps_points(epsg)
+    )
+
+
+def sinu_corners(images: DataFrame) -> DataFrame:
+    """Footprint corners in TWO sinusoidal CRSes at once: ESRI:54008
+    (WGS84 ellipsoidal, Snyder eq. 30-8/30-9, the 4 corners) and the
+    MODIS production grid (SR-ORG:6974 authalic sphere, the top-left
+    corner as ``modis``). Map-only JVM stage, zero Python."""
+    return _wide_corners(images, _SINU_POINTS)
+
+
+def oracle_sinu_corners(n: int) -> str:
+    return _oracle_wide_corners(
+        f"({synth.images_cte(n, 'duckdb')})", ["image_id"], _SINU_POINTS
     )
 
 
 # ---------------------------------------------------------------------------
-# Polar Stereographic: corners (pure Catalyst) + the full pixel warp
-# path (fourth projection family; EPSG method 9829 /
-# SRS_PT_POLAR_STEREOGRAPHIC). The projection is defined for every
-# synth latitude, so no service-area filter is needed.
-
-DST_W = 32  # suggested-output long edge in pixels (kept small: the
-# oracle replays every dst pixel through the unrolled inverse)
+# pixel-level reprojection: one suggested grid, one warp stage, one
+# DuckDB replay of the whole chain
 
 
-def _suggest_grid_ps(lon, lat, w, h, p, dst_w):
-    """Suggested output grid in the PS CRS (same bounded-size
-    GDALSuggestedWarpOutput shape as _suggest_grid_lcc)."""
+def _suggest_grid(lon, lat, w, h, forward, dst_w):
+    """Suggested output grid: project the 4 footprint corners with
+    ``forward(lon, lat)`` (numpy), take the bbox, one common resolution
+    so the longer edge is ``dst_w`` pixels (bounded-size variant of
+    GDALSuggestedWarpOutput). Returns (dst_gt, dst_h, dst_w_eff)."""
     res = 0.1 / w
     cx = np.array([lon, lon + w * res, lon, lon + w * res])
     cy = np.array([lat, lat, lat - h * res, lat - h * res])
-    ex, ny = srs.ps_forward(cx, cy, p)
+    ex, ny = forward(cx, cy)
     minx, maxx = ex.min(), ex.max()
     miny, maxy = ny.min(), ny.max()
     dres = max(maxx - minx, maxy - miny) / dst_w
@@ -278,67 +311,47 @@ def _suggest_grid_ps(lon, lat, w, h, p, dst_w):
 _WARP_COLS = ["bytes", "lon", "lat", "w", "h"]
 
 
-def _warp_suggested(payload, lon, lat, w, h, alg, suggest, inverse):
-    """Decode one image and warp it from its 4326 grid onto the grid
-    ``suggest(lon, lat, w, h)`` returns; ``inverse(gx, gy)`` maps
-    destination coordinates back to lon/lat."""
+def _warp(payload, lon, lat, w, h, alg, forward, inverse, dst_w):
+    """Decode one image and warp it from its 4326 grid onto its
+    suggested grid; ``inverse(gx, gy)`` maps destination coordinates
+    back to lon/lat."""
     lon, lat, w, h = float(lon), float(lat), int(w), int(h)
     res = 0.1 / w
-    dst_gt, dst_h, dst_w_eff = suggest(lon, lat, w, h)
+    dst_gt, dst_h, dst_w_eff = _suggest_grid(lon, lat, w, h, forward, dst_w)
     return resample.warp_image(
         codecs.decode_image(bytes(payload)), (lon, res, 0.0, lat, 0.0, -res),
         dst_gt, (dst_h, dst_w_eff), alg, inverse,
     )
 
 
-def reproject_ps(
-    images: DataFrame, epsg: int = 3031, dst_w: int = DST_W,
-    alg: str = "near",
-) -> DataFrame:
-    """Warp images onto a suggested polar-stereographic grid;
-    per-channel GDAL checksums. One mapInPandas stage, zero shuffle."""
-    p = srs.PS_REGISTRY[epsg]
+def _reproject(images: DataFrame, forward, inverse, dst_w, alg) -> DataFrame:
+    """Per-channel GDAL checksums of every image warped onto its
+    suggested grid. One mapInPandas stage, zero shuffle."""
     return channel_checksums(
         images, _WARP_COLS,
-        lambda *row: _warp_suggested(
-            *row, alg, lambda *g: _suggest_grid_ps(*g, p, dst_w),
-            lambda gx, gy: srs.ps_inverse(gx, gy, p),
-        ),
+        lambda *row: _warp(*row, alg, forward, inverse, dst_w),
     )
 
 
-def oracle_reproject_ps(
-    n: int, max_i: int, epsg: int = 3031, dst_w: int = DST_W
-) -> str:
-    """Replays corners -> bbox -> grid -> per-pixel PS inverse
-    (conformal-latitude fixed point unrolled) -> nearest src pixel ->
-    checksum, over the same hot-cell subset as the LCC pixel path."""
-    p = srs.PS_REGISTRY[epsg]
-    corner_parts = []
-    for suffix, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e_sql, n_sql = srs.ps_forward_sql(lon_e, lat_e, p)
-        corner_parts.append(f"{e_sql} AS e_{suffix}")
-        corner_parts.append(f"{n_sql} AS n_{suffix}")
-    keep = "i, image_id, ilon, ilat, w, h, fmt, xd, yd, dw, dh"
-    inv_cte = srs.ps_inverse_sql_cte("ec", "nc", p, "px2", keep)
-    cks_sql = checksum_sql("v", "yd * dw + xd")
-    val = synth.pixel_val_sql()
+def _oracle_warp(n, where, base, keys, forward, inverse, dst_w) -> str:
+    """DuckDB replay of the pixel warp over the images passing
+    ``where``: corners (``forward`` SQL) -> bbox -> grid -> per-pixel
+    inverse -> nearest src pixel -> synthetic pixel value -> GDAL
+    checksum. ``base`` = (CTEs over ``img``, the relation the corners
+    read); ``keys`` are extra output columns carried through the
+    inverse; ``inverse`` = (cte(base, keep), its output relation)."""
+    ctes, src = base
+    inv_cte, inv_rel = inverse
+    k = "".join(f"{c}, " for c in keys)
+    keep = f"i, image_id, ilon, ilat, w, h, fmt, {k}xd, yd, dw, dh"
+    corners = [c for pt in _corner_points(forward) for c in _point_cols(*pt)]
     return f"""
 WITH img AS (SELECT i, image_id, lon AS ilon, lat AS ilat, lon, lat, w, h, fmt
-             FROM ({synth.images_cte(n, 'duckdb')})
-             WHERE i % 4 = 0 AND i < {max_i}),
-crn AS (SELECT i, image_id, ilon, ilat, w, h, fmt,
-        {', '.join(corner_parts)} FROM img),
-bbox AS (SELECT i, image_id, ilon, ilat, w, h, fmt,
-         least(e_tl, e_tr, e_bl, e_br) AS minx,
-         greatest(e_tl, e_tr, e_bl, e_br) AS maxx,
-         least(n_tl, n_tr, n_bl, n_br) AS miny,
-         greatest(n_tl, n_tr, n_bl, n_br) AS maxy FROM crn),
+             FROM ({synth.images_cte(n, 'duckdb')}) WHERE {where}),
+{ctes}
+crn AS (SELECT *, {', '.join(corners)} FROM {src}),
+bbox AS (SELECT *, {MINX} AS minx, {MAXX} AS maxx,
+         {MINY} AS miny, {MAXY} AS maxy FROM crn),
 grd AS (SELECT bbox.*,
         greatest(maxx - minx, maxy - miny) / {dst_w}.0E0 AS dres FROM bbox),
 grd2 AS (SELECT grd.*,
@@ -350,79 +363,26 @@ px2 AS (SELECT grd2.*, xd, yd,
         maxy - (yd + 0.5E0) * dres AS nc
         FROM grd2, range(0, {dst_w}) a(xd), range(0, {dst_w}) b(yd)
         WHERE xd < dw AND yd < dh),
-{inv_cte},
-sxy AS (SELECT i, image_id, w, h, fmt, xd, yd, dw,
+{inv_cte("px2", keep)},
+sxy AS (SELECT i, image_id, w, h, fmt, {k}xd, yd, dw,
         cast(floor((lon - ilon) / (0.1E0 / w) + 1.0E-10) as bigint) AS x,
         cast(floor((ilat - lat) / (0.1E0 / w) + 1.0E-10) as bigint) AS y
-        FROM psinv),
-vals AS (SELECT image_id, xd, yd, dw, ch,
+        FROM {inv_rel}),
+vals AS (SELECT image_id, {k}xd, yd, dw, ch,
          (CASE WHEN x >= 0 AND x < w AND y >= 0 AND y < h
-               THEN {val} ELSE 0 END) AS v
+               THEN {synth.pixel_val_sql()} ELSE 0 END) AS v
          FROM sxy, range(0, 3) c(ch))
-SELECT image_id, ch AS channel,
-       {cks_sql} AS cks
-FROM vals GROUP BY 1, 2
+SELECT image_id, {k}ch AS channel,
+       {checksum_sql("v", "yd * dw + xd")} AS cks
+FROM vals GROUP BY image_id, {k}ch
 """
 
 
-def ps_corners(images: DataFrame, epsg: int = 3031) -> DataFrame:
-    """Footprint corners of every image in a polar-stereographic CRS
-    (default WGS84 / Antarctic Polar Stereographic). Map-only JVM
-    stage, zero Python."""
-    p = srs.PS_REGISTRY[epsg]
-    df = images.selectExpr("image_id", "lon", "lat", "w", "h")
-    exprs = ["image_id"]
-    for sfx, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e_sql, n_sql = srs.ps_forward_sql(lon_e, lat_e, p)
-        df = df.selectExpr("*", f"{e_sql} AS e_{sfx}", f"{n_sql} AS n_{sfx}")
-        exprs.append(f"cast(floor(e_{sfx} * 10.0E0) as bigint) AS e_{sfx}_dm")
-        exprs.append(f"cast(floor(n_{sfx} * 10.0E0) as bigint) AS n_{sfx}_dm")
-    return df.selectExpr(*exprs)
-
-
-def oracle_ps_corners(n: int, epsg: int = 3031) -> str:
-    p = srs.PS_REGISTRY[epsg]
-    parts = []
-    for sfx, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e_sql, n_sql = srs.ps_forward_sql(lon_e, lat_e, p)
-        parts.append(f"cast(floor({e_sql} * 10.0E0) as bigint) AS e_{sfx}_dm")
-        parts.append(f"cast(floor({n_sql} * 10.0E0) as bigint) AS n_{sfx}_dm")
-    return (
-        f"SELECT image_id, {', '.join(parts)} "
-        f"FROM ({synth.images_cte(n, 'duckdb')})"
-    )
-
-
-# ---------------------------------------------------------------------------
-# pixel-level reprojection
-
-
-def _suggest_grid(lon, lat, w, h, lon0, fn, dst_w=DST_W):
-    """Suggested output grid in the UTM zone: project the 4 footprint
-    corners, take the bbox, one common resolution so the longer edge is
-    ``dst_w`` pixels (bounded-size variant of GDALSuggestedWarpOutput).
-    Returns (dst_gt, dst_h, dst_w_eff)."""
-    res = 0.1 / w
-    cx = np.array([lon, lon + w * res, lon, lon + w * res])
-    cy = np.array([lat, lat, lat - h * res, lat - h * res])
-    ex, ny = srs.tm_forward(cx, cy, lon0)
-    ny = ny + fn
-    minx, maxx = ex.min(), ex.max()
-    miny, maxy = ny.min(), ny.max()
-    dres = max(maxx - minx, maxy - miny) / dst_w
-    w_eff = max(1, int(np.floor((maxx - minx) / dres + 0.5)))
-    h_eff = max(1, int(np.floor((maxy - miny) / dres + 0.5)))
-    return (minx, dres, 0.0, maxy, 0.0, -dres), h_eff, w_eff
+def hot_cells_sql(max_i: int) -> str:
+    """The hot-cell images (i % 4 = 0) among the first ``max_i``: the
+    subset inside the LCC CRS's service area, which the LCC, PS and
+    sinusoidal pixel paths warp."""
+    return f"i % 4 = 0 AND i < {max_i}"
 
 
 def reproject_utm(
@@ -437,10 +397,15 @@ def reproject_utm(
         zone = int(srs.utm_zone(np.array([lon]), np.array([lat]))[0])
         lon0 = zone * 6.0 - 183.0
         fn = srs.FN_SOUTH if lat < 0.0 else 0.0
-        warped = _warp_suggested(
-            payload, lon, lat, w, h, alg,
-            lambda *g: _suggest_grid(*g, lon0, fn, dst_w),
+
+        def forward(x, y):
+            ex, ny = srs.tm_forward(x, y, lon0)
+            return ex, ny + fn
+
+        warped = _warp(
+            payload, lon, lat, w, h, alg, forward,
             lambda gx, gy: srs.tm_inverse(gx, np.asarray(gy) - fn, lon0),
+            dst_w,
         )
         for c in range(warped.shape[2]):
             yield image_id, zone, c, gdal_checksum(warped[:, :, c])
@@ -452,154 +417,91 @@ def reproject_utm(
 
 
 def oracle_reproject_utm(n: int, max_i: int, dst_w: int = DST_W) -> str:
-    """Replays the whole chain in DuckDB SQL: corners -> bbox -> grid
-    -> per-pixel inverse TM (Newton unrolled) -> nearest src pixel ->
-    synthetic pixel value -> GDAL checksum."""
-    corner_parts = []
-    for suffix, e_sql, n_sql in _corner_exprs():
-        corner_parts.append(f"{e_sql} AS e_{suffix}")
-        corner_parts.append(f"{n_sql} AS n_{suffix}")
-    keep = "i, image_id, ilon, ilat, w, h, fmt, zone, fn, xd, yd, dw, dh"
-    inv_cte = srs.tm_inverse_sql_cte("ec", "nc - fn", "lon0", "px2", keep)
-    cks_sql = checksum_sql("v", "yd * dw + xd")
-    val = synth.pixel_val_sql()
-    return f"""
-WITH img AS (SELECT i, image_id, lon AS ilon, lat AS ilat, w, h, fmt
-             FROM ({synth.images_cte(n, 'duckdb')}) WHERE i < {max_i}),
-z AS (SELECT img.*,
-      greatest(1, least(60, cast(floor((ilon + 180.0E0) / 6.0E0) as bigint) + 1)) AS zone
-      FROM img),
-g AS (SELECT z.*, (cast(zone as double) * 6.0E0 - 183.0E0) AS lon0,
-      (CASE WHEN ilat < 0.0E0 THEN 10000000.0E0 ELSE 0.0E0 END) AS fn,
-      ilon AS lon, ilat AS lat FROM z),
-crn AS (SELECT i, image_id, ilon, ilat, w, h, fmt, zone, lon0, fn,
-        {', '.join(corner_parts)} FROM g),
-bbox AS (SELECT i, image_id, ilon, ilat, w, h, fmt, zone, lon0, fn,
-         least(e_tl, e_tr, e_bl, e_br) AS minx,
-         greatest(e_tl, e_tr, e_bl, e_br) AS maxx,
-         least(n_tl, n_tr, n_bl, n_br) AS miny,
-         greatest(n_tl, n_tr, n_bl, n_br) AS maxy FROM crn),
-grd AS (SELECT bbox.*,
-        greatest(maxx - minx, maxy - miny) / {dst_w}.0E0 AS dres FROM bbox),
-grd2 AS (SELECT grd.*,
-         greatest(1, cast(floor((maxx - minx) / dres + 0.5E0) as bigint)) AS dw,
-         greatest(1, cast(floor((maxy - miny) / dres + 0.5E0) as bigint)) AS dh
-         FROM grd),
-px2 AS (SELECT grd2.*, xd, yd,
-        minx + (xd + 0.5E0) * dres AS ec,
-        maxy - (yd + 0.5E0) * dres AS nc
-        FROM grd2, range(0, {dst_w}) a(xd), range(0, {dst_w}) b(yd)
-        WHERE xd < dw AND yd < dh),
-{inv_cte},
-sxy AS (SELECT i, image_id, w, h, fmt, zone, xd, yd, dw,
-        cast(floor((lon - ilon) / (0.1E0 / w) + 1.0E-10) as bigint) AS x,
-        cast(floor((ilat - lat) / (0.1E0 / w) + 1.0E-10) as bigint) AS y
-        FROM tminv),
-vals AS (SELECT image_id, zone, xd, yd, dw, ch,
-         (CASE WHEN x >= 0 AND x < w AND y >= 0 AND y < h
-               THEN {val} ELSE 0 END) AS v
-         FROM sxy, range(0, 3) c(ch))
-SELECT image_id, zone, ch AS channel,
-       {cks_sql} AS cks
-FROM vals GROUP BY 1, 2, 3
-"""
-
-
-# ---------------------------------------------------------------------------
-# LCC pixel warp — the round-3 projection families wired into the full
-# warp path (gdalwarp -t_srs EPSG:2154 over images inside the CRS's
-# service area; same chain as reproject_utm: suggested grid ->
-# per-dst-pixel inverse -> resample -> checksum).
-
-
-def _suggest_grid_lcc(lon, lat, w, h, p, dst_w=DST_W):
-    """Suggested output grid in the LCC CRS (bounded-size
-    GDALSuggestedWarpOutput, as _suggest_grid)."""
-    res = 0.1 / w
-    cx = np.array([lon, lon + w * res, lon, lon + w * res])
-    cy = np.array([lat, lat, lat - h * res, lat - h * res])
-    ex, ny = srs.lcc_forward(cx, cy, p)
-    minx, maxx = ex.min(), ex.max()
-    miny, maxy = ny.min(), ny.max()
-    dres = max(maxx - minx, maxy - miny) / dst_w
-    w_eff = max(1, int(np.floor((maxx - minx) / dres + 0.5)))
-    h_eff = max(1, int(np.floor((maxy - miny) / dres + 0.5)))
-    return (minx, dres, 0.0, maxy, 0.0, -dres), h_eff, w_eff
+    """The warp replay in each image's UTM zone (Newton-unrolled
+    inverse TM, srs.tm_inverse_sql_cte), over the first max_i images."""
+    return _oracle_warp(
+        n, f"i < {max_i}", (f"{_UTM_CTES},", "g"), ["zone"], _utm_forward_sql,
+        (partial(srs.tm_inverse_sql_cte, "ec", "nc - fn", "lon0"), "tminv"),
+        dst_w,
+    )
 
 
 def reproject_lcc(
     images: DataFrame, epsg: int = 2154, dst_w: int = DST_W,
     alg: str = "near",
 ) -> DataFrame:
-    """Warp images onto a suggested Lambert-Conformal-Conic grid;
-    per-channel GDAL checksums. One mapInPandas stage, zero shuffle."""
+    """Warp images onto a suggested Lambert-Conformal-Conic grid
+    (gdalwarp -t_srs EPSG:2154); per-channel GDAL checksums."""
     p = srs.LCC_REGISTRY[epsg]
-    return channel_checksums(
-        images, _WARP_COLS,
-        lambda *row: _warp_suggested(
-            *row, alg, lambda *g: _suggest_grid_lcc(*g, p, dst_w),
-            lambda gx, gy: srs.lcc_inverse(gx, gy, p),
-        ),
+    return _reproject(
+        images, partial(srs.lcc_forward, p=p), partial(srs.lcc_inverse, p=p),
+        dst_w, alg,
     )
 
 
 def oracle_reproject_lcc(
     n: int, max_i: int, epsg: int = 2154, dst_w: int = DST_W
 ) -> str:
-    """Replays corners -> bbox -> grid -> per-pixel LCC inverse
-    (fixed-point unrolled) -> nearest src pixel -> checksum. Runs over
-    the hot-cell images (i % 4 = 0) — the subset inside the CRS's
-    realistic service area."""
+    """The warp replay with the LCC inverse (fixed-point unrolled) over
+    the hot-cell images."""
     p = srs.LCC_REGISTRY[epsg]
-    corner_parts = []
-    for suffix, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e_sql, n_sql = srs.lcc_forward_sql(lon_e, lat_e, p)
-        corner_parts.append(f"{e_sql} AS e_{suffix}")
-        corner_parts.append(f"{n_sql} AS n_{suffix}")
-    keep = "i, image_id, ilon, ilat, w, h, fmt, xd, yd, dw, dh"
-    inv_cte = srs.lcc_inverse_sql_cte("ec", "nc", p, "px2", keep)
-    cks_sql = checksum_sql("v", "yd * dw + xd")
-    val = synth.pixel_val_sql()
-    return f"""
-WITH img AS (SELECT i, image_id, lon AS ilon, lat AS ilat, lon, lat, w, h, fmt
-             FROM ({synth.images_cte(n, 'duckdb')})
-             WHERE i % 4 = 0 AND i < {max_i}),
-crn AS (SELECT i, image_id, ilon, ilat, w, h, fmt,
-        {', '.join(corner_parts)} FROM img),
-bbox AS (SELECT i, image_id, ilon, ilat, w, h, fmt,
-         least(e_tl, e_tr, e_bl, e_br) AS minx,
-         greatest(e_tl, e_tr, e_bl, e_br) AS maxx,
-         least(n_tl, n_tr, n_bl, n_br) AS miny,
-         greatest(n_tl, n_tr, n_bl, n_br) AS maxy FROM crn),
-grd AS (SELECT bbox.*,
-        greatest(maxx - minx, maxy - miny) / {dst_w}.0E0 AS dres FROM bbox),
-grd2 AS (SELECT grd.*,
-         greatest(1, cast(floor((maxx - minx) / dres + 0.5E0) as bigint)) AS dw,
-         greatest(1, cast(floor((maxy - miny) / dres + 0.5E0) as bigint)) AS dh
-         FROM grd),
-px2 AS (SELECT grd2.*, xd, yd,
-        minx + (xd + 0.5E0) * dres AS ec,
-        maxy - (yd + 0.5E0) * dres AS nc
-        FROM grd2, range(0, {dst_w}) a(xd), range(0, {dst_w}) b(yd)
-        WHERE xd < dw AND yd < dh),
-{inv_cte},
-sxy AS (SELECT i, image_id, w, h, fmt, xd, yd, dw,
-        cast(floor((lon - ilon) / (0.1E0 / w) + 1.0E-10) as bigint) AS x,
-        cast(floor((ilat - lat) / (0.1E0 / w) + 1.0E-10) as bigint) AS y
-        FROM lccinv),
-vals AS (SELECT image_id, xd, yd, dw, ch,
-         (CASE WHEN x >= 0 AND x < w AND y >= 0 AND y < h
-               THEN {val} ELSE 0 END) AS v
-         FROM sxy, range(0, 3) c(ch))
-SELECT image_id, ch AS channel,
-       {cks_sql} AS cks
-FROM vals GROUP BY 1, 2
-"""
+    return _oracle_warp(
+        n, hot_cells_sql(max_i), ("", "img"), [],
+        partial(srs.lcc_forward_sql, p=p),
+        (partial(srs.lcc_inverse_sql_cte, "ec", "nc", p), "lccinv"), dst_w,
+    )
+
+
+def reproject_ps(
+    images: DataFrame, epsg: int = 3031, dst_w: int = DST_W,
+    alg: str = "near",
+) -> DataFrame:
+    """Warp images onto a suggested polar-stereographic grid;
+    per-channel GDAL checksums."""
+    p = srs.PS_REGISTRY[epsg]
+    return _reproject(
+        images, partial(srs.ps_forward, p=p), partial(srs.ps_inverse, p=p),
+        dst_w, alg,
+    )
+
+
+def oracle_reproject_ps(
+    n: int, max_i: int, epsg: int = 3031, dst_w: int = DST_W
+) -> str:
+    """The warp replay with the PS inverse (conformal-latitude fixed
+    point unrolled) over the hot-cell images."""
+    p = srs.PS_REGISTRY[epsg]
+    return _oracle_warp(
+        n, hot_cells_sql(max_i), ("", "img"), [],
+        partial(srs.ps_forward_sql, p=p),
+        (partial(srs.ps_inverse_sql_cte, "ec", "nc", p), "psinv"), dst_w,
+    )
+
+
+def reproject_sinu(
+    images: DataFrame, key: int = 54008, dst_w: int = DST_W,
+    alg: str = "near",
+) -> DataFrame:
+    """Warp images onto a suggested sinusoidal (MODIS-family) grid;
+    per-channel GDAL checksums."""
+    p = srs.SINU_REGISTRY[key]
+    return _reproject(
+        images, partial(srs.sinu_forward, p=p), partial(srs.sinu_inverse, p=p),
+        dst_w, alg,
+    )
+
+
+def oracle_reproject_sinu(
+    n: int, max_i: int, key: int = 54008, dst_w: int = DST_W
+) -> str:
+    """The warp replay with the sinusoidal inverse (meridional-arc
+    Newton unrolled) over the hot-cell images."""
+    p = srs.SINU_REGISTRY[key]
+    return _oracle_warp(
+        n, hot_cells_sql(max_i), ("", "img"), [],
+        partial(srs.sinu_forward_sql, p=p),
+        (partial(srs.sinu_inverse_sql_cte, "ec", "nc", p), "sinuinv"), dst_w,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -609,278 +511,165 @@ FROM vals GROUP BY 1, 2
 # of it, so neighboring jobs produce pixel-aligned grids.
 
 
+def _tap_cols(tr: float) -> list[str]:
+    t = synth.flit(tr)
+    return [
+        "image_id", "zone",
+        f"cast(floor({MINX} / {t}) * {tr:.0f} as bigint) AS tap_minx",
+        f"cast(ceil({MAXY} / {t}) * {tr:.0f} as bigint) AS tap_maxy",
+        f"cast(ceil({MAXX} / {t}) - floor({MINX} / {t}) as bigint) AS tap_w",
+        f"cast(ceil({MAXY} / {t}) - floor({MINY} / {t}) as bigint) AS tap_h",
+    ]
+
+
 def utm_tap_grid(images: DataFrame, tr: float = 100.0) -> DataFrame:
     """(image_id, zone, tap_minx, tap_maxy, tap_w, tap_h): the
     tap-aligned UTM output grid of every image footprint at ``tr``
     meters. Pure Catalyst (staged Krueger forward + floor/ceil
     arithmetic); coordinates are exact multiples of tr -> bigint."""
-    from .. import synth as _synth
-
-    base = images.selectExpr(
-        "image_id", "lon", "lat", "w", "h", f"{ZONE_SQL} AS zone"
-    ).selectExpr(
-        "image_id", "lon", "lat", "w", "h", "zone",
-        f"{LON0_SQL} AS lon0", f"{FN_SQL} AS fn",
-    )
-    corners = [
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ]
-    df = _tm_forward_staged(base, corners)
-    t = _synth.flit(tr)
-    mnx = "least(e_tl, e_tr, e_bl, e_br)"
-    mxx = "greatest(e_tl, e_tr, e_bl, e_br)"
-    mny = "least(n_tl, n_tr, n_bl, n_br)"
-    mxy = "greatest(n_tl, n_tr, n_bl, n_br)"
-    return df.selectExpr(
-        "image_id", "zone",
-        f"cast(floor({mnx} / {t}) * {tr:.0f} as bigint) AS tap_minx",
-        f"cast(ceil({mxy} / {t}) * {tr:.0f} as bigint) AS tap_maxy",
-        f"cast(ceil({mxx} / {t}) - floor({mnx} / {t}) as bigint) AS tap_w",
-        f"cast(ceil({mxy} / {t}) - floor({mny} / {t}) as bigint) AS tap_h",
-    )
+    return _utm_corner_frame(images).selectExpr(*_tap_cols(tr))
 
 
 def oracle_utm_tap_grid(n: int, tr: float = 100.0) -> str:
-    from .. import synth as _synth
-
-    t = _synth.flit(tr)
-    parts = []
-    for suffix, e_sql, n_sql in _corner_exprs():
-        parts.append(f"{e_sql} AS e_{suffix}")
-        parts.append(f"{n_sql} AS n_{suffix}")
-    mnx = "least(e_tl, e_tr, e_bl, e_br)"
-    mxx = "greatest(e_tl, e_tr, e_bl, e_br)"
-    mny = "least(n_tl, n_tr, n_bl, n_br)"
-    mxy = "greatest(n_tl, n_tr, n_bl, n_br)"
+    corners = [
+        c for pt in _corner_points(_utm_forward_sql) for c in _point_cols(*pt)
+    ]
     return (
-        f"WITH img AS ({synth.images_cte(n, 'duckdb')}), "
-        f"z AS (SELECT image_id, lon, lat, w, h, {ZONE_SQL} AS zone FROM img), "
-        f"g AS (SELECT image_id, lon, lat, w, h, zone, {LON0_SQL} AS lon0, "
-        f"{FN_SQL} AS fn FROM z), "
-        f"c AS (SELECT image_id, zone, {', '.join(parts)} FROM g) "
-        f"SELECT image_id, zone, "
-        f"cast(floor({mnx} / {t}) * {tr:.0f} as bigint) AS tap_minx, "
-        f"cast(ceil({mxy} / {t}) * {tr:.0f} as bigint) AS tap_maxy, "
-        f"cast(ceil({mxx} / {t}) - floor({mnx} / {t}) as bigint) AS tap_w, "
-        f"cast(ceil({mxy} / {t}) - floor({mny} / {t}) as bigint) AS tap_h "
-        f"FROM c"
+        f"WITH img AS ({synth.images_cte(n, 'duckdb')}), {_UTM_CTES}, "
+        f"c AS (SELECT image_id, zone, {', '.join(corners)} FROM g) "
+        f"SELECT {', '.join(_tap_cols(tr))} FROM c"
     )
 
 
 # ---------------------------------------------------------------------------
-# EPSG:27700 corners — datum-shifted projected CRS (r4; the r3
-# verdict's missing item 5). Chain per corner: WGS84 geodetic ->
-# geocentric -> 7-param Helmert (negated TOWGS84) -> geodetic on
-# Airy 1830 (fixed-point) -> Krueger TM forward with OSGB constants.
-# Both engines run the SAME srs.tmd_stage_list stages; the Spark side
-# keeps each non-cheap intermediate as a named column (staying inside
-# whole-stage codegen without textual re-expansion), the oracle as
-# MATERIALIZED CTE stages. Verified against the Ordnance Survey
-# worked example (projection sub-mm; full chain within the published
-# few-m difference between TOWGS84 and the OSTN grid).
+# Staged-long corners: explode the 4 footprint corners to rows FIRST,
+# then run a (column, expr) stage list once — both engines execute
+# identical SQL text per stage, Spark as named projections inside
+# whole-stage codegen, DuckDB as MATERIALIZED CTE stages. Used by
+# EPSG:27700 (WGS84 -> geocentric -> 7-param Helmert -> Airy geodetic ->
+# Krueger TM with OSGB constants, srs.tmd_stage_list; verified against
+# the Ordnance Survey worked example), World Mollweide (ESRI:54009,
+# Newton forward) and Equal Earth (EPSG:8857, authalic closed form),
+# and the corner prefix of gridshift.osgb_gridshift.
 
 OSGB_DOMAIN_SQL = (
     "lon > -12.0E0 AND lon < 8.0E0 AND lat > 35.0E0 AND lat < 65.0E0"
 )
-_OSGB_LON_CASE = (
+_CORNER_NAMES = ", ".join(f"'{sfx}'" for sfx, _, _ in CORNERS)
+_WCORNER_LON_CASE = (
     "CASE WHEN corner IN ('tr', 'br') THEN (lon_c + 0.1E0) "
     "ELSE lon_c END"
 )
-_OSGB_LAT_CASE = (
+_WCORNER_LAT_CASE = (
     "CASE WHEN corner IN ('bl', 'br') THEN (lat_c - 0.1E0 * "
     "cast(h as double) / cast(w as double)) ELSE lat_c END"
 )
+_STAGED_DM = [
+    "image_id", "corner",
+    f"{_dm('easting')} AS e_dm", f"{_dm('northing')} AS n_dm",
+]
+
+
+def _with_stages(df: DataFrame, stages) -> DataFrame:
+    """One named Catalyst column per (column, expr) stage."""
+    for col, expr in stages:
+        df = df.selectExpr("*", f"{expr} AS {col}")
+    return df
+
+
+def _stage_ctes(prev: str, prefix: str, stages) -> tuple[list[str], str]:
+    """One MATERIALIZED CTE per (column, expr) stage over ``prev``
+    (the DuckDB CTE rule); returns (ctes, the last relation)."""
+    ctes = []
+    for k, (col, expr) in enumerate(stages):
+        ctes.append(
+            f"{prefix}{k} AS MATERIALIZED (SELECT *, {expr} AS {col} "
+            f"FROM {prev})"
+        )
+        prev = f"{prefix}{k}"
+    return ctes, prev
+
+
+def _staged_corners(images: DataFrame, domain: str, stages) -> DataFrame:
+    """(image_id, corner, e_dm, n_dm) of the images inside ``domain``:
+    the stage list maps (lon, lat) columns to (easting, northing)."""
+    df = images.filter(domain).selectExpr(
+        "image_id", "w", "h", "lon AS lon_c", "lat AS lat_c"
+    ).selectExpr(
+        "image_id", "w", "h", "lon_c", "lat_c",
+        f"explode(array({_CORNER_NAMES})) AS corner",
+    ).selectExpr(
+        "image_id", "corner",
+        f"{_WCORNER_LON_CASE} AS lon",
+        f"{_WCORNER_LAT_CASE} AS lat",
+    )
+    return _with_stages(df, stages).selectExpr(*_STAGED_DM)
+
+
+def _oracle_staged_corner_ctes(
+    n: int, domain: str, stages
+) -> tuple[list[str], str]:
+    """DuckDB twin of _staged_corners as CTEs; returns (ctes, the
+    relation holding image_id, corner, e_dm, n_dm)."""
+    ctes, prev = _stage_ctes("c0", "w", stages)
+    return [
+        f"img AS MATERIALIZED (SELECT image_id, w, h, lon AS lon_c, "
+        f"lat AS lat_c FROM ({synth.images_cte(n, 'duckdb')}) "
+        f"WHERE {domain})",
+        f"c0 AS MATERIALIZED (SELECT image_id, corner, "
+        f"{_WCORNER_LON_CASE} AS lon, {_WCORNER_LAT_CASE} AS lat "
+        f"FROM img, (SELECT unnest([{_CORNER_NAMES}]) AS corner) cs)",
+        *ctes,
+        f"qz AS MATERIALIZED (SELECT {', '.join(_STAGED_DM)} FROM {prev})",
+    ], "qz"
+
+
+def _oracle_staged_corners(n: int, domain: str, stages) -> str:
+    ctes, rel = _oracle_staged_corner_ctes(n, domain, stages)
+    return "WITH " + ", ".join(ctes) + f" SELECT * FROM {rel}"
 
 
 def osgb_corners(images: DataFrame, epsg: int = 27700) -> DataFrame:
     """(image_id, corner, e_dm, n_dm) of footprint corners in British
     National Grid — map-only, zero Python, dm-quantized."""
-    p = srs.TMD_REGISTRY[epsg]
-    df = images.filter(OSGB_DOMAIN_SQL).selectExpr(
-        "image_id", "w", "h", "lon AS lon_c", "lat AS lat_c"
-    ).selectExpr(
-        "image_id", "w", "h", "lon_c", "lat_c",
-        "explode(array('tl', 'tr', 'bl', 'br')) AS corner",
-    ).selectExpr(
-        "image_id", "corner",
-        f"{_OSGB_LON_CASE} AS lon",
-        f"{_OSGB_LAT_CASE} AS lat",
-    )
-    for col, expr in srs.tmd_stage_list(p, "spark"):
-        df = df.selectExpr("*", f"{expr} AS {col}")
-    return df.selectExpr(
-        "image_id", "corner",
-        "cast(floor(easting * 10.0E0) as bigint) AS e_dm",
-        "cast(floor(northing * 10.0E0) as bigint) AS n_dm",
-    )
-
-
-def _suggest_grid_sinu(lon, lat, w, h, p, dst_w):
-    """Suggested output grid in the sinusoidal CRS (same bounded-size
-    GDALSuggestedWarpOutput shape as _suggest_grid_ps)."""
-    res = 0.1 / w
-    cx = np.array([lon, lon + w * res, lon, lon + w * res])
-    cy = np.array([lat, lat, lat - h * res, lat - h * res])
-    ex, ny = srs.sinu_forward(cx, cy, p)
-    minx, maxx = ex.min(), ex.max()
-    miny, maxy = ny.min(), ny.max()
-    dres = max(maxx - minx, maxy - miny) / dst_w
-    w_eff = max(1, int(np.floor((maxx - minx) / dres + 0.5)))
-    h_eff = max(1, int(np.floor((maxy - miny) / dres + 0.5)))
-    return (minx, dres, 0.0, maxy, 0.0, -dres), h_eff, w_eff
-
-
-def reproject_sinu(
-    images: DataFrame, key: int = 54008, dst_w: int = DST_W,
-    alg: str = "near",
-) -> DataFrame:
-    """Warp images onto a suggested sinusoidal (MODIS-family) grid;
-    per-channel GDAL checksums. One mapInPandas stage, zero shuffle —
-    the fifth full pixel-warp projection family."""
-    p = srs.SINU_REGISTRY[key]
-    return channel_checksums(
-        images, _WARP_COLS,
-        lambda *row: _warp_suggested(
-            *row, alg, lambda *g: _suggest_grid_sinu(*g, p, dst_w),
-            lambda gx, gy: srs.sinu_inverse(gx, gy, p),
-        ),
-    )
-
-
-def oracle_reproject_sinu(
-    n: int, max_i: int, key: int = 54008, dst_w: int = DST_W
-) -> str:
-    """Replays corners -> bbox -> grid -> per-pixel sinusoidal inverse
-    (meridional-arc Newton unrolled) -> nearest src pixel -> checksum,
-    over the same hot-cell subset as the LCC/PS pixel paths."""
-    p = srs.SINU_REGISTRY[key]
-    corner_parts = []
-    for suffix, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e_sql, n_sql = srs.sinu_forward_sql(lon_e, lat_e, p)
-        corner_parts.append(f"{e_sql} AS e_{suffix}")
-        corner_parts.append(f"{n_sql} AS n_{suffix}")
-    keep = "i, image_id, ilon, ilat, w, h, fmt, xd, yd, dw, dh"
-    inv_cte = srs.sinu_inverse_sql_cte("ec", "nc", p, "px2", keep)
-    cks_sql = checksum_sql("v", "yd * dw + xd")
-    val = synth.pixel_val_sql()
-    return f"""
-WITH img AS (SELECT i, image_id, lon AS ilon, lat AS ilat, lon, lat, w, h, fmt
-             FROM ({synth.images_cte(n, 'duckdb')})
-             WHERE i % 4 = 0 AND i < {max_i}),
-crn AS (SELECT i, image_id, ilon, ilat, w, h, fmt,
-        {', '.join(corner_parts)} FROM img),
-bbox AS (SELECT i, image_id, ilon, ilat, w, h, fmt,
-         least(e_tl, e_tr, e_bl, e_br) AS minx,
-         greatest(e_tl, e_tr, e_bl, e_br) AS maxx,
-         least(n_tl, n_tr, n_bl, n_br) AS miny,
-         greatest(n_tl, n_tr, n_bl, n_br) AS maxy FROM crn),
-grd AS (SELECT bbox.*,
-        greatest(maxx - minx, maxy - miny) / {dst_w}.0E0 AS dres FROM bbox),
-grd2 AS (SELECT grd.*,
-         greatest(1, cast(floor((maxx - minx) / dres + 0.5E0) as bigint)) AS dw,
-         greatest(1, cast(floor((maxy - miny) / dres + 0.5E0) as bigint)) AS dh
-         FROM grd),
-px2 AS (SELECT grd2.*, xd, yd,
-        minx + (xd + 0.5E0) * dres AS ec,
-        maxy - (yd + 0.5E0) * dres AS nc
-        FROM grd2, range(0, {dst_w}) a(xd), range(0, {dst_w}) b(yd)
-        WHERE xd < dw AND yd < dh),
-{inv_cte},
-sxy AS (SELECT i, image_id, w, h, fmt, xd, yd, dw,
-        cast(floor((lon - ilon) / (0.1E0 / w) + 1.0E-10) as bigint) AS x,
-        cast(floor((ilat - lat) / (0.1E0 / w) + 1.0E-10) as bigint) AS y
-        FROM sinuinv),
-vals AS (SELECT image_id, xd, yd, dw, ch,
-         (CASE WHEN x >= 0 AND x < w AND y >= 0 AND y < h
-               THEN {val} ELSE 0 END) AS v
-         FROM sxy, range(0, 3) c(ch))
-SELECT image_id, ch AS channel,
-       {cks_sql} AS cks
-FROM vals GROUP BY 1, 2
-"""
-
-
-def sinu_corners(images: DataFrame) -> DataFrame:
-    """Footprint corners in TWO sinusoidal CRSes at once: ESRI:54008
-    (WGS84 ellipsoidal, Snyder eq. 30-8/30-9) and the MODIS production
-    grid (SR-ORG:6974 authalic sphere). Map-only JVM stage, zero
-    Python; dm-quantized like the other corner families."""
-    pw = srs.SINU_REGISTRY[54008]
-    pm = srs.SINU_REGISTRY[6974]
-    df = images.selectExpr("image_id", "lon", "lat", "w", "h")
-    exprs = ["image_id"]
-    for sfx, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e_sql, n_sql = srs.sinu_forward_sql(lon_e, lat_e, pw)
-        df = df.selectExpr("*", f"{e_sql} AS e_{sfx}", f"{n_sql} AS n_{sfx}")
-        exprs.append(f"cast(floor(e_{sfx} * 10.0E0) as bigint) AS e_{sfx}_dm")
-        exprs.append(f"cast(floor(n_{sfx} * 10.0E0) as bigint) AS n_{sfx}_dm")
-    em, nm = srs.sinu_forward_sql("lon", "lat", pm)
-    df = df.selectExpr("*", f"{em} AS e_mod", f"{nm} AS n_mod")
-    exprs.append("cast(floor(e_mod * 10.0E0) as bigint) AS e_modis_dm")
-    exprs.append("cast(floor(n_mod * 10.0E0) as bigint) AS n_modis_dm")
-    return df.selectExpr(*exprs)
-
-
-def oracle_sinu_corners(n: int) -> str:
-    pw = srs.SINU_REGISTRY[54008]
-    pm = srs.SINU_REGISTRY[6974]
-    parts = []
-    for sfx, lon_e, lat_e in (
-        ("tl", "lon", "lat"),
-        ("tr", LON2_SQL, "lat"),
-        ("bl", "lon", LAT2_SQL),
-        ("br", LON2_SQL, LAT2_SQL),
-    ):
-        e_sql, n_sql = srs.sinu_forward_sql(lon_e, lat_e, pw)
-        parts.append(f"cast(floor({e_sql} * 10.0E0) as bigint) AS e_{sfx}_dm")
-        parts.append(f"cast(floor({n_sql} * 10.0E0) as bigint) AS n_{sfx}_dm")
-    em, nm = srs.sinu_forward_sql("lon", "lat", pm)
-    parts.append(f"cast(floor({em} * 10.0E0) as bigint) AS e_modis_dm")
-    parts.append(f"cast(floor({nm} * 10.0E0) as bigint) AS n_modis_dm")
-    return (
-        f"SELECT image_id, {', '.join(parts)} "
-        f"FROM ({synth.images_cte(n, 'duckdb')})"
+    return _staged_corners(
+        images, OSGB_DOMAIN_SQL,
+        srs.tmd_stage_list(srs.TMD_REGISTRY[epsg], "spark"),
     )
 
 
 def oracle_osgb_corners(n: int, epsg: int = 27700) -> str:
-    p = srs.TMD_REGISTRY[epsg]
-    stages = [
-        f"img AS MATERIALIZED (SELECT image_id, lon, lat, w, h "
-        f"FROM ({synth.images_cte(n, 'duckdb')}) "
-        f"WHERE {OSGB_DOMAIN_SQL}), "
-        f"c0 AS MATERIALIZED (SELECT image_id, corner, "
-        f"{_OSGB_LON_CASE} AS lon, {_OSGB_LAT_CASE} AS lat "
-        f"FROM (SELECT image_id, w, h, lon AS lon_c, lat AS lat_c "
-        f"FROM img) i, (SELECT unnest(['tl', 'tr', 'bl', 'br']) "
-        f"AS corner) cs)"
-    ]
-    prev = "c0"
-    for k, (col, expr) in enumerate(srs.tmd_stage_list(p, "duckdb")):
-        name = f"t{k}"
-        stages.append(
-            f"{name} AS MATERIALIZED (SELECT *, {expr} AS {col} "
-            f"FROM {prev})"
-        )
-        prev = name
-    return (
-        "WITH " + ", ".join(stages)
-        + f" SELECT image_id, corner, "
-        f"cast(floor(easting * 10.0E0) as bigint) AS e_dm, "
-        f"cast(floor(northing * 10.0E0) as bigint) AS n_dm FROM {prev}"
+    return _oracle_staged_corners(
+        n, OSGB_DOMAIN_SQL,
+        srs.tmd_stage_list(srs.TMD_REGISTRY[epsg], "duckdb"),
+    )
+
+
+def moll_corners(images: DataFrame) -> DataFrame:
+    """(image_id, corner, e_dm, n_dm) in World Mollweide (ESRI:54009)
+    — map-only JVM stage, zero Python, dm-quantized."""
+    return _staged_corners(
+        images, "true", srs.moll_stage_list(srs.MOLL_REGISTRY[54009])
+    )
+
+
+def oracle_moll_corners(n: int) -> str:
+    return _oracle_staged_corners(
+        n, "true", srs.moll_stage_list(srs.MOLL_REGISTRY[54009])
+    )
+
+
+def eqearth_corners(images: DataFrame) -> DataFrame:
+    """(image_id, corner, e_dm, n_dm) in Equal Earth (EPSG:8857,
+    ellipsoidal via authalic latitude) — map-only, zero Python."""
+    return _staged_corners(
+        images, "true", srs.eqearth_stage_list(srs.EQE_REGISTRY[8857])
+    )
+
+
+def oracle_eqearth_corners(n: int) -> str:
+    return _oracle_staged_corners(
+        n, "true", srs.eqearth_stage_list(srs.EQE_REGISTRY[8857])
     )
 
 
@@ -888,8 +677,27 @@ def oracle_osgb_corners(n: int, epsg: int = 27700) -> str:
 # gdalmove: rewrite the geotransform in a new CRS without warping
 # (osgeo_utils/gdalmove.py move() — transforms control points through
 # the coordinate operation and fits an affine GT to them; with the
-# three independent corners UL/UR/LL the least-squares fit is exact,
-# so this is the skew-free closed form of the same operation)
+# three independent corners UL/UR/LL (tl/tr/bl) the least-squares fit
+# is exact, so this is the skew-free closed form of the same operation)
+
+_GDALMOVE_GT = [
+    "image_id",
+    "cast(floor(e_tl * 1000.0E0) as bigint) AS gt0_mm",
+    "cast(floor((e_tr - e_tl) / cast(w as double) * 1000000.0E0) as bigint) "
+    "AS gt1_um",
+    "cast(floor((e_bl - e_tl) / cast(h as double) * 1000000.0E0) as bigint) "
+    "AS gt2_um",
+    "cast(floor(n_tl * 1000.0E0) as bigint) AS gt3_mm",
+    "cast(floor((n_tr - n_tl) / cast(w as double) * 1000000.0E0) as bigint) "
+    "AS gt4_um",
+    "cast(floor((n_bl - n_tl) / cast(h as double) * 1000000.0E0) as bigint) "
+    "AS gt5_um",
+]
+
+
+def _gdalmove_cols(epsg: int) -> list[str]:
+    forward = partial(srs.sinu_forward_sql, p=srs.SINU_REGISTRY[epsg])
+    return [c for pt in _corner_points(forward)[:3] for c in _point_cols(*pt)]
 
 
 def gdalmove_gt(images: DataFrame, epsg: int = 54008) -> DataFrame:
@@ -898,51 +706,16 @@ def gdalmove_gt(images: DataFrame, epsg: int = 54008) -> DataFrame:
     the pixel vectors. Pure Catalyst closed form (sin/cos bit-match
     across engines) — map-only, zero Python, zero shuffle. Offsets in
     mm, per-pixel terms in um/px."""
-    p = srs.SINU_REGISTRY[epsg]
-    xul, yul = srs.sinu_forward_sql("lon", "lat", p)
-    xur, yur = srs.sinu_forward_sql(LON2_SQL, "lat", p)
-    xll, yll = srs.sinu_forward_sql("lon", LAT2_SQL, p)
     return images.selectExpr(
-        "image_id", "lon", "lat", "w", "h",
-        f"{xul} AS xul", f"{yul} AS yul",
-        f"{xur} AS xur", f"{yur} AS yur",
-        f"{xll} AS xll", f"{yll} AS yll",
-    ).selectExpr(
-        "image_id",
-        "cast(floor(xul * 1000.0E0) as bigint) AS gt0_mm",
-        "cast(floor((xur - xul) / cast(w as double) * 1000000.0E0) as bigint) "
-        "AS gt1_um",
-        "cast(floor((xll - xul) / cast(h as double) * 1000000.0E0) as bigint) "
-        "AS gt2_um",
-        "cast(floor(yul * 1000.0E0) as bigint) AS gt3_mm",
-        "cast(floor((yur - yul) / cast(w as double) * 1000000.0E0) as bigint) "
-        "AS gt4_um",
-        "cast(floor((yll - yul) / cast(h as double) * 1000000.0E0) as bigint) "
-        "AS gt5_um",
-    )
+        "image_id", "w", "h", *_gdalmove_cols(epsg)
+    ).selectExpr(*_GDALMOVE_GT)
 
 
 def oracle_gdalmove_gt(n: int, epsg: int = 54008) -> str:
-    p = srs.SINU_REGISTRY[epsg]
-    xul, yul = srs.sinu_forward_sql("lon", "lat", p)
-    xur, yur = srs.sinu_forward_sql(LON2_SQL, "lat", p)
-    xll, yll = srs.sinu_forward_sql("lon", LAT2_SQL, p)
     return (
-        f"WITH c AS (SELECT image_id, w, h, "
-        f"{xul} AS xul, {yul} AS yul, {xur} AS xur, {yur} AS yur, "
-        f"{xll} AS xll, {yll} AS yll "
+        f"WITH c AS (SELECT image_id, w, h, {', '.join(_gdalmove_cols(epsg))} "
         f"FROM ({synth.images_cte(n, 'duckdb')})) "
-        f"SELECT image_id, "
-        f"cast(floor(xul * 1000.0E0) as bigint) AS gt0_mm, "
-        f"cast(floor((xur - xul) / cast(w as double) * 1000000.0E0) as bigint) "
-        f"AS gt1_um, "
-        f"cast(floor((xll - xul) / cast(h as double) * 1000000.0E0) as bigint) "
-        f"AS gt2_um, "
-        f"cast(floor(yul * 1000.0E0) as bigint) AS gt3_mm, "
-        f"cast(floor((yur - yul) / cast(w as double) * 1000000.0E0) as bigint) "
-        f"AS gt4_um, "
-        f"cast(floor((yll - yul) / cast(h as double) * 1000000.0E0) as bigint) "
-        f"AS gt5_um FROM c"
+        f"SELECT {', '.join(_GDALMOVE_GT)} FROM c"
     )
 
 
@@ -956,6 +729,24 @@ def oracle_gdalmove_gt(n: int, epsg: int = 54008) -> str:
 # computes the window before the warper ever runs.
 
 CROP_CUT_BOX = (11.3, 48.2, 11.5, 48.4)  # lon/lat cutline envelope
+_CROP_OUT = [
+    "image_id", "px0", "py0", "px1 - px0 AS out_w", "py1 - py0 AS out_h"
+]
+
+
+def _crop_window(box: tuple) -> list[str]:
+    cx0, cy0, cx1, cy1 = (synth.flit(v) for v in box)
+    return [
+        "image_id",
+        f"greatest(0, least(cast(w as bigint), "
+        f"cast(floor(({cx0} - lon) / res) as bigint))) AS px0",
+        f"greatest(0, least(cast(w as bigint), "
+        f"cast(ceil(({cx1} - lon) / res) as bigint))) AS px1",
+        f"greatest(0, least(cast(h as bigint), "
+        f"cast(floor((lat - {cy1}) / res) as bigint))) AS py0",
+        f"greatest(0, least(cast(h as bigint), "
+        f"cast(ceil((lat - {cy0}) / res) as bigint))) AS py1",
+    ]
 
 
 def crop_to_cutline_grid(
@@ -969,137 +760,20 @@ def crop_to_cutline_grid(
 
     Scale: metadata-only scan, zero shuffle; the filter prunes
     non-intersecting images before any pixel stage runs."""
-    cx0, cy0, cx1, cy1 = box
-    fl = synth.flit
-    base = images.selectExpr(
+    return images.selectExpr(
         "image_id", "lon", "lat", "w", "h",
         "0.1E0 / cast(w as double) AS res",
-    ).selectExpr(
-        "image_id", "w", "h",
-        f"greatest(0, least(cast(w as bigint), "
-        f"cast(floor(({fl(cx0)} - lon) / res) as bigint))) AS px0",
-        f"greatest(0, least(cast(w as bigint), "
-        f"cast(ceil(({fl(cx1)} - lon) / res) as bigint))) AS px1",
-        f"greatest(0, least(cast(h as bigint), "
-        f"cast(floor((lat - {fl(cy1)}) / res) as bigint))) AS py0",
-        f"greatest(0, least(cast(h as bigint), "
-        f"cast(ceil((lat - {fl(cy0)}) / res) as bigint))) AS py1",
+    ).selectExpr(*_crop_window(box)).selectExpr(*_CROP_OUT).filter(
+        "out_w > 0 AND out_h > 0"
     )
-    return base.selectExpr(
-        "image_id", "px0", "py0",
-        "px1 - px0 AS out_w", "py1 - py0 AS out_h",
-    ).filter("out_w > 0 AND out_h > 0")
 
 
 def oracle_crop_to_cutline_grid(n: int, box: tuple = CROP_CUT_BOX) -> str:
-    cx0, cy0, cx1, cy1 = box
-    fl = synth.flit
     return (
         f"WITH img AS ({synth.images_cte(n, 'duckdb')}), "
         f"r AS (SELECT image_id, lon, lat, w, h, "
         f"0.1E0 / cast(w as double) AS res FROM img), "
-        f"c AS (SELECT image_id, "
-        f"greatest(0, least(cast(w as bigint), "
-        f"cast(floor(({fl(cx0)} - lon) / res) as bigint))) AS px0, "
-        f"greatest(0, least(cast(w as bigint), "
-        f"cast(ceil(({fl(cx1)} - lon) / res) as bigint))) AS px1, "
-        f"greatest(0, least(cast(h as bigint), "
-        f"cast(floor((lat - {fl(cy1)}) / res) as bigint))) AS py0, "
-        f"greatest(0, least(cast(h as bigint), "
-        f"cast(ceil((lat - {fl(cy0)}) / res) as bigint))) AS py1 FROM r) "
-        f"SELECT image_id, px0, py0, px1 - px0 AS out_w, "
-        f"py1 - py0 AS out_h FROM c "
-        f"WHERE px1 - px0 > 0 AND py1 - py0 > 0"
-    )
-
-
-# ---------------------------------------------------------------------------
-# World equal-area CRS corners (r4): Mollweide (ESRI:54009, Newton
-# forward, srs.moll_stage_list) and Equal Earth (EPSG:8857, authalic
-# closed form, srs.eqearth_stage_list). Same staged-corner shape as
-# osgb_corners: explode the 4 footprint corners to rows FIRST, then
-# run the stage pipeline once — both engines execute identical SQL
-# text per stage, Spark as named projections inside whole-stage
-# codegen, DuckDB as MATERIALIZED CTE stages.
-
-_WCORNER_LON_CASE = (
-    "CASE WHEN corner IN ('tr', 'br') THEN (lon_c + 0.1E0) "
-    "ELSE lon_c END"
-)
-_WCORNER_LAT_CASE = (
-    "CASE WHEN corner IN ('bl', 'br') THEN (lat_c - 0.1E0 * "
-    "cast(h as double) / cast(w as double)) ELSE lat_c END"
-)
-
-
-def _staged_corners(images: DataFrame, stages) -> DataFrame:
-    df = images.selectExpr(
-        "image_id", "w", "h", "lon AS lon_c", "lat AS lat_c"
-    ).selectExpr(
-        "image_id", "w", "h", "lon_c", "lat_c",
-        "explode(array('tl', 'tr', 'bl', 'br')) AS corner",
-    ).selectExpr(
-        "image_id", "corner",
-        f"{_WCORNER_LON_CASE} AS lon",
-        f"{_WCORNER_LAT_CASE} AS lat",
-    )
-    for col, expr in stages:
-        df = df.selectExpr("*", f"{expr} AS {col}")
-    return df.selectExpr(
-        "image_id", "corner",
-        "cast(floor(easting * 10.0E0) as bigint) AS e_dm",
-        "cast(floor(northing * 10.0E0) as bigint) AS n_dm",
-    )
-
-
-def _oracle_staged_corners(n: int, stages) -> str:
-    cte = [
-        f"img AS MATERIALIZED (SELECT image_id, w, h, lon AS lon_c, "
-        f"lat AS lat_c FROM ({synth.images_cte(n, 'duckdb')})), "
-        f"c0 AS MATERIALIZED (SELECT image_id, corner, "
-        f"{_WCORNER_LON_CASE} AS lon, {_WCORNER_LAT_CASE} AS lat "
-        f"FROM img, (SELECT unnest(['tl', 'tr', 'bl', 'br']) "
-        f"AS corner) cs)"
-    ]
-    prev = "c0"
-    for k, (col, expr) in enumerate(stages):
-        name = f"w{k}"
-        cte.append(
-            f"{name} AS MATERIALIZED (SELECT *, {expr} AS {col} "
-            f"FROM {prev})"
-        )
-        prev = name
-    return (
-        "WITH " + ", ".join(cte)
-        + f" SELECT image_id, corner, "
-        f"cast(floor(easting * 10.0E0) as bigint) AS e_dm, "
-        f"cast(floor(northing * 10.0E0) as bigint) AS n_dm FROM {prev}"
-    )
-
-
-def moll_corners(images: DataFrame) -> DataFrame:
-    """(image_id, corner, e_dm, n_dm) in World Mollweide (ESRI:54009)
-    — map-only JVM stage, zero Python, dm-quantized."""
-    return _staged_corners(
-        images, srs.moll_stage_list(srs.MOLL_REGISTRY[54009])
-    )
-
-
-def oracle_moll_corners(n: int) -> str:
-    return _oracle_staged_corners(
-        n, srs.moll_stage_list(srs.MOLL_REGISTRY[54009])
-    )
-
-
-def eqearth_corners(images: DataFrame) -> DataFrame:
-    """(image_id, corner, e_dm, n_dm) in Equal Earth (EPSG:8857,
-    ellipsoidal via authalic latitude) — map-only, zero Python."""
-    return _staged_corners(
-        images, srs.eqearth_stage_list(srs.EQE_REGISTRY[8857])
-    )
-
-
-def oracle_eqearth_corners(n: int) -> str:
-    return _oracle_staged_corners(
-        n, srs.eqearth_stage_list(srs.EQE_REGISTRY[8857])
+        f"c AS (SELECT {', '.join(_crop_window(box))} FROM r), "
+        f"o AS (SELECT {', '.join(_CROP_OUT)} FROM c) "
+        f"SELECT * FROM o WHERE out_w > 0 AND out_h > 0"
     )

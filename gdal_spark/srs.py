@@ -135,6 +135,66 @@ def tm_inverse(x, y, lon0_deg):
 
 
 # ---------------------------------------------------------------------------
+# Conformal latitude (Snyder 1987 eq. 15-9 / 7-9), shared by LCC and
+# polar stereographic: the isometric function t(phi) and its inverse by
+# a fixed point from the spherical start, one definition per dialect
+# with the same op order.
+
+
+def conformal_t(phi, e):
+    """t = tan(pi/4 - phi/2) / ((1 - e sin phi) / (1 + e sin phi))^(e/2)."""
+    s = np.sin(phi)
+    return np.tan(np.pi / 4.0 - phi / 2.0) / (
+        ((1.0 - e * s) / (1.0 + e * s)) ** (e / 2.0)
+    )
+
+
+def conformal_phi(t, e, iters: int):
+    """phi from t: ``iters`` steps of phi = pi/2 - 2 atan(t ((1 - e sin
+    phi) / (1 + e sin phi))^(e/2)) from phi = pi/2 - 2 atan(t)."""
+    phi = np.pi / 2.0 - 2.0 * np.arctan(t)
+    for _ in range(iters):
+        s = np.sin(phi)
+        phi = np.pi / 2.0 - 2.0 * np.arctan(
+            t * ((1.0 - e * s) / (1.0 + e * s)) ** (e / 2.0)
+        )
+    return phi
+
+
+def conformal_t_sql(phi: str, e: float) -> str:
+    """Dual-dialect SQL twin of conformal_t."""
+    ec, s = _sql_const(e), f"sin({phi})"
+    return (
+        f"(tan(pi() / 4.0E0 - {phi} / 2.0E0) "
+        f"/ power((1.0E0 - {ec} * {s}) / (1.0E0 + {ec} * {s}), "
+        f"{_sql_const(e / 2.0)}))"
+    )
+
+
+def conformal_phi_ctes(
+    e: float, iters: int, carry: str, src: str, prefix: str
+) -> tuple[str, list[str], str]:
+    """SQL twin of conformal_phi as MATERIALIZED CTE stages
+    ``{prefix}0..{prefix}{iters}`` over relation ``src`` holding column
+    t; ``carry`` (t included) passes through every stage. Returns
+    (the last phi column, stages, the last relation)."""
+    ec = _sql_const(e)
+    stages = [
+        f"{prefix}0 AS MATERIALIZED (SELECT {carry}, "
+        f"(pi() / 2.0E0 - 2.0E0 * atan(t)) AS phi0 FROM {src})"
+    ]
+    for it in range(iters):
+        s = f"sin(phi{it})"
+        stages.append(
+            f"{prefix}{it + 1} AS MATERIALIZED (SELECT {carry}, "
+            f"(pi() / 2.0E0 - 2.0E0 * atan(t * power("
+            f"(1.0E0 - {ec} * {s}) / (1.0E0 + {ec} * {s}), "
+            f"{_sql_const(e / 2.0)}))) AS phi{it + 1} FROM {prefix}{it})"
+        )
+    return f"phi{iters}", stages, f"{prefix}{iters}"
+
+
+# ---------------------------------------------------------------------------
 # Lambert Conformal Conic 2SP (EPSG method 9802; formulas are the
 # published Snyder 1987 "Map Projections — A Working Manual" pp.
 # 104-110 / EPSG Guidance Note 7-2 ones; reference surface:
@@ -163,21 +223,14 @@ class LCC:
         self.e = float(np.sqrt(self.e2))
         self.lon0 = lon0_deg
         self.fe, self.fn = fe, fn
-        e = self.e
 
         def m(phi):
             s = np.sin(phi)
             return np.cos(phi) / np.sqrt(1.0 - self.e2 * s * s)
 
-        def t(phi):
-            s = np.sin(phi)
-            return np.tan(np.pi / 4.0 - phi / 2.0) / (
-                ((1.0 - e * s) / (1.0 + e * s)) ** (e / 2.0)
-            )
-
         p1, p2, p0 = map(np.radians, (phi1_deg, phi2_deg, phi0_deg))
         m1, m2 = float(m(p1)), float(m(p2))
-        t1, t2, t0 = float(t(p1)), float(t(p2)), float(t(p0))
+        t1, t2, t0 = (float(conformal_t(p, self.e)) for p in (p1, p2, p0))
         self.n = (np.log(m1) - np.log(m2)) / (np.log(t1) - np.log(t2))
         self.F = m1 / (self.n * t1**self.n)
         self.rho0 = self.a * self.F * t0**self.n
@@ -193,11 +246,7 @@ def lcc_forward(lon, lat, p: LCC):
     """Geographic (deg) -> LCC easting/northing. Vectorized."""
     lam = np.radians(np.asarray(lon, np.float64) - p.lon0)
     phi = np.radians(np.asarray(lat, np.float64))
-    s = np.sin(phi)
-    t = np.tan(np.pi / 4.0 - phi / 2.0) / (
-        ((1.0 - p.e * s) / (1.0 + p.e * s)) ** (p.e / 2.0)
-    )
-    rho = p.a * p.F * t**p.n
+    rho = p.a * p.F * conformal_t(phi, p.e) ** p.n
     th = p.n * lam
     return p.fe + rho * np.sin(th), p.fn + p.rho0 - rho * np.cos(th)
 
@@ -215,12 +264,7 @@ def lcc_inverse(x, y, p: LCC):
     t = (rho / (p.a * p.F)) ** (1.0 / p.n)
     th = np.arctan2(dx, dy)
     lam = th / p.n
-    phi = np.pi / 2.0 - 2.0 * np.arctan(t)
-    for _ in range(LCC_INV_ITERS):
-        s = np.sin(phi)
-        phi = np.pi / 2.0 - 2.0 * np.arctan(
-            t * ((1.0 - p.e * s) / (1.0 + p.e * s)) ** (p.e / 2.0)
-        )
+    phi = conformal_phi(t, p.e, LCC_INV_ITERS)
     return p.lon0 + np.degrees(lam), np.degrees(phi)
 
 
@@ -228,17 +272,10 @@ def lcc_forward_sql(lon_expr: str, lat_expr: str, p: LCC) -> tuple[str, str]:
     """(easting_expr, northing_expr) as dual-dialect SQL (Spark SQL +
     DuckDB both parse it). Mirrors lcc_forward; pow/tan/atan drift is
     ~1 ulp between engines, absorbed by dm quantization."""
-    e = _sql_const(p.e)
-    half_e = _sql_const(p.e / 2.0)
     n = _sql_const(p.n)
     aF = _sql_const(p.a * p.F)
     lam = f"radians(({lon_expr}) - {_sql_const(p.lon0)})"
-    phi = f"radians({lat_expr})"
-    s = f"sin({phi})"
-    t = (
-        f"(tan(pi() / 4.0E0 - {phi} / 2.0E0) "
-        f"/ power((1.0E0 - {e} * {s}) / (1.0E0 + {e} * {s}), {half_e}))"
-    )
+    t = conformal_t_sql(f"radians({lat_expr})", p.e)
     rho = f"({aF} * power({t}, {n}))"
     th = f"({n} * {lam})"
     return (
@@ -257,8 +294,6 @@ def lcc_inverse_sql_cte(
     ``lccinv`` with keep + lon, lat. Assumes n > 0 (all registered
     CRSes use northern standard parallels)."""
     assert p.n > 0
-    e = _sql_const(p.e)
-    half_e = _sql_const(p.e / 2.0)
     inv_n = _sql_const(1.0 / p.n)
     aF = _sql_const(p.a * p.F)
     stages = [
@@ -269,24 +304,15 @@ def lcc_inverse_sql_cte(
         f"l1 AS MATERIALIZED (SELECT {keep}, "
         f"power(sqrt(dx * dx + dy * dy) / {aF}, {inv_n}) AS t, "
         f"(atan2(dx, dy) * {inv_n}) AS lam FROM l0)",
-        f"l2 AS MATERIALIZED (SELECT {keep}, t, lam, "
-        f"(pi() / 2.0E0 - 2.0E0 * atan(t)) AS phi0 FROM l1)",
     ]
-    prev, prev_rel = "phi0", "l2"
-    for it in range(LCC_INV_ITERS):
-        nxt, rel = f"phi{it + 1}", f"li{it}"
-        s = f"sin({prev})"
-        stages.append(
-            f"{rel} AS MATERIALIZED (SELECT {keep}, t, lam, "
-            f"(pi() / 2.0E0 - 2.0E0 * atan(t * power("
-            f"(1.0E0 - {e} * {s}) / (1.0E0 + {e} * {s}), {half_e}))) "
-            f"AS {nxt} FROM {prev_rel})"
-        )
-        prev, prev_rel = nxt, rel
+    phi, phi_ctes, prev = conformal_phi_ctes(
+        p.e, LCC_INV_ITERS, f"{keep}, t, lam", "l1", "li"
+    )
+    stages += phi_ctes
     stages.append(
         f"lccinv AS MATERIALIZED (SELECT {keep}, "
         f"{_sql_const(p.lon0)} + degrees(lam) AS lon, "
-        f"degrees({prev}) AS lat FROM {prev_rel})"
+        f"degrees({phi}) AS lat FROM {prev})"
     )
     return ",\n".join(stages)
 
@@ -441,9 +467,7 @@ class PS:
         pc = np.radians(abs(phic_deg))
         sc = np.sin(pc)
         mc = np.cos(pc) / np.sqrt(1.0 - self.e2 * sc * sc)
-        tc = np.tan(np.pi / 4.0 - pc / 2.0) / (
-            ((1.0 - self.e * sc) / (1.0 + self.e * sc)) ** (self.e / 2.0)
-        )
+        tc = conformal_t(pc, self.e)
         # rho = k * t with t the conformal colatitude function
         self.k = float(self.a * mc / tc)
 
@@ -462,11 +486,7 @@ def ps_forward(lon, lat, p: PS):
     phi = np.radians(np.asarray(lat, np.float64))
     if p.south:
         phi = -phi
-    s = np.sin(phi)
-    t = np.tan(np.pi / 4.0 - phi / 2.0) / (
-        ((1.0 - p.e * s) / (1.0 + p.e * s)) ** (p.e / 2.0)
-    )
-    rho = p.k * t
+    rho = p.k * conformal_t(phi, p.e)
     x = p.fe + rho * np.sin(lam)
     y = rho * np.cos(lam)
     return x, p.fn + (y if p.south else -y)
@@ -484,13 +504,7 @@ def ps_inverse(x, y, p: PS):
         dy = -dy
     # sqrt form (not hypot) so the op sequence matches the SQL twin
     rho = np.sqrt(dx * dx + dy * dy)
-    t = rho / p.k
-    phi = np.pi / 2.0 - 2.0 * np.arctan(t)
-    for _ in range(PS_INV_ITERS):
-        s = np.sin(phi)
-        phi = np.pi / 2.0 - 2.0 * np.arctan(
-            t * ((1.0 - p.e * s) / (1.0 + p.e * s)) ** (p.e / 2.0)
-        )
+    phi = conformal_phi(rho / p.k, p.e, PS_INV_ITERS)
     lam = np.arctan2(dx, dy)
     lon = p.lon0 + np.degrees(lam)
     lat = np.degrees(phi)
@@ -504,8 +518,6 @@ def ps_inverse_sql_cte(
     SQL twin of ps_inverse with the conformal-latitude fixed point
     unrolled as MATERIALIZED stages. Output relation ``psinv`` with
     keep + lon, lat."""
-    e = _sql_const(p.e)
-    half_e = _sql_const(p.e / 2.0)
     k = _sql_const(p.k)
     dy = f"(({y_expr}) - {_sql_const(p.fn)})"
     if not p.south:
@@ -515,27 +527,18 @@ def ps_inverse_sql_cte(
         f"(({x_expr}) - {_sql_const(p.fe)}) AS dx, {dy} AS dyc FROM {base})",
         f"p1 AS MATERIALIZED (SELECT {keep}, dx, dyc, "
         f"(sqrt(dx * dx + dyc * dyc) / {k}) AS t FROM p0)",
-        f"p2 AS MATERIALIZED (SELECT {keep}, dx, dyc, t, "
-        f"(pi() / 2.0E0 - 2.0E0 * atan(t)) AS phi0 FROM p1)",
     ]
-    prev, prev_rel = "phi0", "p2"
-    for it in range(PS_INV_ITERS):
-        nxt, rel = f"phi{it + 1}", f"pi{it}"
-        s = f"sin({prev})"
-        stages.append(
-            f"{rel} AS MATERIALIZED (SELECT {keep}, dx, dyc, t, "
-            f"(pi() / 2.0E0 - 2.0E0 * atan(t * power("
-            f"(1.0E0 - {e} * {s}) / (1.0E0 + {e} * {s}), {half_e}))) "
-            f"AS {nxt} FROM {prev_rel})"
-        )
-        prev, prev_rel = nxt, rel
-    lat = f"degrees({prev})"
+    phi, phi_ctes, prev = conformal_phi_ctes(
+        p.e, PS_INV_ITERS, f"{keep}, dx, dyc, t", "p1", "pi"
+    )
+    stages += phi_ctes
+    lat = f"degrees({phi})"
     if p.south:
         lat = f"(-{lat})"
     stages.append(
         f"psinv AS MATERIALIZED (SELECT {keep}, "
         f"{_sql_const(p.lon0)} + degrees(atan2(dx, dyc)) AS lon, "
-        f"{lat} AS lat FROM {prev_rel})"
+        f"{lat} AS lat FROM {prev})"
     )
     return ",\n".join(stages)
 
@@ -544,17 +547,10 @@ def ps_forward_sql(lon_expr: str, lat_expr: str, p: PS) -> tuple[str, str]:
     """(easting_expr, northing_expr) dual-dialect SQL twin of
     ps_forward (tan/pow/sin/cos; ~1 ulp cross-engine, absorbed by dm
     quantization)."""
-    e = _sql_const(p.e)
-    half_e = _sql_const(p.e / 2.0)
     k = _sql_const(p.k)
     lam = f"radians(({lon_expr}) - {_sql_const(p.lon0)})"
     phi = f"({'-' if p.south else ''}radians({lat_expr}))"
-    s = f"sin({phi})"
-    t = (
-        f"(tan(pi() / 4.0E0 - {phi} / 2.0E0) "
-        f"/ power((1.0E0 - {e} * {s}) / (1.0E0 + {e} * {s}), {half_e}))"
-    )
-    rho = f"({k} * {t})"
+    rho = f"({k} * {conformal_t_sql(phi, p.e)})"
     y = f"({rho} * cos({lam}))"
     return (
         f"({_sql_const(p.fe)} + {rho} * sin({lam}))",

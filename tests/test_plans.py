@@ -141,9 +141,11 @@ def test_pq_adc_plan_is_broadcast_and_partial_agg(spark):
 
 
 def test_projection_corner_families_are_pure_codegen(spark):
-    """Every corner-transform family (UTM/LCC/Albers/Polar-Stereo)
-    must stay a map-only JVM stage: no Python eval, no Exchange —
-    at 100 TB the transform fuses into the scan."""
+    """Every corner-transform family (UTM/LCC/Albers/Polar-Stereo/
+    sinusoidal/OSGB/Mollweide/Equal Earth) and the corner-built grids
+    (-tap, gdalmove, -crop_to_cutline) must stay a map-only JVM stage:
+    no Python eval, no Exchange — at 100 TB the transform fuses into
+    the scan, and the shared corner builders add no shuffle or UDF."""
     from gdal_spark import synth
     from gdal_spark.operators import reproject
 
@@ -153,6 +155,13 @@ def test_projection_corner_families_are_pure_codegen(spark):
         reproject.lcc_corners,
         reproject.aea_corners,
         reproject.ps_corners,
+        reproject.sinu_corners,
+        reproject.osgb_corners,
+        reproject.moll_corners,
+        reproject.eqearth_corners,
+        reproject.utm_tap_grid,
+        reproject.gdalmove_gt,
+        reproject.crop_to_cutline_grid,
     ):
         s = plan(fn(imgs))
         assert "EvalPython" not in s, fn.__name__

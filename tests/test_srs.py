@@ -443,22 +443,93 @@ def test_sinu_roundtrip_and_sphere():
     assert np.allclose(y, p.a * np.radians(lat))
 
 
-def test_sinu_sql_twin_matches_numpy():
-    import duckdb
+def _expr_stages(forward_sql):
+    """A (easting, northing) SQL pair as a two-stage list."""
 
-    p = srs.SINU_REGISTRY[54008]
-    e_sql, n_sql = srs.sinu_forward_sql("lon", "lat", p)
-    rows = duckdb.sql(
-        f"SELECT {e_sql} AS e, {n_sql} AS n FROM (SELECT "
-        f"(i * 73.1E0 % 359.8E0) - 179.9E0 AS lon, "
-        f"(i * 37.3E0 % 169.8E0) - 84.9E0 AS lat "
-        f"FROM range(0, 50) t(i))"
+    def stages(p):
+        e, n = forward_sql("lon", "lat", p)
+        return [("easting", e), ("northing", n)]
+
+    return stages
+
+
+PS_INV = (srs.ps_inverse, srs.ps_inverse_sql_cte, "psinv")
+SINU_INV = (srs.sinu_inverse, srs.sinu_inverse_sql_cte, "sinuinv")
+SQL_TWINS = [
+    pytest.param(
+        srs.LCC_REGISTRY[2154], srs.lcc_forward,
+        _expr_stages(srs.lcc_forward_sql), None, (-4.0, 9.0, 41.0, 51.0),
+        id="lcc2154",
+    ),
+    pytest.param(
+        srs.AEA_REGISTRY[5070], srs.aea_forward,
+        _expr_stages(srs.aea_forward_sql), None, (-125.0, -67.0, 24.0, 50.0),
+        id="aea5070",
+    ),
+    pytest.param(
+        srs.PS_REGISTRY[3031], srs.ps_forward, _expr_stages(srs.ps_forward_sql),
+        PS_INV, (-180.0, 180.0, -89.5, -10.0), id="ps3031",
+    ),
+    pytest.param(
+        srs.PS_REGISTRY[3413], srs.ps_forward, _expr_stages(srs.ps_forward_sql),
+        PS_INV, (-180.0, 180.0, 10.0, 89.5), id="ps3413",
+    ),
+    pytest.param(
+        srs.SINU_REGISTRY[54008], srs.sinu_forward,
+        _expr_stages(srs.sinu_forward_sql), SINU_INV,
+        (-179.9, 179.9, -84.9, 84.9), id="sinu54008",
+    ),
+    pytest.param(
+        srs.SINU_REGISTRY[6974], srs.sinu_forward,
+        _expr_stages(srs.sinu_forward_sql), SINU_INV,
+        (-179.9, 179.9, -84.9, 84.9), id="sinu6974",
+    ),
+    pytest.param(
+        srs.MOLL_REGISTRY[54009], srs.moll_forward, srs.moll_stage_list, None,
+        (-179.9, 179.9, -89.0, 89.0), id="moll54009",
+    ),
+    pytest.param(
+        srs.EQE_REGISTRY[8857], srs.eqearth_forward, srs.eqearth_stage_list,
+        None, (-179.9, 179.9, -89.0, 89.0), id="eqe8857",
+    ),
+]
+
+
+@pytest.mark.parametrize("p, forward, stages, inverse, box", SQL_TWINS)
+def test_projection_sql_twin_matches_numpy(p, forward, stages, inverse, box):
+    """Each projection's SQL twin, run in DuckDB as the oracles run it
+    (materialized stages), against its numpy kernel: forward within
+    1e-6 m, inverse (fed the numpy forward) within 1e-11 deg. The
+    corner gates only compare Spark with DuckDB on the same SQL text,
+    so a math error shared by both engines shows up only here."""
+    import duckdb
+    import pandas as pd
+
+    from gdal_spark.operators.reproject import _stage_ctes
+
+    k = np.arange(600)
+    lon = box[0] + (box[1] - box[0]) * ((k * 0.6180339887498949) % 1.0)
+    lat = box[2] + (box[3] - box[2]) * ((k * 0.41421356237309515) % 1.0)
+    e_np, n_np = forward(lon, lat, p)
+    con = duckdb.connect()
+    con.register("pts", pd.DataFrame({"i": k, "lon": lon, "lat": lat}))
+    ctes, rel = _stage_ctes("pts", "f", stages(p))
+    out = con.execute(
+        f"WITH {', '.join(ctes)} SELECT easting, northing FROM {rel} ORDER BY i"
     ).fetchnumpy()
-    lon = (np.arange(50) * 73.1) % 359.8 - 179.9
-    lat = (np.arange(50) * 37.3) % 169.8 - 84.9
-    x, y = srs.sinu_forward(lon, lat, p)
-    assert np.abs(rows["e"] - x).max() < 1e-6
-    assert np.abs(rows["n"] - y).max() < 1e-6
+    assert np.abs(out["easting"] - e_np).max() < 1e-6
+    assert np.abs(out["northing"] - n_np).max() < 1e-6
+    if inverse is None:
+        return
+    inverse_np, inverse_cte, inv_rel = inverse
+    con.register("prj", pd.DataFrame({"i": k, "ec": e_np, "nc": n_np}))
+    got = con.execute(
+        f"WITH {inverse_cte('ec', 'nc', p, 'prj', 'i')} "
+        f"SELECT lon, lat FROM {inv_rel} ORDER BY i"
+    ).fetchnumpy()
+    lon_np, lat_np = inverse_np(e_np, n_np, p)
+    assert np.abs(got["lon"] - lon_np).max() < 1e-11
+    assert np.abs(got["lat"] - lat_np).max() < 1e-11
 
 
 def _quad_area(x, y):

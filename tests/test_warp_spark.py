@@ -127,7 +127,9 @@ def test_reproject_ps_constant_and_coverage(spark):
         p = srs_mod.PS_REGISTRY[epsg]
         res = 0.1 / 32
         src_gt = (11.3, res, 0.0, lat, 0.0, -res)
-        dst_gt, dh, dw = reproject._suggest_grid_ps(11.3, lat, 32, 32, p, 32)
+        dst_gt, dh, dw = reproject._suggest_grid(
+            11.3, lat, 32, 32, lambda x, y: srs_mod.ps_forward(x, y, p), 32
+        )
         warped = resample.warp_image(
             const, src_gt, dst_gt, (dh, dw), "near",
             lambda gx, gy: srs_mod.ps_inverse(gx, gy, p),
