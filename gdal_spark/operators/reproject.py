@@ -7,12 +7,16 @@ decision is written once here and every family is a thin call onto it;
 only the projection math in srs.py is per family:
 
 - ``CORNERS`` — the four footprint corners (tl, tr, bl, br).
+- A forward is a stage list: ``forward(sfx, lon_sql, lat_sql)`` returns
+  (column, expr) stages ending in ``easting{sfx}``/``northing{sfx}``.
+  A closed-form family (LCC, Albers, PS, sinusoidal) is the two-stage
+  list of its SQL pair (``_expr_stages``); UTM is ``srs.tm_stage_list``
+  over one zone/lon0/fn base.
 - Wide corners (``_wide_corners`` / ``_oracle_wide_corners``): one
   ``e_{suffix}_dm``/``n_{suffix}_dm`` column pair per point, each point
-  a (suffix, lon_sql, lat_sql, forward_sql). UTM is the wide shape over
-  one zone/lon0/fn base, with the staged Krueger forward on the Spark
-  side (``_tm_forward_staged``: the single-expression TM costs seconds
-  of Catalyst analysis).
+  a (suffix, lon_sql, lat_sql, forward); stage k of every point runs as
+  one Spark projection (``_with_stages``) or one DuckDB MATERIALIZED
+  CTE (``_stage_ctes``).
 - Staged-long corners (``_staged_corners`` / ``_oracle_staged_corners``):
   one (image_id, corner) row per corner, then a stage list of named
   columns (Spark projections inside whole-stage codegen, DuckDB
@@ -23,8 +27,9 @@ only the projection math in srs.py is per family:
   ``dst_w`` pixels.
 - The pixel warp (``_reproject``: suggested grid -> inverse per dst
   pixel centre -> resample -> GDAL checksum) and its DuckDB replay
-  (``_oracle_warp``: corners -> bbox -> grid -> unrolled inverse CTE ->
-  nearest src pixel -> synthetic pixel value -> checksum).
+  (``_oracle_warp``: the oracle wide corners -> bbox -> grid ->
+  unrolled inverse CTE -> nearest src pixel -> synthetic pixel value ->
+  checksum).
 
 Every corner query is pure Catalyst (map-only JVM stage, zero Python);
 outputs are quantized to decimeters so the few-ulp libm drift between
@@ -66,11 +71,13 @@ CORNERS = (
     ("bl", "lon", LAT2_SQL),
     ("br", LON2_SQL, LAT2_SQL),
 )
-# projected bbox over the e_{suffix}/n_{suffix} corner columns
+# projected bbox over the easting_{suffix}/northing_{suffix} corner
+# columns
 MINX, MAXX, MINY, MAXY = (
     f"{agg}({', '.join(f'{axis}_{sfx}' for sfx, _, _ in CORNERS)})"
     for agg, axis in (
-        ("least", "e"), ("greatest", "e"), ("least", "n"), ("greatest", "n")
+        ("least", "easting"), ("greatest", "easting"),
+        ("least", "northing"), ("greatest", "northing"),
     )
 )
 
@@ -83,114 +90,112 @@ def _dm(expr: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# wide corners: one column pair per point
+# wide corners: one column pair per point. A point is (suffix, lon_sql,
+# lat_sql, forward); ``forward(sfx, lon_sql, lat_sql)`` is the
+# projection's stage list ending in easting{sfx} / northing{sfx}.
 
 
-def _corner_points(forward) -> list[tuple]:
-    """CORNERS as (suffix, lon_sql, lat_sql, forward_sql) points;
-    ``forward(lon_sql, lat_sql)`` -> (easting_sql, northing_sql)."""
-    return [(sfx, lon, lat, forward) for sfx, lon, lat in CORNERS]
-
-
-def _point_cols(sfx, lon, lat, forward) -> list[str]:
-    e, n = forward(lon, lat)
-    return [f"{e} AS e_{sfx}", f"{n} AS n_{sfx}"]
-
-
-def _dm_cols(suffixes) -> list[str]:
-    return [
-        f"{_dm(f'{axis}_{sfx}')} AS {axis}_{sfx}_dm"
-        for sfx in suffixes for axis in ("e", "n")
-    ]
-
-
-def _wide_corners(images: DataFrame, points) -> DataFrame:
-    """(image_id, e_{suffix}_dm, n_{suffix}_dm per point). Map-only JVM
-    stage, zero Python."""
-    df = images.selectExpr("image_id", "lon", "lat", "w", "h")
-    for pt in points:
-        df = df.selectExpr("*", *_point_cols(*pt))
-    return df.selectExpr("image_id", *_dm_cols(pt[0] for pt in points))
-
-
-def _oracle_wide_corners(src: str, keys: list[str], points) -> str:
-    parts = []
-    for sfx, lon, lat, forward in points:
-        e, n = forward(lon, lat)
-        parts += [f"{_dm(e)} AS e_{sfx}_dm", f"{_dm(n)} AS n_{sfx}_dm"]
-    return f"SELECT {', '.join(keys + parts)} FROM {src}"
-
-
-def _tm_forward_staged(base: DataFrame, corners) -> DataFrame:
-    """Krueger forward for several corners as STAGED Catalyst columns
-    (named intermediates + native hyperbolics) — the single-expression
-    SQL twin repeats each subterm textually and costs seconds of
-    analysis; this keeps the tree linear in the series order. Expects
-    lon0/fn columns; corners = [(suffix, lon_expr, lat_expr)]."""
-    e = synth.flit(srs.E)
-    ka = synth.flit(srs.K0 * srs.A_CAP)
-    fe = synth.flit(srs.FE)
-    df = base
-    for sfx, lon_e, lat_e in corners:
-        df = df.selectExpr(
-            "*",
-            f"radians(({lon_e}) - lon0) AS lam_{sfx}",
-            f"sin(radians({lat_e})) AS s_{sfx}",
-        ).selectExpr(
-            "*",
-            f"sinh(atanh(s_{sfx}) - {e} * atanh({e} * s_{sfx})) AS t_{sfx}",
-            f"cos(lam_{sfx}) AS cl_{sfx}",
-        ).selectExpr(
-            "*",
-            f"atan2(t_{sfx}, cl_{sfx}) AS xip_{sfx}",
-            f"asinh(sin(lam_{sfx}) / sqrt(t_{sfx} * t_{sfx} "
-            f"+ cl_{sfx} * cl_{sfx})) AS etap_{sfx}",
-        )
-        xi_terms = [f"xip_{sfx}"]
-        eta_terms = [f"etap_{sfx}"]
-        for j, a in enumerate(srs.ALPHA, start=1):
-            aj = synth.flit(a)
-            xi_terms.append(
-                f"{aj} * sin({2 * j}.0E0 * xip_{sfx}) "
-                f"* cosh({2 * j}.0E0 * etap_{sfx})"
-            )
-            eta_terms.append(
-                f"{aj} * cos({2 * j}.0E0 * xip_{sfx}) "
-                f"* sinh({2 * j}.0E0 * etap_{sfx})"
-            )
-        df = df.selectExpr(
-            "*",
-            f"{fe} + {ka} * ({' + '.join(eta_terms)}) AS e_{sfx}",
-            f"{ka} * ({' + '.join(xi_terms)}) + fn AS n_{sfx}",
-        ).drop(
-            f"lam_{sfx}", f"s_{sfx}", f"t_{sfx}", f"cl_{sfx}",
-            f"xip_{sfx}", f"etap_{sfx}",
-        )
+def _with_stages(df: DataFrame, *lists) -> DataFrame:
+    """One named Catalyst column per (column, expr) stage; stage k of
+    every list is one projection."""
+    for stage in zip(*lists, strict=True):
+        df = df.selectExpr("*", *(f"{expr} AS {col}" for col, expr in stage))
     return df
 
 
-# UTM: one zone/lon0/fn base (Spark columns, DuckDB CTEs over a relation
-# ``img`` with lon/lat) under the wide corner shape
+def _stage_ctes(prev: str, prefix: str, *lists) -> tuple[list[str], str]:
+    """One MATERIALIZED CTE per (column, expr) stage over ``prev`` (the
+    DuckDB CTE rule), stage k of every list in one CTE; returns (ctes,
+    the last relation)."""
+    ctes = []
+    for k, stage in enumerate(zip(*lists, strict=True)):
+        cols = ", ".join(f"{expr} AS {col}" for col, expr in stage)
+        ctes.append(f"{prefix}{k} AS MATERIALIZED (SELECT *, {cols} FROM {prev})")
+        prev = f"{prefix}{k}"
+    return ctes, prev
 
 
-def _utm_corner_frame(images: DataFrame) -> DataFrame:
-    """zone, lon0, fn and the e_/n_ columns of the 4 corners."""
-    base = images.selectExpr(
+def _expr_stages(forward_sql):
+    """A closed-form ``forward_sql(lon, lat)`` -> (easting, northing)
+    as a two-stage list."""
+
+    def stages(sfx, lon, lat):
+        e, n = forward_sql(lon, lat)
+        return [(f"easting{sfx}", e), (f"northing{sfx}", n)]
+
+    return stages
+
+
+def _corner_points(forward) -> list[tuple]:
+    """CORNERS as (suffix, lon_sql, lat_sql, forward) points."""
+    return [(sfx, lon, lat, forward) for sfx, lon, lat in CORNERS]
+
+
+def _stage_lists(points) -> list[list[tuple[str, str]]]:
+    return [forward(f"_{sfx}", lon, lat) for sfx, lon, lat, forward in points]
+
+
+def _dm_cols(points) -> list[str]:
+    return [
+        f"{_dm(f'{axis}_{sfx}')} AS {axis[0]}_{sfx}_dm"
+        for sfx, _, _, _ in points for axis in ("easting", "northing")
+    ]
+
+
+def _wide_corners(df: DataFrame, cols, points) -> DataFrame:
+    """``cols`` over ``df`` plus the easting_{suffix}/northing_{suffix}
+    columns of every point: stage k of all points is one projection.
+    Map-only JVM stage, zero Python."""
+    return _with_stages(df, *_stage_lists(points)).selectExpr(*cols)
+
+
+def _oracle_corner_ctes(base, points) -> tuple[str, str]:
+    """DuckDB twin of _wide_corners' stages: ``base`` = (CTEs over
+    ``img``, the relation the corners read); returns (the CTE list,
+    the relation holding the corner columns)."""
+    ctes, src = base
+    stages, rel = _stage_ctes(src, "crn", *_stage_lists(points))
+    return ctes + ",\n".join(stages), rel
+
+
+def _oracle_wide_corners(n: int, base, cols, points) -> str:
+    ctes, rel = _oracle_corner_ctes(base, points)
+    return (
+        f"WITH img AS ({synth.images_cte(n, 'duckdb')}), {ctes} "
+        f"SELECT {', '.join(cols)} FROM {rel}"
+    )
+
+
+_IMG_BASE = ("", "img")
+
+
+# UTM: one zone/lon0/fn base (Spark columns; DuckDB CTEs over a relation
+# ``img`` with lon/lat) under the wide corner shape, the forward
+# srs.tm_stage_list in the zone
+
+
+def _utm_base(images: DataFrame) -> DataFrame:
+    return images.selectExpr(
         "image_id", "lon", "lat", "w", "h", f"{ZONE_SQL} AS zone"
     ).selectExpr("*", f"{LON0_SQL} AS lon0", f"{FN_SQL} AS fn")
-    return _tm_forward_staged(base, CORNERS)
 
 
 _UTM_CTES = (
     f"z AS (SELECT *, {ZONE_SQL} AS zone FROM img), "
     f"g AS (SELECT *, {LON0_SQL} AS lon0, {FN_SQL} AS fn FROM z)"
 )
+_UTM_BASE = (f"{_UTM_CTES}, ", "g")
 
 
-def _utm_forward_sql(lon: str, lat: str) -> tuple[str, str]:
-    """The single-expression TM forward in the zone, fn added."""
-    e, n = srs.tm_forward_sql(lon, lat, "lon0")
-    return e, f"({n} + fn)"
+def _utm_points(dialect: str) -> list[tuple]:
+    return _corner_points(partial(
+        srs.tm_stage_list, lon0="lon0", fn="fn", e=srs.E, alpha=srs.ALPHA,
+        ka=srs.K0 * srs.A_CAP, fe=srs.FE, m0=0.0,
+        hyp=srs.HYPERBOLICS[dialect],
+    ))
+
+
+_UTM_DM = ["image_id", "zone", *_dm_cols(_utm_points("spark"))]
 
 
 def utm_corners(images: DataFrame) -> DataFrame:
@@ -198,17 +203,11 @@ def utm_corners(images: DataFrame) -> DataFrame:
     coordinates of every image footprint. No UDFs — the whole Krueger
     forward series runs as Catalyst expressions (JVM codegen), staged
     through named intermediate columns."""
-    return _utm_corner_frame(images).selectExpr(
-        "image_id", "zone", *_dm_cols(sfx for sfx, _, _ in CORNERS)
-    )
+    return _wide_corners(_utm_base(images), _UTM_DM, _utm_points("spark"))
 
 
 def oracle_utm_corners(n: int) -> str:
-    return f"WITH img AS ({synth.images_cte(n, 'duckdb')}), {_UTM_CTES} " + (
-        _oracle_wide_corners(
-            "g", ["image_id", "zone"], _corner_points(_utm_forward_sql)
-        )
-    )
+    return _oracle_wide_corners(n, _UTM_BASE, _UTM_DM, _utm_points("duckdb"))
 
 
 # Lambert Conformal Conic (EPSG method 9802), Albers Equal Area (9822),
@@ -216,60 +215,71 @@ def oracle_utm_corners(n: int) -> str:
 # the oracle running the SAME dual-dialect forward fragment.
 
 
+def _closed_form_points(forward_sql, p):
+    return _corner_points(_expr_stages(partial(forward_sql, p=p)))
+
+
 def _lcc_points(epsg):
-    return _corner_points(partial(srs.lcc_forward_sql, p=srs.LCC_REGISTRY[epsg]))
+    return _closed_form_points(srs.lcc_forward_sql, srs.LCC_REGISTRY[epsg])
 
 
 def _aea_points(epsg):
-    return _corner_points(partial(srs.aea_forward_sql, p=srs.AEA_REGISTRY[epsg]))
+    return _closed_form_points(srs.aea_forward_sql, srs.AEA_REGISTRY[epsg])
 
 
 def _ps_points(epsg):
-    return _corner_points(partial(srs.ps_forward_sql, p=srs.PS_REGISTRY[epsg]))
+    return _closed_form_points(srs.ps_forward_sql, srs.PS_REGISTRY[epsg])
 
 
 _SINU_POINTS = [
-    *_corner_points(partial(srs.sinu_forward_sql, p=srs.SINU_REGISTRY[54008])),
-    ("modis", "lon", "lat",
-     partial(srs.sinu_forward_sql, p=srs.SINU_REGISTRY[6974])),
+    *_closed_form_points(srs.sinu_forward_sql, srs.SINU_REGISTRY[54008]),
+    ("modis", "lon", "lat", _expr_stages(
+        partial(srs.sinu_forward_sql, p=srs.SINU_REGISTRY[6974]))),
 ]
+
+
+def _image_corners(images: DataFrame, points) -> DataFrame:
+    return _wide_corners(
+        images.selectExpr("image_id", "lon", "lat", "w", "h"),
+        ["image_id", *_dm_cols(points)], points,
+    )
+
+
+def _oracle_image_corners(n: int, points) -> str:
+    return _oracle_wide_corners(
+        n, _IMG_BASE, ["image_id", *_dm_cols(points)], points
+    )
 
 
 def lcc_corners(images: DataFrame, epsg: int = 2154) -> DataFrame:
     """Footprint corners of every image in an LCC CRS (default
     RGF93 / Lambert-93). Map-only JVM stage, zero Python."""
-    return _wide_corners(images, _lcc_points(epsg))
+    return _image_corners(images, _lcc_points(epsg))
 
 
 def oracle_lcc_corners(n: int, epsg: int = 2154) -> str:
-    return _oracle_wide_corners(
-        f"({synth.images_cte(n, 'duckdb')})", ["image_id"], _lcc_points(epsg)
-    )
+    return _oracle_image_corners(n, _lcc_points(epsg))
 
 
 def aea_corners(images: DataFrame, epsg: int = 5070) -> DataFrame:
     """Footprint corners of every image in an Albers CRS (default
     NAD83 / Conus Albers). Map-only JVM stage, zero Python."""
-    return _wide_corners(images, _aea_points(epsg))
+    return _image_corners(images, _aea_points(epsg))
 
 
 def oracle_aea_corners(n: int, epsg: int = 5070) -> str:
-    return _oracle_wide_corners(
-        f"({synth.images_cte(n, 'duckdb')})", ["image_id"], _aea_points(epsg)
-    )
+    return _oracle_image_corners(n, _aea_points(epsg))
 
 
 def ps_corners(images: DataFrame, epsg: int = 3031) -> DataFrame:
     """Footprint corners of every image in a polar-stereographic CRS
     (default WGS84 / Antarctic Polar Stereographic; defined for every
     synth latitude). Map-only JVM stage, zero Python."""
-    return _wide_corners(images, _ps_points(epsg))
+    return _image_corners(images, _ps_points(epsg))
 
 
 def oracle_ps_corners(n: int, epsg: int = 3031) -> str:
-    return _oracle_wide_corners(
-        f"({synth.images_cte(n, 'duckdb')})", ["image_id"], _ps_points(epsg)
-    )
+    return _oracle_image_corners(n, _ps_points(epsg))
 
 
 def sinu_corners(images: DataFrame) -> DataFrame:
@@ -277,13 +287,11 @@ def sinu_corners(images: DataFrame) -> DataFrame:
     (WGS84 ellipsoidal, Snyder eq. 30-8/30-9, the 4 corners) and the
     MODIS production grid (SR-ORG:6974 authalic sphere, the top-left
     corner as ``modis``). Map-only JVM stage, zero Python."""
-    return _wide_corners(images, _SINU_POINTS)
+    return _image_corners(images, _SINU_POINTS)
 
 
 def oracle_sinu_corners(n: int) -> str:
-    return _oracle_wide_corners(
-        f"({synth.images_cte(n, 'duckdb')})", ["image_id"], _SINU_POINTS
-    )
+    return _oracle_image_corners(n, _SINU_POINTS)
 
 
 # ---------------------------------------------------------------------------
@@ -333,25 +341,24 @@ def _reproject(images: DataFrame, forward, inverse, dst_w, alg) -> DataFrame:
     )
 
 
-def _oracle_warp(n, where, base, keys, forward, inverse, dst_w) -> str:
+def _oracle_warp(n, where, base, keys, points, inverse, dst_w) -> str:
     """DuckDB replay of the pixel warp over the images passing
-    ``where``: corners (``forward`` SQL) -> bbox -> grid -> per-pixel
-    inverse -> nearest src pixel -> synthetic pixel value -> GDAL
-    checksum. ``base`` = (CTEs over ``img``, the relation the corners
-    read); ``keys`` are extra output columns carried through the
-    inverse; ``inverse`` = (cte(base, keep), its output relation)."""
-    ctes, src = base
+    ``where``: corners (the wide corner stages of ``points``) -> bbox
+    -> grid -> per-pixel inverse -> nearest src pixel -> synthetic
+    pixel value -> GDAL checksum. ``base`` = (CTEs over ``img``, the
+    relation the corners read); ``keys`` are extra output columns
+    carried through the inverse; ``inverse`` = (cte(base, keep), its
+    output relation)."""
+    corner_ctes, crn = _oracle_corner_ctes(base, points)
     inv_cte, inv_rel = inverse
     k = "".join(f"{c}, " for c in keys)
     keep = f"i, image_id, ilon, ilat, w, h, fmt, {k}xd, yd, dw, dh"
-    corners = [c for pt in _corner_points(forward) for c in _point_cols(*pt)]
     return f"""
 WITH img AS (SELECT i, image_id, lon AS ilon, lat AS ilat, lon, lat, w, h, fmt
              FROM ({synth.images_cte(n, 'duckdb')}) WHERE {where}),
-{ctes}
-crn AS (SELECT *, {', '.join(corners)} FROM {src}),
+{corner_ctes},
 bbox AS (SELECT *, {MINX} AS minx, {MAXX} AS maxx,
-         {MINY} AS miny, {MAXY} AS maxy FROM crn),
+         {MINY} AS miny, {MAXY} AS maxy FROM {crn}),
 grd AS (SELECT bbox.*,
         greatest(maxx - minx, maxy - miny) / {dst_w}.0E0 AS dres FROM bbox),
 grd2 AS (SELECT grd.*,
@@ -395,17 +402,10 @@ def reproject_utm(
 
     def run(image_id, payload, lon, lat, w, h):
         zone = int(srs.utm_zone(np.array([lon]), np.array([lat]))[0])
-        lon0 = zone * 6.0 - 183.0
-        fn = srs.FN_SOUTH if lat < 0.0 else 0.0
-
-        def forward(x, y):
-            ex, ny = srs.tm_forward(x, y, lon0)
-            return ex, ny + fn
-
+        epsg = (32700 if lat < 0.0 else 32600) + zone
         warped = _warp(
-            payload, lon, lat, w, h, alg, forward,
-            lambda gx, gy: srs.tm_inverse(gx, np.asarray(gy) - fn, lon0),
-            dst_w,
+            payload, lon, lat, w, h, alg, srs.from_geographic(epsg),
+            srs.to_geographic(epsg), dst_w,
         )
         for c in range(warped.shape[2]):
             yield image_id, zone, c, gdal_checksum(warped[:, :, c])
@@ -420,7 +420,7 @@ def oracle_reproject_utm(n: int, max_i: int, dst_w: int = DST_W) -> str:
     """The warp replay in each image's UTM zone (Newton-unrolled
     inverse TM, srs.tm_inverse_sql_cte), over the first max_i images."""
     return _oracle_warp(
-        n, f"i < {max_i}", (f"{_UTM_CTES},", "g"), ["zone"], _utm_forward_sql,
+        n, f"i < {max_i}", _UTM_BASE, ["zone"], _utm_points("duckdb"),
         (partial(srs.tm_inverse_sql_cte, "ec", "nc - fn", "lon0"), "tminv"),
         dst_w,
     )
@@ -446,8 +446,8 @@ def oracle_reproject_lcc(
     the hot-cell images."""
     p = srs.LCC_REGISTRY[epsg]
     return _oracle_warp(
-        n, hot_cells_sql(max_i), ("", "img"), [],
-        partial(srs.lcc_forward_sql, p=p),
+        n, hot_cells_sql(max_i), _IMG_BASE, [],
+        _closed_form_points(srs.lcc_forward_sql, p),
         (partial(srs.lcc_inverse_sql_cte, "ec", "nc", p), "lccinv"), dst_w,
     )
 
@@ -472,8 +472,8 @@ def oracle_reproject_ps(
     point unrolled) over the hot-cell images."""
     p = srs.PS_REGISTRY[epsg]
     return _oracle_warp(
-        n, hot_cells_sql(max_i), ("", "img"), [],
-        partial(srs.ps_forward_sql, p=p),
+        n, hot_cells_sql(max_i), _IMG_BASE, [],
+        _closed_form_points(srs.ps_forward_sql, p),
         (partial(srs.ps_inverse_sql_cte, "ec", "nc", p), "psinv"), dst_w,
     )
 
@@ -498,8 +498,8 @@ def oracle_reproject_sinu(
     Newton unrolled) over the hot-cell images."""
     p = srs.SINU_REGISTRY[key]
     return _oracle_warp(
-        n, hot_cells_sql(max_i), ("", "img"), [],
-        partial(srs.sinu_forward_sql, p=p),
+        n, hot_cells_sql(max_i), _IMG_BASE, [],
+        _closed_form_points(srs.sinu_forward_sql, p),
         (partial(srs.sinu_inverse_sql_cte, "ec", "nc", p), "sinuinv"), dst_w,
     )
 
@@ -527,17 +527,12 @@ def utm_tap_grid(images: DataFrame, tr: float = 100.0) -> DataFrame:
     tap-aligned UTM output grid of every image footprint at ``tr``
     meters. Pure Catalyst (staged Krueger forward + floor/ceil
     arithmetic); coordinates are exact multiples of tr -> bigint."""
-    return _utm_corner_frame(images).selectExpr(*_tap_cols(tr))
+    return _wide_corners(_utm_base(images), _tap_cols(tr), _utm_points("spark"))
 
 
 def oracle_utm_tap_grid(n: int, tr: float = 100.0) -> str:
-    corners = [
-        c for pt in _corner_points(_utm_forward_sql) for c in _point_cols(*pt)
-    ]
-    return (
-        f"WITH img AS ({synth.images_cte(n, 'duckdb')}), {_UTM_CTES}, "
-        f"c AS (SELECT image_id, zone, {', '.join(corners)} FROM g) "
-        f"SELECT {', '.join(_tap_cols(tr))} FROM c"
+    return _oracle_wide_corners(
+        n, _UTM_BASE, _tap_cols(tr), _utm_points("duckdb")
     )
 
 
@@ -568,26 +563,6 @@ _STAGED_DM = [
     "image_id", "corner",
     f"{_dm('easting')} AS e_dm", f"{_dm('northing')} AS n_dm",
 ]
-
-
-def _with_stages(df: DataFrame, stages) -> DataFrame:
-    """One named Catalyst column per (column, expr) stage."""
-    for col, expr in stages:
-        df = df.selectExpr("*", f"{expr} AS {col}")
-    return df
-
-
-def _stage_ctes(prev: str, prefix: str, stages) -> tuple[list[str], str]:
-    """One MATERIALIZED CTE per (column, expr) stage over ``prev``
-    (the DuckDB CTE rule); returns (ctes, the last relation)."""
-    ctes = []
-    for k, (col, expr) in enumerate(stages):
-        ctes.append(
-            f"{prefix}{k} AS MATERIALIZED (SELECT *, {expr} AS {col} "
-            f"FROM {prev})"
-        )
-        prev = f"{prefix}{k}"
-    return ctes, prev
 
 
 def _staged_corners(images: DataFrame, domain: str, stages) -> DataFrame:
@@ -682,22 +657,22 @@ def oracle_eqearth_corners(n: int) -> str:
 
 _GDALMOVE_GT = [
     "image_id",
-    "cast(floor(e_tl * 1000.0E0) as bigint) AS gt0_mm",
-    "cast(floor((e_tr - e_tl) / cast(w as double) * 1000000.0E0) as bigint) "
-    "AS gt1_um",
-    "cast(floor((e_bl - e_tl) / cast(h as double) * 1000000.0E0) as bigint) "
-    "AS gt2_um",
-    "cast(floor(n_tl * 1000.0E0) as bigint) AS gt3_mm",
-    "cast(floor((n_tr - n_tl) / cast(w as double) * 1000000.0E0) as bigint) "
-    "AS gt4_um",
-    "cast(floor((n_bl - n_tl) / cast(h as double) * 1000000.0E0) as bigint) "
-    "AS gt5_um",
+    "cast(floor(easting_tl * 1000.0E0) as bigint) AS gt0_mm",
+    "cast(floor((easting_tr - easting_tl) / cast(w as double) * 1000000.0E0)"
+    " as bigint) AS gt1_um",
+    "cast(floor((easting_bl - easting_tl) / cast(h as double) * 1000000.0E0)"
+    " as bigint) AS gt2_um",
+    "cast(floor(northing_tl * 1000.0E0) as bigint) AS gt3_mm",
+    "cast(floor((northing_tr - northing_tl) / cast(w as double) * 1000000.0E0)"
+    " as bigint) AS gt4_um",
+    "cast(floor((northing_bl - northing_tl) / cast(h as double) * 1000000.0E0)"
+    " as bigint) AS gt5_um",
 ]
 
 
-def _gdalmove_cols(epsg: int) -> list[str]:
-    forward = partial(srs.sinu_forward_sql, p=srs.SINU_REGISTRY[epsg])
-    return [c for pt in _corner_points(forward)[:3] for c in _point_cols(*pt)]
+def _gdalmove_points(epsg: int) -> list[tuple]:
+    """The UL/UR/LL (tl/tr/bl) corners."""
+    return _closed_form_points(srs.sinu_forward_sql, srs.SINU_REGISTRY[epsg])[:3]
 
 
 def gdalmove_gt(images: DataFrame, epsg: int = 54008) -> DataFrame:
@@ -706,16 +681,15 @@ def gdalmove_gt(images: DataFrame, epsg: int = 54008) -> DataFrame:
     the pixel vectors. Pure Catalyst closed form (sin/cos bit-match
     across engines) — map-only, zero Python, zero shuffle. Offsets in
     mm, per-pixel terms in um/px."""
-    return images.selectExpr(
-        "image_id", "w", "h", *_gdalmove_cols(epsg)
-    ).selectExpr(*_GDALMOVE_GT)
+    return _wide_corners(
+        images.selectExpr("image_id", "lon", "lat", "w", "h"), _GDALMOVE_GT,
+        _gdalmove_points(epsg),
+    )
 
 
 def oracle_gdalmove_gt(n: int, epsg: int = 54008) -> str:
-    return (
-        f"WITH c AS (SELECT image_id, w, h, {', '.join(_gdalmove_cols(epsg))} "
-        f"FROM ({synth.images_cte(n, 'duckdb')})) "
-        f"SELECT {', '.join(_GDALMOVE_GT)} FROM c"
+    return _oracle_wide_corners(
+        n, _IMG_BASE, _GDALMOVE_GT, _gdalmove_points(epsg)
     )
 
 

@@ -17,12 +17,18 @@ math:
   zone's extent.
 
 Everything is vectorized over numpy arrays so the transforms run
-inside Arrow-batched pandas UDFs (never per-row Python), and every
-transform also has a DuckDB-SQL twin (``tm_forward_sql`` /
-``tm_inverse_sql``) built from exp/ln/sin/cos so the driver's oracle
-can replay the exact chain. Cross-engine drift is a few ulp (libm
-differences), far below the cm-level quantization the oracle queries
-use.
+inside Arrow-batched pandas UDFs (never per-row Python). Every forward
+also has a SQL twin, a (column, expr) stage list that Spark runs as
+named Catalyst projections and DuckDB as MATERIALIZED CTEs (a
+closed-form forward is the two-stage list of its easting/northing
+expressions), and every inverse a DuckDB CTE chain with its
+fixed-count iterations unrolled (``tm_inverse_sql_cte``,
+``lcc_inverse_sql_cte``, ...). The transverse Mercator is written once
+per dialect: ``_krueger`` (numpy) and ``tm_stage_list`` (SQL) serve
+UTM, EPSG:27700 and the grid-shift TM, with the SQL hyperbolics from
+``HYPERBOLICS`` (native on Spark, exp/ln forms on DuckDB).
+Cross-engine drift is a few ulp (libm differences), far below the
+dm-level quantization the oracle queries use.
 """
 
 from __future__ import annotations
@@ -31,41 +37,45 @@ import math
 
 import numpy as np
 
+
+def krueger_constants(a: float, f: float):
+    """(e, e2, A*, alpha[6], beta[6]) of an ellipsoid: the rectifying
+    radius A* = a/(1+n) (1 + n^2/4 + n^4/64 + n^6/256) and the Krueger
+    series coefficients of order n^6 in the third flattening n (public:
+    Karney 2011 eq. 35/36, also the PROJ etmerc/tmerc coefficients)."""
+    e2 = f * (2.0 - f)
+    e = float(np.sqrt(e2))
+    n = f / (2.0 - f)
+    a_cap = a / (1.0 + n) * (1.0 + n**2 / 4.0 + n**4 / 64.0 + n**6 / 256.0)
+    alpha = (
+        n / 2 - 2 * n**2 / 3 + 5 * n**3 / 16 + 41 * n**4 / 180
+        - 127 * n**5 / 288 + 7891 * n**6 / 37800,
+        13 * n**2 / 48 - 3 * n**3 / 5 + 557 * n**4 / 1440
+        + 281 * n**5 / 630 - 1983433 * n**6 / 1935360,
+        61 * n**3 / 240 - 103 * n**4 / 140 + 15061 * n**5 / 26880
+        + 167603 * n**6 / 181440,
+        49561 * n**4 / 161280 - 179 * n**5 / 168 + 6601661 * n**6 / 7257600,
+        34729 * n**5 / 80640 - 3418889 * n**6 / 1995840,
+        212378941 * n**6 / 319334400,
+    )
+    beta = (
+        n / 2 - 2 * n**2 / 3 + 37 * n**3 / 96 - n**4 / 360
+        - 81 * n**5 / 512 + 96199 * n**6 / 604800,
+        n**2 / 48 + n**3 / 15 - 437 * n**4 / 1440 + 46 * n**5 / 105
+        - 1118711 * n**6 / 3870720,
+        17 * n**3 / 480 - 37 * n**4 / 840 - 209 * n**5 / 4480
+        + 5569 * n**6 / 90720,
+        4397 * n**4 / 161280 - 11 * n**5 / 504 - 830251 * n**6 / 7257600,
+        4583 * n**5 / 161280 - 108847 * n**6 / 3991680,
+        20648693 * n**6 / 638668800,
+    )
+    return e, e2, a_cap, alpha, beta
+
+
 # WGS84 ellipsoid
 A = 6378137.0
 F = 1.0 / 298.257223563
-E2 = F * (2.0 - F)  # first eccentricity squared
-E = float(np.sqrt(E2))
-N3 = F / (2.0 - F)  # third flattening n
-
-# rectifying radius A* = a/(1+n) (1 + n^2/4 + n^4/64 + n^6/256)
-A_CAP = A / (1.0 + N3) * (1.0 + N3**2 / 4.0 + N3**4 / 64.0 + N3**6 / 256.0)
-
-# Krueger series coefficients, order n^6 (public: Karney 2011 eq. 35/36,
-# also the PROJ etmerc/tmerc coefficients)
-_n = N3
-ALPHA = (
-    _n / 2 - 2 * _n**2 / 3 + 5 * _n**3 / 16 + 41 * _n**4 / 180
-    - 127 * _n**5 / 288 + 7891 * _n**6 / 37800,
-    13 * _n**2 / 48 - 3 * _n**3 / 5 + 557 * _n**4 / 1440
-    + 281 * _n**5 / 630 - 1983433 * _n**6 / 1935360,
-    61 * _n**3 / 240 - 103 * _n**4 / 140 + 15061 * _n**5 / 26880
-    + 167603 * _n**6 / 181440,
-    49561 * _n**4 / 161280 - 179 * _n**5 / 168 + 6601661 * _n**6 / 7257600,
-    34729 * _n**5 / 80640 - 3418889 * _n**6 / 1995840,
-    212378941 * _n**6 / 319334400,
-)
-BETA = (
-    _n / 2 - 2 * _n**2 / 3 + 37 * _n**3 / 96 - _n**4 / 360
-    - 81 * _n**5 / 512 + 96199 * _n**6 / 604800,
-    _n**2 / 48 + _n**3 / 15 - 437 * _n**4 / 1440 + 46 * _n**5 / 105
-    - 1118711 * _n**6 / 3870720,
-    17 * _n**3 / 480 - 37 * _n**4 / 840 - 209 * _n**5 / 4480
-    + 5569 * _n**6 / 90720,
-    4397 * _n**4 / 161280 - 11 * _n**5 / 504 - 830251 * _n**6 / 7257600,
-    4583 * _n**5 / 161280 - 108847 * _n**6 / 3991680,
-    20648693 * _n**6 / 638668800,
-)
+E, E2, A_CAP, ALPHA, BETA = krueger_constants(A, F)
 
 K0 = 0.9996  # UTM central scale
 FE = 500000.0  # false easting
@@ -88,23 +98,31 @@ def utm_lon0(zone):
     return np.asarray(zone, dtype=np.float64) * 6.0 - 183.0
 
 
-def tm_forward(lon, lat, lon0_deg):
-    """Geographic (deg) -> transverse mercator (easting, northing) with
-    UTM constants (k0=0.9996, FE=500000; FN=0 — callers add FN_SOUTH
-    for the southern hemisphere). Krueger order-6 forward."""
-    lam = np.radians(np.asarray(lon, dtype=np.float64) - lon0_deg)
-    phi = np.radians(np.asarray(lat, dtype=np.float64))
+def _krueger(lam, phi, e, alpha):
+    """(xi, eta) of the Krueger order-6 TM forward at (lam, phi) in
+    radians from the central meridian, scaled by 1/(k0 A*)."""
     sphi = np.sin(phi)
     # conformal latitude tangent: t = sinh(atanh(sin phi) - e atanh(e sin phi))
-    t = np.sinh(np.arctanh(sphi) - E * np.arctanh(E * sphi))
+    t = np.sinh(np.arctanh(sphi) - e * np.arctanh(e * sphi))
     cl = np.cos(lam)
     xi_p = np.arctan2(t, cl)
     eta_p = np.arcsinh(np.sin(lam) / np.sqrt(t * t + cl * cl))
     xi = xi_p.copy()
     eta = eta_p.copy()
-    for j, a in enumerate(ALPHA, start=1):
+    for j, a in enumerate(alpha, start=1):
         xi = xi + a * np.sin(2 * j * xi_p) * np.cosh(2 * j * eta_p)
         eta = eta + a * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
+    return xi, eta
+
+
+def tm_forward(lon, lat, lon0_deg):
+    """Geographic (deg) -> transverse mercator (easting, northing) with
+    UTM constants (k0=0.9996, FE=500000; FN=0 — callers add FN_SOUTH
+    for the southern hemisphere)."""
+    xi, eta = _krueger(
+        np.radians(np.asarray(lon, dtype=np.float64) - lon0_deg),
+        np.radians(np.asarray(lat, dtype=np.float64)), E, ALPHA,
+    )
     return FE + K0 * A_CAP * eta, K0 * A_CAP * xi
 
 
@@ -369,6 +387,16 @@ def aea_q(s, e, e2):
     )
 
 
+def aea_q_sql(s: str, e: float, e2: float) -> str:
+    """Dual-dialect SQL twin of aea_q over the SQL expression ``s``."""
+    ec = _sql_const(e)
+    return (
+        f"({_sql_const(1.0 - e2)} * ({s} / (1.0E0 - {_sql_const(e2)} * {s} * {s}) "
+        f"- {_sql_const(1.0 / (2.0 * e))} "
+        f"* ln((1.0E0 - {ec} * {s}) / (1.0E0 + {ec} * {s}))))"
+    )
+
+
 # EPSG:5070 NAD83 / Conus Albers (NAD83 ~ WGS84 at this precision;
 # GRS80 ellipsoid)
 AEA_REGISTRY = {
@@ -416,17 +444,9 @@ def aea_forward_sql(lon_expr: str, lat_expr: str, p: AEA) -> tuple[str, str]:
     """(easting_expr, northing_expr) dual-dialect SQL twin of
     aea_forward (ln/sqrt/sin/cos; ~1 ulp cross-engine, absorbed by dm
     quantization)."""
-    e = _sql_const(p.e)
-    e2 = _sql_const(p.e2)
     n = _sql_const(p.n)
     lam = f"radians(({lon_expr}) - {_sql_const(p.lon0)})"
-    phi = f"radians({lat_expr})"
-    s = f"sin({phi})"
-    q = (
-        f"({_sql_const(1.0 - p.e2)} * ({s} / (1.0E0 - {e2} * {s} * {s}) "
-        f"- {_sql_const(1.0 / (2.0 * p.e))} "
-        f"* ln((1.0E0 - {e} * {s}) / (1.0E0 + {e} * {s}))))"
-    )
+    q = aea_q_sql(f"sin(radians({lat_expr}))", p.e, p.e2)
     rho = f"({_sql_const(p.a)} * sqrt({_sql_const(p.C)} - {n} * {q}) / {n})"
     th = f"({n} * {lam})"
     return (
@@ -731,7 +751,8 @@ def sinu_forward_sql(lon_expr: str, lat_expr: str, p: SINU) -> tuple[str, str]:
 
 
 def _parse_epsg(code: int):
-    """-> ('geog'|'merc'|'utm'|'lcc', zone, south)."""
+    """-> ('geog'|'merc'|'utm'|'lcc'|'aea', zone, south); for LCC and
+    AEA ``zone`` is the registry key."""
     if code == 4326:
         return "geog", 0, False
     if code == 3857:
@@ -862,9 +883,10 @@ def approx_transform_scanline(transform, xs, y, max_err: float = 0.125):
 
 
 # ---------------------------------------------------------------------------
-# DuckDB SQL twins. Hyperbolics are unavailable in DuckDB, so they are
-# spelled with exp/ln; drift vs numpy is a few ulp, absorbed by the
-# cm-level quantization of every oracle built on these.
+# SQL twins. One helper set of hyperbolics per dialect: native on
+# Spark; DuckDB has none, so they are spelled with exp/ln there (drift
+# vs numpy is a few ulp, absorbed by the dm quantization of every
+# oracle built on them).
 
 
 def _sql_const(x: float) -> str:
@@ -873,34 +895,57 @@ def _sql_const(x: float) -> str:
     return synth.flit(x)
 
 
-def tm_forward_sql(lon_expr: str, lat_expr: str, lon0_expr: str) -> tuple[str, str]:
-    """(easting_expr, northing_expr) as DuckDB SQL (FN not added).
-    Mirrors tm_forward; expects scalar-double subexpressions."""
-    e = _sql_const(E)
-    ka = _sql_const(K0 * A_CAP)
-    lam = f"radians(({lon_expr}) - ({lon0_expr}))"
-    phi = f"radians({lat_expr})"
-    s = f"sin({phi})"
-    atanh_s = f"(0.5E0 * ln((1.0E0 + {s}) / (1.0E0 - {s})))"
-    atanh_es = f"(0.5E0 * ln((1.0E0 + {e} * {s}) / (1.0E0 - {e} * {s})))"
-    q = f"({atanh_s} - {e} * {atanh_es})"
-    t = f"((exp({q}) - exp(-{q})) / 2.0E0)"
-    cl = f"cos({lam})"
-    xi_p = f"atan2({t}, {cl})"
-    arg = f"(sin({lam}) / sqrt({t} * {t} + {cl} * {cl}))"
-    eta_p = f"ln({arg} + sqrt({arg} * {arg} + 1.0E0))"  # asinh
-    xi_terms = [xi_p]
-    eta_terms = [eta_p]
-    for j, a in enumerate(ALPHA, start=1):
-        aj = _sql_const(a)
-        c = f"(2.0E0 * {j}.0E0)"
-        cosh = f"((exp({c} * {eta_p}) + exp(-{c} * {eta_p})) / 2.0E0)"
-        sinh = f"((exp({c} * {eta_p}) - exp(-{c} * {eta_p})) / 2.0E0)"
-        xi_terms.append(f"{aj} * sin({c} * {xi_p}) * {cosh}")
-        eta_terms.append(f"{aj} * cos({c} * {xi_p}) * {sinh}")
-    xi = "(" + " + ".join(xi_terms) + ")"
-    eta = "(" + " + ".join(eta_terms) + ")"
-    return f"({_sql_const(FE)} + {ka} * {eta})", f"({ka} * {xi})"
+HYPERBOLICS = {
+    "spark": {
+        "sinh": "sinh({0})", "cosh": "cosh({0})",
+        "asinh": "asinh({0})", "atanh": "atanh({0})",
+    },
+    "duckdb": {
+        "sinh": "((exp({0}) - exp(-({0}))) / 2.0E0)",
+        "cosh": "((exp({0}) + exp(-({0}))) / 2.0E0)",
+        "asinh": "ln(({0}) + sqrt(({0}) * ({0}) + 1.0E0))",
+        "atanh": "(0.5E0 * ln((1.0E0 + ({0})) / (1.0E0 - ({0}))))",
+    },
+}
+
+
+def tm_stage_list(sfx, lon, lat, lon0, fn, e, alpha, ka, fe, m0, hyp):
+    """The Krueger TM forward as ordered (column, expr) stages, each
+    column name suffixed with ``sfx``, ending in easting{sfx} =
+    fe + ka * etasum and northing{sfx} = fn + ka * xisum - m0.
+    ``lon``/``lat``/``lon0``/``fn`` are SQL expressions (degrees,
+    metres); ``e``, ``alpha``, ``ka`` (k0 A*), ``fe`` and ``m0`` are
+    values; ``hyp`` is one HYPERBOLICS dialect. The SQL twin of
+    ``_krueger`` with its op order."""
+    c = _sql_const
+    sinh, cosh, asinh, atanh = (
+        hyp[f].format for f in ("sinh", "cosh", "asinh", "atanh")
+    )
+    lam, s, t, cl, xip, etap = (
+        f"{col}{sfx}" for col in ("lamt", "sphit", "tt", "clt", "xip", "etap")
+    )
+    xi_terms, eta_terms = [xip], [etap]
+    for j, a in enumerate(alpha, start=1):
+        xi_terms.append(
+            f"{c(a)} * sin({2 * j}.0E0 * {xip}) * "
+            + cosh(f"{2 * j}.0E0 * {etap}")
+        )
+        eta_terms.append(
+            f"{c(a)} * cos({2 * j}.0E0 * {xip}) * "
+            + sinh(f"{2 * j}.0E0 * {etap}")
+        )
+    return [
+        (lam, f"radians(({lon}) - ({lon0}))"),
+        (s, f"sin(radians({lat}))"),
+        (t, sinh(f"{atanh(s)} - {c(e)} * {atanh(f'{c(e)} * {s}')}")),
+        (cl, f"cos({lam})"),
+        (xip, f"atan2({t}, {cl})"),
+        (etap, asinh(f"sin({lam}) / sqrt({t} * {t} + {cl} * {cl})")),
+        (f"xisum{sfx}", "(" + " + ".join(xi_terms) + ")"),
+        (f"etasum{sfx}", "(" + " + ".join(eta_terms) + ")"),
+        (f"easting{sfx}", f"{c(fe)} + {c(ka)} * etasum{sfx}"),
+        (f"northing{sfx}", f"{fn} + {c(ka)} * xisum{sfx} - {c(m0)}"),
+    ]
 
 
 def tm_inverse_sql_cte(
@@ -920,6 +965,10 @@ def tm_inverse_sql_cte(
     ka = _sql_const(K0 * A_CAP)
     e = _sql_const(E)
     e2 = _sql_const(E2)
+    sinh, cosh, asinh, atanh = (
+        HYPERBOLICS["duckdb"][f].format
+        for f in ("sinh", "cosh", "asinh", "atanh")
+    )
     stages = [
         f"s0 AS MATERIALIZED (SELECT {keep}, ({x_expr} - {_sql_const(FE)}) / {ka} AS eta, "
         f"({y_expr}) / {ka} AS xi, ({lon0_expr}) AS lon0 FROM {base})"
@@ -929,37 +978,30 @@ def tm_inverse_sql_cte(
     for j, b in enumerate(BETA, start=1):
         bj = _sql_const(b)
         c = f"{2 * j}.0E0"
-        cosh = f"((exp({c} * eta) + exp(-({c}) * eta)) / 2.0E0)"
-        sinh = f"((exp({c} * eta) - exp(-({c}) * eta)) / 2.0E0)"
-        xi_terms.append(f"- {bj} * sin({c} * xi) * {cosh}")
-        eta_terms.append(f"- {bj} * cos({c} * xi) * {sinh}")
+        xi_terms.append(f"- {bj} * sin({c} * xi) * {cosh(f'{c} * eta')}")
+        eta_terms.append(f"- {bj} * cos({c} * xi) * {sinh(f'{c} * eta')}")
     stages.append(
         f"s1 AS MATERIALIZED (SELECT {keep}, lon0, "
         f"({' '.join(xi_terms)}) AS xip, ({' '.join(eta_terms)}) AS etap "
         f"FROM s0)"
     )
     stages.append(
-        "s2 AS MATERIALIZED (SELECT " + keep + ", lon0, "
-        "((exp(etap) - exp(-etap)) / 2.0E0) AS she, cos(xip) AS cxi, "
-        "sin(xip) AS sxi FROM s1)"
+        f"s2 AS MATERIALIZED (SELECT {keep}, lon0, {sinh('etap')} AS she, "
+        "cos(xip) AS cxi, sin(xip) AS sxi FROM s1)"
     )
     stages.append(
         "s3 AS MATERIALIZED (SELECT " + keep + ", lon0, atan2(she, cxi) AS lam, "
         "(sxi / sqrt(she * she + cxi * cxi)) AS tp FROM s2)"
     )
     stages.append(
-        "s4 AS MATERIALIZED (SELECT " + keep + ", lon0, lam, "
-        "ln(tp + sqrt(tp * tp + 1.0E0)) AS psi, atan(tp) AS phi0 FROM s3)"
+        f"s4 AS MATERIALIZED (SELECT {keep}, lon0, lam, "
+        f"{asinh('tp')} AS psi, atan(tp) AS phi0 FROM s3)"
     )
     prev = "phi0"
     for it in range(NEWTON_ITERS):
         nxt = f"phi{it + 1}"
         s = f"sin({prev})"
-        f_ = (
-            f"(0.5E0 * ln((1.0E0 + {s}) / (1.0E0 - {s})) "
-            f"- {e} * 0.5E0 * ln((1.0E0 + {e} * {s}) / (1.0E0 - {e} * {s})) "
-            f"- psi)"
-        )
+        f_ = f"({atanh(s)} - {e} * {atanh(f'{e} * {s}')} - psi)"
         fp = f"((1.0E0 - {e2}) / ((1.0E0 - {e2} * {s} * {s}) * cos({prev})))"
         stages.append(
             f"n{it} AS MATERIALIZED (SELECT {keep}, lon0, lam, psi, "
@@ -985,39 +1027,6 @@ def tm_inverse_sql_cte(
 # Karney 2011 for the Krueger series, reused generalized over n).
 
 
-def krueger_constants(a: float, f: float):
-    """(e, e2, A*, alpha[6], beta[6]) for an arbitrary ellipsoid —
-    the module-level WGS84 constants specialized by the same public
-    polynomials in the third flattening n."""
-    e2 = f * (2.0 - f)
-    e = float(np.sqrt(e2))
-    n = f / (2.0 - f)
-    a_cap = a / (1.0 + n) * (1.0 + n**2 / 4.0 + n**4 / 64.0 + n**6 / 256.0)
-    alpha = (
-        n / 2 - 2 * n**2 / 3 + 5 * n**3 / 16 + 41 * n**4 / 180
-        - 127 * n**5 / 288 + 7891 * n**6 / 37800,
-        13 * n**2 / 48 - 3 * n**3 / 5 + 557 * n**4 / 1440
-        + 281 * n**5 / 630 - 1983433 * n**6 / 1935360,
-        61 * n**3 / 240 - 103 * n**4 / 140 + 15061 * n**5 / 26880
-        + 167603 * n**6 / 181440,
-        49561 * n**4 / 161280 - 179 * n**5 / 168 + 6601661 * n**6 / 7257600,
-        34729 * n**5 / 80640 - 3418889 * n**6 / 1995840,
-        212378941 * n**6 / 319334400,
-    )
-    beta = (
-        n / 2 - 2 * n**2 / 3 + 37 * n**3 / 96 - n**4 / 360
-        - 81 * n**5 / 512 + 96199 * n**6 / 604800,
-        n**2 / 48 + n**3 / 15 - 437 * n**4 / 1440 + 46 * n**5 / 105
-        - 1118711 * n**6 / 3870720,
-        17 * n**3 / 480 - 37 * n**4 / 840 - 209 * n**5 / 4480
-        + 5569 * n**6 / 90720,
-        4397 * n**4 / 161280 - 11 * n**5 / 504 - 830251 * n**6 / 7257600,
-        4583 * n**5 / 161280 - 108847 * n**6 / 3991680,
-        20648693 * n**6 / 638668800,
-    )
-    return e, e2, a_cap, alpha, beta
-
-
 class TMD:
     """Transverse Mercator on a non-WGS84 ellipsoid + TOWGS84 datum
     (EPSG:27700-style projected CRS)."""
@@ -1033,12 +1042,7 @@ class TMD:
             krueger_constants(a, f)
         )
         # false-origin northing offset: xi of (lat0, lon0)
-        phi0 = np.radians(lat0)
-        s0 = np.sin(phi0)
-        t0 = np.sinh(np.arctanh(s0) - self.e * np.arctanh(self.e * s0))
-        xi0 = float(np.arctan2(t0, 1.0))
-        for j, al in enumerate(self.alpha, start=1):
-            xi0 = xi0 + al * np.sin(2 * j * np.arctan2(t0, 1.0))
+        xi0, _ = _krueger(0.0, np.radians(lat0), self.e, self.alpha)
         self.m0 = k0 * self.a_cap * xi0
 
     def helmert_rad(self):
@@ -1110,18 +1114,10 @@ def helmert_inverse(x, y, z, p: TMD):
 
 def tmd_forward(lon, lat, p: TMD):
     """Source-datum geographic (deg) -> projected easting/northing."""
-    lam = np.radians(np.asarray(lon, np.float64) - p.lon0)
-    phi = np.radians(np.asarray(lat, np.float64))
-    sphi = np.sin(phi)
-    t = np.sinh(np.arctanh(sphi) - p.e * np.arctanh(p.e * sphi))
-    cl = np.cos(lam)
-    xi_p = np.arctan2(t, cl)
-    eta_p = np.arcsinh(np.sin(lam) / np.sqrt(t * t + cl * cl))
-    xi = xi_p.copy()
-    eta = eta_p.copy()
-    for j, al in enumerate(p.alpha, start=1):
-        xi = xi + al * np.sin(2 * j * xi_p) * np.cosh(2 * j * eta_p)
-        eta = eta + al * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
+    xi, eta = _krueger(
+        np.radians(np.asarray(lon, np.float64) - p.lon0),
+        np.radians(np.asarray(lat, np.float64)), p.e, p.alpha,
+    )
     east = p.fe + p.k0 * p.a_cap * eta
     north = p.fn + p.k0 * p.a_cap * xi - p.m0
     return east, north
@@ -1143,33 +1139,12 @@ def tmd_stage_list(p: TMD, dialect: str) -> list[tuple[str, str]]:
     drives both engines — Spark as chained selectExpr stages (named
     non-cheap intermediates stay staged under CollapseProject),
     DuckDB as MATERIALIZED CTE stages — so op order and text match
-    and dm-floor parity holds. Hyperbolics use native functions on
-    Spark and exp() compositions on DuckDB (agree to ~ulp; the dm
-    quantization absorbs it, as in the UTM/LCC corner gates)."""
+    and dm-floor parity holds. The TM tail is ``tm_stage_list`` with
+    the dialect's HYPERBOLICS (agree to ~ulp; the dm quantization
+    absorbs it, as in the UTM/LCC corner gates)."""
     c = _sql_const
     tx, ty, tz, rx, ry, rz, m = p.helmert_rad()
     m2 = 2.0 - m
-
-    def sinh_(x):
-        if dialect == "spark":
-            return f"sinh({x})"
-        return f"((exp({x}) - exp(-({x}))) / 2.0E0)"
-
-    def cosh_(x):
-        if dialect == "spark":
-            return f"cosh({x})"
-        return f"((exp({x}) + exp(-({x}))) / 2.0E0)"
-
-    def asinh_(x):
-        if dialect == "spark":
-            return f"asinh({x})"
-        return f"ln(({x}) + sqrt(({x}) * ({x}) + 1.0E0))"
-
-    def atanh_(x):
-        if dialect == "spark":
-            return f"atanh({x})"
-        return f"(0.5E0 * ln((1.0E0 + ({x})) / (1.0E0 - ({x}))))"
-
     st: list[tuple[str, str]] = []
     # WGS84 geodetic -> geocentric (h = 0)
     st.append(("lamw", "radians(lon)"))
@@ -1198,28 +1173,10 @@ def tmd_stage_list(p: TMD, dialect: str) -> list[tuple[str, str]]:
     st.append(("lons", "degrees(lams)"))
     st.append(("lats", f"degrees({prev})"))
     # TM forward on the source ellipsoid
-    st.append(("lamt", f"radians(lons - ({c(p.lon0)}))"))
-    st.append(("phit", "radians(lats)"))
-    st.append(("sphit", "sin(phit)"))
-    st.append(("tt", sinh_(f"{atanh_('sphit')} - {c(p.e)} * "
-                           f"{atanh_(f'{c(p.e)} * sphit')}")))
-    st.append(("clt", "cos(lamt)"))
-    st.append(("xip", "atan2(tt, clt)"))
-    st.append(("etap", asinh_("sin(lamt) / sqrt(tt * tt + clt * clt)")))
-    xi_terms = ["xip"]
-    eta_terms = ["etap"]
-    for j, al in enumerate(p.alpha, start=1):
-        aj = c(al)
-        xi_terms.append(f"{aj} * sin({2 * j}.0E0 * xip) * "
-                        + cosh_(f"{2 * j}.0E0 * etap"))
-        eta_terms.append(f"{aj} * cos({2 * j}.0E0 * xip) * "
-                         + sinh_(f"{2 * j}.0E0 * etap"))
-    st.append(("xisum", "(" + " + ".join(xi_terms) + ")"))
-    st.append(("etasum", "(" + " + ".join(eta_terms) + ")"))
-    ka = c(p.k0 * p.a_cap)
-    st.append(("easting", f"{c(p.fe)} + {ka} * etasum"))
-    st.append(("northing", f"{c(p.fn)} + {ka} * xisum - {c(p.m0)}"))
-    return st
+    return st + tm_stage_list(
+        "", "lons", "lats", c(p.lon0), c(p.fn), p.e, p.alpha,
+        p.k0 * p.a_cap, p.fe, p.m0, HYPERBOLICS[dialect],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1332,11 +1289,7 @@ class EQE:
         self.a = a
         self.e2 = f * (2.0 - f)
         self.e = math.sqrt(self.e2)
-        self.qp = (1.0 - self.e2) * (
-            1.0 / (1.0 - self.e2)
-            - (1.0 / (2.0 * self.e))
-            * math.log((1.0 - self.e) / (1.0 + self.e))
-        )
+        self.qp = aea_q(1.0, self.e, self.e2)
         self.rq = a * math.sqrt(self.qp / 2.0)
 
 
@@ -1348,11 +1301,7 @@ def eqearth_forward(lon, lat, p: EQE):
     eqearth_stage_list."""
     lam = np.radians(np.asarray(lon, np.float64))
     phi = np.radians(np.asarray(lat, np.float64))
-    s = np.sin(phi)
-    q = (1.0 - p.e2) * (
-        s / (1.0 - p.e2 * s * s)
-        - (1.0 / (2.0 * p.e)) * np.log((1.0 - p.e * s) / (1.0 + p.e * s))
-    )
+    q = aea_q(np.sin(phi), p.e, p.e2)
     beta = np.arcsin(np.clip(q / p.qp, -1.0, 1.0))
     theta = np.arcsin(EQE_M * np.sin(beta))
     t2 = theta * theta
@@ -1368,16 +1317,11 @@ def eqearth_stage_list(p: EQE) -> list[tuple[str, str]]:
     northing) — dialect-neutral (asin/ln are ~1-ulp cross-engine; the
     dm quantization of the corner gates absorbs that, per the measured
     libm-parity policy in CLAUDE.md)."""
-    e, e2, qp = _sql_const(p.e), _sql_const(p.e2), _sql_const(p.qp)
+    qp = _sql_const(p.qp)
     stages = [
         ("lam", "radians(lon)"),
         ("sphi", "sin(radians(lat))"),
-        (
-            "q",
-            f"({_sql_const(1.0 - p.e2)} * (sphi / (1.0E0 - {e2} * sphi * sphi)"
-            f" - {_sql_const(1.0 / (2.0 * p.e))} "
-            f"* ln((1.0E0 - {e} * sphi) / (1.0E0 + {e} * sphi))))",
-        ),
+        ("q", aea_q_sql("sphi", p.e, p.e2)),
         ("beta", f"asin(least(greatest(q / {qp}, -1.0E0), 1.0E0))"),
         ("theta", f"asin({_sql_const(EQE_M)} * sin(beta))"),
         ("t2", "(theta * theta)"),

@@ -48,6 +48,23 @@ def test_every_query_has_oracle():
     )
 
 
+ORACLE_SQL_MAX_BYTES = 64 * 1024
+
+
+def test_oracle_sql_stays_small():
+    """Every oracle is staged SQL, not one textually re-expanded
+    expression: a forward inlined into every use grew the UTM oracles
+    to ~481 KB and ~2 s of DuckDB parsing each. Stage repeated
+    subterms through named columns or MATERIALIZED CTEs instead."""
+    mod = _entry_module()
+    big = {
+        name: len(sql.encode())
+        for name, sql in mod.oracle_sql().items()
+        if len(sql.encode()) >= ORACLE_SQL_MAX_BYTES
+    }
+    assert not big, f"oracle SQL over {ORACLE_SQL_MAX_BYTES} bytes: {big}"
+
+
 def _driver_green():
     spec = importlib.util.spec_from_file_location(
         "driver_green", ROOT / "tools" / "driver_green.py"

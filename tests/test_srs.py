@@ -6,10 +6,12 @@ exact conformal-latitude definition, and closed-form UTM invariants —
 not against the implementation's own series.
 """
 
+from functools import partial
+
 import numpy as np
 import pytest
 
-from gdal_spark import srs
+from gdal_spark import srs, synth
 
 
 def _grid(n=4000, lat_hi=84.0):
@@ -138,32 +140,6 @@ def test_approx_transformer_tolerance():
     ax_, ay_ = srs.approx_transform_scanline(px_transform, xs, y, max_err=0.125)
     assert np.max(np.abs(ax_ - ex)) <= 0.125
     assert np.max(np.abs(ay_ - ey)) <= 0.125
-
-
-def test_forward_sql_twin_matches_numpy(duckdb_con=None):
-    import duckdb
-
-    con = duckdb.connect()
-    n = 2000
-    con.execute(
-        "CREATE TABLE t AS SELECT i, "
-        "-78.0E0 + 6.0E0*((i*0.6180339887498949E0)-floor(i*0.6180339887498949E0)) AS lon, "
-        "-80.0E0 + 164.0E0*((i*0.41421356237309515E0)-floor(i*0.41421356237309515E0)) AS lat "
-        f"FROM range(1,{n + 1}) r(i)"
-    )
-    ex, nx = srs.tm_forward_sql("lon", "lat", "-75.0E0")
-    d = con.execute(f"SELECT lon, lat, {ex} AS e, {nx} AS n2 FROM t ORDER BY i").df()
-    e_np, n_np = srs.tm_forward(d["lon"].to_numpy(), d["lat"].to_numpy(), -75.0)
-    assert np.abs(d["e"].to_numpy() - e_np).max() < 1e-6
-    assert np.abs(d["n2"].to_numpy() - n_np).max() < 1e-6
-    cte = srs.tm_inverse_sql_cte("e", "n2", "-75.0E0", "fw", "i")
-    q = (
-        f"WITH fw AS (SELECT i, {ex} AS e, {nx} AS n2 FROM t),\n{cte}\n"
-        "SELECT i, lon, lat FROM tminv ORDER BY i"
-    )
-    dinv = con.execute(q).df()
-    assert np.abs(dinv["lon"].to_numpy() - d["lon"].to_numpy()).max() < 1e-11
-    assert np.abs(dinv["lat"].to_numpy() - d["lat"].to_numpy()).max() < 1e-11
 
 
 def test_warp_with_approx_transformer_matches_exact():
@@ -453,9 +429,32 @@ def _expr_stages(forward_sql):
     return stages
 
 
+def _utm_stages(lon0):
+    """The UTM corner forward the oracles run, over a lon0/fn base."""
+    from gdal_spark.operators.reproject import _utm_points
+
+    forward = _utm_points("duckdb")[0][3]
+    return [("lon0", synth.flit(lon0)), ("fn", "0.0E0"),
+            *forward("", "lon", "lat")]
+
+
+def _tm_inverse_cte(x, y, lon0, base, keep):
+    return srs.tm_inverse_sql_cte(x, y, synth.flit(lon0), base, keep)
+
+
 PS_INV = (srs.ps_inverse, srs.ps_inverse_sql_cte, "psinv")
 SINU_INV = (srs.sinu_inverse, srs.sinu_inverse_sql_cte, "sinuinv")
 SQL_TWINS = [
+    pytest.param(
+        -75.0, srs.tm_forward, _utm_stages,
+        (srs.tm_inverse, _tm_inverse_cte, "tminv"), (-78.0, -72.0, -80.0, 84.0),
+        id="utm18n",
+    ),
+    pytest.param(
+        srs.TMD_REGISTRY[27700], srs.tmd_from_wgs84,
+        partial(srs.tmd_stage_list, dialect="duckdb"), None,
+        (-8.0, 2.0, 49.5, 61.0), id="osgb27700",
+    ),
     pytest.param(
         srs.LCC_REGISTRY[2154], srs.lcc_forward,
         _expr_stages(srs.lcc_forward_sql), None, (-4.0, 9.0, 41.0, 51.0),
