@@ -232,8 +232,11 @@ def grid_table_from_ntv2(spark: SparkSession, path: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ETRS89 / British National Grid TM (OSGM15 method step 1): plain
-# Krueger TM on GRS80 with the OSGB projection constants — identity
-# TOWGS84, so the TMD Helmert stage reduces to exact passthrough.
+# Krueger TM on GRS80 with the OSGB projection constants. The TOWGS84
+# is the identity, but the TMD datum stage still runs (WGS84 geodetic
+# -> geocentric -> Helmert -> GRS80 geodetic): the WGS84 -> GRS80
+# ellipsoid swap moves points by about 0.10 mm, so it is not a
+# passthrough.
 
 ETRS89_TM = srs.TMD(
     a=6378137.0,

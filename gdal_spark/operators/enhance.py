@@ -241,13 +241,12 @@ def hsv_merge(images: DataFrame) -> DataFrame:
     """(image_id, channel, cks) — channel-0 DEM -> color relief RGB +
     hillshade intensity -> hsv merge; per-channel GDAL checksum over
     the interior (hillshade leaves edges uncomputed)."""
-    from .dem import color_relief_band, window_features
+    from .dem import HORN, color_relief_band, gradient, shade
 
     def merge(payload):
         demb = codecs.decode_image(bytes(payload))[:, :, 0]
         rgb = color_relief_band(demb).astype(np.int64)[1:-1, 1:-1]
-        shade = window_features(demb)["shade"]
-        gray = np.floor(shade + 0.5).astype(np.int64)
+        gray = np.floor(shade(*gradient(demb, HORN)) + 0.5).astype(np.int64)
         merged = _hsv_merge_bands(
             rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2], gray
         )
@@ -257,45 +256,21 @@ def hsv_merge(images: DataFrame) -> DataFrame:
 
 
 def oracle_hsv_merge(n: int, max_i: int) -> str:
-    """Composed SQL replay: hillshade window -> gray byte, color-relief
-    ladder -> r/g/b bytes, then the staged hsv round-trip."""
-    from .. import synth
-    from .dem import _NBR, _WX, _WY, COLOR_RAMP, interior_grid, shade_sql
-    from ..synth import flit
+    """Composed SQL replay: the focal oracle's Horn window -> gray
+    byte, color-relief ladder on the center value -> r/g/b bytes, then
+    the staged hsv round-trip."""
+    from .dem import HORN, _focal_ctes, images_window, ramp_sql, shade_sql
 
-    def chan(c):
-        first_v, first_c = COLOR_RAMP[0]
-        cases = [f"WHEN val <= {first_v} THEN {first_c[c]}"]
-        for (v0, c0), (v1, c1) in zip(COLOR_RAMP, COLOR_RAMP[1:]):
-            interp = (
-                f"cast(trunc(0.45E0 + {c0[c]} + "
-                f"(cast(val as double) - {flit(float(v0))}) / "
-                f"{flit(float(v1 - v0))} * {c1[c] - c0[c]}) as bigint)"
-            )
-            cases.append(
-                f"WHEN val <= {v1} THEN least(greatest({interp}, 0), 255)"
-            )
-        return f"(CASE {' '.join(cases)} ELSE {COLOR_RAMP[-1][1][c]} END)"
-
-    nbr_val = synth.pixel_val_sql()
+    src = images_window(n, max_i)
     cks_sql = checksum_sql("oval", "(y0 - 1) * (w - 2) + (x0 - 1)")
     return (
-        f"WITH g AS MATERIALIZED ({interior_grid(n, max_i)}), "
-        f"sh AS MATERIALIZED (SELECT image_id, x0, y0, "
-        f"cast(floor({shade_sql()} + 0.5E0) as bigint) AS gray FROM ("
-        f"SELECT image_id, x0, y0, sum(v * {_WX}) AS dxh, "
-        f"sum(v * {_WY}) AS dyh FROM (SELECT image_id, x0, y0, ddx, ddy, "
-        f"{nbr_val} AS v FROM (SELECT g.*, ddx, ddy, x0 + ddx AS x, "
-        f"y0 + ddy AS y, 0 AS ch FROM g, {_NBR}) q0) q1 "
-        f"GROUP BY 1, 2, 3) q2), "
-        f"rel AS MATERIALIZED (SELECT image_id, w, x0, y0, "
-        f"{chan(0)} AS r, {chan(1)} AS g, {chan(2)} AS b FROM ("
-        f"SELECT q4.*, {nbr_val} AS val FROM (SELECT g.*, x0 AS x, "
-        f"y0 AS y, 0 AS ch FROM g) q4) q3), "
-        f"m1 AS MATERIALIZED (SELECT rel.*, gray, "
+        f"WITH {_focal_ctes(src, HORN, ', min(w) AS w, min(c) AS c')}, "
+        f"m1 AS MATERIALIZED (SELECT *, "
         f"greatest(r, greatest(g, b)) AS maxc, "
-        f"least(r, least(g, b)) AS minc "
-        f"FROM rel JOIN sh USING (image_id, x0, y0)), "
+        f"least(r, least(g, b)) AS minc FROM (SELECT image_id, w, x0, y0, "
+        f"cast(floor({shade_sql(HORN.div)} + 0.5E0) as bigint) AS gray, "
+        f"{ramp_sql(0, val='c')} AS r, {ramp_sql(1, val='c')} AS g, "
+        f"{ramp_sql(2, val='c')} AS b FROM agg)), "
         f"m2 AS MATERIALIZED (SELECT *, "
         f"CASE WHEN minc = maxc THEN 1.0E0 "
         f"ELSE cast(maxc - minc as double) END AS den, "

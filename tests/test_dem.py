@@ -1,12 +1,18 @@
-"""gdaldem focal ops: window features vs a naive per-pixel loop, and
-the tiled halo-exchange path vs the single-array computation."""
+"""gdaldem focal ops: window features vs a naive per-pixel loop, the
+tiled halo-exchange path vs the single-array computation, each SQL
+twin vs its numpy kernel, and every DEM-family query vs its oracle."""
+
+import sys
+from pathlib import Path
 
 import numpy as np
+import pytest
 
 from gdal_spark.operators import dem
 
 
 def naive_features(d):
+    hs = dem._hillshade(8.0)
     h, w = d.shape
     out = {k: np.zeros((h - 2, w - 2)) for k in
            ("slope", "aspect", "tri", "tpi", "rough", "shade")}
@@ -33,9 +39,8 @@ def naive_features(d):
             out["tpi"][y - 1, x - 1] = w4 - sum(nb) * 0.125
             out["rough"][y - 1, x - 1] = max(nb + [w4]) - min(nb + [w4])
             gx, gy = hx * 1.0, hy * -1.0
-            c254 = (dem.SIN_ALT_254 - (gy * dem.COS_AZ_COS_ALT_Z_254
-                    - gx * dem.SIN_AZ_COS_ALT_Z_254)) / np.sqrt(
-                1.0 + dem.SQUARE_Z * (gx * gx + gy * gy))
+            c254 = (hs.sin254 - (gy * hs.caz254 - gx * hs.saz254)) / np.sqrt(
+                1.0 + hs.square_z * (gx * gx + gy * gy))
             out["shade"][y - 1, x - 1] = 1.0 if c254 <= 0 else 1.0 + c254
     return out
 
@@ -129,3 +134,135 @@ def test_hillshade_params_pyramid_golden():
     want = ref[1:99, 1:99].astype(np.int64)
     maxdiff = int(np.abs(got - want).max())
     assert maxdiff <= 1, maxdiff
+
+
+def _twin_windows():
+    """11,197 3x3 uint8 windows: random, flat (every value), inclined
+    planes (axis-aligned ones included, so hx or hy is zero) and random
+    0/255 windows."""
+    rng = np.random.default_rng(24)
+    planes = [
+        128 + a * np.arange(-1, 2)[None, :] + b * np.arange(-1, 2)[:, None]
+        for a in range(-40, 41, 4)
+        for b in range(-40, 41, 4)
+    ]
+    return np.concatenate([
+        rng.integers(0, 256, size=(10_000, 3, 3)),
+        np.broadcast_to(np.arange(256)[:, None, None], (256, 3, 3)),
+        np.stack(planes),
+        255 * rng.integers(0, 2, size=(500, 3, 3)),
+    ]).astype(np.int64)
+
+
+def _twin_oracle_keys(wins, alg, keys, aggs=""):
+    """``dem._focal_oracle`` over a window source where each window is a
+    3x3 raster with the one interior pixel (1, 1): its row sums are the
+    window's floor keys."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    con.register("wins", pd.DataFrame(
+        {"image_id": np.arange(len(wins)),
+         **{f"w{j}": wins.reshape(len(wins), 9)[:, j] for j in range(9)}}))
+    src = (
+        "image_id, ",
+        "SELECT image_id, 1 AS x0, 1 AS y0, "
+        f"[{', '.join(f'w{j}' for j in range(9))}] AS win FROM wins",
+        lambda xe, ye: f"win[({ye}) * 3 + ({xe}) + 1]",
+    )
+    out = con.execute(
+        f"SELECT * FROM ({dem._focal_oracle(src, alg, keys, aggs)}) "
+        f"ORDER BY image_id"
+    ).fetchnumpy()
+    assert (out["n"] == 1).all() and len(out["n"]) == len(wins)
+    return {k: out[f"{k}_sum"] for k in keys}
+
+
+def _floor_keys(v):
+    return np.floor(v * dem.SCALE_KEY).astype(np.int64).ravel()
+
+
+@pytest.mark.parametrize("alg", ["HORN", "ZT"])
+@pytest.mark.parametrize("feature", sorted(dem.KERNELS))
+def test_focal_sql_twin_matches_numpy(alg, feature):
+    """Each gradient kernel's SQL twin, run in DuckDB through the focal
+    oracle builder, against its numpy kernel: equal floor keys on every
+    window. The query gates only compare Spark with DuckDB on shipped
+    (algorithm, feature) pairs; this pins every pair."""
+    wins = _twin_windows()
+    a = getattr(dem, alg)
+    kernel, twin = dem.KERNELS[feature]
+    got = _twin_oracle_keys(wins, a, {feature: twin(a.div)})[feature]
+    want = _floor_keys(kernel(*dem.gradient(wins, a)))
+    assert (got == want).all(), int((got != want).sum())
+
+
+def test_focal_sql_twin_matches_window_features():
+    """The six Horn focal keys of the dem_images / dem_tiled oracles
+    against ``window_features`` on the same windows."""
+    wins = _twin_windows()
+    got = _twin_oracle_keys(wins, dem.HORN, dem._FOCAL_KEYS,
+                            dem._CENTER_AGGS)
+    feats = dem.window_features(wins)
+    for k in dem.FOCAL:
+        want = _floor_keys(feats[k])
+        assert (got[k] == want).all(), (k, int((got[k] != want).sum()))
+
+
+def test_hillshade_params_defaults_are_the_gated_shade():
+    """At its defaults the parameterized hillshade is bit-identical to
+    the shade the dem_images query gates (one shade kernel)."""
+    d = np.random.default_rng(0).integers(0, 256, size=(300, 300))
+    assert np.array_equal(
+        dem.hillshade_params(d), dem.window_features(d)["shade"]
+    )
+
+
+def test_dem_queries_match_oracles(spark):
+    """Every gdaldem-family query against its DuckDB oracle on four
+    synthetic images (both formats, 16 to 256 px) and a 40 x 40 global
+    raster in 16-px tiles, through the oracle gate's own compare."""
+    import duckdb
+
+    from gdal_spark import synth
+    from gdal_spark.operators import enhance
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    import check_oracle
+
+    n, max_i = 64, 4
+    per_image = {
+        "dem_images": (dem.focal_stats, dem.oracle_dem_images),
+        "dem_tri_riley": (dem.tri_riley, dem.oracle_tri_riley),
+        "dem_hillshade_variants": (
+            dem.hillshade_variants, dem.oracle_hillshade_variants),
+        "slope_percent": (dem.slope_percent_rows, dem.oracle_slope_percent),
+        "slope_zt_percent": (
+            dem.slope_zt_percent_rows, dem.oracle_slope_zt_percent),
+        "hillshade_zt": (dem.hillshade_zt_rows, dem.oracle_hillshade_zt),
+        "aspect_zt": (dem.aspect_zt_rows, dem.oracle_aspect_zt),
+        "color_relief": (dem.color_relief, dem.oracle_color_relief),
+        "color_relief_nearest": (
+            dem.color_relief_nearest, dem.oracle_color_relief_nearest),
+        "color_relief_exact": (
+            dem.color_relief_exact, dem.oracle_color_relief_exact),
+        "hsv_merge": (enhance.hsv_merge, enhance.oracle_hsv_merge),
+    }
+    imgs = synth.add_pixels(
+        synth.images_df(spark, n).filter(f"i < {max_i}")
+    ).cache()
+    runs = {name: (op(imgs), oracle(n, max_i))
+            for name, (op, oracle) in per_image.items()}
+    runs["dem_tiled"] = (dem.focal_tiled(spark, 40, 40, tile_px=16),
+                         dem.oracle_dem_tiled(40, 40))
+    problems = {}
+    for name, (sdf, sql) in runs.items():
+        tbl = duckdb.sql(sql).fetch_arrow_table()
+        got = sdf.toPandas()
+        assert len(got) > 0, name
+        problems[name] = check_oracle.compare(
+            name, got, tbl.to_pandas(), {f.name: f.type for f in tbl.schema}
+        )
+    imgs.unpersist()
+    assert not any(problems.values()), problems

@@ -866,15 +866,15 @@ def test_hillshade_zt_equals_horn_on_plane_differs_on_curvature():
     from gdal_spark import codecs
     from gdal_spark.operators import dem
 
+    k = dem._hillshade(2.0)
+
     def zt_shade(d):
         d = d.astype(np.float64)
         gx = d[1:-1, :-2] - d[1:-1, 2:]
         gy = -(d[2:, 1:-1] - d[:-2, 1:-1])
         c254 = (
-            dem.SIN_ALT_254
-            - (gy * dem.ZT_COS_AZ_COS_ALT_Z_254
-               - gx * dem.ZT_SIN_AZ_COS_ALT_Z_254)
-        ) / np.sqrt(1.0 + dem.ZT_SQUARE_Z * (gx * gx + gy * gy))
+            k.sin254 - (gy * k.caz254 - gx * k.saz254)
+        ) / np.sqrt(1.0 + k.square_z * (gx * gx + gy * gy))
         return np.where(c254 <= 0.0, 1.0, 1.0 + c254)
 
     gy_, gx_ = np.mgrid[0:16, 0:16]
